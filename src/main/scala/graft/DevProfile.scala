@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerJobStart, SparkListenerJobEnd}
 import scala.collection.mutable
 
@@ -13,28 +12,7 @@ object DevProfile {
     val name = args(0)
     val iters = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_CONF="k=v;k=v" — ad-hoc config experiments (e.g.
-    // shuffle compression off) without editing the profile per run
-    val extra = sys.env.getOrElse("SPARK_GRAFT_CONF", "").split(";")
-      .filter(_.contains("=")).map { kv =>
-        val Array(k, v) = kv.split("=", 2); (k, v)
-      }
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-    // extraConf folds LAST so user-supplied keys override the explicit
-    // profile (ADVICE r12: an experiment setting adaptive.enabled=true
-    // used to be silently overridden by the hardcoded chain)
-    val spark = extra.foldLeft(builder0)((b, kv) => b.config(kv._1, kv._2))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Profiles.bench()
     case class St(name: String, ms: Long, tasks: Int, taskMs: Long)
     val stages = mutable.ArrayBuffer.empty[St]
     val jobs = mutable.ArrayBuffer.empty[(Int, Long, String)]
@@ -51,24 +29,7 @@ object DevProfile {
       override def onJobEnd(je: SparkListenerJobEnd): Unit =
         jobEnds += ((je.jobId, System.currentTimeMillis()))
     })
-    import org.apache.spark.sql.functions._
-    val fn: (SparkSession, String) => org.apache.spark.sql.DataFrame =
-      if (name == "_q105_vrow") { (s, d) =>
-        // q105's plan truncated after the single-row vocab collect — the
-        // HOF-projection bisection probe
-        val st = Tables.documents(s, d)
-          .select(col("source").as("src"), col("text").as("__t"))
-          .repartition(32)
-          .select(col("src"), explode(split(col("__t"), " ")).as("tok"))
-          .groupBy(col("src"), col("tok")).agg(count(lit(1)).as("__c"))
-        val byTok = st.groupBy("tok").agg(sum(col("__c")).as("__tc"),
-            sort_array(collect_list(struct(col("src"), col("__c").as("c"))))
-              .as("__es"))
-          .orderBy(col("__tc").desc, col("tok")).limit(20)
-        byTok.agg(
-          sort_array(collect_list(struct(col("tok"), col("__es")))).as("__v"))
-          .select(size(col("__v")).as("n"))
-      } else SparkEntry.queries(name)
+    val fn = SparkEntry.queries(name)
     spark.range(1000000).selectExpr("sum(id * 2)").collect() // JVM warm
     fn(spark, sfDir).write.mode("overwrite").format("noop").save() // codegen warm
     (1 to iters).foreach { it =>

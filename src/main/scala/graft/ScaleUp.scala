@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Dev-only replicated-corpus generator for the scale rehearsals:
@@ -45,14 +45,7 @@ object ScaleUp {
     require(reps.toLong * S + 1000000L < Int.MaxValue.toLong,
       s"$reps replicas at stride $S exceed 31-bit ids — pass a smaller " +
         "stride (arg 4), e.g. 10000000 for 100 replicas")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Profiles.verify(shuffle = 32)
 
     def shifted(table: String, idCols: Seq[String],
         textCol: Option[String] = None): DataFrame = {

@@ -164,76 +164,70 @@ object StageAudit {
     // trap this audit hunts is a single-task stage the PLAN forces
     // (pushdown below a widening exchange), not one AQE chose because
     // the data is small.
-    val aqeWas = spark.conf.getOption("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // Warm the JVM + parquet + noop-write paths BEFORE attaching the
-    // listener: without it the alphabetically-first query's one scan
-    // task absorbs ~400 ms of one-time JIT/initialization and reads as
-    // a fake violation (q01_project, a 3-column projection, measured
-    // 444 ms single-task cold vs ~20 ms warm).
-    spark.range(2000000).selectExpr("sum(id * 2)").collect()
-    spark.read.parquet(s"$sfDir/nation.parquet").groupBy("n_regionkey")
-      .count().write.mode("overwrite").format("noop").save()
-    val (buf, listener) = attach(spark)
-    try {
-      def auditQuery(name: String,
-          fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): QueryAudit = {
-        buf.synchronized(buf.clear())
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        GraftListenerShims.waitListenerBusEmpty(spark.sparkContext)
-        val rows = buf.synchronized(buf.toVector)
-        // free this query's localCheckpoint blocks (the Bench/Verify
-        // round-13 fix applied to the sweep too: 224 queries of pinned
-        // blocks in the SHARED 8g test JVM — after 20 prior suites —
-        // drove multi-second GC pauses that inflated later queries'
-        // single scan task past the 400 ms floor, a fake violation)
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        val total = rows.map(_.taskMs).sum
-        val worst = rows.filter(_.tasks == 1).sortBy(-_.taskMs).headOption
-        QueryAudit(name, total, worst, worstSkew(rows))
-      }
-      val first = SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) => only.forall(_.contains(name)) }
-        .map { case (name, fn) => auditQuery(name, fn) }
-      // Confirmation pass for the full-concentration grey band (total
-      // under the 2× floor but ALL of it in one task): re-run AFTER the
-      // sweep — temporally separated from any in-suite contention burst
-      // that inflated the single task past the floor (the round-12
-      // flake) — and keep the audit with the lighter single task. A
-      // contention artifact deflates on the quiet re-run; a real
-      // 400–800 ms fully-concentrated trap (seconds at sf0.1) reproduces
-      // and now flags instead of hiding under the total-work floor.
-      // ...and not just the grey band: ANY violator gets the quiet
-      // re-run. The round-14 full-suite flake was the complement case —
-      // a GC pause in the shared test JVM inflated two map-only
-      // queries' single scan task to 1.5–6 s of measured
-      // executorRunTime (q45/q166, frac 1.0, normally <100 ms; both
-      // passed the isolated re-run), and the grey-band condition
-      // (total < 2× floor) excluded them precisely BECAUSE the
-      // inflation was large. A real pushdown trap reproduces on the
-      // temporally-separated re-run; any contention/GC artifact
-      // deflates. The gate keeps its teeth either way.
-      first.map { a =>
-        if (!a.violates && !a.skews) a
-        else {
-          val second = auditQuery(a.query, SparkEntry.queries(a.query))
-          // a contention/GC artifact deflates on the temporally-separated
-          // quiet re-run (fewer findings, or a lighter worst task); a
-          // real trap or real skew reproduces
-          def sev(x: QueryAudit) =
-            (if (x.violates) 1 else 0) + (if (x.skews) 1 else 0)
-          if (sev(second) < sev(a) ||
-              (sev(second) == sev(a) &&
-                second.worstSingleTaskMs < a.worstSingleTaskMs)) second else a
+    Profiles.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
+      // Warm the JVM + parquet + noop-write paths BEFORE attaching the
+      // listener: without it the alphabetically-first query's one scan
+      // task absorbs ~400 ms of one-time JIT/initialization and reads as
+      // a fake violation (q01_project, a 3-column projection, measured
+      // 444 ms single-task cold vs ~20 ms warm).
+      spark.range(2000000).selectExpr("sum(id * 2)").collect()
+      spark.read.parquet(s"$sfDir/nation.parquet").groupBy("n_regionkey")
+        .count().write.mode("overwrite").format("noop").save()
+      val (buf, listener) = attach(spark)
+      try {
+        def auditQuery(name: String,
+            fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): QueryAudit = {
+          buf.synchronized(buf.clear())
+          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+          GraftListenerShims.waitListenerBusEmpty(spark.sparkContext)
+          val rows = buf.synchronized(buf.toVector)
+          // free this query's localCheckpoint blocks (the Bench/Verify
+          // round-13 fix applied to the sweep too: 224 queries of pinned
+          // blocks in the SHARED 8g test JVM — after 20 prior suites —
+          // drove multi-second GC pauses that inflated later queries'
+          // single scan task past the 400 ms floor, a fake violation)
+          spark.sparkContext.getPersistentRDDs.values
+            .foreach(_.unpersist(blocking = false))
+          val total = rows.map(_.taskMs).sum
+          val worst = rows.filter(_.tasks == 1).sortBy(-_.taskMs).headOption
+          QueryAudit(name, total, worst, worstSkew(rows))
         }
-      }
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      aqeWas match {
-        case Some(v) => spark.conf.set("spark.sql.adaptive.enabled", v)
-        case None => spark.conf.unset("spark.sql.adaptive.enabled")
-      }
+        val first = SparkEntry.queries.toSeq.sortBy(_._1)
+          .filter { case (name, _) => only.forall(_.contains(name)) }
+          .map { case (name, fn) => auditQuery(name, fn) }
+        // Confirmation pass for the full-concentration grey band (total
+        // under the 2× floor but ALL of it in one task): re-run AFTER the
+        // sweep — temporally separated from any in-suite contention burst
+        // that inflated the single task past the floor (the round-12
+        // flake) — and keep the audit with the lighter single task. A
+        // contention artifact deflates on the quiet re-run; a real
+        // 400–800 ms fully-concentrated trap (seconds at sf0.1) reproduces
+        // and now flags instead of hiding under the total-work floor.
+        // ...and not just the grey band: ANY violator gets the quiet
+        // re-run. The round-14 full-suite flake was the complement case —
+        // a GC pause in the shared test JVM inflated two map-only
+        // queries' single scan task to 1.5–6 s of measured
+        // executorRunTime (q45/q166, frac 1.0, normally <100 ms; both
+        // passed the isolated re-run), and the grey-band condition
+        // (total < 2× floor) excluded them precisely BECAUSE the
+        // inflation was large. A real pushdown trap reproduces on the
+        // temporally-separated re-run; any contention/GC artifact
+        // deflates. The gate keeps its teeth either way.
+        first.map { a =>
+          if (!a.violates && !a.skews) a
+          else {
+            val second = auditQuery(a.query, SparkEntry.queries(a.query))
+            // a contention/GC artifact deflates on the temporally-separated
+            // quiet re-run (fewer findings, or a lighter worst task); a
+            // real trap or real skew reproduces
+            def sev(x: QueryAudit) =
+              (if (x.violates) 1 else 0) + (if (x.skews) 1 else 0)
+            if (sev(second) < sev(a) ||
+                (sev(second) == sev(a) &&
+                  second.worstSingleTaskMs < a.worstSingleTaskMs)) second else a
+          }
+        }
+      } finally spark.sparkContext.removeSparkListener(listener)
     }
   }
 
@@ -256,36 +250,23 @@ object StageAudit {
     * it — proof the sweep's thresholds bind non-vacuously). */
   def auditOne(spark: SparkSession, name: String,
       df: => org.apache.spark.sql.DataFrame): QueryAudit = {
-    val aqeWas = spark.conf.getOption("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val (buf, listener) = attach(spark)
-    try {
-      df.write.mode("overwrite").format("noop").save()
-      GraftListenerShims.waitListenerBusEmpty(spark.sparkContext)
-      val rows = buf.synchronized(buf.toVector)
-      QueryAudit(name, rows.map(_.taskMs).sum,
-        rows.filter(_.tasks == 1).sortBy(-_.taskMs).headOption,
-        worstSkew(rows))
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      aqeWas match {
-        case Some(v) => spark.conf.set("spark.sql.adaptive.enabled", v)
-        case None => spark.conf.unset("spark.sql.adaptive.enabled")
-      }
+    Profiles.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
+      val (buf, listener) = attach(spark)
+      try {
+        df.write.mode("overwrite").format("noop").save()
+        GraftListenerShims.waitListenerBusEmpty(spark.sparkContext)
+        val rows = buf.synchronized(buf.toVector)
+        QueryAudit(name, rows.map(_.taskMs).sum,
+          rows.filter(_.tasks == 1).sortBy(-_.taskMs).headOption,
+          worstSkew(rows))
+      } finally spark.sparkContext.removeSparkListener(listener)
     }
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Profiles.bench()
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val audits = sweep(spark, sfDir, only)
     audits.sortBy(-_.fraction).foreach(a => println(a.toString +

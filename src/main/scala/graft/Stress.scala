@@ -281,22 +281,7 @@ object Stress {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32")
-    val aqe = sys.env.get("SPARK_GRAFT_STRESS_AQE").contains("1")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", aqe.toString)
-    val spark = (if (aqe) builder.config("spark.sql.extensions",
-        "graft.GraftExtensions")
-      else builder)
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        (64 * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Profiles.bench(shuffle = 32)
     val scales = sys.env.getOrElse("SPARK_GRAFT_STRESS_SCALES", "1,3,10")
       .split(",").map(_.trim.toInt).toSeq
     val opFilter = sys.env.get("SPARK_GRAFT_STRESS_OPS")

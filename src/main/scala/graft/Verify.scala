@@ -1,28 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_AQE=1: the 100 TB-config validation profile — AQE on
-    // AND the library's extensions loaded, proving every query (incl.
-    // the RangeJoinRewrite rule behind q56) survives adaptive
-    // replanning. The default profile leaves both at the driver's
-    // contract settings.
-    val spark = (if (sys.env.get("SPARK_GRAFT_AQE").contains("1"))
-      builder.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.extensions", "graft.GraftExtensions")
-    else builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_AQE=1 validates every query (incl. the RangeJoinRewrite
+    // rule behind q56) under AQE + GraftExtensions (Profiles.cluster)
+    val spark = Profiles.verify()
     new java.io.File(outDir).mkdirs()
     // Dev-only subset (mirrors Bench): SPARK_GRAFT_ONLY=q105_source_jsd
     // dumps + declares just those queries so tools/compare.py gates a

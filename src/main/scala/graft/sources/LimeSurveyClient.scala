@@ -115,9 +115,31 @@ object LimeSurveyClient {
     * default, and base64 payloads almost always contain '/', so the
     * verbatim match would feed backslashes into the base64 decoder. */
   private[graft] def topLevelString(json: String, key: String): String = {
-    val m = ("\"" + java.util.regex.Pattern.quote(key) + "\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"").r
-    m.findFirstMatchIn(json).map(mm => unescapeJson(mm.group(1))).getOrElse(
-      throw new RuntimeException(s"RPC reply missing string key '$key': ${json.take(200)}"))
+    // A linear scan, not a regex: java.util.regex recurses once per
+    // character through a string-body alternation and overflows the
+    // default stack near 2,000 characters, and export replies run to
+    // hundreds of KB. The first `"key"` followed by `:` and a string
+    // value wins.
+    val quoted = "\"" + key + "\""
+    def skipWs(i: Int): Int = {
+      var j = i
+      while (j < json.length && json.charAt(j).isWhitespace) j += 1
+      j
+    }
+    def at(i: Int, c: Char): Boolean = i < json.length && json.charAt(i) == c
+    var from = json.indexOf(quoted)
+    while (from >= 0) {
+      val colon = skipWs(from + quoted.length)
+      val open = skipWs(colon + 1)
+      if (at(colon, ':') && at(open, '"')) {
+        var end = open + 1
+        while (end < json.length && json.charAt(end) != '"')
+          end += (if (json.charAt(end) == '\\') 2 else 1)
+        if (end < json.length) return unescapeJson(json.substring(open + 1, end))
+      }
+      from = json.indexOf(quoted, from + 1)
+    }
+    throw new RuntimeException(s"RPC reply missing string key '$key': ${json.take(200)}")
   }
 
   /** Decode the JSON string escapes of [[topLevelString]]'s raw match. */
@@ -194,18 +216,6 @@ class LimeSurveyClient(url: String, user: String, password: String,
       fields: Seq[String] = Nil): DataFrame =
     Readers.surveyExportFromJson(spark,
       exportResponsesJson(surveyId, status, heading, response, fields))
-
-  /** O2 variant: point lookup by token
-    * (/root/reference/limesurvey.py:128-140 — key-equality pushdown). */
-  def exportResponsesByTokenJson(surveyId: Int, token: String,
-      status: String = ""): String = {
-    val reply = call("export_responses_by_token", sessioned(Map(
-      "iSurveyID" -> surveyId, "sDocumentType" -> "json",
-      "sToken" -> token, "sLanguageCode" -> null,
-      "sCompletionStatus" -> status)))
-    new String(Base64.getDecoder.decode(topLevelString(reply, "result")),
-      StandardCharsets.UTF_8)
-  }
 
   // -- O5/O6: catalog scans --------------------------------------------
 
@@ -286,21 +296,6 @@ class LimeSurveyClient(url: String, user: String, password: String,
     call("get_summary", sessioned(Map(
       "iSurveyID" -> surveyId, "sStatname" -> stat)))
 
-  def activateSurvey(surveyId: Int): String =
-    call("activate_survey", sessioned(Map("iSurveyID" -> surveyId)))
-
-  def deleteSurvey(surveyId: Int): String =
-    call("delete_survey", sessioned(Map("iSurveyID" -> surveyId)))
-
-  def importSurvey(lssBase64: String, name: String): String =
-    call("import_survey", sessioned(Map(
-      "sImportData" -> lssBase64, "sImportDataType" -> "lss",
-      "sNewSurveyName" -> name)))
-
-  def setSurveyProperty(surveyId: Int, prop: String, value: String): String =
-    call("set_survey_properties", sessioned(Map(
-      "iSurveyID" -> surveyId, "aSurveyData" -> Map(prop -> value))))
-
   /** Survey property read with an explicit projection — the reference's
     * widest control-plane call, defaulting to its 58-field settings list
     * (/root/reference/limesurvey.py:51-78). */
@@ -308,10 +303,6 @@ class LimeSurveyClient(url: String, user: String, password: String,
       settings: Seq[String] = LimeSurveyClient.DefaultSurveyProperties): String =
     call("get_survey_properties", sessioned(Map(
       "iSurveyID" -> surveyId, "aSurveySettings" -> settings)))
-
-  def addResponse(surveyId: Int, row: Map[String, String]): String =
-    call("add_response", sessioned(Map(
-      "iSurveyID" -> surveyId, "aResponseData" -> row)))
 
   /** Well-formed teardown (the reference's is malformed JSON,
     * /root/reference/limesurvey.py:106-110). */

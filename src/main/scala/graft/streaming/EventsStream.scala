@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming over the `events` table shape (TESTDATA.md):
   * the streaming story of SURVEY.md §7.2 T3. The reference is batch-only
@@ -325,13 +324,4 @@ object EventsStream {
         (col("r.n_violations").cast("double") / col("__n"))
           .as("violation_rate"))
   }
-
-  /** Convenience writer to an in-memory sink. Mode defaults to Append —
-    * pass `OutputMode.Update()` for the `mapGroupsWithState` shapes
-    * ([[sessionize]], [[distinctSketch]]), which the engine rejects in
-    * Append mode. */
-  def toMemorySink(df: DataFrame, queryName: String,
-      mode: OutputMode = OutputMode.Append): DataStreamWriter[Row] =
-    df.writeStream.outputMode(mode).format("memory")
-      .queryName(queryName)
 }

@@ -80,6 +80,16 @@ class SourcesSpec extends SparkSpec {
     val phpStyle = payload.replace("/", "\\/")
     val reply = s"""{"id":2,"result":"$phpStyle","error":null}"""
     assert(LimeSurveyClient.topLevelString(reply, "result") == payload)
+    // a >=1 MB export reply with a PHP-style \/ every ~64 chars decodes
+    // byte for byte (a backtracking regex overflows the stack near 2 KB)
+    val bytes = new Array[Byte](800 * 1024)
+    new scala.util.Random(7).nextBytes(bytes)
+    val big = Base64.getEncoder.encodeToString(bytes)
+    assert(big.length >= 1024 * 1024 && big.count(_ == '/') > 10000)
+    val bigReply = s"""{"id":2,"result":"${big.replace("/", "\\/")}","error":null}"""
+    val decoded = LimeSurveyClient.topLevelString(bigReply, "result")
+    assert(decoded == big)
+    assert(java.util.Arrays.equals(Base64.getDecoder.decode(decoded), bytes))
     // the full escape family round-trips
     assert(LimeSurveyClient.unescapeJson("""a\/b\\c\"d\neé""") ==
       "a/b\\c\"d\neé")
