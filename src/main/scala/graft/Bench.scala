@@ -73,12 +73,8 @@ object Bench {
       // neighbor
       val times = if (iters >= 3 && first(first.size / 2) > 1.0)
         (first ++ Vector.fill(2)(timed())).sorted else first
-      // free this query's localCheckpoint blocks (iterative operators
-      // pin per-round blocks; 224 queries of accumulation OOM'd the
-      // sf1 rehearsal driver — round 13 defect 6). Outside the timed
-      // region; nothing outlives its query.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // free this query's checkpoint blocks, outside the timed region
+      org.apache.spark.sql.GraftShims.release(spark)
       times(times.size / 2)
     }
     val firstPass = SparkEntry.queries.toSeq.sortBy(_._1)

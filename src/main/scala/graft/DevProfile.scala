@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerJobStart, SparkListenerJobEnd}
+import org.apache.spark.sql.GraftShims
 import scala.collection.mutable
 
 /** Dev-only stage profiler: runs one SparkEntry query under the Bench
@@ -32,11 +33,13 @@ object DevProfile {
     val fn = SparkEntry.queries(name)
     spark.range(1000000).selectExpr("sum(id * 2)").collect() // JVM warm
     fn(spark, sfDir).write.mode("overwrite").format("noop").save() // codegen warm
+    GraftShims.release(spark)
     (1 to iters).foreach { it =>
       stages.clear(); jobs.clear()
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.mode("overwrite").format("noop").save()
       val total = (System.nanoTime() - t0) / 1e6
+      GraftShims.release(spark)
       println(f"== iter $it: total $total%.1f ms, ${jobs.size} jobs, ${stages.size} stages")
       // driver-side gaps: time between consecutive jobs (planning,
       // codegen, checkpoint bookkeeping) vs in-job wall

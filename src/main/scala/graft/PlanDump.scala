@@ -25,8 +25,7 @@ object PlanDump {
         plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       // iterative operators materialize checkpoints at build time; free
       // them so a multi-query dump run doesn't accumulate pinned blocks
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      org.apache.spark.sql.GraftShims.release(spark)
       println(s"dumped $name")
     }
     spark.stop()

@@ -181,13 +181,11 @@ object StageAudit {
           fn(spark, sfDir).write.mode("overwrite").format("noop").save()
           GraftListenerShims.waitListenerBusEmpty(spark.sparkContext)
           val rows = buf.synchronized(buf.toVector)
-          // free this query's localCheckpoint blocks (the Bench/Verify
-          // round-13 fix applied to the sweep too: 224 queries of pinned
-          // blocks in the SHARED 8g test JVM — after 20 prior suites —
-          // drove multi-second GC pauses that inflated later queries'
-          // single scan task past the 400 ms floor, a fake violation)
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
+          // free this query's checkpoint blocks: 224 queries of pinned
+          // blocks in the SHARED 8g test JVM drove multi-second GC pauses
+          // that inflated later queries' single scan task past the
+          // 400 ms floor, a fake violation
+          org.apache.spark.sql.GraftShims.release(spark)
           val total = rows.map(_.taskMs).sum
           val worst = rows.filter(_.tasks == 1).sortBy(-_.taskMs).headOption
           QueryAudit(name, total, worst, worstSkew(rows))

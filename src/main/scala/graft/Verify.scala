@@ -30,15 +30,10 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Free this query's localCheckpoint blocks before the next query:
-      // 224 queries of accumulated pinned blocks (iterative operators
-      // checkpoint per round) OOM'd an 8g driver and needed 48g at the
-      // sf1 rehearsal (round 13 defect 6). Nothing outlives its query —
-      // Tables memoizes unpersisted logical relations only — so a
-      // blanket unpersist after the dump lands is safe. Blocking, so a
-      // slow async release can't pile up against a heavy next query.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      // Free this query's checkpoint blocks before the next query.
+      // Nothing outlives its query — Tables memoizes unpersisted logical
+      // relations only — so a blanket release after the dump is safe.
+      org.apache.spark.sql.GraftShims.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

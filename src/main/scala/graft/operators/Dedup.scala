@@ -19,6 +19,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftShims.{materialize, Sum}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
@@ -331,16 +332,14 @@ object Dedup {
     // evaluated the whole candidate-pair subplan TWICE (one branch per
     // direction — measured 20 s task-sum on q195's fuzzy pairs, round
     // 14); a per-row explode of both orientations reads it once
-    val edges = pairs
+    val edges = materialize(pairs
       .select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("__e"))
       .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-      .repartition(col("dst"))
-      .localCheckpoint(true)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("component", col("id"))
-      .localCheckpoint(true)
+      .repartition(col("dst")))._1
+    var labels = materialize(edges.select(col("src").as("id")).distinct()
+      .withColumn("component", col("id")))._1
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -348,8 +347,8 @@ object Dedup {
         .groupBy(col("src")).agg(min(col("component")).as("nbr_min"))
       // __chg rides along as a 0/1 long so the convergence test comes
       // out of the SAME action that materializes the round's checkpoint
-      // (GraftShims.localCheckpointWithLongSum) — the old shape paid a
-      // separate isEmpty probe job per round (round 14)
+      // (materialize's `Sum` probe) — the old shape paid a separate
+      // isEmpty probe job per round (round 14)
       val propagated = labels
         .join(nbrMin, col("id") === col("src"), "left")
         .select(col("id"), col("component").as("__old"),
@@ -364,8 +363,7 @@ object Dedup {
       // rounds this checkpoint IS the round result, so its fused sum is
       // the convergence test.
       val (checkpointed, chgEarly) =
-        org.apache.spark.sql.GraftShims.localCheckpointWithLongSum(
-          propagated, "__chg")
+        materialize(propagated, probe = Sum("__chg"))
       // pointer jump: component := component(component) — a self-join of
       // the CHECKPOINTED |V|-sized label frame only. Inner join is safe:
       // every label is the id of some labeled node. Skipped for the
@@ -392,8 +390,7 @@ object Dedup {
               .as("__chg"),
             col("__pcomp").as("component"))
         val (next, chg) =
-          org.apache.spark.sql.GraftShims.localCheckpointWithLongSum(
-            jumped, "__chg")
+          materialize(jumped, probe = Sum("__chg"))
         converged = chg == 0L
         labels = next.select(col("id"), col("component"))
       }
@@ -467,8 +464,9 @@ object Dedup {
       pairs: DataFrame, k: Int, numPerm: Int, b: Int): DataFrame = {
     require(b >= 1 && b <= 16, "b in [1, 16]")
     val m = 1L << b
-    val sig = minHashSignatures(docs, idCol, text, k, numPerm)
-      .localCheckpoint(true) // joined on both sides of the pair set
+    // joined on both sides of the pair set
+    val sig = materialize(
+      minHashSignatures(docs, idCol, text, k, numPerm))._1
     val agreeFull = (0 until numPerm)
       .map(p => when(col(s"a.mh$p") === col(s"b.mh$p"), 1L).otherwise(0L))
       .reduce(_ + _)
@@ -636,8 +634,8 @@ object Dedup {
   def containmentVerify(df: DataFrame, idCol: String, text: Column,
       k: Int = 5, numPerm: Int = 16, bands: Int = 4,
       maxBucket: Int = 10000): DataFrame = {
-    val cand = minHashCandidates(df, idCol, text, k, numPerm, bands,
-      maxBucket).localCheckpoint(true)
+    val cand = materialize(minHashCandidates(df, idCol, text, k, numPerm,
+      bands, maxBucket))._1
     val ids = cand.select(col("doc_a").as("doc"))
       .union(cand.select(col("doc_b").as("doc"))).distinct()
     // widen BEFORE computing shingles: the raw projection repartitions
@@ -645,15 +643,15 @@ object Dedup {
     // preserves the width, and the shingle build + explode run wide —
     // un-widened, the whole re-explode pinned to one 2.4 s task
     // (measured at sf0.1, DevProfile)
-    val ex = Parallelism.ensure(
+    // sizes + both intersection sides
+    val ex = materialize(Parallelism.ensure(
         df.select(col(idCol).as("doc"), text.as("__t")))
       .join(ids, Seq("doc"), "left_semi")
       // two-step token binding: an inlined tokens(__t) re-splits once
       // per shingle inside the HOF lambda (round-6 trap)
       .select(col("doc"), TextAnalysis.tokens(col("__t")).as("__toks"))
       .select(col("doc"),
-        explode(TextAnalysis.shinglesOfTokens(col("__toks"), k)).as("s"))
-      .localCheckpoint(true) // sizes + both intersection sides
+        explode(TextAnalysis.shinglesOfTokens(col("__toks"), k)).as("s")))._1
     val sizes = ex.groupBy("doc").agg(count(lit(1)).as("n"))
     val inter = cand
       .join(ex.select(col("doc").as("doc_a"), col("s")), Seq("doc_a"))
@@ -723,8 +721,8 @@ object Dedup {
     // explode behind it runs ONCE, not once per side (tiny table,
     // eager materialization is free; without it a 100 TB corpus would
     // scan twice)
-    val sig = minHashSignatures(docs, groupCol, text, k, numPerm)
-      .localCheckpoint(true)
+    val sig = materialize(
+      minHashSignatures(docs, groupCol, text, k, numPerm))._1
     val agree = (0 until numPerm)
       .map(p => when(col(s"a.mh$p") === col(s"b.mh$p"), 1L).otherwise(0L))
       .reduce(_ + _)

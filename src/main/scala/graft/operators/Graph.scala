@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftShims}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftShims.{materialize, Claim, Hash, Max}
 import org.apache.spark.sql.functions._
 
 /** Graph centrality over edge lists — the link-analysis tier (document
@@ -60,7 +61,7 @@ object Graph {
     require(iters >= 1 && dampingPct >= 0 && dampingPct <= 100)
     require(broadcastMaxNodes >= 0L)
     // both base tables are checkpointed WITH their hash layout pinned
-    // (GraftShims.checkpointHashPartitioned): under AQE a plain
+    // (GraftShims.materialize, `Hash`/`Claim` layouts): under AQE a plain
     // localCheckpoint forgets its partitioning, and every iteration
     // would re-exchange the |E| edge table it was just shuffled into
     val p = math.max(
@@ -88,14 +89,13 @@ object Graph {
       .repartition(p, col("src"))
       .distinct()
     val deg = eRaw.groupBy("src").agg(count(lit(1)).as("deg"))
-    val outEdges = GraftShims.checkpointClaimHashPartitioned(
-      eRaw.join(deg, "src"), p, "src")
+    val outEdges = materialize(eRaw.join(deg, "src"), Claim(p, "src"))._1
     // the checkpoint's materializing action counts anyway — reuse it
     // for the size gate instead of a separate whole-table scan job
-    val (nodes, n) = GraftShims.checkpointHashPartitionedWithCount(
+    val (nodes, n) = materialize(
       outEdges.select(col("src").as("node"))
         .union(outEdges.select(col("dst").as("node"))).distinct(),
-      p, "node")
+      Hash(p, "node"))
     if (n == 0L)
       return nodes.select(col("node"), lit(0L).as("rank_unit"))
     // all-positive integer arithmetic: Scala / == SQL div here, so the
@@ -158,19 +158,18 @@ object Graph {
       .repartition(p, col("src"))
       .distinct()
     val deg = eRaw.groupBy("src").agg(count(lit(1)).as("deg"))
-    val outEdges = GraftShims.checkpointClaimHashPartitioned(
-      eRaw.join(deg, "src"), p, "src")
+    val outEdges = materialize(eRaw.join(deg, "src"), Claim(p, "src"))._1
     // both checkpoints surface their counts — no separate scan jobs
     // for the seed share or the broadcast gate
-    val (s, nSeeds) = GraftShims.checkpointHashPartitionedWithCount(
+    val (s, nSeeds) = materialize(
       seeds.select(col(seedCol).cast("long").as("node"))
         .filter(col("node").isNotNull).distinct(),
-      p, "node")
-    val (nodes, nNodes) = GraftShims.checkpointHashPartitionedWithCount(
+      Hash(p, "node"))
+    val (nodes, nNodes) = materialize(
       outEdges.select(col("src").as("node"))
         .union(outEdges.select(col("dst").as("node")))
         .union(s.select(col("node"))).distinct(),
-      p, "node")
+      Hash(p, "node"))
     if (nSeeds == 0L)
       return nodes.select(col("node"), lit(0L).as("rank_unit"))
     val tele = ((100L - dampingPct) * (unit / nSeeds)) / 100L
@@ -179,11 +178,11 @@ object Graph {
     // tele(v) joins as a seed flag once; r0 = the teleport vector
     val teleCol = when(col("__seed").isNotNull, lit(tele))
       .otherwise(lit(0L))
-    val base = GraftShims.checkpointClaimHashPartitioned(
+    val base = materialize(
       nodes.join(gate(s.select(col("node"),
           lit(1).as("__seed"))), Seq("node"), "left")
         .select(col("node"), teleCol.as("tele")),
-      p, "node")
+      Claim(p, "node"))._1
     var ranks = base.select(col("node"), col("tele").as("r"))
     (1 to iters).foreach { _ =>
       val contrib = outEdges.join(gate(ranks), col("src") === col("node"))
@@ -251,18 +250,18 @@ object Graph {
     // (partitioning keys ⊆ grouping keys), so the dedup runs exchange-
     // free on the target layout and the checkpoint CLAIMS it — one |E|
     // shuffle instead of the distinct-then-repartition two (round 14)
-    val eSrc = GraftShims.checkpointClaimHashPartitioned(
+    val eSrc = materialize(
       edges.select(col(srcCol).cast("long").as("src"),
           col(dstCol).cast("long").as("dst"))
         .filter(col("src").isNotNull && col("dst").isNotNull)
         .repartition(p, col("src"))
         .distinct(),
-      p, "src")
-    val eDst = GraftShims.checkpointHashPartitioned(eSrc, p, "dst")
-    val (nodes, n) = GraftShims.checkpointHashPartitionedWithCount(
+      Claim(p, "src"))._1
+    val eDst = materialize(eSrc, Hash(p, "dst"))._1
+    val (nodes, n) = materialize(
       eSrc.select(col("src").as("node"))
         .union(eSrc.select(col("dst").as("node"))).distinct(),
-      p, "node")
+      Hash(p, "node"))
     if (n == 0L)
       return nodes.select(col("node"), lit(0L).as("auth_unit"),
         lit(0L).as("hub_unit"))
@@ -280,11 +279,11 @@ object Graph {
     // scaling projection as a plan-time literal — bit-identical values.
     def gatherRaw(e: DataFrame, from: String, to: String,
         scores: DataFrame): (DataFrame, Long) =
-      GraftShims.checkpointHashPartitionedWithMax(
+      materialize(
         e.join(gate(scores), col(from) === col("node"))
           .select(col(to).as("node"), col("v").as("__x"))
           .groupBy("node").agg(sum(col("__x")).as("__s")),
-        p, "node", "__s")
+        Hash(p, "node"), Max("__s"))
     // L∞ rescale: `v·unit div max` runs as the exact two-stage ×u1×u2
     // long-division identity (floor(S·u1·u2/W) = (S·u1 div W)·u2 +
     // (S·u1 mod W)·u2 div W — exact for nonnegative longs) so the raw
@@ -388,12 +387,12 @@ object Graph {
       .filter(col("x").isNotNull && col("y").isNotNull && col("x") =!= col("y"))
     // repartition FIRST, then distinct (the [[hits]] idiom): one |E|
     // exchange instead of distinct's own + the checkpoint repartition
-    val (canon, nCanon) = GraftShims.checkpointClaimHashPartitionedWithCount(
+    val (canon, nCanon) = materialize(
       e0.select(least(col("x"), col("y")).as("a"),
           greatest(col("x"), col("y")).as("b"))
         .repartition(p0, col("a"))
         .distinct(),
-      p0, "a")
+      Claim(p0, "a"))
     val p = math.min(maxP,
       math.max(p0, (nCanon / TriangleEdgesPerTask).toInt + 1))
     // the broadcast gate reads the checkpoint's own count — a scalar,
@@ -406,11 +405,11 @@ object Graph {
     // 2|E|-row union + aggregate — measured ~0.7 s of q111's 3.9 s as
     // two identical 64-task stages (round 14; alias-renamed broadcast
     // subtrees never hit exchange reuse, the q212 margin lesson)
-    val deg = GraftShims.checkpointHashPartitioned(
+    val deg = materialize(
       canon.select(col("a").as("node"))
         .union(canon.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("d")),
-      p, "node")
+      Hash(p, "node"))._1
     // direct each edge low->high under (degree, id)
     val attached = canon
       .join(gate(deg.select(col("node").as("a"), col("d").as("da"))), "a")
@@ -428,11 +427,11 @@ object Graph {
     // edge (u, v) is recovered below by EXPLODING u's adjacency row, so
     // the old separate fwd checkpoint (a second |E| copy + barrier) and
     // the u-side adjacency attach join disappear outright.
-    val adjF = GraftShims.checkpointClaimHashPartitioned(
+    val adjF = materialize(
       fwd.repartition(p, col("u"))
         .groupBy("u")
         .agg(array_sort(collect_list(col("v"))).as("nbrs")),
-      p, "u")
+      Claim(p, "u"))._1
     // each directed edge meets both endpoints' forward sets; the
     // intersection members are the triangles' third corners. The edge
     // and its u-side set come from one explode of adjF (v ∈ nbrs(u) BY
@@ -499,16 +498,16 @@ object Graph {
     val raw = edges.select(col(srcCol).cast("long").as("u"),
         col(dstCol).cast("long").as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-    val e = GraftShims.checkpointClaimHashPartitioned(
+    val e = materialize(
       raw.select(explode(array(
           struct(col("u"), col("v")),
           struct(col("v").as("u"), col("u").as("v")))).as("__e"))
         .select(col("__e.u").as("u"), col("__e.v").as("v"))
         .repartition(p, col("v"))
         .distinct(),
-      p, "v")
-    val (survivors0, nSurv) = GraftShims.checkpointHashPartitionedWithCount(
-      e.select(col("u").as("node")).distinct(), p, "node")
+      Claim(p, "v"))._1
+    val (survivors0, nSurv) = materialize(
+      e.select(col("u").as("node")).distinct(), Hash(p, "node"))
     var survivors = survivors0
     val gate: DataFrame => DataFrame =
       if (nSurv <= broadcastMaxNodes) broadcast else identity
@@ -516,10 +515,10 @@ object Graph {
       e.join(gate(s), col("v") === col("node"), "left_semi")
         .groupBy("u").agg(count(lit(1)).as("__c"))
     (1 to rounds).foreach { _ =>
-      survivors = GraftShims.checkpointHashPartitioned(
+      survivors = materialize(
         survivors.join(aliveDeg(survivors), col("node") === col("u"))
           .filter(col("__c") >= k).select("node"),
-        p, "node")
+        Hash(p, "node"))._1
     }
     survivors.join(aliveDeg(survivors), col("node") === col("u"))
       .select(col("node"), col("__c").as("core_degree"))
@@ -562,18 +561,18 @@ object Graph {
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
     // one-pass symmetrize + repartition-first distinct — one |E|
     // shuffle, edge subplan evaluated once (see [[kCore]])
-    val e = GraftShims.checkpointClaimHashPartitioned(
+    val e = materialize(
       raw.select(explode(array(
           struct(col("u"), col("v")),
           struct(col("v").as("u"), col("u").as("v")))).as("__e"))
         .select(col("__e.u").as("u"), col("__e.v").as("v"))
         .repartition(p, col("v"))
         .distinct(),
-      p, "v")
+      Claim(p, "v"))._1
     // symmetric edge list: the u side alone covers every non-isolated
     // node, and isolated nodes have no business in a vote
-    val (nodes, n) = GraftShims.checkpointHashPartitionedWithCount(
-      e.select(col("u").as("node")).distinct(), p, "node")
+    val (nodes, n) = materialize(
+      e.select(col("u").as("node")).distinct(), Hash(p, "node"))
     if (n == 0L) return nodes.select(col("node"), col("node").as("community"))
     val gate: DataFrame => DataFrame =
       if (n <= broadcastMaxNodes) broadcast else identity

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftShims.materialize
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -501,11 +502,10 @@ object Relational {
     require(nBuckets >= 2, "need at least two quality cells")
     // narrow (doc, tokens, bucket) projection, consumed by the
     // histogram and both selection branches
-    val base = df.select(col(idCol).as("doc"),
+    val base = materialize(df.select(col(idCol).as("doc"),
         nToks.cast(LongType).as("n_toks"),
         least(floor(quality * nBuckets), lit((nBuckets - 1).toDouble))
-          .cast(LongType).as("q_bucket"))
-      .localCheckpoint(true)
+          .cast(LongType).as("q_bucket")))._1
     val hist = base.groupBy("q_bucket").agg(sum(col("n_toks")).as("__bt"))
     // tokens in strictly HIGHER buckets — a ≤nBuckets-row window
     val above = hist.withColumn("__above",
@@ -877,9 +877,9 @@ object Relational {
     val bstats = pts.groupBy("__b").agg(max(col("y")).as("__by"))
       .withColumn("__sufmax", max(col("__by")).over(wSuffix)) // tiny
       .select(col("__b"), col("__sufmax"))
-    val survivors = pts.join(broadcast(bstats), Seq("__b"))
-      .filter(col("__sufmax").isNull || col("y") > col("__sufmax"))
-      .localCheckpoint(true) // both exact windows read it
+    // both exact windows read it
+    val survivors = materialize(pts.join(broadcast(bstats), Seq("__b"))
+      .filter(col("__sufmax").isNull || col("y") > col("__sufmax")))._1
     val wLargerX = Window.orderBy(col("x").desc)
       .rangeBetween(Window.unboundedPreceding, -1)
     val wSameX = Window.partitionBy(col("x"))

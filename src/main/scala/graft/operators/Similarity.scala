@@ -21,6 +21,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftShims.materialize
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
@@ -131,7 +132,8 @@ object Similarity {
       marginMicro: Long): DataFrame = {
     require(k >= 1, "need at least one negative")
     require(marginMicro >= 0L, "margin must be non-negative")
-    val scored = Parallelism.ensure(
+    // feeds the positive table AND the mine
+    val scored = materialize(Parallelism.ensure(
         emb.select(col("vec_id"), col("embedding"), col("label"))).as("c")
       .join(broadcast(emb.filter(isQuery)
         .select(col("vec_id"), col("embedding"), col("label")).as("q")),
@@ -140,8 +142,7 @@ object Similarity {
         (col("q.label") === col("c.label")).as("__same"),
         col("c.vec_id").as("neighbor_id"),
         floor(cosine(col("q.embedding"), col("c.embedding")) * 1e6 + 0.5)
-          .cast(LongType).as("cos_micro"))
-      .localCheckpoint(true) // feeds the positive table AND the mine
+          .cast(LongType).as("cos_micro")))._1
     val pos = scored.filter(col("__same"))
       .groupBy("query_id").agg(max(col("cos_micro")).as("pos_micro"))
     val negs = scored.filter(!col("__same"))
@@ -171,7 +172,8 @@ object Similarity {
   def truncationRecall(emb: DataFrame, isQuery: Column, k: Int,
       truncDim: Int): DataFrame = {
     require(k >= 1 && truncDim >= 1, "degenerate eval params")
-    val scored = Parallelism.ensure(
+    // both rankings read it
+    val scored = materialize(Parallelism.ensure(
         emb.select(col("vec_id"), col("embedding"))).as("c")
       .join(broadcast(emb.filter(isQuery)
         .select(col("vec_id"), col("embedding")).as("q")),
@@ -182,8 +184,7 @@ object Similarity {
           .cast(LongType).as("cos_full"),
         floor(cosine(slice(col("q.embedding"), 1, truncDim),
           slice(col("c.embedding"), 1, truncDim)) * 1e6 + 0.5)
-          .cast(LongType).as("cos_trunc"))
-      .localCheckpoint(true) // both rankings read it
+          .cast(LongType).as("cos_trunc")))._1
     def top(scoreCol: String) =
       Relational.topKPerGroup(scored.filter(col(scoreCol).isNotNull),
         Seq("query_id"), col(scoreCol), col("neighbor_id"), k)
@@ -241,7 +242,8 @@ object Similarity {
     val grade = when(col("cos_full") >= t3, 3L)
       .when(col("cos_full") >= t2, 2L)
       .when(col("cos_full") >= t1, 1L).otherwise(0L)
-    val scored = Parallelism.ensure(
+    // system ranking, ideal ranking, n_rel
+    val scored = materialize(Parallelism.ensure(
         emb.select(col("vec_id"), col("embedding"))).as("c")
       .join(broadcast(emb.filter(isQuery)
         .select(col("vec_id"), col("embedding")).as("q")),
@@ -260,8 +262,7 @@ object Similarity {
       .withColumn("g", grade)
       .withColumn("gain", // 2^g − 1, unrolled: g is 0..3 by construction
         when(col("g") === 3L, 7L).when(col("g") === 2L, 3L)
-          .when(col("g") === 1L, 1L).otherwise(0L))
-      .localCheckpoint(true) // system ranking, ideal ranking, n_rel
+          .when(col("g") === 1L, 1L).otherwise(0L)))._1
     val system = Relational.topKPerGroup(
         scored.filter(col("cos_trunc").isNotNull),
         Seq("query_id"), col("cos_trunc"), col("neighbor_id"), k)
@@ -463,8 +464,8 @@ object Similarity {
   def ivfKnnIndexed(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, anchors: DataFrame, queries: DataFrame,
       k: Int, nProbe: Int = 4): DataFrame = {
-    val probes = assignCells(anchorArray(anchors), queries, "query_id", nProbe)
-      .localCheckpoint(true)
+    val probes = materialize(
+      assignCells(anchorArray(anchors), queries, "query_id", nProbe))._1
     val probedCells = probes.select(col("cell_id").cast("long"))
       .distinct().collect().map(_.getLong(0))
     val idx = spark.read.parquet(indexPath)
@@ -583,8 +584,8 @@ object Similarity {
     // reuse and the corpus would be scanned and anchor-ranked twice —
     // localCheckpoint (the connectedComponents/pageRank precedent for
     // eager operators) computes the expensive narrow stage once
-    val cells = assignCells(anchorArray(anchors), corpus, "vec_id", 1)
-      .localCheckpoint()
+    val cells = materialize(
+      assignCells(anchorArray(anchors), corpus, "vec_id", 1))._1
     val followers = cells
       .groupBy("cell_id")
       .agg(collect_list(struct(col("vec_id").as("id"),
@@ -957,7 +958,8 @@ object Similarity {
       .groupBy("tbl", "bucket").agg(count(lit(1)).as("__n"))
       .filter(col("__n") <= maxBucket)
       .select(col("tbl"), col("bucket"))
-    val cand = srcB.join(ok, Seq("tbl", "bucket"))
+    // both directions + the pair join consume it
+    val cand = materialize(srcB.join(ok, Seq("tbl", "bucket"))
       .join(tgtB, Seq("tbl", "bucket"))
       .select(col("src_id"), col("tgt_id"),
         col("emb_src_id"), col("emb_tgt_id"))
@@ -965,8 +967,7 @@ object Similarity {
       .select(col("src_id"), col("tgt_id"),
         floor(cosine(col("emb_src_id"), col("emb_tgt_id")) * 1e6 + 0.5)
           .cast(LongType).as("cos_micro"))
-      .filter(col("cos_micro") > 0L)
-      .localCheckpoint(true) // both directions + the pair join consume it
+      .filter(col("cos_micro") > 0L))._1
     def kSums(keyCol: String, otherCol: String): DataFrame =
       Relational.topKPerGroup(cand, Seq(keyCol), col("cos_micro"),
         col(otherCol), k)

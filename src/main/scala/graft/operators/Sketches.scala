@@ -40,6 +40,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftShims.materialize
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType}
 
@@ -417,11 +418,10 @@ object Sketches {
     // checkpoints only the value-resolution-sized result for the two
     // derived branches (lazy sharing re-runs the corpus pass per
     // broadcast branch — the q212 margin lesson).
-    val dv = Parallelism.ensure(
+    val dv = materialize(Parallelism.ensure(
         df.filter(valCol.isNotNull && (valCol > 0L))
           .select(g :+ valCol.cast(LongType).as("__v"): _*))
-      .groupBy(g :+ col("__v"): _*).agg(count(lit(1)).as("__c"))
-      .localCheckpoint(true)
+      .groupBy(g :+ col("__v"): _*).agg(count(lit(1)).as("__c")))._1
     val sk = ddsketchExtract(
       withDdsketchBucket(dv, subBits)
         .groupBy(g :+ col("__shift") :+ col("__m"): _*)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftShims.{materialize, Claim}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -372,7 +373,6 @@ object TextAnalysis {
     require(ngram >= 1, "ngram must be >= 1")
     require(maxDf >= 2, "maxDf must be >= 2")
     require(topK > 0, "topK must be positive")
-    import org.apache.spark.sql.GraftShims
     val p = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     // the exploded n-grams hash-repartition on term directly, so the tf
     // aggregate is exchange-free on that layout and the checkpoint
@@ -383,13 +383,12 @@ object TextAnalysis {
       .select(col("doc"),
         explode(ngramsOf(col("__toks"), ngram)).as("term"))
       .repartition(p, col("term"))
-    val tf = GraftShims.checkpointClaimHashPartitioned(
-      ex.groupBy("term", "doc").agg(count(lit(1)).as("tf")), p, "term")
+    val tf = materialize(ex.groupBy("term", "doc").agg(count(lit(1)).as("tf")),
+      Claim(p, "term"))._1
     val dfc = tf.groupBy("term").agg(count(lit(1)).as("__df"))
       .filter(col("__df") >= 2 && col("__df") <= maxDf)
       .select("term")
-    val kept = GraftShims.checkpointClaimHashPartitioned(
-      tf.join(dfc, "term"), p, "term")
+    val kept = materialize(tf.join(dfc, "term"), Claim(p, "term"))._1
     // the norm table is one row per doc: broadcast-attach it by default
     // (un-hinted, Spark reads the checkpoint-derived aggregate as
     // unsized and plans two SortMergeJoins — measured at sf0.1, the two
@@ -450,11 +449,10 @@ object TextAnalysis {
           .otherwise(lit(null).cast("string")).as("w2")))
     // guard: sequence(1, 0) DESCENDS, so empty token arrays must
     // short-circuit (split never yields one, but the contract is free)
-    val t = toks.select(explode(when(n >= 1, units)
+    val t = materialize(toks.select(explode(when(n >= 1, units)
         .otherwise(array().cast("array<struct<w1:string,w2:string>>"))).as("p"))
       .select(col("p.w1"), col("p.w2"))
-      .groupBy("w1", "w2").agg(count(lit(1)).as("__c"))
-      .localCheckpoint()
+      .groupBy("w1", "w2").agg(count(lit(1)).as("__c")))._1
     val uni = t.groupBy("w1").agg(sum(col("__c")).as("c"))
     val total = uni.select(sum(col("c")).as("__n"))
     t.filter(col("w2").isNotNull && col("__c") >= minCount)
@@ -501,11 +499,10 @@ object TextAnalysis {
     // sf0.1). The checkpointed relation is vocab²-bounded, never
     // corpus-sized, and no layout contract is needed: every consumer
     // re-aggregates on a different key.
-    val pairs = toks.select(explode(when(n >= 2, pairStructs)
+    val pairs = materialize(toks.select(explode(when(n >= 2, pairStructs)
       .otherwise(array().cast("array<struct<w1:string,w2:string>>"))).as("p"))
       .select(col("p.w1"), col("p.w2"))
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c_ab"))
-      .localCheckpoint()
+      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c_ab")))._1
     val la = pairs.groupBy(col("w1")).agg(sum(col("c_ab")).as("c_a"))
     val rb = pairs.groupBy(col("w2")).agg(sum(col("c_ab")).as("c_b"))
     val tot = pairs.agg(sum(col("c_ab")).as("__n"))
@@ -1198,11 +1195,10 @@ object TextAnalysis {
     * encodes against). */
   private def bpeMergeLoop(vocab0: DataFrame, nMerges: Int):
       (Seq[(Int, String, String, Long)], DataFrame) = {
-    var vocab = vocab0
+    var vocab = materialize(vocab0
       .select(col("word"), expr(
         "transform(sequence(1, length(word)), i -> substring(word, i, 1))")
-        .as("syms"), col("wc"))
-      .localCheckpoint(true)
+        .as("syms"), col("wc")))._1
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var round = 1
     var exhausted = false
@@ -1221,14 +1217,13 @@ object TextAnalysis {
           best(0).getLong(2))
         merges += ((round, a, b, n))
         val merged = a + b
-        vocab = vocab.select(col("word"),
+        vocab = materialize(vocab.select(col("word"),
           aggregate(col("syms"), array().cast("array<string>"),
             (acc, s) => when(size(acc) > 0 &&
                 element_at(acc, -1) === lit(a) && s === lit(b),
               concat(slice(acc, lit(1), size(acc) - 1), array(lit(merged))))
               .otherwise(concat(acc, array(s)))).as("syms"),
-          col("wc"))
-          .localCheckpoint(true)
+          col("wc")))._1
         round += 1
       }
     }
@@ -1251,12 +1246,11 @@ object TextAnalysis {
   def bpeSubwordStats(df: DataFrame, idCol: String, text: Column,
       nMerges: Int = 8): DataFrame = {
     require(nMerges >= 1, "need at least one merge round")
-    val docWord = Parallelism.ensure(
+    val docWord = materialize(Parallelism.ensure(
       df.select(col(idCol).as("doc"), text.as("__t")))
       .select(col("doc"), explode(tokens(col("__t"))).as("word"))
       .filter(length(col("word")) >= 1)
-      .groupBy("doc", "word").agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+      .groupBy("doc", "word").agg(count(lit(1)).as("n")))._1
     val vocab0 = docWord.groupBy("word").agg(sum(col("n")).as("wc"))
     val (_, encoded) = bpeMergeLoop(vocab0, nMerges)
     docWord
@@ -1627,7 +1621,6 @@ object TextAnalysis {
       target: DataFrame, targetText: Column,
       buckets: Int = 256): DataFrame = {
     require(buckets >= 2, "need at least 2 hash buckets")
-    import org.apache.spark.sql.GraftShims
     // token array projected into a REAL column before the bigram HOF —
     // an inlined split would re-run once per bigram (no hoisting in
     // lambda subtrees)
@@ -1646,9 +1639,9 @@ object TextAnalysis {
     // weight-table build and the scoring pass, and runtime broadcast
     // jobs do not reuse a plan-level exchange (the q131 measurement).
     val par = df.sparkSession.sparkContext.defaultParallelism
-    val perDoc = GraftShims.checkpointClaimHashPartitioned(
+    val perDoc = materialize(
       buckify(df.select(col(idCol).as("doc"), text.as("__t"))
-        .repartition(par, col("doc")), Seq("doc")), par, "doc")
+        .repartition(par, col("doc")), Seq("doc")), Claim(par, "doc"))._1
     val rawB = perDoc.groupBy("bucket").agg(sum(col("n")).as("r"))
     val tgtB = buckify(Parallelism.ensure(
       target.select(targetText.as("__t"))), Nil)
@@ -1715,7 +1708,6 @@ object TextAnalysis {
   def nbClassifier(df: DataFrame, idCol: String, text: Column,
       isPositive: Column, buckets: Int = 256): DataFrame = {
     require(buckets >= 2, "need at least 2 hash buckets")
-    import org.apache.spark.sql.GraftShims
     // ONE corpus shuffle total: the raw docs hash-repartition on doc up
     // front (this also widens a single-row-group scan, so no
     // Parallelism.ensure round-robin is needed), the (doc,label,bucket)
@@ -1730,7 +1722,7 @@ object TextAnalysis {
     // groupBy(doc) exchange-free (the model attaches by broadcast,
     // which preserves partitioning).
     val par = df.sparkSession.sparkContext.defaultParallelism
-    val perDoc = GraftShims.checkpointClaimHashPartitioned(
+    val perDoc = materialize(
       df.select(col(idCol).as("doc"), isPositive.as("__pos"),
           text.as("__t")).filter(col("__t").isNotNull)
         .repartition(par, col("doc"))
@@ -1739,7 +1731,7 @@ object TextAnalysis {
         .withColumn("bucket",
           pmod(Hashing.hexLong(col("__tok")), lit(buckets.toLong)))
         .groupBy("doc", "__pos", "bucket")
-        .agg(count(lit(1)).as("n")), par, "doc")
+        .agg(count(lit(1)).as("n")), Claim(par, "doc"))._1
     // The WHOLE model packs into ONE broadcast row (the nbQualityGate
     // deployment shape): the B-row class counts collapse to an array,
     // totals fold over that array in the same row, the llr map derives
@@ -1948,8 +1940,7 @@ object TextAnalysis {
     // nll is then a pure lookup, and the doc aggregate is
     // exchange-free on the up-front doc hash layout. Same smoothing,
     // same quantizer — oracle unchanged.
-    val model = lmTrain(reference, refText, buckets)
-      .localCheckpoint(true)
+    val model = materialize(lmTrain(reference, refText, buckets))._1
     val packed = broadcast(model
       .groupBy().agg(map_from_entries(collect_list(struct(
         col("b1") * buckets + col("b2"), col("c12")))).as("__pm"))
@@ -2064,7 +2055,7 @@ object TextAnalysis {
     // pass; the four margin tables all derive from the ≤B²-row model,
     // so deriving them costs B²-bounded work, never a corpus re-read;
     // the packed model crosses as ONE broadcast row
-    val model = lmTrain(reference, refText, buckets).localCheckpoint(true)
+    val model = materialize(lmTrain(reference, refText, buckets))._1
     val packed = lmPackInterp(model, buckets)
     val par = df.sparkSession.sparkContext.defaultParallelism
     val perDoc = bigramBucketPairs(
@@ -2248,8 +2239,7 @@ object TextAnalysis {
       text: Column, reference: DataFrame, refText: Column,
       buckets: Int = 256): DataFrame = {
     require(buckets >= 2, "need at least 2 hash buckets")
-    val model = lmTrainTrigram(reference, refText, buckets)
-      .localCheckpoint(true)
+    val model = materialize(lmTrainTrigram(reference, refText, buckets))._1
     // all five margin tables in ONE checkpointed union job. NOTE: this
     // collapse WON here (trigram: 5 small margins of a B³-bounded model,
     // measured faster than the lazy per-branch form, round 12) but LOST
@@ -2261,7 +2251,7 @@ object TextAnalysis {
     // result.
     val nl = lit(null).cast(LongType)
     val contL = model.groupBy("b2", "b3").agg(count(lit(1)).as("c"))
-    val allm = model.groupBy("b1", "b2")
+    val allm = materialize(model.groupBy("b1", "b2")
       .agg(sum(col("c123")).as("v1"), count(lit(1)).as("v2"))
       .select(lit(1).as("gid"), col("b1").as("g1"), col("b2").as("g2"),
         col("v1"), col("v2"))
@@ -2276,8 +2266,7 @@ object TextAnalysis {
           col("v1"), nl.as("v2")))
       .unionByName(contL.groupBy().agg(count(lit(1)).as("v1"))
         .select(lit(5).as("gid"), nl.as("g1"), nl.as("g2"),
-          col("v1"), nl.as("v2")))
-      .localCheckpoint(true)
+          col("v1"), nl.as("v2"))))._1
     val pre = allm.filter(col("gid") === 1).select(col("g1").as("b1"),
       col("g2").as("b2"), col("v1").as("__c12"), col("v2").as("__n12"))
     val cont = allm.filter(col("gid") === 2).select(col("g1").as("b2"),
@@ -2519,15 +2508,14 @@ object TextAnalysis {
       text: Column, reference: DataFrame, refText: Column,
       buckets: Int = 64): DataFrame = {
     require(buckets >= 2, "need at least 2 hash buckets")
-    val model = lmTrainQuadgram(reference, refText, buckets)
-      .localCheckpoint(true)
+    val model = materialize(lmTrainQuadgram(reference, refText, buckets))._1
     // checkpointed margin cascade — the round-12 shape, kept after the
     // measured round-13 union-of-branches experiment lost 0.85 → 2.04 s
     // (see [[lmPerplexityBucketsQuintgram]] for the analysis)
-    val cont3 = model.groupBy("b2", "b3", "b4")
-      .agg(count(lit(1)).as("__cp3")).localCheckpoint(true)
-    val contp = cont3.groupBy("b3", "b4")
-      .agg(count(lit(1)).as("__cpp")).localCheckpoint(true)
+    val cont3 = materialize(model.groupBy("b2", "b3", "b4")
+      .agg(count(lit(1)).as("__cp3")))._1
+    val contp = materialize(cont3.groupBy("b3", "b4")
+      .agg(count(lit(1)).as("__cpp")))._1
     val pre = model.groupBy("b1", "b2", "b3")
       .agg(sum(col("c1234")).as("__c123"), count(lit(1)).as("__n123"))
     val c23 = cont3.groupBy("b2", "b3")
@@ -2820,8 +2808,7 @@ object TextAnalysis {
       text: Column, reference: DataFrame, refText: Column,
       buckets: Int = 32): DataFrame = {
     require(buckets >= 2, "need at least 2 hash buckets")
-    val model = lmTrainQuintgram(reference, refText, buckets)
-      .localCheckpoint(true)
+    val model = materialize(lmTrainQuintgram(reference, refText, buckets))._1
     // Margin cascade with EVERY level eagerly checkpointed — the
     // round-12 shape, kept after a measured round-13 experiment:
     // collapsing all eight margins into one union-of-branches job
@@ -2834,12 +2821,12 @@ object TextAnalysis {
     // cont4/cont3/contp are each one statistics-sized exchange over
     // the cached level above, and every margin is then a plain
     // single-exchange count/sum over a cached table.
-    val cont4 = model.groupBy("b2", "b3", "b4", "b5")
-      .agg(count(lit(1)).as("__cp4")).localCheckpoint(true)
-    val cont3 = cont4.groupBy("b3", "b4", "b5")
-      .agg(count(lit(1)).as("__cpp3")).localCheckpoint(true)
-    val contp = cont3.groupBy("b4", "b5")
-      .agg(count(lit(1)).as("__cppp")).localCheckpoint(true)
+    val cont4 = materialize(model.groupBy("b2", "b3", "b4", "b5")
+      .agg(count(lit(1)).as("__cp4")))._1
+    val cont3 = materialize(cont4.groupBy("b3", "b4", "b5")
+      .agg(count(lit(1)).as("__cpp3")))._1
+    val contp = materialize(cont3.groupBy("b4", "b5")
+      .agg(count(lit(1)).as("__cppp")))._1
     val pre = model.groupBy("b1", "b2", "b3", "b4")
       .agg(sum(col("c12345")).as("__c1234"), count(lit(1)).as("__n1234"))
     val c234 = cont4.groupBy("b2", "b3", "b4")
@@ -3197,11 +3184,10 @@ object TextAnalysis {
     require(maxOrder >= 1, "maxOrder >= 1")
     val ids = pairs.select(col("doc_a").as("doc"))
       .union(pairs.select(col("doc_b").as("doc"))).distinct()
-    val toks = Parallelism.ensure(
+    val toks = materialize(Parallelism.ensure(
         docs.select(col(idCol).as("doc"), text.as("__t")))
       .join(ids, Seq("doc"), "left_semi")
-      .select(col("doc"), tokens(col("__t")).as("__w"))
-      .localCheckpoint(true)
+      .select(col("doc"), tokens(col("__t")).as("__w")))._1
     val grams = (1 to maxOrder).map { n =>
       toks.filter(size(col("__w")) >= n)
         .select(col("doc"), lit(n).as("n"),
@@ -3211,8 +3197,8 @@ object TextAnalysis {
               i => concat_ws(" ", slice(col("__w"), i + 1, lit(n))))))
             .as("gram"))
     }.reduce(_ union _)
-    val counts = grams.groupBy("doc", "n", "gram")
-      .agg(count(lit(1)).as("__c")).localCheckpoint(true)
+    val counts = materialize(grams.groupBy("doc", "n", "gram")
+      .agg(count(lit(1)).as("__c")))._1
     val totals = counts.groupBy("doc", "n").agg(sum(col("__c")).as("__tot"))
     val clip = pairs
       .join(counts.select(col("doc").as("doc_a"), col("n"), col("gram"),
@@ -3341,12 +3327,11 @@ object TextAnalysis {
     // the stripped char string lands in a REAL column before the
     // n-gram HOF (the hoisting contract: one regexp pass per doc, not
     // one per gram)
-    val chars = Parallelism.ensure(
+    val chars = materialize(Parallelism.ensure(
         docs.select(col(idCol).as("doc"), text.as("__t")))
       .join(ids, Seq("doc"), "left_semi")
       .filter(col("__t").isNotNull)
-      .select(col("doc"), regexp_replace(col("__t"), " ", "").as("__s"))
-      .localCheckpoint(true)
+      .select(col("doc"), regexp_replace(col("__t"), " ", "").as("__s")))._1
     val grams = (1 to maxOrder).map { n =>
       chars.filter(length(col("__s")) >= n)
         .select(col("doc"), lit(n).as("n"),
@@ -3354,8 +3339,8 @@ object TextAnalysis {
             transform(sequence(lit(0), length(col("__s")) - n),
               i => col("__s").substr(i + 1, lit(n))))).as("gram"))
     }.reduce(_ union _)
-    val counts = grams.groupBy("doc", "n", "gram")
-      .agg(count(lit(1)).as("__c")).localCheckpoint(true)
+    val counts = materialize(grams.groupBy("doc", "n", "gram")
+      .agg(count(lit(1)).as("__c")))._1
     val totals = counts.groupBy("doc", "n").agg(sum(col("__c")).as("__tot"))
     val clip = pairs
       .join(counts.select(col("doc").as("doc_a"), col("n"), col("gram"),
@@ -3448,8 +3433,8 @@ object TextAnalysis {
     def tName(p: Double): String = s"__t${math.round(p * 100)}"
     // two passes (cut selection, sweep): checkpoint so the upstream
     // scoring subplan runs once, not once per job
-    val base = scored.select(score.cast(DoubleType).as("__s"),
-      coalesce(label, lit(false)).as("__y")).localCheckpoint(true)
+    val base = materialize(scored.select(score.cast(DoubleType).as("__s"),
+      coalesce(label, lit(false)).as("__y")))._1
     val cuts = Quantiles.quantileContBucketed(base, Seq.empty,
       Seq(("s", col("__s"), width, fracs.map(p => (tName(p), p)))))
     val aggs =
@@ -3521,7 +3506,7 @@ object TextAnalysis {
     val b = buckets.toLong
     def pack(reference: DataFrame, refText: Column,
         pm: String, c1: String): DataFrame = {
-      val model = lmTrain(reference, refText, buckets).localCheckpoint(true)
+      val model = materialize(lmTrain(reference, refText, buckets))._1
       model.groupBy().agg(map_from_entries(collect_list(struct(
           col("b1") * buckets + col("b2"), col("c12")))).as(pm))
         .crossJoin(model.groupBy("b1").agg(sum(col("c12")).as("c1"))
@@ -3566,7 +3551,7 @@ object TextAnalysis {
         // Σmean_gen div n), never `Σced div n`: ced sums can go
         // negative, where Spark's `div` truncates toward zero but SQL
         // `//` floors — the q84 positive-mass contract
-        val base = scored.localCheckpoint(true)
+        val base = materialize(scored)._1
         base.crossJoin(broadcast(base.agg(
             (expr("sum(mean_in_micro) div count(1)") -
               expr("sum(mean_gen_micro) div count(1)")).as("__cut"))))
@@ -3613,11 +3598,13 @@ object TextAnalysis {
       // — pushed below the ensure exchange it would re-tokenize the
       // whole corpus on the single scan task (the q141/q144 trap)
       .filter(Parallelism.unpushable(col("__n") > 0L))
-    val rated = markers.zipWithIndex.foldLeft(base) { case (acc, (w, i)) =>
+    // 3 jobs read it
+    val rated = materialize(markers.zipWithIndex.foldLeft(base) {
+      case (acc, (w, i)) =>
       acc.withColumn(s"__f$i",
         expr(s"CAST(size(filter(__t, x -> x = '$w')) AS BIGINT)" +
           " * 1000000 div __n"))
-    }.drop("__tx", "__t").localCheckpoint(true) // 3 jobs read it
+    }.drop("__tx", "__t"))._1
     // pass 1: corpus floor-means (one statistics row)
     val statAggs = markers.indices.map(i =>
       sum(col(s"__f$i")).as(s"__sf$i")) :+ count(lit(1)).as("__nd")
@@ -3634,15 +3621,16 @@ object TextAnalysis {
         expr(s"greatest(__sad$i div __nd2, 1)").as(s"__md$i")): _*)
     // standardized scores, sign-split (negative numerators are where
     // div and // diverge)
-    val z = markers.indices.foldLeft(withBar.crossJoin(broadcast(mds))) {
+    // centroids AND the doc side read it
+    val z = materialize(markers.indices.foldLeft(
+        withBar.crossJoin(broadcast(mds))) {
       (acc, i) =>
         acc.withColumn(s"__z$i", expr(
           s"CASE WHEN __f$i >= __fbar$i" +
             s" THEN (__f$i - __fbar$i) * 1000000 div __md$i" +
             s" ELSE -((__fbar$i - __f$i) * 1000000 div __md$i) END"))
     }.select(col(idCol) +: col("__src") +:
-      markers.indices.map(i => col(s"__z$i")): _*)
-      .localCheckpoint(true) // centroids AND the doc side read it
+      markers.indices.map(i => col(s"__z$i")): _*))._1
     // per-source centroids (sign-split floor means), md5-keyed for the
     // deterministic tie-break the top-k heap needs
     val cAggs = markers.indices.map(i =>
