@@ -1,15 +1,20 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftShims}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Relational
 
 /** The reference's three survey pipelines (SURVEY.md §3), re-expressed as
   * composed lazy stages over the export shape of FIXTURES.md §1. Each
-  * pipeline is one Catalyst plan end-to-end — the reference materializes
-  * eagerly after every operation
-  * (/root/reference/lime_survey_orders_shipped.py:48-74).
+  * pipeline's output is materialized once, in one job
+  * (`GraftShims.materialize`), so the sinks that load it (a CSV, then
+  * the warehouse) read its blocks instead of re-running the parse, the
+  * explode and the keep-last shuffle once per sink. The blocks are held
+  * until `GraftShims.release` or until the batch is dropped. The
+  * reference materializes eagerly after every operation
+  * (`lime_survey_orders_shipped.py:48-74`) and loads its
+  * one frame twice (:84-155).
   *
   * `updatedTs` is injected (fixed literal in tests) per the determinism
   * rule of SURVEY.md §7.4.4; production passes
@@ -95,12 +100,13 @@ object SurveyPipelines {
     // date_sent per order_number, ties to the latest ingest position.
     val deduped = Relational.keepLast(Seq("order_number"),
       Seq(col("date_sent").desc, col("_ingest_pos").desc))(cleaned)
-    (Relational.membership("grade",
+    val out = (Relational.membership("grade",
         Seq("A1", "A2", "A3", "A4", "A5")) _ // O16 before cast (cast safety)
       andThen Relational.regexStripCast("grade", "A") // O14
       )(deduped)
       .select("id_answer", "date_sent", "grade", "email", "order_number",
         "updated_ts")
+    GraftShims.materialize(out)._1
   }
 
   /** NPS pipeline (/root/reference/lime_survey_nps.py:54-73): the
@@ -111,7 +117,7 @@ object SurveyPipelines {
     val wide = widen(unnest(export),
       Seq("submitdate", "lastpage", "startlanguage", "startdate",
         "datestamp", "q01", "q03", "q06"))
-    (Relational.project(Seq("index", "submitdate", "lastpage",
+    val out = (Relational.project(Seq("index", "submitdate", "lastpage",
         "startlanguage", "startdate", "datestamp", "q01", "q03", "q06")) _
       andThen Relational.renameAll(Map(
         "index" -> "id_answer", "submitdate" -> "date_sent",
@@ -122,6 +128,7 @@ object SurveyPipelines {
       andThen Relational.dropNulls(Seq("email", "nps")) // O11
       andThen Relational.regexStripCast("nps", "A|N") // O15
       )(wide)
+    GraftShims.materialize(out)._1
   }
 
   /** Returns pipeline (/root/reference/lime_survey_returns.py:55-73):
@@ -130,7 +137,7 @@ object SurveyPipelines {
   def returns(export: DataFrame, updatedTs: Column): DataFrame = {
     val wide = widen(unnest(export),
       Seq("id", "datestamp", "q01", "q03", "q06", "q12", "q22", "startlanguage"))
-    (Relational.project(Seq("id", "datestamp", "q01", "q03", "q06",
+    val out = (Relational.project(Seq("id", "datestamp", "q01", "q03", "q06",
         "q12", "q22", "startlanguage")) _
       andThen Relational.dropNullsAny _ // O10, all columns
       andThen Relational.renameAll(Map(
@@ -143,5 +150,6 @@ object SurveyPipelines {
         "email", "order_number", "return_order_number", "language",
         "updated_ts", "return_channel")) // final order, reference line 73
       )(wide)
+    GraftShims.materialize(out)._1
   }
 }

@@ -1,7 +1,10 @@
 package graft.sinks
 
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Load-side operators (SURVEY.md §2.5–§2.6). The reference's terminal
   * stores are S3 CSV objects and a Redshift warehouse loaded by bulk COPY;
@@ -17,12 +20,14 @@ object Sinks {
     * `limesurvey/<table>_<yyyymmdd>.csv`). `dateKey` is injected for
     * reproducibility (the reference stamps wall-clock `DATE_NOW`,
     * SURVEY.md §7.4.4). Pandas-parity CSV options: header, minimal
-    * quoting, empty string for null. Executor-parallel write — callers
-    * coalesce(1) only when the consumer requires a single object. */
+    * quoting, empty string for null. The sink sizes its files: one part
+    * per `spark.sql.files.maxPartitionBytes` of the batch's estimated
+    * size (`sized`), so a nightly batch lands as one object and a
+    * large one keeps its width. */
   def csvDatedKey(df: DataFrame, baseUri: String, table: String,
       dateKey: String): String = {
     val path = s"$baseUri/limesurvey/${table}_$dateKey.csv"
-    df.write.mode(SaveMode.Overwrite)
+    sized(df).write.mode(SaveMode.Overwrite)
       .option("header", true).option("emptyValue", "")
       .csv(path)
     path
@@ -59,7 +64,7 @@ object Sinks {
     fs.delete(staging, true)
     val merged =
       if (fs.exists(path))
-        spark.read.parquet(path.toString)
+        readTable(spark, path)
           // NULL-dated rows are NOT in the reloaded range: the modeled
           // `DELETE WHERE dateCol >= cutoff` keeps them (NULL predicate
           // deletes nothing), so retention must keep them too
@@ -72,7 +77,7 @@ object Sinks {
     // failure point (a crash between the renames leaves the backup for
     // the recovery branch above; data is never deleted before the new
     // version is in place).
-    merged.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    sized(merged).write.mode(SaveMode.Overwrite).parquet(staging.toString)
     fs.delete(backup, true)
     if (fs.exists(path) && !fs.rename(path, backup))
       throw new RuntimeException(s"could not move current table aside for $path")
@@ -122,13 +127,13 @@ object Sinks {
     val next = (0L +: allVersionDirs(fs, vdir).map(_._1)).max + 1
     val merged = committed.lastOption match {
       case Some((_, p)) =>
-        spark.read.parquet(p.toString)
+        readTable(spark, p)
           .filter(col(dateCol) < lit(cutoff) || col(dateCol).isNull)
           .unionByName(df)
       case None => df
     }
     val target = new org.apache.hadoop.fs.Path(vdir, f"v$next%08d")
-    merged.write.mode(SaveMode.ErrorIfExists).parquet(target.toString)
+    sized(merged).write.mode(SaveMode.ErrorIfExists).parquet(target.toString)
     // Spark drops _SUCCESS on job commit; if a deployment disabled the
     // marker (mapreduce...marksuccessfuljobs=false) the version would
     // be invisible forever — create it explicitly then (atomic create,
@@ -150,7 +155,45 @@ object Sinks {
     val (_, path) = committedVersions(fs, vdir).lastOption.getOrElse(
       throw new NoSuchElementException(
         s"no committed version of $table under $warehouseDir"))
-    spark.read.parquet(path.toString)
+    readTable(spark, path)
+  }
+
+  /** The footer key under which Spark's parquet writer stores the
+    * table's schema as JSON. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The stored table at `path`, read with the schema Spark wrote into
+    * the footer of one top-level data file. The footer is read here, on
+    * the driver; `spark.read.parquet` would read the same footer inside a
+    * one-task schema-inference job. Falls back to `spark.read.parquet`
+    * when there is no top-level data file (a partitioned layout, whose
+    * footer schema lacks the partition columns) or when the footer
+    * carries no Spark schema (a file some other writer made). */
+  private def readTable(spark: org.apache.spark.sql.SparkSession,
+      path: org.apache.hadoop.fs.Path): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dataFile = path.getFileSystem(conf).listStatus(path).find { st =>
+      val name = st.getPath.getName
+      st.isFile && !name.startsWith("_") && !name.startsWith(".")
+    }
+    val footerSchema = dataFile.flatMap { st =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try Option(reader.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
+      finally reader.close()
+    }.map(DataType.fromJson).collect { case s: StructType => s }
+    footerSchema.fold(spark.read.parquet(path.toString))(
+      spark.read.schema(_).parquet(path.toString))
+  }
+
+  /** `df` narrowed to ⌈estimated bytes / `spark.sql.files.maxPartitionBytes`⌉
+    * partitions — the files one reader split would hold. `coalesce` is
+    * narrow (no shuffle) and never raises the partition count. Without
+    * CBO the estimate grows with the plan's input bytes, so a batch read
+    * from a large input keeps its width. */
+  private def sized(df: DataFrame): DataFrame = {
+    val target = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    df.coalesce(((bytes + target - 1) / target).max(1).min(Int.MaxValue).toInt)
   }
 
   /** Retire history: keep the newest `keep` committed versions, drop
@@ -195,25 +238,6 @@ object Sinks {
       fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))
     }
 
-  /** O23+O24+O25 against a REAL SQL warehouse over JDBC — the
-    * reference's literal Redshift sequence
-    * (/root/reference/lime_survey_orders_shipped.py:111-151):
-    * `DELETE WHERE dateCol >= cutoff` + `CREATE TABLE IF NOT EXISTS`
-    * (every string column `varchar(256)`, the reference's type-erasing
-    * DDL at :124-132) + bulk load, here the executor-parallel
-    * `df.write.jdbc` append (Spark's COPY analogue — each partition
-    * batches inserts over its own connection). Idempotency contract
-    * (the reference's implicit one): re-running yields identical table
-    * contents ONLY for batches whose `dateCol` is non-NULL and
-    * >= `cutoff` — the ranged DELETE never matches NULL, so a NULL- or
-    * below-cutoff-dated input row would duplicate on every re-run.
-    * EXISTING NULL-dated table rows outside the batch survive reloads
-    * for the same reason (that part is a feature). Control-plane
-    * statements run on ONE driver connection; cutoff crosses as a
-    * bind parameter.
-    * Spec-driven against the embedded Derby the Spark distribution
-    * bundles; a production deployment swaps the URL (Redshift,
-    * Postgres, ...) — the same config-only seam as the object store. */
   /** Spark's built-in DerbyDialect maps StringType → CLOB, which (a)
     * cannot sit in a ranged DELETE predicate (Derby forbids CLOB
     * comparisons) and (b) makes the writer's setNull(CLOB) fail
@@ -237,6 +261,25 @@ object Sinks {
     org.apache.spark.sql.jdbc.JdbcDialects.registerDialect(
       VarcharDerbyDialect)
 
+  /** O23+O24+O25 against a REAL SQL warehouse over JDBC — the
+    * reference's literal Redshift sequence
+    * (`lime_survey_orders_shipped.py:111-151`):
+    * `DELETE WHERE dateCol >= cutoff` + `CREATE TABLE IF NOT EXISTS`
+    * (every string column `varchar(256)`, the reference's type-erasing
+    * DDL at :124-132) + bulk load, here the executor-parallel
+    * `df.write.jdbc` append (Spark's COPY analogue — each partition
+    * batches inserts over its own connection). Idempotency contract
+    * (the reference's implicit one): re-running yields identical table
+    * contents ONLY for batches whose `dateCol` is non-NULL and
+    * >= `cutoff` — the ranged DELETE never matches NULL, so a NULL- or
+    * below-cutoff-dated input row would duplicate on every re-run.
+    * EXISTING NULL-dated table rows outside the batch survive reloads
+    * for the same reason (that part is a feature). Control-plane
+    * statements run on ONE driver connection; cutoff crosses as a
+    * bind parameter.
+    * Spec-driven against the embedded Derby the Spark distribution
+    * bundles; a production deployment swaps the URL (Redshift,
+    * Postgres, ...) — the same config-only seam as the object store. */
   def jdbcReplaceWhere(df: DataFrame, url: String, table: String,
       dateCol: String, cutoff: String,
       props: java.util.Properties = new java.util.Properties): Unit = {

@@ -210,7 +210,7 @@ class LimeSurveyClient(url: String, user: String, password: String,
   /** Export as a DataFrame in the survey-export shape (FIXTURES.md §1):
     * `responses: array<map<responseId, map<col, value>>>`. The single
     * driver-side string enters Spark immediately; all un-nesting is lazy
-    * executor work (graft.pipelines.SurveyUnnest). */
+    * executor work ([[graft.pipelines.SurveyPipelines.unnest]]). */
   def responsesDF(spark: SparkSession, surveyId: Int, status: String = "",
       heading: String = "", response: String = "",
       fields: Seq[String] = Nil): DataFrame =

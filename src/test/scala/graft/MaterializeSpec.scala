@@ -1,11 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.GraftListenerShims
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftShims, Row}
 import org.apache.spark.sql.GraftShims._
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -47,29 +44,6 @@ class MaterializeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       case Count => rows.size.toLong
       case Max(_) => if (vs.isEmpty) Long.MinValue else vs.max
       case Sum(_) => vs.sum
-    }
-  }
-
-  /** Runs `body` under its own job group and returns its result with the
-    * stage names of every job it started. */
-  private def jobsOf[T](body: => T): (T, Seq[Seq[String]]) = {
-    val sc = spark.sparkContext
-    val group = s"materialize-spec-${System.nanoTime()}"
-    val jobs = mutable.ArrayBuffer.empty[Seq[String]]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.synchronized(jobs += e.stageInfos.map(_.name))
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "materialize")
-    try {
-      val r = body
-      GraftListenerShims.waitListenerBusEmpty(sc)
-      (r, jobs.synchronized(jobs.toList))
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
     }
   }
 

@@ -1,7 +1,16 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 import graft.sinks.Sinks
 
@@ -204,6 +213,109 @@ class SinksSpec extends SparkSpec {
     val left = new java.io.File(s"$dir/t/_v").list().sorted.toSeq
     assert(left == Seq("v00000003"), left)
     assert(Sinks.readVersioned(spark, dir, "t").count() == 2)
+  }
+
+  /** The data files of a Spark output directory. */
+  private def parts(dir: String): Seq[String] =
+    Files.list(Paths.get(dir)).iterator.asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("part-")).toSeq
+
+  test("replaceWhere onto an existing table runs one job: the stored " +
+      "schema comes from a footer, not an inference job") {
+    val dir = Files.createTempDirectory("graft_wh_jobs").toString
+    val batch = Seq(("2018-03-01", "fresh")).toDF("date_sent", "v")
+    Sinks.replaceWhere(Seq(("2017-06-01", "keep")).toDF("date_sent", "v"),
+      dir, "t", "date_sent", "2017-01-01")
+    assert(jobsOf(Sinks.replaceWhere(batch, dir, "t", "date_sent",
+      "2018-01-01"))._2.size == 1)
+    assert(spark.read.parquet(s"$dir/t").as[(String, String)].collect().toSet ==
+      Set(("2017-06-01", "keep"), ("2018-03-01", "fresh")))
+    // the footer reader yields the schema inference would
+    Sinks.replaceWhereVersioned(batch, dir, "tv", "date_sent", "2018-01-01")
+    assert(Sinks.readVersioned(spark, dir, "tv").schema ==
+      spark.read.parquet(s"$dir/tv/_v/v00000001").schema)
+  }
+
+  test("sinks write as many files as the batch's bytes need, never more " +
+      "than its partitions") {
+    val batch = (1 to 16).map(i => (f"2018-03-$i%02d", s"v$i"))
+      .toDF("date_sent", "v").repartition(8)
+    val dir = Files.createTempDirectory("graft_sized").toString
+    val csv = Sinks.csvDatedKey(batch, dir, "t", "20260101")
+    Sinks.replaceWhere(batch, dir, "t", "date_sent", "2018-01-01")
+    Sinks.replaceWhere(batch, dir, "t", "date_sent", "2018-01-01")
+    assert(parts(csv).size == 1, parts(csv))
+    assert(parts(s"$dir/t").size == 1, parts(s"$dir/t"))
+    // a tiny split target keeps the width the bytes ask for, capped at
+    // the batch's 8 partitions
+    val bytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes
+    val target = bytes / 3 + 1
+    val want = ((bytes + target - 1) / target).min(8).toInt
+    assert(want > 1)
+    Profiles.withConf(spark, "spark.sql.files.maxPartitionBytes" -> target.toString) {
+      val tiny = Files.createTempDirectory("graft_sized_tiny").toString
+      val csv = Sinks.csvDatedKey(batch, tiny, "t", "20260101")
+      Sinks.replaceWhere(batch, tiny, "t", "date_sent", "2018-01-01")
+      assert(parts(csv).size == want, parts(csv))
+      assert(parts(s"$tiny/t").size == want, parts(s"$tiny/t"))
+    }
+  }
+
+  test("replaceWhere reloads a table whose footer has no Spark schema") {
+    val dir = Files.createTempDirectory("graft_wh_foreign").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message t { optional binary date_sent (STRING); optional binary v (STRING); }")
+    val file = new Path(s"$dir/t/part-00000.parquet")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(file, conf))
+      .withType(schema).withConf(conf).build()
+    val groups = new SimpleGroupFactory(schema)
+    try Seq("2017-06-01" -> "keep", "2018-03-01" -> "stale").foreach {
+      case (d, v) => writer.write(groups.newGroup().append("date_sent", d).append("v", v))
+    } finally writer.close()
+    val footer = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    try assert(!footer.getFileMetaData.getKeyValueMetaData.asScala.keys
+      .exists(_.startsWith("org.apache.spark")))
+    finally footer.close()
+    Sinks.replaceWhere(Seq(("2018-03-01", "fresh")).toDF("date_sent", "v"),
+      dir, "t", "date_sent", "2018-01-01")
+    assert(spark.read.parquet(s"$dir/t").as[(String, String)].collect().toSet ==
+      Set(("2017-06-01", "keep"), ("2018-03-01", "fresh")))
+  }
+
+  test("replaceWhere reloads a partitionBy table and keeps its partition column") {
+    val dir = Files.createTempDirectory("graft_wh_part").toString
+    Seq(("2017-06-01", "keep", "eu"), ("2018-03-01", "stale", "us"))
+      .toDF("date_sent", "v", "region")
+      .write.partitionBy("region").parquet(s"$dir/t")
+    Sinks.replaceWhere(Seq(("2018-03-01", "fresh", "us")).toDF("date_sent", "v", "region"),
+      dir, "t", "date_sent", "2018-01-01")
+    val after = spark.read.parquet(s"$dir/t")
+      .select("date_sent", "v", "region").as[(String, String, String)].collect().toSet
+    assert(after == Set(("2017-06-01", "keep", "eu"), ("2018-03-01", "fresh", "us")))
+  }
+
+  test("replaceWhere fails loudly when the stored columns differ from the " +
+      "batch, and leaves the table as it was") {
+    val dir = Files.createTempDirectory("graft_wh_mismatch").toString
+    val stored = Set(("2017-06-01", "keep"), ("2018-03-01", "stale"))
+    Sinks.replaceWhere(stored.toSeq.toDF("date_sent", "v"), dir, "t",
+      "date_sent", "2017-01-01")
+    val e = intercept[AnalysisException](Sinks.replaceWhere(
+      Seq(("2018-03-01", "fresh")).toDF("date_sent", "w"), dir, "t",
+      "date_sent", "2018-01-01"))
+    assert(e.getMessage.contains("\"v\""), e.getMessage)
+    assert(spark.read.parquet(s"$dir/t").as[(String, String)].collect().toSet == stored)
+  }
+
+  test("Sinks.scala reads a stored table only through its one table reader") {
+    val src = Files.readString(Paths.get("src/main/scala/graft/sinks/Sinks.scala"))
+    val start = src.indexOf("private def readTable(")
+    val end = src.indexOf("\n  }\n", start)
+    val reads = "spark\\.read\\.parquet\\(".r.findAllMatchIn(src).map(_.start).toList
+    assert(start >= 0 && reads.nonEmpty)
+    assert(reads.forall(i => i > start && i < end),
+      s"spark.read.parquet( outside readTable at offsets ${reads.filter(i => i < start || i > end)}")
   }
 
   test("overwritePartitions rewrites only the partitions in the batch (O23 at scale)") {
