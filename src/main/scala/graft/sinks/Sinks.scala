@@ -359,32 +359,42 @@ object Sinks {
     * `maxRowsPerSecond <= 0` disables it. Runs via `foreachPartition` so
     * rows never transit the driver; the insert callback receives each row
     * as a column-name→value map (the reference's `dict(zip(cols, vals))`,
-    * /root/reference/limesurvey.py:160-162) with `id` blanked. */
+    * limesurvey.py:160-162), NULL as `null`, paced and
+    * with `id` blanked by [[RowPacer]]. */
   def throttledRows(df: DataFrame, maxRowsPerSecond: Double)(
       insert: Map[String, String] => Unit): Unit = {
     val cols = df.columns
-    val minIntervalNanos =
-      if (maxRowsPerSecond <= 0) 0L else (1e9 / maxRowsPerSecond).toLong
     // the rate cap is GLOBAL (one polite API client, like the
     // reference's single process): throttled runs route through one
     // partition, otherwise P concurrent partitions would each pace
     // independently and hit the service at P x the stated rate
-    val routed = if (minIntervalNanos > 0) df.coalesce(1) else df
+    val routed = if (maxRowsPerSecond > 0) df.coalesce(1) else df
     routed.foreachPartition { it: Iterator[Row] =>
-      var next = System.nanoTime()
+      val pacer = new RowPacer(maxRowsPerSecond)
       it.foreach { row =>
-        if (minIntervalNanos > 0) {
-          val wait = next - System.nanoTime()
-          if (wait > 0) Thread.sleep(wait / 1000000, (wait % 1000000).toInt)
-          next = math.max(next, System.nanoTime()) + minIntervalNanos
-        }
-        val m = cols.zipWithIndex.map { case (c, i) =>
+        insert(pacer(cols.zipWithIndex.map { case (c, i) =>
           c -> (if (row.isNullAt(i)) null else row.get(i).toString)
-        }.toMap
-        // reference blanks id before insert — only when the row HAS an
-        // id column; never inject a phantom field
-        insert(if (m.contains("id")) m.updated("id", "") else m)
+        }.toMap))
       }
+    }
+  }
+
+  /** O26's per-row schedule, shared by [[throttledRows]] and the DSv2
+    * write. `pacer(row)` sleeps until the row's send time (absolute, so
+    * pacing never drifts with the insert's latency; `maxRowsPerSecond
+    * <= 0` disables it) and returns the row with an existing `id`
+    * blanked, as the reference does before each insert. */
+  final class RowPacer(maxRowsPerSecond: Double) {
+    private val intervalNanos =
+      if (maxRowsPerSecond <= 0) 0L else (1e9 / maxRowsPerSecond).toLong
+    private var next = System.nanoTime()
+    def apply(row: Map[String, String]): Map[String, String] = {
+      if (intervalNanos > 0) {
+        val wait = next - System.nanoTime()
+        if (wait > 0) Thread.sleep(wait / 1000000, (wait % 1000000).toInt)
+        next = math.max(next, System.nanoTime()) + intervalNanos
+      }
+      if (row.contains("id")) row.updated("id", "") else row
     }
   }
 }

@@ -5,6 +5,10 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 import java.util.Base64
 
+import com.fasterxml.jackson.core.{JsonFactoryBuilder, JsonProcessingException, StreamReadConstraints}
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.JsonNodeType
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -21,9 +25,13 @@ import org.apache.spark.sql.types._
   *    interpolation (the reference's hand-built envelopes produce
   *    malformed JSON in release_session_key,
   *    /root/reference/limesurvey.py:109 — a bug not reproduced).
-  *  - Errors fail fast; the reference swallows every exception to None
-  *    (/root/reference/limesurvey.py:30-32), which SURVEY §7.5 lists as a
-  *    non-goal.
+  *  - Replies decode with Jackson, which Spark ships ([[result]]).
+  *  - Errors fail fast: a reply whose `result` is missing or of the wrong
+  *    type is an [[RpcError]]. The reference swallows every exception to
+  *    None (limesurvey.py:30-32), which SURVEY §7.5 lists as a non-goal.
+  *  - The DSv2 connector ([[graft.sources.v2.LimeSurveyTableProvider]])
+  *    sends every call through this class too: its driver logs in, and
+  *    its executors wrap the issued key without logging in again.
   *  - Extraction results enter Spark as DataFrames immediately
   *    ([[responsesDF]]), so everything downstream is a lazy plan.
   *
@@ -82,7 +90,9 @@ object LimeSurveyClient {
     }
   }
 
-  // -- minimal JSON encode/decode (no extra deps allowed) ---------------
+  // -- JSON: one envelope encoder, one reply reader ---------------------
+  // Envelopes are encoded here; replies decode with Jackson, which Spark
+  // ships (no dependency beyond Spark's own jars).
 
   /** JSON string quote+escape — shared with [[graft.Verify]]'s
     * oracle_sql.json writer (one escaper to fix, not two drifting
@@ -107,85 +117,93 @@ object LimeSurveyClient {
     case xs: Seq[_] => xs.map(jval).mkString("[", ",", "]")
   }
 
-  /** Extract the JSON value of a top-level key from an RPC reply without a
-    * JSON library: delegates to Spark's own parser at the call sites that
-    * build DataFrames; driver-side string results use this narrow path.
-    * The raw match is UNESCAPED before returning — PHP's json_encode
-    * (what the LimeSurvey endpoint runs) escapes '/' as '\\/' by
-    * default, and base64 payloads almost always contain '/', so the
-    * verbatim match would feed backslashes into the base64 decoder. */
-  private[graft] def topLevelString(json: String, key: String): String = {
-    // A linear scan, not a regex: java.util.regex recurses once per
-    // character through a string-body alternation and overflows the
-    // default stack near 2,000 characters, and export replies run to
-    // hundreds of KB. The first `"key"` followed by `:` and a string
-    // value wins.
-    val quoted = "\"" + key + "\""
-    def skipWs(i: Int): Int = {
-      var j = i
-      while (j < json.length && json.charAt(j).isWhitespace) j += 1
-      j
+  private def envelope(method: String, params: Map[String, Any], id: Int): String =
+    jval(Map("method" -> method, "params" -> params, "id" -> id))
+
+  /** An RPC reply that carries no usable `result`: the API reports a bad
+    * login, an expired session key or a refused call by putting an object
+    * such as `{"status": "Invalid session key"}` where the result belongs. */
+  final class RpcError(message: String) extends RuntimeException(message)
+
+  // An export's base64 payload is one JSON string as long as the whole
+  // export, so the reader lifts Jackson's 20M-character string cap.
+  private val json = new ObjectMapper(new JsonFactoryBuilder()
+    .streamReadConstraints(StreamReadConstraints.builder()
+      .maxStringLength(Int.MaxValue).build())
+    .build())
+
+  /** The statuses LimeSurvey's RemoteControl 2 handler sends where a
+    * listing's array or an export's payload belongs when there are no
+    * rows (older servers say `No Tokens found`): an empty result, not an
+    * error. Any other status object (`Invalid session key`,
+    * `No permission`, ...) is an [[RpcError]]. */
+  private val NoRows = Seq("No survey participants found", "No Tokens found",
+    "No surveys found", "No groups found", "No questions found",
+    "No Data, could not get max id")
+
+  /** The `result` node of a JSON-RPC reply, checked to be of a type in
+    * `want`: a string for a login, an object for `get_summary`. A missing
+    * or mistyped result, or a reply that is not JSON, throws [[RpcError]]
+    * quoting the reply's head — never an empty result. Jackson decodes
+    * every string escape, including the `\/` PHP's json_encode writes
+    * into every base64 payload. */
+  private[graft] def result(reply: String, want: JsonNodeType*): JsonNode =
+    checked(reply, want, Nil).get
+
+  /** [[result]] for a call that may have no rows (an array for a listing,
+    * a string for an export): `None` for the API's no-rows status. */
+  private[graft] def rowsResult(reply: String, want: JsonNodeType): Option[JsonNode] =
+    checked(reply, Seq(want), NoRows)
+
+  private def checked(reply: String, want: Seq[JsonNodeType],
+      noRows: Seq[String]): Option[JsonNode] = {
+    def fail(what: String) = new RpcError(s"RPC error reply ($what): ${reply.take(200)}")
+    // parsed as UTF-8 bytes: Jackson reads a String over 32K characters
+    // through a Reader, about twice as slowly on an export reply
+    val node = (try json.readTree(reply.getBytes(StandardCharsets.UTF_8)) catch {
+      case e: JsonProcessingException => throw fail(s"not JSON: ${e.getOriginalMessage}")
+    }).get("result")
+    val status = Option(node).filter(_.isObject).map(_.path("status").asText)
+    if (status.exists(s => noRows.exists(s.startsWith))) None
+    else if (node != null && want.contains(node.getNodeType)) Some(node)
+    else {
+      val got = if (node == null) "missing" else node.getNodeType.toString.toLowerCase
+      val name = want.map(_.toString.toLowerCase).mkString(" or ")
+      throw fail(s"result is $got, not ${if ("aeiou".contains(name.head)) "an" else "a"} $name")
     }
-    def at(i: Int, c: Char): Boolean = i < json.length && json.charAt(i) == c
-    var from = json.indexOf(quoted)
-    while (from >= 0) {
-      val colon = skipWs(from + quoted.length)
-      val open = skipWs(colon + 1)
-      if (at(colon, ':') && at(open, '"')) {
-        var end = open + 1
-        while (end < json.length && json.charAt(end) != '"')
-          end += (if (json.charAt(end) == '\\') 2 else 1)
-        if (end < json.length) return unescapeJson(json.substring(open + 1, end))
-      }
-      from = json.indexOf(quoted, from + 1)
-    }
-    throw new RuntimeException(s"RPC reply missing string key '$key': ${json.take(200)}")
   }
 
-  /** Decode the JSON string escapes of [[topLevelString]]'s raw match. */
-  private[graft] def unescapeJson(s: String): String = {
-    if (s.indexOf('\\') < 0) return s
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"' => sb += '"'; i += 2
-          case '\\' => sb += '\\'; i += 2
-          case '/' => sb += '/'; i += 2
-          case 'n' => sb += '\n'; i += 2
-          case 'r' => sb += '\r'; i += 2
-          case 't' => sb += '\t'; i += 2
-          case 'b' => sb += '\b'; i += 2
-          case 'f' => sb += '\f'; i += 2
-          case 'u' if i + 5 < s.length =>
-            sb += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar
-            i += 6
-          case other => sb += other; i += 2 // lenient on unknown escapes
-        }
-      } else { sb += c; i += 1 }
-    }
-    sb.toString
-  }
+  /** The session key a request's `params` carry, if any: the file fake
+    * server ([[Transports.FileServerTransport]]) checks it as the real
+    * endpoint does. */
+  private[sources] def sessionKeyOf(params: JsonNode): Option[String] =
+    Option(params.get("sSessionKey")).map(_.asText)
+
+  private def login(url: String, user: String, password: String,
+      transport: Transport): String =
+    result(transport.post(url, envelope("get_session_key",
+      Map("username" -> user, "password" -> password), 1)),
+      JsonNodeType.STRING).textValue
 }
 
-/** One authenticated client session. `sessionKey` is obtained by the auth
-  * handshake on construction (reference ctor /root/reference/limesurvey.py:12-21). */
-class LimeSurveyClient(url: String, user: String, password: String,
-    transport: LimeSurveyClient.Transport) {
+/** One authenticated client session. The 4-argument constructor obtains
+  * `sessionKey` by the auth handshake (reference ctor
+  * limesurvey.py:12-21); the 3-argument one wraps a key
+  * already issued, so the DSv2 connector's executors reuse the key its
+  * driver obtained and never call `get_session_key`. */
+class LimeSurveyClient(url: String, transport: LimeSurveyClient.Transport,
+    val sessionKey: String) {
   import LimeSurveyClient._
 
-  private var rpcId = 0
+  def this(url: String, user: String, password: String,
+      transport: LimeSurveyClient.Transport) =
+    this(url, transport, LimeSurveyClient.login(url, user, password, transport))
+
+  private var rpcId = 1 // id 1 is the login's
   private def call(method: String, params: Map[String, Any]): String = {
     rpcId += 1
-    transport.post(url, jval(Map(
-      "method" -> method, "params" -> params, "id" -> rpcId)))
+    transport.post(url, envelope(method, params, rpcId))
   }
-
-  val sessionKey: String = topLevelString(
-    call("get_session_key", Map("username" -> user, "password" -> password)),
-    "result")
 
   private def sessioned(extra: Map[String, Any]): Map[String, Any] =
     Map("sSessionKey" -> sessionKey) ++ extra
@@ -203,8 +221,8 @@ class LimeSurveyClient(url: String, user: String, password: String,
       "sLanguageCode" -> null, "sCompletionStatus" -> status,
       "sHeadingType" -> heading, "sResponseType" -> response,
       "aFields" -> fields)))
-    new String(Base64.getDecoder.decode(topLevelString(reply, "result")),
-      StandardCharsets.UTF_8)
+    rowsResult(reply, JsonNodeType.STRING).fold("""{"responses":[]}""")(b64 =>
+      new String(Base64.getDecoder.decode(b64.textValue), StandardCharsets.UTF_8))
   }
 
   /** Export as a DataFrame in the survey-export shape (FIXTURES.md §1):
@@ -222,19 +240,11 @@ class LimeSurveyClient(url: String, user: String, password: String,
   private def resultArrayDF(spark: SparkSession, reply: String,
       schema: StructType): DataFrame = {
     import spark.implicits._
-    // fail fast on error replies (class contract): the API signals auth/
-    // permission failures by making `result` an object or null — letting
-    // from_json null that out and explode drop every row would render an
-    // expired session key indistinguishable from "no surveys exist",
-    // exactly the reference's swallow-to-None behavior this client
-    // exists to not have
-    val m = """"result"\s*:\s*([\[{"a-zA-Z0-9-])""".r
-    m.findFirstMatchIn(reply).map(_.group(1)) match {
-      case Some("[") => ()
-      case other => throw new RuntimeException(
-        s"RPC error reply (result is ${other.getOrElse("missing")}, " +
-          s"not an array): ${reply.take(200)}")
-    }
+    // fail fast on error replies (class contract): letting from_json null
+    // an object result out and explode drop every row would render an
+    // expired session key indistinguishable from "no surveys exist".
+    // The no-rows status passes: from_json nulls it and explode drops it.
+    rowsResult(reply, JsonNodeType.ARRAY)
     spark.createDataset(Seq(reply)).toDF("j")
       .select(from_json(col("j"),
         StructType(Seq(StructField("result", ArrayType(schema))))).as("r"))
@@ -279,10 +289,7 @@ class LimeSurveyClient(url: String, user: String, password: String,
       attributes: Seq[String] = Nil,
       conditions: Map[String, String] = Map()): DataFrame =
     resultArrayDF(spark,
-      call("list_participants", sessioned(Map(
-        "iSurveyID" -> surveyId, "iStart" -> start, "iLimit" -> limit,
-        "bUnused" -> unused, "aAttributes" -> attributes,
-        "aConditions" -> conditions))),
+      participantsReply(surveyId, start, limit, unused, attributes, conditions),
       StructType(Seq(
         StructField("tid", StringType),
         StructField("participant_info", StructType(Seq(
@@ -290,8 +297,32 @@ class LimeSurveyClient(url: String, user: String, password: String,
           StructField("lastname", StringType),
           StructField("email", StringType)))))))
 
+  /** The raw reply of one [[listParticipants]] page: the DSv2 scan sends
+    * one per partition from its executors. */
+  def participantsReply(surveyId: Int, start: Int = 0,
+      limit: Int = 1000000, unused: Boolean = false,
+      attributes: Seq[String] = Nil,
+      conditions: Map[String, String] = Map()): String =
+    call("list_participants", sessioned(Map(
+      "iSurveyID" -> surveyId, "iStart" -> start, "iLimit" -> limit,
+      "bUnused" -> unused, "aAttributes" -> attributes,
+      "aConditions" -> conditions)))
+
+  /** O26 — one row insert (limesurvey.py:160-164); the
+    * DSv2 write sends one per row, paced. Returns the new response's id
+    * (a number, or a string on some servers); a refused insert, whose
+    * `result` is a status object such as `{"status": "Unable to add
+    * response"}`, throws [[RpcError]]. */
+  def addResponse(surveyId: Int, row: Map[String, String]): String = {
+    val reply = call("add_response", sessioned(Map(
+      "iSurveyID" -> surveyId, "aResponseData" -> row)))
+    result(reply, JsonNodeType.NUMBER, JsonNodeType.STRING).asText
+  }
+
   // -- §2.7 control-plane (connector admin surface, not queries) --------
 
+  /** Raw `get_summary` reply; the DSv2 connector reads its pushed
+    * COUNT(*) and its streaming offsets from the statistics. */
   def getSummary(surveyId: Int, stat: String = "all"): String =
     call("get_summary", sessioned(Map(
       "iSurveyID" -> surveyId, "sStatname" -> stat)))

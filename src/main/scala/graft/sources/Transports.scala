@@ -3,21 +3,13 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import com.fasterxml.jackson.databind.node.ArrayNode
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
 import graft.sources.LimeSurveyClient.{HttpTransport, Transport}
 
-/** Transport construction from a string spec — the form a DataSource V2
-  * connector needs, since executor-side readers only receive string
-  * options. Specs:
-  *
-  *  - `http` — real JSON-RPC POSTs ([[LimeSurveyClient.HttpTransport]])
-  *  - `file:<dir>` — a local fake *server*: replies with
-  *    `<dir>/<method>.json` and honors `iStart`/`iLimit` paging params
-  *    from the request envelope by slicing the canned result array, so
-  *    pushdown behavior is observable end-to-end without a network.
-  */
 /** Wire codec for `aConditions` values — the server-side predicate seam
   * extended beyond the reference's equality-only conditions
   * (/root/reference/limesurvey.py:214 passes a flat attr→value map).
@@ -49,6 +41,19 @@ object ConditionCodec {
     else actual == cond
 }
 
+/** Transport construction from a string spec — the form a DataSource V2
+  * connector needs, since executor-side readers only receive string
+  * options. Specs:
+  *
+  *  - `http` — real JSON-RPC POSTs ([[LimeSurveyClient.HttpTransport]])
+  *  - `file:<dir>` — a local fake *server*: replies with
+  *    `<dir>/<method>.json` and honors `iStart`/`iLimit` paging params
+  *    from the request envelope by slicing the canned result array, so
+  *    pushdown behavior is observable end-to-end without a network.
+  *    Like the real endpoint, it refuses a session key other than the
+  *    one `<dir>/get_session_key.json` issues, and it answers an empty
+  *    participants page with the no-rows status, not `[]`.
+  */
 object Transports {
 
   def fromSpec(spec: String): Transport = spec match {
@@ -75,44 +80,37 @@ object Transports {
       val path = Paths.get(dir, s"$method.json")
       if (!Files.exists(path))
         throw new RuntimeException(s"fake server has no handler file for '$method'")
+      def status(s: String) = s"""{"id":${req.get("id")},"result":{"status":"$s"},"error":null}"""
+      val params = req.path("params")
+      val login = Paths.get(dir, "get_session_key.json")
+      // rewriting the login fixture expires every key issued before
+      if (LimeSurveyClient.sessionKeyOf(params).exists(key => Files.exists(login) &&
+          key != mapper.readTree(login.toFile).get("result").asText()))
+        return status("Invalid session key")
       val raw = new String(Files.readAllBytes(path), StandardCharsets.UTF_8)
-      val params = req.get("params")
-      val needsPaging = params != null && params.has("iStart") && params.has("iLimit")
-      val conds = if (params != null && params.has("aConditions") &&
-          params.get("aConditions").isObject) {
-        val it = params.get("aConditions").fields()
-        val b = Map.newBuilder[String, String]
-        while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asText() }
-        b.result()
-      } else Map.empty[String, String]
-      if (!needsPaging && conds.isEmpty) return raw
+      val paged = params.has("iStart") && params.has("iLimit")
+      val conds = params.path("aConditions").fields().asScala
+        .map(e => e.getKey -> e.getValue.asText()).toMap
+      if (!paged && conds.isEmpty) return raw
       val reply = mapper.readTree(raw)
       reply.get("result") match {
         case arr: ArrayNode =>
           // conditions ([[ConditionCodec]]: raw equality or op-prefixed
           // range/in) match top-level fields or participant_info
-          def matches(n: com.fasterxml.jackson.databind.JsonNode): Boolean =
-            conds.forall { case (k, v) =>
-              val direct = Option(n.get(k))
-              val nested = Option(n.get("participant_info")).flatMap(i => Option(i.get(k)))
-              direct.orElse(nested)
-                .exists(node => ConditionCodec.matches(v, node.asText()))
-            }
-          val filtered = mapper.createArrayNode()
-          arr.elements().forEachRemaining(e => if (matches(e)) { filtered.add(e); () })
-          val page = if (needsPaging) {
-            val start = params.get("iStart").asInt()
-            val limit = params.get("iLimit").asInt()
-            val p = mapper.createArrayNode()
-            var i = start
-            while (i < math.min(filtered.size(), start + limit)) {
-              p.add(filtered.get(i)); i += 1
-            }
-            p
-          } else filtered
-          val out = reply.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-          out.set("result", page)
-          mapper.writeValueAsString(out)
+          val rows = arr.elements().asScala.filter(n => conds.forall { case (k, v) =>
+            Seq(n.path(k), n.path("participant_info").path(k)).find(!_.isMissingNode)
+              .exists(node => ConditionCodec.matches(v, node.asText()))
+          }).toSeq
+          val start = params.path("iStart").asInt()
+          val page = if (paged) rows.slice(start, start + params.get("iLimit").asInt())
+            else rows
+          if (page.isEmpty && method == "list_participants")
+            status("No survey participants found.")
+          else {
+            val out = reply.asInstanceOf[ObjectNode]
+            out.set[JsonNode]("result", mapper.createArrayNode().addAll(page.asJava))
+            mapper.writeValueAsString(out)
+          }
         case _ => raw
       }
     }

@@ -1,10 +1,11 @@
 package graft.sources.v2
 
-import java.util.{Base64, Map => JMap}
+import java.util.{Map => JMap}
 
 import scala.collection.JavaConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.JsonNodeType
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -20,7 +21,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.Transports
+import graft.sinks.Sinks.RowPacer
+import graft.sources.{LimeSurveyClient, Transports}
 
 /** DataSource V2 connector for the survey platform (SURVEY.md §7 T3; the
   * §4 pushdown hooks made real):
@@ -45,13 +47,23 @@ import graft.sources.Transports
   *    RPC (/root/reference/limesurvey.py:207-218) — pages stream
   *    executor-side in parallel, never through the driver.
   *
+  * Every call goes through [[graft.sources.LimeSurveyClient]], whose
+  * replies decode with Jackson (which Spark ships): an error reply (an
+  * object such as `{"status": "Invalid session key"}` where the result
+  * belongs) fails the read or write with its `RpcError`, never an empty
+  * table. The connector logs in on the driver with the `user`/`password`
+  * options, once per scan or write (and only when it sends an RPC) and
+  * once per trigger for a stream; the key travels to executors inside
+  * the serialized reader and writer factories, and executors wrap it
+  * without logging in again.
+  *
   * The responses payload is fetched driver-side (as the reference's
   * single export call is) and shipped inside the InputPartition. An
-  * unpruned scan reuses the schema-inference payload — one RPC total;
-  * a pruned scan refetches with `aFields` (the pushdown itself), and
-  * supplying an explicit schema skips the inference RPC. A deployment
-  * with server-side response paging would split this the way
-  * participants does.
+  * unpruned scan reuses the schema-inference payload — one login and one
+  * export in all; a pruned scan logs in and refetches with `aFields`
+  * (the pushdown itself), and supplying an explicit schema skips the
+  * inference RPCs. A deployment with server-side response paging would
+  * split this the way participants does.
   */
 class LimeSurveyTableProvider extends TableProvider with DataSourceRegister {
 
@@ -70,21 +82,14 @@ class LimeSurveyTableProvider extends TableProvider with DataSourceRegister {
     conf.table match {
       case "participants" => LimeSurveySource.participantsSchema
       case "responses" =>
-        // one planning-time RPC; keys of the first response define the
-        // per-survey dynamic qNN columns (stringly typed, SURVEY.md §1.2)
-        val json = LimeSurveySource.fetchResponsesJson(conf, Nil)
+        // one planning-time login and export; the responses' keys, in
+        // first-seen order, define the per-survey dynamic qNN columns
+        // (stringly typed, SURVEY.md §1.2)
+        val json = conf.login().exportResponsesJson(conf.surveyId)
         planningFetch = Some((conf, json))
-        val mapper = new ObjectMapper
-        val responses = mapper.readTree(json).get("responses")
-        val fields = scala.collection.mutable.LinkedHashSet[String]("index")
-        if (responses != null && responses.size() > 0) {
-          responses.elements().asScala.foreach { entry =>
-            entry.fields().asScala.foreach { kv =>
-              kv.getValue.fieldNames().asScala.foreach(fields += _)
-            }
-          }
-        }
-        StructType(fields.toSeq.map(f => StructField(f, StringType)))
+        val fields = new ObjectMapper().readTree(json).path("responses").elements()
+          .asScala.flatMap(_.elements().asScala.flatMap(_.fieldNames().asScala))
+        StructType(("index" +: fields.toSeq).distinct.map(StructField(_, StringType)))
     }
   }
 
@@ -96,7 +101,8 @@ class LimeSurveyTableProvider extends TableProvider with DataSourceRegister {
   }
 }
 
-/** Serializable option bundle (executors rebuild the transport from it). */
+/** Serializable option bundle (executors rebuild the client from it and
+  * the driver's session key). */
 case class SourceConf(options: Map[String, String]) {
   private def opt(k: String): Option[String] =
     options.collectFirst { case (key, v) if key.equalsIgnoreCase(k) => v }
@@ -112,50 +118,21 @@ case class SourceConf(options: Map[String, String]) {
   // pace (/root/reference/limesurvey.py:160-164); <= 0 disables
   val maxRowsPerSecond: Double =
     opt("maxRowsPerSecond").map(_.toDouble).getOrElse(1.0)
+
+  /** The driver's auth handshake: one `get_session_key` with the
+    * `user`/`password` options. */
+  def login(): LimeSurveyClient =
+    new LimeSurveyClient(url, user, password, Transports.fromSpec(transportSpec))
+
+  /** An executor's client for the key the driver obtained. */
+  def client(key: String): LimeSurveyClient =
+    new LimeSurveyClient(url, Transports.fromSpec(transportSpec), key)
 }
 
 object LimeSurveySource {
   val participantsSchema: StructType = StructType(Seq(
     StructField("tid", StringType), StructField("firstname", StringType),
     StructField("lastname", StringType), StructField("email", StringType)))
-
-  private def rpc(conf: SourceConf, method: String,
-      params: Map[String, Any]): String =
-    rpcWith(Transports.fromSpec(conf.transportSpec), conf, method, params)
-
-  private def rpcWith(transport: graft.sources.LimeSurveyClient.Transport,
-      conf: SourceConf, method: String, params: Map[String, Any]): String = {
-    val mapper = new ObjectMapper
-    val node = mapper.createObjectNode()
-    node.put("method", method)
-    val p = node.putObject("params")
-    params.foreach {
-      case (k, v: String) => p.put(k, v)
-      case (k, v: Int) => p.put(k, v)
-      case (k, vs: Seq[_]) =>
-        val arr = p.putArray(k); vs.foreach(x => arr.add(x.toString))
-      case (k, m: Map[_, _]) =>
-        val obj = p.putObject(k)
-        m.foreach { case (mk, mv) => obj.put(mk.toString, mv.toString) }
-      case (k, null) => p.putNull(k)
-      case (k, v) => p.put(k, v.toString)
-    }
-    node.put("id", 1)
-    transport.post(conf.url, mapper.writeValueAsString(node))
-  }
-
-  /** Driver-side export fetch; `fields` non-empty = column-pruning
-    * pushdown via the API's own aFields projection hook. */
-  def fetchResponsesJson(conf: SourceConf, fields: Seq[String]): String = {
-    val reply = rpc(conf, "export_responses", Map(
-      "sSessionKey" -> "v2", "iSurveyID" -> conf.surveyId,
-      "sDocumentType" -> "json", "sCompletionStatus" -> "",
-      "sHeadingType" -> "", "sResponseType" -> "",
-      "aFields" -> fields))
-    val mapper = new ObjectMapper
-    val result = mapper.readTree(reply).get("result").asText()
-    new String(Base64.getDecoder.decode(result), "UTF-8")
-  }
 
   /** Decoded export JSON → flat records in the export's array order
     * (the un-nest: each element is a single-key object keyed by
@@ -181,42 +158,17 @@ object LimeSurveySource {
     * delegates COUNT to the server): participants count from the
     * `token_count` statistic, responses from `full_responses`. Values
     * arrive as JSON strings (the API's convention) or numbers. */
-  def fetchSummaryCount(conf: SourceConf): Long = {
-    val reply = rpc(conf, "get_summary", Map(
-      "sSessionKey" -> "v2", "iSurveyID" -> conf.surveyId,
-      "sStatname" -> "all"))
+  def fetchSummaryCount(client: LimeSurveyClient, conf: SourceConf): Long = {
+    val reply = client.getSummary(conf.surveyId)
     val key = if (conf.table == "participants") "token_count"
       else "full_responses"
-    val mapper = new ObjectMapper
-    val result = mapper.readTree(reply).get("result")
-    val node = if (result == null) null else result.get(key)
-    require(node != null && !node.isNull,
-      s"get_summary reply lacks '$key': $reply")
+    // a status object such as {"status": "Invalid session key"} is an
+    // object too: it lacks the statistic
+    val node = LimeSurveyClient.result(reply, JsonNodeType.OBJECT).get(key)
+    if (node == null || node.isNull) throw new LimeSurveyClient.RpcError(
+      s"get_summary reply lacks '$key': ${reply.take(200)}")
     node.asText().toLong
   }
-
-  /** `conditions` non-empty = equality-filter pushdown via the API's own
-    * server-side `aConditions` hook (/root/reference/limesurvey.py:214). */
-  def fetchParticipantsPage(conf: SourceConf, start: Int, limit: Int,
-      conditions: Map[String, String] = Map.empty): String =
-    rpc(conf, "list_participants", Map(
-      "sSessionKey" -> "v2", "iSurveyID" -> conf.surveyId,
-      "iStart" -> start, "iLimit" -> limit,
-      "aConditions" -> conditions))
-
-  /** One `add_response` RPC — the write path's per-row insert
-    * (/root/reference/limesurvey.py:160-164). The `With` form takes the
-    * caller's long-lived transport (one per writer task, not per row —
-    * for HTTP that is the difference between a keep-alive connection and
-    * a fresh client per insert). */
-  def insertResponse(conf: SourceConf, row: Map[String, String]): String =
-    insertResponseWith(Transports.fromSpec(conf.transportSpec), conf, row)
-
-  def insertResponseWith(transport: graft.sources.LimeSurveyClient.Transport,
-      conf: SourceConf, row: Map[String, String]): String =
-    rpcWith(transport, conf, "add_response", Map(
-      "sSessionKey" -> "v2", "iSurveyID" -> conf.surveyId,
-      "aResponseData" -> row))
 }
 
 class LimeSurveyTable(schema: StructType, conf: SourceConf,
@@ -265,52 +217,40 @@ class LimeSurveyWrite(schema: StructType, conf: SourceConf)
   override def requiredNumPartitions(): Int =
     if (conf.maxRowsPerSecond > 0) 1 else 0
   override def toBatch: BatchWrite = new BatchWrite {
+    // the write's one login, on the driver
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-      new LimeSurveyWriterFactory(schema, conf)
+      new LimeSurveyWriterFactory(schema, conf, conf.login().sessionKey)
     override def commit(messages: Array[WriterCommitMessage]): Unit = ()
     override def abort(messages: Array[WriterCommitMessage]): Unit = ()
   }
 }
 
-class LimeSurveyWriterFactory(schema: StructType, conf: SourceConf)
-    extends DataWriterFactory {
+class LimeSurveyWriterFactory(schema: StructType, conf: SourceConf,
+    key: String) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new LimeSurveyDataWriter(schema, conf)
+    new LimeSurveyDataWriter(schema, conf, key)
 }
 
-/** Paced row writer ([[graft.sinks.Sinks.throttledRows]]'s scheduling:
-  * absolute next-send times, so pacing never drifts with RPC latency).
-  * Values cross as strings RENDERED IN THE EXTERNAL TYPES (the
-  * Catalyst→Scala converters, so a timestamp crosses as
-  * "2024-06-13 00:00:00.0" and never as its internal micros long —
-  * identical payloads to throttledRows' external-Row path); NULL
-  * renders empty (the O21 empty-for-null convention) and an `id`
-  * column is blanked before insert, exactly as the reference does
-  * (/root/reference/limesurvey.py:160-162). The transport and the
-  * per-field converters are built once per writer, not per row. */
-class LimeSurveyDataWriter(schema: StructType, conf: SourceConf)
+/** Paced row writer: one `add_response` per row on the driver's session
+  * key, scheduled and id-blanked by [[graft.sinks.Sinks.RowPacer]].
+  * Values cross as strings RENDERED IN THE EXTERNAL TYPES (a timestamp
+  * as "2024-06-13 00:00:00.0", never its internal micros — the payloads
+  * of throttledRows' external-Row path); NULL renders empty on the wire
+  * (the O21 convention; throttledRows hands its callback `null`). */
+class LimeSurveyDataWriter(schema: StructType, conf: SourceConf, key: String)
     extends DataWriter[InternalRow] {
-  private val transport = Transports.fromSpec(conf.transportSpec)
+  private val client = conf.client(key)
   private val toScala = schema.fields.map(f =>
     org.apache.spark.sql.catalyst.CatalystTypeConverters
       .createToScalaConverter(f.dataType))
-  private val minIntervalNanos: Long =
-    if (conf.maxRowsPerSecond <= 0) 0L else (1e9 / conf.maxRowsPerSecond).toLong
-  private var next = System.nanoTime()
+  private val pacer = new RowPacer(conf.maxRowsPerSecond)
   private var rows = 0L
 
   override def write(row: InternalRow): Unit = {
-    if (minIntervalNanos > 0) {
-      val wait = next - System.nanoTime()
-      if (wait > 0) Thread.sleep(wait / 1000000, (wait % 1000000).toInt)
-      next = math.max(next, System.nanoTime()) + minIntervalNanos
-    }
-    val m = schema.fields.zipWithIndex.map { case (f, i) =>
-      f.name -> (if (row.isNullAt(i)) ""
+    client.addResponse(conf.surveyId, pacer(schema.fields.zipWithIndex.map {
+      case (f, i) => f.name -> (if (row.isNullAt(i)) ""
         else toScala(i)(row.get(i, f.dataType)).toString)
-    }.toMap
-    LimeSurveySource.insertResponseWith(transport, conf,
-      if (m.contains("id")) m.updated("id", "") else m)
+    }.toMap))
     rows += 1
   }
 
@@ -450,20 +390,23 @@ class LimeSurveyCountScan(conf: SourceConf) extends Scan with Batch {
   override def toBatch: Batch = this
   override def planInputPartitions(): Array[InputPartition] =
     Array(SummaryCountPartition())
+  // the scan's one login, on the driver (lazy: Spark may ask a scan for
+  // its reader factory more than once)
+  private lazy val key = conf.login().sessionKey
   override def createReaderFactory(): PartitionReaderFactory =
-    new LimeSurveyCountReaderFactory(conf)
+    new LimeSurveyCountReaderFactory(conf, key)
 }
 
 case class SummaryCountPartition() extends InputPartition
 
-class LimeSurveyCountReaderFactory(conf: SourceConf)
+class LimeSurveyCountReaderFactory(conf: SourceConf, key: String)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
       private var done = false
       override def next(): Boolean = if (done) false else { done = true; true }
       override def get(): InternalRow =
-        InternalRow(LimeSurveySource.fetchSummaryCount(conf))
+        InternalRow(LimeSurveySource.fetchSummaryCount(conf.client(key), conf))
       override def close(): Unit = ()
     }
 }
@@ -475,6 +418,15 @@ class LimeSurveyScan(required: StructType, conf: SourceConf,
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+
+  // the scan's one login and one export, on the driver, made only when
+  // the scan sends an RPC: an unpruned responses scan reuses the
+  // inference payload. Lazy, because Spark may plan a scan's partitions
+  // more than once.
+  private lazy val session = conf.login()
+  private lazy val payload = prefetched.getOrElse(session.exportResponsesJson(
+    // aFields pushdown: index is the map key, not a server field
+    conf.surveyId, fields = required.fieldNames.toSeq.filterNot(_ == "index")))
 
   override def planInputPartitions(): Array[InputPartition] = conf.table match {
     case "participants" =>
@@ -491,16 +443,14 @@ class LimeSurveyScan(required: StructType, conf: SourceConf,
       (0L until pageCap).map(p =>
         ParticipantsPartition(p.toInt * conf.pageSize, conf.pageSize,
           drain = limit.isEmpty && p == pageCap - 1): InputPartition).toArray
-    case "responses" =>
-      // aFields pushdown: index is the map key, not a server field
-      val serverFields = required.fieldNames.toSeq.filterNot(_ == "index")
-      val json = prefetched.getOrElse(
-        LimeSurveySource.fetchResponsesJson(conf, serverFields))
-      Array(ResponsesPartition(json))
+    case "responses" => Array(ResponsesPartition(payload))
   }
 
+  // participant pages call out from executors; responses partitions
+  // carry their payload and need no key
   override def createReaderFactory(): PartitionReaderFactory =
-    new LimeSurveyReaderFactory(required, conf, limit, conditions)
+    new LimeSurveyReaderFactory(required, conf, limit, conditions,
+      if (conf.table == "participants") session.sessionKey else "")
 
   /** Streaming ingest (round 14, VERDICT r13 missing item 2): the same
     * paged surface as microbatches. Offsets are ROW COUNTS in the
@@ -528,11 +478,18 @@ case class RowCountOffset(n: Long) extends streaming.Offset {
 
 class LimeSurveyMicroBatchStream(required: StructType, conf: SourceConf,
     conditions: Map[String, String]) extends streaming.MicroBatchStream {
+  // one login per trigger, on the driver: the server expires a session
+  // key after a while (2 h by default), and a stream polls for as long as
+  // it runs, so no key outlives the trigger that obtained it
+  @volatile private var key: Option[String] = None
   override def initialOffset(): streaming.Offset = RowCountOffset(0L)
   // one get_summary RPC per trigger — the incremental path the batch
   // connector lacked (it re-exported everything per poll)
-  override def latestOffset(): streaming.Offset =
-    RowCountOffset(LimeSurveySource.fetchSummaryCount(conf))
+  override def latestOffset(): streaming.Offset = {
+    val session = conf.login()
+    key = Some(session.sessionKey)
+    RowCountOffset(LimeSurveySource.fetchSummaryCount(session, conf))
+  }
   override def deserializeOffset(json: String): streaming.Offset =
     RowCountOffset(json.trim.toLong)
   override def commit(end: streaming.Offset): Unit = ()
@@ -559,8 +516,11 @@ class LimeSurveyMicroBatchStream(required: StructType, conf: SourceConf,
         Array(ResponsesRangePartition(s, e))
     }
   }
+  // the batch reads with its trigger's key; a batch replayed from the
+  // offset log on restart runs before any latestOffset, so it logs in
   override def createReaderFactory(): PartitionReaderFactory =
-    new LimeSurveyStreamReaderFactory(required, conf, conditions)
+    new LimeSurveyStreamReaderFactory(required, conf, conditions,
+      key.getOrElse(conf.login().sessionKey))
 }
 
 /** Row window [startRow, endRow) of the responses export, in
@@ -569,9 +529,9 @@ case class ResponsesRangePartition(startRow: Long, endRow: Long)
     extends InputPartition
 
 class LimeSurveyStreamReaderFactory(required: StructType, conf: SourceConf,
-    conditions: Map[String, String]) extends PartitionReaderFactory {
+    conditions: Map[String, String], key: String) extends PartitionReaderFactory {
   private val batchFactory =
-    new LimeSurveyReaderFactory(required, conf, None, conditions)
+    new LimeSurveyReaderFactory(required, conf, None, conditions, key)
   override def createReader(
       p: InputPartition): PartitionReader[InternalRow] = p match {
     case ResponsesRangePartition(s, e) =>
@@ -579,8 +539,8 @@ class LimeSurveyStreamReaderFactory(required: StructType, conf: SourceConf,
         lazy val rows: Iterator[Map[String, String]] = {
           val serverFields =
             required.fieldNames.toSeq.filterNot(_ == "index")
-          LimeSurveySource.parseResponses(
-            LimeSurveySource.fetchResponsesJson(conf, serverFields))
+          LimeSurveySource.parseResponses(conf.client(key)
+            .exportResponsesJson(conf.surveyId, fields = serverFields))
             .slice(s.toInt, e.toInt)
         }
       }
@@ -593,7 +553,7 @@ case class ParticipantsPartition(start: Int, limit: Int,
     drain: Boolean = false) extends InputPartition
 
 class LimeSurveyReaderFactory(required: StructType, conf: SourceConf,
-    limit: Option[Int], conditions: Map[String, String] = Map.empty)
+    limit: Option[Int], conditions: Map[String, String], key: String)
     extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
@@ -605,20 +565,18 @@ class LimeSurveyReaderFactory(required: StructType, conf: SourceConf,
         }
       case ParticipantsPartition(start, pageLimit, drain) =>
         new JsonRowsReader(required, None) {
-          private def fetchPage(s: Int): Seq[Map[String, String]] = {
-            val reply = LimeSurveySource.fetchParticipantsPage(conf, s, pageLimit, conditions)
-            val mapper = new ObjectMapper
-            val result = mapper.readTree(reply).get("result")
-            if (result == null || !result.isArray) Nil
-            else result.elements().asScala.map { p =>
-              val info = p.get("participant_info")
-              Map(
-                "tid" -> Option(p.get("tid")).map(_.asText()).orNull,
-                "firstname" -> Option(info).flatMap(i => Option(i.get("firstname"))).map(_.asText()).orNull,
-                "lastname" -> Option(info).flatMap(i => Option(i.get("lastname"))).map(_.asText()).orNull,
-                "email" -> Option(info).flatMap(i => Option(i.get("email"))).map(_.asText()).orNull)
-            }.toSeq
-          }
+          private val client = conf.client(key)
+          // an empty page arrives as the API's no-rows status, not `[]`
+          private def fetchPage(s: Int): Seq[Map[String, String]] =
+            LimeSurveyClient.rowsResult(client.participantsReply(conf.surveyId,
+              s, pageLimit, conditions = conditions), JsonNodeType.ARRAY)
+              .fold(Iterator.empty[JsonNode])(_.elements().asScala).map { p =>
+                // tid at the top level, the names under participant_info
+                LimeSurveySource.participantsSchema.fieldNames.map { f =>
+                  val n = p.at(if (f == "tid") "/tid" else s"/participant_info/$f")
+                  f -> (if (n.isMissingNode) null else n.asText())
+                }.toMap
+              }.toSeq
           // drain mode: page serially past the planned window until a
           // short page marks the end of the server-side result
           private def pagesFrom(s: Int): Iterator[Seq[Map[String, String]]] = {

@@ -12,6 +12,8 @@ import org.apache.spark.sql.functions._
 class DataSourceV2Spec extends SparkSpec {
 
   private def writeReplies(dir: String): Unit = {
+    Files.writeString(Paths.get(dir, "get_session_key.json"),
+      """{"id":1,"result":"SK-v2-spec","error":null}""")
     val export =
       """{ "responses": [
         { "11": { "id": "11", "datestamp": "2018-01-01 10:00:00", "q01": "A4", "q03": "a@x.com", "q06": "BR11" } },
@@ -271,5 +273,118 @@ class DataSourceV2Spec extends SparkSpec {
       Seq(col("datestamp").desc, col("_ingest_pos").desc))(
       wide.na.drop("any", Seq("id", "datestamp", "q01", "q03", "q06")))
     assert(out.count() == 2) // null-email row 12 dropped, others kept
+  }
+
+  private def postedBodies(): Seq[String] =
+    graft.sources.Transports.FileServerTransport.posts
+      .toArray(Array.empty[(Long, String)]).sortBy(_._1).map(_._2).toSeq
+
+  private def calls(bodies: Seq[String], method: String): Seq[String] =
+    bodies.filter(_.contains(s""""method":"$method""""))
+
+  test("a paged read logs in once on the driver and sends that key with every page") {
+    import graft.sources.Transports.FileServerTransport
+    FileServerTransport.posts.clear()
+    val rows = spark.read.format("limesurvey")
+      .option("transport", s"file:$dir").option("table", "participants")
+      .option("surveyId", "101").option("pageSize", "4").option("maxPages", "3")
+      .option("user", "etl").option("password", "s3cret")
+      .load().collect()
+    assert(rows.length == 10)
+    val bodies = postedBodies()
+    val logins = calls(bodies, "get_session_key")
+    assert(logins.length == 1, bodies.mkString("\n"))
+    assert(logins.head.contains(""""username":"etl"""") &&
+      logins.head.contains(""""password":"s3cret""""), logins.head)
+    val pages = calls(bodies, "list_participants")
+    assert(pages.length == 3, bodies.mkString("\n"))
+    assert(pages.forall(_.contains(""""sSessionKey":"SK-v2-spec"""")), pages)
+    assert(!bodies.exists(_.contains(""""sSessionKey":"v2"""")), bodies)
+  }
+
+  test("a throttled write logs in once and sends one add_response per row") {
+    import graft.sources.Transports.FileServerTransport
+    Files.writeString(Paths.get(dir, "add_response.json"),
+      """{"id":9,"result":"14","error":null}""")
+    import spark.implicits._
+    FileServerTransport.posts.clear()
+    Seq(("21", "A1"), ("22", "A2"), ("23", "A3"), ("24", "A4"))
+      .toDF("id", "q01").repartition(2)
+      .write.format("limesurvey")
+      .option("transport", s"file:$dir").option("table", "responses")
+      .option("surveyId", "101").option("maxRowsPerSecond", "50")
+      .option("user", "etl").option("password", "s3cret")
+      .mode("append").save()
+    val bodies = postedBodies()
+    assert(calls(bodies, "get_session_key").length == 1, bodies.mkString("\n"))
+    val inserts = calls(bodies, "add_response")
+    assert(inserts.length == 4, bodies.mkString("\n"))
+    assert(inserts.forall(_.contains(""""sSessionKey":"SK-v2-spec"""")), inserts)
+  }
+
+  test("an object-valued result fails the read with the server's status, never an empty table") {
+    val bad = Files.createTempDirectory("graft_v2_err").toString
+    writeReplies(bad)
+    val refused = """{"id":1,"result":{"status":"Invalid session key"},"error":null}"""
+    Files.writeString(Paths.get(bad, "export_responses.json"), refused)
+    Files.writeString(Paths.get(bad, "list_participants.json"), refused)
+    def failure(table: String): String = {
+      val e = intercept[Exception](spark.read.format("limesurvey")
+        .option("transport", s"file:$bad").option("table", table)
+        .option("surveyId", "101").option("pageSize", "4")
+        .option("maxPages", "3").load().collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => s"${t.getClass.getName}: ${t.getMessage}").mkString("\n")
+    }
+    Seq("responses", "participants").foreach { table =>
+      val chain = failure(table)
+      assert(chain.contains("RpcError") && chain.contains("Invalid session key"),
+        s"$table: $chain")
+    }
+  }
+
+  test("an empty page is the API's no-rows status and reads as no rows") {
+    import graft.sources.Transports.FileServerTransport
+    def participants(pageSize: Int, maxPages: Int) = spark.read.format("limesurvey")
+      .option("transport", s"file:$dir").option("table", "participants")
+      .option("surveyId", "101").option("pageSize", pageSize.toString)
+      .option("maxPages", maxPages.toString).load()
+    // planned pages past the data: pages 10 and 15 of 10 rows are empty
+    assert(participants(5, 4).collect().length == 10)
+    // the drain partition's last page is full, so it asks for one more
+    FileServerTransport.posts.clear()
+    assert(participants(5, 2).collect().length == 10)
+    assert(calls(postedBodies(), "list_participants").length == 3, postedBodies())
+    // a pushed condition that matches nothing
+    assert(participants(4, 3).filter(col("email") === "nobody@x.com").count() == 0)
+    assert(FileServerTransport.lastBody.get().contains("nobody@x.com"))
+  }
+
+  test("an empty survey's export reads as an empty responses table") {
+    val empty = Files.createTempDirectory("graft_v2_empty").toString
+    writeReplies(empty)
+    Files.writeString(Paths.get(empty, "export_responses.json"),
+      """{"id":1,"result":{"status":"No Data, could not get max id."},"error":null}""")
+    val df = spark.read.format("limesurvey")
+      .option("transport", s"file:$empty").option("table", "responses")
+      .option("surveyId", "101").load()
+    assert(df.columns.toSeq == Seq("index"))
+    assert(df.collect().isEmpty)
+  }
+
+  test("a refused insert fails the write with the server's status") {
+    val refusing = Files.createTempDirectory("graft_v2_refuse").toString
+    writeReplies(refusing)
+    Files.writeString(Paths.get(refusing, "add_response.json"),
+      """{"id":9,"result":{"status":"Unable to add response"},"error":null}""")
+    import spark.implicits._
+    val e = intercept[Exception](Seq(("31", "A1")).toDF("id", "q01")
+      .write.format("limesurvey")
+      .option("transport", s"file:$refusing").option("table", "responses")
+      .option("surveyId", "101").option("maxRowsPerSecond", "0")
+      .mode("append").save())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => s"${t.getClass.getName}: ${t.getMessage}").mkString("\n")
+    assert(chain.contains("RpcError") && chain.contains("Unable to add response"), chain)
   }
 }

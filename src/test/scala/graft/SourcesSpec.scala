@@ -3,9 +3,20 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.Base64
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.JsonNodeType
+import scala.jdk.CollectionConverters._
+
 import graft.sources.{LimeSurveyClient, Readers}
 
 class SourcesSpec extends SparkSpec {
+
+  private def method(body: String): String =
+    new ObjectMapper().readTree(body).get("method").asText()
+
+  /** A reply's string `result` through the one reply reader. */
+  private def text(reply: String): String =
+    LimeSurveyClient.result(reply, JsonNodeType.STRING).textValue
 
   test("tsvWithPreHeader skips junk line, zips header with rows (O4)") {
     val dir = Files.createTempDirectory("graft_tsv").toString
@@ -25,9 +36,9 @@ class SourcesSpec extends SparkSpec {
   class FakeTransport extends LimeSurveyClient.Transport {
     var calls: List[(String, String)] = Nil
     def post(url: String, body: String): String = {
-      val method = LimeSurveyClient.topLevelString(body, "method")
-      calls = (method, body) :: calls
-      method match {
+      val m = method(body)
+      calls = (m, body) :: calls
+      m match {
         case "get_session_key" => """{"id":1,"result":"SK123","error":null}"""
         case "export_responses" =>
           val payload = Base64.getEncoder.encodeToString(
@@ -72,14 +83,14 @@ class SourcesSpec extends SparkSpec {
       .select("participant_info.email").head.getString(0) == "a@b.c")
   }
 
-  test("topLevelString decodes JSON escapes: PHP-style \\/ base64 survives (O2)") {
+  test("the reply reader decodes JSON escapes: PHP-style \\/ base64 survives (O2)") {
     // PHP's json_encode (the real endpoint) escapes '/' as '\/' — a
     // base64 payload nearly always contains '/', and the undecoded
     // match would feed backslashes straight into Base64.decode
     val payload = "ab/cd+ef/gh==" // base64-alphabet string with slashes
     val phpStyle = payload.replace("/", "\\/")
     val reply = s"""{"id":2,"result":"$phpStyle","error":null}"""
-    assert(LimeSurveyClient.topLevelString(reply, "result") == payload)
+    assert(text(reply) == payload)
     // a >=1 MB export reply with a PHP-style \/ every ~64 chars decodes
     // byte for byte (a backtracking regex overflows the stack near 2 KB)
     val bytes = new Array[Byte](800 * 1024)
@@ -87,20 +98,19 @@ class SourcesSpec extends SparkSpec {
     val big = Base64.getEncoder.encodeToString(bytes)
     assert(big.length >= 1024 * 1024 && big.count(_ == '/') > 10000)
     val bigReply = s"""{"id":2,"result":"${big.replace("/", "\\/")}","error":null}"""
-    val decoded = LimeSurveyClient.topLevelString(bigReply, "result")
+    val decoded = text(bigReply)
     assert(decoded == big)
     assert(java.util.Arrays.equals(Base64.getDecoder.decode(decoded), bytes))
     // the full escape family round-trips
-    assert(LimeSurveyClient.unescapeJson("""a\/b\\c\"d\neé""") ==
-      "a/b\\c\"d\neé")
-    assert(LimeSurveyClient.unescapeJson("plain") == "plain")
+    assert(text("""{"result":"a\/b\\c\"d\neé"}""") == "a/b\\c\"d\neé")
+    assert(text("""{"result":"plain"}""") == "plain")
+    assert(text("{\"result\":\"caf\\u00e9\\t\\b\\f\"}") == "café\t\b\f")
   }
 
   test("catalog listing fails fast on an error reply instead of reading empty (O6)") {
     val t = new FakeTransport {
       override def post(url: String, body: String): String = {
-        val method = LimeSurveyClient.topLevelString(body, "method")
-        if (method == "get_session_key") super.post(url, body)
+        if (method(body) == "get_session_key") super.post(url, body)
         // the API signals auth failure as an OBJECT result
         else """{"id":3,"result":{"status":"Invalid session key"},"error":null}"""
       }
@@ -115,7 +125,7 @@ class SourcesSpec extends SparkSpec {
     val c = new LimeSurveyClient("http://fake/rpc", "admin", "pw", t)
     c.getSurveyProperties(101)
     val body = t.calls.head._2
-    assert(LimeSurveyClient.topLevelString(body, "method") == "get_survey_properties")
+    assert(method(body) == "get_survey_properties")
     assert(body.contains(""""aSurveySettings""""), body)
     // the reference's default list has 58 settings (limesurvey.py:54-70)
     assert(LimeSurveyClient.DefaultSurveyProperties.size == 58)
@@ -135,7 +145,94 @@ class SourcesSpec extends SparkSpec {
     // every recorded body must parse as JSON (reference bug §7.5 not ported)
     t.calls.foreach { case (_, body) =>
       assert(body.startsWith("{") && body.endsWith("}"))
-      assert(LimeSurveyClient.topLevelString(body, "method").nonEmpty)
+      assert(method(body).nonEmpty)
     }
+  }
+
+  test("an export reply past Jackson's default string cap decodes") {
+    // Jackson caps a JSON string at 20M characters by default; an
+    // export's base64 payload is one string as long as the export
+    val big = "QUJD" * 5000001
+    assert(text(s"""{"id":2,"result":"$big","error":null}""") == big)
+  }
+
+  test("an error reply fails the login and the export with RpcError naming the status") {
+    val status = """{"id":1,"result":{"status":"Invalid user name or password"},"error":null}"""
+    val refused = new FakeTransport {
+      override def post(url: String, body: String): String = status
+    }
+    val e = intercept[LimeSurveyClient.RpcError](
+      new LimeSurveyClient("http://fake/rpc", "admin", "bad", refused))
+    assert(e.getMessage.contains("not a string") &&
+      e.getMessage.contains("Invalid user name or password"), e.getMessage)
+    val expired = new FakeTransport {
+      override def post(url: String, body: String): String =
+        if (method(body) == "export_responses")
+          """{"id":2,"result":{"status":"Invalid session key"},"error":null}"""
+        else super.post(url, body)
+    }
+    val c = new LimeSurveyClient("http://fake/rpc", "admin", "pw", expired)
+    val x = intercept[LimeSurveyClient.RpcError](c.exportResponsesJson(101))
+    assert(x.getMessage.contains("Invalid session key"), x.getMessage)
+    // a reply that is not JSON at all is the same named error
+    intercept[LimeSurveyClient.RpcError](text("<html>502 Bad Gateway</html>"))
+  }
+
+  test("the API's no-rows statuses read as empty; any other status still fails") {
+    def status(s: String) = s"""{"id":2,"result":{"status":"$s"},"error":null}"""
+    assert(LimeSurveyClient.rowsResult(status("No survey participants found."),
+      JsonNodeType.ARRAY).isEmpty)
+    val empty = new FakeTransport {
+      override def post(url: String, body: String): String = method(body) match {
+        case "export_responses" => status("No Data, could not get max id.")
+        case "list_surveys" => status("No surveys found")
+        case "list_participants" => status("No permission")
+        case _ => super.post(url, body)
+      }
+    }
+    val c = new LimeSurveyClient("http://fake/rpc", "admin", "pw", empty)
+    // an empty survey's export is an export with no responses
+    assert(c.exportResponsesJson(101) == """{"responses":[]}""")
+    assert(c.responsesDF(spark, 101).head.getSeq[Any](0).isEmpty)
+    assert(c.listSurveys(spark).count() == 0)
+    val e = intercept[LimeSurveyClient.RpcError](c.listParticipants(spark, 101))
+    assert(e.getMessage.contains("No permission"), e.getMessage)
+  }
+
+  test("addResponse returns the new id and fails on a refused insert") {
+    def inserting(result: String) = new FakeTransport {
+      override def post(url: String, body: String): String =
+        if (method(body) == "add_response") s"""{"id":2,"result":$result,"error":null}"""
+        else super.post(url, body)
+    }
+    def add(result: String) = new LimeSurveyClient("http://fake/rpc", "admin", "pw",
+      inserting(result)).addResponse(101, Map("q01" -> "A1"))
+    assert(add("14") == "14")
+    assert(add("\"15\"") == "15")
+    val e = intercept[LimeSurveyClient.RpcError](
+      add("""{"status":"Unable to add response"}"""))
+    assert(e.getMessage.contains("Unable to add response"), e.getMessage)
+  }
+
+  test("a client built on an issued key never logs in") {
+    val t = new FakeTransport
+    val c = new LimeSurveyClient("http://fake/rpc", t, "SK123")
+    c.getSummary(101)
+    assert(t.calls.map(_._1) == List("get_summary"))
+    assert(t.calls.head._2.contains(""""sSessionKey":"SK123""""))
+  }
+
+  test("LimeSurveyClient.scala is the only file in src/main that posts RPCs or names sSessionKey") {
+    // one envelope encoder, one reply decoder, one login: a second
+    // JSON-RPC stack would show up as a .post( call or a session-key
+    // literal somewhere else
+    val offenders = Files.walk(Paths.get("src/main")).iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "LimeSurveyClient.scala")
+      .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (l, i) if l.contains(".post(") || l.contains("sSessionKey") =>
+          s"${p.getFileName}:${i + 1}: ${l.trim}"
+      }).toList
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

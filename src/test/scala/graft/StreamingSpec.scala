@@ -1125,8 +1125,11 @@ class StreamingSpec extends SparkSpec {
   /** Canned fake-server replies for the LimeSurvey streaming tests:
     * `n` responses and 10 participants, with get_summary counts kept
     * CONSISTENT with the row fixtures (the offset basis). */
-  private def writeSurveyReplies(dir: String, n: Int): Unit = {
+  private def writeSurveyReplies(dir: String, n: Int,
+      key: String = "SK-stream-spec"): Unit = {
     import java.nio.file.{Files, Paths}
+    Files.writeString(Paths.get(dir, "get_session_key.json"),
+      s"""{"id":1,"result":"$key","error":null}""")
     val rows = (1 to n).map { i =>
       s"""{ "${i + 10}": { "id": "${i + 10}", "datestamp": "2018-01-0$i 10:00:00",
          "q01": "A$i", "q03": "u$i@x.com", "q06": "BR${i + 10}" } }"""
@@ -1188,5 +1191,59 @@ class StreamingSpec extends SparkSpec {
       .map(_.getAs[String]("index")).toSeq
     assert(after.size == 5 && after.toSet == Set("11", "12", "13", "14", "15"),
       s"expected exactly the 2 new rows appended once: $after")
+  }
+
+  /** The connector's microbatch stream for `table`, built the way Spark
+    * builds it, with `filters` offered for pushdown; driven by hand so
+    * a test controls what happens between triggers. */
+  private def surveyStream(dir: String, table: String,
+      filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty) = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import graft.sources.v2.{LimeSurveyTable, LimeSurveyTableProvider}
+    val opts = new CaseInsensitiveStringMap(Map("transport" -> s"file:$dir",
+      "table" -> table, "surveyId" -> "101", "pageSize" -> "4").asJava)
+    val provider = new LimeSurveyTableProvider
+    val builder = provider.getTable(provider.inferSchema(opts), Array.empty,
+      opts.asCaseSensitiveMap()).asInstanceOf[LimeSurveyTable].newScanBuilder(opts)
+    builder.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownFilters]
+      .pushFilters(filters)
+    builder.build().toMicroBatchStream(
+      java.nio.file.Files.createTempDirectory("graft_stream_ck").toString)
+  }
+
+  /** One microbatch's rows, column 0 as strings, read through the
+    * stream's own partitions and reader factory. */
+  private def readBatch(stream: org.apache.spark.sql.connector.read.streaming.MicroBatchStream,
+      start: org.apache.spark.sql.connector.read.streaming.Offset,
+      end: org.apache.spark.sql.connector.read.streaming.Offset): Seq[String] = {
+    val factory = stream.createReaderFactory()
+    stream.planInputPartitions(start, end).toSeq.flatMap { p =>
+      val r = factory.createReader(p)
+      Iterator.continually(r).takeWhile(_.next()).map(_.get().getUTF8String(0).toString).toList
+    }
+  }
+
+  test("LimeSurvey streaming ingest logs in per trigger, so an expired key never fails the query") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_stream_key").toString
+    writeSurveyReplies(dir, 3)
+    val stream = surveyStream(dir, "responses")
+    val first = stream.latestOffset()
+    assert(readBatch(stream, stream.initialOffset(), first) == Seq("11", "12", "13"))
+    // the server expires the first key and issues another on the next
+    // login; two responses arrive meanwhile
+    writeSurveyReplies(dir, 5, key = "SK-stream-spec-2")
+    val second = stream.latestOffset()
+    assert(readBatch(stream, first, second) == Seq("14", "15"))
+  }
+
+  test("LimeSurvey streaming ingest: a filtered window past the matches reads no rows") {
+    import org.apache.spark.sql.sources.EqualTo
+    val dir = java.nio.file.Files.createTempDirectory("graft_stream_empty").toString
+    writeSurveyReplies(dir, 3)
+    // token_count (10) counts unfiltered rows, so windows [4, 8) and
+    // [8, 10) hold no match: their pages are the no-rows status
+    val stream = surveyStream(dir, "participants", Array(EqualTo("email", "p2@x.com")))
+    assert(readBatch(stream, stream.initialOffset(), stream.latestOffset()) == Seq("2"))
   }
 }
