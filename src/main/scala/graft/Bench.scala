@@ -12,6 +12,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // Dev-only: SPARK_GRAFT_ONLY=q30_dedup_simhash,q41_percentile to
+    // iterate on one query without paying for the whole suite.
+    val selected = SparkEntry.select()
     val spark = Profiles.bench()
     // Warm the JVM (codegen compiler, parquet reader, shuffle paths) so
     // the first timed query isn't charged ~3s of one-time JIT cost.
@@ -31,9 +34,6 @@ object Bench {
     // number — round 1's driver artifact was 2.4× the reproducible total
     // because two queries caught a noisy-neighbor spike.
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt
-    // Dev-only: SPARK_GRAFT_ONLY=q30_dedup_simhash,q41_percentile to
-    // iterate on one query without paying for the whole suite.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // Reference medians from the previous round's full artifact
     // (tools/bench_ref.json, committed). Contention spanning a whole
     // median-of-5 window has minted 8–19× fake regressions four rounds
@@ -77,8 +77,7 @@ object Bench {
       org.apache.spark.sql.GraftShims.release(spark)
       times(times.size / 2)
     }
-    val firstPass = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    val firstPass = selected.toSeq.sortBy(_._1)
       .map { case (name, fn) =>
         try name -> benchQuery(name, fn)
         catch { case e: Throwable =>
@@ -118,11 +117,6 @@ object Bench {
     val results = firstPass.map { case (name, v) =>
       name -> retried.getOrElse(name, v)
     }
-    // a misspelled SPARK_GRAFT_ONLY must fail loudly — a zero-query run
-    // printing total=0 reads like a valid (and spectacular) headline
-    // number and would overwrite the bench artifact with it
-    require(results.nonEmpty, "no queries matched" +
-      sys.env.get("SPARK_GRAFT_ONLY").fold("")(o => s" SPARK_GRAFT_ONLY=$o"))
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // failed queries carry -1.0 markers; they must not DEDUCT from the

@@ -1,7796 +1,49 @@
 package graft
 
-import java.sql.Timestamp
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
-
-import graft.operators._
-import graft.functions.Hashing
-import graft.sinks.Warehouse
+import graft.queries._
 
 /** Driver contract (see SURVEY.md §7 + BASELINE.md): the declared query
   * inventory. Every entry in [[queries]] exercises one operator row from
   * SURVEY.md §2 (or a T2/T3 generalization) through the graft library, and
   * [[oracleSql]] carries the DuckDB-equivalent SQL the driver hash-checks
-  * at sf0.01.
-  *
-  * Engine-parity rules used throughout (SURVEY.md §5):
-  *  - money/quantity aggregates run in DECIMAL (exact, order-independent)
-  *    and only the final value is cast to DOUBLE — bit-identical in both
-  *    engines;
-  *  - counts are BIGINT in both engines;
-  *  - timestamps cross the boundary as formatted strings;
-  *  - hashes are md5-based (Hashing.hexLong ≡ DuckDB
-  *    `CAST(concat('0x', substr(md5(x),1,14)) AS BIGINT)`);
-  *  - every computed column is aliased identically in Spark and SQL.
+  * at sf0.01. Each query is one [[Query]] declared, builder beside oracle,
+  * in its tier object under `graft.queries`; this object only indexes
+  * them.
   */
 object SparkEntry {
+  private val declared: Map[String, Query] = Query.index(
+    ReferenceQueries.all ++ GeneralQueries.all ++ TextQueries.all ++
+      LanguageModelQueries.all ++ DedupQueries.all ++ VectorQueries.all ++
+      MediaQueries.all ++ GraphQueries.all ++ TemporalQueries.all ++
+      TabularQueries.all)
 
-  private def ts(s: String): Timestamp = Timestamp.valueOf(s)
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    declared.map { case (name, q) => name -> q.build }
 
-  /** Small single-row-group parquet files scan as ONE partition, which
-    * would pin heavy narrow per-row compute (JSON parse, regex, token
-    * HOFs) to a single task — route those scans through
-    * Parallelism.ensure (a no-op on an already-wide scan, so harmless
-    * at 100 TB). Projections stay ABOVE the repartition, so the
-    * expensive expressions run on all cores. */
-  private def wide(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    Parallelism.ensure(df)
+  /** A `def`: a fitted query's oracle appears once its builder has run. */
+  def oracleSql: Map[String, String] =
+    declared.flatMap { case (name, q) => q.oracle.map(name -> _) }
 
-  /** The co-purchase part graph (two parts edge when one order holds
-    * both, directed both ways) shared by q84/q173. Round-14 shape: one
-    * widened exchange on l_orderkey, per-order DISTINCT part sets, the
-    * lazy native pair generator, and a both-orientations explode — the
-    * identical edge set the old `wide(li) ⋈ broadcast(li)` self-join
-    * produced (IdPairs emits each unordered distinct pair once; the
-    * explode restores both directions; the operator's distinct
-    * collapses duplicates across orders), minus the second lineitem
-    * scan, the 600 k-row broadcast build job and the hashtable probe. */
-  private def coPurchaseEdges(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    coPurchasePairs(s, d)
-      .select(explode(array(
-        struct(col("__x").as("src"), col("__y").as("dst")),
-        struct(col("__y").as("src"), col("__x").as("dst")))).as("__e"))
-      .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-
-  /** Unordered (x < y) co-purchase part pairs — the undirected form
-    * [[coPurchaseEdges]] explodes; q111's triangle counter canonicalizes
-    * to (a < b) anyway, so it consumes this directly. */
-  private def coPurchasePairs(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val par = s.sparkContext.defaultParallelism
-    Tables.lineitem(s, d).select("l_orderkey", "l_partkey")
-      .repartition(par, col("l_orderkey"))
-      .groupBy("l_orderkey")
-      .agg(collect_set(col("l_partkey")).as("__ps"))
-      .filter(size(col("__ps")) >= 2)
-      .select(graft.functions.Native.idPairs(col("__ps"))
-        .as(Seq("__x", "__y")))
-  }
-
-  /** Graded near-dup twin corpus shared by the LSH calibration audits
-    * (q206 single point, q208 sweep): documents spiked so doc_id%30 ∈
-    * {1, 11, 21} become twins of doc_id−1 at three Jaccard grades
-    * (+2 tokens ≈ J .93, +n/5 junk ≈ J .83, half-replaced ≈ J .3) —
-    * the S-curve's head, shoulder, and tail all carry mass, so recall
-    * and precision land strictly inside (0,1). Widen the LEFT scan
-    * before the spike join: ensure() no-ops on the join's wide
-    * lineage, so an un-widened single-row-group scan would pin the
-    * downstream shingling of BOTH audit legs to one task (measured
-    * 2×~2 s single-task stages at sf0.1); the broadcast right side is
-    * fixture construction, not operator machinery. */
-  private def gradedTwinSpike(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    val prev = docs.select((col("doc_id") + lit(1L)).as("doc_id"),
-      col("text").as("__pt"))
-    val toks = TextAnalysis.tokens(col("__pt"))
-    def junk(cnt: Column) = concat_ws(" ",
-      transform(sequence(lit(1L), greatest(cnt, lit(1L))),
-        i => concat(lit("aug"), col("doc_id").cast("string"),
-          lit("x"), i.cast("string"))))
-    wide(docs).join(broadcast(prev), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("doc_id") % 30 === 1 && col("__pt").isNotNull,
-          concat(col("__pt"), lit(" augx augy")))
-        .when(col("doc_id") % 30 === 11 && col("__pt").isNotNull,
-          concat(col("__pt"), lit(" "), junk(expr("cast(size(split(__pt, ' ')) as bigint) div 5"))))
-        .when(col("doc_id") % 30 === 21 && col("__pt").isNotNull,
-          concat(concat_ws(" ",
-            slice(toks, lit(1), expr("cast(size(split(__pt, ' ')) div 2 as int)"))),
-            lit(" "), junk(expr("cast(size(split(__pt, ' ')) as bigint) div 2"))))
-        .otherwise(col("text")).as("text"))
-  }
+  /** The queries a comma-separated `SPARK_GRAFT_ONLY` names, or all of
+    * them when it is unset. A name that matches no declared query fails
+    * here, listing every such name: a typo must not turn a Verify dump,
+    * a bench or an audit into a run over nothing. */
+  def select(only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY"))
+      : Map[String, (SparkSession, String) => DataFrame] =
+    only.fold(queries) { spec =>
+      val names = spec.split(",").filter(_.nonEmpty).toSet
+      val unknown = names.filterNot(queries.contains)
+      require(names.nonEmpty && unknown.isEmpty,
+        s"SPARK_GRAFT_ONLY=$spec: unknown query name(s): " +
+          (if (names.isEmpty) "(none given)" else unknown.toSeq.sorted.mkString(", ")))
+      queries.filter { case (name, _) => names(name) }
+    }
 
   /** Flagship query on sf=0.001 (driver smoke-checks rows>0): the
     * reference's headline semantic — keep-last dedup (latest order per
     * customer, SURVEY.md §2 O18+O19) — through the library operators. */
   def entry(spark: SparkSession): DataFrame =
     queries("q11_keeplast")(spark, "/root/testdata/sf0.001")
-
-  // ---------------------------------------------------------------------
-  // Reference-operator queries (SURVEY.md §2, O-numbers in comments)
-  // ---------------------------------------------------------------------
-
-  private val referenceQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // O9 — ordered column projection
-    "q01_project" -> ((s, d) =>
-      Relational.project(Seq("c_custkey", "c_name", "c_mktsegment"))(
-        Tables.customer(s, d))),
-
-    // O10 — drop rows with any null
-    "q02_dropna_any" -> ((s, d) =>
-      Relational.dropNullsAny(
-        Tables.events(s, d)
-          .withColumn("big_value", when(col("value") > 150, col("value")))
-          .select("event_id", "event_type", "big_value"))),
-
-    // O11 — drop nulls on subset (null source: JSON field extraction).
-    // The ~1M-row JSON parse must NOT run on the single scan task:
-    // wide() repartitions the raw rows, and the non-pushable null
-    // filter (pushable = false) keeps Catalyst from substituting the
-    // parse into the predicate and dragging it below the exchange —
-    // with a plain filter both parses land on the scan task (measured
-    // ~0.65 s; barriered ~0.2 s at sf0.1).
-    "q03_dropna_subset" -> ((s, d) =>
-      Relational.dropNulls(Seq("k_value"), pushable = false)(
-        wide(Tables.events(s, d).select(col("event_id"), col("props")))
-          .select(col("event_id"),
-            get_json_object(col("props"), "$.k").cast(LongType).as("k_value")))),
-
-    // O12 — bulk rename
-    "q04_rename_bulk" -> ((s, d) =>
-      Relational.project(Seq("supplier_id", "supplier_name", "nation_id", "account_balance"))(
-        Relational.renameAll(Map(
-          "s_suppkey" -> "supplier_id", "s_name" -> "supplier_name",
-          "s_nationkey" -> "nation_id", "s_acctbal" -> "account_balance"))(
-          Tables.supplier(s, d)))),
-
-    // O13 — constant batch audit stamp (injected literal for determinism)
-    "q05_audit_stamp" -> ((s, d) =>
-      Relational.auditStamp("updated_ts", lit("2026-01-01 00:00:00"))(
-        Tables.customer(s, d).select("c_custkey"))),
-
-    // O14 — regex-strip + numeric cast (fixed prefix "A4" -> 4.0)
-    "q06_regex_cast" -> ((s, d) =>
-      Relational.regexStripCast("grade", "A")(
-        Tables.customer(s, d).select(col("c_custkey"),
-          concat(lit("A"), ((col("c_nationkey") % 5) + 1).cast("string")).as("grade")))),
-
-    // O15 — regex-strip with alternation ("A|N")
-    "q07_regex_alt" -> ((s, d) =>
-      Relational.regexStripCast("nps", "A|N")(
-        Tables.customer(s, d).select(col("c_custkey"),
-          concat(when(col("c_custkey") % 2 === 0, lit("A")).otherwise(lit("N")),
-            (col("c_custkey") % 11).cast("string")).as("nps")))),
-
-    // O16 — membership filter
-    "q08_membership" -> ((s, d) =>
-      Relational.membership("o_orderpriority", Seq("1-URGENT", "2-HIGH"))(
-        Tables.orders(s, d).select("o_orderkey", "o_orderpriority"))),
-
-    // O17 — date-range predicate (idempotency-delete survivor set)
-    "q09_range_filter" -> ((s, d) =>
-      Relational.rangeFilter("o_orderdate", _ >= lit(ts("1998-01-01 00:00:00")))(
-        Tables.orders(s, d))
-        .select(col("o_orderkey"),
-          date_format(col("o_orderdate"), "yyyy-MM-dd").as("orderdate"))),
-
-    // O18 + O5 iLimit — top-k under a total order (TakeOrderedAndProject)
-    "q10_topk" -> ((s, d) =>
-      Relational.topK(100, Seq(col("o_totalprice").desc, col("o_orderkey").asc))(
-        Tables.orders(s, d).select("o_orderkey", "o_totalprice"))),
-
-    // O18+O19 — deterministic keep-last dedup per key
-    "q11_keeplast" -> ((s, d) =>
-      Relational.keepLast(Seq("o_custkey"),
-        Seq(col("o_orderdate").desc, col("o_orderkey").desc))(
-        Tables.orders(s, d))
-        .select(col("o_custkey"), col("o_orderkey").as("latest_orderkey"),
-          date_format(col("o_orderdate"), "yyyy-MM-dd").as("latest_date"))),
-
-    // O7/O20 — positional un-nest (posexplode keeps the ingest position)
-    "q12_unnest_pos" -> ((s, d) =>
-      Tables.documents(s, d)
-        .select(col("doc_id"), posexplode(TextAnalysis.tokens(col("text"))))
-        .select(col("doc_id"), col("pos").cast(LongType).as("pos"),
-          col("col").as("token")))
-  )
-
-  private val referenceOracle: Map[String, String] = Map(
-    "q01_project" ->
-      "SELECT c_custkey, c_name, c_mktsegment FROM customer",
-    "q02_dropna_any" ->
-      "SELECT event_id, event_type, value AS big_value FROM events WHERE value > 150",
-    "q03_dropna_subset" ->
-      "SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_value FROM events WHERE json_extract_string(props, '$.k') IS NOT NULL",
-    "q04_rename_bulk" ->
-      "SELECT s_suppkey AS supplier_id, s_name AS supplier_name, s_nationkey AS nation_id, s_acctbal AS account_balance FROM supplier",
-    "q05_audit_stamp" ->
-      "SELECT c_custkey, '2026-01-01 00:00:00' AS updated_ts FROM customer",
-    "q06_regex_cast" ->
-      "SELECT c_custkey, CAST(regexp_replace('A' || CAST(c_nationkey % 5 + 1 AS VARCHAR), 'A', '') AS DOUBLE) AS grade FROM customer",
-    "q07_regex_alt" ->
-      "SELECT c_custkey, CAST(regexp_replace((CASE WHEN c_custkey % 2 = 0 THEN 'A' ELSE 'N' END) || CAST(c_custkey % 11 AS VARCHAR), 'A|N', '') AS DOUBLE) AS nps FROM customer",
-    "q08_membership" ->
-      "SELECT o_orderkey, o_orderpriority FROM orders WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')",
-    "q09_range_filter" ->
-      "SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS orderdate FROM orders WHERE o_orderdate >= TIMESTAMP '1998-01-01 00:00:00'",
-    "q10_topk" ->
-      "SELECT o_orderkey, o_totalprice FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 100",
-    "q11_keeplast" ->
-      "SELECT o_custkey, o_orderkey AS latest_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS latest_date FROM (SELECT *, row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn FROM orders) WHERE rn = 1",
-    "q12_unnest_pos" ->
-      "SELECT doc_id, unnest(range(0, len(string_split(text, ' ')))) AS pos, unnest(string_split(text, ' ')) AS token FROM documents"
-  )
-
-  // ---------------------------------------------------------------------
-  // T2 generalization queries (joins / aggs / windows / set ops — §2.8)
-  // ---------------------------------------------------------------------
-
-  /** Exact money arithmetic that casts identically in Spark and DuckDB. */
-  private def dec(c: Column): Column = c.cast("decimal(18,2)")
-
-  /** Exact money aggregation on unscaled integer cents, recovered with
-    * pure double arithmetic: the corpus' money columns are exact
-    * 2-decimal values (TPC-H money semantics — probe-verified
-    * `round(v*100) = CAST(v AS DECIMAL(18,2))*100` on every money column
-    * at both SFs), so `floor(v·100 + 0.5)` lands on the same integer the
-    * DECIMAL(18,2) cast would (any fp error < half a cent rounds away;
-    * exact for 2-decimal data of magnitude < 2^43). This removes the
-    * per-row BigDecimal allocation of a double→decimal cast — the hash
-    * aggregate then sums primitive longs, measured 2.4× faster. The
-    * cents sum is exact integer arithmetic (long-safe to ~9·10^18
-    * cents, far past a 100 TB TPC-H revenue); [[fromCents]] shifts back
-    * via an exact decimal division, and only the final cast to double
-    * rounds — once, identically to casting the all-decimal sum. */
-  private def cents(c: Column): Column = floor(c * 100 + lit(0.5))
-
-  /** Exact shift back: /10^shift as a DECIMAL division (result scale 6 ≥
-    * any shift used here, so the division is exact), then one double
-    * rounding. */
-  private def fromCents(c: Column, shift: Int): Column =
-    (c.cast("decimal(38,0)") /
-      lit(math.pow(10, shift).toLong).cast("decimal(6,0)")).cast("double")
-
-  private val generalQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // TPC-H Q1-style scan + groupBy aggregation
-    // no wide() here: the cents sums are cheap enough that a 3-task
-    // scan+partial-agg beats paying a 600k-row repartition shuffle
-    // (measured 0.30 vs 0.68 s)
-    "q13_agg_q1" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .filter(col("l_shipdate") <= lit(ts("1998-09-02 00:00:00")))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          fromCents(sum(cents(col("l_quantity"))), 2).as("sum_qty"),
-          fromCents(sum(cents(col("l_extendedprice"))), 2).as("sum_base_price"),
-          fromCents(sum(cents(col("l_extendedprice")) *
-            floor((lit(1.0) - col("l_discount")) * 100 + lit(0.5))), 4)
-            .as("sum_disc_price"),
-          count(lit(1)).as("count_order"))),
-
-    // TPC-H Q3-style 3-way join + agg + total-order top-k.
-    // customer is the small side → broadcast hint; orders⋈lineitem is the
-    // big shuffle join AQE handles.
-    "q14_join_agg" -> ((s, d) => {
-      val c = Tables.customer(s, d).filter(col("c_mktsegment") === "BUILDING")
-      val o = Tables.orders(s, d).filter(col("o_orderdate") < lit(ts("1999-01-01 00:00:00")))
-      val l = Tables.lineitem(s, d).filter(col("l_shipdate") > lit(ts("1997-01-01 00:00:00")))
-      Relational.topK(20, Seq(col("revenue").desc, col("l_orderkey").asc))(
-        l.join(o, col("l_orderkey") === col("o_orderkey"))
-          .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-          .groupBy(col("l_orderkey"),
-            date_format(col("o_orderdate"), "yyyy-MM-dd").as("orderdate"),
-            col("o_orderpriority"))
-          .agg(fromCents(sum(cents(col("l_extendedprice")) *
-            floor((lit(1.0) - col("l_discount")) * 100 + lit(0.5))), 4)
-            .as("revenue")))
-    }),
-
-    // TPC-H Q5-style snowflake join: dims broadcast, facts shuffle.
-    "q15_join_multi" -> ((s, d) => {
-      val n = Tables.nation(s, d); val r = Tables.region(s, d)
-      Tables.lineitem(s, d)
-        .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .join(Tables.supplier(s, d),
-          col("l_suppkey") === col("s_suppkey") &&
-            col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"), col("n_name"))
-        .agg(fromCents(sum(cents(col("l_extendedprice")) *
-          floor((lit(1.0) - col("l_discount")) * 100 + lit(0.5))), 4)
-          .as("revenue"),
-          count(lit(1)).as("n_lines"))
-    }),
-
-    // left-semi join (EXISTS)
-    "q16_semi_join" -> ((s, d) =>
-      Tables.customer(s, d)
-        .join(Tables.orders(s, d).filter(col("o_orderpriority") === "1-URGENT"),
-          col("c_custkey") === col("o_custkey"), "left_semi")
-        .select("c_custkey", "c_name")),
-
-    // left-anti join (NOT EXISTS)
-    "q17_anti_join" -> ((s, d) =>
-      Tables.customer(s, d)
-        .join(Tables.orders(s, d).filter(col("o_orderpriority") === "1-URGENT"),
-          col("c_custkey") === col("o_custkey"), "left_anti")
-        .select("c_custkey", "c_name")),
-
-    // UNION (distinct) of two predicates
-    "q18_union_distinct" -> ((s, d) =>
-      Tables.orders(s, d).filter(col("o_totalprice") > 300000).select("o_orderkey")
-        .union(
-          Tables.orders(s, d).filter(col("o_orderpriority") === "1-URGENT")
-            .select("o_orderkey"))
-        .distinct()),
-
-    // ROLLUP grouping sets, computed by re-aggregation: the finest level
-    // aggregates the data ONCE (6 rows), and the coarser levels re-sum
-    // that 6-row result — additive aggregates (count, decimal sum)
-    // re-aggregate exactly. Spark's native `rollup` would Expand every
-    // input row ×3 (600 k → 1.8 M rows through the hash aggregate); this
-    // shape scans once and the re-agg is O(groups), the plan you want at
-    // any scale for additive measures.
-    "q19_rollup" -> ((s, d) => {
-      val fine = Tables.lineitem(s, d)
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(count(lit(1)).as("n"),
-          sum(cents(col("l_quantity"))).as("__sq"))
-      val mid = fine.groupBy("l_returnflag")
-        .agg(sum(col("n")).as("n"), sum(col("__sq")).as("__sq"))
-        .withColumn("l_linestatus", lit(null).cast("string"))
-      val top = fine
-        .agg(sum(col("n")).as("n"), sum(col("__sq")).as("__sq"))
-        .withColumn("l_returnflag", lit(null).cast("string"))
-        .withColumn("l_linestatus", lit(null).cast("string"))
-      fine.unionByName(mid.select(fine.columns.map(col): _*))
-        .unionByName(top.select(fine.columns.map(col): _*))
-        .select(col("l_returnflag"), col("l_linestatus"), col("n"),
-          fromCents(col("__sq"), 2).as("sum_qty"))
-    }),
-
-    // running window aggregate (exact decimal running sum)
-    "q20_window_running" -> ((s, d) =>
-      Tables.orders(s, d).select(col("o_custkey"), col("o_orderkey"),
-        fromCents(sum(cents(col("o_totalprice")))
-          .over(Window.partitionBy(col("o_custkey"))
-            .orderBy(col("o_orderdate"), col("o_orderkey"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)), 2)
-          .as("running_spend"))),
-
-    // distinct aggregate + plain aggregates
-    "q21_distinct_agg" -> ((s, d) =>
-      Tables.customer(s, d).groupBy("c_nationkey")
-        .agg(countDistinct(col("c_mktsegment")).as("n_segments"),
-          count(lit(1)).as("n_customers"),
-          fromCents(sum(cents(col("c_acctbal"))), 2).as("total_balance"))),
-
-    // scalar string/case expressions
-    "q22_case_string" -> ((s, d) =>
-      Tables.part(s, d).select(col("p_partkey"),
-        upper(substring(col("p_name"), 1, 8)).as("name_prefix"),
-        when(col("p_size") < 10, "small").when(col("p_size") < 30, "medium")
-          .otherwise("large").as("size_class"),
-        concat(col("p_brand"), lit("#"), col("p_type")).as("brand_type"))),
-
-    // as-of join (events -> latest order at-or-before the event, per
-    // user): union-sort technique, one shuffle, no join explosion. The
-    // right side is pre-aggregated to one row per (key, time) so the
-    // tie-break is deterministic in both engines.
-    "q35_asof_join" -> ((s, d) => {
-      val ord = Tables.orders(s, d)
-        .groupBy(col("o_custkey"), col("o_orderdate"))
-        .agg(max(col("o_orderkey")).as("last_orderkey"))
-      val ev = Tables.events(s, d).select(col("event_id"), col("user_id"), col("ts"))
-      Temporal.asofJoin(ev, ord, "user_id", "o_custkey", "ts", "o_orderdate",
-        pruneRightKeys = true) // event users are a small slice of customers
-        .select(col("event_id"), col("user_id"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("event_ts"),
-          col("asof_last_orderkey").as("last_orderkey"),
-          date_format(col("asof_o_orderdate"), "yyyy-MM-dd").as("order_date"))
-    }),
-
-    // bounded range join via bucketing (equi-join meeting points, exact
-    // predicate within buckets) — never BroadcastNestedLoop
-    "q36_range_join" -> ((s, d) => {
-      val e = Tables.events(s, d).filter(col("event_id") < 300)
-        .select(col("event_id"), col("value"))
-      Temporal.rangeJoinByValue(e, e, "value", "value", 0.5)
-        .filter(col("a_event_id") < col("b_event_id"))
-        .select(col("a_event_id"), col("b_event_id"),
-          col("a_value"), col("b_value"))
-    }),
-
-    // the SAME range-join semantics expressed as a plain DataFrame join
-    // with a nested-loop-shaped predicate — the custom optimizer rule
-    // (plans/RangeJoinRewrite, self-enabled on the session) rewrites it
-    // into the bucketed equi-join, proving the extension path through
-    // the correctness gate; all ordered pairs incl. self (the join
-    // condition must be exactly the range predicate for the rule to
-    // match, so no id-ordering filter here — q36 is the curated variant)
-    "q56_range_join_rule" -> ((s, d) => {
-      plans.RangeJoinRewrite.enable(s)
-      val e = Tables.events(s, d).filter(col("event_id") < 300)
-        .select(col("event_id"), col("value"))
-      e.as("a").join(e.as("b"),
-        abs(col("a.value") - col("b.value")) <= lit(0.5))
-        .select(col("a.event_id").as("a_event_id"),
-          col("b.event_id").as("b_event_id"),
-          col("a.value").as("a_value"), col("b.value").as("b_value"))
-    }),
-
-    // pivot (wide aggregation): order counts by priority per customer
-    // bucket. Spelled as conditional sums, NOT relational .pivot: with
-    // the pivot values known up front the .pivot API's plan (two
-    // agg+exchange pairs around the non-codegen pivotfirst
-    // ImperativeAggregate) collapses to ONE codegen'd hash aggregate
-    // over one exchange — absent combinations sum to 0, matching
-    // FILTER-count semantics in the oracle
-    "q47_pivot" -> ((s, d) => {
-      def cnt(v: String) =
-        sum(when(col("o_orderpriority") === v, 1L).otherwise(0L))
-      Tables.orders(s, d)
-        .groupBy((col("o_custkey") % 10).as("cust_mod"))
-        .agg(cnt("1-URGENT").as("n_urgent"), cnt("2-HIGH").as("n_high"),
-          cnt("3-MEDIUM").as("n_medium"))
-    }),
-
-    // array aggregation: deterministic (sorted) collect per group plus
-    // array-derived scalars. The list itself crosses the oracle boundary
-    // as a canonical comma-joined string — the driver's comparator sorts
-    // column values and cannot sort raw list cells.
-    "q48_array_agg" -> ((s, d) =>
-      Tables.lineitem(s, d).filter(col("l_orderkey") < 100)
-        .groupBy("l_orderkey")
-        .agg(array_sort(collect_list(col("l_linenumber"))).as("__ln"),
-          count(lit(1)).as("n_lines"))
-        .select(col("l_orderkey"),
-          concat_ws(",", transform(col("__ln"), _.cast("string"))).as("line_numbers"),
-          col("n_lines"),
-          array_max(col("__ln")).cast(LongType).as("max_line"))),
-
-    // semi-structured extraction: multiple JSON fields from props. One
-    // from_json parse per row (Jackson renders scalar tokens verbatim, so
-    // numbers extract as their source text, same as get_json_object);
-    // three get_json_object calls would parse the same string three times.
-    "q45_json_props" -> ((s, d) =>
-      // widen the scan: the JSON parse otherwise runs on the events
-      // table's single row-group task (439 ms serialized at sf0.1 —
-      // the round-14 StageAudit sf0.1 sweep finding)
-      wide(Tables.events(s, d).select("event_id", "props"))
-        .select(col("event_id"),
-          from_json(col("props"), org.apache.spark.sql.types.StructType.fromDDL(
-            "k STRING, v STRING, missing STRING")).as("__p"))
-        .select(col("event_id"), col("__p.k").as("k_raw"),
-          col("__p.v").as("v_raw"), col("__p.missing").as("absent"))),
-
-    // edit distance between derived strings (fuzzy-match surface)
-    "q46_levenshtein" -> ((s, d) =>
-      Tables.part(s, d).filter(col("p_partkey") < 500)
-        .select(col("p_partkey"),
-          levenshtein(col("p_name"), col("p_brand")).cast(LongType).as("dist_brand"),
-          levenshtein(substring(col("p_name"), 1, 10),
-            substring(col("p_type"), 1, 10)).cast(LongType).as("dist_type10"))),
-
-    // set operations: INTERSECT / EXCEPT (distinct semantics)
-    "q42_intersect_except" -> ((s, d) => {
-      val urgent = Tables.orders(s, d)
-        .filter(col("o_orderpriority") === "1-URGENT").select("o_custkey")
-      val big = Tables.orders(s, d)
-        .filter(col("o_totalprice") > 200000).select("o_custkey")
-      urgent.intersect(big).withColumn("set_op", lit("both"))
-        .union(urgent.except(big).withColumn("set_op", lit("urgent_only")))
-    }),
-
-    // navigation window functions: lag / lead / rank / ntile
-    "q43_window_nav" -> ((s, d) => {
-      val w = Window.partitionBy("o_custkey")
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-      Tables.orders(s, d).select(col("o_custkey"), col("o_orderkey"),
-        lag("o_orderkey", 1).over(w).as("prev_orderkey"),
-        lead("o_orderkey", 1).over(w).as("next_orderkey"),
-        rank().over(Window.partitionBy("o_custkey")
-          .orderBy(col("o_totalprice").desc, col("o_orderkey"))).as("spend_rank"),
-        ntile(4).over(w).as("quartile"))
-    }),
-
-    // datetime surface: component extraction + day arithmetic
-    "q44_datetime" -> ((s, d) =>
-      Tables.orders(s, d).select(col("o_orderkey"),
-        year(col("o_orderdate")).cast(LongType).as("o_year"),
-        month(col("o_orderdate")).cast(LongType).as("o_month"),
-        dayofmonth(col("o_orderdate")).cast(LongType).as("o_day"),
-        quarter(col("o_orderdate")).cast(LongType).as("o_quarter"),
-        datediff(lit("1999-01-01"), col("o_orderdate")).cast(LongType)
-          .as("days_to_1999"),
-        date_format(date_add(col("o_orderdate"), 30), "yyyy-MM-dd")
-          .as("plus_30d"))),
-
-    // exact interpolated percentiles via histogram selection (same
-    // (1-f)*lo + f*hi arithmetic as DuckDB quantile_cont and Spark's
-    // buffered `percentile`, but no per-group value buffer and no
-    // full-data window: codegen histogram -> tiny cumsum -> rank only
-    // the bracket buckets). Both metrics share the two passes.
-    "q41_percentile" -> ((s, d) =>
-      Quantiles.quantileContBucketed(Tables.lineitem(s, d), Seq("l_returnflag"),
-        Seq(("q", col("l_quantity"), 1.0, Seq(("__p50q", 0.5))),
-          ("p", col("l_extendedprice"), 100.0,
-            Seq(("__p25p", 0.25), ("__p75p", 0.75)))))
-        .select(col("l_returnflag"),
-          round(col("__p50q"), 6).as("p50_qty"),
-          round(col("__p25p"), 6).as("p25_price"),
-          round(col("__p75p"), 6).as("p75_price"))),
-
-    // correlated-scalar-subquery shape (TPC-H Q17): lineitems below 20%
-    // of their part's average quantity, revenue loss per brand. The
-    // subquery decorrelates into one per-part aggregate re-joined on the
-    // SAME key — the partial-agg exchange is reusable against the probe
-    // side's shuffle. The threshold test runs in exact integers
-    // (qty_cents · cnt · 5 < sum_cents ⟺ qty < 0.2·avg): a double
-    // avg(quantity) would be partial-sum-order-dependent and could flip
-    // rows at the boundary between engines.
-    "q104_qty_threshold" -> ((s, d) => {
-      val l = Tables.lineitem(s, d)
-      val a = l.groupBy(col("l_partkey").as("__pk"))
-        .agg(sum(cents(col("l_quantity"))).as("__sq"),
-          count(lit(1)).as("__cnt"))
-      l.join(a, col("l_partkey") === col("__pk"))
-        .filter(cents(col("l_quantity")) * col("__cnt") * lit(5L) <
-          col("__sq"))
-        .join(Tables.part(s, d).select(col("p_partkey"), col("p_brand")),
-          col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"))
-        .agg(count(lit(1)).as("n_lines"),
-          fromCents(sum(cents(col("l_extendedprice"))), 2).as("__rev"))
-        .select(col("p_brand"), col("n_lines"),
-          (col("__rev") / lit(7.0)).as("yearly_loss"))
-    }),
-
-    // time-bucketed aggregation — the batch equivalent of the streaming
-    // tumbling-window count (streaming.EventsStream runs the readStream
-    // version of exactly this plan)
-    "q23_time_bucket" -> ((s, d) =>
-      Tables.events(s, d)
-        .groupBy(
-          date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH:mm:ss")
-            .as("hour_start"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          fromCents(sum(cents(col("value"))), 2).as("total_value")))
-  )
-
-  private val generalOracle: Map[String, String] = Map(
-    "q13_agg_q1" ->
-      """SELECT l_returnflag, l_linestatus,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS sum_disc_price,
-         CAST(COUNT(*) AS BIGINT) AS count_order
-         FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-         GROUP BY l_returnflag, l_linestatus""",
-    "q14_join_agg" ->
-      """SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS orderdate, o_orderpriority,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS revenue
-         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         WHERE c_mktsegment = 'BUILDING'
-           AND o_orderdate < TIMESTAMP '1999-01-01 00:00:00'
-           AND l_shipdate > TIMESTAMP '1997-01-01 00:00:00'
-         GROUP BY l_orderkey, orderdate, o_orderpriority
-         ORDER BY revenue DESC, l_orderkey LIMIT 20""",
-    "q15_join_multi" ->
-      """SELECT r_name, n_name,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS revenue,
-         CAST(COUNT(*) AS BIGINT) AS n_lines
-         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-         JOIN nation ON s_nationkey = n_nationkey
-         JOIN region ON n_regionkey = r_regionkey
-         GROUP BY r_name, n_name""",
-    "q16_semi_join" ->
-      "SELECT c_custkey, c_name FROM customer WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')",
-    "q17_anti_join" ->
-      "SELECT c_custkey, c_name FROM customer WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')",
-    "q18_union_distinct" ->
-      "SELECT o_orderkey FROM orders WHERE o_totalprice > 300000 UNION SELECT o_orderkey FROM orders WHERE o_orderpriority = '1-URGENT'",
-    "q19_rollup" ->
-      """SELECT l_returnflag, l_linestatus, CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-         FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)""",
-    "q20_window_running" ->
-      """SELECT o_custkey, o_orderkey,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_spend
-         FROM orders""",
-    "q21_distinct_agg" ->
-      """SELECT c_nationkey, CAST(COUNT(DISTINCT c_mktsegment) AS BIGINT) AS n_segments,
-         CAST(COUNT(*) AS BIGINT) AS n_customers,
-         CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_balance
-         FROM customer GROUP BY c_nationkey""",
-    "q22_case_string" ->
-      """SELECT p_partkey, upper(substr(p_name, 1, 8)) AS name_prefix,
-         CASE WHEN p_size < 10 THEN 'small' WHEN p_size < 30 THEN 'medium' ELSE 'large' END AS size_class,
-         p_brand || '#' || p_type AS brand_type FROM part""",
-    "q23_time_bucket" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_start, event_type,
-         CAST(COUNT(*) AS BIGINT) AS n_events,
-         CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-         FROM events GROUP BY 1, 2""",
-    "q47_pivot" ->
-      """SELECT o_custkey % 10 AS cust_mod,
-         CAST(count(*) FILTER (o_orderpriority = '1-URGENT') AS BIGINT) AS n_urgent,
-         CAST(count(*) FILTER (o_orderpriority = '2-HIGH') AS BIGINT) AS n_high,
-         CAST(count(*) FILTER (o_orderpriority = '3-MEDIUM') AS BIGINT) AS n_medium
-         FROM orders GROUP BY 1""",
-    "q48_array_agg" ->
-      """SELECT l_orderkey,
-         array_to_string(list_transform(list_sort(list(l_linenumber)), x -> CAST(x AS VARCHAR)), ',') AS line_numbers,
-         CAST(count(*) AS BIGINT) AS n_lines,
-         CAST(list_max(list(l_linenumber)) AS BIGINT) AS max_line
-         FROM lineitem WHERE l_orderkey < 100 GROUP BY l_orderkey""",
-    "q45_json_props" ->
-      """SELECT event_id,
-         json_extract_string(props, '$.k') AS k_raw,
-         json_extract_string(props, '$.v') AS v_raw,
-         json_extract_string(props, '$.missing') AS absent
-         FROM events""",
-    "q46_levenshtein" ->
-      """SELECT p_partkey,
-         CAST(levenshtein(p_name, p_brand) AS BIGINT) AS dist_brand,
-         CAST(levenshtein(substr(p_name, 1, 10), substr(p_type, 1, 10)) AS BIGINT) AS dist_type10
-         FROM part WHERE p_partkey < 500""",
-    "q42_intersect_except" ->
-      """WITH urgent AS (SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'),
-         big AS (SELECT o_custkey FROM orders WHERE o_totalprice > 200000)
-         SELECT o_custkey, 'both' AS set_op FROM (SELECT * FROM urgent INTERSECT SELECT * FROM big)
-         UNION ALL
-         SELECT o_custkey, 'urgent_only' AS set_op FROM (SELECT * FROM urgent EXCEPT SELECT * FROM big)""",
-    "q43_window_nav" ->
-      """SELECT o_custkey, o_orderkey,
-         lag(o_orderkey, 1) OVER w AS prev_orderkey,
-         lead(o_orderkey, 1) OVER w AS next_orderkey,
-         CAST(rank() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS INT) AS spend_rank,
-         CAST(ntile(4) OVER w AS INT) AS quartile
-         FROM orders
-         WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)""",
-    "q44_datetime" ->
-      """SELECT o_orderkey,
-         CAST(year(o_orderdate) AS BIGINT) AS o_year,
-         CAST(month(o_orderdate) AS BIGINT) AS o_month,
-         CAST(day(o_orderdate) AS BIGINT) AS o_day,
-         CAST(quarter(o_orderdate) AS BIGINT) AS o_quarter,
-         CAST(datediff('day', CAST(o_orderdate AS DATE), DATE '1999-01-01') AS BIGINT) AS days_to_1999,
-         strftime(CAST(o_orderdate AS DATE) + INTERVAL 30 DAY, '%Y-%m-%d') AS plus_30d
-         FROM orders""",
-    "q41_percentile" ->
-      """SELECT l_returnflag,
-         round(quantile_cont(l_quantity, 0.5), 6) AS p50_qty,
-         round(quantile_cont(l_extendedprice, 0.25), 6) AS p25_price,
-         round(quantile_cont(l_extendedprice, 0.75), 6) AS p75_price
-         FROM lineitem GROUP BY l_returnflag""",
-    "q35_asof_join" ->
-      """WITH ord AS (SELECT o_custkey, o_orderdate, max(o_orderkey) AS last_orderkey
-           FROM orders GROUP BY 1, 2),
-         ev AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events)
-         SELECT event_id, user_id,
-           strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS event_ts,
-           last_orderkey,
-           strftime(o_orderdate, '%Y-%m-%d') AS order_date
-         FROM ev ASOF LEFT JOIN ord
-           ON ev.user_id = ord.o_custkey AND ev.ts >= ord.o_orderdate""",
-    "q36_range_join" ->
-      """WITH e AS (SELECT event_id, value FROM events WHERE event_id < 300)
-         SELECT a.event_id AS a_event_id, b.event_id AS b_event_id,
-           a.value AS a_value, b.value AS b_value
-         FROM e a, e b
-         WHERE a.event_id < b.event_id AND abs(a.value - b.value) <= 0.5""",
-    "q56_range_join_rule" ->
-      """WITH e AS (SELECT event_id, value FROM events WHERE event_id < 300)
-         SELECT a.event_id AS a_event_id, b.event_id AS b_event_id,
-           a.value AS a_value, b.value AS b_value
-         FROM e a, e b
-         WHERE abs(a.value - b.value) <= 0.5""",
-    // integer threshold test mirrors the Spark side exactly; yearly loss
-    // divides the exact decimal sum as a double, once
-    "q104_qty_threshold" ->
-      """WITH a AS (SELECT l_partkey,
-           CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sq,
-           CAST(count(*) AS BIGINT) AS cnt
-           FROM lineitem GROUP BY 1)
-         SELECT p_brand, CAST(count(*) AS BIGINT) AS n_lines,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-             / CAST(7.0 AS DOUBLE) AS yearly_loss
-         FROM lineitem l JOIN a ON l.l_partkey = a.l_partkey
-         JOIN part p ON l.l_partkey = p.p_partkey
-         WHERE CAST(floor(l_quantity * 100 + 0.5) AS BIGINT) * cnt * 5 < sq
-         GROUP BY 1"""
-  )
-
-  // ---------------------------------------------------------------------
-  // T3 training-data-pipeline queries (dedup / similarity / text / media)
-  // ---------------------------------------------------------------------
-
-  private val MinhashK = 5
-  private val MinhashPerms = 16
-  private val MinhashBands = 4
-
-  private val EmbDim = 64
-  private val LshTables = 4
-  private val LshBits = 8
-  private val SimhashMaxBucket = 500
-  private val SimhashMaxHamming = 3
-  /** Operator-default degenerate-bucket cap (Dedup / Similarity) — the
-    * oracles mirror it so Spark and DuckDB agree even on a corpus where
-    * one bucket exceeds it. */
-  private val DefaultMaxBucket = 10000
-
-  /** q52 mixing rates: downsample English hard, others lightly. */
-  private val StratRates = Map("en" -> 0.1, "de" -> 0.5)
-  private val StratDefault = 0.9
-  private val IvfStride = 30L
-  private val IvfCells = 16
-  private val IvfProbe = 4
-
-  /** q152's static badword list (stand-in for C4's public blocklist,
-    * chosen so it fires on a meaningful fraction of the synthetic
-    * corpus: 'dup' hits ~5% of docs, each phrase ~6%). */
-  private val BlocklistWords = Seq("dup")
-  private val BlocklistPhrases = Seq("slow merge", "big batch")
-
-  /** q75 lexical query terms (drawn from the corpus vocabulary so the
-    * overlap ranking provably fires). */
-  private val RrfTerms = Seq("table", "scan", "fast")
-
-  private val pipelineQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // token statistics (whitespace + BPE-ish estimate)
-    "q24_text_tokens" -> ((s, d) =>
-      wide(Tables.documents(s, d)).select(col("doc_id"),
-        size(TextAnalysis.tokens(col("text"))).cast(LongType).as("n_tokens"),
-        TextAnalysis.tokenCountEstimate(col("text")).cast(LongType).as("n_tokens_bpe"),
-        length(col("text")).cast(LongType).as("n_chars_measured"))),
-
-    // content fingerprints (md5 + polynomial rolling hash)
-    "q25_text_fingerprint" -> ((s, d) =>
-      wide(Tables.documents(s, d)).select(col("doc_id"),
-        TextAnalysis.fingerprint(col("text")).as("fp"),
-        TextAnalysis.rollingHash(col("text")).as("roll_hash"))),
-
-    // marker-word language ID
-    "q26_text_langid" -> ((s, d) =>
-      wide(Tables.documents(s, d)).select(col("doc_id"),
-        TextAnalysis.langId(col("text")).as("lang_pred"),
-        col("lang").as("lang_declared"))),
-
-    // quality-score features
-    "q27_text_quality" -> ((s, d) =>
-      TextAnalysis.qualityFeatures(wide(Tables.documents(s, d)), col("text"))
-        .select(col("doc_id"), col("n_tokens").cast(LongType).as("n_tokens"),
-          col("avg_token_len"), col("stopword_ratio"), col("quality_score"))),
-
-    // exact dedup by normalized content hash (normalization applied at
-    // the call site so the hashed value matches the oracle's
-    // md5(lower(trim(text))) exactly, corpus-independent)
-    "q28_dedup_exact" -> ((s, d) =>
-      Dedup.exact(Tables.documents(s, d), "doc_id", lower(trim(col("text"))))),
-
-    // MinHash + LSH band-join near-dup candidates
-    "q29_dedup_minhash" -> ((s, d) =>
-      Dedup.minHashCandidates(Tables.documents(s, d), "doc_id", col("text"),
-        MinhashK, MinhashPerms, MinhashBands)),
-
-    // SimHash signatures
-    "q30_dedup_simhash" -> ((s, d) =>
-      Dedup.simHashSignatures(Tables.documents(s, d), "doc_id", col("text"))),
-
-    // exact cosine top-k (ANN correctness baseline)
-    "q31_knn_brute" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.bruteForceKnn(emb, emb.filter(col("vec_id") < 5), 10)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"),
-          col("rank").cast(LongType).as("knn_rank"))
-    }),
-
-    // embedding near-dup pairs, content-blocked by sign-bit LSH buckets
-    // (exact cosine within buckets; no join operator, never all-pairs)
-    "q32_embedding_neardup" -> ((s, d) =>
-      Similarity.lshNearDupPairs(Tables.embeddings(s, d), 0.3,
-        nTables = LshTables, nBits = LshBits, dim = EmbDim)),
-
-    // LSH-bucketed ANN: q31's top-k through q32's sign-bit buckets —
-    // candidates share a bucket in >=1 table, exact cosine re-rank,
-    // bounded two-phase top-k (sublinear candidate sets at scale)
-    "q126_lsh_knn" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.lshKnn(emb, emb.filter(col("vec_id") < 5), 10,
-        nTables = LshTables, nBits = LshBits, dim = EmbDim)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"),
-          col("rank").cast(LongType).as("knn_rank"))
-    }),
-
-    // winnowing fingerprints (MOSS): window-min k-gram hashes — the
-    // shared-passage detector; any w+k-1-token overlap shares one
-    "q127_winnow_fingerprints" -> ((s, d) =>
-      TextAnalysis.winnowFingerprints(Tables.documents(s, d), "doc_id",
-        col("text"))
-        .select(col("doc").as("doc_id"), col("fingerprint"))),
-
-    // DSIR importance weights: hashed-bigram target/raw log-likelihood
-    // ratio per doc (target = the q58/q124 %7 eval split)
-    "q128_dsir_weights" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextAnalysis.dsirWeights(
-        docs.filter(col("doc_id") % 7 =!= 0), "doc_id", col("text"),
-        docs.filter(col("doc_id") % 7 === 0), col("text"))
-        .select(col("doc").as("doc_id"), col("n_feats"), col("dsir_micro"))
-    }),
-
-    // dataset-level overlap matrix: MinHash signature agreement between
-    // SOURCES (group-level union-shingle Jaccard estimate)
-    "q129_source_overlap" -> ((s, d) =>
-      Dedup.signatureOverlap(Tables.documents(s, d), "source",
-        col("text"))),
-
-    // shared-passage clusters: CC over the winnowing fingerprint graph.
-    // The corpus has no natural shared passages, so two boilerplate
-    // families are injected deterministically (>= w+k-1 = 7 tokens, the
-    // winnowing guarantee) — the oracle match exercises real clustering
-    "q130_passage_clusters" -> ((s, d) => {
-      val spiked = concat(col("text"),
-        when(col("doc_id") % 17 === 0,
-          lit(" shared boilerplate footer alpha beta gamma delta epsilon"))
-          .when(col("doc_id") % 19 === 0,
-            lit(" common navigation header one two three four five six"))
-          .otherwise(lit("")))
-      Dedup.passageClusters(Tables.documents(s, d), "doc_id", spiked,
-        minShared = 1L)
-    }),
-
-    // fastText-style quality classifier: closed-form Naive Bayes over
-    // hashed unigrams, trained in the same pass it scores (weak label =
-    // "is this one of the two reference sources") — the GPT-3/LLaMA
-    // "looks like the reference corpus" filter. The synthetic sources
-    // share one vocabulary (NB would correctly put every doc in the
-    // majority class — the decision never fires), so reference-style
-    // vocabulary is injected deterministically: the labeled sources get
-    // the full marker, unlabeled src2 a partial one — src2 docs leaning
-    // positive is the classifier GENERALIZING off its weak labels,
-    // which is what the oracle match exercises
-    "q131_nb_classifier" -> ((s, d) => {
-      val spiked = concat(col("text"),
-        when(col("source").isin("src0", "src1"),
-          lit(" curated encyclopedia reference citation archive"))
-          .when(col("source") === "src2",
-            lit(" encyclopedia reference citation"))
-          .otherwise(lit("")))
-      TextAnalysis.nbClassifier(Tables.documents(s, d), "doc_id",
-        spiked, col("source").isin("src0", "src1"))
-        .select(col("doc").as("doc_id"), col("n_toks"), col("nb_micro"),
-          col("nb_pos"))
-    }),
-
-    // Johnson-Lindenstrauss +-1 random projection (Achlioptas 2003):
-    // 64 -> 16 dims with md5-derived plan-time signs, exact integer
-    // micro sums — the training-free reduction next to PCA (fit) and
-    // PQ (k-means). Pure map, zero broadcast state
-    "q166_jl_project" -> ((s, d) =>
-      Similarity.jlProject(Tables.embeddings(s, d), dIn = 64, kOut = 16)),
-
-    // per-source corpus datasheet (Gebru 2018; the Dodge 2021 C4
-    // profile): size, token volume, mean doc length, exact-duplicate
-    // exposure, language spread, null-text count. The corpus has zero
-    // organic exact-dup texts (probed round 4), so the %41 stratum
-    // ships one shared body — 13 docs across 13 of the 20 sources —
-    // and the cross-source duplicate column provably fires both ways
-    "q165_datasheet" -> ((s, d) => {
-      val spiked = when(col("doc_id") % 41 === 0,
-        lit("duplicate boilerplate page about spark tables and joins"))
-        .otherwise(col("text"))
-      Quality.datasheet(Tables.documents(s, d), "source", "doc_id",
-        spiked, col("lang"))
-        .withColumnRenamed("slice", "source")
-    }),
-
-    // operating-point sweep for the q131 quality filter: precision /
-    // recall at each exact score-decile cut (histogram-selection
-    // quantiles -> one conditional aggregate; no ranking window).
-    // Unlike q131's clean spike, a quarter of the labeled positives
-    // (doc_id % 4 = 0) ship WITHOUT the marker vocabulary — label
-    // noise — so high cuts trade recall for precision and BOTH curve
-    // columns genuinely move across the sweep (probed at sf0.01:
-    // precision 0.107->0.50 and recall 0.96->0.50, no constant column)
-    "q164_pr_sweep" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val spiked = concat(col("text"),
-        when(col("source").isin("src0", "src1") && col("doc_id") % 4 =!= 0,
-          lit(" curated encyclopedia reference citation archive"))
-          .when(col("source") === "src2",
-            lit(" encyclopedia reference citation"))
-          .otherwise(lit("")))
-      val scored = TextAnalysis.nbClassifier(docs, "doc_id", spiked,
-        col("source").isin("src0", "src1"))
-        .join(docs.select(col("doc_id").as("doc"), col("source")),
-          Seq("doc"))
-      TextAnalysis.thresholdSweep(scored, col("nb_micro"),
-        col("source").isin("src0", "src1"))
-    }),
-
-    // CCNet perplexity terciles: hashed-bigram add-one LM trained on
-    // the src0/src1 reference slice scores every doc; head = cleanest
-    "q132_ppl_buckets" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextAnalysis.lmPerplexityBuckets(docs, "doc_id", col("text"),
-        docs.filter(col("source").isin("src0", "src1")), col("text"))
-        .select(col("doc").as("doc_id"), col("n_pairs"),
-          col("nll_micro"), col("mean_micro"), col("ppl_bucket"))
-    }),
-
-    // compressed-video metadata round-trip: a REAL avc1 MP4 is muxed
-    // per doc (Mp4Mux — profile/level/mb-grid/crop/frames from doc_id
-    // arithmetic, entry dims a constant decoy), then parsed back
-    // through the real box walk + avcC + SPS Exp-Golomb reader; the
-    // oracle states the same arithmetic directly, so a single flipped
-    // bit in either the writer or the parser hash-mismatches
-    "q151_avc_meta" -> ((s, d) => {
-      import s.implicits._
-      val payloads = Tables.documents(s, d).select(col("doc_id"))
-        .as[Long]
-        .mapPartitions(_.map(id => (id, operators.Mp4Mux.avc1Fixture(id))))
-        .toDF("doc_id", "payload")
-      Multimodal.videoTrackMeta(s, payloads, "doc_id").toDF()
-    }),
-
-    // T5 span corruption: hash-derandomized block spans → (masked
-    // input with sentinels, span target) pairs — denoising prep
-    "q133_span_corruption" -> ((s, d) =>
-      TextAnalysis.spanCorruption(Tables.documents(s, d), "doc_id",
-        col("text"))
-        .select(col("doc").as("doc_id"), col("masked_input"),
-          col("target"), col("n_spans"), col("n_masked"))),
-
-    // margin-based bitext mining (CCMatrix criterion): labels 0-4 play
-    // the source language, 5-9 the target; LSH-bucketed candidates,
-    // ratio margin over both k-neighborhoods, best pair per src above
-    // a 1.05 margin
-    "q134_bitext_margin" -> ((s, d) =>
-      Similarity.bitextMarginMine(Tables.embeddings(s, d),
-        col("label") < 5, k = 4, minMarginMicro = 1050000L,
-        nTables = LshTables, nBits = LshBits, dim = EmbDim,
-        maxBucket = DefaultMaxBucket)),
-
-    // boilerplate density: fraction of each doc's winnowing
-    // fingerprints shared corpus-wide (the q130 spike supplies real
-    // template families; unspiked docs sit at zero)
-    "q135_boilerplate_density" -> ((s, d) => {
-      val spiked = concat(col("text"),
-        when(col("doc_id") % 17 === 0,
-          lit(" shared boilerplate footer alpha beta gamma delta epsilon"))
-          .when(col("doc_id") % 19 === 0,
-            lit(" common navigation header one two three four five six"))
-          .otherwise(lit("")))
-      TextAnalysis.boilerplateDensity(Tables.documents(s, d), "doc_id",
-        spiked)
-        .select(col("doc").as("doc_id"), col("n_fp"), col("n_common"),
-          col("boiler_micro"))
-    }),
-
-    // multi-round BPE merge training (Sennrich 2016): eight greedy
-    // rounds over the word-frequency vocabulary — pair counts, argmax
-    // merge, left-to-right rewrite — the learned merge table a BPE
-    // tokenizer ships; completes q116's single round
-    "q136_bpe_train" -> ((s, d) =>
-      TextAnalysis.bpeTrain(Tables.documents(s, d), col("text"),
-        nMerges = 8)),
-
-    // BPE application: encode every word with the learned merges and
-    // report per-doc subword counts + fertility (tokens per word) —
-    // the standard tokenizer-quality metric
-    "q137_bpe_fertility" -> ((s, d) =>
-      TextAnalysis.bpeSubwordStats(Tables.documents(s, d), "doc_id",
-        col("text"), nMerges = 8)
-        .select(col("doc").as("doc_id"), col("n_words"),
-          col("n_subwords"), col("fertility_micro"))),
-
-    // denoised hard negatives (RocketQA): different-label top-k
-    // calibrated against the labeled positive — candidates within the
-    // margin of pos_micro are likely unlabeled positives and excluded
-    "q138_denoised_negatives" -> ((s, d) =>
-      Similarity.denoisedHardNegatives(Tables.embeddings(s, d),
-        col("vec_id") < 40, k = 5, marginMicro = 20000L)),
-
-    // contrastive span pairs (Contriever independent cropping):
-    // hash-derandomized positive pairs for dense-retriever pretraining
-    "q139_span_pairs" -> ((s, d) =>
-      TextAnalysis.contrastiveSpanPairs(Tables.documents(s, d), "doc_id",
-        col("text"))
-        .select(col("doc").as("doc_id"), col("a_start"), col("a_len"),
-          col("span_a"), col("b_start"), col("b_len"), col("span_b"))),
-
-    // Zipf-law fit: integer-quantized OLS over (ln rank, ln freq) of
-    // the top-1000 vocabulary — the corpus-health probe (natural text
-    // sits near slope -1; template floods drift it)
-    "q140_zipf_fit" -> ((s, d) =>
-      TextAnalysis.zipfFit(Tables.documents(s, d), col("text"),
-        topV = 1000)),
-
-    // exact phrase occurrence search: per-row positional matching of a
-    // token sequence ("table hash" occurs organically in the corpus)
-    "q141_phrase_search" -> ((s, d) =>
-      TextAnalysis.phraseSearch(Tables.documents(s, d), "doc_id",
-        col("text"), Seq("table", "hash"))
-        .select(col("doc").as("doc_id"), col("n_matches"),
-          col("first_pos"))),
-
-    // exact directional containment over the LSH candidate pairs:
-    // the subsumption detector symmetric Jaccard cannot be
-    "q142_containment" -> ((s, d) =>
-      Dedup.containmentVerify(Tables.documents(s, d), "doc_id",
-        col("text"), k = MinhashK, numPerm = MinhashPerms,
-        bands = MinhashBands, maxBucket = DefaultMaxBucket)),
-
-    // BLEU modified n-gram precision over the mined near-dup pairs —
-    // the multiset eval twin of q142's directional set containment:
-    // repeated n-grams clip at the reference's multiplicity
-    "q163_ngram_precision" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextAnalysis.clippedNgramPrecision(docs, "doc_id", col("text"),
-        Dedup.minHashCandidates(docs, "doc_id", col("text"),
-          k = MinhashK, numPerm = MinhashPerms, bands = MinhashBands,
-          maxBucket = DefaultMaxBucket))
-    }),
-
-    // ROUGE-N recall + exact-identity F1 over the same mined pairs —
-    // the summarization-eval twin completing the BLEU/chrF/ROUGE triple
-    "q196_rouge" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextAnalysis.rougeN(docs, "doc_id", col("text"),
-        Dedup.minHashCandidates(docs, "doc_id", col("text"),
-          k = MinhashK, numPerm = MinhashPerms, bands = MinhashBands,
-          maxBucket = DefaultMaxBucket))
-    }),
-
-    // chrF2 (char n-gram F-score, orders 1-3, beta=2) over the same
-    // mined candidate pairs - the tokenization-free eval twin of
-    // q163's BLEU precision. Probed at sf0.01: 25 pairs, 25 distinct
-    // chrf2 values spanning 0.977-0.999, precision != recall on all
-    // 25 (the clip and both totals all bite)
-    "q170_chrf" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextAnalysis.chrF(docs, "doc_id", col("text"),
-        Dedup.minHashCandidates(docs, "doc_id", col("text"),
-          k = MinhashK, numPerm = MinhashPerms, bands = MinhashBands,
-          maxBucket = DefaultMaxBucket))
-    }),
-
-    // token-budget subset selection: highest-quality docs under an
-    // 8000-token training budget via histogram threshold — whole
-    // buckets above the cut, a hash-ordered partial admit at the
-    // boundary, no global sort
-    "q143_budget_select" -> ((s, d) => {
-      val q = TextAnalysis.qualityFeatures(Tables.documents(s, d),
-        col("text"))
-      Relational.budgetedSelection(q, "doc_id", col("n_tokens"),
-          col("quality_score"), budgetTokens = 8000L)
-        .select(col("doc").as("doc_id"), col("n_toks"), col("q_bucket"))
-    }),
-
-    // content-defined chunking: shift-resistant rolling-hash cuts —
-    // the chunk-level dedup unit fixed-size chunking cannot provide
-    "q144_cdc_chunks" -> ((s, d) =>
-      TextAnalysis.contentDefinedChunks(Tables.documents(s, d), "doc_id",
-        col("text"), k = 4, divisor = 8L)
-        .select(col("doc").as("doc_id"), col("chunk_idx"), col("start"),
-          col("len"), col("chunk_fp"))),
-
-    // temperature-flattened mixture allocation (mT5 α=0.5) with
-    // water-filling: √-capacity weights, saturated languages taken
-    // whole, their excess re-levelled onto the rest
-    "q145_mixture_waterfill" -> ((s, d) =>
-      TextAnalysis.mixtureWaterfill(
-        Tables.documents(s, d)
-          .withColumn("__nt", size(TextAnalysis.tokens(col("text")))),
-        "lang", col("__nt"), budgetTokens = 24000L)
-        .select(col("source").as("lang"), col("cap_tokens"),
-          col("alloc_tokens"), col("capped"))),
-
-    // leakage-safe split: whole near-dup components share one side of
-    // the train/val/test boundary, keyed on the cluster canonical
-    "q146_leakage_split" -> ((s, d) =>
-      Dedup.leakageSafeSplit(Tables.documents(s, d), "doc_id",
-        col("text"), MinhashK, MinhashPerms, MinhashBands)
-        .select(col("doc").as("doc_id"), col("split_key"), col("split"))),
-
-    // Matryoshka truncation eval: how much of the full-dim top-10
-    // survives at a 16-dim prefix — exact recall per query
-    "q147_trunc_recall" -> ((s, d) =>
-      Similarity.truncationRecall(Tables.embeddings(s, d),
-        col("vec_id") < 30, k = 10, truncDim = 16)),
-
-    // calibration curve of the q131 NB quality filter: decile bins of
-    // the score vs actual label rate — "does the score mean anything"
-    "q148_calibration" -> ((s, d) => {
-      val spiked = concat(col("text"),
-        when(col("source").isin("src0", "src1"),
-          lit(" curated encyclopedia reference citation archive"))
-          .when(col("source") === "src2",
-            lit(" encyclopedia reference citation"))
-          .otherwise(lit("")))
-      val docs = Tables.documents(s, d)
-      val nb = TextAnalysis.nbClassifier(docs, "doc_id", spiked,
-        col("source").isin("src0", "src1"))
-      TextAnalysis.calibrationCurve(
-        nb.join(docs.select(col("doc_id").as("doc"),
-          col("source").isin("src0", "src1").as("__lbl")), Seq("doc")),
-        "doc", col("nb_micro"), col("__lbl"))
-    }),
-
-    // C4-style badword blocklist disposition (drop any page containing a
-    // listed word or phrase), aggregated per source. The list mixes a
-    // whole-token word ('dup', ~5% df on the corpus) with two adjacency
-    // phrases so BOTH match kinds provably fire — and every source keeps
-    // a nonzero blocked AND kept count (probed; distribution recorded in
-    // COVERAGE.md). Zero-shuffle scan expression + one tiny aggregation.
-    "q152_blocklist" -> ((s, d) => {
-      val blocked = TextAnalysis.blocklistHit(col("text"),
-        BlocklistWords, BlocklistPhrases)
-      Tables.documents(s, d)
-        .select(col("source"), col("n_chars"), blocked.as("__b"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("__b"), 1L).otherwise(0L)).as("n_blocked"),
-          sum(when(!col("__b"), col("n_chars")).otherwise(0L)).as("kept_chars"))
-    }),
-
-    // C4-style sentence-level dedup: the corpus has no punctuation, so
-    // sentence boundaries are spiked in (a period every 8 words) plus
-    // two shared boilerplate sentences on doc_id strata — the strike
-    // provably fires (boilerplate struck from ~38/~29 docs) while every
-    // natural 8-word sentence survives (decision fires both ways)
-    "q149_sentence_dedup" -> ((s, d) => {
-      val spiked = concat(
-        regexp_replace(col("text"), "((?:\\S+ ){7}\\S+) ", "$1. "),
-        when(col("doc_id") % 13 === 0,
-          lit(". all rights reserved contact us for details"))
-          .when(col("doc_id") % 17 === 0,
-            lit(". subscribe to our newsletter for updates"))
-          .otherwise(lit("")))
-      Dedup.sentenceDedup(Tables.documents(s, d), "doc_id", spiked,
-        maxDocFreq = 3)
-    }),
-
-    // CCNet terciles under interpolated Kneser-Ney-style smoothing
-    // (q132's lifecycle, upgraded per-pair probability). Novel-script
-    // words spiked onto non-reference docs land in hash buckets the
-    // 31-word reference vocabulary never occupies, so the unseen-prefix
-    // backoff branch (c1 = 0 → pure continuation) provably fires
-    // alongside the discounted-seen and unseen-pair paths
-    "q150_interp_ppl" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val spiked = when(!col("source").isin("src0", "src1") &&
-          col("doc_id") % 11 === 0,
-        concat(col("text"), lit(" cuneiform hieroglyph abjad")))
-        .otherwise(col("text"))
-      TextAnalysis.lmPerplexityBucketsInterp(docs, "doc_id", spiked,
-        docs.filter(col("source").isin("src0", "src1")), col("text"))
-        .select(col("doc").as("doc_id"), col("n_pairs"),
-          col("nll_micro"), col("mean_micro"), col("ppl_bucket"))
-    }),
-
-    // multimodal payload metadata (binary column plumbing)
-    "q33_multimodal_meta" -> ((s, d) =>
-      Multimodal.payloadMeta(wide(Tables.documents(s, d)), "text")),
-
-    // curation content flags (email/url/digit-run detection). The
-    // corpus text contains none of these, so flaggable content is
-    // injected deterministically by doc_id — the oracle match then
-    // exercises both regex branches instead of passing on all-false.
-    "q37_content_flags" -> ((s, d) => {
-      val spiked = concat(col("text"),
-        when(col("doc_id") % 7 === 0, lit(" contact user@example.com"))
-          .when(col("doc_id") % 11 === 0, lit(" see https://example.com/x"))
-          .when(col("doc_id") % 13 === 0, lit(" ref 123456789"))
-          .otherwise(lit("")))
-      val flags = TextAnalysis.contentFlags(spiked)
-      wide(Tables.documents(s, d)).select(
-        col("doc_id") +: flags.map { case (n, c) => c.as(n) }: _*)
-    }),
-
-    // repetition quality signals (distinct ratio, top-token share)
-    "q38_repetition" -> ((s, d) =>
-      TextAnalysis.repetitionStats(Tables.documents(s, d), "doc_id", col("text"))),
-
-    // context-window chunking (token windows with overlap); tokens are
-    // projected into a column BEFORE the window HOF — inlined, the split
-    // re-runs per chunk (no loop-invariant hoisting in lambdas)
-    "q39_chunking" -> ((s, d) =>
-      wide(Tables.documents(s, d))
-        .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("__toks"))
-        .select(col("doc_id"),
-          posexplode(TextAnalysis.chunksOfTokens(col("__toks"), 32, 8)))
-        .select(col("doc_id"), col("pos").cast(LongType).as("chunk_idx"),
-          col("col").as("chunk"))),
-
-    // reproducible hash sampling (dataset mixing)
-    "q40_sample" -> ((s, d) =>
-      Tables.orders(s, d)
-        .filter(TextAnalysis.deterministicSample(col("o_orderkey"), 0.1))
-        .select("o_orderkey", "o_custkey")),
-
-    // simhash near-dup candidates: 4 × 14-bit pigeonhole bands over the
-    // q30 signature, degenerate bands capped at 500 docs, pairs kept only
-    // within the Hamming-3 radius the banding guarantees
-    "q49_simhash_candidates" -> ((s, d) =>
-      Dedup.simHashCandidates(Tables.documents(s, d), "doc_id", col("text"),
-        maxBucket = SimhashMaxBucket)
-        .select(col("doc_a"), col("doc_b"),
-          col("hamming").cast(LongType).as("hamming"))),
-
-    // IVF ANN: stride-sampled coarse quantizer, nProbe-cell probe, exact
-    // re-rank within probed cells — fully deterministic, oracle-checked
-    "q50_ivf_knn" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.ivfKnn(emb, emb.filter(col("vec_id") < 5), 10,
-        stride = IvfStride, nCells = IvfCells, nProbe = IvfProbe)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"),
-          col("rank").cast(LongType).as("knn_rank"))
-    }),
-
-    // recall@10 of the q50 IVF index vs exact brute force on a
-    // 1-in-40 sampled query set — the q206 audit discipline applied to
-    // the vector tier (recall is a property of THIS corpus at THIS
-    // scale, so the same query re-runs at the 10x rehearsal corpus and
-    // its recall lands in BASELINE.md)
-    "q224_ann_recall" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.annRecallAudit(emb, emb.filter(col("vec_id") % 40 === 0),
-        10, stride = IvfStride, nCells = IvfCells, nProbe = IvfProbe)
-    }),
-
-    // near-dup clusters: connected components over the q29 candidate
-    // graph — every doc labeled with its cluster's minimum doc id (the
-    // canonical survivor of a global dedup)
-    "q51_dedup_components" -> ((s, d) =>
-      Dedup.connectedComponents(
-        Dedup.minHashCandidates(Tables.documents(s, d), "doc_id", col("text"),
-          MinhashK, MinhashPerms, MinhashBands))),
-
-    // stratified deterministic sampling (dataset mixing): per-language
-    // rates — downsample dominant strata, keep rare ones whole
-    "q52_stratified_sample" -> ((s, d) =>
-      Tables.documents(s, d)
-        .filter(TextAnalysis.stratifiedSample(col("doc_id"), col("lang"),
-          StratRates, StratDefault))
-        .select(col("doc_id"), col("lang"))),
-
-    // corpus vocabulary: top-200 tokens by occurrence with document
-    // frequency (tokenizer/BPE-training prep; deterministic truncation)
-    "q53_vocabulary" -> ((s, d) =>
-      TextAnalysis.vocabulary(Tables.documents(s, d), "doc_id", col("text"), 200)),
-
-    // canonicalization before fingerprinting (lowercase, strip
-    // punctuation, collapse whitespace) + a changed flag. The corpus text
-    // is already clean, so punctuation is injected deterministically by
-    // doc_id — the oracle then exercises every branch of the normalizer.
-    "q54_normalize" -> ((s, d) => {
-      val spiked = when(col("doc_id") % 5 === 0,
-        concat(lit("  \"Hello,  WORLD!\"  ("), col("text"), lit(") ...")))
-        .otherwise(col("text"))
-      wide(Tables.documents(s, d)).select(col("doc_id"),
-        TextAnalysis.normalize(spiked).as("norm_text"),
-        (TextAnalysis.normalize(spiked) =!= col("text")).as("changed"))
-    }),
-
-    // global dedup end-to-end: candidates -> clusters -> survivors (every
-    // near-dup cluster keeps only its canonical min doc id)
-    "q55_dedup_survivors" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val comps = Dedup.connectedComponents(
-        Dedup.minHashCandidates(docs, "doc_id", col("text"),
-          MinhashK, MinhashPerms, MinhashBands))
-      Dedup.keepCanonical(docs, "doc_id", comps)
-        .select(col("doc_id"), col("lang"))
-    }),
-
-    // per-(doc, token) TF-IDF weights (retrieval/curation scoring)
-    "q57_tfidf" -> ((s, d) =>
-      TextAnalysis.tfIdf(Tables.documents(s, d), "doc_id", col("text"))),
-
-    // exact n-gram Jaccard over a declared pair set (the LSH verify step)
-    "q34_jaccard" -> ((s, d) => {
-      val docs20 = Tables.documents(s, d).filter(col("doc_id") < 20)
-      val pairs = docs20.select(col("doc_id").as("doc_a"))
-        .join(docs20.select(col("doc_id").as("doc_b")), col("doc_a") < col("doc_b"))
-      Dedup.ngramJaccard(docs20, "doc_id", col("text"), pairs, 3)
-    }),
-
-    // tf-weighted Jaccard over the q29 MinHash candidates — the
-    // repetition-aware LSH verify step (Σmin/Σmax over token
-    // frequencies, the quantity Ioffe 2010's consistent weighted
-    // sampling estimates, computed exactly) next to q34's
-    // distinct-shingle set Jaccard; non-vacuous at sf0.01 — 5 of the
-    // 25 candidate pairs diverge >0.01 from the distinct-token set
-    // Jaccard (e.g. pair (8,245): weighted .988 vs set .963)
-    "q213_weighted_jaccard" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val pairs = Dedup.minHashCandidates(docs, "doc_id", col("text"),
-        MinhashK, MinhashPerms, MinhashBands)
-      Dedup.weightedJaccard(docs, "doc_id", col("text"), pairs)
-    }),
-
-    // fragment stitching over a deterministic split of the corpus (the
-    // q151 synthesize→recover round-trip pattern: every 5th doc ships
-    // as two fragments with a 5-token deliberate overlap — paginated-
-    // scrape shape — and the stitcher must re-find every cut point;
-    // coincidental boundary matches surface honestly as key matches)
-    "q161_fragment_stitch" -> ((s, d) => {
-      val toksOf = TextAnalysis.tokens(col("text"))
-      val base = Tables.documents(s, d).filter(col("text").isNotNull)
-        .select(col("doc_id"), col("text"),
-          size(toksOf).cast(org.apache.spark.sql.types.LongType).as("__n"))
-      val isSplit = col("doc_id") % 5 === 0 && col("__n") >= 12
-      val fragA = base.filter(isSplit).select(
-        (col("doc_id") * 10).as("frag_id"),
-        concat_ws(" ", slice(toksOf, lit(1),
-          (expr("__n div 2") + 5).cast("int"))).as("text"))
-      val fragB = base.filter(isSplit).select(
-        (col("doc_id") * 10 + 1).as("frag_id"),
-        concat_ws(" ", slice(toksOf, (expr("__n div 2") + 1).cast("int"),
-          col("__n").cast("int"))).as("text"))
-      val whole = base.filter(!isSplit)
-        .select((col("doc_id") * 10).as("frag_id"), col("text"))
-      Dedup.stitchFragments(fragA.union(fragB).union(whole),
-        "frag_id", col("text"), k = 5)
-    }),
-
-    // C4 line-level structural cleaning (Raffel 2020 §2.2's line
-    // rules). The corpus has no newlines or punctuation, so page
-    // structure is spiked deterministically: a period+newline every 6
-    // words makes well-formed lines (the trailing partial line lacks
-    // terminal punctuation and is struck — the punctuation rule fires
-    // on every doc), docs on the %19 stratum keep their original
-    // single unpunctuated line (short_page fires), and junk lines are
-    // appended by stratum — lorem-ipsum (%13) and curly-brace (%17)
-    // pages drop whole, javascript banner lines (%11) and 2-word
-    // lines (%7) are struck line-level. Every rule provably fires
-    // both ways; when-chain order mirrors the oracle CASE order.
-    "q162_line_clean" -> ((s, d) => {
-      val structured = when(col("doc_id") % 19 === 0, col("text"))
-        .otherwise(regexp_replace(col("text"),
-          "((?:\\S+ ){5}\\S+) ", "$1.\n"))
-      val junk = when(col("doc_id") % 13 === 0,
-          lit("\nlorem ipsum dolor sit amet."))
-        .when(col("doc_id") % 17 === 0, lit("\nfunction() { return x; }"))
-        .when(col("doc_id") % 11 === 0,
-          lit("\nplease enable javascript to view this content."))
-        .when(col("doc_id") % 7 === 0, lit("\nshort line."))
-        .otherwise(lit(""))
-      TextAnalysis.lineClean(Tables.documents(s, d), "doc_id",
-        concat(structured, junk))
-    }),
-
-    // Heaps-law vocabulary-growth curve over 3-shingle TYPES — the
-    // corpus-saturation diagnostic (probed: shingle types grow with a
-    // real sublinear bend, beta ~0.85 at sf0.01 / ~0.74 at sf0.1, where
-    // WORD vocabulary saturates at 31 by doc 16 and would be vacuous)
-    "q159_heaps_law" -> ((s, d) =>
-      TextAnalysis.heapsLaw(Tables.documents(s, d), "doc_id", col("text"))),
-
-    // exact set-similarity SELF-join by prefix filtering (AllPairs /
-    // PPJoin family): no false negatives, unlike the MinHash/SimHash
-    // tier. Probed at sf0.01: 116 candidates of 124,750 possible pairs
-    // (the rare-token prefix equi-join prunes ~1000x), 25 verified at
-    // tau=0.6 — both the candidate filter AND the exact-Jaccard verify
-    // step provably fire
-    "q158_setsim_join" -> ((s, d) =>
-      Dedup.prefixFilterJoin(Tables.documents(s, d), "doc_id",
-        col("text"), tauPct = 60)),
-
-    // benchmark decontamination: every 7th doc plays the eval set; the
-    // rest of the corpus is checked for shared 5-shingles. Modulus
-    // chosen so the overlap join provably fires on the corpus (12
-    // contaminated docs / 636 shingle hits at sf0.01 — probed, not
-    // assumed; %97 gave a single hit, too weak to catch a broken join)
-    "q58_decontaminate" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      Dedup.decontaminate(
-        docs.filter(col("doc_id") % 7 =!= 0), "doc_id", col("text"),
-        docs.filter(col("doc_id") % 7 === 0), col("text"), MinhashK)
-    }),
-
-    // trained-quantizer IVF ANN (seeded k-means centroids through the
-    // ivfKnnWith seam). The k-means FIT is not SQL-expressible, but
-    // everything after the centroids is: the builder captures the
-    // <= IvfCells trained centroids (a model artifact, driver-local by
-    // construction) and the oracle injects them as a VALUES CTE — the
-    // same shape of side-channel as the injected wall-clock literals —
-    // so the assignment + top-k is fully hash-checked like q50's.
-    // Result quality is additionally spec-gated (SimilaritySpec:
-    // trained recall >= stride-anchor recall vs brute force).
-    "q60_ivf_trained" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val cents = Similarity.trainIvfCentroids(emb, IvfCells, maxIter = 5)
-      q60Centroids = Some(cents)
-      val sess = s
-      import sess.implicits._
-      Similarity.ivfKnnWith(
-        cents.toDF("cell_id", "anchor"),
-        emb, emb.filter(col("vec_id") < 5), 10, nProbe = IvfProbe)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"),
-          col("rank").cast(LongType).as("knn_rank"))
-    }),
-
-    // distributed PCA, part 1 — the fused-moment covariance pass: ONE
-    // corpus scan expands each embedding into d first + d(d+1)/2 pair
-    // moments, hash-aggregated as exact fixed-point longs (map-side
-    // partials keep the shuffle O(d²) per task at any corpus size).
-    // Fully SQL-checkable with no injection: this gate covers the
-    // numeric input the eigensolve consumes.
-    "q153_pca_cov" -> ((s, d) =>
-      Pca.covarianceUT(Pca.moments(Tables.embeddings(s, d), "embedding", 64))),
-
-    // distributed PCA, part 2 — end-to-end: driver fit from the bounded
-    // moment table (Jacobi eigensolve; the k-means-fit precedent), then
-    // a distributed projection onto the top 4 components as a pure map
-    // (model as literal arrays), aggregated per label via exact
-    // nano-fixed-point sums. The captured model is injected into the
-    // oracle (q60's centroid mechanism), so projection + aggregation
-    // are fully hash-checked.
-    "q154_pca_project" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val model = Pca.fit(
-        Pca.moments(emb, "embedding", 64).collect().toSeq, 64)
-      q154Model = Some(model)
-      val proj = Pca.project(emb, "embedding", model.mean,
-        model.eigenvectors.take(4))
-      val fps = proj.select(col("label") +: (1 to 4).map(k =>
-        floor(col(s"pc$k") * lit(1e9) + lit(0.5)).cast(LongType)
-          .as(s"__fp$k")): _*)
-      val agg = fps.groupBy("label").agg(count(lit(1)).as("n_vecs"),
-        (1 to 4).map(k => sum(col(s"__fp$k")).as(s"__s$k")): _*)
-      agg.select(col("label") +: col("n_vecs") +: (1 to 4).map(k =>
-        ((col(s"__s$k").cast("double") / lit(1e9)) /
-          col("n_vecs").cast("double")).as(s"mean_pc$k")): _*)
-    }),
-
-    // distributed PCA, part 3 — embedding-space outlier mining: the
-    // approximate Mahalanobis distance Σ_k pc_k²/λ_k over the top-8
-    // components (the curation step that drops noise/contamination
-    // vectors before semantic dedup). Same fit, then a pure-map score
-    // and the bounded two-phase global top-k — no window, no global
-    // sort; exact micro fixed-point crosses the engine boundary.
-    "q155_mahalanobis" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val model = Pca.fit(
-        Pca.moments(emb, "embedding", 64).collect().toSeq, 64)
-      q155Model = Some(model)
-      val proj = Pca.project(emb, "embedding", model.mean,
-        model.eigenvectors.take(8))
-      val md = (1 to 8).map(k =>
-        (col(s"pc$k") * col(s"pc$k")) / lit(model.eigenvalues(k - 1)))
-        .reduce(_ + _)
-      val scored = proj.select(col("vec_id"),
-        floor(md * lit(1e6) + lit(0.5)).cast(LongType).as("md_micro"))
-      Relational.topKPerGroup(scored, Seq.empty, col("md_micro"),
-        col("vec_id"), 20)
-        .select(col("id").as("vec_id"),
-          col("score").cast(LongType).as("md_micro"),
-          col("rank").cast(LongType).as("out_rank"))
-    }),
-
-    // per-language top-quality docs: the grouped bounded top-k through
-    // the same aggregate the ANN tier uses (data-mixing / curation pick)
-    "q65_top_quality_docs" -> ((s, d) => {
-      val q = TextAnalysis.qualityFeatures(wide(Tables.documents(s, d)), col("text"))
-        // aggregate semantics: unscoreable (null-quality) docs are out of
-        // the ranking on BOTH sides — TopKByScore skips null scores, and
-        // the oracle filters them before its window, so the contracts
-        // agree even on a corpus with null text
-        .filter(col("quality_score").isNotNull)
-      Relational.topKPerGroup(q, Seq("lang"), col("quality_score"), col("doc_id"), 3)
-        .select(col("lang"), col("id").as("doc_id"),
-          col("score").as("quality_score"), col("rank").cast(LongType).as("q_rank"))
-    }),
-
-    // adjacent-bigram PMI (collocation mining / tokenizer prep)
-    "q66_bigram_pmi" -> ((s, d) =>
-      TextAnalysis.bigramPmi(Tables.documents(s, d), "doc_id", col("text"),
-        minCount = 2)),
-
-    // per-doc character entropy (gibberish/boilerplate signal);
-    // deterministic sorted-histogram fold for engine parity
-    "q67_char_entropy" -> ((s, d) =>
-      TextAnalysis.charEntropy(Tables.documents(s, d), "doc_id", col("text"))),
-
-    // gap-based batch sessionization over the events stream table
-    // (30-minute gap; epoch-microsecond longs cross engines exactly)
-    "q63_sessions" -> ((s, d) =>
-      Temporal.sessionize(Tables.events(s, d), "user_id", "ts", "event_id", 1800)),
-
-    // the hot-key-safe variant: per-event work salted by (user, day),
-    // boundary sessions merged from mini-session summaries. Same
-    // semantics as q63 BY CONSTRUCTION — the oracle is q63's SQL
-    // verbatim, so the hash gate proves salting changes nothing on the
-    // real corpus
-    "q68_sessions_salted" -> ((s, d) =>
-      Temporal.sessionizeSalted(Tables.events(s, d), "user_id", "ts",
-        "event_id", 1800, saltDays = 1)),
-
-    // RefinedWeb-style segment-frequency dedup: 5-word windows present
-    // in >= 3 distinct docs are boilerplate, struck from every doc;
-    // docs rebuild from surviving segments (empty string when nothing
-    // survives). Thresholds probed against the corpus: 35 segments hit
-    // df >= 3 at sf0.01, so the filter provably fires.
-    "q69_segment_dedup" -> ((s, d) =>
-      Dedup.segmentDedup(Tables.documents(s, d), "doc_id", col("text"),
-        segWords = 5, maxDocFreq = 3)),
-
-    // concat-and-chunk sequence packing: global token offsets in doc_id
-    // order, cut into 512-token context windows. Two-level cumsum (range
-    // shards + broadcast shard prefixes) — never a global one-task
-    // window; the oracle's single SUM() OVER (ORDER BY doc_id) is the
-    // semantic contract the sharded form must reproduce exactly.
-    "q70_pack_offsets" -> ((s, d) =>
-      TextAnalysis.packOffsets(Tables.documents(s, d), "doc_id", col("text"),
-        contextTokens = 512, shardSize = 100L)),
-
-    // per-vector symmetric int8 quantization digest (scale, L1, min/max,
-    // reconstruction RMSE) — the ANN-index compression path
-    "q71_quantize_int8" -> ((s, d) =>
-      Similarity.quantizeInt8(wide(Tables.embeddings(s, d)), "vec_id")),
-
-    // greedy no-split packing (the SFT layout): 128-token bins, greedy
-    // state confined to 100-id range shards. The oracle replays the
-    // same greedy fold as a per-shard recursive CTE.
-    "q72_pack_greedy" -> ((s, d) =>
-      TextAnalysis.packGreedy(Tables.documents(s, d), "doc_id", col("text"),
-        capacity = 128, shardSize = 100L)),
-
-    // temperature-0.5 mixture sampling over the skewed lang strata
-    // (en 218 / fr 64 at sf0.01): rare languages upsample, the overall
-    // take lands near 50%
-    "q73_mixture_sample" -> ((s, d) =>
-      TextAnalysis.mixtureSample(Tables.documents(s, d), col("lang"),
-        col("doc_id"), targetFraction = 0.5)
-        .select("doc_id", "lang")),
-
-    // self-trained bigram-LM mean log-probability per doc (the
-    // KenLM-style quality proxy)
-    "q74_bigram_lm" -> ((s, d) =>
-      TextAnalysis.bigramLmScore(Tables.documents(s, d), "doc_id",
-        col("text"))),
-
-    // hybrid retrieval: lexical term-overlap top-100 + vector top-100
-    // from doc 0's embedding, fused by reciprocal rank (K=60), top-20
-    "q75_rrf_fusion" -> ((s, d) =>
-      Similarity.rrfFusion(Tables.documents(s, d), "doc_id", col("text"),
-        Tables.embeddings(s, d), RrfTerms, queryVecId = 0L)),
-
-    // per-customer trailing-7-day order features: RANGE frame over epoch
-    // micros — one exchange + a two-pointer sliding frame, never the
-    // O(n·w) self-range-join formulation. Money as long cents through
-    // the frame, shifted back exactly (the q13 contract).
-    "q76_rolling_spend" -> ((s, d) =>
-      Temporal.rollingWindow(
-        Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
-          col("o_orderdate"), cents(col("o_totalprice")).as("__cents")),
-        "o_custkey", "o_orderdate", col("__cents"), 7L * 86400L)
-        .select(col("o_orderkey"), col("o_custkey"),
-          col("ts_us").as("order_us"),
-          col("rolling_cnt").as("n_orders_7d"),
-          fromCents(col("rolling_sum"), 2).as("spend_7d"))),
-
-    // CDC merge: a synthetic change batch (two update versions for
-    // overlapping keys + inserts at shifted keys) applied to orders with
-    // MERGE semantics — one union + one max_by hash aggregate, no join.
-    // The batch is derived deterministically from the corpus so both
-    // merge paths (update wins by version, insert lands) provably fire.
-    "q77_merge_upsert" -> ((s, d) => {
-      val t = Tables.orders(s, d)
-      val upd1 = t.filter(col("o_orderkey") % 10 === 0)
-        .withColumn("o_orderstatus", lit("R"))
-        .withColumn("o_totalprice", col("o_totalprice") * 1.05)
-        .withColumn("__v", lit(1L))
-      val upd2 = t.filter(col("o_orderkey") % 20 === 0)
-        .withColumn("o_orderstatus", lit("R2"))
-        .withColumn("o_totalprice", col("o_totalprice") * 1.10)
-        .withColumn("__v", lit(2L))
-      // insert keys shift by 1e10 — ABOVE every real orderkey at every
-      // corpus this runs on including the 10x rehearsal (ScaleUp ids
-      // < 2^31): the old +1e8 offset collided with replica-1's real
-      // keys at sf1 and manufactured (key, version) merge ties
-      val ins = t.filter(col("o_orderkey") % 97 === 0)
-        .withColumn("o_orderkey", col("o_orderkey") + 10000000000L)
-        .withColumn("o_orderstatus", lit("N"))
-        .withColumn("__v", lit(1L))
-      Relational.mergeUpsert(t, upd1.unionByName(upd2).unionByName(ins),
-          Seq("o_orderkey"), col("__v"))
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-          col("o_totalprice"),
-          date_format(col("o_orderdate"), "yyyy-MM-dd").as("orderdate"))
-    }),
-
-    // SemDeDup: cluster embeddings with the stride quantizer, drop
-    // in-cell vectors with a smaller-id twin above cosine 0.2; output
-    // the semantic-dedup survivor set with its cell assignment
-    "q78_semdedup" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val anchors = emb
-        .filter(pmod(col("vec_id"), lit(IvfStride)) === 0 &&
-          col("vec_id") < IvfStride * IvfCells)
-        .select(col("vec_id").as("cell_id"), col("embedding").as("anchor"))
-      Similarity.semDedup(anchors, emb, 0.2)
-    }),
-
-    // Bloom semi-join reduction: lineitem probed against a sketch of the
-    // selective orders subset before the join — identical result to the
-    // plain join (the oracle IS the plain join), smaller shuffle
-    "q79_bloom_join" -> ((s, d) => {
-      val dim = Tables.orders(s, d)
-        .filter(col("o_orderpriority") === "1-URGENT" &&
-          col("o_totalprice") > 400000.0)
-        .select(col("o_orderkey").as("ok"), col("o_totalprice"))
-      Bloom.prefilterJoin(Tables.lineitem(s, d), dim, "l_orderkey", "ok",
-          expectedKeys = 20000L)
-        .select(col("l_orderkey"),
-          col("l_linenumber").cast(LongType).as("l_linenumber"),
-          col("l_quantity"), col("o_totalprice"))
-    }),
-
-    // incremental aggregate maintenance: per-customer rollup computed as
-    // base-partition aggregate + delta-partition aggregate MERGED by the
-    // re-aggregation algebra (sum-of-sums / sum-of-counts / max-of-maxes)
-    // — the oracle recomputes from raw rows, so the hash gate proves the
-    // merge is exact. At 100 TB the base partial is a persisted artifact;
-    // only the delta touches raw data.
-    "q80_incremental_agg" -> ((s, d) => {
-      val o = Tables.orders(s, d)
-      val cut = lit(ts("1997-01-01 00:00:00"))
-      def partial(df: org.apache.spark.sql.DataFrame) =
-        df.groupBy("o_custkey").agg(
-          count(lit(1)).as("n_orders"),
-          sum(cents(col("o_totalprice"))).as("__cents"),
-          max(col("o_orderdate")).as("__last"))
-      Relational.mergePartialAggs(
-          Seq(partial(o.filter(col("o_orderdate") < cut)),
-            partial(o.filter(col("o_orderdate") >= cut))),
-          Seq("o_custkey"),
-          sumCols = Seq("n_orders", "__cents"), maxCols = Seq("__last"))
-        .select(col("o_custkey"), col("n_orders"),
-          fromCents(col("__cents"), 2).as("total_spend"),
-          date_format(col("__last"), "yyyy-MM-dd").as("last_order"))
-    }),
-
-    // ordered conversion funnel over the event stream: first view, first
-    // click after it, first purchase after that — per-step slice
-    // aggregates + per-user frontier joins, never a whole-history sort
-    "q81_funnel" -> ((s, d) =>
-      Temporal.funnel(Tables.events(s, d), "user_id", "ts", "event_type",
-        Seq("view", "click", "purchase"))),
-
-    // per-source fixed-size deterministic sample (reservoir-style, but
-    // reproducible): rank by a pure key hash through the bounded
-    // two-phase top-k — balanced k-per-stratum without a corpus sort
-    "q82_reservoir" -> ((s, d) =>
-      Relational.topKPerGroup(
-        Tables.documents(s, d).withColumn("__score",
-          (Hashing.hexLong(concat(lit("rsv:"), col("doc_id")))
-            % lit(1099511627776L)).cast("double")),
-        Seq("source"), col("__score"), col("doc_id"), 5)
-        .select(col("source"), col("id").as("doc_id"),
-          col("rank").cast(LongType).as("sample_rank"))),
-
-    // declarative data-quality gate: five expectations over orders in
-    // ONE conditional-aggregation pass (the price cap provably fires on
-    // this corpus — ~4% of orders exceed it)
-    "q83_expectations" -> ((s, d) =>
-      Quality.expectations(Tables.orders(s, d), Seq(
-        "price_nonneg" -> (col("o_totalprice") >= 0.0),
-        "price_below_cap" -> (col("o_totalprice") < 450000.0),
-        "status_domain" -> col("o_orderstatus").isin("O", "F", "P"),
-        "date_in_window" ->
-          (col("o_orderdate") >= lit(ts("1992-01-01 00:00:00")) &&
-            col("o_orderdate") < lit(ts("1999-01-01 00:00:00"))),
-        "custkey_present" -> col("o_custkey").isNotNull))),
-
-    // unpivot: the four lineitem measures to long form — one Expand
-    // pass, no shuffle (the inverse of q47's pivot)
-    "q88_unpivot" -> ((s, d) =>
-      Relational.melt(Tables.lineitem(s, d),
-          Seq("l_orderkey", "l_linenumber"),
-          Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
-        .select(col("l_orderkey"),
-          col("l_linenumber").cast(LongType).as("l_linenumber"),
-          col("metric"), col("value"))),
-
-    // blocked fuzzy match: part names within edit distance 2, compared
-    // only within a brand (plus the length band) — entity resolution
-    // without an all-pairs join
-    "q89_fuzzy_match" -> ((s, d) =>
-      Relational.fuzzySelfJoin(Tables.part(s, d), "p_partkey", "p_name",
-        Seq("p_brand"), maxDist = 2, maxCell = 2048)),
-
-    // weighted sample without replacement (A-ES exponential race):
-    // top-50 docs by the hash-derandomized race key, win probability
-    // proportional to n_chars — the length-weighted mixing draw
-    "q90_weighted_sample" -> ((s, d) =>
-      Relational.topKPerGroup(
-        Tables.documents(s, d).withColumn("__score",
-          TextAnalysis.weightedSampleScore(col("doc_id"), col("n_chars")))
-          .withColumn("__g", lit(0L)),
-        Seq("__g"), col("__score"), col("doc_id"), 50)
-        // + 0.0 folds IEEE -0.0 to +0.0 (exact for every other value):
-        // DuckDB's round keeps the sign of a tiny negative, Spark's
-        // BigDecimal path drops it — normalize on BOTH sides
-        .select(col("id").as("doc_id"),
-          (round(col("score"), 6) + lit(0.0)).as("w_score"),
-          col("rank").cast(LongType).as("sample_rank"))),
-
-    // linear-counting distinct sketch: per-event-type distinct users
-    // with shuffle state bounded by 4096 registers, not one row per
-    // distinct user — the COUNT(DISTINCT) that survives 100 TB
-    "q91_lc_distinct" -> ((s, d) =>
-      Sketches.linearCountDistinct(Tables.events(s, d), Seq("event_type"),
-        col("user_id"), m = 4096)),
-
-    // count-min sketch point estimates over the bigram stream: a 4×256
-    // counter matrix answers every frequency query; n_true rides along
-    // so the (one-sided) overestimate is auditable
-    "q92_cms_bigrams" -> ((s, d) =>
-      Sketches.countMinEstimates(
-        wide(Tables.documents(s, d).select(col("text")))
-          .select(TextAnalysis.tokens(col("text")).as("__toks"))
-          .select(explode(
-            TextAnalysis.bigramsFromTokens(col("__toks"))).as("bigram")),
-        "bigram", d = 4, w = 256)),
-
-    // HyperLogLog distinct sketch (m=64): same question as q91 at 64
-    // registers of state — exact-integer harmonic sum, small-range
-    // linear-counting correction
-    "q93_hll_distinct" -> ((s, d) =>
-      Sketches.hllDistinct(Tables.events(s, d), Seq("event_type"),
-        col("user_id"))),
-
-    // cardinality-sketch accuracy audit: the q93 HLL estimator
-    // reconciled against exact count-distinct per DAY — the grouping
-    // where true active-user cardinality actually varies (per
-    // event_type every group sees the same 150-user set, a degenerate
-    // audit) — signed rel err + the published 3σ = 0.39 flag at m = 64
-    // (reported, not enforced; the q214 discipline for the cardinality
-    // tier — CMS q92 carries n_true by construction). Probed at
-    // sf0.01: 30 days, 14 distinct true cardinalities, errs spread
-    // −0.182..+0.081 — genuinely nonzero, all inside 3σ
-    "q217_hll_accuracy" -> ((s, d) =>
-      Sketches.hllAccuracyAudit(
-        Tables.events(s, d).withColumn("day",
-          date_format(date_trunc("day", col("ts")), "yyyy-MM-dd")),
-        Seq("day"), col("user_id"))),
-
-    // interval merge (islands): per-supplier coverage windows over the
-    // open-order ranges [o_orderdate, l_shipdate] of heavy line items —
-    // ranges union on overlap, unlike q63's gap-split point events
-    "q94_interval_merge" -> ((s, d) => {
-      val li = Tables.lineitem(s, d).filter(col("l_quantity") >= 50)
-        .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
-      val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_orderdate"))
-      val iv = li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .filter(col("l_shipdate") >= col("o_orderdate"))
-        .select(col("l_suppkey"), col("o_orderdate").as("iv_s"),
-          col("l_shipdate").as("iv_e"))
-      Temporal.mergeIntervals(iv, "l_suppkey", "iv_s", "iv_e")
-        .select(col("l_suppkey"), col("island"),
-          date_format(col("window_start"), "yyyy-MM-dd").as("window_start"),
-          date_format(col("window_end"), "yyyy-MM-dd").as("window_end"),
-          col("n_intervals"))
-    }),
-
-    // fixed-grid resample with forward fill (LOCF): per-user value state
-    // on a 6-hour grid — heavy work is one (user, bucket) hash agg; the
-    // grid/join/fill stages see only bucket summaries
-    "q95_resample_locf" -> ((s, d) =>
-      Temporal.resampleLocf(Tables.events(s, d), "user_id", "ts",
-        col("value"), "event_id", 21600L)),
-
-    // robust outlier profile: median/MAD fence per event type — the
-    // same bits in both engines end-to-end, so even the fence
-    // comparisons hash-match without a rounding tolerance
-    "q96_mad_outliers" -> ((s, d) =>
-      Quantiles.madOutliers(Tables.events(s, d), Seq("event_type"),
-        col("value"), k = 3.0)
-        .select(col("event_type"), round(col("med"), 6).as("med"),
-          round(col("mad"), 6).as("mad"), col("n_rows"),
-          col("n_outliers"))),
-
-    // chi-square association between document language and source —
-    // corpus crosses one hash agg; margins re-aggregate the tiny cell
-    // table and broadcast back
-    "q97_chi_square" -> ((s, d) =>
-      Quantiles.chiSquare(Tables.documents(s, d), "lang", "source")
-        .select(col("lang"), col("source"), col("n"),
-          round(col("expected"), 6).as("expected"),
-          round(col("chi2_cell"), 6).as("chi2_cell"))),
-
-    // stratified weighted sampling: q90's A-ES race run per language —
-    // rare strata keep their own top-k instead of being outdrawn
-    "q98_weighted_sample_strat" -> ((s, d) =>
-      Relational.topKPerGroup(
-        Tables.documents(s, d).withColumn("__score",
-          TextAnalysis.weightedSampleScore(col("doc_id"), col("n_chars"))),
-        Seq("lang"), col("__score"), col("doc_id"), 10)
-        .select(col("lang"), col("id").as("doc_id"),
-          (round(col("score"), 6) + lit(0.0)).as("w_score"),
-          col("rank").cast(LongType).as("sample_rank"))),
-
-    // skip-gram PMI (forward window 3): collocations beyond adjacency —
-    // per-row pair HOF, one corpus agg, vocab^2-bounded margins
-    "q99_skipgram_pmi" -> ((s, d) =>
-      TextAnalysis.skipgramPmi(Tables.documents(s, d), col("text"),
-        window = 3, minCount = 2)),
-
-    // vocabulary coverage curve: top-k tokens covering 50/90/99% of
-    // occurrences — exact-integer crossing test, vocab-bounded window
-    "q100_vocab_coverage" -> ((s, d) =>
-      TextAnalysis.vocabCoverage(Tables.documents(s, d), col("text"),
-        Seq(50, 90, 99))),
-
-    // overlapping token chunks (width 40, stride 30 — 10-token overlap):
-    // the RAG/pretraining windowing pass, one row per chunk, pure narrow
-    "q101_chunk_overlap" -> ((s, d) =>
-      TextAnalysis.chunkTokens(Tables.documents(s, d), "doc_id",
-        col("text"), width = 40, stride = 30)),
-
-    // per-source quota cap (at most 3 docs per source, hash-chosen):
-    // the per-domain curation cap, bounded two-phase top-k — no window
-    "q102_domain_quota" -> ((s, d) =>
-      Relational.quotaCap(Tables.documents(s, d), Seq("source"),
-        col("doc_id"), quota = 3)
-        .select(col("source"), col("id").as("doc_id"), col("pick_rank"))),
-
-    // Gopher repetition rules (Rae et al. 2021 Table A1): duplicate /
-    // top n-gram character fractions per doc for n = 2, 3 — the
-    // repetition quality gate beyond q38's unigram stats. The corpus'
-    // 31-token vocabulary makes duplicate bigrams (and some trigrams)
-    // provably present, so both fractions fire.
-    "q103_gopher_rep" -> ((s, d) =>
-      TextAnalysis.gopherRepetition(Tables.documents(s, d), "doc_id",
-        col("text"), Seq(2, 3))
-        .select(col("doc").as("doc_id"), col("n_chars"),
-          col("top2gram_frac"), col("dup2gram_frac"),
-          col("top3gram_frac"), col("dup3gram_frac"))),
-
-    // Jensen–Shannon divergence between per-source token distributions
-    // (the corpus-drift statistic behind mixture re-weighting).
-    // vocabTop = 20 BINDS on the 31-token corpus vocabulary, so the
-    // bounded-support path is what the gate checks, not a no-op cap.
-    "q105_source_jsd" -> ((s, d) =>
-      TextAnalysis.sourceJsd(Tables.documents(s, d), "source", col("text"),
-        vocabTop = 20)),
-
-    // word2vec negative-sampling table: unigram^0.75 draw weights in
-    // exact integer milli-units (order-independent normalizer), shares
-    // against the integer total
-    "q108_neg_sampling" -> ((s, d) =>
-      TextAnalysis.negativeSamplingWeights(Tables.documents(s, d),
-        col("text"), topK = 50)),
-
-    // percentile winsorization of event values per type: p05/p95 fences
-    // from the histogram-selection quantile pass, broadcast back, clamp
-    // in one narrow map — outlier clipping before feature scaling
-    "q109_winsorize" -> ((s, d) =>
-      Quantiles.winsorize(Tables.events(s, d), Seq("event_type"),
-        col("value"), "event_id", 0.05, 0.95, width = 1.0)
-        .select(col("id").as("event_id"), col("event_type"), col("value"),
-          col("value_clipped"), col("is_clipped"))),
-
-    // cohort retention matrix: users cohorted by first-activity day,
-    // cells count actives at each day offset — the corpus collapses to
-    // the distinct (user, day) table before anything else touches it
-    "q110_cohort_retention" -> ((s, d) =>
-      Temporal.cohortRetention(Tables.events(s, d), "user_id", "ts",
-        bucketDays = 1)),
-
-    // per-node triangle counts on the (undirected) co-purchase graph —
-    // compact-forward degree ordering caps wedge fan-out at sqrt(m);
-    // the oracle's naive id-ordering must count identically
-    "q111_triangles" -> ((s, d) => {
-      // undirected co-purchase pairs from the shared per-order builder
-      // (round 14: one widened orderkey exchange + the lazy pair
-      // generator — no broadcast self-join, no second lineitem scan);
-      // the operator canonicalizes (a < b) itself, so the unordered
-      // x < y pair form is the exact same edge set
-      Graph.triangleCounts(coPurchasePairs(s, d), "__x", "__y")
-        .select(col("node").as("l_partkey"), col("degree"),
-          col("n_triangles"))
-    }),
-
-    // truncated EWMA (decay 1/2, 16-observation horizon) of event value
-    // per user — exact integer numerator/denominator, one division
-    "q115_ewma" -> ((s, d) =>
-      Temporal.ewmaSmooth(Tables.events(s, d), "user_id", "ts",
-        "event_id", col("value"), horizon = 16)),
-
-    // Theil-Sen robust per-user value trend: lower median of all
-    // pairwise slopes (micro-units/second), maxEvents=128 state cap,
-    // same-timestamp pairs excluded. Probed at sf0.01: 150 users,
-    // 26 distinct slope values with both signs present (66 up / 73
-    // down / 11 flat) - the estimator genuinely discriminates drift
-    // direction
-    "q175_theilsen" -> ((s, d) =>
-      Temporal.theilSenTrend(Tables.events(s, d), "user_id", "ts",
-        "event_id", col("value"))),
-
-    // graded retrieval eval: nDCG@10 + MRR of the 16-dim truncated
-    // ranking against full-dim relevance bands — the ranking-quality
-    // metrics next to q147's set recall (thresholds probed at sf0.01:
-    // every band fires, 2 queries have zero grade-3 docs)
-    "q176_ndcg" -> ((s, d) =>
-      Similarity.ndcgEval(Tables.embeddings(s, d),
-        col("vec_id") < 30, k = 10, truncDim = 16,
-        t1 = 180000L, t2 = 250000L, t3 = 320000L)),
-
-    // mergeable relative-error quantile sketch (DDSketch, binary
-    // flavor): O(#buckets) state per group where q41's exact path
-    // carries the data — the 100 TB quantile primitive
-    "q177_ddsketch" -> ((s, d) =>
-      Sketches.ddsketchQuantiles(
-        Tables.lineitem(s, d).withColumn("__cents",
-          expr("cast(floor(l_extendedprice * 100 + 0.5) as bigint)")),
-        Seq("l_returnflag"), col("__cents"), subBits = 6,
-        qMicros = Seq(500000L, 900000L, 990000L))),
-
-    // additive seasonal decomposition of daily event revenue
-    // (value = trend + seasonal + residual): centered 7-row MA trend,
-    // per-phase LOWER-MEDIAN seasonal (robust: one outlier day cannot
-    // drag its phase-mates — round 12), the weekly-rhythm separator the
-    // monitoring tier (EWMA/CUSUM/Mann–Kendall) runs AFTER so weekends
-    // stop refiring the detectors. Weekend cents are doubled in the
-    // query so the seasonal component carries real planted signal
-    "q219_seasonal_decomp" -> ((s, d) =>
-      Temporal.seasonalDecompose(Tables.events(s, d), col("ts"),
-        when(dayofweek(col("ts")).isin(1, 7),
-          expr("cast(floor(value * 100 + 0.5) as bigint)") * 2L)
-          .otherwise(expr("cast(floor(value * 100 + 0.5) as bigint)")),
-        period = 7)),
-
-    // residual anomaly days — q219's payoff: the q96 median/MAD fence
-    // on the RESIDUAL after rhythm+trend are explained away, so the
-    // doubled weekends do NOT refire while one planted ×5 day does.
-    // Probed at sf0.01 after the round-12 robust (lower-median)
-    // seasonal (24 fenced days): the planted 2024-01-17 flags, all 7
-    // weekend-phase days stay quiet, and the spike's phase-mates
-    // (01-10, 01-24) are now QUIET too — the median removed the
-    // phase-leak the round-11 per-phase mean admitted. The remaining
-    // flags (01-15/16/18/19) are exactly the spike's ±3-day centered
-    // MA window, whose inflated trend is inherent to classical MA
-    // decomposition (STL's iterated robustness weights are the
-    // published fix): the contamination footprint is now localized to
-    // the trend window only
-    "q220_seasonal_anomaly" -> ((s, d) => {
-      val cents = expr("cast(floor(value * 100 + 0.5) as bigint)")
-      val weekend = when(dayofweek(col("ts")).isin(1, 7), cents * 2L)
-        .otherwise(cents)
-      val spiked = when(date_format(date_trunc("day", col("ts")),
-          "yyyy-MM-dd") === "2024-01-17", weekend * 5L)
-        .otherwise(weekend)
-      Temporal.seasonalAnomalies(Tables.events(s, d), col("ts"), spiked,
-        period = 7, k = 3.0)
-    }),
-
-    // priority sampling with Horvitz–Thompson adjusted weights — the
-    // sample that answers subset-SUM queries (DLT 2007): exactly k=100
-    // orders drawn by the derandomized w/u priority race, each carrying
-    // ŵ = max(w, τ); Σŵ over any subset unbiasedly estimates that
-    // subset's true total-price mass. Probed at sf0.01: Σŵ estimates
-    // the 15k-order corpus total within +7.3% (inside the ~1/√(k−1)
-    // ≈ 10% one-realization band)
-    "q218_priority_sample" -> ((s, d) =>
-      Relational.prioritySample(Tables.orders(s, d), col("o_orderkey"),
-        expr("cast(floor(o_totalprice * 100 + 0.5) as bigint)"),
-        k = 100)),
-
-    // exact φ-heavy hitters per source: Misra–Gries candidates (O(k)
-    // state per group, mergeable, guaranteed superset of every item at
-    // ⌈n·φ⌉) + exact candidate-only rescore — the deterministic top-k
-    // primitive whose first pass never materializes the (group, item)
-    // frequency table; φ = 0.2% → k = 501 counters
-    "q215_heavy_hitters" -> ((s, d) =>
-      Sketches.heavyHitters(
-        wide(Tables.documents(s, d)).filter(col("text").isNotNull)
-          .select(col("source"),
-            explode(TextAnalysis.tokens(col("text"))).as("tok")),
-        Seq("source"), col("tok"), phiMicro = 2000L)),
-
-    // sketch-accuracy audit: q177's DDSketch estimates reconciled
-    // against the exact nearest-rank statistics (distinct-value-table
-    // selection) — measured relative error + the containment guarantee
-    // (exact value inside the answer bucket) per (group, quantile);
-    // the q206/q208 audit discipline applied to the quantile tier
-    "q214_sketch_accuracy" -> ((s, d) =>
-      Sketches.ddsketchAccuracyAudit(
-        Tables.lineitem(s, d).withColumn("__cents",
-          expr("cast(floor(l_extendedprice * 100 + 0.5) as bigint)")),
-        Seq("l_returnflag"), col("__cents"), subBits = 6,
-        qMicros = Seq(500000L, 900000L, 990000L))),
-
-    // Flesch-Kincaid grade + reading ease over the period-spiked corpus
-    // (q149's sentence spike): the classic surface-readability pair
-    "q178_readability" -> ((s, d) =>
-      TextAnalysis.readability(Tables.documents(s, d), "doc_id",
-        regexp_replace(col("text"), "((?:\\S+ ){7}\\S+) ", "$1. "))),
-
-    // CUSUM changepoint score: max excursion of the mean-centered
-    // prefix walk per user, plus the peak position — level-shift
-    // detection next to q175's robust trend
-    "q179_cusum" -> ((s, d) =>
-      Temporal.cusumExcursion(Tables.events(s, d), "user_id", "ts",
-        "event_id", expr("cast(floor(value * 100 + 0.5) as bigint)"))),
-
-    // Mann-Kendall S + Kendall tau: "is there a monotonic trend at
-    // all" — the significance companion to q175's Theil-Sen slope
-    "q180_mann_kendall" -> ((s, d) =>
-      Temporal.mannKendall(Tables.events(s, d), "user_id", "ts",
-        "event_id", expr("cast(floor(value * 100 + 0.5) as bigint)"))),
-
-    // pairwise HLL overlap: union by register max-merge, intersection
-    // by inclusion-exclusion — the sketch twin of q129's exact matrix.
-    // Slices = supplier shards; orders scatter across shards, so every
-    // pair has partial (not degenerate) order-set overlap
-    "q183_hll_overlap" -> ((s, d) =>
-      Sketches.hllOverlap(
-        Tables.lineitem(s, d)
-          .withColumn("shard", expr("l_suppkey % 8")),
-        "shard", col("l_orderkey"))),
-
-    // entity resolution: q89's blocked fuzzy pairs closed transitively
-    // into entities (the record-linkage end-game — pairs alone aren't
-    // entities), canonical = min member key, singletons filtered
-    "q195_entities" -> ((s, d) => {
-      val parts = Tables.part(s, d).select(col("p_partkey"), col("p_name"))
-      val pairs = Relational.fuzzySelfJoin(Tables.part(s, d), "p_partkey",
-          "p_name", Seq("p_brand"), maxDist = 2, maxCell = 2048)
-        .select(col("key_a").as("doc_a"), col("key_b").as("doc_b"))
-      Tables.part(s, d).select(col("p_partkey"))
-        .join(Dedup.connectedComponents(pairs),
-          col("p_partkey") === col("doc"), "left")
-        .withColumn("entity_id",
-          coalesce(col("component"), col("p_partkey")))
-        .groupBy("entity_id").agg(count(lit(1)).as("n_members"))
-        .join(parts.select(col("p_partkey").as("entity_id"),
-          col("p_name").as("canonical_name")), Seq("entity_id"))
-        .filter(col("n_members") >= 2L)
-    }),
-
-    // per-user least-squares drift: the classical estimator next to
-    // q175's Theil-Sen robust slope — the pair whose disagreement is
-    // itself an outlier signal
-    "q197_ols_trend" -> ((s, d) =>
-      Temporal.olsTrend(Tables.events(s, d), "user_id", "ts",
-        "event_id", expr("cast(floor(value * 100 + 0.5) as bigint)"))),
-
-    // trigram interpolated Kneser-Ney perplexity terciles — q150 one
-    // order up, the first order where the KN recursion actually CHAINS
-    // (trigram → continuation-count bigram → continuation unigram).
-    // q150's novel-script spike makes the unseen-PREFIX backoff
-    // (c12 = 0 → middle order) provably fire next to the
-    // discounted-seen and unseen-triple paths
-    "q201_interp_ppl_tri" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val spiked = when(!col("source").isin("src0", "src1") &&
-          col("doc_id") % 11 === 0,
-        concat(col("text"), lit(" cuneiform hieroglyph abjad")))
-        .otherwise(col("text"))
-      TextAnalysis.lmPerplexityBucketsTrigram(docs, "doc_id", spiked,
-        docs.filter(col("source").isin("src0", "src1")), col("text"))
-        .select(col("doc").as("doc_id"), col("n_triples"),
-          col("nll_micro"), col("mean_micro"), col("ppl_bucket"))
-    }),
-
-    // the training-shard writer composition — the actual deliverable of
-    // a training-data pipeline: tokenize → q70 concat-pack →
-    // deterministic shard-of-start assignment → per-shard manifest
-    // (doc count, token count, id range, q86-style XOR content
-    // checksum) that the oracle recomputes from the raw corpus
-    "q200_shard_manifest" -> ((s, d) =>
-      Warehouse.trainingShardManifest(Tables.documents(s, d), "doc_id",
-        col("text"), contextTokens = 512, shardTokens = 4096L)),
-
-    // 4-gram interpolated Kneser-Ney perplexity terciles — q201 one
-    // order up, three full backoff levels chained (4-gram →
-    // continuation trigram → continuation-of-continuation bigram →
-    // continuation unigram), B = 64 per the order-4 exact-long bound.
-    // Probed at sf0.01, ALL FIVE chain branches fire non-vacuously:
-    // 3,287 discounted-seen quads / 4,024 unseen-quad-seen-prefix /
-    // 17,698 unseen-prefix (→ continuation trigram) / 775
-    // unseen-(b2,b3)-context (→ continuation bigram) / 41 of those in
-    // b3 buckets the reference never produced (→ the add-one
-    // continuation unigram floor)
-    "q209_interp_ppl_quad" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val spiked = when(!col("source").isin("src0", "src1") &&
-          col("doc_id") % 11 === 0,
-        concat(col("text"), lit(" cuneiform hieroglyph abjad")))
-        .otherwise(col("text"))
-      TextAnalysis.lmPerplexityBucketsQuadgram(docs, "doc_id", spiked,
-        docs.filter(col("source").isin("src0", "src1")), col("text"),
-        buckets = 64)
-        .select(col("doc").as("doc_id"), col("n_quads"),
-          col("nll_micro"), col("mean_micro"), col("ppl_bucket"))
-    }),
-
-    // 5-gram interpolated Kneser-Ney perplexity terciles — the
-    // published CCNet filter order (Wenzek et al. 2020 use a 5-gram
-    // KenLM), closing the LM tier's order ceiling: FOUR full backoff
-    // levels chained (5-gram → continuation 4-gram → continuation
-    // trigram → continuation bigram → continuation unigram), B = 32
-    // per the order-5 exact-long bound. Spike appends FOUR novel
-    // tokens so boundary quints cross old→new text at every offset.
-    // Branch census at sf0.01 (probed): 3,055 discounted-seen quints /
-    // 557 unseen-quint-seen-prefix / 7,084 unseen-prefix (→
-    // continuation 4-gram) / 14,205 unseen-(b2,b3,b4) (→ continuation
-    // trigram) / 387 unseen-(b3,b4) (→ continuation bigram) / 41
-    // unseen-b4 (→ the add-one continuation-unigram floor) — ALL SIX
-    // chain levels carry mass non-vacuously
-    "q212_interp_ppl_quint" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val spiked = when(!col("source").isin("src0", "src1") &&
-          col("doc_id") % 11 === 0,
-        concat(col("text"),
-          lit(" cuneiform hieroglyph abjad syllabary")))
-        .otherwise(col("text"))
-      TextAnalysis.lmPerplexityBucketsQuintgram(docs, "doc_id", spiked,
-        docs.filter(col("source").isin("src0", "src1")), col("text"),
-        buckets = 32)
-        .select(col("doc").as("doc_id"), col("n_quints"),
-          col("nll_micro"), col("mean_micro"), col("ppl_bucket"))
-    }),
-
-    // image-content dedup, hash half: every doc's payload is a REAL
-    // PNG muxed from doc-id arithmetic (Multimodal.pngFixture — ids
-    // ≡ 1 mod 10 are planted near-dup twins of id−1), decoded back
-    // through javax.imageio, area-averaged to the 9×8 grid, and
-    // gradient-hashed from ACTUAL pixels; the oracle restates the
-    // block grid and the bit assembly as md5 arithmetic, so a flipped
-    // bit anywhere in mux, decode, resample, or hash mismatches — the
-    // q151 synthesize→recover pattern applied to pixels
-    "q198_image_dhash" -> ((s, d) => {
-      import s.implicits._
-      val payloads = wide(Tables.documents(s, d).select(col("doc_id")))
-        .as[Long]
-        .mapPartitions(_.map(id => (id, Multimodal.pngFixture(id))))
-        .toDF("doc_id", "payload")
-      Multimodal.imageDHashes(s, payloads, "doc_id")
-    }),
-
-    // image-content dedup, pair half (LAION-class): q49's pigeonhole
-    // banding machinery on pixel-derived bits — 4 × 16-bit bands,
-    // degenerate buckets capped, exact Hamming ≤ 3 fused into the
-    // bucket pair loop; the planted fixture twins fire, unrelated
-    // images sit ~32 bits apart
-    "q199_image_neardup" -> ((s, d) => {
-      import s.implicits._
-      val payloads = wide(Tables.documents(s, d).select(col("doc_id")))
-        .as[Long]
-        .mapPartitions(_.map(id => (id, Multimodal.pngFixture(id))))
-        .toDF("doc_id", "payload")
-      Multimodal.imageNearDup(s, payloads, "doc_id",
-        maxBucket = DefaultMaxBucket)
-        .select(col("doc_a"), col("doc_b"),
-          col("hamming").cast(LongType).as("hamming"))
-    }),
-
-    // Unicode-normalized exact dedup: "café" ships as precomposed
-    // U+00E9 AND decomposed e+U+0301 — identical on screen, distinct
-    // to a byte-level fingerprint (q28). The NFC key is
-    // content-addressed: per decade, docs ≡3 and ≡7 (mod 10) carry the
-    // SAME text in the two encodings and must collapse to ONE group —
-    // the multilingual-corpus correctness q28's key silently lacks
-    "q207_nfc_dedup" -> ((s, d) => {
-      val dec = expr("doc_id div 10").cast("string")
-      val spiked = when(col("doc_id") % 10 === 3,
-          concat(lit("Accent Family "), dec, lit(" caf"),
-            lit("e\u0301"), lit(" menu")))
-        .when(col("doc_id") % 10 === 7,
-          concat(lit("Accent Family "), dec, lit(" caf\u00e9 menu")))
-        .otherwise(col("text"))
-      Dedup.exact(
-        Tables.documents(s, d).select(col("doc_id"), spiked.as("text")),
-        "doc_id",
-        graft.functions.Native.nfcNormalize(lower(trim(col("text")))))
-    }),
-
-    // LSH recall/precision audit — the calibration check a production
-    // dedup pipeline ships next to its banding parameters: exact
-    // τ=0.8 truth (q158's PPJoin machinery at the MinHash shingle
-    // order) reconciled against the q29 banding candidates. The corpus
-    // is spiked with GRADED near-dup twins (doc_id%30 ∈ {1,11,21}:
-    // +2 tokens ≈ J .93, +n/5 junk ≈ J .83, half-replaced ≈ J .3) so
-    // the S-curve's head, shoulder, and tail all carry mass: recall
-    // and precision land strictly inside (0,1)
-    "q206_lsh_recall_audit" -> ((s, d) =>
-      Dedup.lshRecallAudit(gradedTwinSpike(s, d), "doc_id", col("text"),
-        tauPct = 80)),
-
-    // LSH banding operating-point sweep — the full (bands, rows) grid
-    // of the 16-permutation budget over the same graded-twin corpus
-    // and PPJoin τ=.8 truth as q206, one audit row per grid point.
-    // Probed at sf0.01: recall_micro climbs 433333 (b=1, r=16) → 750000
-    // (b=2) → 966666 (b=4) → 1000000 (b=8, b=16) — a 90% recall target
-    // is crossed between b=2 and b=4, grid points on BOTH sides
-    // (non-vacuous sweep) — while precision degrades 1000000 → 750000
-    // toward the r=1 corner exactly as the S-curve predicts
-    "q208_lsh_banding_sweep" -> ((s, d) =>
-      Dedup.lshBandingSweep(gradedTwinSpike(s, d), "doc_id", col("text"),
-        tauPct = 80, bandGrid = Seq(1, 2, 4, 8, 16), maxBucket = 2000)),
-
-    // audio-content dedup, hash half: every doc's payload is a REAL
-    // 16-bit PCM WAV muxed from doc-id arithmetic (Multimodal
-    // .wavFixture), decoded back through javax.sound.sampled, and
-    // envelope-hashed from ACTUAL samples — PCM normalization is the
-    // exact dyadic A/32768, so the oracle restates the 65-segment
-    // loudness contour without decoding anything
-    "q202_audio_envhash" -> ((s, d) => {
-      import s.implicits._
-      val payloads = wide(Tables.documents(s, d).select(col("doc_id")))
-        .as[Long]
-        .mapPartitions(_.map(id => (id, Multimodal.wavFixture(id))))
-        .toDF("doc_id", "payload")
-      Multimodal.audioEnvelopeHashes(s, payloads, "doc_id")
-    }),
-
-    // audio-content dedup, pair half: the q199 pigeonhole banding on
-    // envelope bits — same-recording-many-encodings dedup
-    "q203_audio_neardup" -> ((s, d) => {
-      import s.implicits._
-      val payloads = wide(Tables.documents(s, d).select(col("doc_id")))
-        .as[Long]
-        .mapPartitions(_.map(id => (id, Multimodal.wavFixture(id))))
-        .toDF("doc_id", "payload")
-      Multimodal.audioNearDup(s, payloads, "doc_id",
-        maxBucket = DefaultMaxBucket)
-        .select(col("doc_a"), col("doc_b"),
-          col("hamming").cast(LongType).as("hamming"))
-    }),
-
-    // video-content dedup, hash half: a REAL RIFF/AVI container per doc
-    // (Multimodal.aviFixture — frame 0 the content grid, frame 1 an
-    // all-docs-identical decoy), demuxed through the real movi chunk
-    // walk, first key frame decoded and dHashed; selecting the wrong
-    // frame hashes every doc identically and mismatches loudly
-    "q204_video_dhash" -> ((s, d) => {
-      import s.implicits._
-      val payloads = wide(Tables.documents(s, d).select(col("doc_id")))
-        .as[Long]
-        .mapPartitions(_.map(id => (id, Multimodal.aviFixture(id))))
-        .toDF("doc_id", "payload")
-      Multimodal.videoFrameHashes(s, payloads, "doc_id")
-    }),
-
-    // video-content dedup, pair half: first-key-frame hash through the
-    // banding — the cheap same-opening-reel duplicate heuristic
-    "q205_video_neardup" -> ((s, d) => {
-      import s.implicits._
-      val payloads = wide(Tables.documents(s, d).select(col("doc_id")))
-        .as[Long]
-        .mapPartitions(_.map(id => (id, Multimodal.aviFixture(id))))
-        .toDF("doc_id", "payload")
-      Multimodal.videoNearDup(s, payloads, "doc_id",
-        maxBucket = DefaultMaxBucket)
-        .select(col("doc_a"), col("doc_b"),
-          col("hamming").cast(LongType).as("hamming"))
-    }),
-
-    // MJPEG-in-MP4 pixel decode, hash half: every doc's payload is a
-    // real ISO-BMFF container whose samples are REAL JPEGs
-    // (Multimodal.mjpegFixture) — demuxed through the actual
-    // stsz/stsc/stco sample-table walk (mp4VideoTrack), first sample
-    // decoded by javax.imageio, dHash64 on actual decoded pixels. The
-    // fixture plants gradient BITS as a ±14 brightness walk (lossy
-    // JPEG can't be value-exact like the PNG fixtures, but quality-.95
-    // DC error ≲2 never flips a 14-level step), so the oracle restates
-    // the hash as pure md5%2 bit assembly; the all-docs-identical
-    // decoy sample 1 makes a wrong-sample demux regression loud
-    "q210_mjpeg_dhash" -> ((s, d) => {
-      import s.implicits._
-      val payloads = wide(Tables.documents(s, d).select(col("doc_id")))
-        .as[Long]
-        .mapPartitions(_.map(id => (id, Multimodal.mjpegFixture(id))))
-        .toDF("doc_id", "payload")
-      Multimodal.videoFrameHashes(s, payloads, "doc_id")
-    }),
-
-    // MJPEG-in-MP4 content dedup, pair half: the recovered first-frame
-    // hashes through the shared band/bucket/Hamming machinery
-    "q211_mjpeg_neardup" -> ((s, d) => {
-      import s.implicits._
-      val payloads = wide(Tables.documents(s, d).select(col("doc_id")))
-        .as[Long]
-        .mapPartitions(_.map(id => (id, Multimodal.mjpegFixture(id))))
-        .toDF("doc_id", "payload")
-      Multimodal.videoNearDup(s, payloads, "doc_id",
-        maxBucket = DefaultMaxBucket)
-        .select(col("doc_a"), col("doc_b"),
-          col("hamming").cast(LongType).as("hamming"))
-    }),
-
-    // Matroska video content dedup: every doc's payload is a REAL MKV
-    // (MkvMux — EBML header + Segment/Tracks/Cluster, V_MJPEG track)
-    // whose SimpleBlocks are real JPEGs; demuxed through the actual
-    // EBML walk (VINT ids/sizes, TrackEntry select, per-cluster
-    // SimpleBlock spans), first block decoded by javax.imageio, dHash
-    // on actual pixels, banded Hamming pairs — the last container
-    // family without a dependency-free walk, closed (round 12). The
-    // all-docs-identical decoy block 1 makes a wrong-block demux
-    // regression loud; oracle restates the walk bits as md5%2 assembly
-    "q222_mkv_neardup" -> ((s, d) => {
-      import s.implicits._
-      val payloads = wide(Tables.documents(s, d).select(col("doc_id")))
-        .as[Long]
-        .mapPartitions(_.map(id => (id, Multimodal.mkvFixture(id))))
-        .toDF("doc_id", "payload")
-      Multimodal.videoNearDup(s, payloads, "doc_id",
-        maxBucket = DefaultMaxBucket)
-        .select(col("doc_a"), col("doc_b"),
-          col("hamming").cast(LongType).as("hamming"))
-    }),
-
-    // compressed-codec video content dedup: every doc's payload is a
-    // REAL conformant H.264 stream — an avc1 MP4 whose first sample is
-    // an IDR access unit of all-I_PCM macroblocks (the spec's own
-    // entropy-free escape hatch, ITU-T H.264 §7.3.5), muxed per doc
-    // with the MJPEG walk's ±14 gradient planted as per-macroblock
-    // luma. The reader does the real work: length-prefixed NAL walk,
-    // SPS/PPS/slice-header Exp-Golomb parse, per-MB PCM extraction →
-    // DC means → dHash over the DC grid → banded Hamming pairs. PCM is
-    // lossless, so the oracle restates the hash as pure md5%2 bit
-    // assembly; the unparseable decoy sample 1 makes a wrong-sample
-    // demux regression loud (dropped rows)
-    "q221_avc_ipcm_neardup" -> ((s, d) => {
-      import s.implicits._
-      val payloads = wide(Tables.documents(s, d).select(col("doc_id")))
-        .as[Long]
-        .mapPartitions(_.map(id =>
-          (id, operators.Mp4Mux.avc1PcmFixture(id))))
-        .toDF("doc_id", "payload")
-      Multimodal.avcNearDup(s, payloads, "doc_id",
-        maxBucket = DefaultMaxBucket)
-        .select(col("doc_a"), col("doc_b"),
-          col("hamming").cast(LongType).as("hamming"))
-    }),
-
-    // q221 one honesty level up: the per-doc H.264 stream is ENTROPY
-    // CODED — CAVLC Intra_16x16 DC-only macroblocks (coeff_token,
-    // level prefix/suffix escape ladder, total_zeros) instead of the
-    // spec's I_PCM escape hatch — so the reader's recovered DC grid
-    // now rides a real entropy decode + §8.5.10 dequant + §8.3.3.1 DC
-    // prediction chain. The fixture encoder reconstructs as it codes,
-    // so decoded macroblock means equal the planted ±14 walk exactly
-    // and the oracle stays pure md5%2 bit assembly (prefix "avq")
-    "q223_avc_cavlc_neardup" -> ((s, d) => {
-      import s.implicits._
-      val payloads = wide(Tables.documents(s, d).select(col("doc_id")))
-        .as[Long]
-        .mapPartitions(_.map(id =>
-          (id, operators.Mp4Mux.avc1CavlcFixture(id))))
-        .toDF("doc_id", "payload")
-      Multimodal.avcNearDup(s, payloads, "doc_id",
-        maxBucket = DefaultMaxBucket)
-        .select(col("doc_a"), col("doc_b"),
-          col("hamming").cast(LongType).as("hamming"))
-    }),
-
-    // exact Gini concentration of customer spend per market segment —
-    // whales INJECTED into one segment (every 20th AUTOMOBILE customer
-    // spends 20x) so the index separates; zero-spend customers count
-    "q194_gini" -> ((s, d) => {
-      val spend = Tables.orders(s, d).groupBy("o_custkey")
-        .agg(sum(expr("cast(floor(o_totalprice * 100 + 0.5) as bigint)"))
-          .as("__spend"))
-      val joined = Tables.customer(s, d)
-        .select(col("c_custkey"), col("c_mktsegment"))
-        .join(spend, col("c_custkey") === col("o_custkey"), "left")
-        .withColumn("__sp", coalesce(col("__spend"), lit(0L)))
-        .withColumn("__sp2",
-          when(col("c_mktsegment") === "AUTOMOBILE" &&
-            col("c_custkey") % 20 === 0, col("__sp") * 20L)
-            .otherwise(col("__sp")))
-      Relational.giniIndex(joined, "c_mktsegment", col("__sp2"))
-        .select(col("g").as("c_mktsegment"), col("n_rows"), col("total"),
-          col("scale_unit"), col("gini_micro"))
-    }),
-
-    // top user journeys: whole session paths (1-day gap so multi-event
-    // sessions form), capped at 6 steps — the trajectory view next to
-    // q81's single ordained funnel
-    "q193_session_paths" -> ((s, d) =>
-      Temporal.sessionPaths(Tables.events(s, d), "user_id", "ts",
-        "event_id", col("event_type"), gapSeconds = 86400L)),
-
-    // KS two-sample drift on the sketch grid over q182's injected
-    // drift: the bin-free worst-CDF-gap statistic beside PSI's
-    // where-did-mass-move divergence
-    "q192_ks_drift" -> ((s, d) => {
-      val isRef = col("ts") < lit("2024-01-16").cast("timestamp")
-      val cents = expr("cast(floor(value * 100 + 0.5) as bigint)")
-      val spiked = when(!isRef && col("event_type") === "error",
-          cents + 5000L)
-        .when(!isRef && col("event_type") === "purchase", cents * 2L)
-        .otherwise(cents)
-      Sketches.ddsketchKS(Tables.events(s, d), "event_type", isRef,
-        spiked)
-        .select(col("g").as("event_type"), col("n_ref"), col("n_cur"),
-          col("ks_micro"))
-    }),
-
-    // Burrows' Delta authorship attribution: each source writes with
-    // a coded function-word mix ((N%3, N%4, N%5) repeat counts —
-    // distinct per source); Delta must recover the hand from the rates
-    "q191_burrows_delta" -> ((s, d) => {
-      val idx = "cast(substr(source, 4) as int)"
-      val styled = concat(col("text"), lit(" "),
-        expr(s"repeat('thus ', $idx % 3 + 1)"),
-        expr(s"repeat('hence ', $idx % 4 + 1)"),
-        expr(s"repeat('very ', $idx % 5 + 1)"), lit("quite"))
-      TextAnalysis.burrowsDelta(Tables.documents(s, d), "doc_id",
-        "source", styled, Seq("thus", "hence", "very", "quite"))
-    }),
-
-    // exact tie-aware ROC AUC of the NB quality filter under q164's
-    // noisy labels — the threshold-free ranking metric completing the
-    // eval tier (PR sweep q164, calibration q148)
-    "q190_auc" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val spiked = concat(col("text"),
-        when(col("source").isin("src0", "src1") && col("doc_id") % 4 =!= 0,
-          lit(" curated encyclopedia reference citation archive"))
-          .when(col("source") === "src2",
-            lit(" encyclopedia reference citation"))
-          .otherwise(lit("")))
-      val scored = TextAnalysis.nbClassifier(docs, "doc_id", spiked,
-          col("source").isin("src0", "src1"))
-        .join(docs.select(col("doc_id").as("doc"), col("source")),
-          Seq("doc"))
-      TextAnalysis.aucExact(scored, col("nb_micro"),
-        col("source").isin("src0", "src1"))
-    }),
-
-    // Poisson-bootstrap 95% CI of the mean order value per priority:
-    // the ONE-PASS bootstrap (every replicate streams through the
-    // same aggregation) — the uncertainty the sampling tier feeds
-    "q189_bootstrap_ci" -> ((s, d) =>
-      Relational.poissonBootstrapCI(Tables.orders(s, d),
-        "o_orderpriority", col("o_orderkey"),
-        expr("cast(floor(o_totalprice * 100 + 0.5) as bigint)"))
-        .select(col("g").as("o_orderpriority"), col("n_rows"),
-          col("mean_micro"), col("n_replicates"), col("ci_lo_micro"),
-          col("ci_hi_micro"))),
-
-    // full CUBE over (returnflag, linestatus): all four grouping sets
-    // in one pass — the lattice q19/q113's ROLLUP only half-covers
-    "q188_cube" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(grouping_id().cast(LongType).as("level"),
-          count(lit(1)).as("n_rows"),
-          fromCents(sum(cents(col("l_extendedprice"))), 2).as("revenue"))
-        .select("l_returnflag", "l_linestatus", "level", "n_rows",
-          "revenue")),
-
-    // Benford first-digit audit over three columns with genuinely
-    // different conformity (prices, bounded quantities, totals) —
-    // the forensic fabricated-numbers screen
-    "q187_benford" -> ((s, d) => {
-      val li = Tables.lineitem(s, d)
-      val vals = li.select(lit("extendedprice").as("metric"),
-          expr("cast(floor(l_extendedprice * 100 + 0.5) as bigint)")
-            .as("v"))
-        .unionByName(li.select(lit("quantity").as("metric"),
-          col("l_quantity").cast("long").as("v")))
-        .unionByName(Tables.orders(s, d)
-          .select(lit("totalprice").as("metric"),
-            expr("cast(floor(o_totalprice * 100 + 0.5) as bigint)")
-              .as("v")))
-      Relational.benfordAudit(vals, "metric", col("v"))
-        .select(col("g").as("metric"), col("digit"), col("n_obs"),
-          col("n"), col("p_micro"), col("e_micro"), col("dev_micro"),
-          col("chi2"))
-    }),
-
-    // interval-overlap join: supplier heavy-shipment coverage windows
-    // (q94's islands) x sampled-customer activity windows — the
-    // range-vs-range theta join on the canonical-cell equi plan
-    "q186_interval_join" -> ((s, d) => {
-      val li = Tables.lineitem(s, d).filter(col("l_quantity") >= 50)
-        .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
-      val o = Tables.orders(s, d)
-        .select(col("o_orderkey"), col("o_orderdate"))
-      val sup = Temporal.mergeIntervals(
-        li.join(o, li("l_orderkey") === o("o_orderkey"))
-          .filter(col("l_shipdate") >= col("o_orderdate"))
-          .select(col("l_suppkey"), col("o_orderdate").as("iv_s"),
-            col("l_shipdate").as("iv_e")),
-        "l_suppkey", "iv_s", "iv_e")
-      // the customer side is a BOUNDED query batch (the q50 pattern:
-      // vec_id < 5): every supplier coverage window overlapping every
-      // sampled customer window is output-quadratic in corpus size —
-      // no plan beats output cardinality, and a production interval
-      // probe asks about a bounded batch. <= 15000 is a no-op at
-      // sf0.01/sf0.1 (max custkey there) and binds at the 10x
-      // rehearsal corpus (round 13: the unbounded form wrote 900 MB+
-      // at sf1 before being stopped).
-      val cust = Temporal.mergeIntervals(
-        Tables.orders(s, d).filter(col("o_custkey") % 37 === 0 &&
-            col("o_custkey") <= 15000)
-          .select(col("o_custkey"), col("o_orderdate").as("cv_s"),
-            date_add(col("o_orderdate"), 6).as("cv_e")),
-        "o_custkey", "cv_s", "cv_e")
-      Temporal.intervalOverlapJoin(
-        sup.select(col("l_suppkey"), col("window_start"),
-          col("window_end")),
-        "l_suppkey", col("window_start"), col("window_end"),
-        cust.select(col("o_custkey"), col("window_start"),
-          col("window_end")),
-        "o_custkey", col("window_start"), col("window_end"))
-        .select(col("l_suppkey"), col("o_custkey"),
-          date_format(col("overlap_start"), "yyyy-MM-dd")
-            .as("overlap_start"),
-          date_format(col("overlap_end"), "yyyy-MM-dd").as("overlap_end"),
-          col("overlap_days"))
-    }),
-
-    // TextTiling topic segmentation: lexical-cohesion valleys over
-    // block gaps; doc_id%7 gets a second topic appended so a true
-    // boundary exists — natural docs supply the no-boundary mass
-    "q185_texttiling" -> ((s, d) =>
-      TextAnalysis.textTiling(Tables.documents(s, d), "doc_id",
-        when(col("doc_id") % 7 === 0, concat(col("text"),
-          lit(" " + Seq.fill(6)(
-            "galaxy nebula quasar pulsar comet meteor orbit cosmos")
-            .mkString(" "))))
-          .otherwise(col("text")),
-        blockSize = 8, windowBlocks = 2, minDepthMicro = 400000L)),
-
-    // mixed-script spoofing profile over a homoglyph-spiked corpus:
-    // doc_id%11 gets Cyrillic look-alike 'a's, %13 a CJK spam run
-    "q184_script_mix" -> ((s, d) =>
-      TextAnalysis.scriptProfile(
-        Tables.documents(s, d).withColumn("text",
-          when(col("doc_id") % 11 === 0,
-            regexp_replace(col("text"), "a", "а"))
-            .otherwise(col("text"))),
-        "doc_id",
-        when(col("doc_id") % 13 === 0,
-          concat(col("text"), lit(" 购买 现在")))
-          .otherwise(col("text")))),
-
-    // PSI drift monitor: reference fortnight vs current, with drift
-    // INJECTED into the current period for two event types (level
-    // shift on 'error', scale on 'purchase') so the monitor separates
-    "q182_psi_drift" -> ((s, d) => {
-      val isRef = col("ts") < lit("2024-01-16").cast("timestamp")
-      val cents = expr("cast(floor(value * 100 + 0.5) as bigint)")
-      val spiked = when(!isRef && col("event_type") === "error",
-          cents + 5000L)
-        .when(!isRef && col("event_type") === "purchase", cents * 2L)
-        .otherwise(cents)
-      Temporal.psiDrift(Tables.events(s, d), "event_type", isRef, spiked)
-        .select(col("g").as("event_type"), col("n_ref"), col("n_cur"),
-          col("psi"))
-    }),
-
-    // Pareto frontier of the length-vs-lexical-diversity tradeoff:
-    // the docs no other doc beats on BOTH n_tokens and type-token
-    // ratio — every frontier row is an optimal curation operating point
-    "q181_pareto" -> ((s, d) =>
-      Relational.paretoFrontier(
-        Tables.documents(s, d).filter(col("text").isNotNull)
-          .select(col("doc_id"),
-            TextAnalysis.tokens(col("text")).as("__t"))
-          .select(col("doc_id"), size(col("__t")).cast("long").as("n_toks"),
-            size(array_distinct(col("__t"))).cast("long").as("n_dist"))
-          .filter(col("n_toks") > 0L)
-          .withColumn("ttr_micro", expr("n_dist * 1000000 div n_toks")),
-        "doc_id", col("n_toks"), col("ttr_micro"), bucketWidth = 32L)
-        .select(col("doc_id"), col("x").as("n_toks"),
-          col("y").as("ttr_micro"))),
-
-    // label-propagation communities (4 synchronous rounds, min-label
-    // ties) over the simhash near-dup candidate graph — community
-    // detection next to q51's reachability components: dense
-    // neighborhoods outvote thin bridges
-    "q114_label_prop" -> ((s, d) =>
-      Graph.labelPropagation(
-        Dedup.simHashCandidates(Tables.documents(s, d), "doc_id",
-          col("text"), maxBucket = SimhashMaxBucket),
-        "doc_a", "doc_b", iters = 4)
-        .select(col("node").as("doc_id"), col("community"))),
-
-    // first BPE merge round: weighted adjacent char-pair counts over
-    // the corpus vocabulary (pair table bounded by vocab, not corpus)
-    "q116_bpe_pairs" -> ((s, d) =>
-      TextAnalysis.bpePairStats(Tables.documents(s, d), col("text"),
-        topK = 50)),
-
-    // SCD type-2 history: per-customer order-status runs with
-    // [valid_from, next-start) validity spans from the orders log
-    "q117_scd2" -> ((s, d) =>
-      Relational.scd2History(Tables.orders(s, d), "o_custkey",
-        "o_orderdate", "o_orderkey", col("o_orderstatus"))
-        .select(col("o_custkey"), col("version"),
-          col("attr_value").as("o_orderstatus"),
-          date_format(col("valid_from"), "yyyy-MM-dd").as("valid_from"),
-          date_format(col("valid_to"), "yyyy-MM-dd").as("valid_to"),
-          col("n_rows").as("n_orders"))),
-
-    // n-gram novelty vs a held-out reference slice (doc_id % 50 == 0):
-    // the soft inverse of q58's contamination count
-    "q118_novelty" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      Dedup.noveltyScore(docs.filter(col("doc_id") % 50 =!= 0), "doc_id",
-        col("text"), docs.filter(col("doc_id") % 50 === 0), col("text"))
-        .select(col("doc").as("doc_id"), col("n_shingles"),
-          col("n_novel"), col("novelty"))
-    }),
-
-    // product-quantization codes: 4 subspaces of 16 dims, 8 stride-
-    // anchor codewords — the vector-compression stage next to q50's
-    // coarse quantizer
-    "q119_pq_codes" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val codebook = emb
-        .filter(pmod(col("vec_id"), lit(30)) === 0 && col("vec_id") < 240)
-        .select(expr("vec_id div 30").as("code_id"),
-          col("embedding").as("codeword"))
-      Similarity.pqCodes(emb, codebook, subspaces = 4)
-    }),
-
-    // PQ asymmetric-distance search (ADC): approximate top-10 per query
-    // computed ENTIRELY from the stored codes — per-subspace k-means
-    // codebooks (the real PQ trainer, 8 subspaces × 16 codes; captured
-    // and injected into the oracle, q60's mechanism), per-query LUT of
-    // micro-quantized subspace distances (order-free long sums)
-    // broadcast into the codes scan, bounded two-phase top-k. The
-    // query-time plan never touches a corpus vector.
-    "q156_pq_adc" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val cb = Similarity.trainPqCodebook(emb, PqSubspaces, PqCodes)
-      q156Codebook = Some(cb)
-      val sess = s
-      import sess.implicits._
-      val codebook = cb.toDF("code_id", "codeword")
-      // wide(): the per-subspace argmin folds are the heavy narrow
-      // compute, and the embeddings parquet scans as ONE partition
-      val codes = Similarity.pqCodes(wide(emb), codebook, PqSubspaces)
-      Similarity.pqAdcKnn(codes, codebook,
-        emb.filter(col("vec_id") < 5), PqSubspaces, k = 10)
-    }),
-
-    // fixed-round k-core peel (k=3, 6 synchronous rounds) over the
-    // high-quantity co-purchase graph — the density pre-filter before
-    // community/embedding passes. Probed at sf0.01: the cascade
-    // genuinely fires round over round (1274 -> 294 -> 94 -> 53 -> 47
-    // -> 45 -> 45 survivors; converged by round 6), so the oracle's
-    // unrolled peels each do real work, not a vacuous fixed point
-    "q157_kcore" -> ((s, d) => {
-      // per-order pair builder (the q84/q111 round-14 shape) over the
-      // high-quantity slice; kCore symmetrizes internally, so the
-      // unordered x < y pairs are the same undirected edge set the old
-      // self-join produced
-      val par = s.sparkContext.defaultParallelism
-      val pairs = Tables.lineitem(s, d)
-        .filter(col("l_quantity") > 45)
-        .select("l_orderkey", "l_partkey")
-        .repartition(par, col("l_orderkey"))
-        .groupBy("l_orderkey")
-        .agg(collect_set(col("l_partkey")).as("__ps"))
-        .filter(size(col("__ps")) >= 2)
-        .select(graft.functions.Native.idPairs(col("__ps"))
-          .as(Seq("__x", "__y")))
-      Graph.kCore(pairs, "__x", "__y", k = 3, rounds = 6)
-        .select(col("node").as("l_partkey"), col("core_degree"))
-    }),
-
-    // Z-order (Morton) locality cells over the top-2 PCA plane — the
-    // data-layout primitive behind multi-dimensional file clustering:
-    // write the lake sorted by z_cell and 2-D range predicates become
-    // scan pruning. Same captured-model mechanism as q154; the
-    // quantization range is computed INTERNALLY on both sides (PCA
-    // scores are bit-identical across engines — identical IEEE fold
-    // order — so min/max and the floor-quantized cells agree exactly)
-    "q160_zorder_cells" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val model = Pca.fit(
-        Pca.moments(emb, "embedding", 64).collect().toSeq, 64)
-      q160Model = Some(model)
-      // wide(): the two 64-term projection folds are the heavy narrow
-      // compute, and the embeddings parquet scans as ONE partition
-      val proj = Pca.project(wide(emb), "embedding", model.mean,
-        model.eigenvectors.take(2))
-      val rng = proj.agg(
-        min(col("pc1")).as("__n1"), max(col("pc1")).as("__x1"),
-        min(col("pc2")).as("__n2"), max(col("pc2")).as("__x2"))
-      def qz(p: Column, lo: Column, hi: Column): Column =
-        when(hi > lo,
-          least(floor((p - lo) / (hi - lo) * 32.0), lit(31.0)))
-          .otherwise(lit(0.0)).cast(LongType)
-      proj.crossJoin(broadcast(rng))
-        .select(Similarity.zorderCell(
-          qz(col("pc1"), col("__n1"), col("__x1")),
-          qz(col("pc2"), col("__n2"), col("__x2")), 5).as("z_cell"))
-        .groupBy("z_cell").agg(count(lit(1)).as("n_vecs"))
-        .orderBy(col("n_vecs").desc, col("z_cell")).limit(50)
-    }),
-
-    // train/val/test split assignment + leakage audit: content
-    // fingerprints spanning more than one hash-assigned split
-    "q120_split_leakage" -> ((s, d) => {
-      val split = when(pmod(Hashing.hexLong(col("doc_id")
-          .cast(org.apache.spark.sql.types.StringType)), lit(100)) < 80, "train")
-        .when(pmod(Hashing.hexLong(col("doc_id")
-          .cast(org.apache.spark.sql.types.StringType)), lit(100)) < 90, "val")
-        .otherwise("test")
-      Tables.documents(s, d)
-        // the leakage key is the 8-token opening prefix: exact-dup
-        // bodies are rare in a curated corpus, shared boilerplate
-        // openings are the thing that actually straddles splits.
-        // NULL text must stay NULL: concat_ws over a null array yields
-        // "" (so fp = md5("")), while the oracle's array_to_string over
-        // a NULL split yields NULL — today's corpus has no null docs,
-        // but the fingerprint must not silently diverge if a
-        // re-materialization introduces them
-        .select(when(col("text").isNotNull, md5(concat_ws(" ",
-            slice(TextAnalysis.tokens(col("text")), 1, 8)))).as("fp"),
-          split.as("split"), col("doc_id"))
-        .groupBy("fp")
-        .agg(count(lit(1)).as("n_docs"),
-          count_distinct(col("split")).as("n_splits"),
-          array_join(array_sort(collect_set(col("split"))), ",").as("splits"))
-        .filter(col("n_splits") >= 2)
-    }),
-
-    // percent-rank normalization of the quality score — rank transform
-    // via the distinct-value table, NOT a corpus-wide one-task window
-    "q121_quantile_norm" -> ((s, d) =>
-      Quantiles.percentRank(
-        TextAnalysis.qualityFeatures(Tables.documents(s, d), col("text"))
-          .select(col("doc_id"), col("quality_score")),
-        col("quality_score"))),
-
-    // collocation graph export: top-3 PMI partners per left token over
-    // the q99 skip-gram statistics (vocab-partitioned window)
-    "q122_colloc_graph" -> ((s, d) => {
-      val pmi = TextAnalysis.skipgramPmi(Tables.documents(s, d), col("text"),
-        window = 3, minCount = 2)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("w1")).orderBy(col("pmi").desc, col("w2"))
-      pmi.withColumn("partner_rank", row_number().over(w).cast(LongType))
-        .filter(col("partner_rank") <= 3)
-    }),
-
-    // incremental-ingest near-dedup: new shard (odd ids) vs the
-    // existing lake — only boundary-crossing candidate pairs matter
-    "q125_incremental_dedup" -> ((s, d) =>
-      Dedup.incrementalNearDups(Tables.documents(s, d), "doc_id",
-        col("text"), col("doc_id") % 2 === 1)),
-
-    // the WHOLE curation funnel oracle-gated end-to-end: quality gate ->
-    // exact dedup -> MinHash near-dedup (connected components) ->
-    // decontamination, one disposition per doc (q58's %7 eval split)
-    "q124_curation_funnel" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      graft.pipelines.CurationPipeline.dispositions(
-        docs.filter(col("doc_id") % 7 =!= 0).select("doc_id", "text"),
-        docs.filter(col("doc_id") % 7 === 0).select("text"))
-        .select(col("doc_id"), col("stage"))
-    }),
-
-    // padding-waste audit of length-bucketed batching: tokens lost to
-    // padding per power-of-two sequence bucket
-    "q123_padding_waste" -> ((s, d) => {
-      val n = size(TextAnalysis.tokens(col("text"))).cast(LongType)
-      val bucket = when(n <= 16, 16L).when(n <= 32, 32L)
-        .when(n <= 64, 64L).when(n <= 128, 128L).otherwise(-1L)
-      Tables.documents(s, d)
-        .select(n.as("__n"), bucket.as("seq_bucket"))
-        .groupBy("seq_bucket")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("__n")).as("total_tokens"),
-          sum(when(col("seq_bucket") > 0, col("seq_bucket") - col("__n"))
-            .otherwise(0L)).as("total_padding"))
-        .select(col("seq_bucket"), col("n_docs"), col("total_tokens"),
-          col("total_padding"),
-          when(col("seq_bucket") > 0,
-            floor(col("total_padding").cast("double") /
-              (col("n_docs") * col("seq_bucket")) * 1000000.0 + 0.5)
-              .cast("double") / 1000000.0)
-            .otherwise(lit(0.0)).as("padding_ratio"))
-    }),
-
-    // hierarchical rollup: revenue at (region, nation) / (region) /
-    // grand-total levels in ONE aggregation pass (Expand, not three
-    // jobs); grouping_id disambiguates rolled NULLs from data NULLs
-    // and shares the bitmask convention with the oracle's GROUPING()
-    "q113_rollup_revenue" -> ((s, d) => {
-      val n = Tables.nation(s, d); val r = Tables.region(s, d)
-      Tables.orders(s, d)
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-        .rollup(col("r_name"), col("n_name"))
-        .agg(grouping_id().cast(LongType).as("level"),
-          count(lit(1)).as("n_orders"),
-          fromCents(sum(cents(col("o_totalprice"))), 2).as("revenue"))
-        .select("r_name", "n_name", "level", "n_orders", "revenue")
-    }),
-
-    // sparse 3-gram cosine top-pairs through the inverted-index join —
-    // the lexical near-dup scorer next to the embedding tier; df band
-    // [2, 50] caps per-term pair fan-out (and is part of the score's
-    // definition, mirrored in the oracle)
-    "q112_sparse_cosine" -> ((s, d) =>
-      TextAnalysis.sparseCosinePairs(Tables.documents(s, d), "doc_id",
-        col("text"), ngram = 3, maxDf = 50, topK = 50)),
-
-    // predicate-filtered kNN: hard negatives for contrastive training —
-    // top-10 most-similar vectors whose SOURCE differs from the
-    // query's. The source attribute rides a co-keyed join (vec_id =
-    // doc_id); the mismatch predicate runs in the join condition, ahead
-    // of the fused cosine.
-    "q107_hard_negatives" -> ((s, d) => {
-      val src = Tables.documents(s, d).select(col("doc_id"), col("source"))
-      val corpus = Tables.embeddings(s, d)
-        .join(src, col("vec_id") === col("doc_id"))
-        .select(col("vec_id"), col("embedding"), col("source"))
-      Similarity.filteredKnn(corpus, corpus.filter(col("vec_id") < 5), 10,
-        col("q.source") =!= col("c.source"))
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"),
-          col("rank").cast(LongType).as("neg_rank"))
-    }),
-
-    // exact duplicate-substring spans (Lee et al. 2022 ExactSubstr):
-    // overlapping 5-token windows occurring >= 2 times in the corpus,
-    // merged into per-doc cut spans. A shared 11-token boilerplate
-    // footer is injected on every 4th doc (the q37/q59 spike pattern)
-    // so cross-doc runs provably fire; windows straddling the
-    // boilerplate boundary differ per doc and are provably excluded.
-    // The random corpus also contributes organic birthday-collision
-    // 5-grams, so the operator is not only seeing the injected case.
-    "q106_dup_spans" -> ((s, d) => {
-      val spiked = concat(col("text"),
-        when(col("doc_id") % 4 === 0, lit(
-          " all rights reserved unauthorized reproduction of this" +
-            " document is strictly prohibited"))
-          .otherwise(lit("")))
-      Dedup.duplicateSpans(Tables.documents(s, d), "doc_id", spiked, k = 5)
-        .select(col("doc").as("doc_id"), col("span_id"), col("start_tok"),
-          col("end_tok"), col("n_windows"))
-    }),
-
-    // BM25 lexical retrieval over the q75 term set: probabilistic
-    // ranking with term-sorted per-doc folds, top-20 through the
-    // bounded two-phase aggregate
-    "q87_bm25" -> ((s, d) =>
-      TextAnalysis.bm25(Tables.documents(s, d), "doc_id", col("text"),
-        RrfTerms)),
-
-    // CDC extraction: diff two deterministic snapshots of orders (price
-    // updates, shifted-key inserts, modular deletes) into a typed change
-    // feed — the inverse of q77's merge, same union+aggregate shape
-    "q85_snapshot_diff" -> ((s, d) => {
-      val t = Tables.orders(s, d)
-      val changed = t.filter(col("o_orderkey") % 13 =!= 0)
-        .withColumn("o_totalprice",
-          when(col("o_orderkey") % 10 === 0, col("o_totalprice") * 1.05)
-            .otherwise(col("o_totalprice")))
-      // +1e10, not +1e8: the q77 lesson — the insert offset must land
-      // ABOVE every real orderkey at every corpus including the 10x
-      // rehearsal, or shifted keys collide with replica-1's real ones
-      val ins = t.filter(col("o_orderkey") % 97 === 0)
-        .withColumn("o_orderkey", col("o_orderkey") + 10000000000L)
-        .withColumn("o_orderstatus", lit("N"))
-      Relational.snapshotDiff(t, changed.unionByName(ins), Seq("o_orderkey"))
-        .select(col("o_orderkey"), col("change_type"),
-          col("new.o_totalprice").as("new_totalprice"))
-    }),
-
-    // bucketed content checksum of lineitem — the replica-verification
-    // digest: 64 buckets, XOR of an md5-derived row hash over an
-    // integer-rendered canonical row string
-    "q86_checksum" -> ((s, d) =>
-      Quality.checksum(wide(Tables.lineitem(s, d)),
-        pmod(col("l_orderkey"), lit(64)).cast(LongType),
-        Hashing.hexLong(concat_ws("|",
-          col("l_orderkey"), col("l_linenumber"),
-          cents(col("l_extendedprice")), cents(col("l_quantity")),
-          col("l_returnflag"), col("l_linestatus"))))),
-
-    // PageRank centrality over the part co-purchase graph (parts sharing
-    // an order are linked): 5 fixed-point iterations — integer micro-rank
-    // units so the per-node sums are order-independent and the iterative
-    // result hash-matches the oracle's unrolled CTE chain exactly
-    "q84_pagerank" -> ((s, d) => {
-      Graph.pageRank(coPurchaseEdges(s, d), "src", "dst", iters = 5)
-        .select(col("node").as("l_partkey"), col("rank_unit"))
-    }),
-
-    // HITS hubs/authorities over the DIRECTED bipartite customer->part
-    // purchase graph (its natural habitat — the co-purchase graph is
-    // symmetric and would degenerate to a = h): 3 mutual-reinforcement
-    // rounds, L-infinity integer renormalization once per round (the
-    // authority gather feeds the hub gather raw — round-14 cadence).
-    // Authorities = widely-bought parts (hub_unit 0), hubs =
-    // broad-basket customers (auth_unit 0) — each side fires where the
-    // other is zero, and scores vary within each side
-    "q168_hits" -> ((s, d) => {
-      // widen the lineitem scan BEFORE the broadcast join: the 3-row-
-      // group parquet otherwise pins the scan+join+partial-distinct to
-      // 3 tasks (measured 385 ms wall of the setup, round 14); orders
-      // broadcasts explicitly (the smaller side)
-      val e = wide(Tables.lineitem(s, d).select("l_orderkey", "l_partkey"))
-        .join(broadcast(Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (col("l_partkey") + 10000000L).as("dst"))
-      Graph.hits(e, "src", "dst", rounds = 3)
-    }),
-
-    // Moore-Lewis cross-entropy difference selection: every doc scored
-    // by an in-domain add-one bigram LM (trained on src0/src1) AND a
-    // general LM (trained on the remaining sources); CED = mean_in -
-    // mean_gen in exact micro-nats, selected below the corpus-mean CED
-    // cut (the size-imbalance-calibrated operating point). Probed
-    // non-vacuous at sf0.01: all 50 in-domain docs and a proper subset
-    // of the general docs clear the cut - the decision fires both ways
-    // and splits WITHIN the general group rather than memorizing the
-    // source split.
-    "q169_ced_select" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextAnalysis.crossEntropyDiffSelect(docs, "doc_id", col("text"),
-        docs.filter(col("source").isin("src0", "src1")), col("text"),
-        docs.filter(!col("source").isin("src0", "src1")), col("text"))
-        .select(col("doc").as("doc_id"), col("n_pairs"),
-          col("nll_in_micro"), col("nll_gen_micro"),
-          col("mean_in_micro"), col("mean_gen_micro"),
-          col("ced_micro"), col("selected"))
-    }),
-
-    // min/max file-skipping audit: the what-if diagnostic behind
-    // clustered layouts (q160's decision input) - 64 equal-width
-    // files per candidate layout, four shipdate range probes against
-    // per-file key statistics. Probed at sf0.01: ingest order skips
-    // 0/64 files on every probe (this corpus's shipdates are
-    // uncorrelated with orderkey, so every file straddles every
-    // probe) while shipdate-clustered skips 58-61/64 (91-95%) - the
-    // audit separates the layouts on every probe, which is exactly
-    // the re-cluster decision it exists to inform
-    "q174_pruning_audit" -> ((s, d) => {
-      val li = Tables.lineitem(s, d)
-      val days = datediff(col("l_shipdate"), lit("1970-01-01"))
-      def day(y: Int, m: Int, dd: Int): Long =
-        java.time.LocalDate.of(y, m, dd).toEpochDay
-      Warehouse.pruningAudit(li,
-        Seq("ingest" -> col("l_orderkey"), "shipdate" -> days),
-        days, nFiles = 64,
-        Seq(("p1996h1", day(1996, 1, 1), day(1996, 6, 30)),
-          ("p1997q1", day(1997, 1, 1), day(1997, 3, 31)),
-          ("p1998h2", day(1998, 7, 1), day(1998, 12, 31)),
-          ("p2001tail", day(2001, 6, 1), day(2001, 12, 31))))
-    }),
-
-    // Personalized PageRank from a seed catalog: q84's co-purchase
-    // part graph, teleport mass concentrated on the p_partkey % 41
-    // seed set (49 of 2000 parts at sf0.01) - ranks parts by graph
-    // proximity to the seeds ("more like these"). Probed: seed ranks
-    // sit far above non-seeds, and non-seed ranks spread with
-    // co-purchase distance rather than collapsing to one value
-    "q173_ppr" -> ((s, d) => {
-      val seeds = Tables.part(s, d).select(col("p_partkey"))
-        .filter(col("p_partkey") % 41 === 0)
-      Graph.personalizedPageRank(coPurchaseEdges(s, d), seeds,
-          "p_partkey", "src", "dst", iters = 5)
-        .select(col("node").as("l_partkey"), col("rank_unit"))
-    }),
-
-    // TextRank keywords: PageRank (5 integer fixed-point rounds) over
-    // the filtered-word co-occurrence graph (len>=4 content filter,
-    // filter-then-window adjacency, both directions). The synthetic
-    // corpus is a 31-word near-clique where every rank ties, so a
-    // hub-and-satellite sublanguage is injected (the q130/q131
-    // spike mechanism): 'quantum' bridges three doc_id-keyed
-    // satellite chains plus the natural tail words. Probed at sf0.01:
-    // 'quantum' is the top-1 keyword and the 31-node graph splits
-    // into 4 distinct rank tiers (hub > natural clique > satellites)
-    // - centrality genuinely reorders the near-uniform frequency
-    // table
-    "q172_textrank" -> ((s, d) => {
-      val spiked = when(col("doc_id") % 3 === 0,
-          concat(col("text"), lit(" quantum entangled lattice")))
-        .when(col("doc_id") % 3 === 1,
-          concat(col("text"), lit(" quantum spectral manifold")))
-        .otherwise(concat(col("text"), lit(" quantum harmonic cascade")))
-      TextAnalysis.textRankKeywords(Tables.documents(s, d), spiked)
-    }),
-
-    // Adamic-Adar link prediction over the customer-part bipartite
-    // graph: customer pairs scored by Sum 1/ln(deg) over shared parts,
-    // hub parts above deg 40 excluded before the self-join (the
-    // degenerate-bucket guard; trims the top decile at sf0.01 - 188 of
-    // 2000 parts), exact micro weights, TakeOrdered top-100
-    "q171_adamic_adar" -> ((s, d) => {
-      val e = Tables.orders(s, d).select("o_orderkey", "o_custkey")
-        .join(Tables.lineitem(s, d).select("l_orderkey", "l_partkey"),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("src"), col("l_partkey").as("dst"))
-      // packIds: custkeys/partkeys are dense sub-2^31 keys at every
-      // corpus this query runs on (ScaleUp's 1e8 replica stride keeps
-      // the 10x rehearsal inside the domain too)
-      Graph.adamicAdar(e, "src", "dst", maxDeg = 40, topK = 100,
-        packIds = true)
-    }),
-
-    // MinHash signature-agreement Jaccard estimate for the q29
-    // candidate pairs — the O(numPerm) triage before exact verify.
-    // Fused form: the signature subplan runs structurally ONCE (it
-    // rides through the banding aggregation into the pair generator),
-    // where composing minHashEstimate over minHashCandidates planned it
-    // three times (candidates + both re-attach join sides).
-    "q64_minhash_est" -> ((s, d) =>
-      Dedup.minHashCandidatesWithEstimate(Tables.documents(s, d), "doc_id",
-        col("text"), MinhashK, MinhashPerms, MinhashBands)),
-
-    // b-bit minwise compression (b=2: 2-bit slots, a 28x storage cut
-    // on 56-bit mins) with the collision-corrected estimator, side by
-    // side with the full-width estimate over the same candidate pairs
-    "q167_bbit_minwise" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      Dedup.bbitMinwiseEstimate(docs, "doc_id", col("text"),
-        Dedup.minHashCandidates(docs, "doc_id", col("text"),
-          MinhashK, MinhashPerms, MinhashBands, DefaultMaxBucket),
-        MinhashK, MinhashPerms, b = 2)
-    }),
-
-    // inverted-index posting lists: top tokens with counts, doc
-    // frequency, and capped ascending doc-id postings (bounded top-k
-    // aggregate — never a full collect_list per token). The posting
-    // array crosses the correctness harness as a comma-joined string:
-    // the pandas-side comparison cannot factorize array columns, so
-    // every declared column must be scalar on both sides.
-    "q61_postings" -> ((s, d) =>
-      TextAnalysis.postingLists(Tables.documents(s, d), "doc_id", col("text"),
-        topTokens = 100, maxPostings = 20)
-        .withColumn("postings",
-          concat_ws(",", transform(col("postings"), x => x.cast("string"))))),
-
-    // fixed-width value histogram (distribution profiling before
-    // choosing curation cutoffs)
-    "q62_histogram" -> ((s, d) =>
-      Quantiles.fixedWidthHistogram(Tables.orders(s, d),
-        col("o_totalprice"), 0.0, 600000.0, 20)),
-
-    // PII redaction with typed placeholders + per-doc match count. The
-    // corpus text is clean, so PII is injected deterministically by
-    // doc_id (the q37 spike) — the oracle then exercises every pattern
-    // and the sequential-replace order.
-    // k-anonymity / l-diversity audit over quasi-identifiers — the
-    // privacy risk report next to q59's direct-identifier redaction:
-    // equivalence classes over (nation, segment, name-end digit — the
-    // zip-like third quasi that keeps classes small as the corpus
-    // grows) with under-k membership or under-l sensitive diversity
-    // (sensitive = account balance sign). Probed: sf0.01 875
-    // violations (78 k-only, 797 both); sf0.1 491 with ALL THREE flag
-    // combinations (376 l-only, 52 k-only, 63 both)
-    "q216_k_anonymity" -> ((s, d) =>
-      Relational.kAnonymityAudit(
-        Tables.customer(s, d).withColumn("name_digit",
-          substring(col("c_name"), -1, 1)),
-        Seq("c_nationkey", "c_mktsegment", "name_digit"),
-        when(col("c_acctbal") < 0, lit("neg")).otherwise(lit("nonneg")),
-        k = 8L, l = 2L)),
-
-    "q59_pii_redact" -> ((s, d) => {
-      val spiked = concat(col("text"),
-        when(col("doc_id") % 7 === 0, lit(" contact user@example.com"))
-          .when(col("doc_id") % 11 === 0, lit(" see https://example.com/x"))
-          .when(col("doc_id") % 13 === 0, lit(" ref 1234567890"))
-          .otherwise(lit("")))
-      wide(Tables.documents(s, d)).select(col("doc_id"),
-        TextAnalysis.redactPii(spiked).as("redacted"),
-        TextAnalysis.piiMatchCount(spiked).as("n_pii"))
-    })
-  )
-
-  /** DuckDB equivalent of Hashing.hexLong. */
-  /** Generated oracle for the q131 NB classifier — also the `nb` CTE of
-    * the q148 calibration curve (nested WITH inside a subquery is
-    * valid DuckDB). */
-  private def nbClassifierOracle: String =
-    nbClassifierOracleSpiked("""CASE WHEN source IN ('src0','src1')
-      THEN text || ' curated encyclopedia reference citation archive'
-      WHEN source = 'src2' THEN text || ' encyclopedia reference citation'
-      ELSE text END""")
-
-  /** The same NB chain under a caller-chosen spike CASE — the q164 PR
-    * sweep trains on a label-noised variant (a quarter of the
-    * positives unmarked) so recall genuinely trades against precision
-    * across the cut sweep. */
-  private def nbClassifierOracleSpiked(spiked: String): String = {
-    val h = sqlHexLong("tok")
-    s"""WITH docs AS (SELECT doc_id, source IN ('src0','src1') AS pos,
-                        $spiked AS text
-                      FROM documents WHERE text IS NOT NULL),
-       tk AS (SELECT doc_id, pos, unnest(string_split(text, ' ')) AS tok FROM docs),
-       perdoc AS (SELECT doc_id, pos, $h % 256 AS bucket,
-                    CAST(count(*) AS BIGINT) AS n
-                  FROM tk GROUP BY 1, 2, 3),
-       cb AS (SELECT bucket,
-                CAST(sum(CASE WHEN pos THEN n ELSE 0 END) AS BIGINT) AS p,
-                CAST(sum(CASE WHEN pos THEN 0 ELSE n END) AS BIGINT) AS q
-              FROM perdoc GROUP BY 1),
-       dc AS (SELECT sum(CASE WHEN pos THEN 1 ELSE 0 END) AS dPos,
-                sum(CASE WHEN pos THEN 0 ELSE 1 END) AS dNeg
-              FROM (SELECT DISTINCT doc_id, pos FROM perdoc)),
-       tot AS (SELECT (SELECT sum(p) FROM cb) AS pTot,
-                 (SELECT sum(q) FROM cb) AS qTot),
-       wt AS (SELECT bucket,
-           CAST(floor(ln(
-             (CAST(p + 1 AS DOUBLE) / CAST(pTot + 256 AS DOUBLE)) *
-             (CAST(qTot + 256 AS DOUBLE) / CAST(q + 1 AS DOUBLE))) * 1000000 + 0.5) AS BIGINT) AS llr,
-           CAST(floor(ln(CAST(dPos + 1 AS DOUBLE) / CAST(dNeg + 1 AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS prior
-         FROM cb CROSS JOIN tot CROSS JOIN dc)
-       SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_toks,
-         CAST(max(prior) + sum(n * llr) AS BIGINT) AS nb_micro,
-         (max(prior) + sum(n * llr)) > 0 AS nb_pos
-       FROM perdoc JOIN wt USING (bucket) GROUP BY 1"""
-  }
-
-  private def sqlHexLong(x: String): String =
-    s"CAST(concat('0x', substr(md5($x), 1, 14)) AS BIGINT)"
-
-  /** Shared CTE prefix of the MinHash oracles: shingles → per-shingle
-    * md5 → affine-family minima (mirrors Dedup.minHashFamily exactly) →
-    * LSH bands → capped buckets. */
-  /** The q93 HLL estimate chain (m = 64, exact-integer harmonic sum,
-    * linear-counting small-range correction) over an arbitrary group
-    * expression — shared by q93 and the q217 accuracy audit, which
-    * must reconcile against the IDENTICAL rounded estimate. */
-  private def hllEstimateSql(grpExpr: String, outName: String): String = {
-    val h = sqlHexLong("concat('hll:', CAST(user_id AS VARCHAR))")
-    val alpha = Sketches.HllAlphaM2.toString
-    s"""WITH h AS (SELECT $grpExpr AS g, $h AS hv FROM events
-         WHERE user_id IS NOT NULL),
-       b AS (SELECT g, hv % 64 AS reg, hv // 64 AS suf FROM h),
-       r AS (SELECT g, reg,
-             max(CASE WHEN suf = 0 THEN 51
-                 ELSE 51 - length(bin(suf)) END) AS mr
-             FROM b GROUP BY 1, 2),
-       a AS (SELECT g, CAST(count(*) AS BIGINT) AS registers_hit,
-             CAST(sum(CAST(1 AS BIGINT) << CAST(51 - mr AS INTEGER))
-               AS BIGINT) AS s
-             FROM r GROUP BY 1),
-       f AS (SELECT g, registers_hit,
-             CAST(s + (64 - registers_hit) * (CAST(1 AS BIGINT) << 51)
-               AS DOUBLE) / CAST(2251799813685248 AS DOUBLE) AS z
-             FROM a)
-       SELECT g AS $outName, registers_hit,
-         round(CASE WHEN CAST('$alpha' AS DOUBLE) / z <= CAST(160 AS DOUBLE)
-                    AND registers_hit < 64
-           THEN CAST(64 AS DOUBLE) * ln(CAST(64 AS DOUBLE)
-             / (64 - registers_hit))
-           ELSE CAST('$alpha' AS DOUBLE) / z END, 6) AS est_distinct
-       FROM f"""
-  }
-
-  private def minhashCtes: String = minhashCtesFrom("documents")
-
-  /** The same CTE chain over any (doc_id, text) relation name visible
-    * in the enclosing scope — the curation-funnel oracle runs it over
-    * the quality SURVIVORS, not the corpus. */
-  /** toks → shingles → md5 → per-family minima (the `mh` CTE), WITHOUT
-    * a banding — shared by the fixed-banding chain below and the q208
-    * sweep, whose banding is per grid point. */
-  private def minhashMhCtesFrom(src: String): String = {
-    val P = Dedup.MinHashP
-    val mins = (0 until MinhashPerms).map { p =>
-      val a = (p * 1000003L + 17L) % P
-      val b = (p * 999983L + 9176L) % P
-      s"min((h * $a + $b) % $P) AS mh$p"
-    }.mkString(", ")
-    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM $src),
-       sh AS (SELECT doc_id, CASE WHEN len(w) >= $MinhashK
-         THEN list_distinct([array_to_string(w[i+1:i+$MinhashK], ' ') for i in range(0, len(w) - ${MinhashK - 1})])
-         ELSE [array_to_string(w, ' ')] END AS shingles FROM toks),
-       ex AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-       hh AS (SELECT doc_id, ${sqlHexLong("s")} % $P AS h FROM ex),
-       mh AS (SELECT doc_id, $mins FROM hh GROUP BY doc_id)"""
-  }
-
-  /** [[gradedTwinSpike]] restated as a CTE — the corpus under both LSH
-    * calibration audits (q206/q208). */
-  private def gradedSpikeCte: String =
-    """spiked AS (
-       SELECT d.doc_id,
-         CASE WHEN d.doc_id % 30 = 1 AND p.text IS NOT NULL
-                THEN p.text || ' augx augy'
-              WHEN d.doc_id % 30 = 11 AND p.text IS NOT NULL
-                THEN p.text || ' ' || array_to_string(
-                  [concat('aug', d.doc_id, 'x', i) for i in
-                   range(1, greatest(len(string_split(p.text, ' ')) // 5, 1) + 1)], ' ')
-              WHEN d.doc_id % 30 = 21 AND p.text IS NOT NULL
-                THEN array_to_string(string_split(p.text, ' ')
-                    [1:len(string_split(p.text, ' ')) // 2], ' ')
-                  || ' ' || array_to_string(
-                  [concat('aug', d.doc_id, 'x', i) for i in
-                   range(1, greatest(len(string_split(p.text, ' ')) // 2, 1) + 1)], ' ')
-              ELSE d.text END AS text
-       FROM documents d LEFT JOIN documents p ON p.doc_id = d.doc_id - 1)"""
-
-  /** Exact τ ground truth over `spiked` at the MinHash shingle order —
-    * q158's PPJoin shape (df-ascending prefix postings, maxPostings
-    * 1000) ending in `truth(doc_a, doc_b)`. Shared by q206/q208. */
-  private def ppjoinTruthCtes(tau: Int): String = {
-    val k = MinhashK
-    val shingleCase = s"""CASE WHEN len(w) >= $k
-      THEN list_distinct([array_to_string(w[i+1:i+$k], ' ') for i in range(0, len(w) - ${k - 1})])
-      ELSE [array_to_string(w, ' ')] END"""
-    s"""stoks AS (SELECT doc_id, string_split(text, ' ') AS w FROM spiked),
-       ssh AS (SELECT doc_id, $shingleCase AS s FROM stoks),
-       st AS (SELECT doc_id, unnest(s) AS tk FROM ssh),
-       sdf AS (SELECT tk, count(*) AS dfc FROM st GROUP BY 1),
-       slens AS (SELECT doc_id, count(*) AS la FROM st GROUP BY 1),
-       spref AS (SELECT doc_id, la, tk FROM (
-           SELECT st.doc_id, st.tk, sdf.dfc, l.la,
-             row_number() OVER (PARTITION BY st.doc_id
-               ORDER BY sdf.dfc, st.tk) AS rk
-           FROM st JOIN sdf USING (tk) JOIN slens l ON l.doc_id = st.doc_id)
-         WHERE rk <= la - (($tau * la + 99) // 100) + 1 AND dfc <= 1000),
-       scand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           a.la AS la, b.la AS lb
-         FROM spref a JOIN spref b ON a.tk = b.tk AND a.doc_id < b.doc_id
-           AND 100 * least(a.la, b.la) >= $tau * greatest(a.la, b.la)),
-       truth AS (SELECT c.doc_a, c.doc_b FROM (
-           SELECT c.doc_a, c.doc_b, c.la, c.lb,
-             CAST(count(*) AS BIGINT) AS overlap
-           FROM scand c JOIN st x ON x.doc_id = c.doc_a
-             JOIN st y ON y.doc_id = c.doc_b AND y.tk = x.tk
-           GROUP BY 1, 2, 3, 4) c
-         WHERE 100 * c.overlap >= $tau * (c.la + c.lb - c.overlap))"""
-  }
-
-  private def minhashCtesFrom(src: String): String = {
-    val rows = MinhashPerms / MinhashBands
-    val bands = (0 until MinhashBands).map { b =>
-      val cols = (0 until rows).map(r => s"mh${b * rows + r}").mkString(", ")
-      s"SELECT doc_id, $b AS band_idx, md5(concat_ws(',', $cols)) AS band_hash FROM mh"
-    }.mkString(" UNION ALL ")
-    // `ok` mirrors the operator's maxBucket degenerate-band cap exactly
-    s"""${minhashMhCtesFrom(src)},
-       banded AS ($bands),
-       ok AS (SELECT band_idx, band_hash FROM banded
-              GROUP BY 1, 2 HAVING count(*) BETWEEN 2 AND $DefaultMaxBucket)"""
-  }
-
-  /** Generated oracle: dataset-level MinHash signature agreement keyed
-    * by SOURCE (mirrors Dedup.signatureOverlap — the group min over a
-    * source's shingle multiset is the min over the union of its docs'
-    * shingle sets, so no per-doc stage appears on either side). */
-  private def sourceOverlapOracle: String = {
-    val P = Dedup.MinHashP
-    val mins = (0 until MinhashPerms).map { p =>
-      val a = (p * 1000003L + 17L) % P
-      val b = (p * 999983L + 9176L) % P
-      s"min((h * $a + $b) % $P) AS mh$p"
-    }.mkString(", ")
-    val agree = (0 until MinhashPerms)
-      .map(p => s"(CASE WHEN a.mh$p = b.mh$p THEN 1 ELSE 0 END)")
-      .mkString(" + ")
-    s"""WITH toks AS (SELECT source, string_split(text, ' ') AS w FROM documents),
-       sh AS (SELECT source, CASE WHEN len(w) >= $MinhashK
-         THEN list_distinct([array_to_string(w[i+1:i+$MinhashK], ' ') for i in range(0, len(w) - ${MinhashK - 1})])
-         ELSE [array_to_string(w, ' ')] END AS shingles FROM toks),
-       ex AS (SELECT source, unnest(shingles) AS s FROM sh),
-       hh AS (SELECT source, ${sqlHexLong("s")} % $P AS h FROM ex),
-       mh AS (SELECT source, $mins FROM hh GROUP BY source)
-       SELECT a.source AS source_a, b.source AS source_b,
-         CAST($agree AS BIGINT) AS n_agree,
-         round(CAST($agree AS DOUBLE) / $MinhashPerms, 6) AS jaccard_est
-       FROM mh a JOIN mh b ON a.source < b.source"""
-  }
-
-  /** Generated oracle: MinHash+LSH candidates, same algorithm in SQL
-    * (one md5 per shingle, affine family `(a_p*h + b_p) mod P`). */
-  private def minhashOracle: String = minhashOracleFrom("documents")
-
-  private def minhashOracleFrom(src: String): String =
-    s"""${minhashCtesFrom(src)}
-       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       FROM banded a JOIN banded b
-         ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
-       JOIN ok ON a.band_idx = ok.band_idx AND a.band_hash = ok.band_hash"""
-
-  /** Generated oracle: signature-agreement Jaccard estimate for the
-    * q29 candidate pairs (mirrors Dedup.minHashEstimate). */
-  private def minhashEstOracle: String = {
-    val agree = (0 until MinhashPerms)
-      .map(p => s"(CASE WHEN x.mh$p = y.mh$p THEN 1 ELSE 0 END)").mkString(" + ")
-    s"""$minhashCtes,
-       cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         FROM banded a JOIN banded b
-           ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
-         JOIN ok ON a.band_idx = ok.band_idx AND a.band_hash = ok.band_hash)
-       SELECT c.doc_a, c.doc_b,
-         round(CAST($agree AS DOUBLE) / $MinhashPerms, 6) AS jaccard_est
-       FROM cand c JOIN mh x ON c.doc_a = x.doc_id JOIN mh y ON c.doc_b = y.doc_id"""
-  }
-
-  /** Generated oracle: SimHash signatures, same bit-vote algorithm. */
-  private def simhashOracle: String = {
-    val bits = 56
-    val votes = (0 until bits).map(i =>
-      s"SUM(CASE WHEN ((h >> $i) & 1) = 1 THEN 1 ELSE -1 END) AS s$i").mkString(", ")
-    val sig = (0 until bits).map(i =>
-      s"CASE WHEN s$i > 0 THEN (CAST(1 AS BIGINT) << $i) ELSE 0 END").mkString(" + ")
-    s"""WITH t AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS w FROM documents),
-       e AS (SELECT doc_id, ${sqlHexLong("u")} AS h FROM (SELECT doc_id, unnest(w) AS u FROM t)),
-       v AS (SELECT doc_id, $votes FROM e GROUP BY doc_id)
-       SELECT doc_id AS doc, CAST($sig AS BIGINT) AS simhash FROM v"""
-  }
-
-  /** Generated oracle: SimHash 4×14-bit pigeonhole band candidates —
-    * the q30 signature pipeline, then band extraction + bucket self-join
-    * (mirrors Dedup.simHashCandidates' grouping exactly: distinct pairs,
-    * doc_a < doc_b, Hamming distance of the full signatures). */
-  private def simhashCandidatesOracle: String = {
-    val bits = 56
-    val votes = (0 until bits).map(i =>
-      s"SUM(CASE WHEN ((h >> $i) & 1) = 1 THEN 1 ELSE -1 END) AS s$i").mkString(", ")
-    val sig = (0 until bits).map(i =>
-      s"CASE WHEN s$i > 0 THEN (CAST(1 AS BIGINT) << $i) ELSE 0 END").mkString(" + ")
-    val bands = (0 until 4).map(b =>
-      s"SELECT doc_id, sh, $b AS band_idx, (sh >> ${b * 14}) & 16383 AS band_val FROM sig")
-      .mkString(" UNION ALL ")
-    s"""WITH t AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS w FROM documents),
-       e AS (SELECT doc_id, ${sqlHexLong("u")} AS h FROM (SELECT doc_id, unnest(w) AS u FROM t)),
-       v AS (SELECT doc_id, $votes FROM e GROUP BY doc_id),
-       sig AS (SELECT doc_id, CAST($sig AS BIGINT) AS sh FROM v),
-       banded AS ($bands),
-       ok AS (SELECT band_idx, band_val FROM banded
-              GROUP BY 1, 2 HAVING count(*) BETWEEN 2 AND $SimhashMaxBucket)
-       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         CAST(bit_count(xor(a.sh, b.sh)) AS BIGINT) AS hamming
-       FROM banded a JOIN banded b
-         ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-       JOIN ok ON a.band_idx = ok.band_idx AND a.band_val = ok.band_val
-       WHERE bit_count(xor(a.sh, b.sh)) <= $SimhashMaxHamming"""
-  }
-
-  /** Shared CTE chain of the image/video grid-hash oracles
-    * (q198/q199/q204/q205): the
-    * [[graft.operators.Multimodal.pngFixture]] 9×8 block grid restated
-    * as md5 arithmetic under `prefix` (ids ≡ 1 mod 10 reuse id−1's
-    * blocks with the top row's first three twisted), then the
-    * gradient-bit assembly — bit r·8+c set iff cell (r, c+1) > (r, c).
-    * DuckDB refuses `1 << 63` (signed overflow), so bit 63 is the
-    * min-long literal; bit_or keeps the accumulation in BIGINT. Ends
-    * with `h(doc_id, dhash)`. */
-  private def gridHashCtes(prefix: String): String = {
-    val vSeed = sqlHexLong(
-      s"concat('$prefix:', d.doc_id - (CASE WHEN d.doc_id % 10 = 1 THEN 1 ELSE 0 END), ':', r.r, ':', c.c)")
-    val vTwist = sqlHexLong(s"concat('$prefix:', d.doc_id, ':twist:', c.c)")
-    s"""cells AS (
-         SELECT d.doc_id, r.r, c.c,
-           CASE WHEN d.doc_id % 10 = 1 AND r.r = 0 AND c.c <= 2
-             THEN $vTwist % 256 ELSE $vSeed % 256 END AS v
-         FROM documents d, range(8) r(r), range(9) c(c)),
-       h AS (
-         SELECT a.doc_id,
-           bit_or(CASE WHEN b.v > a.v THEN
-               CASE WHEN a.r * 8 + a.c = 63 THEN (-9223372036854775807 - 1)
-                 ELSE (CAST(1 AS BIGINT) << CAST(a.r * 8 + a.c AS INT)) END
-             ELSE 0 END) AS dhash
-         FROM cells a JOIN cells b
-           ON a.doc_id = b.doc_id AND a.r = b.r AND b.c = a.c + 1
-         WHERE a.c <= 7 GROUP BY 1)"""
-  }
-  private def imageDHashCtes: String = gridHashCtes("img")
-
-  /** A [[graft.operators.Multimodal.walkBit]] walk grid as arithmetic:
-    * the planted gradient bits ARE the hash
-    * (`md5("<prefix>:<seed>:<r>:<c>") % 2`), no pixel model — the
-    * walk-fixture sibling of [[gridHashCtes]], same twin/twist rule.
-    * Shared by the MJPEG ("mjb") and H.264-I_PCM ("avp") fixtures.
-    * Ends with `h(doc_id, dhash)`. */
-  private def walkHashCtes(prefix: String): String = {
-    val bSeed = sqlHexLong(
-      s"concat('$prefix:', d.doc_id - (CASE WHEN d.doc_id % 10 = 1 THEN 1 ELSE 0 END), ':', r.r, ':', c.c)")
-    val bTwist = sqlHexLong(s"concat('$prefix:', d.doc_id, ':twist:', c.c)")
-    s"""bits AS (
-         SELECT d.doc_id, r.r, c.c,
-           CASE WHEN d.doc_id % 10 = 1 AND r.r = 0 AND c.c <= 2
-             THEN $bTwist % 2 ELSE $bSeed % 2 END AS b
-         FROM documents d, range(8) r(r), range(8) c(c)),
-       h AS (
-         SELECT doc_id,
-           bit_or(CASE WHEN b = 1 THEN
-               CASE WHEN r * 8 + c = 63 THEN (-9223372036854775807 - 1)
-                 ELSE (CAST(1 AS BIGINT) << CAST(r * 8 + c AS INT)) END
-             ELSE 0 END) AS dhash
-         FROM bits GROUP BY 1)"""
-  }
-
-  /** The [[graft.operators.Multimodal.wavFixture]] 65-segment envelope
-    * as arithmetic: amplitudes `md5("aud:<seed>:<s>") % 32768`, bit s
-    * iff segment s+1 is strictly louder — the 1-D sibling of
-    * [[gridHashCtes]]. Ends with `h(doc_id, dhash)`. */
-  private def audioHashCtes: String = {
-    val vSeed = sqlHexLong(
-      "concat('aud:', d.doc_id - (CASE WHEN d.doc_id % 10 = 1 THEN 1 ELSE 0 END), ':', s.s)")
-    val vTwist = sqlHexLong("concat('aud:', d.doc_id, ':twist:', s.s)")
-    s"""cells AS (
-         SELECT d.doc_id, s.s,
-           CASE WHEN d.doc_id % 10 = 1 AND s.s <= 2
-             THEN $vTwist % 32768 ELSE $vSeed % 32768 END AS v
-         FROM documents d, range(65) s(s)),
-       h AS (
-         SELECT a.doc_id,
-           bit_or(CASE WHEN b.v > a.v THEN
-               CASE WHEN a.s = 63 THEN (-9223372036854775807 - 1)
-                 ELSE (CAST(1 AS BIGINT) << CAST(a.s AS INT)) END
-             ELSE 0 END) AS dhash
-         FROM cells a JOIN cells b
-           ON a.doc_id = b.doc_id AND b.s = a.s + 1
-         WHERE a.s <= 63 GROUP BY 1)"""
-  }
-
-  /** The q49-shape band/bucket/Hamming pair SQL over a `h(doc_id,
-    * dhash)` CTE chain — the oracle twin of the shared Spark banding
-    * ([[graft.operators.Multimodal.imageNearDup]] and siblings). */
-  private def bandPairsSql(hashCtes: String): String = {
-    val bands = (0 until 4).map(b =>
-      s"SELECT doc_id, dhash, $b AS band_idx, (dhash >> ${b * 16}) & 65535 AS band_val FROM h")
-      .mkString(" UNION ALL ")
-    s"""WITH $hashCtes,
-       banded AS ($bands),
-       ok AS (SELECT band_idx, band_val FROM banded
-              GROUP BY 1, 2 HAVING count(*) BETWEEN 2 AND $DefaultMaxBucket)
-       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS hamming
-       FROM banded a JOIN banded b
-         ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-           AND a.doc_id < b.doc_id
-       JOIN ok ON a.band_idx = ok.band_idx AND a.band_val = ok.band_val
-       WHERE bit_count(xor(a.dhash, b.dhash)) <= 3"""
-  }
-
-  /** Generated oracle: IVF ANN — stride-anchor quantizer, argmax-cosine
-    * cell assignment, nProbe probe, exact re-rank (mirrors
-    * Similarity.ivfKnn; cosine fold order is bit-identical, so the
-    * unrounded ORDER BY in the assignment windows agrees too). */
-  private def ivfOracle: String = {
-    val anchorMax = IvfStride * IvfCells
-    ivfOracleFrom(
-      s"""a AS (SELECT vec_id AS cell_id, emb AS aemb FROM c
-             WHERE vec_id % $IvfStride = 0 AND vec_id < $anchorMax)""")
-  }
-
-  /** Generated oracle: ANN recall audit — [[ivfOracle]]'s candidate
-    * chain and q31's brute-force chain over the same 1-in-40 sampled
-    * query set, reconciled per query into exact integer recall. */
-  private def annRecallOracle: String = {
-    val anchorMax = IvfStride * IvfCells
-    def cos(a: String, b: String) = cosineSql(a, b)
-    s"""WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-       a AS (SELECT vec_id AS cell_id, emb AS aemb FROM c
-             WHERE vec_id % $IvfStride = 0 AND vec_id < $anchorMax),
-       cells AS (SELECT vec_id AS neighbor_id, emb AS cemb, cell_id FROM (
-         SELECT c.vec_id AS vec_id, c.emb AS emb, a.cell_id AS cell_id,
-           row_number() OVER (PARTITION BY c.vec_id
-             ORDER BY ${cos("c.emb", "a.aemb")} DESC, a.cell_id) AS rk
-         FROM c, a) WHERE rk = 1),
-       q AS (SELECT vec_id, emb FROM c WHERE vec_id % 40 = 0),
-       probes AS (SELECT vec_id AS query_id, emb AS qemb, cell_id FROM (
-         SELECT q.vec_id AS vec_id, q.emb AS emb, a.cell_id AS cell_id,
-           row_number() OVER (PARTITION BY q.vec_id
-             ORDER BY ${cos("q.emb", "a.aemb")} DESC, a.cell_id) AS rk
-         FROM q, a) WHERE rk <= $IvfProbe),
-       icand AS (SELECT query_id, neighbor_id,
-           round(${cos("qemb", "cemb")}, 6) AS cos_sim
-         FROM probes JOIN cells USING (cell_id) WHERE query_id <> neighbor_id),
-       ivf AS (SELECT query_id, neighbor_id FROM (
-         SELECT *, row_number() OVER (PARTITION BY query_id
-           ORDER BY cos_sim DESC, neighbor_id) AS rn FROM icand
-         WHERE cos_sim IS NOT NULL) WHERE rn <= 10),
-       bcand AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           round(${cos("q.emb", "c.emb")}, 6) AS cos_sim
-         FROM q, c WHERE q.vec_id <> c.vec_id),
-       brute AS (SELECT query_id, neighbor_id FROM (
-         SELECT *, row_number() OVER (PARTITION BY query_id
-           ORDER BY cos_sim DESC, neighbor_id) AS rn FROM bcand
-         WHERE cos_sim IS NOT NULL) WHERE rn <= 10)
-       SELECT b.query_id, CAST(count(*) AS BIGINT) AS n_true,
-         CAST(count(i.neighbor_id) AS BIGINT) AS n_hit,
-         CAST(count(i.neighbor_id) * 1000000 // count(*) AS BIGINT)
-           AS recall_micro
-       FROM brute b LEFT JOIN ivf i
-         ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-       GROUP BY 1"""
-  }
-
-  /** The shared post-quantizer IVF oracle: argmax-cosine cell
-    * assignment, nProbe probe, exact re-rank (mirrors
-    * Similarity.ivfKnnWith; cosine fold order is bit-identical, so the
-    * unrounded ORDER BY in the assignment windows agrees too). The
-    * quantizer arrives as a CTE named `a(cell_id, aemb)` — stride-
-    * filtered from the corpus for q50, an injected VALUES table of
-    * trained centroids for q60. The `cos_sim IS NOT NULL` guard
-    * mirrors TopKByScore's null-score skip (zero-norm embeddings are
-    * out of the ranking on BOTH sides). */
-  private def ivfOracleFrom(anchorsCte: String): String = {
-    def cos(a: String, b: String) = cosineSql(a, b)
-    s"""WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-       $anchorsCte,
-       cells AS (SELECT vec_id AS neighbor_id, emb AS cemb, cell_id FROM (
-         SELECT c.vec_id AS vec_id, c.emb AS emb, a.cell_id AS cell_id,
-           row_number() OVER (PARTITION BY c.vec_id
-             ORDER BY ${cos("c.emb", "a.aemb")} DESC, a.cell_id) AS rk
-         FROM c, a) WHERE rk = 1),
-       q AS (SELECT vec_id, emb FROM c WHERE vec_id < 5),
-       probes AS (SELECT vec_id AS query_id, emb AS qemb, cell_id FROM (
-         SELECT q.vec_id AS vec_id, q.emb AS emb, a.cell_id AS cell_id,
-           row_number() OVER (PARTITION BY q.vec_id
-             ORDER BY ${cos("q.emb", "a.aemb")} DESC, a.cell_id) AS rk
-         FROM q, a) WHERE rk <= $IvfProbe),
-       cand AS (SELECT query_id, neighbor_id, round(${cos("qemb", "cemb")}, 6) AS cos_sim
-         FROM probes JOIN cells USING (cell_id) WHERE query_id <> neighbor_id),
-       r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-         ORDER BY cos_sim DESC, neighbor_id) AS rn FROM cand
-         WHERE cos_sim IS NOT NULL)
-       SELECT query_id, neighbor_id, cos_sim, CAST(rn AS BIGINT) AS knn_rank
-       FROM r WHERE rn <= 10"""
-  }
-
-  /** Double literals that round-trip bit-exactly into DuckDB: Java's
-    * shortest-repr `Double.toString` parses back to the identical IEEE
-    * bits under any correctly-rounded strtod, so the injected centroid
-    * VALUES reproduce the trained quantizer exactly. */
-  private def sqlDouble(v: Double): String = {
-    require(!v.isNaN && !v.isInfinite, s"non-finite centroid component: $v")
-    s"CAST(${java.lang.Double.toString(v)} AS DOUBLE)"
-  }
-
-  /** Captured by the q60 builder when the k-means quantizer trains (the
-    * fit is eager and driver-coordinated, the centroids are <= IvfCells
-    * rows); read back when the oracle SQL is dumped — Verify runs every
-    * query BEFORE dumping oracle_sql.json, so the capture is always
-    * populated for the same data the dump was produced from. */
-  @volatile private var q60Centroids: Option[Seq[(Long, Array[Double])]] = None
-
-  /** Captured by the q154 builder when the PCA fits (driver-coordinated,
-    * bounded: 64 means + 4×64 eigenvector components); read back when
-    * the oracle SQL is dumped — the q60-centroid mechanism. */
-  @volatile private var q154Model: Option[Pca.PcaModel] = None
-
-  /** Captured by the q155 builder (same deterministic fit as q154's —
-    * independent capture so each query's oracle stands alone). */
-  @volatile private var q155Model: Option[Pca.PcaModel] = None
-
-  /** Captured by the q160 builder (independent capture, q154's rule);
-    * only the model crosses — the z-quantization RANGE is recomputed
-    * inside both engines from the bit-identical projections. */
-  @volatile private var q160Model: Option[Pca.PcaModel] = None
-
-  private val PqSubspaces = 8
-  private val PqCodes = 16
-
-  /** Captured by the q156 builder when the per-subspace PQ codebooks
-    * train (driver-coordinated, bounded: PqCodes full-dim codewords). */
-  @volatile private var q156Codebook: Option[Seq[(Long, Array[Double])]] = None
-
-  /** Generated oracle: PQ ADC — the trained codewords as a VALUES CTE,
-    * then the full code-assignment + LUT + top-k chain mirrored
-    * (per-subspace slice folds identical to q119's; per-cell micro
-    * quantization makes the total an order-free BIGINT sum). */
-  private def pqAdcOracle: Map[String, String] =
-    q156Codebook.map { cbRows =>
-      val m = PqSubspaces
-      val len = 64 / m
-      def dist(s: Int, a: String, b: String): String =
-        s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-           [($a[i+1] - $b[i+1]) * ($a[i+1] - $b[i+1])
-            for i in range(${len * s}, ${len * (s + 1)})]),
-           (acc, x) -> acc + x)"""
-      def arg(s: Int): String =
-        s"""a$s AS (SELECT vec_id, code_id FROM
-           (SELECT vec_id, code_id,
-             row_number() OVER (PARTITION BY vec_id ORDER BY d$s, code_id) AS rk
-            FROM d) WHERE rk = 1)"""
-      val values = cbRows.map { case (id, cw) =>
-        s"(CAST($id AS BIGINT), [${cw.map(sqlDouble).mkString(", ")}])"
-      }.mkString(", ")
-      val codeCols = (0 until m).map(s => s"a$s.code_id AS c$s").mkString(", ")
-      val codeJoins = (1 until m).map(s => s"JOIN a$s USING (vec_id)").mkString(" ")
-      val cellJoins = (1 until m).map(s =>
-        s"JOIN cells c$s ON c$s.query_id = c0.query_id AND c$s.code_id = cd.c$s")
-        .mkString("\n             ")
-      "q156_pq_adc" ->
-        s"""WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-           cb AS (SELECT code_id, cw FROM (VALUES $values) AS t(code_id, cw)),
-           d AS (SELECT c.vec_id AS vec_id, cb.code_id AS code_id,
-             ${(0 until m).map(s => s"${dist(s, "c.e", "cb.cw")} AS d$s").mkString(", ")}
-             FROM c, cb),
-           ${(0 until m).map(arg).mkString(",\n           ")},
-           codes AS MATERIALIZED (SELECT a0.vec_id AS vec_id, $codeCols
-             FROM a0 $codeJoins),
-           q AS (SELECT vec_id AS query_id, e AS qe FROM c WHERE vec_id < 5),
-           cells AS MATERIALIZED (SELECT q.query_id AS query_id, cb.code_id AS code_id,
-             ${(0 until m).map(s =>
-               s"CAST(floor(${dist(s, "q.qe", "cb.cw")} * 1e6 + 0.5) AS BIGINT) AS m$s")
-               .mkString(", ")}
-             FROM q, cb),
-           ad AS (SELECT c0.query_id AS query_id, cd.vec_id AS neighbor_id,
-               ${(0 until m).map(s => s"c$s.m$s").mkString(" + ")} AS adc_micro
-             FROM codes cd
-               JOIN cells c0 ON c0.code_id = cd.c0
-               $cellJoins
-             WHERE c0.query_id <> cd.vec_id),
-           r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-             ORDER BY adc_micro, neighbor_id) AS rn FROM ad)
-           SELECT query_id, neighbor_id, adc_micro, CAST(rn AS BIGINT) AS pq_rank
-           FROM r WHERE rn <= 10"""
-    }.toMap
-
-  /** Shared injected-literal projection CTE: `p AS (SELECT <keep>,
-    * p1..pk FROM e)` with the captured mean and top-k eigenvectors as
-    * inline DOUBLE-list literals and the per-row centered dot product
-    * as the same left-to-right fold [[cosineSql]] uses. */
-  private def pcaProjCte(m: Pca.PcaModel, k: Int, keep: String): String = {
-    def lst(a: Array[Double]): String =
-      "[" + a.map(sqlDouble).mkString(", ") + "]"
-    val mu = lst(m.mean)
-    val pcs = m.eigenvectors.take(k).zipWithIndex.map { case (v, k0) =>
-      s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         [(emb[i+1] - $mu[i+1]) * ${lst(v)}[i+1] for i in range(0, 64)]),
-         (acc, x) -> acc + x) AS p${k0 + 1}"""
-    }.mkString(", ")
-    s"""e AS (SELECT $keep, CAST(embedding AS DOUBLE[]) AS emb
-         FROM embeddings WHERE len(embedding) = 64),
-       p AS (SELECT $keep, $pcs FROM e)"""
-  }
-
-  /** Generated oracle: Mahalanobis outliers — the captured model's
-    * top-8 projection, Σ pc²/λ left-to-right, micro quantize,
-    * row_number top-20 (mirrors the bounded two-phase top-k). */
-  private def mahalanobisOracle: Map[String, String] =
-    q155Model.map { m =>
-      val md = (1 to 8).map(k =>
-        s"(p$k * p$k) / ${sqlDouble(m.eigenvalues(k - 1))}").mkString(" + ")
-      "q155_mahalanobis" ->
-        s"""WITH ${pcaProjCte(m, 8, "vec_id")},
-           md AS (SELECT vec_id,
-             CAST(floor(($md) * 1e6 + 0.5) AS BIGINT) AS md_micro FROM p),
-           r AS (SELECT *, row_number() OVER
-             (ORDER BY md_micro DESC, vec_id) AS rn FROM md)
-           SELECT vec_id, md_micro, CAST(rn AS BIGINT) AS out_rank
-           FROM r WHERE rn <= 20"""
-    }.toMap
-
-  /** Generated oracle: PCA projection — the captured mean and top-4
-    * eigenvectors as inline DOUBLE-list literals, the per-row centered
-    * dot product as the same left-to-right fold [[cosineSql]] uses, and
-    * the per-label means as exact nano-fixed-point integer sums. */
-  private def pcaOracle: Map[String, String] =
-    q154Model.map { m =>
-      val means = (1 to 4).map(k =>
-        s"""(CAST(CAST(sum(CAST(floor(p$k * 1e9 + 0.5) AS BIGINT)) AS BIGINT)
-           AS DOUBLE) / 1e9) / CAST(count(*) AS DOUBLE) AS mean_pc$k""")
-        .mkString(", ")
-      "q154_pca_project" ->
-        s"""WITH ${pcaProjCte(m, 4, "label")}
-           SELECT label, CAST(count(*) AS BIGINT) AS n_vecs, $means
-           FROM p GROUP BY 1"""
-    }.toMap
-
-  /** Generated oracle: Z-order cells — captured model through the
-    * shared projection CTE, range + quantization + the unrolled
-    * bit-interleave mirrored digit for digit (disjoint bits: + is |). */
-  private def zorderOracle: Map[String, String] =
-    q160Model.map { m =>
-      val z = (0 until 5).map(i =>
-        s"(((qx >> $i) & 1) << ${2 * i}) + (((qy >> $i) & 1) << ${2 * i + 1})")
-        .mkString(" + ")
-      def qz(p: String, lo: String, hi: String): String =
-        s"""CAST(CASE WHEN $hi > $lo
-           THEN least(floor(($p - $lo) / ($hi - $lo) * 32.0),
-             CAST(31 AS DOUBLE))
-           ELSE 0 END AS BIGINT)"""
-      "q160_zorder_cells" ->
-        s"""WITH ${pcaProjCte(m, 2, "vec_id")},
-           rng AS (SELECT min(p1) AS n1, max(p1) AS x1,
-             min(p2) AS n2, max(p2) AS x2 FROM p),
-           qq AS (SELECT ${qz("p1", "n1", "x1")} AS qx,
-             ${qz("p2", "n2", "x2")} AS qy FROM p CROSS JOIN rng),
-           cells AS (SELECT $z AS z_cell,
-             CAST(count(*) AS BIGINT) AS n_vecs FROM qq GROUP BY 1)
-           SELECT z_cell, n_vecs FROM cells
-           ORDER BY n_vecs DESC, z_cell LIMIT 50"""
-    }.toMap
-
-  /** Generated oracle: trained-quantizer IVF — the captured centroids as
-    * a VALUES CTE through the shared post-quantizer oracle. Empty (no
-    * entry -> driver records rows-only) only if q60 never ran or failed,
-    * in which case an oracle would be meaningless anyway. */
-  private def trainedIvfOracle: Map[String, String] =
-    q60Centroids.map { cents =>
-      val rows = cents.map { case (id, arr) =>
-        s"(CAST($id AS BIGINT), [${arr.map(sqlDouble).mkString(", ")}])"
-      }.mkString(", ")
-      "q60_ivf_trained" -> ivfOracleFrom(
-        s"a AS (SELECT cell_id, aemb FROM (VALUES $rows) AS t(cell_id, aemb))")
-    }.toMap
-
-  /** Gap-based sessionization oracle — shared verbatim by q63 (plain)
-    * and q68 (salted): the salted operator's contract is bit-identical
-    * output. */
-  private val sessionsOracle: String =
-    """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-       l AS (SELECT *, lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) AS prev FROM e),
-       f AS (SELECT *, CASE WHEN prev IS NULL OR us - prev > 1800000000 THEN 1 ELSE 0 END AS nw FROM l),
-       s AS (SELECT *, CAST(sum(nw) OVER (PARTITION BY user_id ORDER BY us, event_id
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq FROM f)
-       SELECT user_id, session_seq, CAST(count(*) AS BIGINT) AS n_events,
-         min(us) AS session_start_us, max(us) AS session_end_us,
-         (max(us) - min(us)) // 1000000 AS duration_secs
-       FROM s GROUP BY 1, 2"""
-
-  /** Generated oracle: marker-word language ID. */
-  private def langidOracle: String = {
-    val scores = TextAnalysis.langMarkers.map { case (lang, ms) =>
-      val set = ms.map(m => s"'$m'").mkString(", ")
-      s"list_sum([CASE WHEN x IN ($set) THEN 1 ELSE 0 END for x in w]) AS score_$lang"
-    }.mkString(", ")
-    val names = TextAnalysis.langMarkers.map { case (l, _) => s"score_$l" }
-    val best = s"greatest(${names.mkString(", ")})"
-    val pick = TextAnalysis.langMarkers.map { case (l, _) =>
-      s"WHEN score_$l = best AND best > 0 THEN '$l'"
-    }.mkString(" ")
-    s"""WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents),
-       sc AS (SELECT doc_id, lang, $scores FROM t),
-       b AS (SELECT *, $best AS best FROM sc)
-       SELECT doc_id, CASE $pick ELSE 'und' END AS lang_pred, lang AS lang_declared FROM b"""
-  }
-
-  /** SQL mirror of Similarity.lshBucket / functions.LshBucketSig: same
-    * md5-derived weights (inlined as integer constants via
-    * Hashing.hexLongJvm — bit-identical to md5 in either engine), same
-    * left-to-right double fold, same sign test per bit. */
-  private def lshBucketSql(embExpr: String, table: Int, nBits: Int,
-      dim: Int): String =
-    (0 until nBits).map { bit =>
-      val proj = (0 until dim).map { dd =>
-        val k = Hashing.hexLongJvm(s"$table:$bit:$dd") % 1000L
-        s"$embExpr[${dd + 1}] * (CAST($k AS DOUBLE)/500.0 - 1.0)"
-      }.mkString(" + ")
-      s"(CASE WHEN ($proj) > 0 THEN CAST(${1L << bit} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-    }.mkString(" + ")
-
-  private def cosineSql(ae: String, be: String): String = {
-    def dotp(u: String, v: String) =
-      s"list_reduce(list_prepend(CAST(0 AS DOUBLE), [$u[i+1] * $v[i+1] for i in range(0, 64)]), (acc, x) -> acc + x)"
-    s"${dotp(ae, be)} / (sqrt(${dotp(ae, ae)}) * sqrt(${dotp(be, be)}))"
-  }
-
-  private val pipelineOracle: Map[String, String] = Map(
-    "q24_text_tokens" ->
-      """SELECT doc_id, len(string_split(text, ' ')) AS n_tokens,
-         CAST(len(string_split(text, ' ')) + list_sum([greatest(0, (length(x) - 1) // 4) for x in string_split(text, ' ')]) AS BIGINT) AS n_tokens_bpe,
-         length(text) AS n_chars_measured FROM documents""",
-    "q25_text_fingerprint" ->
-      s"""SELECT doc_id, md5(lower(trim(text))) AS fp,
-         list_reduce(list_prepend(CAST(0 AS BIGINT),
-           [${sqlHexLong("x")} % 2147483647 for x in string_split(text, ' ')]),
-           (acc, v) -> (acc * 31 + v) % 2147483647) AS roll_hash
-         FROM documents""",
-    "q26_text_langid" -> langidOracle,
-    "q27_text_quality" ->
-      """SELECT doc_id, len(string_split(text, ' ')) AS n_tokens,
-         round(CAST(length(text) - len(string_split(text, ' ')) + 1 AS DOUBLE) / len(string_split(text, ' ')), 4) AS avg_token_len,
-         round(CAST(list_sum([CASE WHEN x IN ('the','a','of','and','to','in','is') THEN 1 ELSE 0 END for x in string_split(text, ' ')]) AS DOUBLE) / len(string_split(text, ' ')), 4) AS stopword_ratio,
-         round(least(CAST(1 AS DOUBLE), CAST(len(string_split(text, ' ')) AS DOUBLE) / 64) * 0.5
-             + least(CAST(1 AS DOUBLE), CAST(list_sum([CASE WHEN x IN ('the','a','of','and','to','in','is') THEN 1 ELSE 0 END for x in string_split(text, ' ')]) AS DOUBLE) / len(string_split(text, ' ')) * 5) * 0.5, 4) AS quality_score
-         FROM documents""",
-    "q28_dedup_exact" ->
-      "SELECT md5(lower(trim(text))) AS fp, CAST(min(doc_id) AS BIGINT) AS keep_id, CAST(count(*) AS BIGINT) AS n_dups FROM documents GROUP BY 1",
-    "q29_dedup_minhash" -> minhashOracle,
-
-    // q29's banding CTE as the pair set, then exact Σmin/Σmax over
-    // per-doc token frequencies (Σmax via na + nb − Σmin); tf is
-    // restricted to candidate docs FIRST — without it DuckDB starts the
-    // pair join from `a.token = b.token` (a corpus-wide token
-    // self-join: 85 s at sf0.1 vs ~1 s with the restriction)
-    "q213_weighted_jaccard" ->
-      s"""WITH cand AS ($minhashOracle),
-         cdocs AS (SELECT doc_a AS d FROM cand
-                   UNION SELECT doc_b FROM cand),
-         tf AS (SELECT doc_id, u AS token, CAST(count(*) AS BIGINT) AS tf
-                FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS u
-                      FROM documents WHERE text IS NOT NULL
-                        AND doc_id IN (SELECT d FROM cdocs))
-                GROUP BY 1, 2),
-         sizes AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n
-                   FROM tf GROUP BY 1),
-         inter AS (SELECT c.doc_a, c.doc_b,
-             CAST(sum(least(a.tf, b.tf)) AS BIGINT) AS nmin
-           FROM cand c
-           JOIN tf a ON c.doc_a = a.doc_id
-           JOIN tf b ON c.doc_b = b.doc_id AND a.token = b.token
-           GROUP BY 1, 2)
-         SELECT c.doc_a, c.doc_b,
-           CAST(coalesce(i.nmin, 0) AS BIGINT) AS n_min,
-           CAST(coalesce(za.n, 0) + coalesce(zb.n, 0)
-             - coalesce(i.nmin, 0) AS BIGINT) AS n_max,
-           CASE WHEN coalesce(za.n, 0) + coalesce(zb.n, 0)
-                     - coalesce(i.nmin, 0) > 0
-             THEN round(CAST(coalesce(i.nmin, 0) AS DOUBLE) /
-               (coalesce(za.n, 0) + coalesce(zb.n, 0) - coalesce(i.nmin, 0)),
-               6) END AS w_jaccard
-         FROM cand c
-         LEFT JOIN inter i ON c.doc_a = i.doc_a AND c.doc_b = i.doc_b
-         LEFT JOIN sizes za ON c.doc_a = za.doc_id
-         LEFT JOIN sizes zb ON c.doc_b = zb.doc_id""",
-    "q30_dedup_simhash" -> simhashOracle,
-    "q31_knn_brute" -> {
-      val cos = cosineSql("qe", "ce")
-      s"""WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id < 5),
-         c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS ce FROM embeddings),
-         sim AS (SELECT query_id, neighbor_id, round($cos, 6) AS cos_sim
-                 FROM q, c WHERE query_id <> neighbor_id),
-         r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rn
-               FROM sim WHERE cos_sim IS NOT NULL)
-         SELECT query_id, neighbor_id, cos_sim, CAST(rn AS BIGINT) AS knn_rank FROM r WHERE rn <= 10"""
-    },
-    "q32_embedding_neardup" -> {
-      val cos = cosineSql("x.emb", "y.emb")
-      val branches = (0 until LshTables).map(t =>
-        s"SELECT vec_id, emb, $t AS tbl, ${lshBucketSql("emb", t, LshBits, EmbDim)} AS bucket FROM e")
-        .mkString(" UNION ALL ")
-      // `ok` mirrors the operator's maxBucket degenerate-bucket cap
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         b AS ($branches),
-         ok AS (SELECT tbl, bucket FROM b
-                GROUP BY 1, 2 HAVING count(*) BETWEEN 2 AND $DefaultMaxBucket)
-         SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b, round($cos, 6) AS cos_sim
-         FROM b x JOIN b y
-           ON x.tbl = y.tbl AND x.bucket = y.bucket AND x.vec_id < y.vec_id
-         JOIN ok ON x.tbl = ok.tbl AND x.bucket = ok.bucket
-         WHERE round($cos, 6) > 0.3"""
-    },
-    // q126: q31's ranking shape over q32's bucket-blocked candidate set
-    // (dedup'd pair candidates, no maxBucket cap — lshKnn has none)
-    "q126_lsh_knn" -> {
-      val cos = cosineSql("qe.emb", "ce.emb")
-      val branches = (0 until LshTables).map(t =>
-        s"SELECT vec_id, $t AS tbl, ${lshBucketSql("emb", t, LshBits, EmbDim)} AS bucket FROM e")
-        .mkString(" UNION ALL ")
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         b AS ($branches),
-         cand AS (SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-                  FROM b q JOIN b c ON q.tbl = c.tbl AND q.bucket = c.bucket
-                  WHERE q.vec_id < 5 AND q.vec_id <> c.vec_id),
-         sim AS (SELECT query_id, neighbor_id, round($cos, 6) AS cos_sim
-                 FROM cand JOIN e qe ON cand.query_id = qe.vec_id
-                           JOIN e ce ON cand.neighbor_id = ce.vec_id),
-         r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                 ORDER BY cos_sim DESC, neighbor_id) AS rn
-               FROM sim WHERE cos_sim IS NOT NULL)
-         SELECT query_id, neighbor_id, cos_sim, CAST(rn AS BIGINT) AS knn_rank
-         FROM r WHERE rn <= 10"""
-    },
-    "q134_bitext_margin" -> {
-      val cos = cosineSql("se.emb", "te.emb")
-      val branches = (0 until LshTables).map(t =>
-        s"SELECT vec_id, label, $t AS tbl, ${lshBucketSql("emb", t, LshBits, EmbDim)} AS bucket FROM e")
-        .mkString(" UNION ALL ")
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb, label FROM embeddings),
-         b AS ($branches),
-         ok AS (SELECT tbl, bucket FROM b
-                GROUP BY 1, 2 HAVING count(*) <= $DefaultMaxBucket),
-         cand AS (SELECT DISTINCT s.vec_id AS src_id, t.vec_id AS tgt_id
-                  FROM b s JOIN b t ON s.tbl = t.tbl AND s.bucket = t.bucket
-                  JOIN ok ON s.tbl = ok.tbl AND s.bucket = ok.bucket
-                  WHERE s.label < 5 AND t.label >= 5),
-         cm AS (SELECT src_id, tgt_id,
-                  CAST(floor($cos * CAST(1000000 AS DOUBLE) + 0.5) AS BIGINT) AS cos_micro
-                FROM cand JOIN e se ON cand.src_id = se.vec_id
-                          JOIN e te ON cand.tgt_id = te.vec_id),
-         cp AS (SELECT * FROM cm WHERE cos_micro > 0),
-         st AS (SELECT *, row_number() OVER (PARTITION BY src_id
-                  ORDER BY cos_micro DESC, tgt_id) AS rn FROM cp),
-         ss AS (SELECT src_id, CAST(sum(cos_micro) AS BIGINT) AS sumX,
-                  CAST(count(*) AS BIGINT) AS cntX
-                FROM st WHERE rn <= 4 GROUP BY 1),
-         tt AS (SELECT *, row_number() OVER (PARTITION BY tgt_id
-                  ORDER BY cos_micro DESC, src_id) AS rn FROM cp),
-         ts AS (SELECT tgt_id, CAST(sum(cos_micro) AS BIGINT) AS sumY,
-                  CAST(count(*) AS BIGINT) AS cntY
-                FROM tt WHERE rn <= 4 GROUP BY 1),
-         mg AS (SELECT st.src_id, st.tgt_id, st.cos_micro,
-                  CAST(floor(
-                    (CAST(2 AS DOUBLE) * cntX * cntY * st.cos_micro) /
-                    CAST(sumX * cntY + sumY * cntX AS DOUBLE)
-                    * CAST(1000000 AS DOUBLE) + 0.5) AS BIGINT) AS margin_micro
-                FROM st JOIN ss USING (src_id) JOIN ts USING (tgt_id)
-                WHERE st.rn <= 4),
-         best AS (SELECT *, row_number() OVER (PARTITION BY src_id
-                    ORDER BY margin_micro DESC, tgt_id) AS brn
-                  FROM mg WHERE margin_micro > 1050000)
-         SELECT src_id, tgt_id, cos_micro, margin_micro
-         FROM best WHERE brn = 1"""
-    },
-
-    "q49_simhash_candidates" -> simhashCandidatesOracle,
-    "q50_ivf_knn" -> ivfOracle,
-    "q224_ann_recall" -> annRecallOracle,
-    // connected components = transitive closure (recursive CTE) over the
-    // same candidate edges, min reachable id per doc
-    "q51_dedup_components" ->
-      s"""WITH RECURSIVE cand AS ($minhashOracle),
-         edges AS (SELECT doc_a AS src, doc_b AS dst FROM cand
-                   UNION SELECT doc_b, doc_a FROM cand),
-         reach AS (SELECT src, dst FROM edges
-                   UNION
-                   SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
-         SELECT src AS doc, CAST(least(src, min(dst)) AS BIGINT) AS component
-         FROM reach GROUP BY src""",
-    "q53_vocabulary" ->
-      """SELECT token, CAST(count(*) AS BIGINT) AS n_occurrences,
-         CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-         FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents)
-         GROUP BY token ORDER BY n_occurrences DESC, token LIMIT 200""",
-    "q57_tfidf" ->
-      """WITH ex AS (SELECT doc_id AS doc, unnest(string_split(text, ' ')) AS token FROM documents),
-         tf AS (SELECT doc, token, CAST(count(*) AS BIGINT) AS tf FROM ex GROUP BY 1, 2),
-         dfreq AS (SELECT token, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-         n AS (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS nd FROM documents)
-         SELECT doc, tf.token AS token, tf,
-           round(ln(CAST(nd + 1 AS DOUBLE) / (df + 1)) + 1.0, 6) AS idf,
-           round(tf * (ln(CAST(nd + 1 AS DOUBLE) / (df + 1)) + 1.0), 6) AS tfidf
-         FROM tf JOIN dfreq ON tf.token = dfreq.token CROSS JOIN n""",
-    // DuckDB regexp_replace needs the 'g' flag for replace-all (Spark's
-    // default); the strip class escapes its single quotes for SQL
-    "q54_normalize" -> {
-      val strip = TextAnalysis.NormalizeStrip.replace("'", "''")
-      val spiked = """CASE WHEN doc_id % 5 = 0
-        THEN '  "Hello,  WORLD!"  (' || text || ') ...' ELSE text END"""
-      val norm =
-        s"trim(regexp_replace(regexp_replace(lower($spiked), '$strip', '', 'g'), '\\s+', ' ', 'g'))"
-      s"""SELECT doc_id, $norm AS norm_text, $norm <> text AS changed
-         FROM documents"""
-    },
-    "q55_dedup_survivors" ->
-      s"""WITH RECURSIVE cand AS ($minhashOracle),
-         edges AS (SELECT doc_a AS src, doc_b AS dst FROM cand
-                   UNION SELECT doc_b, doc_a FROM cand),
-         reach AS (SELECT src, dst FROM edges
-                   UNION
-                   SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-         cc AS (SELECT src AS doc, least(src, min(dst)) AS component
-                FROM reach GROUP BY src)
-         SELECT doc_id, lang FROM documents
-         WHERE doc_id NOT IN (SELECT doc FROM cc WHERE doc <> component)""",
-    "q52_stratified_sample" -> {
-      val cases = StratRates.toSeq.sortBy(_._1).map { case (s, f) =>
-        s"WHEN lang = '${s.replace("'", "''")}' THEN ${(f * 10000).toLong}"
-      }.mkString(" ")
-      s"""SELECT doc_id, lang FROM documents
-         WHERE ${sqlHexLong("CAST(doc_id AS VARCHAR)")} % 10000 <
-           (CASE $cases ELSE ${(StratDefault * 10000).toLong} END)"""
-    },
-    "q33_multimodal_meta" ->
-      s"""SELECT doc_id, octet_length(encode(text)) AS n_bytes, md5(text) AS content_hash,
-         ${sqlHexLong("text")} % 640 AS fake_width,
-         ${sqlHexLong("concat('1:', text)")} % 480 AS fake_height,
-         octet_length(encode(text)) // 1024 + 1 AS fake_n_frames FROM documents""",
-    "q37_content_flags" ->
-      """WITH spiked AS (SELECT doc_id, text ||
-           CASE WHEN doc_id % 7 = 0 THEN ' contact user@example.com'
-                WHEN doc_id % 11 = 0 THEN ' see https://example.com/x'
-                WHEN doc_id % 13 = 0 THEN ' ref 123456789'
-                ELSE '' END AS text
-         FROM documents)
-         SELECT doc_id,
-         regexp_matches(lower(text), '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z][a-z]+') AS has_email,
-         regexp_matches(lower(text), 'https?://[a-z0-9./_%+-]+') AS has_url,
-         regexp_matches(lower(text), '[0-9]{8}') AS has_long_digits
-         FROM spiked""",
-    "q38_repetition" ->
-      """WITH ex AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-         g AS (SELECT doc_id, tok, count(*) AS c FROM ex GROUP BY 1, 2)
-         SELECT doc_id AS doc, CAST(sum(c) AS BIGINT) AS n_tokens,
-           round(CAST(count(*) AS DOUBLE) / sum(c), 6) AS distinct_ratio,
-           round(CAST(max(c) AS DOUBLE) / sum(c), 6) AS top_token_share
-         FROM g GROUP BY doc_id""",
-    "q39_chunking" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         c AS (SELECT doc_id,
-           [array_to_string(w[i*24+1 : i*24+32], ' ')
-            for i in range(0, greatest(1, CAST(ceil(CAST(len(w) - 8 AS DOUBLE) / 24) AS BIGINT)))] AS chunks
-           FROM t)
-         SELECT doc_id, unnest(range(0, len(chunks))) AS chunk_idx,
-           unnest(chunks) AS chunk FROM c""",
-    "q40_sample" -> {
-      s"SELECT o_orderkey, o_custkey FROM orders WHERE " +
-        s"${sqlHexLong("CAST(o_orderkey AS VARCHAR)")} % 10000 < 1000"
-    },
-    "q34_jaccard" ->
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id < 20),
-         pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-                   FROM d a, d b WHERE a.doc_id < b.doc_id),
-         toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM d),
-         sh AS (SELECT doc_id, CASE WHEN len(w) >= 3
-           THEN list_distinct([array_to_string(w[i+1:i+3], ' ') for i in range(0, len(w) - 2)])
-           ELSE [array_to_string(w, ' ')] END AS shingles FROM toks),
-         ex AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-         sizes AS (SELECT doc_id, count(*) AS n FROM ex GROUP BY doc_id),
-         inter AS (SELECT sa.doc_id AS doc_a, sb.doc_id AS doc_b, count(*) AS ni
-                   FROM ex sa JOIN ex sb ON sa.s = sb.s AND sa.doc_id < sb.doc_id
-                   GROUP BY 1, 2)
-         SELECT p.doc_a, p.doc_b,
-           round(CAST(COALESCE(i.ni, 0) AS DOUBLE) /
-             (za.n + zb.n - COALESCE(i.ni, 0)), 6) AS jaccard
-         FROM pairs p
-         LEFT JOIN inter i ON p.doc_a = i.doc_a AND p.doc_b = i.doc_b
-         JOIN sizes za ON p.doc_a = za.doc_id
-         JOIN sizes zb ON p.doc_b = zb.doc_id""",
-
-    // fragmentation + boundary-key join mirrored op for op; the tail
-    // slice is w[n-4:n] (DuckDB 1-based inclusive = Spark slice(-5,5))
-    "q161_fragment_stitch" ->
-      """WITH base AS (SELECT doc_id, text,
-           len(string_split(text, ' ')) AS n,
-           string_split(text, ' ') AS w
-           FROM documents WHERE text IS NOT NULL),
-         sp AS (SELECT * FROM base WHERE doc_id % 5 = 0 AND n >= 12),
-         f AS (SELECT doc_id * 10 AS frag_id,
-             array_to_string(w[1:(n // 2) + 5], ' ') AS text FROM sp
-           UNION ALL SELECT doc_id * 10 + 1,
-             array_to_string(w[(n // 2) + 1:n], ' ') FROM sp
-           UNION ALL SELECT doc_id * 10, text FROM base
-             WHERE NOT (doc_id % 5 = 0 AND n >= 12)),
-         ky AS (SELECT frag_id, len(w2) AS n,
-             array_to_string(w2[1:5], ' ') AS head,
-             array_to_string(w2[len(w2) - 4:len(w2)], ' ') AS tail
-           FROM (SELECT frag_id, string_split(text, ' ') AS w2 FROM f)
-           WHERE len(w2) >= 6)
-         SELECT a.frag_id AS left_id, b.frag_id AS right_id,
-           a.tail AS boundary,
-           CAST(a.n + b.n - 5 AS BIGINT) AS stitched_tokens
-         FROM ky a JOIN ky b
-           ON a.tail = b.head AND a.frag_id <> b.frag_id""",
-
-    // same spike (CASE order mirrors the when-chain), same trimmed
-    // non-empty line split, same three line rules and two page rules
-    "q162_line_clean" ->
-      """WITH spiked AS (SELECT doc_id,
-           (CASE WHEN doc_id % 19 = 0 THEN text
-                 ELSE regexp_replace(text, '((?:\S+ ){5}\S+) ',
-                   '\1.' || chr(10), 'g') END)
-           || (CASE WHEN doc_id % 13 = 0
-                 THEN chr(10) || 'lorem ipsum dolor sit amet.'
-               WHEN doc_id % 17 = 0
-                 THEN chr(10) || 'function() { return x; }'
-               WHEN doc_id % 11 = 0
-                 THEN chr(10) || 'please enable javascript to view this content.'
-               WHEN doc_id % 7 = 0 THEN chr(10) || 'short line.'
-               ELSE '' END) AS text
-         FROM documents),
-         ls AS (SELECT doc_id,
-           [trim(x) for x in string_split(text, chr(10))
-            if trim(x) <> ''] AS ls FROM spiked),
-         j AS (SELECT doc_id, ls,
-           len([l for l in ls if contains(l, '{') OR contains(l, '}')
-                OR contains(l, 'lorem ipsum')]) > 0 AS pf,
-           [l for l in ls if regexp_matches(l, '[.!?"]$')
-              AND len([w for w in regexp_split_to_array(l, ' +')
-                       if w <> '']) >= 3
-              AND NOT contains(l, 'javascript')] AS kept
-         FROM ls)
-         SELECT doc_id, CAST(len(ls) AS BIGINT) AS n_lines,
-           CAST(len(kept) AS BIGINT) AS n_kept,
-           CASE WHEN pf THEN 'page_filter'
-                WHEN len(kept) < 3 THEN 'short_page'
-                ELSE 'kept' END AS disposition,
-           CASE WHEN NOT pf AND len(kept) >= 3
-                THEN array_to_string(kept, chr(10)) ELSE '' END AS clean_text
-         FROM j""",
-
-    // Heaps curve mirrored op for op: one type-keyed aggregate, the
-    // micro-quantized-log least-squares slope in exact integer sums
-    "q159_heaps_law" -> {
-      val cuts = Seq(16L, 32L, 64L, 128L, 256L, 512L, 1024L, 2048L)
-      val tcols = cuts.map(c =>
-        s"sum(CASE WHEN doc_id < $c THEN 1 ELSE 0 END) AS t$c").mkString(", ")
-      val vagg = cuts.map(c =>
-        s"count(CASE WHEN m < $c THEN 1 END) AS v$c").mkString(", ")
-      val nagg = cuts.map(c => s"CAST(sum(t$c) AS BIGINT) AS n$c").mkString(", ")
-      val logs = cuts.map(c =>
-        s"""CAST(floor(ln(CAST(n$c AS DOUBLE)) * 1000000.0 + 0.5) AS BIGINT) AS x$c,
-           CAST(floor(ln(CAST(v$c AS DOUBLE)) * 1000000.0 + 0.5) AS BIGINT) AS y$c""")
-        .mkString(", ")
-      val np = cuts.size
-      val sx = cuts.map(c => s"x$c").mkString(" + ")
-      val sy = cuts.map(c => s"y$c").mkString(" + ")
-      val sxy = cuts.map(c => s"x$c * y$c").mkString(" + ")
-      val sxx = cuts.map(c => s"x$c * x$c").mkString(" + ")
-      val unions = cuts.map(c =>
-        s"""SELECT CAST($c AS BIGINT) AS cutoff, n$c AS n_tokens,
-           CAST(v$c AS BIGINT) AS n_vocab, beta_micro FROM b""")
-        .mkString("\n         UNION ALL ")
-      s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w
-           FROM documents WHERE text IS NOT NULL),
-         sh AS (SELECT doc_id, CASE WHEN len(w) >= 3
-           THEN [array_to_string(w[i+1:i+3], ' ') for i in range(0, len(w) - 2)]
-           ELSE [array_to_string(w, ' ')] END AS s FROM toks),
-         t AS (SELECT doc_id, unnest(s) AS tk FROM sh),
-         g AS (SELECT tk, min(doc_id) AS m, $tcols FROM t GROUP BY tk),
-         r AS (SELECT $vagg, $nagg FROM g),
-         l AS (SELECT *, $logs FROM r),
-         b AS (SELECT *, CAST(floor(
-             CAST($np * ($sxy) - ($sx) * ($sy) AS DOUBLE) /
-             CAST($np * ($sxx) - ($sx) * ($sx) AS DOUBLE)
-             * 1000000.0 + 0.5) AS BIGINT) AS beta_micro FROM l)
-         $unions"""
-    },
-
-    // prefix filter mirrored op for op: (df, token)-ranked prefix of
-    // length |T| - ceil(tau|T|) + 1, candidate equi-join on prefix
-    // tokens with the integer length filter, exact-overlap verify on
-    // candidates only; the maxPostings=1000 cap mirrors the operator's
-    "q158_setsim_join" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         sh AS (SELECT doc_id, CASE WHEN len(w) >= 3
-           THEN list_distinct([array_to_string(w[i+1:i+3], ' ') for i in range(0, len(w) - 2)])
-           ELSE [array_to_string(w, ' ')] END AS s FROM toks),
-         t AS (SELECT doc_id, unnest(s) AS tk FROM sh),
-         df AS (SELECT tk, count(*) AS dfc FROM t GROUP BY 1),
-         lens AS (SELECT doc_id, count(*) AS la FROM t GROUP BY 1),
-         pref AS (SELECT doc_id, la, tk FROM (
-             SELECT t.doc_id, t.tk, df.dfc, l.la,
-               row_number() OVER (PARTITION BY t.doc_id
-                 ORDER BY df.dfc, t.tk) AS rk
-             FROM t JOIN df USING (tk) JOIN lens l ON l.doc_id = t.doc_id)
-           WHERE rk <= la - ((60 * la + 99) // 100) + 1 AND dfc <= 1000),
-         cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             a.la AS la, b.la AS lb
-           FROM pref a JOIN pref b ON a.tk = b.tk AND a.doc_id < b.doc_id
-             AND 100 * least(a.la, b.la) >= 60 * greatest(a.la, b.la)),
-         ov AS (SELECT c.doc_a, c.doc_b, c.la, c.lb,
-             CAST(count(*) AS BIGINT) AS overlap
-           FROM cand c JOIN t x ON x.doc_id = c.doc_a
-             JOIN t y ON y.doc_id = c.doc_b AND y.tk = x.tk
-           GROUP BY 1, 2, 3, 4)
-         SELECT doc_a, doc_b, overlap,
-           CAST(floor(CAST(overlap AS DOUBLE) / (la + lb - overlap)
-             * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0 AS jaccard
-         FROM ov WHERE 100 * overlap >= 60 * (la + lb - overlap)""",
-    // same 5-shingle construction as the minhash oracle; every 7th doc
-    // is the benchmark side
-    "q58_decontaminate" ->
-      s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         sh AS (SELECT doc_id, CASE WHEN len(w) >= $MinhashK
-           THEN list_distinct([array_to_string(w[i+1:i+$MinhashK], ' ') for i in range(0, len(w) - ${MinhashK - 1})])
-           ELSE [array_to_string(w, ' ')] END AS shingles FROM toks),
-         ex AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-         bs AS (SELECT DISTINCT s FROM ex WHERE doc_id % 7 = 0)
-         SELECT e.doc_id AS doc, CAST(count(*) AS BIGINT) AS n_contaminated
-         FROM ex e JOIN bs USING (s) WHERE e.doc_id % 7 <> 0 GROUP BY 1""",
-    "q65_top_quality_docs" ->
-      """WITH q AS (SELECT doc_id, lang,
-           round(least(CAST(1 AS DOUBLE), CAST(len(string_split(text, ' ')) AS DOUBLE) / 64) * 0.5
-             + least(CAST(1 AS DOUBLE), CAST(list_sum([CASE WHEN x IN ('the','a','of','and','to','in','is') THEN 1 ELSE 0 END for x in string_split(text, ' ')]) AS DOUBLE) / len(string_split(text, ' ')) * 5) * 0.5, 4) AS quality_score
-         FROM documents),
-         r AS (SELECT *, row_number() OVER (PARTITION BY lang
-           ORDER BY quality_score DESC, doc_id) AS rn FROM q
-           WHERE quality_score IS NOT NULL)
-         SELECT lang, doc_id, quality_score, CAST(rn AS BIGINT) AS q_rank
-         FROM r WHERE rn <= 3""",
-    "q66_bigram_pmi" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         bg AS (SELECT unnest([{'w1': w[i], 'w2': w[i+1]} for i in range(1, len(w))]) AS b FROM toks),
-         bc AS (SELECT b.w1 AS w1, b.w2 AS w2, CAST(count(*) AS BIGINT) AS c_ab
-                FROM bg GROUP BY 1, 2 HAVING count(*) >= 2),
-         uni AS (SELECT unnest(w) AS tok FROM toks),
-         uc AS (SELECT tok, CAST(count(*) AS BIGINT) AS c FROM uni GROUP BY 1),
-         n AS (SELECT CAST(sum(c) AS BIGINT) AS nn FROM uc)
-         SELECT w1, w2, c_ab,
-           round(ln(CAST(nn AS DOUBLE) * c_ab / (a.c * b.c)), 6) AS pmi
-         FROM bc JOIN uc a ON bc.w1 = a.tok JOIN uc b ON bc.w2 = b.tok CROSS JOIN n""",
-    "q67_char_entropy" ->
-      """WITH ch AS (SELECT doc_id, unnest(string_split(text, '')) AS c FROM documents),
-         cc AS (SELECT doc_id, c, CAST(count(*) AS BIGINT) AS n FROM ch
-                WHERE c <> '' GROUP BY 1, 2),
-         h AS (SELECT doc_id, list(n ORDER BY c) AS hist,
-               CAST(sum(n) AS BIGINT) AS t FROM cc GROUP BY 1)
-         SELECT doc_id AS doc, t AS n_chars,
-           round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             [-(CAST(n AS DOUBLE) / t) * ln(CAST(n AS DOUBLE) / t) for n in hist]),
-             (acc, v) -> acc + v), 6) AS char_entropy
-         FROM h""",
-    "q63_sessions" -> sessionsOracle,
-    // the salted operator must produce byte-identical sessions — its
-    // oracle IS the unsalted formulation
-    "q68_sessions_salted" -> sessionsOracle,
-    // segment = non-overlapping 5-word window (pos // 5 reproduces
-    // chunks(text, 5, 0)); boilerplate = segment in >= 3 distinct docs
-    "q69_segment_dedup" ->
-      """WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word,
-           generate_subscripts(string_split(text, ' '), 1) - 1 AS pos FROM documents),
-         seg AS (SELECT doc_id, pos // 5 AS seg_idx,
-           string_agg(word, ' ' ORDER BY pos) AS seg FROM w GROUP BY doc_id, pos // 5),
-         freq AS (SELECT seg FROM (SELECT seg, count(DISTINCT doc_id) AS df
-           FROM seg GROUP BY seg) WHERE df >= 3),
-         kept AS (SELECT s.* FROM seg s ANTI JOIN freq f ON s.seg = f.seg),
-         rebuilt AS (SELECT doc_id, string_agg(seg, ' ' ORDER BY seg_idx) AS clean_text,
-           CAST(count(*) AS BIGINT) AS n_kept FROM kept GROUP BY doc_id),
-         totals AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_total
-           FROM seg GROUP BY doc_id)
-         SELECT t.doc_id, coalesce(r.clean_text, '') AS clean_text,
-           coalesce(r.n_kept, 0) AS n_kept,
-           t.n_total - coalesce(r.n_kept, 0) AS n_removed
-         FROM totals t LEFT JOIN rebuilt r USING (doc_id)""",
-    // the single global running sum IS the contract; the Spark side must
-    // reproduce it exactly from range shards + broadcast prefixes
-    "q70_pack_offsets" ->
-      """WITH n AS (SELECT doc_id,
-           CAST(coalesce(len(string_split(text, ' ')), 0) AS BIGINT) AS n_tokens
-           FROM documents),
-         o AS (SELECT doc_id, n_tokens,
-           CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-             AS start_offset FROM n)
-         SELECT doc_id, n_tokens, start_offset,
-           start_offset // 512 AS chunk_first,
-           CASE WHEN n_tokens > 0 THEN (start_offset + n_tokens - 1) // 512
-                ELSE start_offset // 512 END AS chunk_last,
-           (CASE WHEN n_tokens > 0 THEN (start_offset + n_tokens - 1) // 512
-                 ELSE start_offset // 512 END) - start_offset // 512 + 1 AS n_chunks
-         FROM o""",
-    // the greedy fold replayed as a per-shard recursive CTE: row n
-    // derives its (bin, fill) from row n-1; recursion depth = docs per
-    // shard (= shardSize at dense ids), all shards advance in parallel
-    "q72_pack_greedy" ->
-      """WITH RECURSIVE n AS (SELECT doc_id,
-           CAST(coalesce(len(string_split(text, ' ')), 0) AS BIGINT) AS n_tokens,
-           doc_id // 100 AS shard FROM documents),
-         r AS (SELECT shard, doc_id, n_tokens,
-           row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn FROM n),
-         g AS (
-           SELECT shard, doc_id, n_tokens, rn,
-             CAST(0 AS BIGINT) AS bin, n_tokens AS fill
-           FROM r WHERE rn = 1
-           UNION ALL
-           SELECT r.shard, r.doc_id, r.n_tokens, r.rn,
-             CASE WHEN g.fill > 0 AND g.fill + r.n_tokens > 128
-                  THEN g.bin + 1 ELSE g.bin END,
-             CASE WHEN g.fill > 0 AND g.fill + r.n_tokens > 128
-                  THEN r.n_tokens ELSE g.fill + r.n_tokens END
-           FROM g JOIN r ON r.shard = g.shard AND r.rn = g.rn + 1)
-         SELECT doc_id, n_tokens, shard, bin FROM g""",
-    // both legs bounded to 100 then fused: 1/(60+rank) summed, absent
-    // legs contribute 0; CAST(1.0 AS DOUBLE) because DuckDB's bare 1.0
-    // is DECIMAL and decimal division would not match Spark's double
-    "q75_rrf_fusion" -> {
-      val cos = cosineSql("qe", "ce")
-      val terms = RrfTerms.map(t => s"'${t.replace("'", "''")}'").mkString(", ")
-      s"""WITH lex0 AS (SELECT doc_id,
-           len(list_intersect(list_distinct(string_split(text, ' ')),
-             [$terms])) AS ov FROM documents),
-         lexr AS (SELECT doc_id, CAST(row_number() OVER
-             (ORDER BY ov DESC, doc_id) AS BIGINT) AS lex_rank
-           FROM lex0 WHERE ov > 0
-           QUALIFY lex_rank <= 100),
-         c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS ce
-           FROM embeddings),
-         q AS (SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings
-           WHERE vec_id = 0),
-         sim AS (SELECT neighbor_id, round($cos, 6) AS cos_sim
-           FROM c, q WHERE neighbor_id <> 0),
-         vr AS (SELECT neighbor_id AS doc_id, CAST(row_number() OVER
-             (ORDER BY cos_sim DESC, neighbor_id) AS BIGINT) AS vec_rank
-           FROM sim WHERE cos_sim IS NOT NULL
-           QUALIFY vec_rank <= 100)
-         SELECT coalesce(l.doc_id, v.doc_id) AS doc_id,
-           l.lex_rank AS lex_rank, v.vec_rank AS vec_rank,
-           round(coalesce(CAST(1.0 AS DOUBLE) / (60 + l.lex_rank), 0) +
-                 coalesce(CAST(1.0 AS DOUBLE) / (60 + v.vec_rank), 0), 6)
-             AS rrf_score
-         FROM lexr l FULL OUTER JOIN vr v ON l.doc_id = v.doc_id
-         ORDER BY rrf_score DESC, doc_id LIMIT 20"""
-    },
-    // rates fold over the SORTED stratum array (bit-deterministic);
-    // sqrt, not pow(x, 0.5) — only sqrt is IEEE-guaranteed identical
-    "q73_mixture_sample" -> {
-      s"""WITH cnt AS (SELECT lang AS s, CAST(count(*) AS BIGINT) AS n
-           FROM documents GROUP BY lang),
-         a AS (SELECT list_sort(list(struct_pack(s := s, n := n))) AS arr FROM cnt),
-         t AS (SELECT
-           list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             [sqrt(CAST(x.n AS DOUBLE)) for x in arr]), (p, q) -> p + q) AS sw,
-           list_reduce(list_prepend(CAST(0 AS BIGINT),
-             [x.n for x in arr]), (p, q) -> p + q) AS nt,
-           unnest(arr) AS x FROM a),
-         thr AS (SELECT x.s AS lang,
-           CAST(floor(least(1.0, 0.5 * nt * sqrt(CAST(x.n AS DOUBLE)) /
-             (sw * CAST(x.n AS DOUBLE))) * 10000) AS BIGINT) AS thr FROM t)
-         SELECT d.doc_id, d.lang FROM documents d
-         JOIN thr ON d.lang = thr.lang
-         WHERE ${sqlHexLong("CAST(d.doc_id AS VARCHAR)")} % 10000 < thr.thr"""
-    },
-    // per-doc fold over the SORTED log-prob list (the charEntropy
-    // pattern) — never a scheduler-ordered float aggregation
-    "q74_bigram_lm" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         bgl AS (SELECT doc_id,
-           unnest([struct_pack(w1 := w[i+1], w2 := w[i+2])
-             for i in range(0, len(w) - 1)]) AS b
-           FROM t WHERE len(w) >= 2),
-         bg AS (SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM bgl),
-         c12 AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c FROM bg GROUP BY 1, 2),
-         c1 AS (SELECT w1, CAST(sum(c) AS BIGINT) AS cp FROM c12 GROUP BY 1),
-         lp AS (SELECT bg.doc_id, ln(CAST(c12.c AS DOUBLE) / c1.cp) AS lp
-           FROM bg JOIN c12 USING (w1, w2) JOIN c1 USING (w1)),
-         agg AS (SELECT doc_id, list_sort(list(lp)) AS lps FROM lp GROUP BY doc_id)
-         SELECT doc_id AS doc, CAST(len(lps) AS BIGINT) AS n_bigrams,
-           round(list_reduce(list_prepend(CAST(0 AS DOUBLE), lps),
-             (acc, x) -> acc + x) / len(lps), 6) AS lm_score
-         FROM agg""",
-    // quantizer parity: floor(x + 0.5), never round() — engines
-    // disagree on half-value ties; fold order mirrors the Spark
-    // aggregate (left-to-right, 0-seeded)
-    "q71_quantize_int8" ->
-      """WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         m AS (SELECT vec_id, emb,
-           list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             [abs(emb[i+1]) for i in range(0, 64)]),
-             (acc, x) -> CASE WHEN x > acc THEN x ELSE acc END) AS max_abs FROM c),
-         q AS (SELECT vec_id, emb, max_abs / 127.0 AS scale,
-           CASE WHEN max_abs = 0 THEN [CAST(0 AS BIGINT) for i in range(0, 64)]
-             ELSE [CAST(least(greatest(floor(emb[i+1] / (max_abs / 127.0) + 0.5),
-               -127), 127) AS BIGINT) for i in range(0, 64)] END AS qv FROM m)
-         SELECT vec_id, round(scale, 9) AS scale,
-           list_reduce(list_prepend(CAST(0 AS BIGINT), [abs(x) for x in qv]),
-             (acc, x) -> acc + x) AS q_l1,
-           list_min(qv) AS q_min, list_max(qv) AS q_max,
-           round(sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             [pow(emb[i+1] - qv[i+1] * scale, 2) for i in range(0, 64)]),
-             (acc, x) -> acc + x) / 64), 6) AS rmse
-         FROM q""",
-    "q64_minhash_est" -> minhashEstOracle,
-
-    // same graph (partkeys offset out of the custkey id space), three
-    // unrolled mutual-reinforcement rounds, round-14 cadence: the
-    // authority gather feeds the hub gather RAW, hubs rescale once per
-    // round, authorities once at output; the ×unit rescale is the
-    // exact two-stage ×1000×1000 long-division identity (mirrors
-    // Graph.hits — raw hub mass only needs ×1000 headroom)
-    "q168_hits" -> {
-      def scaled(v: String, mx: String) =
-        s"""CAST(($v * 1000 // ($mx)) * 1000
-            + ($v * 1000 % ($mx)) * 1000 // ($mx) AS BIGINT)"""
-      val roundCtes = (1 to 3).map { r =>
-        val prevH = if (r == 1) "h0" else s"h${r - 1}"
-        s"""ar$r AS MATERIALIZED (SELECT e.dst AS node, CAST(sum(p.v) AS BIGINT) AS s
-             FROM e JOIN $prevH p ON e.src = p.node GROUP BY 1),
-           hr$r AS MATERIALIZED (SELECT e.src AS node, CAST(sum(p.s) AS BIGINT) AS s
-             FROM e JOIN ar$r p ON e.dst = p.node GROUP BY 1),
-           h$r AS MATERIALIZED (SELECT node,
-               ${scaled("s", s"SELECT max(s) FROM hr$r")} AS v
-             FROM hr$r)"""
-      }.mkString(",\n         ")
-      // AS MATERIALIZED: each round references its predecessor
-      // TWICE (scalar max + join), so plain-CTE inlining re-derives the
-      // e self-join exponentially - the q84 fix
-      s"""WITH e AS MATERIALIZED (SELECT DISTINCT o_custkey AS src,
-             l_partkey + 10000000 AS dst
-           FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-           WHERE o_custkey IS NOT NULL AND l_partkey IS NOT NULL),
-         nodes AS MATERIALIZED (SELECT src AS node FROM e
-                   UNION SELECT dst FROM e),
-         h0 AS MATERIALIZED (SELECT node, CAST(1000000 AS BIGINT) AS v FROM nodes),
-         $roundCtes
-         SELECT n.node,
-           coalesce(${scaled("a.s", "SELECT max(s) FROM ar3")}, 0) AS auth_unit,
-           coalesce(h.v, 0) AS hub_unit
-         FROM nodes n LEFT JOIN ar3 a USING (node)
-         LEFT JOIN h3 h USING (node)"""
-    },
-
-    // equal-width value-range files from one min/max row per layout;
-    // the exact statistics test (kmax < lo OR kmin > hi)
-    "q174_pruning_audit" -> {
-      def layoutSql(name: String, orderExpr: String): String =
-        s"""SELECT '$name' AS layout, p.probe, n_files, n_skip,
-            CAST(n_skip * 1000000 // n_files AS BIGINT) AS skip_micro
-          FROM (
-            SELECT probe,
-              CAST(count(*) AS BIGINT) AS n_files,
-              CAST(sum(CASE WHEN kmax < lo OR kmin > hi
-                THEN 1 ELSE 0 END) AS BIGINT) AS n_skip
-            FROM (
-              SELECT CAST((o - mn) * 64 // (mx - mn + 1) AS BIGINT) AS f,
-                min(k) AS kmin, max(k) AS kmax
-              FROM (SELECT $orderExpr AS o,
-                      date_diff('day', DATE '1970-01-01', l_shipdate) AS k
-                    FROM lineitem
-                    WHERE ($orderExpr) IS NOT NULL
-                      AND l_shipdate IS NOT NULL) base,
-                   (SELECT min($orderExpr) AS mn, max($orderExpr) AS mx
-                    FROM lineitem
-                    WHERE ($orderExpr) IS NOT NULL
-                      AND l_shipdate IS NOT NULL) bounds
-              GROUP BY 1) fs,
-              (SELECT * FROM (VALUES
-                ('p1996h1', date_diff('day', DATE '1970-01-01', DATE '1996-01-01'),
-                            date_diff('day', DATE '1970-01-01', DATE '1996-06-30')),
-                ('p1997q1', date_diff('day', DATE '1970-01-01', DATE '1997-01-01'),
-                            date_diff('day', DATE '1970-01-01', DATE '1997-03-31')),
-                ('p1998h2', date_diff('day', DATE '1970-01-01', DATE '1998-07-01'),
-                            date_diff('day', DATE '1970-01-01', DATE '1998-12-31')),
-                ('p2001tail', date_diff('day', DATE '1970-01-01', DATE '2001-06-01'),
-                            date_diff('day', DATE '1970-01-01', DATE '2001-12-31')))
-                v(probe, lo, hi)) pr
-            GROUP BY probe) p"""
-      s"""${layoutSql("ingest", "l_orderkey")}
-         UNION ALL
-         ${layoutSql("shipdate",
-           "date_diff('day', DATE '1970-01-01', l_shipdate)")}"""
-    },
-
-    // q84's co-purchase graph with the teleport vector concentrated
-    // on the arithmetic seed set; same integer round unrolling
-    "q173_ppr" -> {
-      val unit = "1000000000000"
-      val rk = (1 to 5).map { k =>
-        s"""r$k AS MATERIALIZED (SELECT b.node,
-           b.tele + coalesce(CAST((85 * s.s) // 100 AS BIGINT), CAST(0 AS BIGINT)) AS r
-           FROM b LEFT JOIN (
-             SELECT e.dst AS node, CAST(sum(r${k - 1}.r // deg.deg) AS BIGINT) AS s
-             FROM e JOIN r${k - 1} ON e.src = r${k - 1}.node
-             JOIN deg ON e.src = deg.src GROUP BY 1) s
-           ON b.node = s.node)"""
-      }.mkString(",\n         ")
-      // AS MATERIALIZED: same >68 GB inlining spill as q84 (round 13)
-      s"""WITH e AS MATERIALIZED (SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-           FROM lineitem a JOIN lineitem b
-           ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
-         deg AS MATERIALIZED (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY 1),
-         seeds AS MATERIALIZED (SELECT p_partkey AS node FROM part WHERE p_partkey % 41 = 0),
-         nodes AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst FROM e
-                   UNION SELECT node FROM seeds),
-         ns AS (SELECT CAST(count(*) AS BIGINT) AS n FROM seeds),
-         tl AS (SELECT CAST((15 * ($unit // (SELECT n FROM ns))) // 100 AS BIGINT) AS t),
-         b AS MATERIALIZED (SELECT n.node,
-             CASE WHEN s.node IS NOT NULL THEN (SELECT t FROM tl)
-                  ELSE CAST(0 AS BIGINT) END AS tele
-           FROM nodes n LEFT JOIN seeds s ON n.node = s.node),
-         r0 AS (SELECT node, tele AS r FROM b),
-         $rk
-         SELECT node AS l_partkey, r AS rank_unit FROM r5"""
-    },
-
-    // q84's unrolled integer PageRank over the md5-id word graph
-    "q172_textrank" -> {
-      val unit = "1000000000000"
-      val h1 = sqlHexLong("w1")
-      val h2 = sqlHexLong("w2")
-      val hk = sqlHexLong("keyword")
-      val rk = (1 to 5).map { k =>
-        s"""r$k AS (SELECT n.node AS node,
-           (SELECT b FROM base) + coalesce(CAST((85 * s.s) // 100 AS BIGINT), CAST(0 AS BIGINT)) AS r
-           FROM nodes n LEFT JOIN (
-             SELECT e.dst AS node, CAST(sum(r${k - 1}.r // deg.deg) AS BIGINT) AS s
-             FROM e JOIN r${k - 1} ON e.src = r${k - 1}.node
-             JOIN deg ON e.src = deg.src GROUP BY 1) s
-           ON n.node = s.node)"""
-      }.mkString(",\n         ")
-      s"""WITH tk AS (SELECT [x FOR x IN string_split(
-             CASE WHEN doc_id % 3 = 0
-                  THEN text || ' quantum entangled lattice'
-                  WHEN doc_id % 3 = 1
-                  THEN text || ' quantum spectral manifold'
-                  ELSE text || ' quantum harmonic cascade' END, ' ')
-             IF len(x) >= 4] AS w
-           FROM documents WHERE text IS NOT NULL),
-         bp AS (SELECT unnest(w[1:len(w)-1]) AS w1,
-             unnest(w[2:len(w)]) AS w2
-           FROM tk WHERE len(w) >= 2),
-         e AS (SELECT DISTINCT $h1 AS src, $h2 AS dst FROM bp
-               WHERE w1 <> w2
-               UNION SELECT DISTINCT $h2, $h1 FROM bp WHERE w1 <> w2),
-         deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg
-                 FROM e GROUP BY 1),
-         nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-         nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
-         base AS (SELECT CAST((15 * ($unit // (SELECT n FROM nn))) // 100 AS BIGINT) AS b),
-         r0 AS (SELECT node, CAST($unit // (SELECT n FROM nn) AS BIGINT) AS r FROM nodes),
-         $rk,
-         vocab AS (SELECT DISTINCT keyword, $hk AS node FROM
-           (SELECT unnest(w) AS keyword FROM tk))
-         SELECT keyword, r AS rank_unit FROM r5 JOIN vocab USING (node)
-         ORDER BY rank_unit DESC, keyword LIMIT 50"""
-    },
-
-    // same bipartite edges; deg-capped common-neighbor self-join,
-    // floor(1e6/ln(deg)+0.5) weights, total-order top-100
-    "q171_adamic_adar" ->
-      """WITH e AS (SELECT DISTINCT o_custkey AS u, l_partkey AS z
-           FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-           WHERE o_custkey IS NOT NULL AND l_partkey IS NOT NULL),
-         w AS (SELECT z, CAST(count(*) AS BIGINT) AS deg
-               FROM e GROUP BY 1),
-         wk AS (SELECT z, CAST(floor(CAST(1000000 AS DOUBLE) / ln(deg)
-                  + 0.5) AS BIGINT) AS w
-                FROM w WHERE deg BETWEEN 2 AND 40),
-         pr AS (SELECT a.u AS u_a, b.u AS u_b,
-             CAST(count(*) AS BIGINT) AS n_common,
-             CAST(sum(wk.w) AS BIGINT) AS aa_micro
-           FROM e a JOIN e b ON a.z = b.z AND a.u < b.u
-           JOIN wk ON wk.z = a.z
-           GROUP BY 1, 2)
-         SELECT u_a, u_b, n_common, aa_micro FROM pr
-         ORDER BY aa_micro DESC, u_a, u_b LIMIT 100""",
-
-    // two q132-shaped add-one LMs (in-domain / general) scored in one
-    // pass; CED is a subtraction of two integer-div means
-    "q169_ced_select" -> {
-      val h = sqlHexLong("w[i]")
-      s"""WITH refzi AS (
-           SELECT unnest(h[1:len(h)-1]) AS b1, unnest(h[2:len(h)]) AS b2
-           FROM (SELECT [$h % 256 for i in range(1, len(w) + 1)] AS h
-                 FROM (SELECT string_split(text, ' ') AS w FROM documents
-                       WHERE source IN ('src0','src1') AND text IS NOT NULL))),
-         refpi AS (SELECT b1, b2, CAST(count(*) AS BIGINT) AS c12i
-                   FROM refzi GROUP BY 1, 2),
-         margi AS (SELECT b1, CAST(sum(c12i) AS BIGINT) AS c1i
-                   FROM refpi GROUP BY 1),
-         refzg AS (
-           SELECT unnest(h[1:len(h)-1]) AS b1, unnest(h[2:len(h)]) AS b2
-           FROM (SELECT [$h % 256 for i in range(1, len(w) + 1)] AS h
-                 FROM (SELECT string_split(text, ' ') AS w FROM documents
-                       WHERE source NOT IN ('src0','src1')
-                         AND text IS NOT NULL))),
-         refpg AS (SELECT b1, b2, CAST(count(*) AS BIGINT) AS c12g
-                   FROM refzg GROUP BY 1, 2),
-         margg AS (SELECT b1, CAST(sum(c12g) AS BIGINT) AS c1g
-                   FROM refpg GROUP BY 1),
-         dz AS (
-           SELECT doc_id, unnest(h[1:len(h)-1]) AS b1, unnest(h[2:len(h)]) AS b2
-           FROM (SELECT doc_id, [$h % 256 for i in range(1, len(w) + 1)] AS h
-                 FROM (SELECT doc_id, string_split(text, ' ') AS w
-                       FROM documents WHERE text IS NOT NULL))),
-         dp AS (SELECT doc_id, b1, b2, CAST(count(*) AS BIGINT) AS m
-                FROM dz GROUP BY 1, 2, 3),
-         scored AS (
-           SELECT doc_id, CAST(sum(m) AS BIGINT) AS n_pairs,
-             CAST(sum(m * CAST(floor(ln(
-               CAST(coalesce(c1i, 0) + 256 AS DOUBLE) /
-               CAST(coalesce(c12i, 0) + 1 AS DOUBLE)) * 1000000 + 0.5)
-               AS BIGINT)) AS BIGINT) AS nll_in_micro,
-             CAST(sum(m * CAST(floor(ln(
-               CAST(coalesce(c1g, 0) + 256 AS DOUBLE) /
-               CAST(coalesce(c12g, 0) + 1 AS DOUBLE)) * 1000000 + 0.5)
-               AS BIGINT)) AS BIGINT) AS nll_gen_micro
-           FROM dp LEFT JOIN margi USING (b1)
-                LEFT JOIN refpi USING (b1, b2)
-                LEFT JOIN margg USING (b1)
-                LEFT JOIN refpg USING (b1, b2)
-           GROUP BY 1),
-         mm AS (SELECT doc_id, n_pairs, nll_in_micro, nll_gen_micro,
-                  CAST(nll_in_micro // n_pairs AS BIGINT) AS mean_in_micro,
-                  CAST(nll_gen_micro // n_pairs AS BIGINT) AS mean_gen_micro
-                FROM scored),
-         cut AS (SELECT CAST(sum(mean_in_micro) // count(*) AS BIGINT)
-                   - CAST(sum(mean_gen_micro) // count(*) AS BIGINT) AS c
-                 FROM mm)
-         SELECT doc_id, n_pairs, nll_in_micro, nll_gen_micro,
-           mean_in_micro, mean_gen_micro,
-           mean_in_micro - mean_gen_micro AS ced_micro,
-           mean_in_micro - mean_gen_micro < (SELECT c FROM cut)
-             AS selected
-         FROM mm"""
-    },
-
-    // same signatures (mh CTE), low-2-bit agreement, the clamped
-    // integer collision correction (n_b*4 - 16) * 1e6 // 48
-    "q167_bbit_minwise" -> {
-      val aFull = (0 until MinhashPerms)
-        .map(p => s"(CASE WHEN x.mh$p = y.mh$p THEN 1 ELSE 0 END)")
-        .mkString(" + ")
-      val aB = (0 until MinhashPerms)
-        .map(p => s"(CASE WHEN x.mh$p % 4 = y.mh$p % 4 THEN 1 ELSE 0 END)")
-        .mkString(" + ")
-      s"""$minhashCtes,
-         cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM banded a JOIN banded b
-             ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-               AND a.doc_id < b.doc_id
-           JOIN ok ON a.band_idx = ok.band_idx
-             AND a.band_hash = ok.band_hash),
-         ag AS (SELECT c.doc_a, c.doc_b,
-             CAST($aFull AS BIGINT) AS n_agree_full,
-             CAST($aB AS BIGINT) AS n_agree_b
-           FROM cand c JOIN mh x ON x.doc_id = c.doc_a
-           JOIN mh y ON y.doc_id = c.doc_b)
-         SELECT doc_a, doc_b, n_agree_full, n_agree_b,
-           CAST(n_agree_full * 1000000 // $MinhashPerms AS BIGINT)
-             AS est_full_micro,
-           CAST(greatest(0, n_agree_b * 4 - $MinhashPerms) * 1000000
-             // (${MinhashPerms * 3}) AS BIGINT) AS est_b_micro
-         FROM ag"""
-    },
-    "q61_postings" ->
-      """WITH ex AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-         pd AS (SELECT token, doc_id, count(*) AS c FROM ex GROUP BY 1, 2),
-         agg AS (SELECT token, CAST(sum(c) AS BIGINT) AS n_occurrences,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           array_to_string((list_sort(list(doc_id)))[1:20], ',') AS postings
-           FROM pd GROUP BY token)
-         SELECT token, n_occurrences, n_docs, postings FROM agg
-         ORDER BY n_occurrences DESC, token LIMIT 100""",
-    "q62_histogram" ->
-      """WITH b AS (SELECT CASE WHEN o_totalprice < 0.0 THEN CAST(-1 AS BIGINT)
-           WHEN o_totalprice >= 600000.0 THEN CAST(20 AS BIGINT)
-           ELSE least(CAST(floor((CAST(o_totalprice AS DOUBLE) - 0.0) / 30000.0) AS BIGINT),
-                      CAST(19 AS BIGINT)) END AS bucket
-         FROM orders WHERE o_totalprice IS NOT NULL)
-         SELECT bucket, 0.0 + bucket * 30000.0 AS bucket_lo,
-           0.0 + (bucket + 1) * 30000.0 AS bucket_hi,
-           CAST(count(*) AS BIGINT) AS n
-         FROM b GROUP BY bucket""",
-    "q76_rolling_spend" ->
-      """WITH o AS (SELECT o_orderkey, o_custkey, epoch_us(o_orderdate) AS us,
-           CAST(o_totalprice AS DECIMAL(18,2)) AS price FROM orders)
-         SELECT o_orderkey, o_custkey, us AS order_us,
-           CAST(count(*) OVER w AS BIGINT) AS n_orders_7d,
-           CAST(sum(price) OVER w AS DOUBLE) AS spend_7d
-         FROM o WINDOW w AS (PARTITION BY o_custkey ORDER BY us
-           RANGE BETWEEN 604800000000 PRECEDING AND CURRENT ROW)""",
-    "q77_merge_upsert" ->
-      """WITH src AS (
-           SELECT o_orderkey, o_custkey, 'R' AS o_orderstatus,
-             o_totalprice * CAST(1.05 AS DOUBLE) AS o_totalprice, o_orderdate, 1 AS v
-           FROM orders WHERE o_orderkey % 10 = 0
-           UNION ALL
-           SELECT o_orderkey, o_custkey, 'R2',
-             o_totalprice * CAST(1.10 AS DOUBLE), o_orderdate, 2
-           FROM orders WHERE o_orderkey % 20 = 0
-           UNION ALL
-           SELECT o_orderkey + 10000000000, o_custkey, 'N',
-             o_totalprice, o_orderdate, 1
-           FROM orders WHERE o_orderkey % 97 = 0),
-         s1 AS (SELECT * FROM (SELECT *, row_number() OVER (
-             PARTITION BY o_orderkey ORDER BY v DESC) AS rn FROM src)
-           WHERE rn = 1),
-         m AS (
-           SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate FROM s1
-           UNION ALL
-           SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate
-           FROM orders t
-           WHERE NOT EXISTS (SELECT 1 FROM s1 WHERE s1.o_orderkey = t.o_orderkey))
-         SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-           strftime(o_orderdate, '%Y-%m-%d') AS orderdate FROM m""",
-    "q78_semdedup" -> {
-      val cos = cosineSql("x.emb", "y.emb")
-      s"""WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         a AS (SELECT vec_id AS cell_id, emb AS aemb FROM c
-               WHERE vec_id % $IvfStride = 0 AND vec_id < ${IvfStride * IvfCells}),
-         cells AS (SELECT vec_id, emb, cell_id FROM (
-           SELECT c.vec_id AS vec_id, c.emb AS emb, a.cell_id AS cell_id,
-             row_number() OVER (PARTITION BY c.vec_id
-               ORDER BY ${cosineSql("c.emb", "a.aemb")} DESC, a.cell_id) AS rk
-           FROM c, a) WHERE rk = 1),
-         ok AS (SELECT cell_id FROM cells
-                GROUP BY 1 HAVING count(*) BETWEEN 2 AND $DefaultMaxBucket),
-         f AS (SELECT DISTINCT y.vec_id AS follower
-               FROM cells x JOIN cells y
-                 ON x.cell_id = y.cell_id AND x.vec_id < y.vec_id
-               JOIN ok ON y.cell_id = ok.cell_id
-               WHERE round($cos, 6) > 0.2)
-         SELECT vec_id, cell_id FROM cells
-         WHERE vec_id NOT IN (SELECT follower FROM f)"""
-    },
-    "q90_weighted_sample" -> {
-      val h = sqlHexLong("concat('ws:', CAST(doc_id AS VARCHAR))")
-      s"""WITH s AS (SELECT doc_id,
-           ln(CAST($h % 1099511627776 + 1 AS DOUBLE) / CAST(1099511627776 AS DOUBLE))
-             / CAST(n_chars AS DOUBLE) AS sc
-           FROM documents),
-         r AS (SELECT doc_id,
-             round(sc, 6) + CAST(0 AS DOUBLE) AS w_score, row_number() OVER (
-             ORDER BY sc DESC, doc_id) AS rn FROM s)
-         SELECT doc_id, w_score, CAST(rn AS BIGINT) AS sample_rank
-         FROM r WHERE rn <= 50"""
-    },
-    "q91_lc_distinct" -> {
-      val h = sqlHexLong("concat('lc:', CAST(user_id AS VARCHAR))")
-      s"""WITH r AS (SELECT event_type, $h % 4096 AS reg FROM events
-           WHERE user_id IS NOT NULL),
-         v AS (SELECT event_type, CAST(count(DISTINCT reg) AS BIGINT)
-               AS registers_hit FROM r GROUP BY 1)
-         SELECT event_type, registers_hit,
-           CASE WHEN registers_hit < 4096 THEN
-             round(CAST(4096 AS DOUBLE)
-               * ln(CAST(4096 AS DOUBLE) / (4096 - registers_hit)), 6)
-           END AS est_distinct
-         FROM v"""
-    },
-    "q92_cms_bigrams" -> {
-      val h = sqlHexLong("concat(CAST(i AS VARCHAR), ':cms:', bigram)")
-      s"""WITH toks AS (SELECT string_split(text, ' ') AS w FROM documents),
-         bg AS (SELECT unnest([w[i] || ' ' || w[i+1]
-                for i in range(1, len(w))]) AS bigram FROM toks),
-         tc AS (SELECT bigram, CAST(count(*) AS BIGINT) AS n_true
-                FROM bg GROUP BY 1),
-         rw AS (SELECT bigram, n_true, unnest([{'i': i, 'b': $h % 256}
-                for i in range(0, 4)]) AS r FROM tc),
-         rr AS (SELECT bigram, n_true, r.i AS i, r.b AS b FROM rw),
-         sk AS (SELECT i, b, CAST(sum(n_true) AS BIGINT) AS c
-                FROM rr GROUP BY 1, 2)
-         SELECT rr.bigram, rr.n_true, CAST(min(sk.c) AS BIGINT) AS est_cms
-         FROM rr JOIN sk ON rr.i = sk.i AND rr.b = sk.b
-         GROUP BY 1, 2"""
-    },
-    "q93_hll_distinct" -> hllEstimateSql("event_type", "event_type"),
-
-    // q93's full estimate chain as a CTE (per DAY, where the true
-    // active-user cardinality actually varies) + the exact
-    // count-distinct, reconciled per group: signed rel err from the
-    // SAME rounded estimate both engines emit, 3σ flag at the
-    // published 1.04/√64
-    "q217_hll_accuracy" ->
-      s"""WITH est AS (
-           ${hllEstimateSql("strftime(date_trunc('day', ts), '%Y-%m-%d')",
-             "day")}),
-         ex AS (SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-                  CAST(count(DISTINCT user_id) AS BIGINT) AS n_true
-                FROM events WHERE user_id IS NOT NULL GROUP BY 1)
-         SELECT e.day, ex.n_true, e.registers_hit, e.est_distinct,
-           round((e.est_distinct - ex.n_true) / ex.n_true, 6) AS err,
-           CAST(CASE WHEN abs(round((e.est_distinct - ex.n_true)
-               / ex.n_true, 6)) <= 0.39 THEN 1 ELSE 0 END AS BIGINT)
-             AS within_3sigma
-         FROM est e JOIN ex ON e.day = ex.day""",
-    "q94_interval_merge" ->
-      """WITH iv AS (SELECT l.l_suppkey, o.o_orderdate AS s, l.l_shipdate AS e
-           FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-           WHERE l.l_quantity >= 50 AND l.l_shipdate >= o.o_orderdate),
-         m AS (SELECT l_suppkey, s, e,
-               max(e) OVER (PARTITION BY l_suppkey ORDER BY s, e
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
-               FROM iv),
-         f AS (SELECT l_suppkey, s, e,
-               CASE WHEN pmax IS NULL OR s > pmax THEN 1 ELSE 0 END AS nw
-               FROM m),
-         i AS (SELECT l_suppkey, s, e,
-               CAST(sum(nw) OVER (PARTITION BY l_suppkey ORDER BY s, e
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                 AS BIGINT) AS island
-               FROM f)
-         SELECT l_suppkey, island,
-           strftime(min(s), '%Y-%m-%d') AS window_start,
-           strftime(max(e), '%Y-%m-%d') AS window_end,
-           CAST(count(*) AS BIGINT) AS n_intervals
-         FROM i GROUP BY 1, 2""",
-    "q95_resample_locf" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us, value
-           FROM events),
-         o AS (SELECT user_id, us // 21600000000 AS b,
-               arg_max(value, printf('%020d%010d', us, event_id)) AS lastv,
-               CAST(count(*) AS BIGINT) AS n_obs
-               FROM e GROUP BY 1, 2),
-         r AS (SELECT user_id, min(b) AS b0, max(b) AS b1 FROM o GROUP BY 1),
-         g AS (SELECT user_id, unnest([b0 + i
-               for i in range(0, b1 - b0 + 1)]) AS b FROM r),
-         j AS (SELECT g.user_id, g.b, o.lastv, o.n_obs FROM g
-               LEFT JOIN o ON g.user_id = o.user_id AND g.b = o.b)
-         SELECT user_id, b * 21600 AS bucket_s,
-           last_value(lastv IGNORE NULLS) OVER (PARTITION BY user_id
-             ORDER BY b ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             AS value_filled,
-           coalesce(n_obs, 0) AS n_obs
-         FROM j""",
-    "q96_mad_outliers" -> {
-      val scale = Quantiles.madScale(3.0)
-      s"""WITH v AS (SELECT event_type, CAST(value AS DOUBLE) AS v
-           FROM events WHERE value IS NOT NULL),
-         m AS (SELECT event_type, quantile_cont(v, 0.5) AS med
-               FROM v GROUP BY 1),
-         d AS (SELECT v.event_type, v.v, m.med, abs(v.v - m.med) AS dd
-               FROM v JOIN m ON v.event_type = m.event_type),
-         md AS (SELECT event_type, quantile_cont(dd, 0.5) AS mad
-               FROM d GROUP BY 1)
-         SELECT d.event_type, round(any_value(d.med), 6) AS med,
-           round(any_value(md.mad), 6) AS mad,
-           CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(sum(CASE WHEN d.dd > md.mad * CAST('$scale' AS DOUBLE)
-             THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-         FROM d JOIN md ON d.event_type = md.event_type GROUP BY 1"""
-    },
-    "q97_chi_square" ->
-      """WITH c AS (SELECT lang, source, CAST(count(*) AS BIGINT) AS n
-           FROM documents
-           WHERE lang IS NOT NULL AND source IS NOT NULL GROUP BY 1, 2),
-         ma AS (SELECT lang, CAST(sum(n) AS BIGINT) AS na FROM c GROUP BY 1),
-         mb AS (SELECT source, CAST(sum(n) AS BIGINT) AS nb FROM c GROUP BY 1),
-         t AS (SELECT CAST(sum(n) AS BIGINT) AS nt FROM c),
-         e AS (SELECT c.lang, c.source, c.n,
-               CAST(ma.na AS DOUBLE) * CAST(mb.nb AS DOUBLE)
-                 / CAST(t.nt AS DOUBLE) AS expected
-               FROM c JOIN ma ON c.lang = ma.lang
-                 JOIN mb ON c.source = mb.source CROSS JOIN t)
-         SELECT lang, source, n, round(expected, 6) AS expected,
-           round((CAST(n AS DOUBLE) - expected) * (CAST(n AS DOUBLE) - expected)
-             / expected, 6) AS chi2_cell
-         FROM e""",
-    "q98_weighted_sample_strat" -> {
-      val h = sqlHexLong("concat('ws:', CAST(doc_id AS VARCHAR))")
-      s"""WITH s AS (SELECT lang, doc_id,
-           ln(CAST($h % 1099511627776 + 1 AS DOUBLE) / CAST(1099511627776 AS DOUBLE))
-             / CAST(n_chars AS DOUBLE) AS sc
-           FROM documents),
-         r AS (SELECT lang, doc_id,
-             round(sc, 6) + CAST(0 AS DOUBLE) AS w_score, row_number() OVER (
-             PARTITION BY lang ORDER BY sc DESC, doc_id) AS rn FROM s)
-         SELECT lang, doc_id, w_score, CAST(rn AS BIGINT) AS sample_rank
-         FROM r WHERE rn <= 10"""
-    },
-    "q99_skipgram_pmi" ->
-      """WITH toks AS (SELECT string_split(text, ' ') AS w FROM documents),
-         pr AS (SELECT flatten([[{'w1': w[i], 'w2': w[j]}
-                for j in range(i + 1, least(i + 3, len(w)) + 1)]
-                for i in range(1, len(w) + 1)]) AS ps FROM toks),
-         pe AS (SELECT unnest(ps) AS p FROM pr),
-         pc AS (SELECT p.w1 AS w1, p.w2 AS w2, CAST(count(*) AS BIGINT) AS c_ab
-                FROM pe GROUP BY 1, 2),
-         la AS (SELECT w1, CAST(sum(c_ab) AS BIGINT) AS c_a FROM pc GROUP BY 1),
-         rb AS (SELECT w2, CAST(sum(c_ab) AS BIGINT) AS c_b FROM pc GROUP BY 1),
-         n AS (SELECT CAST(sum(c_ab) AS BIGINT) AS nn FROM pc)
-         SELECT pc.w1, pc.w2, pc.c_ab,
-           round(ln(CAST(nn AS DOUBLE) * c_ab / (la.c_a * rb.c_b)), 6) AS pmi
-         FROM pc JOIN la ON pc.w1 = la.w1 JOIN rb ON pc.w2 = rb.w2
-           CROSS JOIN n
-         WHERE pc.c_ab >= 2""",
-    "q100_vocab_coverage" ->
-      """WITH uc AS (SELECT tok, CAST(count(*) AS BIGINT) AS c
-           FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
-           GROUP BY 1),
-         st AS (SELECT CAST(sum(c) AS BIGINT) AS total_tokens,
-                CAST(count(*) AS BIGINT) AS vocab_size FROM uc),
-         r AS (SELECT c, row_number() OVER (ORDER BY c DESC, tok) AS rn,
-               CAST(sum(c) OVER (ORDER BY c DESC, tok
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                 AS BIGINT) AS cum
-               FROM uc),
-         x AS (SELECT t.threshold, r.rn, st.vocab_size, st.total_tokens
-               FROM r CROSS JOIN st
-               CROSS JOIN (SELECT unnest([50, 90, 99]) AS threshold) t
-               WHERE r.cum * 100 >= t.threshold * st.total_tokens)
-         SELECT CAST(threshold AS BIGINT) AS threshold,
-           CAST(min(rn) AS BIGINT) AS tokens_needed,
-           CAST(any_value(vocab_size) AS BIGINT) AS vocab_size,
-           CAST(any_value(total_tokens) AS BIGINT) AS total_tokens
-         FROM x GROUP BY 1""",
-    "q101_chunk_overlap" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         n AS (SELECT doc_id, w, len(w) AS n FROM d WHERE len(w) > 0),
-         e AS (SELECT doc_id, w, n,
-               unnest(range(0, (n + 29) // 30)) AS i FROM n),
-         c AS (SELECT doc_id, CAST(i AS BIGINT) AS chunk_idx,
-               CAST(i * 30 AS BIGINT) AS start_tok,
-               list_slice(w, i * 30 + 1, least(i * 30 + 40, n)) AS cw
-               FROM e)
-         SELECT doc_id, chunk_idx, start_tok,
-           CAST(len(cw) AS BIGINT) AS n_tokens,
-           array_to_string(cw, ' ') AS chunk_text
-         FROM c""",
-    "q102_domain_quota" ->
-      """WITH h AS (SELECT source, doc_id,
-             CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 14))
-               AS BIGINT) % 1099511627776 AS h40
-           FROM documents WHERE doc_id IS NOT NULL),
-         r AS (SELECT source, doc_id, row_number() OVER (
-               PARTITION BY source ORDER BY h40, doc_id) AS rn FROM h)
-         SELECT source, doc_id, CAST(rn AS BIGINT) AS pick_rank
-         FROM r WHERE rn <= 3""",
-    "q88_unpivot" ->
-      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
-           'l_quantity' AS metric, l_quantity AS value FROM lineitem
-         UNION ALL SELECT l_orderkey, CAST(l_linenumber AS BIGINT),
-           'l_extendedprice', l_extendedprice FROM lineitem
-         UNION ALL SELECT l_orderkey, CAST(l_linenumber AS BIGINT),
-           'l_discount', l_discount FROM lineitem
-         UNION ALL SELECT l_orderkey, CAST(l_linenumber AS BIGINT),
-           'l_tax', l_tax FROM lineitem""",
-    // max over (count, len) structs is the same lexicographic order in
-    // both engines — the deterministic "most frequent, longest on ties"
-    // top pick without a second aggregation
-    "q103_gopher_rep" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS w,
-           CAST(length(text) AS BIGINT) AS n_chars FROM documents),
-         g2 AS (SELECT doc_id, unnest([array_to_string(w[i+1:i+2], ' ')
-                for i in range(0, len(w) - 1)]) AS g
-                FROM d WHERE len(w) >= 2),
-         c2 AS (SELECT doc_id, g, CAST(count(*) AS BIGINT) AS c,
-                CAST(length(g) AS BIGINT) AS l FROM g2 GROUP BY 1, 2),
-         s2 AS (SELECT doc_id, max(struct_pack(c := c, l := l)) AS top,
-                CAST(sum(CASE WHEN c > 1 THEN c * l ELSE 0 END) AS BIGINT)
-                  AS dup FROM c2 GROUP BY 1),
-         g3 AS (SELECT doc_id, unnest([array_to_string(w[i+1:i+3], ' ')
-                for i in range(0, len(w) - 2)]) AS g
-                FROM d WHERE len(w) >= 3),
-         c3 AS (SELECT doc_id, g, CAST(count(*) AS BIGINT) AS c,
-                CAST(length(g) AS BIGINT) AS l FROM g3 GROUP BY 1, 2),
-         s3 AS (SELECT doc_id, max(struct_pack(c := c, l := l)) AS top,
-                CAST(sum(CASE WHEN c > 1 THEN c * l ELSE 0 END) AS BIGINT)
-                  AS dup FROM c3 GROUP BY 1)
-         SELECT d.doc_id, d.n_chars,
-           round(CAST(coalesce((s2.top).c * (s2.top).l, 0) AS DOUBLE)
-             / d.n_chars, 6) AS top2gram_frac,
-           round(CAST(coalesce(s2.dup, 0) AS DOUBLE) / d.n_chars, 6)
-             AS dup2gram_frac,
-           round(CAST(coalesce((s3.top).c * (s3.top).l, 0) AS DOUBLE)
-             / d.n_chars, 6) AS top3gram_frac,
-           round(CAST(coalesce(s3.dup, 0) AS DOUBLE) / d.n_chars, 6)
-             AS dup3gram_frac
-         FROM d LEFT JOIN s2 USING (doc_id) LEFT JOIN s3 USING (doc_id)""",
-    // sqrt-composed c^0.75 (no pow), integer weight units, integer total
-    "q108_neg_sampling" ->
-      """WITH uc AS (SELECT token, CAST(count(*) AS BIGINT) AS n_occurrences
-           FROM (SELECT unnest(string_split(text, ' ')) AS token
-                 FROM documents) GROUP BY 1),
-         w AS (SELECT token, n_occurrences,
-               CAST(floor(sqrt(CAST(n_occurrences AS DOUBLE)
-                 * sqrt(CAST(n_occurrences AS DOUBLE))) * 1000.0) AS BIGINT)
-                 AS weight_units FROM uc),
-         t AS (SELECT CAST(sum(weight_units) AS BIGINT) AS tw FROM w)
-         SELECT token, n_occurrences, weight_units,
-           round(CAST(weight_units AS DOUBLE) / tw, 6) AS sample_share
-         FROM w CROSS JOIN t
-         ORDER BY n_occurrences DESC, token LIMIT 50""",
-    // quantile_cont fences bit-match the histogram-selection pass (the
-    // q96 parity result), so clipping crosses without any tolerance
-    "q109_winsorize" ->
-      """WITH f AS (SELECT event_type,
-           quantile_cont(CAST(value AS DOUBLE), 0.05) AS lo,
-           quantile_cont(CAST(value AS DOUBLE), 0.95) AS hi
-           FROM events WHERE value IS NOT NULL GROUP BY 1)
-         SELECT event_id, e.event_type, CAST(value AS DOUBLE) AS value,
-           CASE WHEN value IS NULL THEN NULL
-                ELSE least(greatest(CAST(value AS DOUBLE), lo), hi)
-           END AS value_clipped,
-           coalesce(CAST(value AS DOUBLE) < lo
-             OR CAST(value AS DOUBLE) > hi, false) AS is_clipped
-         FROM events e JOIN f USING (event_type)""",
-
-    // date-diff day index in exact integers; both sides floor-divide
-    // non-negative day counts (Spark div == DuckDB //)
-    "q110_cohort_retention" ->
-      """WITH a AS (SELECT DISTINCT user_id AS u,
-           CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) // 1 AS b
-           FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-         f AS (SELECT u, min(b) AS fb FROM a GROUP BY 1),
-         cs AS (SELECT fb AS cohort_bucket,
-           CAST(count(*) AS BIGINT) AS cohort_size FROM f GROUP BY 1),
-         r AS (SELECT fb AS cohort_bucket, b - fb AS bucket_offset,
-           CAST(count(*) AS BIGINT) AS n_active
-           FROM a JOIN f USING (u) GROUP BY 1, 2)
-         SELECT cohort_bucket, bucket_offset, n_active, cohort_size,
-           round(CAST(n_active AS DOUBLE) / cohort_size, 6) AS retention
-         FROM r JOIN cs USING (cohort_bucket)""",
-
-    // naive a<b<c enumeration — ordering-invariant exact counts are
-    // the cross-check on the engine's degree-ordered direction
-    "q111_triangles" ->
-      """WITH e0 AS (SELECT DISTINCT
-           least(a.l_partkey, b.l_partkey) AS a,
-           greatest(a.l_partkey, b.l_partkey) AS b
-           FROM lineitem a JOIN lineitem b
-           ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
-         deg AS (SELECT node, CAST(count(*) AS BIGINT) AS degree FROM
-           (SELECT a AS node FROM e0 UNION ALL SELECT b FROM e0)
-           GROUP BY 1),
-         t AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-           FROM e0 e1 JOIN e0 e2 ON e1.a = e2.a AND e1.b < e2.b
-           JOIN e0 e3 ON e3.a = e1.b AND e3.b = e2.b),
-         pn AS (SELECT node, CAST(count(*) AS BIGINT) AS n_triangles FROM
-           (SELECT x AS node FROM t UNION ALL SELECT y FROM t
-            UNION ALL SELECT z FROM t) GROUP BY 1)
-         SELECT deg.node AS l_partkey, degree,
-           coalesce(n_triangles, CAST(0 AS BIGINT)) AS n_triangles
-         FROM deg LEFT JOIN pn USING (node)""",
-
-    // six synchronous k-core peels unrolled (the q114 pattern); the
-    // final degree pass re-counts alive neighbors among survivors
-    "q157_kcore" -> {
-      def peel(i: Int): String =
-        s"""s$i AS (SELECT s.node FROM s${i - 1} s JOIN (
-             SELECT e.u, count(*) AS c FROM e0 e JOIN s${i - 1} t
-             ON e.v = t.node GROUP BY e.u) d
-           ON s.node = d.u WHERE d.c >= 3)"""
-      s"""WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem
-           WHERE l_quantity > 45),
-         e0 AS (SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-           FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-             AND a.l_partkey <> b.l_partkey),
-         s0 AS (SELECT DISTINCT u AS node FROM e0),
-         ${(1 to 6).map(peel).mkString(",\n         ")}
-         SELECT s.node AS l_partkey, CAST(d.c AS BIGINT) AS core_degree
-         FROM s6 s JOIN (SELECT e.u, count(*) AS c FROM e0 e
-           JOIN s6 t ON e.v = t.node GROUP BY e.u) d ON s.node = d.u"""
-    },
-
-    // pairwise slopes via rn-ordered self-join (the Spark side folds
-    // the same multiset inside one array); lower-median by index
-    "q175_theilsen" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us, value
-           FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-             AND value IS NOT NULL),
-         rk AS (SELECT user_id, us, value, row_number() OVER (
-             PARTITION BY user_id ORDER BY us, event_id) AS rn
-           FROM e),
-         cap AS (SELECT * FROM rk WHERE rn <= 128),
-         ne AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_events
-                FROM cap GROUP BY 1),
-         pr AS (SELECT a.user_id,
-             CAST(floor((b.value - a.value) * 1e12 /
-               CAST(b.us - a.us AS DOUBLE) + 0.5) AS BIGINT) AS slope
-           FROM cap a JOIN cap b ON a.user_id = b.user_id
-             AND a.rn < b.rn AND b.us <> a.us),
-         sl AS (SELECT user_id, slope,
-             row_number() OVER (PARTITION BY user_id ORDER BY slope) AS r,
-             count(*) OVER (PARTITION BY user_id) AS n
-           FROM pr)
-         SELECT sl.user_id, ne.n_events, CAST(sl.n AS BIGINT) AS n_pairs,
-           sl.slope AS slope_micro
-         FROM sl JOIN ne ON sl.user_id = ne.user_id
-         WHERE sl.r = (sl.n + 1) // 2""",
-
-    // the same injected integer discount weights, grade bands, and
-    // composite ideal-tiebreak score; rankings as row_number windows
-    "q176_ndcg" -> {
-      def dotp(u: String, v: String, d: Int) =
-        s"list_reduce(list_prepend(CAST(0 AS DOUBLE), [$u[i+1] * $v[i+1] for i in range(0, $d)]), (acc, x) -> acc + x)"
-      def cosD(d: Int) =
-        s"${dotp("qe", "e.emb", d)} / (sqrt(${dotp("qe", "qe", d)}) * sqrt(${dotp("e.emb", "e.emb", d)}))"
-      val wRows = graft.operators.Similarity.dcgWeights(10).zipWithIndex
-        .map { case (w, i) => s"(${i + 1}, ${w})" }.mkString(", ")
-      s"""WITH w(rnk, wt) AS (VALUES $wRows),
-         e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-             FROM embeddings),
-         q AS (SELECT vec_id AS query_id, emb AS qe FROM e
-               WHERE vec_id < 30),
-         sim AS (SELECT query_id, e.vec_id AS neighbor_id,
-             CAST(floor(${cosD(64)} * 1e6 + 0.5) AS BIGINT) AS cos_full,
-             CAST(floor(${cosD(16)} * 1e6 + 0.5) AS BIGINT) AS cos_trunc
-           FROM q, e WHERE query_id <> e.vec_id),
-         g AS (SELECT *, CASE WHEN cos_full >= 320000 THEN 3
-               WHEN cos_full >= 250000 THEN 2
-               WHEN cos_full >= 180000 THEN 1 ELSE 0 END AS g,
-             CASE WHEN cos_full >= 320000 THEN 7
-               WHEN cos_full >= 250000 THEN 3
-               WHEN cos_full >= 180000 THEN 1 ELSE 0 END AS gain
-           FROM sim),
-         sys AS (SELECT query_id, neighbor_id, g, gain, rn FROM (
-             SELECT *, row_number() OVER (PARTITION BY query_id
-               ORDER BY cos_trunc DESC, neighbor_id) AS rn
-             FROM g WHERE cos_trunc IS NOT NULL) WHERE rn <= 10),
-         dcg AS (SELECT query_id,
-             CAST(sum(gain * wt) AS BIGINT) AS dcg,
-             min(CASE WHEN g >= 2 THEN rn END) AS first_rel
-           FROM sys JOIN w ON sys.rn = w.rnk GROUP BY 1),
-         idl AS (SELECT query_id, gain, rn FROM (
-             SELECT *, row_number() OVER (PARTITION BY query_id
-               ORDER BY g * 4294967296 - neighbor_id DESC) AS rn
-             FROM g WHERE g > 0) WHERE rn <= 10),
-         idcg AS (SELECT query_id,
-             CAST(sum(gain * wt) AS BIGINT) AS idcg
-           FROM idl JOIN w ON idl.rn = w.rnk GROUP BY 1),
-         nr AS (SELECT query_id, CAST(sum(CASE WHEN g > 0 THEN 1
-               ELSE 0 END) AS BIGINT) AS n_rel
-           FROM g GROUP BY 1)
-         SELECT nr.query_id, nr.n_rel,
-           CAST(coalesce(dcg.dcg, 0) AS BIGINT) AS dcg,
-           CAST(coalesce(idcg.idcg, 0) AS BIGINT) AS idcg,
-           CAST(CASE WHEN coalesce(idcg.idcg, 0) > 0
-             THEN coalesce(dcg.dcg, 0) * 1000000 // idcg.idcg
-             ELSE 0 END AS BIGINT) AS ndcg_micro,
-           CAST(CASE WHEN dcg.first_rel IS NOT NULL
-             THEN 1000000 // dcg.first_rel ELSE 0 END AS BIGINT)
-             AS rr_micro
-         FROM nr LEFT JOIN idcg ON nr.query_id = idcg.query_id
-           LEFT JOIN dcg ON nr.query_id = dcg.query_id"""
-    },
-
-    // same exponent/mantissa-bit bucketing via to_base(v,2) string
-    // length (no cross-engine log2), same ceil-rank and midpoint
-    "q177_ddsketch" ->
-      """WITH v AS (SELECT l_returnflag AS g,
-             CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS v
-           FROM lineitem WHERE l_extendedprice IS NOT NULL
-             AND CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) > 0),
-         bk AS (SELECT g, shift, m, CAST(count(*) AS BIGINT) AS c,
-             (m << shift) AS lo, ((m + 1) << shift) - 1 AS hi
-           FROM (SELECT g, v,
-               greatest(length(to_base(v, 2)) - 1 - 6, 0) AS shift,
-               v >> greatest(length(to_base(v, 2)) - 1 - 6, 0) AS m
-             FROM v)
-           GROUP BY 1, 2, 3),
-         cum AS (SELECT g, lo, hi, c,
-             sum(c) OVER (PARTITION BY g ORDER BY lo) AS cum,
-             sum(c) OVER (PARTITION BY g) AS n,
-             count(*) OVER (PARTITION BY g) AS nb
-           FROM bk),
-         qs(q_micro) AS (VALUES (500000), (900000), (990000)),
-         pick AS (SELECT g, q_micro, n, nb,
-             min(lo) AS bucket_lo, min(hi) AS bucket_hi
-           FROM cum CROSS JOIN qs
-           WHERE cum >= greatest(1, (n * q_micro + 999999) // 1000000)
-           GROUP BY 1, 2, 3, 4)
-         SELECT g AS l_returnflag, CAST(q_micro AS BIGINT) AS q_micro,
-           CAST(n AS BIGINT) AS n, CAST(nb AS BIGINT) AS n_buckets,
-           bucket_lo, bucket_hi,
-           CAST((bucket_lo + bucket_hi) // 2 AS BIGINT) AS est
-         FROM pick""",
-
-    // q219's decomposition CTEs (weekend doubling + the ×5 planted
-    // day) + q96's quantile_cont median/MAD fence on the residual
-    "q220_seasonal_anomaly" -> {
-      val scale = Quantiles.madScale(3.0)
-      """WITH daily AS (SELECT strftime(date_trunc('day', ts), '%Y-%m-%d')
-             AS day,
-           CAST(sum(CASE WHEN strftime(date_trunc('day', ts), '%Y-%m-%d')
-               = '2024-01-17'
-             THEN (CASE WHEN dayofweek(ts) IN (0, 6)
-               THEN CAST(floor(value * 100 + 0.5) AS BIGINT) * 2
-               ELSE CAST(floor(value * 100 + 0.5) AS BIGINT) END) * 5
-             ELSE CASE WHEN dayofweek(ts) IN (0, 6)
-               THEN CAST(floor(value * 100 + 0.5) AS BIGINT) * 2
-               ELSE CAST(floor(value * 100 + 0.5) AS BIGINT) END END)
-             AS BIGINT) AS v
-           FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-           GROUP BY 1),
-         t AS (SELECT day, v,
-             date_diff('day', CAST(min(day) OVER () AS DATE),
-               CAST(day AS DATE)) % 7 AS phase,
-             sum(v) OVER (ORDER BY day ROWS BETWEEN 3 PRECEDING
-               AND 3 FOLLOWING) AS s7,
-             count(*) OVER (ORDER BY day ROWS BETWEEN 3 PRECEDING
-               AND 3 FOLLOWING) AS n7
-           FROM daily),
-         tr AS (SELECT day, phase, v,
-             CASE WHEN n7 = 7 THEN
-               CASE WHEN s7 >= 0 THEN s7 // 7 ELSE -((-s7) // 7) END
-             END AS trend
-           FROM t),
-         se AS (SELECT phase,
-             quantile_disc(v - trend, 0.5) AS seasonal
-           FROM tr WHERE trend IS NOT NULL GROUP BY 1),
-         rz AS (SELECT tr.day, tr.phase, tr.v, tr.trend, se.seasonal,
-             tr.v - tr.trend - se.seasonal AS residual
-           FROM tr JOIN se ON tr.phase = se.phase
-           WHERE tr.trend IS NOT NULL),
-         m AS (SELECT quantile_cont(CAST(residual AS DOUBLE), 0.5)
-                 AS med FROM rz),
-         dv AS (SELECT rz.*, m.med,
-             abs(CAST(rz.residual AS DOUBLE) - m.med) AS dd
-           FROM rz CROSS JOIN m),
-         md AS (SELECT quantile_cont(dd, 0.5) AS mad FROM dv)
-         SELECT dv.day, CAST(dv.phase AS BIGINT) AS phase, dv.v,
-           CAST(dv.trend AS BIGINT) AS trend,
-           CAST(dv.seasonal AS BIGINT) AS seasonal,
-           CAST(dv.residual AS BIGINT) AS residual,
-           round(dv.med, 6) AS med, round(md.mad, 6) AS mad,
-           CAST(CASE WHEN dv.dd > md.mad * CAST('""" + scale +
-        """' AS DOUBLE) THEN 1 ELSE 0 END AS BIGINT) AS is_anomaly
-         FROM dv CROSS JOIN md"""
-    },
-
-    // daily totals → centered MA → per-phase lower medians
-    // (quantile_disc(0.5) = element at (n+1)//2, probed round 12 —
-    // exactly Spark's element_at(sorted, (n+1) div 2)); the trend
-    // division sign-split; DuckDB dayofweek is 0=Sun..6=Sat where
-    // Spark's is 1=Sun..7=Sat
-    "q219_seasonal_decomp" ->
-      """WITH daily AS (SELECT strftime(date_trunc('day', ts), '%Y-%m-%d')
-             AS day,
-           CAST(sum(CASE WHEN dayofweek(ts) IN (0, 6)
-             THEN CAST(floor(value * 100 + 0.5) AS BIGINT) * 2
-             ELSE CAST(floor(value * 100 + 0.5) AS BIGINT) END)
-             AS BIGINT) AS v
-           FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-           GROUP BY 1),
-         t AS (SELECT day, v,
-             date_diff('day', CAST(min(day) OVER () AS DATE),
-               CAST(day AS DATE)) % 7 AS phase,
-             sum(v) OVER (ORDER BY day ROWS BETWEEN 3 PRECEDING
-               AND 3 FOLLOWING) AS s7,
-             count(*) OVER (ORDER BY day ROWS BETWEEN 3 PRECEDING
-               AND 3 FOLLOWING) AS n7
-           FROM daily),
-         tr AS (SELECT day, phase, v,
-             CASE WHEN n7 = 7 THEN
-               CASE WHEN s7 >= 0 THEN s7 // 7 ELSE -((-s7) // 7) END
-             END AS trend
-           FROM t),
-         se AS (SELECT phase,
-             quantile_disc(v - trend, 0.5) AS seasonal
-           FROM tr WHERE trend IS NOT NULL GROUP BY 1)
-         SELECT tr.day, CAST(tr.phase AS BIGINT) AS phase, tr.v,
-           CAST(tr.trend AS BIGINT) AS trend,
-           CAST(se.seasonal AS BIGINT) AS seasonal,
-           CAST(tr.v - tr.trend - se.seasonal AS BIGINT) AS residual
-         FROM tr LEFT JOIN se ON tr.phase = se.phase""",
-
-    // the exact-integer priority race restated: same md5-dyadic u,
-    // same truncated division, same (pri DESC, key) order and the
-    // (k+1)-th-priority tau
-    "q218_priority_sample" -> {
-      val h = sqlHexLong("concat('ps:', CAST(key AS VARCHAR))")
-      s"""WITH b AS (SELECT o_orderkey AS key,
-             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS w
-           FROM orders WHERE o_orderkey IS NOT NULL
-             AND CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) > 0),
-         p AS (SELECT key, w,
-             (w * 1048576) // ($h % 1048576 + 1) AS pri FROM b),
-         r AS (SELECT key, w, pri,
-             row_number() OVER (ORDER BY pri DESC, key) AS rn FROM p),
-         t AS (SELECT coalesce(max(CASE WHEN rn = 101 THEN pri END), 0)
-                 AS tau FROM r WHERE rn <= 101)
-         SELECT r.key, r.w, r.pri,
-           CAST(greatest(r.w, t.tau) AS BIGINT) AS w_hat,
-           CAST(rn AS BIGINT) AS rank
-         FROM r CROSS JOIN t WHERE rn <= 100"""
-    },
-
-    // the heavy-hitter CONTRACT is exact-thresholded output, so the
-    // oracle is the plain frequency table + HAVING — the MG pass must
-    // change nothing about WHAT qualifies, only how much state finding
-    // it took
-    "q215_heavy_hitters" ->
-      """WITH tok AS (SELECT source, unnest(string_split(text, ' ')) AS item
-           FROM documents WHERE text IS NOT NULL),
-         n AS (SELECT source, CAST(count(*) AS BIGINT) AS n
-               FROM tok GROUP BY 1),
-         f AS (SELECT source, item, CAST(count(*) AS BIGINT) AS freq
-               FROM tok GROUP BY 1, 2)
-         SELECT f.source, f.item, f.freq, n.n,
-           CAST(greatest(1, (n.n * 2000 + 999999) // 1000000) AS BIGINT)
-             AS threshold
-         FROM f JOIN n USING (source)
-         WHERE f.freq >= greatest(1, (n.n * 2000 + 999999) // 1000000)""",
-
-    // q177's sketch CTEs + exact nearest-rank selection over the
-    // distinct-value table, reconciled per (group, quantile)
-    "q214_sketch_accuracy" ->
-      """WITH v AS (SELECT l_returnflag AS g,
-             CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS v
-           FROM lineitem WHERE l_extendedprice IS NOT NULL
-             AND CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) > 0),
-         bk AS (SELECT g, shift, m, CAST(count(*) AS BIGINT) AS c,
-             (m << shift) AS lo, ((m + 1) << shift) - 1 AS hi
-           FROM (SELECT g, v,
-               greatest(length(to_base(v, 2)) - 1 - 6, 0) AS shift,
-               v >> greatest(length(to_base(v, 2)) - 1 - 6, 0) AS m
-             FROM v)
-           GROUP BY 1, 2, 3),
-         cum AS (SELECT g, lo, hi, c,
-             sum(c) OVER (PARTITION BY g ORDER BY lo) AS cum,
-             sum(c) OVER (PARTITION BY g) AS n
-           FROM bk),
-         qs(q_micro) AS (VALUES (500000), (900000), (990000)),
-         pick AS (SELECT g, q_micro, n,
-             min(lo) AS bucket_lo, min(hi) AS bucket_hi
-           FROM cum CROSS JOIN qs
-           WHERE cum >= greatest(1, (n * q_micro + 999999) // 1000000)
-           GROUP BY 1, 2, 3),
-         dv AS (SELECT g, v, CAST(count(*) AS BIGINT) AS c
-                FROM v GROUP BY 1, 2),
-         cumv AS (SELECT g, v,
-             sum(c) OVER (PARTITION BY g ORDER BY v) AS cum,
-             sum(c) OVER (PARTITION BY g) AS n
-           FROM dv),
-         ex AS (SELECT g, q_micro, min(v) AS exact
-           FROM cumv CROSS JOIN qs
-           WHERE cum >= greatest(1, (n * q_micro + 999999) // 1000000)
-           GROUP BY 1, 2)
-         SELECT p.g AS l_returnflag, CAST(p.q_micro AS BIGINT) AS q_micro,
-           CAST(p.n AS BIGINT) AS n,
-           CAST((p.bucket_lo + p.bucket_hi) // 2 AS BIGINT) AS est,
-           CAST(e.exact AS BIGINT) AS exact,
-           CAST(abs((p.bucket_lo + p.bucket_hi) // 2 - e.exact)
-             * 1000000 // e.exact AS BIGINT) AS rel_err_micro,
-           CAST(CASE WHEN e.exact BETWEEN p.bucket_lo AND p.bucket_hi
-             THEN 1 ELSE 0 END AS BIGINT) AS within_bucket
-         FROM pick p JOIN ex e ON p.g = e.g AND p.q_micro = e.q_micro""",
-
-    // same vowel-group syllable heuristic, positive ratios under //,
-    // constants subtracted after the divisions
-    "q178_readability" ->
-      """WITH sp AS (SELECT doc_id,
-             regexp_replace(text, '((?:\S+ ){7}\S+) ', '\1. ', 'g') AS tx
-           FROM documents WHERE text IS NOT NULL),
-         w AS (SELECT doc_id,
-             [x for x in string_split(replace(tx, '.', ' '), ' ')
-              if len(x) > 0] AS ws,
-             greatest(1, len(regexp_extract_all(tx, '\.'))) AS n_sentences
-           FROM sp),
-         c AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_words,
-             CAST(n_sentences AS BIGINT) AS n_sentences,
-             CAST(list_sum([greatest(1,
-               len(regexp_extract_all(x, '[aeiouy]+'))) for x in ws])
-               AS BIGINT) AS n_syllables
-           FROM w WHERE len(ws) > 0)
-         SELECT doc_id, n_words, n_sentences, n_syllables,
-           CAST(390000 * n_words // n_sentences
-             + 11800000 * n_syllables // n_words
-             - 15590000 AS BIGINT) AS fk_grade_micro,
-           CAST(206835000 - 1015000 * n_words // n_sentences
-             - 84600000 * n_syllables // n_words AS BIGINT) AS ease_micro
-         FROM c""",
-
-    // same scale-by-n centered walk as a window prefix sum; empty
-    // prefix P_0=0 via greatest/least clamps; first-peak via min(rn)
-    "q179_cusum" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-           FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-             AND value IS NOT NULL),
-         rk AS (SELECT user_id, us, v, row_number() OVER (
-             PARTITION BY user_id ORDER BY us, event_id) AS rn FROM e),
-         cap AS (SELECT * FROM rk WHERE rn <= 128),
-         st AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(v) AS BIGINT) AS t FROM cap GROUP BY 1),
-         p AS (SELECT c.user_id, c.rn,
-             sum(st.n * c.v - st.t) OVER (PARTITION BY c.user_id
-               ORDER BY c.rn) AS p
-           FROM cap c JOIN st ON c.user_id = st.user_id),
-         agg AS (SELECT user_id, greatest(max(p), 0) AS maxp,
-             least(min(p), 0) AS minp FROM p GROUP BY 1),
-         pos AS (SELECT p.user_id, min(p.rn) AS cp
-           FROM p JOIN agg ON p.user_id = agg.user_id AND p.p = agg.maxp
-           WHERE agg.maxp > 0 GROUP BY 1)
-         SELECT st.user_id, st.n AS n_events,
-           CAST(coalesce(pos.cp, 0) AS BIGINT) AS cp_pos,
-           CAST((agg.maxp - agg.minp) // st.n AS BIGINT) AS excursion
-         FROM st JOIN agg ON st.user_id = agg.user_id
-         LEFT JOIN pos ON st.user_id = pos.user_id""",
-
-    // tie-aware pair signs; tau divides sign-split positive mass (a
-    // negative numerator is where div and // diverge)
-    "q180_mann_kendall" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-           FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-             AND value IS NOT NULL),
-         rk AS (SELECT user_id, us, v, row_number() OVER (
-             PARTITION BY user_id ORDER BY us, event_id) AS rn FROM e),
-         cap AS (SELECT * FROM rk WHERE rn <= 128),
-         ne AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_events
-           FROM cap GROUP BY 1),
-         s AS (SELECT a.user_id, CAST(sum(CASE WHEN b.v > a.v THEN 1
-               WHEN b.v < a.v THEN -1 ELSE 0 END) AS BIGINT) AS s_stat
-           FROM cap a JOIN cap b ON a.user_id = b.user_id
-             AND a.rn < b.rn GROUP BY 1)
-         SELECT ne.user_id, ne.n_events,
-           CAST(ne.n_events * (ne.n_events - 1) // 2 AS BIGINT) AS n_pairs,
-           s.s_stat,
-           CAST(CASE WHEN s.s_stat < 0 THEN
-               -((-s.s_stat) * 1000000 //
-                 (ne.n_events * (ne.n_events - 1) // 2))
-             ELSE s.s_stat * 1000000 //
-                 (ne.n_events * (ne.n_events - 1) // 2)
-             END AS BIGINT) AS tau_micro
-         FROM ne JOIN s ON ne.user_id = s.user_id
-         WHERE ne.n_events >= 2""",
-
-    // q89's pair SQL + q51's recursive reachability closure
-    "q195_entities" ->
-      """WITH RECURSIVE pf AS (SELECT * FROM (SELECT p_partkey, p_name,
-             p_brand, COUNT(*) OVER (PARTITION BY p_brand,
-               length(p_name) // 3) AS __cn FROM part)
-           WHERE __cn <= 2048),
-         cand AS (
-           SELECT a.p_partkey AS doc_a, b.p_partkey AS doc_b
-           FROM pf a JOIN pf b
-           ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
-             AND abs(length(a.p_name) - length(b.p_name)) <= 2
-           WHERE levenshtein(a.p_name, b.p_name) <= 2),
-         edges AS (SELECT doc_a AS src, doc_b AS dst FROM cand
-                   UNION SELECT doc_b, doc_a FROM cand),
-         reach AS (SELECT src, dst FROM edges
-                   UNION
-                   SELECT r.src, e.dst FROM reach r
-                   JOIN edges e ON r.dst = e.src),
-         comp AS (SELECT src AS doc,
-             least(src, min(dst)) AS component
-           FROM reach GROUP BY src),
-         ent AS (SELECT p.p_partkey,
-             coalesce(c.component, p.p_partkey) AS entity_id
-           FROM part p LEFT JOIN comp c ON p.p_partkey = c.doc),
-         g AS (SELECT entity_id, CAST(count(*) AS BIGINT) AS n_members
-           FROM ent GROUP BY 1)
-         SELECT g.entity_id, g.n_members, p.p_name AS canonical_name
-         FROM g JOIN part p ON g.entity_id = p.p_partkey
-         WHERE n_members >= 2""",
-
-    // closed-form sums, minutes offset, sign-split staged division
-    "q197_ols_trend" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-           FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-             AND value IS NOT NULL),
-         rk AS (SELECT user_id, us, v, row_number() OVER (
-             PARTITION BY user_id ORDER BY us, event_id) AS rn FROM e),
-         cap AS (SELECT * FROM rk WHERE rn <= 128),
-         x AS (SELECT user_id, v,
-             (us - min(us) OVER (PARTITION BY user_id)) // 60000000 AS x
-           FROM cap),
-         s AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(x) AS BIGINT) AS sx, CAST(sum(v) AS BIGINT) AS sy,
-             CAST(sum(x * x) AS BIGINT) AS sxx,
-             CAST(sum(x * v) AS BIGINT) AS sxy
-           FROM x GROUP BY 1),
-         d AS (SELECT *, n * sxx - sx * sx AS den,
-             n * sxy - sx * sy AS num FROM s)
-         SELECT user_id, n AS n_events,
-           CAST(CASE WHEN num >= 0
-             THEN (num * 1000 // den) * 1000
-               + (num * 1000 % den) * 1000 // den
-             ELSE -(((-num) * 1000 // den) * 1000
-               + ((-num) * 1000 % den) * 1000 // den)
-             END AS BIGINT) AS slope_micro_per_min
-         FROM d WHERE den > 0""",
-
-    // q150's oracle one order up: the trigram/continuation-bigram/
-    // continuation-unigram chain as exact integer ratios, one ln
-    "q201_interp_ppl_tri" -> {
-      val h = sqlHexLong("w[i]")
-      s"""WITH refz AS (
-           SELECT unnest(h[1:len(h)-2]) AS b1, unnest(h[2:len(h)-1]) AS b2,
-             unnest(h[3:len(h)]) AS b3
-           FROM (SELECT [$h % 256 for i in range(1, len(w) + 1)] AS h
-                 FROM (SELECT string_split(text, ' ') AS w FROM documents
-                       WHERE source IN ('src0','src1') AND text IS NOT NULL)
-                 WHERE len(w) >= 3)),
-         refp AS (SELECT b1, b2, b3, CAST(count(*) AS BIGINT) AS c123
-                  FROM refz GROUP BY 1, 2, 3),
-         pre AS (SELECT b1, b2, CAST(sum(c123) AS BIGINT) AS c12,
-                 CAST(count(*) AS BIGINT) AS n12 FROM refp GROUP BY 1, 2),
-         cont AS (SELECT b2, b3, CAST(count(*) AS BIGINT) AS cp
-                  FROM refp GROUP BY 1, 2),
-         c2 AS (SELECT b2, CAST(sum(cp) AS BIGINT) AS cp2,
-                CAST(count(*) AS BIGINT) AS n2 FROM cont GROUP BY 1),
-         ctt AS (SELECT b3, CAST(count(*) AS BIGINT) AS ct3
-                 FROM cont GROUP BY 1),
-         np AS (SELECT CAST(count(*) AS BIGINT) AS np FROM cont),
-         dz AS (
-           SELECT doc_id, unnest(h[1:len(h)-2]) AS b1,
-             unnest(h[2:len(h)-1]) AS b2, unnest(h[3:len(h)]) AS b3
-           FROM (SELECT doc_id, [$h % 256 for i in range(1, len(w) + 1)] AS h
-                 FROM (SELECT doc_id, string_split(
-                         CASE WHEN source NOT IN ('src0','src1') AND doc_id % 11 = 0
-                              THEN text || ' cuneiform hieroglyph abjad'
-                              ELSE text END, ' ') AS w FROM documents
-                       WHERE text IS NOT NULL)
-                 WHERE len(w) >= 3)),
-         dp AS (SELECT doc_id, b1, b2, b3, CAST(count(*) AS BIGINT) AS m
-                FROM dz GROUP BY 1, 2, 3, 4),
-         terms AS (
-           SELECT doc_id, m,
-             CASE WHEN coalesce(cp2, 0) > 0
-               THEN greatest(4 * coalesce(cp, 0) - 3, 0) * (np + 256)
-                    + 3 * n2 * (coalesce(ct3, 0) + 1)
-               ELSE coalesce(ct3, 0) + 1 END AS a2,
-             CASE WHEN coalesce(cp2, 0) > 0
-               THEN 4 * cp2 * (np + 256) ELSE np + 256 END AS d2,
-             coalesce(c12, 0) AS c12x, coalesce(n12, 0) AS n12x,
-             coalesce(c123, 0) AS c123x
-           FROM dp LEFT JOIN pre USING (b1, b2)
-                LEFT JOIN refp USING (b1, b2, b3)
-                LEFT JOIN cont USING (b2, b3) LEFT JOIN c2 USING (b2)
-                LEFT JOIN ctt USING (b3) CROSS JOIN np),
-         scored AS (
-           SELECT doc_id, CAST(sum(m) AS BIGINT) AS n_triples,
-             CAST(sum(m * CAST(floor(ln(
-               CAST(CASE WHEN c12x > 0 THEN 4 * c12x * d2 ELSE d2 END
-                 AS DOUBLE) /
-               CAST(CASE WHEN c12x > 0
-                    THEN greatest(4 * c123x - 3, 0) * d2 + 3 * n12x * a2
-                    ELSE a2 END AS DOUBLE))
-               * 1000000 + 0.5) AS BIGINT)) AS BIGINT) AS nll_micro
-           FROM terms GROUP BY 1),
-         mm AS (SELECT doc_id, n_triples, nll_micro,
-                  nll_micro // n_triples AS mean_micro,
-                  ntile(3) OVER (ORDER BY nll_micro // n_triples,
-                    nll_micro, doc_id) AS t3
-                FROM scored)
-         SELECT doc_id, n_triples, nll_micro,
-           CAST(mean_micro AS BIGINT) AS mean_micro,
-           CASE t3 WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END
-             AS ppl_bucket
-         FROM mm"""
-    },
-
-    // the q201 chain one order up at B=64: 4-gram → continuation
-    // trigram → continuation-of-continuation bigram → continuation
-    // unigram, the same rationalized integer chain with three
-    // backoff levels (a1/d1 → a2/d2 → num/den)
-    "q209_interp_ppl_quad" -> {
-      val h = sqlHexLong("w[i]")
-      s"""WITH refz AS (
-           SELECT unnest(h[1:len(h)-3]) AS b1, unnest(h[2:len(h)-2]) AS b2,
-             unnest(h[3:len(h)-1]) AS b3, unnest(h[4:len(h)]) AS b4
-           FROM (SELECT [$h % 64 for i in range(1, len(w) + 1)] AS h
-                 FROM (SELECT string_split(text, ' ') AS w FROM documents
-                       WHERE source IN ('src0','src1') AND text IS NOT NULL)
-                 WHERE len(w) >= 4)),
-         refp AS (SELECT b1, b2, b3, b4, CAST(count(*) AS BIGINT) AS c1234
-                  FROM refz GROUP BY 1, 2, 3, 4),
-         pre AS (SELECT b1, b2, b3, CAST(sum(c1234) AS BIGINT) AS c123,
-                 CAST(count(*) AS BIGINT) AS n123 FROM refp GROUP BY 1, 2, 3),
-         cont3 AS (SELECT b2, b3, b4, CAST(count(*) AS BIGINT) AS cp3
-                   FROM refp GROUP BY 1, 2, 3),
-         c23 AS (SELECT b2, b3, CAST(sum(cp3) AS BIGINT) AS cp3s,
-                 CAST(count(*) AS BIGINT) AS n23 FROM cont3 GROUP BY 1, 2),
-         contp AS (SELECT b3, b4, CAST(count(*) AS BIGINT) AS cpp
-                   FROM cont3 GROUP BY 1, 2),
-         c3 AS (SELECT b3, CAST(sum(cpp) AS BIGINT) AS cpp2,
-                CAST(count(*) AS BIGINT) AS n3 FROM contp GROUP BY 1),
-         ctt AS (SELECT b4, CAST(count(*) AS BIGINT) AS ct4
-                 FROM contp GROUP BY 1),
-         np AS (SELECT CAST(count(*) AS BIGINT) AS np FROM contp),
-         dz AS (
-           SELECT doc_id, unnest(h[1:len(h)-3]) AS b1,
-             unnest(h[2:len(h)-2]) AS b2, unnest(h[3:len(h)-1]) AS b3,
-             unnest(h[4:len(h)]) AS b4
-           FROM (SELECT doc_id, [$h % 64 for i in range(1, len(w) + 1)] AS h
-                 FROM (SELECT doc_id, string_split(
-                         CASE WHEN source NOT IN ('src0','src1') AND doc_id % 11 = 0
-                              THEN text || ' cuneiform hieroglyph abjad'
-                              ELSE text END, ' ') AS w FROM documents
-                       WHERE text IS NOT NULL)
-                 WHERE len(w) >= 4)),
-         dp AS (SELECT doc_id, b1, b2, b3, b4, CAST(count(*) AS BIGINT) AS m
-                FROM dz GROUP BY 1, 2, 3, 4, 5),
-         t1 AS (
-           SELECT doc_id, m,
-             CASE WHEN coalesce(cpp2, 0) > 0
-               THEN greatest(4 * coalesce(cpp, 0) - 3, 0) * (np + 64)
-                    + 3 * n3 * (coalesce(ct4, 0) + 1)
-               ELSE coalesce(ct4, 0) + 1 END AS a1,
-             CASE WHEN coalesce(cpp2, 0) > 0
-               THEN 4 * cpp2 * (np + 64) ELSE np + 64 END AS d1,
-             coalesce(cp3, 0) AS cp3x, coalesce(cp3s, 0) AS cp3sx,
-             coalesce(n23, 0) AS n23x,
-             coalesce(c123, 0) AS c123x, coalesce(n123, 0) AS n123x,
-             coalesce(c1234, 0) AS c1234x
-           FROM dp LEFT JOIN pre USING (b1, b2, b3)
-                LEFT JOIN refp USING (b1, b2, b3, b4)
-                LEFT JOIN cont3 USING (b2, b3, b4)
-                LEFT JOIN c23 USING (b2, b3)
-                LEFT JOIN contp USING (b3, b4) LEFT JOIN c3 USING (b3)
-                LEFT JOIN ctt USING (b4) CROSS JOIN np),
-         t2 AS (
-           SELECT doc_id, m, c123x, n123x, c1234x,
-             CASE WHEN cp3sx > 0
-               THEN greatest(4 * cp3x - 3, 0) * d1 + 3 * n23x * a1
-               ELSE a1 END AS a2,
-             CASE WHEN cp3sx > 0 THEN 4 * cp3sx * d1 ELSE d1 END AS d2
-           FROM t1),
-         scored AS (
-           SELECT doc_id, CAST(sum(m) AS BIGINT) AS n_quads,
-             CAST(sum(m * CAST(floor(ln(
-               CAST(CASE WHEN c123x > 0 THEN 4 * c123x * d2 ELSE d2 END
-                 AS DOUBLE) /
-               CAST(CASE WHEN c123x > 0
-                    THEN greatest(4 * c1234x - 3, 0) * d2 + 3 * n123x * a2
-                    ELSE a2 END AS DOUBLE))
-               * 1000000 + 0.5) AS BIGINT)) AS BIGINT) AS nll_micro
-           FROM t2 GROUP BY 1),
-         mm AS (SELECT doc_id, n_quads, nll_micro,
-                  nll_micro // n_quads AS mean_micro,
-                  ntile(3) OVER (ORDER BY nll_micro // n_quads,
-                    nll_micro, doc_id) AS t3
-                FROM scored)
-         SELECT doc_id, n_quads, nll_micro,
-           CAST(mean_micro AS BIGINT) AS mean_micro,
-           CASE t3 WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END
-             AS ppl_bucket
-         FROM mm"""
-    },
-
-    "q212_interp_ppl_quint" -> {
-      val h = sqlHexLong("w[i]")
-      s"""WITH refz AS (
-           SELECT unnest(h[1:len(h)-4]) AS b1, unnest(h[2:len(h)-3]) AS b2,
-             unnest(h[3:len(h)-2]) AS b3, unnest(h[4:len(h)-1]) AS b4,
-             unnest(h[5:len(h)]) AS b5
-           FROM (SELECT [$h % 32 for i in range(1, len(w) + 1)] AS h
-                 FROM (SELECT string_split(text, ' ') AS w FROM documents
-                       WHERE source IN ('src0','src1') AND text IS NOT NULL)
-                 WHERE len(w) >= 5)),
-         refp AS (SELECT b1, b2, b3, b4, b5,
-                  CAST(count(*) AS BIGINT) AS c12345
-                  FROM refz GROUP BY 1, 2, 3, 4, 5),
-         pre AS (SELECT b1, b2, b3, b4, CAST(sum(c12345) AS BIGINT) AS c1234,
-                 CAST(count(*) AS BIGINT) AS n1234
-                 FROM refp GROUP BY 1, 2, 3, 4),
-         cont4 AS (SELECT b2, b3, b4, b5, CAST(count(*) AS BIGINT) AS cp4
-                   FROM refp GROUP BY 1, 2, 3, 4),
-         c234 AS (SELECT b2, b3, b4, CAST(sum(cp4) AS BIGINT) AS cp4s,
-                  CAST(count(*) AS BIGINT) AS n234 FROM cont4 GROUP BY 1, 2, 3),
-         cont3 AS (SELECT b3, b4, b5, CAST(count(*) AS BIGINT) AS cpp3
-                   FROM cont4 GROUP BY 1, 2, 3),
-         c34 AS (SELECT b3, b4, CAST(sum(cpp3) AS BIGINT) AS cpp3s,
-                 CAST(count(*) AS BIGINT) AS n34 FROM cont3 GROUP BY 1, 2),
-         contp AS (SELECT b4, b5, CAST(count(*) AS BIGINT) AS cppp
-                   FROM cont3 GROUP BY 1, 2),
-         c4 AS (SELECT b4, CAST(sum(cppp) AS BIGINT) AS cppp2,
-                CAST(count(*) AS BIGINT) AS n4 FROM contp GROUP BY 1),
-         ctt AS (SELECT b5, CAST(count(*) AS BIGINT) AS ct5
-                 FROM contp GROUP BY 1),
-         np AS (SELECT CAST(count(*) AS BIGINT) AS np FROM contp),
-         dz AS (
-           SELECT doc_id, unnest(h[1:len(h)-4]) AS b1,
-             unnest(h[2:len(h)-3]) AS b2, unnest(h[3:len(h)-2]) AS b3,
-             unnest(h[4:len(h)-1]) AS b4, unnest(h[5:len(h)]) AS b5
-           FROM (SELECT doc_id, [$h % 32 for i in range(1, len(w) + 1)] AS h
-                 FROM (SELECT doc_id, string_split(
-                         CASE WHEN source NOT IN ('src0','src1') AND doc_id % 11 = 0
-                              THEN text || ' cuneiform hieroglyph abjad syllabary'
-                              ELSE text END, ' ') AS w FROM documents
-                       WHERE text IS NOT NULL)
-                 WHERE len(w) >= 5)),
-         dp AS (SELECT doc_id, b1, b2, b3, b4, b5,
-                CAST(count(*) AS BIGINT) AS m
-                FROM dz GROUP BY 1, 2, 3, 4, 5, 6),
-         t1 AS (
-           SELECT doc_id, m,
-             CASE WHEN coalesce(cppp2, 0) > 0
-               THEN greatest(4 * coalesce(cppp, 0) - 3, 0) * (np + 32)
-                    + 3 * n4 * (coalesce(ct5, 0) + 1)
-               ELSE coalesce(ct5, 0) + 1 END AS a1,
-             CASE WHEN coalesce(cppp2, 0) > 0
-               THEN 4 * cppp2 * (np + 32) ELSE np + 32 END AS d1,
-             coalesce(cpp3, 0) AS cpp3x, coalesce(cpp3s, 0) AS cpp3sx,
-             coalesce(n34, 0) AS n34x,
-             coalesce(cp4, 0) AS cp4x, coalesce(cp4s, 0) AS cp4sx,
-             coalesce(n234, 0) AS n234x,
-             coalesce(c1234, 0) AS c1234x, coalesce(n1234, 0) AS n1234x,
-             coalesce(c12345, 0) AS c12345x
-           FROM dp LEFT JOIN pre USING (b1, b2, b3, b4)
-                LEFT JOIN refp USING (b1, b2, b3, b4, b5)
-                LEFT JOIN cont4 USING (b2, b3, b4, b5)
-                LEFT JOIN c234 USING (b2, b3, b4)
-                LEFT JOIN cont3 USING (b3, b4, b5)
-                LEFT JOIN c34 USING (b3, b4)
-                LEFT JOIN contp USING (b4, b5) LEFT JOIN c4 USING (b4)
-                LEFT JOIN ctt USING (b5) CROSS JOIN np),
-         t2 AS (
-           SELECT doc_id, m, cp4x, cp4sx, n234x, c1234x, n1234x, c12345x,
-             CASE WHEN cpp3sx > 0
-               THEN greatest(4 * cpp3x - 3, 0) * d1 + 3 * n34x * a1
-               ELSE a1 END AS a2,
-             CASE WHEN cpp3sx > 0 THEN 4 * cpp3sx * d1 ELSE d1 END AS d2
-           FROM t1),
-         t3 AS (
-           SELECT doc_id, m, c1234x, n1234x, c12345x,
-             CASE WHEN cp4sx > 0
-               THEN greatest(4 * cp4x - 3, 0) * d2 + 3 * n234x * a2
-               ELSE a2 END AS a3,
-             CASE WHEN cp4sx > 0 THEN 4 * cp4sx * d2 ELSE d2 END AS d3
-           FROM t2),
-         scored AS (
-           SELECT doc_id, CAST(sum(m) AS BIGINT) AS n_quints,
-             CAST(sum(m * CAST(floor(ln(
-               CAST(CASE WHEN c1234x > 0 THEN 4 * c1234x * d3 ELSE d3 END
-                 AS DOUBLE) /
-               CAST(CASE WHEN c1234x > 0
-                    THEN greatest(4 * c12345x - 3, 0) * d3 + 3 * n1234x * a3
-                    ELSE a3 END AS DOUBLE))
-               * 1000000 + 0.5) AS BIGINT)) AS BIGINT) AS nll_micro
-           FROM t3 GROUP BY 1),
-         mm AS (SELECT doc_id, n_quints, nll_micro,
-                  nll_micro // n_quints AS mean_micro,
-                  ntile(3) OVER (ORDER BY nll_micro // n_quints,
-                    nll_micro, doc_id) AS t3n
-                FROM scored)
-         SELECT doc_id, n_quints, nll_micro,
-           CAST(mean_micro AS BIGINT) AS mean_micro,
-           CASE t3n WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END
-             AS ppl_bucket
-         FROM mm"""
-    },
-
-    // q70's global-offset pack + shard-of-start + q86's XOR digest,
-    // recomputed from the raw corpus
-    "q200_shard_manifest" -> {
-      val h = sqlHexLong(
-        "concat_ws('|', doc_id, n_tokens, start_offset, fp)")
-      s"""WITH n AS (SELECT doc_id, md5(text) AS fp,
-           CAST(coalesce(len(string_split(text, ' ')), 0) AS BIGINT)
-             AS n_tokens
-           FROM documents),
-         o AS (SELECT doc_id, fp, n_tokens,
-           CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-             AS BIGINT) AS start_offset FROM n),
-         s AS (SELECT *, start_offset // 4096 AS shard_id FROM o)
-         SELECT shard_id, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-           CAST(min(doc_id) AS BIGINT) AS first_doc,
-           CAST(max(doc_id) AS BIGINT) AS last_doc,
-           CAST(bit_xor($h) AS BIGINT) AS xor_hash
-         FROM s GROUP BY 1"""
-    },
-
-    // the pngFixture block grid + gradient-bit assembly as arithmetic
-    "q198_image_dhash" ->
-      s"""WITH $imageDHashCtes
-         SELECT doc_id, dhash FROM h""",
-
-    // q198's hash CTE + the q49 band/bucket/Hamming pair machinery
-    "q199_image_neardup" -> bandPairsSql(imageDHashCtes),
-
-    // q28's exact-dup oracle with DuckDB's own nfc_normalize as the
-    // key (the operator's java.text.Normalizer twin — both implement
-    // Unicode TR #15, so the md5s agree); chr(101)||chr(769) is the
-    // decomposed e + combining acute, chr(233) the precomposed é
-    "q207_nfc_dedup" ->
-      """WITH spiked AS (SELECT doc_id,
-           CASE WHEN doc_id % 10 = 3
-                  THEN 'Accent Family ' || (doc_id // 10) || ' caf'
-                    || chr(101) || chr(769) || ' menu'
-                WHEN doc_id % 10 = 7
-                  THEN 'Accent Family ' || (doc_id // 10) || ' caf'
-                    || chr(233) || ' menu'
-                ELSE text END AS text
-           FROM documents)
-         SELECT md5(nfc_normalize(lower(trim(text)))) AS fp,
-           CAST(min(doc_id) AS BIGINT) AS keep_id,
-           CAST(count(*) AS BIGINT) AS n_dups
-         FROM spiked GROUP BY 1""",
-
-    // graded-twin spike, q158's PPJoin shape at the MinHash shingle
-    // order as truth, the q29 banding CTE as candidates, one
-    // full-outer reconciliation
-    "q206_lsh_recall_audit" -> {
-      s"""WITH $gradedSpikeCte,
-         ${ppjoinTruthCtes(80)},
-         cand AS (${minhashOracleFrom("spiked")}),
-         audit AS (
-           SELECT t.doc_a IS NOT NULL AS is_t, c.doc_a IS NOT NULL AS is_c
-           FROM truth t FULL OUTER JOIN cand c
-             ON t.doc_a = c.doc_a AND t.doc_b = c.doc_b),
-         agg AS (SELECT
-             CAST(coalesce(sum(CASE WHEN is_t THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_true,
-             CAST(coalesce(sum(CASE WHEN is_c THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_cand,
-             CAST(coalesce(sum(CASE WHEN is_t AND is_c THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_hit
-           FROM audit)
-         SELECT n_true, n_cand, n_hit,
-           CASE WHEN n_true > 0
-             THEN CAST(n_hit * 1000000 // n_true AS BIGINT) END AS recall_micro,
-           CASE WHEN n_cand > 0
-             THEN CAST(n_hit * 1000000 // n_cand AS BIGINT) END AS precision_micro
-         FROM agg"""
-    },
-
-    // the q206 audit at EVERY (bands, rows) split of the 16-permutation
-    // budget: same spiked corpus, same PPJoin truth, per-grid-point
-    // banding/cap/reconciliation, grid-skeleton left join so every
-    // operating point reports a row
-    "q208_lsh_banding_sweep" -> {
-      val grid = Seq(1, 2, 4, 8, 16)
-      val maxBucket = 2000
-      val bandedUnion = grid.flatMap { b =>
-        val rows = MinhashPerms / b
-        (0 until b).map { i =>
-          val cols = (0 until rows).map(r => s"mh${i * rows + r}").mkString(", ")
-          s"SELECT doc_id, CAST($b AS BIGINT) AS bands, $i AS band_idx, " +
-            s"md5(concat_ws(',', $cols)) AS band_hash FROM mh"
-        }
-      }.mkString(" UNION ALL ")
-      val gridVals = grid.map(b => s"($b)").mkString(", ")
-      s"""WITH $gradedSpikeCte,
-         ${ppjoinTruthCtes(80)},
-         cand AS (${minhashMhCtesFrom("spiked")},
-           sbanded AS ($bandedUnion),
-           sok AS (SELECT bands, band_idx, band_hash FROM sbanded
-                   GROUP BY 1, 2, 3 HAVING count(*) BETWEEN 2 AND $maxBucket)
-           SELECT DISTINCT a.bands, a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM sbanded a JOIN sbanded b
-             ON a.bands = b.bands AND a.band_idx = b.band_idx
-               AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
-           JOIN sok ON a.bands = sok.bands AND a.band_idx = sok.band_idx
-             AND a.band_hash = sok.band_hash),
-         truthx AS (SELECT CAST(g.bands AS BIGINT) AS bands, t.doc_a, t.doc_b
-           FROM truth t CROSS JOIN (VALUES $gridVals) g(bands)),
-         audit AS (
-           SELECT coalesce(t.bands, c.bands) AS bands,
-             t.doc_a IS NOT NULL AS is_t, c.doc_a IS NOT NULL AS is_c
-           FROM truthx t FULL OUTER JOIN cand c
-             ON t.bands = c.bands AND t.doc_a = c.doc_a AND t.doc_b = c.doc_b),
-         agg AS (SELECT bands,
-             CAST(coalesce(sum(CASE WHEN is_t THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_true,
-             CAST(coalesce(sum(CASE WHEN is_c THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_cand,
-             CAST(coalesce(sum(CASE WHEN is_t AND is_c THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_hit
-           FROM audit GROUP BY bands),
-         sgrid AS (SELECT CAST(x AS BIGINT) AS bands FROM (VALUES $gridVals) v(x))
-         SELECT g.bands, CAST($MinhashPerms // g.bands AS BIGINT) AS rows_per_band,
-           CAST(coalesce(a.n_true, 0) AS BIGINT) AS n_true,
-           CAST(coalesce(a.n_cand, 0) AS BIGINT) AS n_cand,
-           CAST(coalesce(a.n_hit, 0) AS BIGINT) AS n_hit,
-           CASE WHEN coalesce(a.n_true, 0) > 0
-             THEN CAST(a.n_hit * 1000000 // a.n_true AS BIGINT) END AS recall_micro,
-           CASE WHEN coalesce(a.n_cand, 0) > 0
-             THEN CAST(a.n_hit * 1000000 // a.n_cand AS BIGINT) END AS precision_micro
-         FROM sgrid g LEFT JOIN agg a ON a.bands = g.bands"""
-    },
-
-    // the wavFixture envelope restated as arithmetic (1-D gridHashCtes)
-    "q202_audio_envhash" ->
-      s"""WITH $audioHashCtes
-         SELECT doc_id, dhash AS ahash FROM h""",
-
-    // audio envelope hash + the shared band/bucket/Hamming machinery
-    "q203_audio_neardup" -> bandPairsSql(audioHashCtes),
-
-    // the aviFixture frame-0 grid under the 'vid:' prefix — the decoy
-    // frame 1 must never surface (a wrong-frame demux hashes every doc
-    // identically and zeroes the pair set)
-    "q204_video_dhash" ->
-      s"""WITH ${gridHashCtes("vid")}
-         SELECT doc_id, dhash AS vhash FROM h""",
-
-    // the mjpegFixture walk bits reassembled directly — the planted
-    // gradient IS the hash, the JPEG round-trip must recover it
-    // bit-exactly; the decoy sample 1 must never surface
-    "q210_mjpeg_dhash" ->
-      s"""WITH ${walkHashCtes("mjb")}
-         SELECT doc_id, dhash AS vhash FROM h""",
-
-    // MJPEG first-sample hash + the shared band/bucket/Hamming machinery
-    "q211_mjpeg_neardup" -> bandPairsSql(walkHashCtes("mjb")),
-
-    // H.264 I_PCM DC-grid walk bits reassembled directly — the planted
-    // gradient IS the hash; the slice/PCM parse must recover it
-    // bit-exactly through the real NAL walk, then the shared
-    // band/bucket/Hamming machinery pairs the twins
-    "q221_avc_ipcm_neardup" -> bandPairsSql(walkHashCtes("avp")),
-
-    // CAVLC sibling: the entropy decode + dequant + DC-prediction chain
-    // reconstructs the same planted walk exactly (encoder codes against
-    // its own reconstruction), so the oracle is the identical md5%2 bit
-    // assembly under the "avq" prefix
-    "q223_avc_cavlc_neardup" -> bandPairsSql(walkHashCtes("avq")),
-
-    // MKV first-block walk bits + the shared band/bucket/Hamming
-    // machinery — the EBML demux must hand block 0 to the JPEG decoder
-    "q222_mkv_neardup" -> bandPairsSql(walkHashCtes("mkv")),
-
-    // first-key-frame hash + the shared band/bucket/Hamming machinery
-    "q205_video_neardup" -> bandPairsSql(gridHashCtes("vid")),
-
-    // same grouped-data Gini collapse, two-division overflow guard
-    "q194_gini" ->
-      """WITH spend AS (SELECT o_custkey,
-             CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-               AS BIGINT) AS sp
-           FROM orders GROUP BY 1),
-         j AS (SELECT c.c_mktsegment AS g,
-             CASE WHEN c.c_mktsegment = 'AUTOMOBILE'
-                 AND c.c_custkey % 20 = 0
-               THEN coalesce(sp, 0) * 20 ELSE coalesce(sp, 0) END AS v
-           FROM customer c LEFT JOIN spend s ON c.c_custkey = s.o_custkey),
-         cnt AS (SELECT g, v, CAST(count(*) AS BIGINT) AS c
-           FROM j WHERE g IS NOT NULL AND v >= 0 GROUP BY 1, 2),
-         cum AS (SELECT g, v, c,
-             coalesce(sum(c) OVER (PARTITION BY g ORDER BY v
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS k,
-             sum(c) OVER (PARTITION BY g) AS n,
-             sum(v * c) OVER (PARTITION BY g) AS tot
-           FROM cnt),
-         sc AS (SELECT *, CASE
-             WHEN CAST(n AS DOUBLE) * CAST(tot AS DOUBLE) <= 9e15 THEN 1
-             WHEN CAST(n AS DOUBLE) * CAST(tot AS DOUBLE) <= 9e16 THEN 10
-             WHEN CAST(n AS DOUBLE) * CAST(tot AS DOUBLE) <= 9e17 THEN 100
-             WHEN CAST(n AS DOUBLE) * CAST(tot AS DOUBLE) <= 9e18 THEN 1000
-             WHEN CAST(n AS DOUBLE) * CAST(tot AS DOUBLE) <= 9e19 THEN 10000
-             WHEN CAST(n AS DOUBLE) * CAST(tot AS DOUBLE) <= 9e20 THEN 100000
-             ELSE 1000000 END AS s
-           FROM cum),
-         t AS (SELECT g, CAST(max(n) AS BIGINT) AS n_rows,
-             CAST(max(tot) AS BIGINT) AS total,
-             CAST(max(s) AS BIGINT) AS scale_unit,
-             CAST(sum((v // s) * c * (2 * k + c - n)) AS BIGINT) AS t,
-             CAST(sum((v // s) * c) AS BIGINT) AS ts
-           FROM sc GROUP BY 1)
-         SELECT g AS c_mktsegment, n_rows, total, scale_unit,
-           CASE WHEN ts = 0 THEN NULL
-             ELSE CAST((t * 1000 // (n_rows * ts)) * 1000
-               + (t * 1000 % (n_rows * ts)) * 1000 // (n_rows * ts)
-               AS BIGINT) END AS gini_micro
-         FROM t WHERE total > 0""",
-
-    // q63's session windows, ordered-list path build, top-k
-    "q193_session_paths" ->
-      """WITH e AS (SELECT user_id, event_id, event_type,
-             epoch_us(ts) AS us
-           FROM events WHERE user_id IS NOT NULL
-             AND event_type IS NOT NULL AND ts IS NOT NULL),
-         l AS (SELECT *, lag(us) OVER (PARTITION BY user_id
-             ORDER BY us, event_id) AS prev FROM e),
-         f AS (SELECT *, CASE WHEN prev IS NULL
-             OR us - prev > 86400000000 THEN 1 ELSE 0 END AS nw FROM l),
-         s AS (SELECT *, sum(nw) OVER (PARTITION BY user_id
-             ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS sid
-           FROM f),
-         p AS (SELECT user_id, sid, CAST(count(*) AS BIGINT) AS n,
-             array_to_string(list(event_type
-               ORDER BY us, event_id)[1:6], '>') AS path
-           FROM s GROUP BY 1, 2)
-         SELECT path, CAST(count(*) AS BIGINT) AS n_sessions,
-           CAST(sum(n) AS BIGINT) AS n_events,
-           CAST(sum(CASE WHEN n > 6 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_truncated
-         FROM p GROUP BY 1
-         ORDER BY n_sessions DESC, path LIMIT 50""",
-
-    // same shared sketch grid, exact cross-multiplied CDF gap
-    "q192_ks_drift" ->
-      """WITH base AS (SELECT * FROM (SELECT event_type AS g,
-             ts < TIMESTAMP '2024-01-16' AS isref,
-             CASE WHEN NOT (ts < TIMESTAMP '2024-01-16')
-                 AND event_type = 'error'
-               THEN CAST(floor(value * 100 + 0.5) AS BIGINT) + 5000
-               WHEN NOT (ts < TIMESTAMP '2024-01-16')
-                 AND event_type = 'purchase'
-               THEN CAST(floor(value * 100 + 0.5) AS BIGINT) * 2
-               ELSE CAST(floor(value * 100 + 0.5) AS BIGINT) END AS v
-           FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-             AND value IS NOT NULL) WHERE v > 0),
-         bk AS (SELECT g,
-             greatest(length(to_base(v, 2)) - 1 - 8, 0) AS shift,
-             v >> greatest(length(to_base(v, 2)) - 1 - 8, 0) AS m,
-             CAST(count(*) FILTER (WHERE isref) AS BIGINT) AS cr,
-             CAST(count(*) FILTER (WHERE NOT isref) AS BIGINT) AS cc
-           FROM base GROUP BY 1, 2, 3),
-         cum AS (SELECT g, cr, cc,
-             sum(cr) OVER (PARTITION BY g ORDER BY (m << shift)) AS cumr,
-             sum(cc) OVER (PARTITION BY g ORDER BY (m << shift)) AS cumc,
-             sum(cr) OVER (PARTITION BY g) AS nr,
-             sum(cc) OVER (PARTITION BY g) AS nc
-           FROM bk)
-         SELECT g AS event_type, CAST(nr AS BIGINT) AS n_ref,
-           CAST(nc AS BIGINT) AS n_cur,
-           CAST(max(abs(cumr * nc - cumc * nr)) * 1000000 // (nr * nc)
-             AS BIGINT) AS ks_micro
-         FROM cum WHERE nr > 0 AND nc > 0 GROUP BY g, nr, nc""",
-
-    // same floor-mean/MD scaling, sign-split divisions, md5 tie-break
-    "q191_burrows_delta" -> {
-      val ms = Seq("thus", "hence", "very", "quite")
-      val cid = sqlHexLong("cand")
-      val fCols = ms.zipWithIndex.map { case (w, i) =>
-        s"CAST(len(list_filter(toks, x -> x = '$w')) AS BIGINT) * 1000000 // n AS f$i"
-      }.mkString(", ")
-      val fbarCols = ms.indices.map(i =>
-        s"CAST(sum(f$i) AS BIGINT) // count(*) AS fbar$i").mkString(", ")
-      val mdCols = ms.indices.map(i =>
-        s"greatest(CAST(sum(abs(f$i - fbar$i)) AS BIGINT) // max(nd), 1) AS md$i")
-        .mkString(", ")
-      val zCols = ms.indices.map(i =>
-        s"""CASE WHEN f$i >= fbar$i
-           THEN (f$i - fbar$i) * 1000000 // md$i
-           ELSE -((fbar$i - f$i) * 1000000 // md$i) END AS z$i""")
-        .mkString(", ")
-      val szCols = ms.indices.map(i =>
-        s"CAST(sum(z$i) AS BIGINT) AS sz$i").mkString(", ")
-      val zcCols = ms.indices.map(i =>
-        s"""CASE WHEN sz$i >= 0 THEN sz$i // ns
-           ELSE -((-sz$i) // ns) END AS zc$i""").mkString(", ")
-      val deltaExpr = ms.indices.map(i => s"abs(z$i - zc$i)")
-        .mkString("(", " + ", s") // ${ms.length}")
-      s"""WITH sp AS (SELECT doc_id, source, text || ' '
-             || repeat('thus ', CAST(substr(source, 4) AS INTEGER) % 3 + 1)
-             || repeat('hence ', CAST(substr(source, 4) AS INTEGER) % 4 + 1)
-             || repeat('very ', CAST(substr(source, 4) AS INTEGER) % 5 + 1)
-             || 'quite' AS tx
-           FROM documents WHERE text IS NOT NULL AND source IS NOT NULL),
-         t AS (SELECT doc_id, source,
-             [x for x in string_split(tx, ' ') if len(x) > 0] AS toks
-           FROM sp),
-         t2 AS (SELECT doc_id, source, toks,
-             CAST(len(toks) AS BIGINT) AS n FROM t WHERE len(toks) > 0),
-         r AS (SELECT doc_id, source, n, $fCols FROM t2),
-         st AS (SELECT $fbarCols, CAST(count(*) AS BIGINT) AS nd FROM r),
-         md AS (SELECT $mdCols FROM r CROSS JOIN st),
-         z AS (SELECT doc_id, source, $zCols
-           FROM r CROSS JOIN st CROSS JOIN md),
-         c AS (SELECT source AS cand, $szCols,
-             CAST(count(*) AS BIGINT) AS ns
-           FROM z GROUP BY 1),
-         cc AS (SELECT cand, $cid AS cid, $zcCols FROM c),
-         d AS (SELECT z.doc_id, z.source, cc.cand, cc.cid,
-             CAST($deltaExpr AS BIGINT) AS delta
-           FROM z CROSS JOIN cc),
-         p AS (SELECT *, row_number() OVER (PARTITION BY doc_id
-             ORDER BY delta, cid) AS rn FROM d)
-         SELECT doc_id, source, cand AS predicted,
-           delta AS delta_micro, source = cand AS correct
-         FROM p WHERE rn = 1"""
-    },
-
-    // Mann-Whitney with doubled tie halves over the distinct-score
-    // table; same spiked NB scoring as q164
-    "q190_auc" -> {
-      val noised = nbClassifierOracleSpiked(
-        """CASE WHEN source IN ('src0','src1') AND doc_id % 4 <> 0
-        THEN text || ' curated encyclopedia reference citation archive'
-        WHEN source = 'src2' THEN text || ' encyclopedia reference citation'
-        ELSE text END""")
-      s"""WITH nb AS ($noised),
-         scored AS (SELECT n.nb_micro AS s,
-             d.source IN ('src0', 'src1') AS y
-           FROM nb n JOIN documents d USING (doc_id)),
-         bs AS (SELECT s,
-             CAST(sum(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS cp,
-             CAST(sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS BIGINT) AS cn
-           FROM scored WHERE s IS NOT NULL GROUP BY 1),
-         cw AS (SELECT s, cp, cn,
-             coalesce(sum(cn) OVER (ORDER BY s
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS cnlt
-           FROM bs)
-         SELECT CAST(sum(cp) AS BIGINT) AS n_pos,
-           CAST(sum(cn) AS BIGINT) AS n_neg,
-           CAST(CASE WHEN sum(cp) > 0 AND sum(cn) > 0
-             THEN sum(cp * (2 * cnlt + cn)) * 1000000
-               // (2 * sum(cp) * sum(cn))
-             ELSE NULL END AS BIGINT) AS auc_micro
-         FROM cw"""
-    },
-
-    // same injected Poisson(1) inverse-CDF thresholds on the 2^20 hash
-    // grid, two-division exact means, index-selected order statistics
-    "q189_bootstrap_ci" -> {
-      val ts = graft.operators.Relational.poissonThresholds
-      val nReps = 64; val alphaMicro = 25000L
-      val rankLo = math.max(1L, (alphaMicro * nReps + 999999L) / 1000000L)
-      val rankHi = nReps + 1L - rankLo
-      val h = sqlHexLong(
-        "concat('boot:', CAST(b AS VARCHAR), ':', CAST(o_orderkey AS VARCHAR))")
-      s"""WITH o AS (SELECT o_orderpriority AS g, o_orderkey,
-             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS v
-           FROM orders WHERE o_orderpriority IS NOT NULL
-             AND o_orderkey IS NOT NULL AND o_totalprice IS NOT NULL),
-         r AS (SELECT g, o_orderkey, v, unnest(range(0, $nReps)) AS b
-           FROM o),
-         u AS (SELECT g, b, v, $h % 1048576 AS u FROM r),
-         wt AS (SELECT g, b, v,
-             CASE WHEN u < ${ts(0)} THEN 0 WHEN u < ${ts(1)} THEN 1
-               WHEN u < ${ts(2)} THEN 2 WHEN u < ${ts(3)} THEN 3
-               WHEN u < ${ts(4)} THEN 4 WHEN u < ${ts(5)} THEN 5
-               ELSE 6 END AS w
-           FROM u),
-         m AS (SELECT g, b, CAST(sum(w * v) AS BIGINT) AS s,
-             CAST(sum(w) AS BIGINT) AS n FROM wt GROUP BY 1, 2),
-         mm AS (SELECT g,
-             (s // n) * 1000000 + (s % n) * 1000000 // n AS m
-           FROM m WHERE n > 0),
-         ci AS (SELECT g, CAST(count(*) AS BIGINT) AS n_replicates,
-             list(m ORDER BY m) AS ms FROM mm GROUP BY 1),
-         base AS (SELECT g, CAST(count(*) AS BIGINT) AS n_rows,
-             CAST(sum(v) AS BIGINT) AS s FROM o GROUP BY 1)
-         SELECT ci.g AS o_orderpriority, base.n_rows,
-           CAST((base.s // base.n_rows) * 1000000
-             + (base.s % base.n_rows) * 1000000 // base.n_rows AS BIGINT)
-             AS mean_micro,
-           ci.n_replicates,
-           CAST(ms[CAST(least($rankLo, n_replicates) AS INTEGER)]
-             AS BIGINT) AS ci_lo_micro,
-           CAST(ms[CAST(least($rankHi, n_replicates) AS INTEGER)]
-             AS BIGINT) AS ci_hi_micro
-         FROM ci JOIN base ON ci.g = base.g"""
-    },
-
-    // money crosses as exact long cents summed then shifted (q113's
-    // DECIMAL(18,2) shortcut is equivalent on two-decimal inputs)
-    "q188_cube" ->
-      """SELECT l_returnflag, l_linestatus,
-           CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS level,
-           CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-             AS revenue
-         FROM lineitem
-         GROUP BY CUBE (l_returnflag, l_linestatus)""",
-
-    // same injected Benford micro masses, densified digits, ordered
-    // chi-square fold under round(...,6)
-    "q187_benford" -> {
-      val eList = graft.operators.Relational.benfordMicros.zipWithIndex
-        .map { case (v, i) => s"(${i + 1}, $v)" }.mkString(", ")
-      s"""WITH vals AS (
-           SELECT 'extendedprice' AS g,
-             CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS v
-           FROM lineitem
-           UNION ALL SELECT 'quantity', CAST(l_quantity AS BIGINT)
-           FROM lineitem
-           UNION ALL SELECT 'totalprice',
-             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)
-           FROM orders),
-         e(digit, e_micro) AS (VALUES $eList),
-         c AS (SELECT g,
-             CAST(substr(CAST(v AS VARCHAR), 1, 1) AS BIGINT) AS digit,
-             CAST(count(*) AS BIGINT) AS c
-           FROM vals WHERE v IS NOT NULL AND v > 0 GROUP BY 1, 2),
-         n AS (SELECT g, CAST(sum(c) AS BIGINT) AS n FROM c GROUP BY 1),
-         dn AS (SELECT n.g, CAST(e.digit AS BIGINT) AS digit,
-             CAST(e.e_micro AS BIGINT) AS e_micro, n.n,
-             coalesce(c.c, 0) AS c
-           FROM n CROSS JOIN e
-           LEFT JOIN c ON c.g = n.g AND c.digit = e.digit),
-         x AS (SELECT g, round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             list((c - n * e_micro / CAST(1000000 AS DOUBLE))
-               * (c - n * e_micro / CAST(1000000 AS DOUBLE))
-               / (n * e_micro / CAST(1000000 AS DOUBLE)) ORDER BY digit)),
-             (a, t) -> a + t), 6) AS chi2
-           FROM dn GROUP BY 1)
-         SELECT dn.g AS metric, dn.digit, dn.c AS n_obs, dn.n,
-           CAST(dn.c * 1000000 // dn.n AS BIGINT) AS p_micro, dn.e_micro,
-           CAST(abs(dn.c * 1000000 // dn.n - dn.e_micro) AS BIGINT)
-             AS dev_micro,
-           x.chi2
-         FROM dn JOIN x ON dn.g = x.g"""
-    },
-
-    // q94's island build on both sides, then the textbook theta form
-    // (the canonical-cell equi plan is a pure optimization)
-    "q186_interval_join" ->
-      """WITH iv AS (SELECT l.l_suppkey,
-             CAST(o.o_orderdate AS DATE) AS s,
-             CAST(l.l_shipdate AS DATE) AS e
-           FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-           WHERE l.l_quantity >= 50 AND l.l_shipdate >= o.o_orderdate),
-         m AS (SELECT l_suppkey, s, e,
-             max(e) OVER (PARTITION BY l_suppkey ORDER BY s, e
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
-           FROM iv),
-         f AS (SELECT l_suppkey, s, e,
-             CASE WHEN pmax IS NULL OR s > pmax THEN 1 ELSE 0 END AS nw
-           FROM m),
-         i AS (SELECT l_suppkey, s, e,
-             sum(nw) OVER (PARTITION BY l_suppkey ORDER BY s, e
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-           FROM f),
-         sup AS (SELECT l_suppkey, min(s) AS ws, max(e) AS we
-           FROM i GROUP BY l_suppkey, island),
-         civ AS (SELECT o_custkey, CAST(o_orderdate AS DATE) AS s,
-             CAST(o_orderdate AS DATE) + 6 AS e
-           FROM orders WHERE o_custkey % 37 = 0 AND o_custkey <= 15000),
-         cm AS (SELECT o_custkey, s, e,
-             max(e) OVER (PARTITION BY o_custkey ORDER BY s, e
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
-           FROM civ),
-         cf AS (SELECT o_custkey, s, e,
-             CASE WHEN pmax IS NULL OR s > pmax THEN 1 ELSE 0 END AS nw
-           FROM cm),
-         ci AS (SELECT o_custkey, s, e,
-             sum(nw) OVER (PARTITION BY o_custkey ORDER BY s, e
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-           FROM cf),
-         cust AS (SELECT o_custkey, min(s) AS ws, max(e) AS we
-           FROM ci GROUP BY o_custkey, island)
-         SELECT s.l_suppkey, c.o_custkey,
-           strftime(greatest(s.ws, c.ws), '%Y-%m-%d') AS overlap_start,
-           strftime(least(s.we, c.we), '%Y-%m-%d') AS overlap_end,
-           CAST(least(s.we, c.we) - greatest(s.ws, c.ws) + 1 AS BIGINT)
-             AS overlap_days
-         FROM sup s JOIN cust c ON s.ws <= c.we AND c.ws <= s.we""",
-
-    // same 1-based inclusive window slices, distinct-set Jaccard in
-    // exact integers, ±peakSpan LOCAL peak windows for the depth score
-    // (ROWS BETWEEN 3 PRECEDING/FOLLOWING — the full-span form overfires;
-    // see TextAnalysis.textTiling scaladoc)
-    "q185_texttiling" -> {
-      val topicB = Seq.fill(6)(
-        "galaxy nebula quasar pulsar comet meteor orbit cosmos")
-        .mkString(" ")
-      s"""WITH sp AS (SELECT doc_id,
-             CASE WHEN doc_id % 7 = 0 THEN text || ' $topicB'
-               ELSE text END AS tx
-           FROM documents WHERE text IS NOT NULL),
-         t AS (SELECT doc_id,
-             [x for x in string_split(tx, ' ') if len(x) > 0] AS toks
-           FROM sp),
-         p AS (SELECT doc_id, toks,
-             CAST((len(toks) + 7) // 8 - 1 AS INTEGER) AS ng FROM t),
-         gp AS (SELECT doc_id, toks, ng,
-             CAST(unnest(range(1, ng + 1)) AS INTEGER) AS g
-           FROM p WHERE ng >= 1),
-         wnd AS (SELECT doc_id, ng, g,
-             list_distinct(toks[greatest(1, (g - 2) * 8 + 1):g * 8]) AS dl,
-             list_distinct(toks[g * 8 + 1:least(g + 2, ng + 1) * 8]) AS dr
-           FROM gp),
-         sm AS (SELECT doc_id, ng, g,
-             CAST(len(list_filter(dl, x -> list_contains(dr, x)))
-               AS BIGINT) AS i,
-             CAST(len(dl) AS BIGINT) AS a, CAST(len(dr) AS BIGINT) AS b
-           FROM wnd),
-         sv AS (SELECT doc_id, ng, g,
-             i * 1000000 // (a + b - i) AS sim FROM sm),
-         dp AS (SELECT doc_id, CAST(g AS BIGINT) AS gap,
-             CAST(g * 8 AS BIGINT) AS pos_tokens, sim AS sim_micro,
-             max(sim) OVER (PARTITION BY doc_id ORDER BY g
-               ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)
-             + max(sim) OVER (PARTITION BY doc_id ORDER BY g
-               ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING)
-             - 2 * sim AS depth_micro
-           FROM sv)
-         SELECT doc_id, gap, pos_tokens,
-           CAST(sim_micro AS BIGINT) AS sim_micro,
-           CAST(depth_micro AS BIGINT) AS depth_micro,
-           depth_micro >= 400000 AS is_boundary
-         FROM dp"""
-    },
-
-    // same explicit BMP ranges (RE2 accepts \x{...} classes), same
-    // spikes, positive-mass micro ratio
-    "q184_script_mix" ->
-      """WITH sp AS (SELECT doc_id,
-             CASE WHEN doc_id % 13 = 0 THEN tx0 || ' 购买 现在'
-               ELSE tx0 END AS tx
-           FROM (SELECT doc_id,
-               CASE WHEN doc_id % 11 = 0 THEN regexp_replace(text, 'a', 'а', 'g')
-                 ELSE text END AS tx0
-             FROM documents WHERE text IS NOT NULL)),
-         c AS (SELECT doc_id, CAST(length(tx) AS BIGINT) AS n_chars,
-             CAST(len(regexp_extract_all(tx, '[A-Za-z]')) AS BIGINT)
-               AS n_latin,
-             CAST(len(regexp_extract_all(tx, '[\x{0400}-\x{04FF}]'))
-               AS BIGINT) AS n_cyrillic,
-             CAST(len(regexp_extract_all(tx, '[\x{4E00}-\x{9FFF}]'))
-               AS BIGINT) AS n_cjk,
-             CAST(len(regexp_extract_all(tx, '[0-9]')) AS BIGINT)
-               AS n_digit
-           FROM sp WHERE length(tx) > 0)
-         SELECT doc_id, n_chars, n_latin, n_cyrillic, n_cjk, n_digit,
-           CAST((n_cyrillic + n_cjk) * 1000000 // n_chars AS BIGINT)
-             AS foreign_micro,
-           n_latin > 0 AND n_cyrillic + n_cjk >= 3 AS mixed
-         FROM c""",
-
-    // q93's register build + estimator, dense 64-slot arrays, pair
-    // max-merge; intersection/jaccard recomputed from ROUNDED estimates
-    "q183_hll_overlap" -> {
-      val h = sqlHexLong("concat('hll:', CAST(l_orderkey AS VARCHAR))")
-      val alpha = Sketches.HllAlphaM2.toString
-      def zOf(arr: String) =
-        s"CAST(list_sum([CAST(1 AS BIGINT) << CAST(51 - x AS INTEGER) for x in $arr]) AS BIGINT)"
-      def hOf(arr: String) = s"len([x for x in $arr if x > 0])"
-      def estOf(z: String, ht: String) =
-        s"""round(CASE WHEN CAST('$alpha' AS DOUBLE) /
-             (CAST($z AS DOUBLE) / CAST(2251799813685248 AS DOUBLE))
-             <= CAST(160 AS DOUBLE) AND $ht < 64
-           THEN CAST(64 AS DOUBLE) * ln(CAST(64 AS DOUBLE) / (64 - $ht))
-           ELSE CAST('$alpha' AS DOUBLE) /
-             (CAST($z AS DOUBLE) / CAST(2251799813685248 AS DOUBLE))
-           END, 6)"""
-      s"""WITH h AS (SELECT l_suppkey % 8 AS s, $h AS hv FROM lineitem
-           WHERE l_orderkey IS NOT NULL AND l_suppkey IS NOT NULL),
-         r AS (SELECT s, hv % 64 AS reg,
-             max(CASE WHEN hv // 64 = 0 THEN 51
-                 ELSE 51 - length(bin(hv // 64)) END) AS mr
-           FROM h GROUP BY 1, 2),
-         d AS (SELECT sl.s, list(coalesce(r.mr, 0) ORDER BY i.i) AS arr
-           FROM (SELECT DISTINCT s FROM r) sl
-           CROSS JOIN (SELECT unnest(range(0, 64)) AS i) i
-           LEFT JOIN r ON r.s = sl.s AND r.reg = i.i
-           GROUP BY sl.s),
-         p AS (SELECT a.s AS source_a, b.s AS source_b,
-             a.arr AS aa, b.arr AS ab,
-             [greatest(a.arr[k+1], b.arr[k+1]) for k in range(0, 64)] AS mg
-           FROM d a JOIN d b ON a.s < b.s),
-         z AS (SELECT source_a, source_b,
-             ${zOf("aa")} AS za, ${hOf("aa")} AS ha,
-             ${zOf("ab")} AS zb, ${hOf("ab")} AS hb,
-             ${zOf("mg")} AS zu, ${hOf("mg")} AS hu
-           FROM p),
-         e AS (SELECT source_a, source_b,
-             ${estOf("za", "ha")} AS est_a,
-             ${estOf("zb", "hb")} AS est_b,
-             ${estOf("zu", "hu")} AS est_union
-           FROM z),
-         i AS (SELECT *,
-             round(greatest(CAST(0 AS DOUBLE),
-               est_a + est_b - est_union), 6) AS est_intersection
-           FROM e)
-         SELECT source_a, source_b, est_a, est_b, est_union,
-           est_intersection,
-           round(est_intersection / est_union, 6) AS jaccard_est
-         FROM i"""
-    },
-
-    // same equal-width reference bins with edge clamps, Laplace micro
-    // masses, ascending-bin ln fold under round(...,6)
-    "q182_psi_drift" ->
-      """WITH base AS (SELECT event_type AS g,
-             ts < TIMESTAMP '2024-01-16' AS isref,
-             CASE WHEN NOT (ts < TIMESTAMP '2024-01-16')
-                 AND event_type = 'error'
-               THEN CAST(floor(value * 100 + 0.5) AS BIGINT) + 5000
-               WHEN NOT (ts < TIMESTAMP '2024-01-16')
-                 AND event_type = 'purchase'
-               THEN CAST(floor(value * 100 + 0.5) AS BIGINT) * 2
-               ELSE CAST(floor(value * 100 + 0.5) AS BIGINT) END AS v
-           FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-             AND value IS NOT NULL),
-         stats AS (SELECT g,
-             min(v) FILTER (WHERE isref) AS mn,
-             max(v) FILTER (WHERE isref) AS mx,
-             CAST(count(*) FILTER (WHERE isref) AS BIGINT) AS n_ref,
-             CAST(count(*) FILTER (WHERE NOT isref) AS BIGINT) AS n_cur
-           FROM base GROUP BY 1
-           HAVING min(v) FILTER (WHERE isref) IS NOT NULL),
-         binned AS (SELECT b.g,
-             CASE WHEN v <= mn THEN 0 WHEN v >= mx THEN 9
-               ELSE (v - mn) * 10 // (mx - mn + 1) END AS bin,
-             CAST(count(*) FILTER (WHERE isref) AS BIGINT) AS cr,
-             CAST(count(*) FILTER (WHERE NOT isref) AS BIGINT) AS cc
-           FROM base b JOIN stats s USING (g) GROUP BY 1, 2),
-         dense AS (SELECT s.g, s.n_ref, s.n_cur, bn.bin,
-             (coalesce(cr, 0) + 1) * 1000000 // (s.n_ref + 10) AS p,
-             (coalesce(cc, 0) + 1) * 1000000 // (s.n_cur + 10) AS q
-           FROM stats s
-           CROSS JOIN (SELECT unnest(range(0, 10)) AS bin) bn
-           LEFT JOIN binned ON binned.g = s.g AND binned.bin = bn.bin)
-         SELECT g AS event_type, n_ref, n_cur,
-           round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             list((p - q) / CAST(1000000 AS DOUBLE)
-               * (ln(CAST(p AS DOUBLE)) - ln(CAST(q AS DOUBLE)))
-               ORDER BY bin)),
-             (acc, x) -> acc + x), 6) AS psi
-         FROM dense GROUP BY 1, 2, 3""",
-
-    // the textbook NOT EXISTS dominance form (the bucket prefilter is
-    // a pure optimization — removal provably preserves the frontier)
-    "q181_pareto" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w
-           FROM documents WHERE text IS NOT NULL),
-         p AS (SELECT doc_id, CAST(len(w) AS BIGINT) AS x,
-             CAST(CAST(len(list_distinct(w)) AS BIGINT) * 1000000
-               // len(w) AS BIGINT) AS y
-           FROM t WHERE len(w) > 0)
-         SELECT d.doc_id, d.x AS n_toks, d.y AS ttr_micro FROM p d
-         WHERE NOT EXISTS (SELECT 1 FROM p o
-           WHERE o.x >= d.x AND o.y >= d.y
-             AND (o.x > d.x OR o.y > d.y))""",
-
-    // exact-integer truncated EWMA: lag chain with power-of-two weights,
-    // one final double division — the recursive-smoother determinism
-    // trap (alpha*x + (1-alpha)*prev drifts) never arises
-    "q115_ewma" -> {
-      val h = 16
-      val terms = (0 until h).map { j =>
-        val w = 1L << (h - 1 - j)
-        val x = if (j == 0) "c" else s"lag(c, $j) OVER w"
-        (s"coalesce($x * $w, 0)",
-          s"CASE WHEN $x IS NOT NULL THEN $w ELSE 0 END")
-      }
-      s"""WITH e AS (SELECT user_id, event_id, ts,
-           CAST(floor(value * 100 + 0.5) AS BIGINT) AS c FROM events
-           WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL),
-         t AS (SELECT user_id, event_id,
-           ${terms.map(_._1).mkString(" + ")} AS n,
-           ${terms.map(_._2).mkString(" + ")} AS d
-           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-         SELECT user_id, event_id,
-           CAST(floor(CAST(n AS DOUBLE) / d / 100.0 * 1000000.0 + 0.5)
-             AS DOUBLE) / 1000000.0 AS ewma
-         FROM t"""
-    },
-
-    // four synchronous LPA rounds unrolled (the q84 pattern: an
-    // iterative fixed point as a CTE chain); argmax-count with min-label
-    // ties = filter to the per-node max count, take min(lbl)
-    "q114_label_prop" -> {
-      def round(i: Int): String = {
-        val prev = s"l${i - 1}"
-        s"""v$i AS (SELECT e.u AS u, l.lbl AS lbl, count(*) AS c
-           FROM e JOIN $prev l ON e.v = l.node GROUP BY 1, 2),
-         m$i AS (SELECT u, min(lbl) AS lbl FROM
-           (SELECT u, lbl, c, max(c) OVER (PARTITION BY u) AS mc FROM v$i)
-           WHERE c = mc GROUP BY u),
-         l$i AS (SELECT n.node, coalesce(m.lbl, n.node) AS lbl
-           FROM nodes n LEFT JOIN m$i m ON n.node = m.u)"""
-      }
-      s"""WITH cand AS ($simhashCandidatesOracle),
-         e AS (SELECT doc_a AS u, doc_b AS v FROM cand
-               UNION SELECT doc_b, doc_a FROM cand),
-         nodes AS (SELECT DISTINCT u AS node FROM e),
-         l0 AS (SELECT node, node AS lbl FROM nodes),
-         ${(1 to 4).map(round).mkString(",\n         ")}
-         SELECT node AS doc_id, CAST(lbl AS BIGINT) AS community FROM l4"""
-    },
-
-    "q116_bpe_pairs" ->
-      """WITH v AS (SELECT word, CAST(count(*) AS BIGINT) AS wc FROM
-           (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-           WHERE length(word) >= 2 GROUP BY 1),
-         p AS (SELECT unnest([substr(word, i, 2) for i in range(1, length(word))]) AS pair, wc FROM v)
-         SELECT pair, CAST(sum(wc) AS BIGINT) AS n_occurrences FROM p
-         GROUP BY 1 ORDER BY n_occurrences DESC, pair LIMIT 50""",
-
-    "q117_scd2" ->
-      """WITH s AS (SELECT o_custkey AS k, o_orderdate AS t,
-           o_orderkey AS id, o_orderstatus AS a FROM orders),
-         f AS (SELECT k, t, id, a, CASE WHEN row_number() OVER w = 1
-             OR lag(a) OVER w IS DISTINCT FROM a THEN 1 ELSE 0 END AS chg
-           FROM s WINDOW w AS (PARTITION BY k ORDER BY t, id)),
-         v AS (SELECT k, t, id, a, sum(chg) OVER
-           (PARTITION BY k ORDER BY t, id ROWS UNBOUNDED PRECEDING) AS ver
-           FROM f),
-         r AS (SELECT k, ver, min(t) AS vf,
-           CAST(count(*) AS BIGINT) AS n_orders, min(a) AS a
-           FROM v GROUP BY 1, 2)
-         SELECT k AS o_custkey, CAST(ver AS BIGINT) AS version,
-           a AS o_orderstatus, strftime(vf, '%Y-%m-%d') AS valid_from,
-           strftime(lead(vf) OVER (PARTITION BY k ORDER BY ver),
-             '%Y-%m-%d') AS valid_to, n_orders
-         FROM r""",
-
-    "q118_novelty" ->
-      s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         sh AS (SELECT doc_id, CASE WHEN len(w) >= $MinhashK
-           THEN list_distinct([array_to_string(w[i+1:i+$MinhashK], ' ') for i in range(0, len(w) - ${MinhashK - 1})])
-           ELSE [array_to_string(w, ' ')] END AS shingles FROM toks),
-         ex AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-         ref AS (SELECT DISTINCT s FROM ex WHERE doc_id % 50 = 0)
-         SELECT e.doc_id AS doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
-           CAST(sum(CASE WHEN r.s IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
-           CAST(floor(CAST(sum(CASE WHEN r.s IS NULL THEN 1 ELSE 0 END) AS DOUBLE)
-             / count(*) * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0 AS novelty
-         FROM ex e LEFT JOIN ref r ON e.s = r.s
-         WHERE e.doc_id % 50 <> 0 GROUP BY 1""",
-
-    "q119_pq_codes" -> {
-      def dist(s: Int): String =
-        s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-           [(c.e[i+1] - cb.cw[i+1]) * (c.e[i+1] - cb.cw[i+1])
-            for i in range(${16 * s}, ${16 * (s + 1)})]),
-           (acc, x) -> acc + x)"""
-      def arg(s: Int): String =
-        s"""a$s AS (SELECT vec_id, code_id FROM
-           (SELECT vec_id, code_id,
-             row_number() OVER (PARTITION BY vec_id ORDER BY d$s, code_id) AS rk
-            FROM d) WHERE rk = 1)"""
-      s"""WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-         cb AS (SELECT vec_id // 30 AS code_id, e AS cw FROM c
-                WHERE vec_id % 30 = 0 AND vec_id < 240),
-         d AS (SELECT c.vec_id AS vec_id, cb.code_id AS code_id,
-           ${(0 until 4).map(s => s"${dist(s)} AS d$s").mkString(", ")}
-           FROM c, cb),
-         ${(0 until 4).map(arg).mkString(",\n         ")}
-         SELECT a0.vec_id AS vec_id,
-           CAST(a0.code_id AS BIGINT) AS code_0,
-           CAST(a1.code_id AS BIGINT) AS code_1,
-           CAST(a2.code_id AS BIGINT) AS code_2,
-           CAST(a3.code_id AS BIGINT) AS code_3
-         FROM a0 JOIN a1 USING (vec_id) JOIN a2 USING (vec_id)
-           JOIN a3 USING (vec_id)"""
-    },
-
-    "q120_split_leakage" -> {
-      val hex = sqlHexLong("CAST(doc_id AS VARCHAR)")
-      s"""WITH s AS (SELECT doc_id,
-           md5(array_to_string(string_split(text, ' ')[1:8], ' ')) AS fp,
-           CASE WHEN $hex % 100 < 80 THEN 'train'
-                WHEN $hex % 100 < 90 THEN 'val'
-                ELSE 'test' END AS split
-         FROM documents)
-         SELECT fp, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(count(DISTINCT split) AS BIGINT) AS n_splits,
-           array_to_string(list_sort(list_distinct(list(split))), ',') AS splits
-         FROM s GROUP BY fp HAVING count(DISTINCT split) >= 2"""
-    },
-
-    "q121_quantile_norm" ->
-      """WITH q AS (SELECT doc_id,
-           round(least(CAST(1 AS DOUBLE), CAST(len(string_split(text, ' ')) AS DOUBLE) / 64) * 0.5
-             + least(CAST(1 AS DOUBLE), CAST(list_sum([CASE WHEN x IN ('the','a','of','and','to','in','is') THEN 1 ELSE 0 END for x in string_split(text, ' ')]) AS DOUBLE) / len(string_split(text, ' ')) * 5) * 0.5, 4) AS quality_score
-         FROM documents),
-         f AS (SELECT * FROM q WHERE quality_score IS NOT NULL),
-         dv AS (SELECT quality_score, CAST(count(*) AS BIGINT) AS c
-                FROM f GROUP BY 1),
-         cv AS (SELECT quality_score, sum(c) OVER (ORDER BY quality_score
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - c AS less
-           FROM dv),
-         n AS (SELECT CAST(count(*) AS BIGINT) AS nn FROM f)
-         SELECT doc_id, quality_score,
-           CASE WHEN nn > 1 THEN
-             CAST(floor(CAST(less AS DOUBLE) / (nn - 1) * 1000000.0 + 0.5)
-               AS DOUBLE) / 1000000.0
-           ELSE CAST(0.0 AS DOUBLE) END AS pct_rank
-         FROM f JOIN cv USING (quality_score) CROSS JOIN n""",
-
-    "q122_colloc_graph" ->
-      """WITH toks AS (SELECT string_split(text, ' ') AS w FROM documents),
-         pr AS (SELECT flatten([[{'w1': w[i], 'w2': w[j]}
-                for j in range(i + 1, least(i + 3, len(w)) + 1)]
-                for i in range(1, len(w) + 1)]) AS ps FROM toks),
-         pe AS (SELECT unnest(ps) AS p FROM pr),
-         pc AS (SELECT p.w1 AS w1, p.w2 AS w2, CAST(count(*) AS BIGINT) AS c_ab
-                FROM pe GROUP BY 1, 2),
-         la AS (SELECT w1, CAST(sum(c_ab) AS BIGINT) AS c_a FROM pc GROUP BY 1),
-         rb AS (SELECT w2, CAST(sum(c_ab) AS BIGINT) AS c_b FROM pc GROUP BY 1),
-         n AS (SELECT CAST(sum(c_ab) AS BIGINT) AS nn FROM pc),
-         pm AS (SELECT pc.w1 AS w1, pc.w2 AS w2, pc.c_ab AS c_ab,
-           round(ln(CAST(nn AS DOUBLE) * c_ab / (la.c_a * rb.c_b)), 6) AS pmi
-           FROM pc JOIN la ON pc.w1 = la.w1 JOIN rb ON pc.w2 = rb.w2
-             CROSS JOIN n
-           WHERE pc.c_ab >= 2)
-         SELECT w1, w2, c_ab, pmi, CAST(rn AS BIGINT) AS partner_rank FROM
-           (SELECT *, row_number() OVER (PARTITION BY w1
-              ORDER BY pmi DESC, w2) AS rn FROM pm)
-         WHERE rn <= 3""",
-
-    // winnowing: positional 4-gram hashes, window-4 minima, distinct
-    // per doc; <4 tokens -> none, <4 grams -> the single global min
-    "q127_winnow_fingerprints" -> {
-      val h = sqlHexLong("array_to_string(w[i+1:i+4], ' ')")
-      s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         hs AS (SELECT doc_id, CASE WHEN len(w) >= 4
-             THEN [$h for i in range(0, len(w) - 3)]
-             ELSE [] END AS h FROM toks),
-         fp AS (SELECT doc_id, CASE
-             WHEN len(h) >= 4 THEN list_distinct([list_min(h[j+1:j+4]) for j in range(0, len(h) - 3)])
-             WHEN len(h) >= 1 THEN [list_min(h)]
-             ELSE [] END AS fps FROM hs)
-         SELECT doc_id, CAST(unnest(fps) AS BIGINT) AS fingerprint FROM fp"""
-    },
-
-    "q128_dsir_weights" -> {
-      val h = sqlHexLong("bg")
-      s"""WITH rawd AS (SELECT doc_id, text FROM documents WHERE doc_id % 7 <> 0),
-         tgtd AS (SELECT text FROM documents WHERE doc_id % 7 = 0),
-         rb AS (SELECT doc_id, unnest([w[i] || ' ' || w[i+1] for i in range(1, len(w))]) AS bg
-                FROM (SELECT doc_id, string_split(text, ' ') AS w FROM rawd)),
-         rperdoc AS (SELECT doc_id, $h % 256 AS bucket, CAST(count(*) AS BIGINT) AS n
-                     FROM rb GROUP BY 1, 2),
-         rbk AS (SELECT bucket, CAST(sum(n) AS BIGINT) AS r FROM rperdoc GROUP BY 1),
-         tb AS (SELECT unnest([w[i] || ' ' || w[i+1] for i in range(1, len(w))]) AS bg
-                FROM (SELECT string_split(text, ' ') AS w FROM tgtd)),
-         tbk AS (SELECT $h % 256 AS bucket, CAST(count(*) AS BIGINT) AS t FROM tb GROUP BY 1),
-         tot AS (SELECT (SELECT sum(r) FROM rbk) AS rTot, (SELECT sum(t) FROM tbk) AS tTot),
-         wt AS (SELECT rbk.bucket,
-             CAST(floor(ln(
-               (CAST(coalesce(t, 0) + 1 AS DOUBLE) / CAST(tTot + 256 AS DOUBLE)) *
-               (CAST(rTot + 256 AS DOUBLE) / CAST(r + 1 AS DOUBLE))) * 1000000 + 0.5) AS BIGINT) AS qlr
-           FROM rbk LEFT JOIN tbk USING (bucket) CROSS JOIN tot)
-         SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_feats,
-           CAST(sum(n * qlr) AS BIGINT) AS dsir_micro
-         FROM rperdoc JOIN wt USING (bucket) GROUP BY 1"""
-    },
-
-    "q129_source_overlap" -> sourceOverlapOracle,
-
-    "q130_passage_clusters" -> {
-      val spiked = """CASE WHEN doc_id % 17 = 0
-        THEN text || ' shared boilerplate footer alpha beta gamma delta epsilon'
-        WHEN doc_id % 19 = 0
-        THEN text || ' common navigation header one two three four five six'
-        ELSE text END"""
-      val h = sqlHexLong("array_to_string(w[i+1:i+4], ' ')")
-      s"""WITH RECURSIVE toks AS (SELECT doc_id, string_split($spiked, ' ') AS w FROM documents),
-         hs AS (SELECT doc_id, CASE WHEN len(w) >= 4
-             THEN [$h for i in range(0, len(w) - 3)]
-             ELSE [] END AS h FROM toks),
-         fp AS (SELECT doc_id, CASE
-             WHEN len(h) >= 4 THEN list_distinct([list_min(h[j+1:j+4]) for j in range(0, len(h) - 3)])
-             WHEN len(h) >= 1 THEN [list_min(h)]
-             ELSE [] END AS fps FROM hs),
-         ex AS (SELECT doc_id, unnest(fps) AS f FROM fp),
-         ok AS (SELECT f FROM ex GROUP BY f HAVING count(*) BETWEEN 2 AND 10000),
-         cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                  FROM ex a JOIN ex b ON a.f = b.f AND a.doc_id < b.doc_id
-                  JOIN ok ON a.f = ok.f),
-         edges AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM cand
-                   UNION SELECT doc_b, doc_a FROM cand),
-         nodes0 AS MATERIALIZED (SELECT DISTINCT src AS node FROM edges),
-         l0 AS MATERIALIZED (SELECT node, node AS comp FROM nodes0),
-         ${(1 to 10).map { k =>
-        // min-label propagation with POINTER JUMPING, unrolled: the old
-        // transitive-closure CTE materializes |component|^2 reachable
-        // pairs, which the 10x corpus's ~29k-doc boilerplate families
-        // turn into ~1e9 rows (>40 min, killed — round 13). Each round
-        // here is one linear join+min; comp(comp) doubling covers
-        // diameter 2^10, and the conv guard makes under-iteration LOUD
-        // (zero output rows) instead of silently wrong.
-        s"""l$k AS MATERIALIZED (SELECT n.node,
-             least(n.comp, coalesce(nb.m, n.comp), coalesce(pj.comp, n.comp)) AS comp
-           FROM l${k - 1} n
-           LEFT JOIN (SELECT e.dst AS node, min(l.comp) AS m
-             FROM edges e JOIN l${k - 1} l ON e.src = l.node
-             GROUP BY 1) nb ON n.node = nb.node
-           LEFT JOIN l${k - 1} pj ON n.comp = pj.node)"""
-      }.mkString(",\n         ")},
-         conv AS (SELECT count(*) AS c FROM edges e
-           JOIN l10 a ON e.src = a.node JOIN l10 b ON e.dst = b.node
-           WHERE a.comp <> b.comp)
-         SELECT node AS doc, CAST(comp AS BIGINT) AS component
-         FROM l10 WHERE (SELECT c FROM conv) = 0"""
-    },
-
-    "q135_boilerplate_density" -> {
-      val spiked = """CASE WHEN doc_id % 17 = 0
-        THEN text || ' shared boilerplate footer alpha beta gamma delta epsilon'
-        WHEN doc_id % 19 = 0
-        THEN text || ' common navigation header one two three four five six'
-        ELSE text END"""
-      val h = sqlHexLong("array_to_string(w[i+1:i+4], ' ')")
-      s"""WITH toks AS (SELECT doc_id, string_split($spiked, ' ') AS w FROM documents),
-         hs AS (SELECT doc_id, CASE WHEN len(w) >= 4
-             THEN [$h for i in range(0, len(w) - 3)]
-             ELSE [] END AS h FROM toks),
-         fp AS (SELECT doc_id, CASE
-             WHEN len(h) >= 4 THEN list_distinct([list_min(h[j+1:j+4]) for j in range(0, len(h) - 3)])
-             WHEN len(h) >= 1 THEN [list_min(h)]
-             ELSE [] END AS fps FROM hs),
-         ex AS (SELECT doc_id, CAST(unnest(fps) AS BIGINT) AS f FROM fp),
-         freq AS (SELECT f, count(DISTINCT doc_id) AS df FROM ex GROUP BY 1)
-         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_fp,
-           CAST(sum(CASE WHEN df >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_common,
-           CAST(sum(CASE WHEN df >= 2 THEN 1 ELSE 0 END) * 1000000 // count(*) AS BIGINT) AS boiler_micro
-         FROM ex JOIN freq USING (f) GROUP BY 1"""
-    },
-
-    "q136_bpe_train" -> {
-      // unrolled per-round CTEs (the q114 pattern): pair counts over
-      // the symbolized vocabulary, deterministic argmax (count desc,
-      // then pair), greedy left-to-right rewrite via a list_reduce
-      // whose fold order matches the Spark aggregate() exactly
-      // (non-overlapping: [a,a,a] + (a,a) -> [aa,a])
-      def round(i: Int): String = {
-        val prev = s"v${i - 1}"
-        s"""p$i AS (SELECT s.a AS a, s.b AS b, CAST(sum(wc) AS BIGINT) AS n FROM
-             (SELECT wc, unnest(list_transform(range(1, len(syms)),
-                j -> struct_pack(a := syms[j], b := syms[j + 1]))) AS s
-              FROM $prev WHERE len(syms) >= 2) GROUP BY 1, 2),
-           b$i AS (SELECT a, b, n FROM p$i ORDER BY n DESC, a, b LIMIT 1),
-           v$i AS (SELECT list_reduce(list_transform(syms, x -> [x]),
-                (acc, x) -> CASE WHEN acc[-1] = b$i.a AND x[1] = b$i.b
-                  THEN acc[1:len(acc) - 1] || [b$i.a || b$i.b]
-                  ELSE acc || x END) AS syms, wc
-              FROM $prev, b$i)"""
-      }
-      s"""WITH v0 AS (SELECT list_transform(range(1, length(word) + 1),
-             i -> substr(word, i, 1)) AS syms,
-             CAST(count(*) AS BIGINT) AS wc
-           FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-           WHERE length(word) >= 1 GROUP BY word),
-         ${(1 to 8).map(round).mkString(",\n         ")}
-         ${(1 to 8).map(i =>
-           s"SELECT CAST($i AS BIGINT) AS round, a AS sym_a, b AS sym_b, " +
-             s"n AS n_occurrences FROM b$i")
-           .mkString("\n         UNION ALL ")}"""
-    },
-
-    "q137_bpe_fertility" -> {
-      // the q136 merge chain with `word` carried through the rewrites,
-      // then each doc's word occurrences join the encoded vocabulary
-      def round(i: Int): String = {
-        val prev = s"v${i - 1}"
-        s"""p$i AS (SELECT s.a AS a, s.b AS b, CAST(sum(wc) AS BIGINT) AS n FROM
-             (SELECT wc, unnest(list_transform(range(1, len(syms)),
-                j -> struct_pack(a := syms[j], b := syms[j + 1]))) AS s
-              FROM $prev WHERE len(syms) >= 2) GROUP BY 1, 2),
-           b$i AS (SELECT a, b, n FROM p$i ORDER BY n DESC, a, b LIMIT 1),
-           v$i AS (SELECT word, list_reduce(list_transform(syms, x -> [x]),
-                (acc, x) -> CASE WHEN acc[-1] = b$i.a AND x[1] = b$i.b
-                  THEN acc[1:len(acc) - 1] || [b$i.a || b$i.b]
-                  ELSE acc || x END) AS syms, wc
-              FROM $prev, b$i)"""
-      }
-      s"""WITH dw AS (SELECT doc_id, word, CAST(count(*) AS BIGINT) AS n
-           FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-                 FROM documents)
-           WHERE length(word) >= 1 GROUP BY 1, 2),
-         v0 AS (SELECT word, list_transform(range(1, length(word) + 1),
-             i -> substr(word, i, 1)) AS syms,
-             CAST(sum(n) AS BIGINT) AS wc
-           FROM dw GROUP BY word),
-         ${(1 to 8).map(round).mkString(",\n         ")},
-         enc AS (SELECT word, CAST(len(syms) AS BIGINT) AS ns FROM v8)
-         SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_words,
-           CAST(sum(n * ns) AS BIGINT) AS n_subwords,
-           CAST(sum(n * ns) * 1000000 // sum(n) AS BIGINT) AS fertility_micro
-         FROM dw JOIN enc USING (word) GROUP BY 1"""
-    },
-
-    "q138_denoised_negatives" -> {
-      val cos = cosineSql("qe", "e.emb")
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-             label FROM embeddings),
-         q AS (SELECT vec_id AS query_id, emb AS qe, label AS ql
-               FROM e WHERE vec_id < 40),
-         sim AS (SELECT query_id, ql, e.vec_id AS neighbor_id,
-                 e.label AS cl,
-                 CAST(floor($cos * 1e6 + 0.5) AS BIGINT) AS cos_micro
-                 FROM q, e WHERE query_id <> e.vec_id),
-         pos AS (SELECT query_id, max(cos_micro) AS pos_micro FROM sim
-                 WHERE ql = cl GROUP BY 1),
-         negs AS (SELECT s.query_id, neighbor_id, cos_micro, pos_micro
-                  FROM sim s JOIN pos USING (query_id)
-                  WHERE ql <> cl AND cos_micro < pos_micro - 20000),
-         r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                 ORDER BY cos_micro DESC, neighbor_id) AS rn FROM negs)
-         SELECT query_id, neighbor_id, cos_micro, pos_micro,
-           CAST(rn AS BIGINT) AS neg_rank FROM r WHERE rn <= 5"""
-    },
-
-    "q139_span_pairs" -> {
-      val h = sqlHexLong("doc_id || '#crop'")
-      s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS w, $h AS h
-           FROM documents WHERE text IS NOT NULL),
-         p AS (SELECT doc_id, w,
-             3 + ((h >> 8) % 4) AS a_len, 3 + ((h >> 24) % 4) AS b_len, h
-           FROM d WHERE len(w) >= 8),
-         s AS (SELECT doc_id, w, a_len, b_len,
-             (h >> 16) % (len(w) - a_len + 1) AS a_start,
-             (h >> 32) % (len(w) - b_len + 1) AS b_start
-           FROM p)
-         SELECT doc_id, CAST(a_start AS BIGINT) AS a_start,
-           CAST(a_len AS BIGINT) AS a_len,
-           array_to_string(w[a_start + 1 : a_start + a_len], ' ') AS span_a,
-           CAST(b_start AS BIGINT) AS b_start,
-           CAST(b_len AS BIGINT) AS b_len,
-           array_to_string(w[b_start + 1 : b_start + b_len], ' ') AS span_b
-         FROM s"""
-    },
-
-    "q140_zipf_fit" -> {
-      // regressors quantize to micro-nat longs; OLS sums are exact
-      // integers; only the final divisions run in double — the same
-      // expression over the same integers on both engines
-      s"""WITH v AS (SELECT word, CAST(count(*) AS BIGINT) AS freq FROM
-           (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-           WHERE length(word) >= 1 GROUP BY 1
-           ORDER BY freq DESC, word LIMIT 1000),
-         r AS (SELECT freq, row_number() OVER
-             (ORDER BY freq DESC, word) AS rank FROM v),
-         m AS (SELECT CAST(floor(ln(CAST(rank AS DOUBLE)) * 1e6 + 0.5) AS BIGINT) AS x,
-             CAST(floor(ln(CAST(freq AS DOUBLE)) * 1e6 + 0.5) AS BIGINT) AS y
-           FROM r),
-         s AS (SELECT CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-             CAST(sum(x * y) AS BIGINT) AS sxy,
-             CAST(sum(x * x) AS BIGINT) AS sxx,
-             CAST(sum(y * y) AS BIGINT) AS syy FROM m)
-         SELECT n AS n_terms,
-           CAST(floor((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) -
-             CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) /
-             NULLIF(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) -
-              CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE), 0) * 1e6 + 0.5)
-             AS BIGINT) AS slope_micro,
-           CAST(floor((CAST(sy AS DOUBLE) -
-             (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) -
-              CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) /
-             NULLIF(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) -
-              CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE), 0) *
-              CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE) + 0.5)
-             AS BIGINT) AS intercept_micro,
-           CAST(floor(((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) -
-             CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) *
-             (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) -
-              CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))) /
-             NULLIF((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) -
-               CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) *
-              (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) -
-               CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)), 0) * 1e6 + 0.5)
-             AS BIGINT) AS r2_micro
-         FROM s"""
-    },
-
-    "q141_phrase_search" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS w
-           FROM documents WHERE text IS NOT NULL),
-         m AS (SELECT doc_id,
-             [i for i in range(0, len(w) - 1)
-              if w[i+1] = 'table' AND w[i+2] = 'hash'] AS hits
-           FROM d WHERE len(w) >= 2)
-         SELECT doc_id, CAST(len(hits) AS BIGINT) AS n_matches,
-           CAST(hits[1] AS BIGINT) AS first_pos
-         FROM m WHERE len(hits) > 0""",
-
-    "q142_containment" ->
-      s"""$minhashCtes,
-         cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM banded a JOIN banded b
-             ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-               AND a.doc_id < b.doc_id
-           JOIN ok ON a.band_idx = ok.band_idx
-             AND a.band_hash = ok.band_hash),
-         sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM ex
-                GROUP BY 1),
-         inter AS (SELECT c.doc_a, c.doc_b,
-             CAST(count(*) AS BIGINT) AS ni
-           FROM cand c JOIN ex x ON x.doc_id = c.doc_a
-             JOIN ex y ON y.doc_id = c.doc_b AND y.s = x.s
-           GROUP BY 1, 2)
-         SELECT c.doc_a, c.doc_b,
-           CAST(coalesce(i.ni, 0) AS BIGINT) AS n_shared,
-           sa.n AS n_a, sb.n AS n_b,
-           CAST(coalesce(i.ni, 0) * 1000000 // sa.n AS BIGINT) AS cont_a_micro,
-           CAST(coalesce(i.ni, 0) * 1000000 // sb.n AS BIGINT) AS cont_b_micro
-         FROM cand c
-         LEFT JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
-         JOIN sz sa ON sa.doc_id = c.doc_a
-         JOIN sz sb ON sb.doc_id = c.doc_b""",
-
-    // same candidate CTE as q142; grams with MULTIPLICITY (no
-    // list_distinct), clipped at the reference count per (n, gram)
-    "q163_ngram_precision" ->
-      s"""$minhashCtes,
-         cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM banded a JOIN banded b
-             ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-               AND a.doc_id < b.doc_id
-           JOIN ok ON a.band_idx = ok.band_idx
-             AND a.band_hash = ok.band_hash),
-         ids AS (SELECT doc_a AS doc FROM cand
-                 UNION SELECT doc_b FROM cand),
-         tk AS (SELECT doc_id, string_split(text, ' ') AS w
-                FROM documents JOIN ids ON doc_id = doc),
-         g1 AS (SELECT doc_id, 1 AS n, unnest(w) AS gram FROM tk),
-         g2 AS (SELECT doc_id, 2 AS n,
-             unnest([array_to_string(w[i+1:i+2], ' ')
-                     for i in range(0, len(w) - 1)]) AS gram
-           FROM tk WHERE len(w) >= 2),
-         cnt AS (SELECT doc_id, n, gram, count(*) AS c
-           FROM (SELECT * FROM g1 UNION ALL SELECT * FROM g2)
-           GROUP BY 1, 2, 3),
-         tot AS (SELECT doc_id, n, CAST(sum(c) AS BIGINT) AS tot
-                 FROM cnt GROUP BY 1, 2),
-         clip AS (SELECT p.doc_a, p.doc_b, a.n,
-             CAST(sum(least(a.c, b.c)) AS BIGINT) AS clip
-           FROM cand p JOIN cnt a ON a.doc_id = p.doc_a
-           JOIN cnt b ON b.doc_id = p.doc_b AND b.n = a.n
-             AND b.gram = a.gram
-           GROUP BY 1, 2, 3)
-         SELECT p.doc_a, p.doc_b, CAST(t.n AS BIGINT) AS n,
-           t.tot AS cand_ngrams,
-           CAST(coalesce(c.clip, 0) AS BIGINT) AS clipped,
-           CAST(coalesce(c.clip, 0) * 1000000 // t.tot AS BIGINT)
-             AS p_micro
-         FROM cand p JOIN tot t ON t.doc_id = p.doc_a
-         LEFT JOIN clip c ON c.doc_a = p.doc_a AND c.doc_b = p.doc_b
-           AND c.n = t.n""",
-
-    // q163's CTEs; reference-side denominator + the exact F1 identity
-    // 2PR/(P+R) = 2*clip/(tot_a + tot_b)
-    "q196_rouge" ->
-      s"""$minhashCtes,
-         cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM banded a JOIN banded b
-             ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-               AND a.doc_id < b.doc_id
-           JOIN ok ON a.band_idx = ok.band_idx
-             AND a.band_hash = ok.band_hash),
-         ids AS (SELECT doc_a AS doc FROM cand
-                 UNION SELECT doc_b FROM cand),
-         tk AS (SELECT doc_id, string_split(text, ' ') AS w
-                FROM documents JOIN ids ON doc_id = doc),
-         g1 AS (SELECT doc_id, 1 AS n, unnest(w) AS gram FROM tk),
-         g2 AS (SELECT doc_id, 2 AS n,
-             unnest([array_to_string(w[i+1:i+2], ' ')
-                     for i in range(0, len(w) - 1)]) AS gram
-           FROM tk WHERE len(w) >= 2),
-         cnt AS (SELECT doc_id, n, gram, count(*) AS c
-           FROM (SELECT * FROM g1 UNION ALL SELECT * FROM g2)
-           GROUP BY 1, 2, 3),
-         tot AS (SELECT doc_id, n, CAST(sum(c) AS BIGINT) AS tot
-                 FROM cnt GROUP BY 1, 2),
-         clip AS (SELECT p.doc_a, p.doc_b, a.n,
-             CAST(sum(least(a.c, b.c)) AS BIGINT) AS clip
-           FROM cand p JOIN cnt a ON a.doc_id = p.doc_a
-           JOIN cnt b ON b.doc_id = p.doc_b AND b.n = a.n
-             AND b.gram = a.gram
-           GROUP BY 1, 2, 3)
-         SELECT p.doc_a, p.doc_b, CAST(tb.n AS BIGINT) AS n,
-           tb.tot AS ref_ngrams,
-           CAST(coalesce(c.clip, 0) AS BIGINT) AS clipped,
-           CAST(coalesce(c.clip, 0) * 1000000 // tb.tot AS BIGINT)
-             AS r_micro,
-           CAST(2 * coalesce(c.clip, 0) * 1000000 // (ta.tot + tb.tot)
-             AS BIGINT) AS f1_micro
-         FROM cand p JOIN tot tb ON tb.doc_id = p.doc_b
-         JOIN tot ta ON ta.doc_id = p.doc_a AND ta.n = tb.n
-         LEFT JOIN clip c ON c.doc_a = p.doc_a AND c.doc_b = p.doc_b
-           AND c.n = tb.n""",
-
-    // char n-grams (spaces stripped) orders 1-3; per-order integer
-    // micro P/R floored BEFORE the order average; F2 = 5PR // (4P+R)
-    "q170_chrf" ->
-      s"""$minhashCtes,
-         cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM banded a JOIN banded b
-             ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-               AND a.doc_id < b.doc_id
-           JOIN ok ON a.band_idx = ok.band_idx
-             AND a.band_hash = ok.band_hash),
-         ids AS (SELECT doc_a AS doc FROM cand
-                 UNION SELECT doc_b FROM cand),
-         ch AS (SELECT doc_id, replace(text, ' ', '') AS s
-                FROM documents JOIN ids ON doc_id = doc
-                WHERE text IS NOT NULL),
-         gr AS (SELECT doc_id, n, unnest([s[i+1:i+n]
-                  for i in range(0, len(s) - n + 1)]) AS gram
-                FROM ch, (SELECT unnest([1, 2, 3]) AS n)
-                WHERE len(s) >= n),
-         cnt AS (SELECT doc_id, n, gram, count(*) AS c
-                 FROM gr GROUP BY 1, 2, 3),
-         tot AS (SELECT doc_id, n, CAST(sum(c) AS BIGINT) AS tot
-                 FROM cnt GROUP BY 1, 2),
-         clip AS (SELECT p.doc_a, p.doc_b, a.n,
-             CAST(sum(least(a.c, b.c)) AS BIGINT) AS m
-           FROM cand p JOIN cnt a ON a.doc_id = p.doc_a
-           JOIN cnt b ON b.doc_id = p.doc_b AND b.n = a.n
-             AND b.gram = a.gram
-           GROUP BY 1, 2, 3),
-         po AS (SELECT p.doc_a, p.doc_b, ta.n,
-             coalesce(c.m, 0) AS m, ta.tot AS t_a, tb.tot AS t_b
-           FROM cand p
-           JOIN tot ta ON ta.doc_id = p.doc_a
-           JOIN tot tb ON tb.doc_id = p.doc_b AND tb.n = ta.n
-           LEFT JOIN clip c ON c.doc_a = p.doc_a AND c.doc_b = p.doc_b
-             AND c.n = ta.n),
-         agg AS (SELECT doc_a, doc_b,
-             CAST(count(*) AS BIGINT) AS n_orders,
-             CAST(sum(m * 1000000 // t_a) // count(*) AS BIGINT)
-               AS chrp_micro,
-             CAST(sum(m * 1000000 // t_b) // count(*) AS BIGINT)
-               AS chrr_micro
-           FROM po GROUP BY 1, 2)
-         SELECT doc_a, doc_b, n_orders, chrp_micro, chrr_micro,
-           CAST(coalesce(5 * chrp_micro * chrr_micro //
-             nullif(4 * chrp_micro + chrr_micro, 0), 0) AS BIGINT)
-             AS chrf2_micro
-         FROM agg""",
-
-    "q143_budget_select" -> {
-      val h = sqlHexLong("CAST(doc_id AS VARCHAR)")
-      val stop = "CASE WHEN x IN ('the','a','of','and','to','in','is') THEN 1 ELSE 0 END"
-      s"""WITH d0 AS (SELECT doc_id, len(string_split(text, ' ')) AS nt,
-           round(least(CAST(1 AS DOUBLE),
-               CAST(len(string_split(text, ' ')) AS DOUBLE) / 64) * 0.5
-             + least(CAST(1 AS DOUBLE),
-               CAST(list_sum([$stop for x in string_split(text, ' ')]) AS DOUBLE)
-                 / len(string_split(text, ' ')) * 5) * 0.5, 4) AS q
-           FROM documents),
-         d AS (SELECT doc_id, CAST(nt AS BIGINT) AS nt,
-           CAST(least(floor(q * 1024), 1023) AS BIGINT) AS qb FROM d0),
-         h AS (SELECT qb, CAST(sum(nt) AS BIGINT) AS bt FROM d GROUP BY 1),
-         c AS (SELECT qb, bt, CAST(coalesce(sum(bt) OVER (ORDER BY qb DESC
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-             AS BIGINT) AS abv FROM h),
-         dec AS (SELECT qb, (abv + bt <= 8000) AS fullb, 8000 - abv AS rem
-                 FROM c WHERE abv < 8000),
-         j AS (SELECT d.doc_id, d.nt, d.qb, fullb, rem
-               FROM d JOIN dec USING (qb)),
-         bnd AS (SELECT doc_id, nt, qb, rem, sum(nt) OVER (PARTITION BY qb
-             ORDER BY $h, doc_id ROWS UNBOUNDED PRECEDING) AS run
-           FROM j WHERE NOT fullb)
-         SELECT doc_id, nt AS n_toks, qb AS q_bucket FROM j WHERE fullb
-         UNION ALL
-         SELECT doc_id, nt, qb FROM bnd WHERE run <= rem"""
-    },
-
-    "q144_cdc_chunks" -> {
-      val wh = sqlHexLong("array_to_string(w[c - 3 : c], ' ')")
-      val cf = sqlHexLong("array_to_string(w[s + 1 : e], ' ')")
-      s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS w
-           FROM documents WHERE text IS NOT NULL),
-         cu AS (SELECT doc_id, w, CASE WHEN len(w) >= 4
-             THEN [c for c in [j + 4 for j in range(0, len(w) - 3)]
-                   if $wh % 8 = 0]
-             ELSE [] END AS cuts FROM d),
-         sp AS (SELECT doc_id, w,
-             [0] || cuts AS ss, cuts || [len(w)] AS es FROM cu),
-         z AS (SELECT doc_id, w, unnest(ss) AS s, unnest(es) AS e FROM sp),
-         f AS (SELECT doc_id, w, s, e,
-             row_number() OVER (PARTITION BY doc_id ORDER BY s) - 1 AS ci
-           FROM z WHERE e > s)
-         SELECT doc_id, CAST(ci AS BIGINT) AS chunk_idx,
-           CAST(s AS BIGINT) AS start, CAST(e - s AS BIGINT) AS len,
-           $cf AS chunk_fp
-         FROM f"""
-    },
-
-    "q145_mixture_waterfill" ->
-      """WITH caps AS (SELECT lang AS source,
-           CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS cap
-           FROM documents GROUP BY 1),
-         x AS (SELECT source, cap, sqrt(CAST(cap AS DOUBLE)) AS w,
-             CAST(cap AS DOUBLE) / sqrt(CAST(cap AS DOUBLE)) AS r
-           FROM caps),
-         s AS (SELECT *,
-             CAST(coalesce(sum(cap) OVER (ORDER BY r, source
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS BIGINT) AS prefc,
-             sum(w) OVER (ORDER BY r, source
-               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS sufw,
-             lag(r) OVER (ORDER BY r, source) AS prevr
-           FROM x),
-         lamr AS (SELECT *,
-             (CAST(24000 AS DOUBLE) - CAST(prefc AS DOUBLE)) / sufw AS lam
-           FROM s),
-         lvl AS (SELECT max(CASE WHEN lam <= r
-               AND coalesce(lam >= prevr, TRUE) THEN lam END) AS lamstar,
-             CAST(sum(cap) AS BIGINT) AS total FROM lamr)
-         SELECT source AS lang, cap AS cap_tokens,
-           CAST(CASE WHEN total <= 24000 THEN cap
-             WHEN r <= lamstar THEN cap
-             ELSE floor(lamstar * w) END AS BIGINT) AS alloc_tokens,
-           (total <= 24000 OR r <= lamstar) AS capped
-         FROM lamr, lvl""",
-
-    "q146_leakage_split" -> {
-      val h = sqlHexLong("CAST(split_key AS VARCHAR)")
-      s"""WITH RECURSIVE cand AS ($minhashOracle),
-         edges AS (SELECT doc_a AS src, doc_b AS dst FROM cand
-                   UNION SELECT doc_b, doc_a FROM cand),
-         reach AS (SELECT src, dst FROM edges
-                   UNION
-                   SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-         comp AS (SELECT src AS doc, CAST(least(src, min(dst)) AS BIGINT)
-                  AS component FROM reach GROUP BY src),
-         keyed AS (SELECT d.doc_id AS doc,
-             coalesce(c.component, d.doc_id) AS split_key
-           FROM documents d LEFT JOIN comp c ON c.doc = d.doc_id)
-         SELECT doc AS doc_id, CAST(split_key AS BIGINT) AS split_key,
-           CASE WHEN $h % 10 < 8 THEN 'train'
-                WHEN $h % 10 = 8 THEN 'val'
-                ELSE 'test' END AS split
-         FROM keyed"""
-    },
-
-    "q147_trunc_recall" -> {
-      def dotp(u: String, v: String, d: Int) =
-        s"list_reduce(list_prepend(CAST(0 AS DOUBLE), [$u[i+1] * $v[i+1] for i in range(0, $d)]), (acc, x) -> acc + x)"
-      def cosD(d: Int) =
-        s"${dotp("qe", "e.emb", d)} / (sqrt(${dotp("qe", "qe", d)}) * sqrt(${dotp("e.emb", "e.emb", d)}))"
-      def topk(scoreCol: String) =
-        s"""SELECT query_id, neighbor_id FROM (
-             SELECT query_id, neighbor_id, row_number() OVER
-               (PARTITION BY query_id ORDER BY $scoreCol DESC, neighbor_id)
-               AS rn FROM sim WHERE $scoreCol IS NOT NULL)
-           WHERE rn <= 10"""
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-             FROM embeddings),
-         q AS (SELECT vec_id AS query_id, emb AS qe FROM e
-               WHERE vec_id < 30),
-         sim AS (SELECT query_id, e.vec_id AS neighbor_id,
-             CAST(floor(${cosD(64)} * 1e6 + 0.5) AS BIGINT) AS cos_full,
-             CAST(floor(${cosD(16)} * 1e6 + 0.5) AS BIGINT) AS cos_trunc
-           FROM q, e WHERE query_id <> e.vec_id),
-         f AS (${topk("cos_full")}),
-         t AS (${topk("cos_trunc")})
-         SELECT f.query_id,
-           CAST(sum(CASE WHEN t.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_overlap,
-           CAST(sum(CASE WHEN t.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-             * 1000000 // 10 AS BIGINT) AS recall_micro
-         FROM f LEFT JOIN t ON f.query_id = t.query_id
-           AND f.neighbor_id = t.neighbor_id
-         GROUP BY 1"""
-    },
-
-    "q131_nb_classifier" -> nbClassifierOracle,
-
-    // the sign matrix rebuilt in SQL from the same md5 formula
-    // (hexLongJvm's DuckDB twin), the same micro quantization, exact
-    // integer sums pivoted to the 16 rp columns
-    "q166_jl_project" -> {
-      val sg = sqlHexLong("'rp:' || j || ':' || i")
-      val pivot = (0 until 16).map(j =>
-        s"CAST(max(CASE WHEN j = $j THEN p END) AS BIGINT) AS rp_$j")
-        .mkString(", ")
-      s"""WITH e AS (SELECT vec_id,
-           [CAST(floor(x * 1000000 + 0.5) AS BIGINT)
-            for x in CAST(embedding AS DOUBLE[])] AS vm
-         FROM embeddings WHERE len(embedding) = 64),
-         u AS (SELECT vec_id, unnest(vm) AS v,
-           generate_subscripts(vm, 1) - 1 AS i FROM e),
-         s AS (SELECT j, i,
-             CASE WHEN $sg % 2 = 0 THEN 1 ELSE -1 END AS sg
-           FROM (SELECT unnest(range(0, 16)) AS j)
-           CROSS JOIN (SELECT unnest(range(0, 64)) AS i)),
-         p AS (SELECT vec_id, j, sum(sg * v) AS p
-           FROM u JOIN s USING (i) GROUP BY 1, 2)
-         SELECT vec_id, $pivot FROM p GROUP BY vec_id"""
-    },
-
-    // same spike, same md5 fingerprint identity, same micro ratios
-    "q165_datasheet" ->
-      """WITH d AS (SELECT source, lang,
-           CASE WHEN doc_id % 41 = 0
-             THEN 'duplicate boilerplate page about spark tables and joins'
-             ELSE text END AS t
-         FROM documents),
-         p AS (SELECT source, lang, md5(t) AS fp,
-           CASE WHEN t IS NULL THEN 0
-                ELSE len(string_split(t, ' ')) END AS nt,
-           CASE WHEN t IS NULL THEN 0 ELSE length(t) END AS nc
-         FROM d),
-         f AS (SELECT fp, count(*) AS c FROM p WHERE fp IS NOT NULL
-               GROUP BY 1)
-         SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(nt) AS BIGINT) AS n_tokens,
-           CAST(sum(nt) * 1000000 // count(*) AS BIGINT)
-             AS mean_toks_micro,
-           CAST(sum(CASE WHEN c >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_dup_docs,
-           CAST(sum(CASE WHEN c >= 2 THEN 1 ELSE 0 END) * 1000000
-             // count(*) AS BIGINT) AS dup_micro,
-           CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-           CAST(sum(CASE WHEN fp IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_null_text,
-           CAST(sum(nc) AS BIGINT) AS n_chars
-         FROM p LEFT JOIN f USING (fp) GROUP BY source""",
-
-    // q131's scores re-labeled, exact decile cuts via quantile_cont
-    // (interpolation bit-identical to the histogram-selection pass),
-    // one conditional aggregate, 9 unrolled output rows
-    "q164_pr_sweep" -> {
-      val ks = (1 to 9).map(_ * 10)
-      val cuts = ks.map(k =>
-        s"quantile_cont(s, 0.${k / 10}) AS t$k").mkString(", ")
-      val condAggs = (ks.flatMap(k => Seq(
-        s"sum(CASE WHEN s >= t$k THEN 1 ELSE 0 END) AS pred$k",
-        s"sum(CASE WHEN s >= t$k AND y THEN 1 ELSE 0 END) AS tp$k",
-        s"max(t$k) AS thr$k")) :+
-        "sum(CASE WHEN y THEN 1 ELSE 0 END) AS pos").mkString(", ")
-      val rows = ks.map(k =>
-        s"""SELECT CAST($k AS BIGINT) AS frac_pct, thr$k AS thr,
-           CAST(pred$k AS BIGINT) AS n_pred, CAST(tp$k AS BIGINT) AS n_tp,
-           CAST(pos AS BIGINT) AS n_pos,
-           CAST(tp$k * 1000000 // nullif(pred$k, 0) AS BIGINT)
-             AS precision_micro,
-           CAST(tp$k * 1000000 // nullif(pos, 0) AS BIGINT)
-             AS recall_micro FROM agg""").mkString("\n         UNION ALL ")
-      val noised = nbClassifierOracleSpiked(
-        """CASE WHEN source IN ('src0','src1') AND doc_id % 4 <> 0
-        THEN text || ' curated encyclopedia reference citation archive'
-        WHEN source = 'src2' THEN text || ' encyclopedia reference citation'
-        ELSE text END""")
-      s"""WITH nb AS ($noised),
-         scored AS (SELECT n.doc_id, CAST(n.nb_micro AS DOUBLE) AS s,
-             d.source IN ('src0', 'src1') AS y
-           FROM nb n JOIN documents d USING (doc_id)),
-         cuts AS (SELECT $cuts FROM scored),
-         agg AS (SELECT $condAggs FROM scored CROSS JOIN cuts)
-         $rows"""
-    },
-
-    "q148_calibration" ->
-      s"""WITH nb AS ($nbClassifierOracle),
-         lab AS (SELECT doc_id, source IN ('src0','src1') AS pos
-                 FROM documents WHERE text IS NOT NULL),
-         j AS (SELECT nb.doc_id, nb.nb_micro AS s, lab.pos
-               FROM nb JOIN lab USING (doc_id)),
-         b AS (SELECT s, pos,
-             ntile(10) OVER (ORDER BY s, doc_id) AS bin FROM j)
-         SELECT CAST(bin AS BIGINT) AS bin,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-           CAST(min(s) AS BIGINT) AS min_score,
-           CAST(max(s) AS BIGINT) AS max_score,
-           CAST(sum(CASE WHEN pos THEN 1 ELSE 0 END) * 1000000 // count(*)
-             AS BIGINT) AS pos_rate_micro
-         FROM b GROUP BY 1""",
-
-    // same list, same whole-token / padded-adjacency match semantics
-    "q152_blocklist" ->
-      s"""WITH f AS (SELECT source, n_chars,
-           (${(BlocklistWords.map(w =>
-             s"list_contains(string_split(text, ' '), '$w')") ++
-             BlocklistPhrases.map(p =>
-               s"contains(' ' || text || ' ', ' $p ')")).mkString(" OR ")}) AS b
-         FROM documents)
-         SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(CASE WHEN b THEN 1 ELSE 0 END) AS BIGINT) AS n_blocked,
-           CAST(sum(CASE WHEN NOT b THEN n_chars ELSE 0 END) AS BIGINT) AS kept_chars
-         FROM f GROUP BY 1""",
-
-    // same fused moments (first moments tagged j = -1), same exact
-    // fixed-point 1e12 quantization, same end-stage double arithmetic
-    "q153_pca_cov" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-           FROM embeddings WHERE len(embedding) = 64),
-         ue AS (SELECT vec_id, unnest(range(0, 64)) AS i, unnest(emb) AS x FROM e),
-         p2 AS (SELECT a.i AS i, b.i AS j,
-             CAST(floor((a.x * b.x) * 1e12 + 0.5) AS BIGINT) AS xy
-           FROM ue a JOIN ue b ON a.vec_id = b.vec_id AND a.i <= b.i),
-         p1 AS (SELECT i, -1 AS j, CAST(floor(x * 1e12 + 0.5) AS BIGINT) AS xy
-           FROM ue),
-         m AS (SELECT i, j, count(*) AS n_vecs, CAST(sum(xy) AS BIGINT) AS s
-           FROM (SELECT * FROM p1 UNION ALL SELECT * FROM p2) GROUP BY 1, 2)
-         SELECT s2.i, s2.j, CAST(s2.n_vecs AS BIGINT) AS n_vecs,
-           (CAST(s2.s AS DOUBLE) / 1e12) / CAST(s2.n_vecs AS DOUBLE)
-             - ((CAST(a.s AS DOUBLE) / 1e12) / CAST(s2.n_vecs AS DOUBLE))
-               * ((CAST(b.s AS DOUBLE) / 1e12) / CAST(s2.n_vecs AS DOUBLE)) AS cov
-         FROM m s2 JOIN m a ON a.j = -1 AND s2.i = a.i
-           JOIN m b ON b.j = -1 AND s2.j = b.i
-         WHERE s2.j >= 0""",
-
-    // same spike, same splitter ([.!?]+ runs + trailing whitespace,
-    // trimmed non-empty), same df >= 3 strike, same '. ' re-join
-    "q149_sentence_dedup" ->
-      """WITH spiked AS (SELECT doc_id,
-           regexp_replace(text, '((?:\S+ ){7}\S+) ', '\1. ', 'g') ||
-           CASE WHEN doc_id % 13 = 0 THEN '. all rights reserved contact us for details'
-                WHEN doc_id % 17 = 0 THEN '. subscribe to our newsletter for updates'
-                ELSE '' END AS text
-         FROM documents),
-         s0 AS (SELECT doc_id,
-           [trim(x) for x in regexp_split_to_array(text, '[.!?]+\s*')
-            if trim(x) <> ''] AS ss FROM spiked),
-         sents AS (SELECT doc_id, unnest(ss) AS sent,
-           generate_subscripts(ss, 1) - 1 AS sent_idx FROM s0),
-         freq AS (SELECT sent FROM (SELECT sent, count(DISTINCT doc_id) AS df
-           FROM sents GROUP BY sent) WHERE df >= 3),
-         kept AS (SELECT s.* FROM sents s ANTI JOIN freq f USING (sent)),
-         rebuilt AS (SELECT doc_id,
-           string_agg(sent, '. ' ORDER BY sent_idx) AS clean_text,
-           CAST(count(*) AS BIGINT) AS n_kept FROM kept GROUP BY doc_id),
-         totals AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_total
-           FROM sents GROUP BY doc_id)
-         SELECT t.doc_id, coalesce(r.clean_text, '') AS clean_text,
-           coalesce(r.n_kept, 0) AS n_kept,
-           t.n_total - coalesce(r.n_kept, 0) AS n_removed
-         FROM totals t LEFT JOIN rebuilt r USING (doc_id)""",
-
-    "q133_span_corruption" -> {
-      val h = sqlHexLong("(doc_id::VARCHAR || '#' || bb::VARCHAR)")
-      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-                     WHERE text IS NOT NULL),
-         nb AS (SELECT doc_id, w,
-                  CAST(ceil(CAST(len(w) AS DOUBLE) / 8) AS BIGINT) AS nblk
-                FROM t),
-         bs AS (SELECT doc_id, w, nblk,
-             [(($h % 5 = 0) AND (bb * 8 + (($h >> 8) % 5) < len(w)))
-               for bb in range(0, nblk)] AS ms,
-             [(($h >> 8) % 5) for bb in range(0, nblk)] AS ss,
-             [((($h >> 16) % 3) + 1) for bb in range(0, nblk)] AS ls
-           FROM nb),
-         built AS (SELECT doc_id, w, nblk, ms, ss, ls,
-             [x for x in
-               [CASE WHEN NOT (ms[(i // 8) + 1] AND (i % 8) >= ss[(i // 8) + 1]
-                               AND (i % 8) < ss[(i // 8) + 1] + ls[(i // 8) + 1])
-                  THEN w[i + 1]
-                  WHEN (i % 8) = ss[(i // 8) + 1]
-                  THEN '<extra_id_' || (i // 8)::VARCHAR || '>'
-                  ELSE NULL END for i in range(0, len(w))]
-              if x IS NOT NULL] AS inp,
-             flatten([CASE WHEN ms[bb + 1]
-                 THEN ['<extra_id_' || bb::VARCHAR || '>'] ||
-                   w[(bb * 8 + ss[bb + 1] + 1) :
-                     (bb * 8 + ss[bb + 1] +
-                      least(ls[bb + 1], len(w) - (bb * 8 + ss[bb + 1])))]
-                 ELSE [] END for bb in range(0, nblk)]) AS tgt,
-             len([x for x in ms if x]) AS nsp
-           FROM bs)
-         SELECT doc_id, array_to_string(inp, ' ') AS masked_input,
-           coalesce(array_to_string(tgt, ' '), '') AS target,
-           CAST(nsp AS BIGINT) AS n_spans,
-           CAST(len(w) - len(inp) + nsp AS BIGINT) AS n_masked
-         FROM built"""
-    },
-
-    "q132_ppl_buckets" -> {
-      val h = sqlHexLong("w[i]")
-      s"""WITH refz AS (
-           SELECT unnest(h[1:len(h)-1]) AS b1, unnest(h[2:len(h)]) AS b2
-           FROM (SELECT [$h % 256 for i in range(1, len(w) + 1)] AS h
-                 FROM (SELECT string_split(text, ' ') AS w FROM documents
-                       WHERE source IN ('src0','src1') AND text IS NOT NULL))),
-         refp AS (SELECT b1, b2, CAST(count(*) AS BIGINT) AS c12
-                  FROM refz GROUP BY 1, 2),
-         marg AS (SELECT b1, CAST(sum(c12) AS BIGINT) AS c1 FROM refp GROUP BY 1),
-         dz AS (
-           SELECT doc_id, unnest(h[1:len(h)-1]) AS b1, unnest(h[2:len(h)]) AS b2
-           FROM (SELECT doc_id, [$h % 256 for i in range(1, len(w) + 1)] AS h
-                 FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-                       WHERE text IS NOT NULL))),
-         dp AS (SELECT doc_id, b1, b2, CAST(count(*) AS BIGINT) AS m
-                FROM dz GROUP BY 1, 2, 3),
-         scored AS (
-           SELECT doc_id, CAST(sum(m) AS BIGINT) AS n_pairs,
-             CAST(sum(m * CAST(floor(ln(
-               CAST(coalesce(c1, 0) + 256 AS DOUBLE) /
-               CAST(coalesce(c12, 0) + 1 AS DOUBLE)) * 1000000 + 0.5) AS BIGINT)) AS BIGINT) AS nll_micro
-           FROM dp LEFT JOIN marg USING (b1) LEFT JOIN refp USING (b1, b2)
-           GROUP BY 1),
-         mm AS (SELECT doc_id, n_pairs, nll_micro,
-                  nll_micro // n_pairs AS mean_micro,
-                  ntile(3) OVER (ORDER BY nll_micro // n_pairs, nll_micro, doc_id) AS t3
-                FROM scored)
-         SELECT doc_id, n_pairs, nll_micro, CAST(mean_micro AS BIGINT) AS mean_micro,
-           CASE t3 WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS ppl_bucket
-         FROM mm"""
-    },
-
-    "q150_interp_ppl" -> {
-      val h = sqlHexLong("w[i]")
-      // p = [max(4·c12−3,0)·(np+B) + 3·n1·(ct+1)] / (4·c1·(np+B)),
-      // backoff (ct+1)/(np+B) when c1 = 0 — integer num/den, one ln
-      s"""WITH refz AS (
-           SELECT unnest(h[1:len(h)-1]) AS b1, unnest(h[2:len(h)]) AS b2
-           FROM (SELECT [$h % 256 for i in range(1, len(w) + 1)] AS h
-                 FROM (SELECT string_split(text, ' ') AS w FROM documents
-                       WHERE source IN ('src0','src1') AND text IS NOT NULL))),
-         refp AS (SELECT b1, b2, CAST(count(*) AS BIGINT) AS c12
-                  FROM refz GROUP BY 1, 2),
-         marg AS (SELECT b1, CAST(sum(c12) AS BIGINT) AS c1,
-                  CAST(count(*) AS BIGINT) AS n1 FROM refp GROUP BY 1),
-         cont AS (SELECT b2, CAST(count(*) AS BIGINT) AS ct FROM refp GROUP BY 1),
-         np AS (SELECT CAST(count(*) AS BIGINT) AS np FROM refp),
-         dz AS (
-           SELECT doc_id, unnest(h[1:len(h)-1]) AS b1, unnest(h[2:len(h)]) AS b2
-           FROM (SELECT doc_id, [$h % 256 for i in range(1, len(w) + 1)] AS h
-                 FROM (SELECT doc_id, string_split(
-                         CASE WHEN source NOT IN ('src0','src1') AND doc_id % 11 = 0
-                              THEN text || ' cuneiform hieroglyph abjad'
-                              ELSE text END, ' ') AS w FROM documents
-                       WHERE text IS NOT NULL))),
-         dp AS (SELECT doc_id, b1, b2, CAST(count(*) AS BIGINT) AS m
-                FROM dz GROUP BY 1, 2, 3),
-         scored AS (
-           SELECT doc_id, CAST(sum(m) AS BIGINT) AS n_pairs,
-             CAST(sum(m * CAST(floor(ln(
-               CAST(CASE WHEN coalesce(c1, 0) > 0
-                    THEN 4 * c1 * (np + 256) ELSE np + 256 END AS DOUBLE) /
-               CAST(CASE WHEN coalesce(c1, 0) > 0
-                    THEN greatest(4 * coalesce(c12, 0) - 3, 0) * (np + 256)
-                         + 3 * n1 * (coalesce(ct, 0) + 1)
-                    ELSE coalesce(ct, 0) + 1 END AS DOUBLE))
-               * 1000000 + 0.5) AS BIGINT)) AS BIGINT) AS nll_micro
-           FROM dp LEFT JOIN marg USING (b1) LEFT JOIN refp USING (b1, b2)
-                LEFT JOIN cont USING (b2) CROSS JOIN np
-           GROUP BY 1),
-         mm AS (SELECT doc_id, n_pairs, nll_micro,
-                  nll_micro // n_pairs AS mean_micro,
-                  ntile(3) OVER (ORDER BY nll_micro // n_pairs, nll_micro, doc_id) AS t3
-                FROM scored)
-         SELECT doc_id, n_pairs, nll_micro, CAST(mean_micro AS BIGINT) AS mean_micro,
-           CASE t3 WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS ppl_bucket
-         FROM mm"""
-    },
-
-    // the muxed fixture's parameters restated as arithmetic: width/
-    // height are SPS mb-grid minus the 4:2:0 crop units (×2 per crop
-    // sample), the declared 640×360 entry decoy must NOT surface
-    "q151_avc_meta" ->
-      """SELECT doc_id, 'avc1' AS codec,
-         CAST((10 + doc_id % 30) * 16
-           - CASE WHEN doc_id % 5 = 0 THEN 4 ELSE 0 END AS BIGINT) AS width,
-         CAST((8 + doc_id % 20) * 16
-           - CASE WHEN doc_id % 5 = 0 THEN 2 ELSE 0 END AS BIGINT) AS height,
-         CAST(CASE doc_id % 3 WHEN 0 THEN 66 WHEN 1 THEN 77 ELSE 100 END
-           AS BIGINT) AS avc_profile,
-         CAST(CASE doc_id % 4 WHEN 0 THEN 30 WHEN 1 THEN 31 WHEN 2 THEN 40
-           ELSE 41 END AS BIGINT) AS avc_level,
-         CAST(1 + doc_id % 3 AS BIGINT) AS n_frames,
-         CAST((1 + doc_id % 3) * 1000 AS BIGINT) AS duration_ms
-         FROM documents""",
-
-    "q125_incremental_dedup" ->
-      s"""WITH RECURSIVE cand AS ($minhashOracle),
-         x AS (SELECT CASE WHEN doc_a % 2 = 1 THEN doc_a ELSE doc_b END AS new_doc,
-                      CASE WHEN doc_a % 2 = 1 THEN doc_b ELSE doc_a END AS existing_doc
-               FROM cand WHERE (doc_a % 2 = 1) <> (doc_b % 2 = 1))
-         SELECT new_doc, CAST(count(*) AS BIGINT) AS n_matches,
-           CAST(min(existing_doc) AS BIGINT) AS closest_existing
-         FROM x GROUP BY 1""",
-
-    // the funnel's stages composed from the proven oracle fragments:
-    // q65's quality formula, exact-dup groups, q51's recursive closure
-    // over candidates-on-QUALIFIED, q58's shingle intersection
-    "q124_curation_funnel" -> {
-      val k = MinhashK
-      val shingleCase = s"""CASE WHEN len(w) >= $k
-        THEN list_distinct([array_to_string(w[i+1:i+$k], ' ') for i in range(0, len(w) - ${k - 1})])
-        ELSE [array_to_string(w, ' ')] END"""
-      s"""WITH RECURSIVE
-         corpus AS (SELECT doc_id, text FROM documents WHERE doc_id % 7 <> 0),
-         evald AS (SELECT text FROM documents WHERE doc_id % 7 = 0),
-         q0 AS (SELECT doc_id,
-           round(least(CAST(1 AS DOUBLE), CAST(len(string_split(text, ' ')) AS DOUBLE) / 64) * 0.5
-             + least(CAST(1 AS DOUBLE), CAST(list_sum([CASE WHEN x IN ('the','a','of','and','to','in','is') THEN 1 ELSE 0 END for x in string_split(text, ' ')]) AS DOUBLE) / len(string_split(text, ' ')) * 5) * 0.5, 4) AS qs
-           FROM corpus),
-         quality AS (SELECT doc_id, (qs IS NOT NULL AND qs >= 0.5) AS q_pass FROM q0),
-         qualified AS (SELECT c.doc_id, c.text FROM corpus c
-           JOIN quality USING (doc_id) WHERE q_pass),
-         fps AS (SELECT doc_id, md5(lower(trim(text))) AS f FROM qualified),
-         grp AS (SELECT f, min(doc_id) AS keep_id, count(*) AS cnt
-           FROM fps GROUP BY 1),
-         exact_drop AS (SELECT fps.doc_id AS doc_id FROM fps
-           JOIN grp ON fps.f = grp.f
-           WHERE grp.cnt > 1 AND fps.doc_id <> grp.keep_id),
-         cand AS (${minhashOracleFrom("qualified")}),
-         edges AS (SELECT doc_a AS src, doc_b AS dst FROM cand
-                   UNION SELECT doc_b, doc_a FROM cand),
-         reach AS (SELECT src, dst FROM edges
-                   UNION
-                   SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-         near_drop AS (SELECT src AS doc_id FROM reach GROUP BY src
-                       HAVING src <> least(src, min(dst))),
-         qsh AS (SELECT doc_id, unnest($shingleCase) AS s2 FROM
-           (SELECT doc_id, string_split(text, ' ') AS w FROM qualified)),
-         esh AS (SELECT DISTINCT unnest($shingleCase) AS s2 FROM
-           (SELECT string_split(text, ' ') AS w FROM evald)),
-         contam AS (SELECT DISTINCT q.doc_id FROM qsh q JOIN esh USING (s2))
-         SELECT c.doc_id AS doc_id,
-           CASE WHEN NOT q.q_pass THEN 'quality'
-                WHEN c.doc_id IN (SELECT doc_id FROM exact_drop) THEN 'exact_dup'
-                WHEN c.doc_id IN (SELECT doc_id FROM near_drop) THEN 'near_dup'
-                WHEN c.doc_id IN (SELECT doc_id FROM contam) THEN 'contaminated'
-                ELSE 'kept' END AS stage
-         FROM corpus c JOIN quality q USING (doc_id)"""
-    },
-
-    "q123_padding_waste" ->
-      """WITH t AS (SELECT CAST(len(string_split(text, ' ')) AS BIGINT) AS n
-           FROM documents),
-         b AS (SELECT n, CAST(CASE WHEN n <= 16 THEN 16
-             WHEN n <= 32 THEN 32 WHEN n <= 64 THEN 64
-             WHEN n <= 128 THEN 128
-             ELSE -1 END AS BIGINT) AS seq_bucket FROM t)
-         SELECT seq_bucket, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n) AS BIGINT) AS total_tokens,
-           CAST(sum(CASE WHEN seq_bucket > 0 THEN seq_bucket - n ELSE 0 END)
-             AS BIGINT) AS total_padding,
-           CASE WHEN seq_bucket > 0 THEN
-             CAST(floor(CAST(sum(CASE WHEN seq_bucket > 0 THEN seq_bucket - n
-               ELSE 0 END) AS DOUBLE) / (count(*) * seq_bucket)
-               * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0
-           ELSE CAST(0.0 AS DOUBLE) END AS padding_ratio
-         FROM b GROUP BY seq_bucket""",
-
-    // exact decimal money at every grouping level (the q13 contract);
-    // GROUPING() bitmask matches grouping_id (first arg = MSB)
-    "q113_rollup_revenue" ->
-      """SELECT r_name, n_name,
-           CAST(GROUPING(r_name, n_name) AS BIGINT) AS level,
-           CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-             AS revenue
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         JOIN nation ON c_nationkey = n_nationkey
-         JOIN region ON n_regionkey = r_regionkey
-         GROUP BY ROLLUP (r_name, n_name)""",
-
-    // integer tf dot products and norms; round before ORDER BY so both
-    // engines rank the same ties, (doc_a, doc_b) breaks the rest
-    "q112_sparse_cosine" ->
-      """WITH toks AS (SELECT doc_id AS doc, string_split(text, ' ') AS w
-           FROM documents),
-         sh AS (SELECT doc, CASE WHEN len(w) >= 3
-           THEN [array_to_string(w[i+1:i+3], ' ')
-                 for i in range(0, len(w) - 2)]
-           ELSE [] END AS terms FROM toks),
-         tf AS (SELECT doc, term, CAST(count(*) AS BIGINT) AS tf
-           FROM (SELECT doc, unnest(terms) AS term FROM sh) GROUP BY 1, 2),
-         dfc AS (SELECT term FROM
-           (SELECT term, count(*) AS df FROM tf GROUP BY 1)
-           WHERE df BETWEEN 2 AND 50),
-         kept AS (SELECT tf.doc, tf.term, tf.tf FROM tf JOIN dfc USING (term)),
-         norms AS (SELECT doc, CAST(sum(tf * tf) AS BIGINT) AS n2
-           FROM kept GROUP BY 1),
-         pairs AS (SELECT a.doc AS doc_a, b.doc AS doc_b,
-           CAST(sum(a.tf * b.tf) AS BIGINT) AS dot
-           FROM kept a JOIN kept b ON a.term = b.term AND a.doc < b.doc
-           GROUP BY 1, 2)
-         SELECT doc_a, doc_b, dot,
-           round(CAST(dot AS DOUBLE) /
-             (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE))), 6)
-             AS cosine
-         FROM pairs
-         JOIN norms na ON pairs.doc_a = na.doc
-         JOIN norms nb ON pairs.doc_b = nb.doc
-         ORDER BY cosine DESC, doc_a, doc_b LIMIT 50""",
-
-    // same cosine + null-skip contract as q31; the source-mismatch
-    // predicate filters candidates before ranking
-    "q107_hard_negatives" -> {
-      val cos = cosineSql("qe", "s.emb")
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-           FROM embeddings),
-         s AS (SELECT e.vec_id, e.emb, d.source FROM e
-               JOIN documents d ON e.vec_id = d.doc_id),
-         q AS (SELECT vec_id AS query_id, emb AS qe, source AS qsrc
-               FROM s WHERE vec_id < 5),
-         sim AS (SELECT query_id, s.vec_id AS neighbor_id,
-                 round($cos, 6) AS cos_sim
-                 FROM q, s WHERE query_id <> s.vec_id AND s.source <> qsrc),
-         r AS (SELECT query_id, neighbor_id, cos_sim,
-               row_number() OVER (PARTITION BY query_id
-                 ORDER BY cos_sim DESC, neighbor_id) AS rn
-               FROM sim WHERE cos_sim IS NOT NULL)
-         SELECT query_id, neighbor_id, cos_sim, CAST(rn AS BIGINT) AS neg_rank
-         FROM r WHERE rn <= 10"""
-    },
-
-    // windows cross as the shared 56-bit md5 hash; interval merge is
-    // the q94 running-max window over integer token positions
-    "q106_dup_spans" -> {
-      val boiler = " all rights reserved unauthorized reproduction of" +
-        " this document is strictly prohibited"
-      s"""WITH d AS (SELECT doc_id, string_split(text ||
-           CASE WHEN doc_id % 4 = 0 THEN '$boiler' ELSE '' END, ' ') AS w
-           FROM documents),
-         sh AS (SELECT doc_id, unnest([{'pos': CAST(i AS BIGINT),
-               'h': ${sqlHexLong("array_to_string(w[i+1:i+5], ' ')")}}
-               for i in range(0, len(w) - 4)]) AS s
-             FROM d WHERE len(w) >= 5),
-         e AS (SELECT doc_id, s.pos AS pos, s.h AS h FROM sh),
-         dup AS (SELECT h FROM e GROUP BY h HAVING count(*) >= 2),
-         hits AS (SELECT doc_id, pos AS s, pos + 4 AS en
-                  FROM e JOIN dup USING (h)),
-         m AS (SELECT doc_id, s, en, max(en) OVER (PARTITION BY doc_id
-               ORDER BY s, en ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-               AS pmax FROM hits),
-         f AS (SELECT doc_id, s, en,
-               CASE WHEN pmax IS NULL OR s > pmax THEN 1 ELSE 0 END AS nw
-               FROM m),
-         i AS (SELECT doc_id, s, en, CAST(sum(nw) OVER (PARTITION BY doc_id
-               ORDER BY s, en ROWS UNBOUNDED PRECEDING) AS BIGINT) AS span_id
-               FROM f)
-         SELECT doc_id, span_id, min(s) AS start_tok, max(en) AS end_tok,
-           CAST(count(*) AS BIGINT) AS n_windows
-         FROM i GROUP BY 1, 2"""
-    },
-
-    // sum-merge of the two pair sides is exact (0.0 + x); the final
-    // double fold runs over the token-sorted list in both engines
-    "q105_source_jsd" ->
-      """WITH st AS (SELECT src, tok, CAST(count(*) AS BIGINT) AS c
-           FROM (SELECT source AS src, unnest(string_split(text, ' ')) AS tok
-                 FROM documents) GROUP BY 1, 2),
-         v AS (SELECT tok FROM (SELECT tok, sum(c) AS tc FROM st
-               GROUP BY 1 ORDER BY tc DESC, tok LIMIT 20)),
-         iv AS (SELECT st.* FROM st JOIN v USING (tok)),
-         tot AS (SELECT src, CAST(sum(c) AS BIGINT) AS t FROM iv GROUP BY 1),
-         p AS (SELECT src, tok, CAST(c AS DOUBLE) / t AS p
-               FROM iv JOIN tot USING (src)),
-         srcs AS (SELECT DISTINCT src FROM p),
-         pairs AS (SELECT a.src AS sa, b.src AS sb FROM srcs a, srcs b
-                   WHERE a.src < b.src),
-         side AS (SELECT sa AS source_a, sb AS source_b, tok,
-                  p AS pa, CAST(0 AS DOUBLE) AS pb
-                  FROM p JOIN pairs ON p.src = pairs.sa
-                  UNION ALL
-                  SELECT sa, sb, tok, CAST(0 AS DOUBLE), p
-                  FROM p JOIN pairs ON p.src = pairs.sb),
-         m AS (SELECT source_a, source_b, tok, sum(pa) AS pa, sum(pb) AS pb
-               FROM side GROUP BY 1, 2, 3),
-         t AS (SELECT source_a, source_b, tok,
-               (CASE WHEN pa > 0 THEN pa * ln(pa * CAST(2.0 AS DOUBLE) / (pa + pb))
-                     ELSE CAST(0 AS DOUBLE) END) * CAST(0.5 AS DOUBLE) +
-               (CASE WHEN pb > 0 THEN pb * ln(pb * CAST(2.0 AS DOUBLE) / (pa + pb))
-                     ELSE CAST(0 AS DOUBLE) END) * CAST(0.5 AS DOUBLE) AS term
-               FROM m),
-         agg AS (SELECT source_a, source_b,
-                 list_sort(list(struct_pack(tok := tok, term := term))) AS ts
-                 FROM t GROUP BY 1, 2)
-         SELECT source_a, source_b,
-           CAST(len(ts) AS BIGINT) AS n_tokens_support,
-           round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             [x.term for x in ts]), (acc, y) -> acc + y), 6) AS jsd
-         FROM agg""",
-    "q89_fuzzy_match" ->
-      """WITH pf AS (SELECT * FROM (SELECT p_partkey, p_name, p_brand,
-             COUNT(*) OVER (PARTITION BY p_brand, length(p_name) // 3)
-               AS __cn FROM part) WHERE __cn <= 2048)
-         SELECT a.p_partkey AS key_a, b.p_partkey AS key_b,
-         CAST(levenshtein(a.p_name, b.p_name) AS BIGINT) AS edit_dist
-         FROM pf a JOIN pf b
-         ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
-           AND abs(length(a.p_name) - length(b.p_name)) <= 2
-         WHERE levenshtein(a.p_name, b.p_name) <= 2""",
-    "q87_bm25" -> {
-      val terms = RrfTerms.map(t => s"'$t'").mkString(", ")
-      s"""WITH d AS (SELECT doc_id AS doc, string_split(text, ' ') AS w
-           FROM documents WHERE text IS NOT NULL),
-         base AS (SELECT doc, w, CAST(len(w) AS DOUBLE) AS dl FROM d),
-         stats AS (SELECT CAST(count(*) AS DOUBLE) AS N, avg(dl) AS avgdl FROM base),
-         tf AS (SELECT doc, dl, term, CAST(count(*) AS DOUBLE) AS tf
-           FROM (SELECT doc, dl, unnest(w) AS term FROM base)
-           WHERE term IN ($terms) GROUP BY 1, 2, 3),
-         dfreq AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY 1),
-         scored AS (SELECT doc, term,
-           ln((N - df + CAST(0.5 AS DOUBLE)) / (df + CAST(0.5 AS DOUBLE)) + CAST(1.0 AS DOUBLE)) *
-             (tf * (CAST(1.2 AS DOUBLE) + CAST(1.0 AS DOUBLE))) /
-             (tf + CAST(1.2 AS DOUBLE) * (CAST(1.0 AS DOUBLE) - CAST(0.75 AS DOUBLE)
-               + CAST(0.75 AS DOUBLE) * dl / avgdl)) AS s
-           FROM tf JOIN dfreq USING (term), stats),
-         perdoc AS (SELECT doc, round(list_reduce(
-             list_prepend(CAST(0 AS DOUBLE),
-               [x.s for x in list_sort(list(struct_pack(term := term, s := s)))]),
-             (acc, y) -> acc + y), 6) AS bm25
-           FROM scored GROUP BY doc),
-         r AS (SELECT doc, bm25, row_number() OVER (
-             ORDER BY bm25 DESC, doc) AS rn FROM perdoc)
-         SELECT doc AS doc_id, bm25, CAST(rn AS BIGINT) AS bm25_rank
-         FROM r WHERE rn <= 20"""
-    },
-    "q85_snapshot_diff" ->
-      """WITH newt AS (
-           SELECT o_orderkey, o_custkey, o_orderstatus,
-             CASE WHEN o_orderkey % 10 = 0 THEN o_totalprice * CAST(1.05 AS DOUBLE)
-                  ELSE o_totalprice END AS o_totalprice,
-             o_orderdate, o_orderpriority
-           FROM orders WHERE o_orderkey % 13 <> 0
-           UNION ALL
-           SELECT o_orderkey + 10000000000, o_custkey, 'N', o_totalprice,
-             o_orderdate, o_orderpriority
-           FROM orders WHERE o_orderkey % 97 = 0),
-         j AS (SELECT coalesce(o.o_orderkey, n.o_orderkey) AS o_orderkey,
-             CASE WHEN o.o_orderkey IS NULL THEN 'I'
-                  WHEN n.o_orderkey IS NULL THEN 'D'
-                  WHEN o.o_totalprice IS DISTINCT FROM n.o_totalprice
-                    OR o.o_custkey IS DISTINCT FROM n.o_custkey
-                    OR o.o_orderstatus IS DISTINCT FROM n.o_orderstatus
-                    OR o.o_orderdate IS DISTINCT FROM n.o_orderdate
-                    OR o.o_orderpriority IS DISTINCT FROM n.o_orderpriority
-                  THEN 'U' END AS change_type,
-             n.o_totalprice AS new_totalprice
-           FROM orders o FULL OUTER JOIN newt n ON o.o_orderkey = n.o_orderkey)
-         SELECT o_orderkey, change_type, new_totalprice FROM j
-         WHERE change_type IS NOT NULL""",
-    "q86_checksum" -> {
-      val h = sqlHexLong("concat_ws('|', l_orderkey, l_linenumber, " +
-        "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT), " +
-        "CAST(floor(l_quantity * 100 + 0.5) AS BIGINT), " +
-        "l_returnflag, l_linestatus)")
-      s"""SELECT l_orderkey % 64 AS bucket,
-         CAST(count(*) AS BIGINT) AS n_rows,
-         CAST(bit_xor($h) AS BIGINT) AS xor_hash
-         FROM lineitem GROUP BY 1"""
-    },
-    "q84_pagerank" -> {
-      // unrolled fixed-point iterations, every op integer: `//` floor
-      // division == Spark's `div` on the all-positive rank mass, sums
-      // cast back from DuckDB's HUGEINT to BIGINT
-      val unit = "1000000000000"
-      val rk = (1 to 5).map { k =>
-        s"""r$k AS MATERIALIZED (SELECT n.node AS node,
-           (SELECT b FROM base) + coalesce(CAST((85 * s.s) // 100 AS BIGINT), CAST(0 AS BIGINT)) AS r
-           FROM nodes n LEFT JOIN (
-             SELECT e.dst AS node, CAST(sum(r${k - 1}.r // deg.deg) AS BIGINT) AS s
-             FROM e JOIN r${k - 1} ON e.src = r${k - 1}.node
-             JOIN deg ON e.src = deg.src GROUP BY 1) s
-           ON n.node = s.node)"""
-      }.mkString(",\n         ")
-      // AS MATERIALIZED: DuckDB inlines plain CTEs, and each unrolled
-      // round re-derives the co-purchase self-join edge table — ~20
-      // derivations by r5, which spilled >68 GB at the 10x corpus
-      // (round 13). Materialization pins one derivation each; results
-      // are identical (planning hint only).
-      s"""WITH e AS MATERIALIZED (SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-           FROM lineitem a JOIN lineitem b
-           ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
-         deg AS MATERIALIZED (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY 1),
-         nodes AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst FROM e),
-         nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
-         base AS (SELECT CAST((15 * ($unit // (SELECT n FROM nn))) // 100 AS BIGINT) AS b),
-         r0 AS (SELECT node, CAST($unit // (SELECT n FROM nn) AS BIGINT) AS r FROM nodes),
-         $rk
-         SELECT node AS l_partkey, r AS rank_unit FROM r5"""
-    },
-    "q80_incremental_agg" ->
-      """SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spend,
-         strftime(max(o_orderdate), '%Y-%m-%d') AS last_order
-         FROM orders GROUP BY 1""",
-    "q81_funnel" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
-         s1 AS (SELECT user_id, min(us) AS step1_us FROM e
-                WHERE event_type = 'view' GROUP BY 1),
-         s2 AS (SELECT user_id, min(us) AS step2_us FROM e JOIN s1 USING (user_id)
-                WHERE event_type = 'click' AND us > step1_us GROUP BY 1),
-         s3 AS (SELECT user_id, min(us) AS step3_us FROM e JOIN s2 USING (user_id)
-                WHERE event_type = 'purchase' AND us > step2_us GROUP BY 1)
-         SELECT user_id, step1_us, step2_us, step3_us
-         FROM s1 LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)""",
-    "q82_reservoir" -> {
-      val h = sqlHexLong("concat('rsv:', CAST(doc_id AS VARCHAR))")
-      s"""WITH s AS (SELECT source, doc_id,
-           CAST($h % 1099511627776 AS DOUBLE) AS score FROM documents),
-         r AS (SELECT *, row_number() OVER (PARTITION BY source
-           ORDER BY score DESC, doc_id) AS rn FROM s)
-         SELECT source, doc_id, CAST(rn AS BIGINT) AS sample_rank
-         FROM r WHERE rn <= 5"""
-    },
-    "q83_expectations" ->
-      """WITH t AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(sum(CASE WHEN NOT coalesce(o_totalprice >= 0.0, false) THEN 1 ELSE 0 END) AS BIGINT) AS v0,
-           CAST(sum(CASE WHEN NOT coalesce(o_totalprice < 450000.0, false) THEN 1 ELSE 0 END) AS BIGINT) AS v1,
-           CAST(sum(CASE WHEN NOT coalesce(o_orderstatus IN ('O','F','P'), false) THEN 1 ELSE 0 END) AS BIGINT) AS v2,
-           CAST(sum(CASE WHEN NOT coalesce(o_orderdate >= TIMESTAMP '1992-01-01 00:00:00'
-             AND o_orderdate < TIMESTAMP '1999-01-01 00:00:00', false) THEN 1 ELSE 0 END) AS BIGINT) AS v3,
-           CAST(sum(CASE WHEN NOT coalesce(o_custkey IS NOT NULL, false) THEN 1 ELSE 0 END) AS BIGINT) AS v4
-           FROM orders)
-         SELECT * FROM (
-           SELECT 'price_nonneg' AS rule, v0 AS n_violations, n_rows,
-             CAST(v0 AS DOUBLE) / n_rows AS violation_rate FROM t
-           UNION ALL SELECT 'price_below_cap', v1, n_rows, CAST(v1 AS DOUBLE) / n_rows FROM t
-           UNION ALL SELECT 'status_domain', v2, n_rows, CAST(v2 AS DOUBLE) / n_rows FROM t
-           UNION ALL SELECT 'date_in_window', v3, n_rows, CAST(v3 AS DOUBLE) / n_rows FROM t
-           UNION ALL SELECT 'custkey_present', v4, n_rows, CAST(v4 AS DOUBLE) / n_rows FROM t)""",
-    "q79_bloom_join" ->
-      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
-         l_quantity, o_totalprice
-         FROM lineitem JOIN (
-           SELECT o_orderkey, o_totalprice FROM orders
-           WHERE o_orderpriority = '1-URGENT'
-             AND o_totalprice > CAST(400000.0 AS DOUBLE)) o
-         ON l_orderkey = o_orderkey""",
-    // plain equivalence-class aggregate + HAVING — the audit's whole
-    // point is that the risk report is a trivially restatable fact
-    "q216_k_anonymity" ->
-      """WITH g AS (SELECT c_nationkey, c_mktsegment,
-           right(c_name, 1) AS name_digit,
-           CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(count(DISTINCT CASE WHEN c_acctbal < 0 THEN 'neg'
-             ELSE 'nonneg' END) AS BIGINT) AS n_sensitive
-           FROM customer GROUP BY 1, 2, 3)
-         SELECT c_nationkey, c_mktsegment, name_digit, n_rows, n_sensitive,
-           CAST(CASE WHEN n_rows < 8 THEN 1 ELSE 0 END AS BIGINT)
-             AS k_violation,
-           CAST(CASE WHEN n_sensitive < 2 THEN 1 ELSE 0 END AS BIGINT)
-             AS l_violation
-         FROM g WHERE n_rows < 8 OR n_sensitive < 2""",
-
-    "q59_pii_redact" -> {
-      // regex constants embed verbatim: DuckDB single-quoted strings do
-      // not process backslash escapes, so `\.` crosses unchanged
-      val url = TextAnalysis.PiiUrlRe
-      val email = TextAnalysis.PiiEmailRe
-      val digits = TextAnalysis.PiiDigitsRe
-      s"""WITH spiked AS (SELECT doc_id, text ||
-           CASE WHEN doc_id % 7 = 0 THEN ' contact user@example.com'
-                WHEN doc_id % 11 = 0 THEN ' see https://example.com/x'
-                WHEN doc_id % 13 = 0 THEN ' ref 1234567890'
-                ELSE '' END AS text
-         FROM documents)
-         SELECT doc_id,
-           regexp_replace(regexp_replace(regexp_replace(text,
-             '$url', '<URL>', 'g'), '$email', '<EMAIL>', 'g'), '$digits', '<NUM>', 'g') AS redacted,
-           CAST(len(regexp_extract_all(text, '$url'))
-              + len(regexp_extract_all(text, '$email'))
-              + len(regexp_extract_all(text, '$digits')) AS BIGINT) AS n_pii
-         FROM spiked"""
-    }
-  )
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    referenceQueries ++ generalQueries ++ pipelineQueries
-
-  def oracleSql: Map[String, String] =
-    referenceOracle ++ generalOracle ++ pipelineOracle ++ trainedIvfOracle ++
-      pcaOracle ++ mahalanobisOracle ++ pqAdcOracle ++ zorderOracle
 }

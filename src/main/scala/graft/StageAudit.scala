@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.GraftListenerShims
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.mutable
 
 /** Automated one-task-stage sweep over every declared query.
@@ -154,10 +154,11 @@ object StageAudit {
     rows.filter(r => r.tasks >= SkewMinTasks && r.skewRatio >= SkewMaxRatio)
       .sortBy(-_.maxTaskMs).headOption
 
-  /** Run each declared query once under `spark` and return its audit.
-    * Queries listed in SPARK_GRAFT_ONLY (or `only`) filter the sweep. */
+  /** Run each of `queries` ([[SparkEntry.select]]: the declared queries
+    * SPARK_GRAFT_ONLY names, or all of them) once under `spark` and
+    * return its audit. */
   def sweep(spark: SparkSession, sfDir: String,
-      only: Option[Set[String]] = None): Seq[QueryAudit] = {
+      queries: Map[String, (SparkSession, String) => DataFrame]): Seq[QueryAudit] = {
     // AQE-off for the audit (the Bench/DevProfile measurement profile):
     // at sf0.01 AQE coalesces every tiny post-shuffle stage to ONE task,
     // which reads as a fake violation (q115/q117's window stage) — the
@@ -190,8 +191,7 @@ object StageAudit {
           val worst = rows.filter(_.tasks == 1).sortBy(-_.taskMs).headOption
           QueryAudit(name, total, worst, worstSkew(rows))
         }
-        val first = SparkEntry.queries.toSeq.sortBy(_._1)
-          .filter { case (name, _) => only.forall(_.contains(name)) }
+        val first = queries.toSeq.sortBy(_._1)
           .map { case (name, fn) => auditQuery(name, fn) }
         // Confirmation pass for the full-concentration grey band (total
         // under the 2× floor but ALL of it in one task): re-run AFTER the
@@ -214,7 +214,7 @@ object StageAudit {
         first.map { a =>
           if (!a.violates && !a.skews) a
           else {
-            val second = auditQuery(a.query, SparkEntry.queries(a.query))
+            val second = auditQuery(a.query, queries(a.query))
             // a contention/GC artifact deflates on the temporally-separated
             // quiet re-run (fewer findings, or a lighter worst task); a
             // real trap or real skew reproduces
@@ -264,9 +264,9 @@ object StageAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val selected = SparkEntry.select()
     val spark = Profiles.bench()
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val audits = sweep(spark, sfDir, only)
+    val audits = sweep(spark, sfDir, selected)
     audits.sortBy(-_.fraction).foreach(a => println(a.toString +
       (if (a.violates) "  <-- VIOLATION" else "") +
       (if (a.skews) "  <-- SKEW" else "")))

@@ -5,18 +5,16 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // SPARK_GRAFT_AQE=1 validates every query (incl. the RangeJoinRewrite
-    // rule behind q56) under AQE + GraftExtensions (Profiles.cluster)
-    val spark = Profiles.verify()
-    new java.io.File(outDir).mkdirs()
     // Dev-only subset (mirrors Bench): SPARK_GRAFT_ONLY=q105_source_jsd
     // dumps + declares just those queries so tools/compare.py gates a
     // single query without paying for the whole suite. The driver never
     // sets it, so the official gate always covers everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    val selected = SparkEntry.select()
+    // SPARK_GRAFT_AQE=1 validates every query (incl. the RangeJoinRewrite
+    // rule behind q56) under AQE + GraftExtensions (Profiles.cluster)
+    val spark = Profiles.verify()
+    new java.io.File(outDir).mkdirs()
+    selected.foreach { case (name, fn) =>
       // repartition(1), NOT coalesce(1): the dump stays one part file
       // (the layout the driver has always read), but coalesce is a
       // NARROW collapse — it pulled every post-shuffle stage of the
@@ -41,8 +39,10 @@ object Verify {
     // One shared escaper (the RPC client's) — two hand-rolled copies
     // would drift on the next escaping fix.
     def q(s: String): String = graft.sources.LimeSurveyClient.jstr(s)
+    // sorted by name, so two dumps compare with a plain `diff`
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
+      .filter { case (k, _) => selected.contains(k) }
+      .toSeq.sortBy(_._1)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -326,32 +326,6 @@ object Sinks {
     df.write.mode(SaveMode.Append).jdbc(url, table, props)
   }
 
-  /** The scalable form of O23: a date-partitioned table with DYNAMIC
-    * partition overwrite — only the partitions present in the incoming
-    * batch are rewritten; everything else is untouched I/O-wise. This is
-    * what replaces the compact [[replaceWhere]] at 100 TB: the
-    * reference's `DELETE WHERE date >= cutoff; COPY` touches the whole
-    * table, this touches exactly the reloaded dates.
-    *
-    * Idempotency: re-running the same batch overwrites the same
-    * partitions with identical content. `partCol` values become
-    * directory names — derive a clean partition key (e.g. a date string)
-    * rather than a free-text column. */
-  def overwritePartitions(df: DataFrame, warehouseDir: String, table: String,
-      partCol: String): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      df.write.mode(SaveMode.Overwrite)
-        .partitionBy(partCol)
-        .parquet(s"$warehouseDir/$table")
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
-
   /** O26 — rate-limited row-at-a-time sink
     * (/root/reference/limesurvey.py:160-164: one `add_response` RPC per
     * TSV row with `sleep(1)`). The throttle is a client-politeness

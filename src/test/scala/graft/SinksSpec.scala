@@ -318,21 +318,6 @@ class SinksSpec extends SparkSpec {
       s"spark.read.parquet( outside readTable at offsets ${reads.filter(i => i < start || i > end)}")
   }
 
-  test("overwritePartitions rewrites only the partitions in the batch (O23 at scale)") {
-    val dir = Files.createTempDirectory("graft_dyn").toString
-    val day1 = Seq(("2018-01-01", "a"), ("2018-01-02", "b")).toDF("d", "v")
-    Sinks.overwritePartitions(day1, dir, "t", "d")
-    // reload ONLY day 2 with new content; day 1 must be untouched
-    val day2new = Seq(("2018-01-02", "b2")).toDF("d", "v")
-    Sinks.overwritePartitions(day2new, dir, "t", "d")
-    val after = spark.read.parquet(s"$dir/t")
-      .select("d", "v").as[(String, String)].collect().toSet
-    assert(after == Set(("2018-01-01", "a"), ("2018-01-02", "b2")))
-    // idempotent: same batch again -> same contents
-    Sinks.overwritePartitions(day2new, dir, "t", "d")
-    assert(spark.read.parquet(s"$dir/t").count() == 2)
-  }
-
   test("throttledRows paces inserts and blanks id (O26)") {
     val df = Seq(("7", "a"), ("8", "b"), ("9", "c")).toDF("id", "v")
     ThrottleProbe.seen.clear()

@@ -17,8 +17,7 @@ class StageAuditSpec extends SparkSpec {
   private var sweepCache: Option[Seq[StageAudit.QueryAudit]] = None
   private def sweepAudits: Seq[StageAudit.QueryAudit] = synchronized {
     sweepCache.getOrElse {
-      val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-      val a = StageAudit.sweep(spark, sf01, only)
+      val a = StageAudit.sweep(spark, sf01, SparkEntry.select())
       sweepCache = Some(a)
       a
     }

@@ -110,6 +110,11 @@ def main(sf_dir, out_dir):
         n_pass += 1
     print(f"\n{n_pass} pass / {n_fail} fail" +
           (f" / {n_skip} SKIPPED (partial pass!)" if n_skip else ""))
+    # a gate that compared nothing checked nothing: an empty dump (say,
+    # from a filtered or failed Verify) must not read as a pass
+    if n_pass + n_fail == 0:
+        print("FAILED: no query was compared", file=sys.stderr)
+        return 1
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
