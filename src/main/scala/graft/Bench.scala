@@ -57,8 +57,8 @@ object Bench {
         benchRefPattern.findAllMatchIn(txt)
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
       } else Map.empty
-    def benchQuery(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def benchQuery(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : Double = {
       run(fn) // warm
       def timed(): Double = {
         val t0 = System.nanoTime()
@@ -79,7 +79,7 @@ object Bench {
     }
     val firstPass = selected.toSeq.sortBy(_._1)
       .map { case (name, fn) =>
-        try name -> benchQuery(name, fn)
+        try name -> benchQuery(fn)
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name: $e"); name -> -1.0
         }
@@ -107,7 +107,7 @@ object Bench {
     } ++ alwaysIsolate.filter(n => firstPass.get(n).exists(_ >= 0)))
       .toSeq.distinct.sorted
     val retried = suspects.map { name =>
-      val second = try benchQuery(name, SparkEntry.queries(name))
+      val second = try benchQuery(SparkEntry.queries(name))
         catch { case e: Throwable =>
           System.err.println(s"[bench] retry $name: $e"); firstPass(name) }
       System.err.println(f"[bench] retry $name: first=${firstPass(name)}%.3f" +

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.types.DoubleType
 
 /** Distributed principal-component analysis over an embedding column —
   * the whitening / dimensionality-reduction step training-data

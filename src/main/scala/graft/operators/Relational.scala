@@ -131,12 +131,15 @@ object Relational {
     * "replace by key".
     *
     * NOT a full-outer join: both sides are tagged and unioned, then ONE
-    * hash aggregate per key keeps `max_by(row, (priority, version))` —
-    * a single shuffle with map-side partial aggregation, no join
+    * aggregate per key keeps `max_by(row, (priority, version))` — a
+    * single shuffle with map-side partial aggregation, no join
     * operator, and the change set never needs to be broadcast (at 100 TB
-    * a CDC batch can itself be huge). Within the source, the highest
-    * `versionCol` wins (a CDC batch may carry several updates for one
-    * key); target rows all carry version −∞ via the priority tag.
+    * a CDC batch can itself be huge). It is a SORT aggregate, not a hash
+    * aggregate: a struct buffer is not mutable, so Spark 4.1 plans
+    * SortAggregate(partial) → Sort → Exchange → Sort → SortAggregate.
+    * Within the source, the highest `versionCol` wins (a CDC batch may
+    * carry several updates for one key); target rows all carry version
+    * −∞ via the priority tag.
     * Determinism is ENFORCED, not assumed (round 13: the 10× rehearsal
     * corpus manufactured a (key, version) tie between two source rows
     * and the engines silently diverged on which row won): two source
@@ -149,7 +152,7 @@ object Relational {
     * no-join shape. */
   def mergeUpsert(target: DataFrame, source: DataFrame, keys: Seq[String],
       versionCol: Column): DataFrame = {
-    val dataCols = target.columns
+    val dataCols = target.columns.toSeq
     require(dataCols.forall(source.columns.contains),
       "source must carry every target column (extra version columns allowed)")
     val t2 = target.select(dataCols.map(col) :+
@@ -283,8 +286,9 @@ object Relational {
     * transaction log derives a change feed from day-N vs day-N+1 loads.
     *
     * Same single-shuffle shape as [[mergeUpsert]]: tagged union + one
-    * hash aggregate picking each side's row per key — no join operator,
-    * neither snapshot broadcast. Comparison is null-safe struct
+    * aggregate picking each side's row per key (a sort aggregate, like
+    * mergeUpsert's: struct buffers are not hash-aggregable) — no join
+    * operator, neither snapshot broadcast. Comparison is null-safe struct
     * equality over ALL non-key columns. Keys MUST be unique within
     * each snapshot (snapshot semantics); a duplicate key on either
     * side RAISES `graft.snapshotDiff: duplicate key` at execution
@@ -298,7 +302,7 @@ object Relational {
       keys: Seq[String]): DataFrame = {
     require(oldDf.columns.sameElements(newDf.columns),
       "snapshots must share one schema")
-    val dataCols = oldDf.columns
+    val dataCols = oldDf.columns.toSeq
     def tag(df: DataFrame, side: Int) =
       df.select(struct(dataCols.map(col): _*).as("__row") +:
         lit(side).as("__s") +: keys.map(col): _*)
@@ -335,7 +339,7 @@ object Relational {
     * CATCH-UP path: ship the (small) diff, not the (huge) snapshot. */
   def applyChanges(oldDf: DataFrame, changes: DataFrame,
       keys: Seq[String]): DataFrame = {
-    val dataCols = oldDf.columns
+    val dataCols = oldDf.columns.toSeq
     val upserts = changes.filter(col("change_type").isin("I", "U"))
       .select(dataCols.map(c => col(s"new.$c").as(c)): _*)
     val deletes = changes.filter(col("change_type") === "D")

@@ -469,7 +469,7 @@ object Similarity {
     val probedCells = probes.select(col("cell_id").cast("long"))
       .distinct().collect().map(_.getLong(0))
     val idx = spark.read.parquet(indexPath)
-      .filter(col("cell_id").isin(probedCells: _*))
+      .filter(col("cell_id").isin(probedCells.toSeq: _*))
     val scored = idx.join(broadcast(probes), Seq("cell_id"))
       .filter(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),

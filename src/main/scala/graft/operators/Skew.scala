@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew mitigation for hash-partitioned joins.
@@ -31,7 +31,7 @@ object Skew {
     require(buckets > 0)
     // deterministic per-row salt: hash of the whole big-side row
     val salted = big.withColumn("__salt",
-      pmod(hash(big.columns.map(col): _*), lit(buckets)))
+      pmod(hash(big.columns.toSeq.map(col): _*), lit(buckets)))
     val replicated = small.withColumn("__salt",
       explode(array((0 until buckets).map(lit): _*)))
     salted.join(replicated, Seq(key, "__salt")).drop("__salt")

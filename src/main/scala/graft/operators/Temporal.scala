@@ -47,8 +47,8 @@ object Temporal {
         right.join(broadcast(left.select(col(leftKey).as("__probe_k")).distinct()),
           col(rightKey) === col("__probe_k"), "left_semi")
       else right
-    val lStruct = struct(left.columns.map(col): _*)
-    val rStruct = struct(prunedRight.columns.map(col): _*)
+    val lStruct = struct(left.columns.toSeq.map(col): _*)
+    val rStruct = struct(prunedRight.columns.toSeq.map(col): _*)
     val lType = left.select(lStruct).schema.head.dataType
     val rType = prunedRight.select(rStruct).schema.head.dataType
     val l2 = left.select(col(leftKey).as("__k"), col(leftTime).as("__t"),
@@ -65,7 +65,7 @@ object Temporal {
     l2.unionByName(r2)
       .withColumn("__m", last(col("__r"), ignoreNulls = true).over(w))
       .filter(col("__s") === 1)
-      .select(left.columns.map(c => col(s"__l.$c").as(c)) ++
+      .select(left.columns.toSeq.map(c => col(s"__l.$c").as(c)) ++
         right.columns.map(c => col(s"__m.$c").as(rightPrefix + c)): _*)
   }
 
@@ -79,8 +79,8 @@ object Temporal {
       leftVal: String, rightVal: String, maxDiff: Double,
       leftPrefix: String = "a_", rightPrefix: String = "b_"): DataFrame = {
     require(maxDiff > 0, "maxDiff must be positive")
-    val lCols = left.columns.map(c => col(c).as(leftPrefix + c))
-    val rCols = right.columns.map(c => col(c).as(rightPrefix + c))
+    val lCols = left.columns.toSeq.map(c => col(c).as(leftPrefix + c))
+    val rCols = right.columns.toSeq.map(c => col(c).as(rightPrefix + c))
     val l2 = left.select(lCols: _*)
       .withColumn("__bucket", floor(col(leftPrefix + leftVal) / maxDiff))
     val r2 = right.select(rCols: _*)
@@ -529,7 +529,6 @@ object Temporal {
   def theilSenTrend(df: DataFrame, keyCol: String, tsCol: String,
       idCol: String, valCol: Column, maxEvents: Int = 128): DataFrame = {
     require(maxEvents >= 2, "need at least 2 events for a slope")
-    import org.apache.spark.sql.types.LongType
     val capped = df
       .filter(col(keyCol).isNotNull && col(tsCol).isNotNull &&
         valCol.isNotNull)

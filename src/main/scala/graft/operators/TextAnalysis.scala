@@ -1856,6 +1856,119 @@ object TextAnalysis {
         llrOf(lit(0L), lit(0L)).as("default_llr"))
   }
 
+  /** Bucketed token hashes `pmod(md5Long(token), B)` over [[tokens]] —
+    * the one token-hash transform of the hashed n-gram LMs, shared by
+    * the batch n-gram table and the stream gates. Bind it to a REAL
+    * column before any per-position HOF (the hoisting contract: each
+    * token is md5'd once, not once per n-gram). */
+  def tokenBuckets(text: Column, buckets: Int): Column =
+    transform(tokens(text), t => pmod(Hashing.hexLong(t), lit(buckets.toLong)))
+
+  /** Row-count column of an order-n LM score: the number of scored
+    * n-grams per doc. */
+  private[graft] val NgramCountCol =
+    Map(2 -> "n_pairs", 3 -> "n_triples", 4 -> "n_quads", 5 -> "n_quints")
+
+  /** The bucket columns `b1..bn` and the count column `c12…n` of an
+    * order-n [[lmTrain]] model. */
+  private def bucketCols(order: Int): Seq[String] = (1 to order).map(i => s"b$i")
+  private def countCol(order: Int): String = "c" + (1 to order).mkString
+
+  private[graft] def requireOrder(order: Int): Unit =
+    if (order < 2 || order > 5) throw new IllegalArgumentException(
+      s"n-gram order $order is outside 2..5: the exact-integer long-bound " +
+        "contract of TextAnalysis.lmPerplexityBucketsKN covers orders 2 to 5")
+
+  /** Per-key hashed n-gram bucket multiset over a `__t`-text frame —
+    * `(keys…, b1..bn, m)`, the shared sufficient statistic of every LM
+    * here (the trained model and the scored corpus alike). Docs under
+    * n tokens contribute nothing. */
+  private def ngramTable(shaped: DataFrame, keys: Seq[String], order: Int,
+      buckets: Int): DataFrame = {
+    val bs = bucketCols(order)
+    shaped
+      .withColumn("__h", tokenBuckets(col("__t"), buckets))
+      .select(keys.map(col) :+ explode(when(size(col("__h")) >= order,
+        transform(sequence(lit(0), size(col("__h")) - order),
+          i => struct(bs.zipWithIndex.map { case (b, j) =>
+            element_at(col("__h"), i + (j + 1)).as(b) }: _*)))
+        .otherwise(array().cast(
+          bs.map(_ + ":bigint").mkString("array<struct<", ",", ">>"))))
+        .as("__p"): _*)
+      .select(keys.map(col) ++ bs.map(b => col(s"__p.$b")): _*)
+      .groupBy((keys ++ bs).map(col): _*)
+      .agg(count(lit(1)).as("m"))
+  }
+
+  /** The scored corpus as per-doc n-gram multisets on an up-front doc
+    * hash layout, so every later per-doc aggregate is exchange-free. */
+  private def docNgrams(df: DataFrame, idCol: String, text: Column,
+      order: Int, buckets: Int): DataFrame =
+    ngramTable(df.select(col(idCol).as("doc"), text.as("__t"))
+      .filter(col("__t").isNotNull)
+      .repartition(df.sparkSession.sparkContext.defaultParallelism,
+        col("doc")), Seq("doc"), order, buckets)
+
+  /** CCNet's keep/drop cut over a doc-level score table: `ppl_bucket`
+    * head/middle/tail terciles ordered by the exact integer mean, with
+    * (nll, doc) tie-breaks — fully deterministic, hash-matchable. The
+    * window runs over one row per doc (the statistics-sized class, the
+    * q121 percent-rank bound). */
+  private def pplTerciles(scored: DataFrame): DataFrame = {
+    val tercile = ntile(3).over(
+      Window.orderBy(col("mean_micro"), col("nll_micro"), col("doc")))
+    scored.withColumn("ppl_bucket",
+      when(tercile === 1, lit("head"))
+        .when(tercile === 2, lit("middle"))
+        .otherwise(lit("tail")))
+  }
+
+  /** The deployable half of the hashed n-gram LMs (the nbTrain
+    * pattern): train on a reference corpus once and export the model AS
+    * DATA — observed n-gram counts `(b1..bn, c12…n)`, e.g.
+    * `(b1, b2, c12)` at order 2, the model's complete sufficient
+    * statistic (margins, smoothing, discounts and continuation counts
+    * all derive from it) — so a stream
+    * ([[graft.streaming.CurationStream.lmQualityGate]],
+    * [[graft.streaming.CurationStream.lmQualityGateKN]]) or another
+    * engine scores without touching the training corpus. Same
+    * bucketing, same counts: a batch-scored doc and a stream-scored doc
+    * agree bit-for-bit (StreamingSpec parity). The add-one scorers use
+    * order 2; the interpolated-KN chain takes orders 2..5 with the
+    * bucket counts of [[lmPerplexityBucketsKN]]'s long-bound contract. */
+  def lmTrain(reference: DataFrame, refText: Column, order: Int = 2,
+      buckets: Int = 256): DataFrame = {
+    requireOrder(order)
+    require(buckets >= 2, "need at least 2 hash buckets")
+    ngramTable(Parallelism.ensure(
+      reference.select(refText.as("__t")).filter(col("__t").isNotNull)),
+      Nil, order, buckets)
+      .withColumnRenamed("m", countCol(order))
+  }
+
+  /** An order-2 [[lmTrain]] model packed into ONE broadcastable row for
+    * add-one scoring ([[addOneNll]]): pair counts keyed b1·B+b2 (map
+    * `pm`) and prefix totals keyed b1 (map `c1`). */
+  private[graft] def addOnePack(model: DataFrame, buckets: Int, pm: String,
+      c1: String): DataFrame =
+    model.groupBy().agg(map_from_entries(collect_list(struct(
+        col("b1") * buckets + col("b2"), col("c12")))).as(pm))
+      .crossJoin(model.groupBy("b1").agg(sum(col("c12")).as("c1"))
+        .groupBy().agg(map_from_entries(collect_list(struct(
+          col("b1"), col("c1")))).as(c1)))
+
+  /** Add-one per-pair negative log probability in integer micro-nats,
+    * `floor(ln((c1+B)/(c12+1))·1e6 + 0.5)`, over an [[addOnePack]] row:
+    * one ln of a ratio of exactly-represented integers, ≥ 0 because
+    * c1 ≥ c12. */
+  private[graft] def addOneNll(b1: Column, b2: Column, buckets: Int,
+      pm: String, c1: String): Column =
+    floor(log(
+      (coalesce(element_at(col(c1), b1), lit(0L)) + lit(buckets.toLong))
+        .cast(DoubleType) /
+        (coalesce(element_at(col(pm), b1 * buckets + b2), lit(0L)) +
+          lit(1L)).cast(DoubleType)) * 1e6 + 0.5).cast(LongType)
+
   /** CCNet-style LM perplexity bucketing (Wenzek et al. 2020 §3.3,
     * public): a hashed-bigram add-one language model trained on a
     * reference corpus scores every document by mean negative log
@@ -1865,10 +1978,8 @@ object TextAnalysis {
     * `p(w2|w1) ≈ (c12+1)/(c1+B)` over B² hash cells, so the whole
     * model is two broadcastable count tables and the per-doc score
     * `nll(d) = Σ_pairs floor(ln((c1+B)/(c12+1)) · 1e6 + 0.5)` is an
-    * exact long sum of non-negative micro-nats (every per-pair term is
-    * ≥ 0 because c1 ≥ c12). The tercile cut orders docs by the exact
-    * integer mean `nll div n` with (nll, doc) tie-breaks — fully
-    * deterministic, hash-matchable.
+    * exact long sum of non-negative micro-nats. The tercile cut orders
+    * docs by the exact integer mean `nll div n` ([[pplTerciles]]).
     *
     * Not [[bigramLmScore]]: q74's LM is self-trained on the scored
     * corpus over EXACT token bigrams (every scored transition exists —
@@ -1877,1033 +1988,170 @@ object TextAnalysis {
     * the smoothed unseen-pair penalty IS the signal — and the tercile
     * cut is CCNet's keep/drop decision.
     *
-    * Shape: reference and corpus each explode once into bigram-bucket
-    * pairs; the ≤B²-row pair model (+ B-row prefix margins, derived
-    * from it) broadcasts onto the per-doc pair counts — one
-    * corpus-sized shuffle on (doc, b1, b2). The final `ntile` window
-    * runs over the doc-level score table (one row per doc — the
-    * statistics-sized class, same bound as the q121 percent-rank).
-    * Docs with <2 tokens have no bigrams and are dropped (mirrored in
-    * the oracle). */
-  /** Bucketed adjacent-bigram count table over a `__t`-text frame —
-    * the shared sufficient statistic of [[lmPerplexityBuckets]] and
-    * [[lmTrain]]. Token hashes land in a REAL column before the pair
-    * HOF (the hoisting contract: each token is md5'd once, not once
-    * per pair). */
-  private def bigramBucketPairs(shaped: DataFrame, keys: Seq[String],
-      buckets: Int): DataFrame =
-    shaped
-      .withColumn("__h",
-        transform(tokens(col("__t")),
-          t => pmod(Hashing.hexLong(t), lit(buckets.toLong))))
-      .select(keys.map(col) :+ explode(when(size(col("__h")) >= 2,
-        transform(sequence(lit(0), size(col("__h")) - 2),
-          i => struct(element_at(col("__h"), i + 1).as("b1"),
-            element_at(col("__h"), i + 2).as("b2"))))
-        .otherwise(array().cast("array<struct<b1:bigint,b2:bigint>>")))
-        .as("__p"): _*)
-      .select(keys.map(col) :+ col("__p.b1") :+ col("__p.b2"): _*)
-      .groupBy((keys ++ Seq("b1", "b2")).map(col): _*)
-      .agg(count(lit(1)).as("m"))
-
-  /** The deployable half of [[lmPerplexityBuckets]] (the nbTrain
-    * pattern): train the hashed-bigram LM on a reference corpus once
-    * and export it AS DATA — `(b1, b2, c12)` observed-pair counts, the
-    * model's complete sufficient statistic (margins and smoothing
-    * derive from it) — so a stream
-    * ([[graft.streaming.CurationStream.lmQualityGate]]) or another
-    * engine can score without touching the training corpus. Same
-    * bucketing, same counts: a batch-scored doc and a stream-scored
-    * doc agree bit-for-bit (StreamingSpec parity). */
-  def lmTrain(reference: DataFrame, refText: Column,
-      buckets: Int = 256): DataFrame = {
-    require(buckets >= 2, "need at least 2 hash buckets")
-    bigramBucketPairs(Parallelism.ensure(
-      reference.select(refText.as("__t")).filter(col("__t").isNotNull)),
-      Nil, buckets)
-      .withColumnRenamed("m", "c12")
-  }
-
+    * Shape: the reference pass runs ONCE into a checkpointed ≤B²-row
+    * pair table, and the model — pair counts AND the b1 margins derived
+    * from them — packs into ONE broadcast row as maps
+    * ([[addOnePack]]; separate margin/model broadcasts each re-ran the
+    * reference explode at runtime, the q131 broadcast-job reuse
+    * measurement). The per-pair nll is then a pure lookup, and the doc
+    * aggregate is exchange-free on the up-front doc hash layout. Docs
+    * with <2 tokens have no bigrams and are dropped (mirrored in the
+    * oracle). */
   def lmPerplexityBuckets(df: DataFrame, idCol: String, text: Column,
       reference: DataFrame, refText: Column,
       buckets: Int = 256): DataFrame = {
     require(buckets >= 2, "need at least 2 hash buckets")
-    def pairTable(shaped: DataFrame, keys: Seq[String]): DataFrame =
-      bigramBucketPairs(shaped, keys, buckets)
-    // the reference pass runs ONCE into a checkpointed ≤B²-row pair
-    // table (tiny — eager local checkpoint; partitioning irrelevant,
-    // both consumers are full aggregates), and the model — pair counts
-    // AND the b1 margins derived from them — packs into ONE broadcast
-    // row as maps keyed b1·B+b2 / b1. The former separate
-    // margin/model broadcasts each re-ran the reference explode at
-    // runtime (the q131 broadcast-job reuse measurement). The per-pair
-    // nll is then a pure lookup, and the doc aggregate is
-    // exchange-free on the up-front doc hash layout. Same smoothing,
-    // same quantizer — oracle unchanged.
-    val model = materialize(lmTrain(reference, refText, buckets))._1
-    val packed = broadcast(model
-      .groupBy().agg(map_from_entries(collect_list(struct(
-        col("b1") * buckets + col("b2"), col("c12")))).as("__pm"))
-      .crossJoin(model.groupBy("b1").agg(sum(col("c12")).as("c1"))
-        .groupBy().agg(map_from_entries(collect_list(struct(
-          col("b1"), col("c1")))).as("__c1"))))
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val perDoc = pairTable(
-      df.select(col(idCol).as("doc"), text.as("__t"))
-        .filter(col("__t").isNotNull)
-        .repartition(par, col("doc")), Seq("doc"))
-    val scored = perDoc
-      .crossJoin(packed)
-      .withColumn("nll", floor(log(
-        (coalesce(element_at(col("__c1"), col("b1")), lit(0L)) +
-          lit(buckets.toLong)).cast(DoubleType) /
-          (coalesce(element_at(col("__pm"),
-            col("b1") * buckets + col("b2")), lit(0L)) + lit(1L))
-            .cast(DoubleType)) * 1e6 + 0.5)
-        .cast(LongType))
+    val model = materialize(lmTrain(reference, refText, 2, buckets))._1
+    pplTerciles(docNgrams(df, idCol, text, 2, buckets)
+      .crossJoin(broadcast(addOnePack(model, buckets, "__pm", "__c1")))
+      .withColumn("nll",
+        addOneNll(col("b1"), col("b2"), buckets, "__pm", "__c1"))
       .groupBy("doc")
       .agg(sum(col("m")).as("n_pairs"),
         sum(col("m") * col("nll")).as("nll_micro"))
-      .withColumn("mean_micro",
-        expr("nll_micro div n_pairs"))
-    val tercile = ntile(3).over(org.apache.spark.sql.expressions.Window
-      .orderBy(col("mean_micro"), col("nll_micro"), col("doc")))
-    scored.withColumn("ppl_bucket",
-      when(tercile === 1, lit("head"))
-        .when(tercile === 2, lit("middle"))
-        .otherwise(lit("tail")))
+      .withColumn("mean_micro", expr("nll_micro div n_pairs")))
   }
 
-  /** Pack an [[lmTrain]] pair-count model for INTERPOLATED
-    * absolute-discount scoring ([[interpNll]]): one broadcast row
-    * holding five derived statistics — pair counts (`__pm`, keyed
-    * b1·B+b2), prefix totals (`__c1`), distinct-successor counts
-    * (`__n1`, the λ(b1) numerator), distinct-predecessor counts
-    * (`__ct`, the Kneser-Ney continuation evidence), and the distinct
-    * pair total (`__np`). Everything derives from the exported
-    * `(b1,b2,c12)` table, so a stream scores with the SAME artifact the
-    * add-one gate uses. ≤ B² + 3B + 1 values — statistics-sized. */
-  def lmPackInterp(model: DataFrame, buckets: Int): DataFrame =
-    broadcast(model
-      .groupBy().agg(map_from_entries(collect_list(struct(
-        col("b1") * buckets + col("b2"), col("c12")))).as("__pm"))
-      .crossJoin(model.groupBy("b1")
-        .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n1"))
-        .groupBy().agg(
-          map_from_entries(collect_list(struct(col("b1"), col("c1"))))
-            .as("__c1"),
-          map_from_entries(collect_list(struct(col("b1"), col("n1"))))
-            .as("__n1")))
-      .crossJoin(model.groupBy("b2").agg(count(lit(1)).as("ct"))
-        .groupBy().agg(map_from_entries(collect_list(struct(
-          col("b2"), col("ct")))).as("__ct")))
-      .crossJoin(model.groupBy().agg(count(lit(1)).as("__np"))))
+  /** One level of the interpolated-KN chain over the last k bucket
+    * columns `keys`: its n-gram table (`__c<k>` — raw counts at the top
+    * level, Kneser-Ney continuation counts N1+(·w…) below it) and the
+    * table's prefix margin keyed by `keys.init` (`__s<k>` = Σ counts,
+    * `__n<k>` = distinct successors, the λ numerator). */
+  private[graft] case class KnLevel(keys: Seq[String], table: DataFrame,
+      margin: DataFrame)
 
-  /** Per-pair negative log probability (integer micro-nats) of the
-    * interpolated absolute-discount bigram over an [[lmPackInterp]]
-    * row. Ney-style absolute discounting with the Kneser-Ney
-    * continuation lower order (Ney, Essen & Kneser 1994; Kneser & Ney
-    * 1995 — public; CCNet's KenLM applies modified KN at order 5):
+  /** The per-level statistics of an order-n [[lmTrain]] model, top level
+    * first, plus the continuation unigram (`__u`, distinct predecessors
+    * of b_n among the bigram level's pairs) and `__np` (the bigram
+    * level's distinct pair total). Each level below the top is the
+    * distinct-predecessor count of the level above, so the whole chain
+    * derives from the one exported table. `pin` places each derived
+    * continuation table: the batch scorer checkpoints it (the cascade —
+    * every margin is then one statistics-sized aggregate over a cached
+    * table), the stream gate leaves it lazy inside its one packed row. */
+  private[graft] def knLevels(model: DataFrame, order: Int,
+      pin: DataFrame => DataFrame): (Seq[KnLevel], DataFrame, DataFrame) = {
+    val bs = bucketCols(order)
+    val tables = (order - 1 to 2 by -1).scanLeft(
+        model.withColumnRenamed(countCol(order), s"__c$order")) {
+      (above, k) => pin(above.groupBy(bs.takeRight(k).map(col): _*)
+        .agg(count(lit(1)).as(s"__c$k")))
+    }
+    val levels = tables.zip(order to 2 by -1).map { case (t, k) =>
+      val keys = bs.takeRight(k)
+      KnLevel(keys, t, t.groupBy(keys.init.map(col): _*)
+        .agg(sum(col(s"__c$k")).as(s"__s$k"), count(lit(1)).as(s"__n$k")))
+    }
+    (levels, tables.last.groupBy(bs.last).agg(count(lit(1)).as("__u")),
+      tables.last.groupBy().agg(count(lit(1)).as("__np")))
+  }
+
+  /** Per-n-gram negative log probability (integer micro-nats) of the
+    * interpolated absolute-discount chain with Kneser-Ney continuation
+    * lower orders (Ney, Essen & Kneser 1994; Kneser & Ney 1995 —
+    * public; CCNet's KenLM applies modified KN at order 5). With
+    * D = 3/4, for the levels k = n..2 of [[knLevels]]:
     *
-    *   p(b2|b1) = max(c12 − D, 0)/c1 + D·N1+(b1·)/c1 · p_cont(b2)
-    *   p_cont(b2) = (N1+(·b2) + 1) / (N_pairs + B)      (add-one so
-    *     unseen successors keep non-zero mass and Σ p_cont = 1)
+    *   p_k(w|ctx) = max(c_k − D, 0)/s_k + D·n_k/s_k · p_{k−1}(w|ctx')
+    *   p_1(w)     = (u + 1) / (N_p + B)   (add-one, so unseen
+    *     successors keep non-zero mass and Σ p_1 = 1)
     *
-    * with D = 3/4 (the standard discount; kept RATIONAL so the whole
-    * probability is one integer-over-integer ratio). A b1 the
-    * reference never produced (c1 = 0) backs off to p_cont alone.
-    * Multiplying through by 4·c1·(Np+B):
+    * where c_k is the level's count of the n-gram's last k buckets,
+    * s_k/n_k its prefix margin; a prefix the level never saw (s_k = 0)
+    * backs off to the level below alone. D stays RATIONAL, so
+    * multiplying through keeps the whole probability one
+    * integer-over-integer ratio, folded bottom-up with Z = N_p + B:
     *
-    *   p = [max(4·c12−3, 0)·(Np+B) + 3·N1+(b1·)·(N1+(·b2)+1)]
-    *        / (4·c1·(Np+B))
+    *   a_1 = u + 1,  d_1 = Z
+    *   a_k = max(4·c_k − 3, 0)·d_{k−1} + 3·n_k·a_{k−1},  d_k = 4·s_k·d_{k−1}
+    *     (a_k = a_{k−1}, d_k = d_{k−1} when s_k = 0)
+    *   nll = floor(ln(d_n / a_n)·1e6 + 0.5)
     *
-    * — numerator and denominator are exact integer expressions, so
-    * `nll = floor(ln(den/num)·1e6 + 0.5)` is the same micro-nat
-    * quantization contract as [[lmPerplexityBuckets]] (ln of one
-    * double ratio of exactly-represented integers; den ≥ num because
-    * the discounted mass telescopes to exactly 1 over b2, so every
-    * term is ≥ 0). */
-  def interpNll(b1: Column, b2: Column, buckets: Int): Column = {
-    val c1 = coalesce(element_at(col("__c1"), b1), lit(0L))
-    val n1 = coalesce(element_at(col("__n1"), b1), lit(0L))
-    val ct = coalesce(element_at(col("__ct"), b2), lit(0L))
-    val c12 = coalesce(element_at(col("__pm"), b1 * buckets + b2), lit(0L))
-    val npb = col("__np") + lit(buckets.toLong)
-    val num = when(c1 > 0L,
-      greatest(lit(4L) * c12 - lit(3L), lit(0L)) * npb +
-        lit(3L) * n1 * (ct + lit(1L)))
-      .otherwise(ct + lit(1L))
-    val den = when(c1 > 0L, lit(4L) * c1 * npb).otherwise(npb)
+    * — the micro-nat quantizer of [[lmPerplexityBuckets]]; each level's
+    * discounted mass telescopes to exactly 1, so d_n ≥ a_n and nll ≥ 0.
+    * `levels` holds each level's (c_k, s_k, n_k) bottom-up (k = 2..n),
+    * already coalesced to 0 where unseen. */
+  private[graft] def knNll(levels: Seq[(Column, Column, Column)],
+      unigram: Column, np: Column, buckets: Int): Column = {
+    val (num, den) = levels.foldLeft(
+        (unigram + lit(1L), np + lit(buckets.toLong))) {
+      case ((a, d), (c, s, n)) =>
+        (when(s > 0L, greatest(lit(4L) * c - lit(3L), lit(0L)) * d +
+          lit(3L) * n * a).otherwise(a),
+          when(s > 0L, lit(4L) * s * d).otherwise(d))
+    }
     floor(log(den.cast(DoubleType) / num.cast(DoubleType)) * 1e6 + 0.5)
       .cast(LongType)
   }
 
-  /** [[lmPerplexityBuckets]] with interpolated Kneser-Ney-style
-    * smoothing in place of add-one — the fidelity upgrade toward
-    * CCNet's actual KenLM filter (Wenzek et al. 2020 §3.3): add-one
-    * flattens the head of the distribution (every unseen pair costs
-    * ln(c1+B), however predictive the prefix), while absolute
-    * discounting preserves observed mass and the continuation term
-    * scores unseen pairs by how promiscuous their successor is —
-    * the KN insight. Same shape, same quantizer, same tercile cut;
-    * only the per-pair probability changes. */
-  def lmPerplexityBucketsInterp(df: DataFrame, idCol: String, text: Column,
-      reference: DataFrame, refText: Column,
-      buckets: Int = 256): DataFrame = {
-    require(buckets >= 2, "need at least 2 hash buckets")
-    // same lifecycle as lmPerplexityBuckets: ONE checkpointed reference
-    // pass; the four margin tables all derive from the ≤B²-row model,
-    // so deriving them costs B²-bounded work, never a corpus re-read;
-    // the packed model crosses as ONE broadcast row
-    val model = materialize(lmTrain(reference, refText, buckets))._1
-    val packed = lmPackInterp(model, buckets)
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val perDoc = bigramBucketPairs(
-      df.select(col(idCol).as("doc"), text.as("__t"))
-        .filter(col("__t").isNotNull)
-        .repartition(par, col("doc")), Seq("doc"), buckets)
-    val scored = perDoc
-      .crossJoin(packed)
-      .withColumn("nll", interpNll(col("b1"), col("b2"), buckets))
-      .groupBy("doc")
-      .agg(sum(col("m")).as("n_pairs"),
-        sum(col("m") * col("nll")).as("nll_micro"))
-      .withColumn("mean_micro", expr("nll_micro div n_pairs"))
-    val tercile = ntile(3).over(org.apache.spark.sql.expressions.Window
-      .orderBy(col("mean_micro"), col("nll_micro"), col("doc")))
-    scored.withColumn("ppl_bucket",
-      when(tercile === 1, lit("head"))
-        .when(tercile === 2, lit("middle"))
-        .otherwise(lit("tail")))
-  }
-
-  /** Per-key hashed trigram-bucket triple multiset —
-    * [[bigramBucketPairs]] one order up: (b1, b2, b3, m) per key, docs
-    * under 3 tokens contribute nothing. */
-  private def trigramBucketTriples(shaped: DataFrame, keys: Seq[String],
-      buckets: Int): DataFrame =
-    shaped
-      .withColumn("__h",
-        transform(tokens(col("__t")),
-          t => pmod(Hashing.hexLong(t), lit(buckets.toLong))))
-      .select(keys.map(col) :+ explode(when(size(col("__h")) >= 3,
-        transform(sequence(lit(0), size(col("__h")) - 3),
-          i => struct(element_at(col("__h"), i + 1).as("b1"),
-            element_at(col("__h"), i + 2).as("b2"),
-            element_at(col("__h"), i + 3).as("b3"))))
-        .otherwise(array()
-          .cast("array<struct<b1:bigint,b2:bigint,b3:bigint>>")))
-        .as("__p"): _*)
-      .select(keys.map(col) :+ col("__p.b1") :+ col("__p.b2")
-        :+ col("__p.b3"): _*)
-      .groupBy((keys ++ Seq("b1", "b2", "b3")).map(col): _*)
-      .agg(count(lit(1)).as("m"))
-
-  /** [[lmTrain]] one order up: export the hashed-TRIGRAM model as data —
-    * `(b1, b2, b3, c123)` observed-triple counts, the complete
-    * sufficient statistic of the order-3 interpolated-KN chain (every
-    * margin, discount and continuation count below derives from it).
-    * Wenzek et al. 2020 filter with an order-5 KenLM; trigram is the
-    * first order where the KN recursion actually CHAINS (highest order
-    * backs off into a continuation-count middle order which backs off
-    * into the continuation unigram), so it exercises the full
-    * model shape the 5-gram uses. */
-  def lmTrainTrigram(reference: DataFrame, refText: Column,
-      buckets: Int = 256): DataFrame = {
-    require(buckets >= 2, "need at least 2 hash buckets")
-    trigramBucketTriples(Parallelism.ensure(
-      reference.select(refText.as("__t")).filter(col("__t").isNotNull)),
-      Nil, buckets)
-      .withColumnRenamed("m", "c123")
-  }
-
-  /** Pack an [[lmTrainTrigram]] model for [[interpNllTri]]: one
-    * broadcast row of seven derived statistics — triple counts
-    * (`__tm`, keyed (b1·B+b2)·B+b3), prefix totals and
-    * distinct-successor counts (`__c12`/`__n12`, keyed b1·B+b2), the
-    * CONTINUATION bigram table N1+(·w2w3) (`__cp`, keyed b2·B+b3, the
-    * Kneser-Ney middle order: how many distinct predecessors each
-    * (w2,w3) has, not how often it occurs), its margins
-    * (`__cp2`/`__n2`, keyed b2), continuation-unigram evidence
-    * (`__ct3`, keyed b3 — distinct w2 preceding w3 among continuation
-    * bigrams), and the distinct continuation-bigram total (`__np`).
-    * ≤ B³ observed keys worst case, B²-bounded margins —
-    * statistics-sized, never corpus-sized. */
-  def lmPackInterpTri(model: DataFrame, buckets: Int): DataFrame = {
-    val b = buckets
-    val cont = model.groupBy("b2", "b3").agg(count(lit(1)).as("cp"))
-    broadcast(model
-      .groupBy().agg(map_from_entries(collect_list(struct(
-        (col("b1") * b + col("b2")) * b + col("b3"), col("c123"))))
-        .as("__tm"))
-      .crossJoin(model.groupBy("b1", "b2")
-        .agg(sum(col("c123")).as("c12"), count(lit(1)).as("n12"))
-        .groupBy().agg(
-          map_from_entries(collect_list(struct(
-            col("b1") * b + col("b2"), col("c12")))).as("__c12"),
-          map_from_entries(collect_list(struct(
-            col("b1") * b + col("b2"), col("n12")))).as("__n12")))
-      .crossJoin(cont.groupBy().agg(map_from_entries(collect_list(struct(
-        col("b2") * b + col("b3"), col("cp")))).as("__cp")))
-      .crossJoin(cont.groupBy("b2")
-        .agg(sum(col("cp")).as("cp2"), count(lit(1)).as("n2"))
-        .groupBy().agg(
-          map_from_entries(collect_list(struct(col("b2"), col("cp2"))))
-            .as("__cp2"),
-          map_from_entries(collect_list(struct(col("b2"), col("n2"))))
-            .as("__n2")))
-      .crossJoin(cont.groupBy("b3").agg(count(lit(1)).as("ct3"))
-        .groupBy().agg(map_from_entries(collect_list(struct(
-          col("b3"), col("ct3")))).as("__ct3")))
-      .crossJoin(cont.groupBy().agg(count(lit(1)).as("__np"))))
-  }
-
-  /** Per-triple negative log probability (integer micro-nats) of the
-    * order-3 interpolated absolute-discount chain over an
-    * [[lmPackInterpTri]] row — [[interpNll]]'s recursion unrolled one
-    * level, D = 3/4 rational at BOTH orders so the whole probability
-    * stays one integer-over-integer ratio:
+  /** [[lmPerplexityBuckets]] with interpolated Kneser-Ney smoothing at
+    * any order n ∈ 2..5 — the fidelity upgrade toward CCNet's KenLM
+    * filter (Wenzek et al. 2020 §3.3; n = 5 is the published order):
+    * add-one flattens the head of the distribution (every unseen pair
+    * costs ln(c1+B), however predictive the prefix), while absolute
+    * discounting preserves observed mass and the continuation levels
+    * score unseen n-grams by how promiscuous their suffix is — the KN
+    * insight ([[knNll]]). Same lifecycle, quantizer and tercile cut;
+    * the per-doc count column is `n_pairs`, `n_triples`, `n_quads` or
+    * `n_quints`, and docs under n tokens score nothing and are dropped
+    * (a mean over nothing is not "head").
     *
-    *   p3(w3|w1w2) = max(c123−D,0)/c12 + D·N1+(w1w2·)/c12 · p2(w3|w2)
-    *   p2(w3|w2)   = max(cp−D,0)/cp2  + D·N1+(w2·)/cp2  · p1(w3)
-    *   p1(w3)      = (ct3 + 1) / (Np + B)
+    * Long-bound contract. d_n = 4^(n−1)·s_n·Π_{k<n} s_k·Z with every
+    * lower-level margin s_k ≤ B² and Z ≤ B² + B, so the exact-integer
+    * chain overflows nothing while the top-level prefix total s_n stays
+    * under the bound below; shard the reference beyond it (a per-shard
+    * model is still one table). The bucket count is therefore a
+    * function of the order — one factor of B² per order up:
     *
-    * with the MIDDLE order over Kneser-Ney continuation counts
-    * (cp = N1+(·w2w3), cp2 = Σ_w3 cp) and add-one on the continuation
-    * unigram. Unseen prefix c12 = 0 backs off to p2; unseen context
-    * cp2 = 0 backs off to p1 (the full chain). Multiplying through:
+    * {{{
+    * order  B    d_n ≤            prefix bound (tokens)   corpus-wide (uniform hashing)
+    *   2    256  s_n·2.6·10⁵      c1    ≲ 3·10¹³          ≈ 9·10¹⁵ over B
+    *   3    256  s_n·2.8·10¹¹     c12   ≲ 3·10⁷           ≈ 10¹¹  over B²
+    *   4    64   s_n·4.5·10¹²     c123  ≲ 2·10⁶           ≈ 5·10¹¹ over B³ = 262 144
+    *   5    32   s_n·2.9·10¹⁴     c1234 ≲ 3·10⁴           ≈ 3·10¹⁰ over B⁴ = 1 048 576
+    * }}}
     *
-    *   A2 / D2  with A2 = max(4·cp−3,0)·Z + 3·n2·(ct3+1), D2 = 4·cp2·Z
-    *   p3 = [max(4·c123−3,0)·D2 + 3·n12·A2] / (4·c12·D2),  Z = Np+B
+    * One bucket count up collapses the bound: order 4 at B = 256 caps a
+    * prefix at ~500 tokens, order 5 at B = 64 at ~128. Orders outside
+    * 2..5 fail with an `IllegalArgumentException`.
     *
-    * — every factor an exact long; each level's discounted mass
-    * telescopes to exactly 1 so den ≥ num and nll ≥ 0. Long-bound
-    * contract: den ≤ 16·c12·cp2·Z ≤ c12·≈2.8e11 at B = 256, so
-    * c12 ≲ 3·10⁷ tokens per (b1,b2) bucket pair overflows nothing —
-    * ≈10¹¹ tokens corpus-wide at uniform hashing; shard the reference
-    * beyond that (the q192/q194 staged-division discipline applies if
-    * a single degenerate bucket concentrates the corpus). */
-  def interpNllTri(b1: Column, b2: Column, b3: Column,
-      buckets: Int): Column = {
-    val bl = lit(buckets.toLong)
-    val k12 = b1 * bl + b2
-    val k23 = b2 * bl + b3
-    val c123 = coalesce(element_at(col("__tm"), k12 * bl + b3), lit(0L))
-    val c12 = coalesce(element_at(col("__c12"), k12), lit(0L))
-    val n12 = coalesce(element_at(col("__n12"), k12), lit(0L))
-    val cp = coalesce(element_at(col("__cp"), k23), lit(0L))
-    val cp2 = coalesce(element_at(col("__cp2"), b2), lit(0L))
-    val n2 = coalesce(element_at(col("__n2"), b2), lit(0L))
-    val ct3 = coalesce(element_at(col("__ct3"), b3), lit(0L))
-    val z = col("__np") + bl
-    val a2 = when(cp2 > 0L,
-      greatest(lit(4L) * cp - lit(3L), lit(0L)) * z +
-        lit(3L) * n2 * (ct3 + lit(1L)))
-      .otherwise(ct3 + lit(1L))
-    val d2 = when(cp2 > 0L, lit(4L) * cp2 * z).otherwise(z)
-    val num = when(c12 > 0L,
-      greatest(lit(4L) * c123 - lit(3L), lit(0L)) * d2 +
-        lit(3L) * n12 * a2)
-      .otherwise(a2)
-    val den = when(c12 > 0L, lit(4L) * c12 * d2).otherwise(d2)
-    floor(log(den.cast(DoubleType) / num.cast(DoubleType)) * 1e6 + 0.5)
-      .cast(LongType)
-  }
-
-  /** [[lmPerplexityBucketsInterp]] one order up — the trigram
-    * interpolated-KN perplexity terciles: same lifecycle (ONE
-    * checkpointed reference pass into the ≤B³-row triple table, margins
-    * derived model-side), same micro-nat quantizer, same tercile cut;
-    * `n_triples` replaces `n_pairs` and docs under 3 tokens score no
-    * triples (n_triples = 0 rows are excluded — a mean over nothing is
-    * not "head").
-    *
-    * Scoring shape: five size-gated BROADCAST HASH JOINS against the
-    * statistics-sized margin tables (triples, prefixes, continuation
-    * bigrams + margins, continuation unigrams) — O(1) hashed probe per
-    * corpus triple inside whole-stage codegen, zero extra corpus
-    * exchanges (broadcast joins preserve the per-doc partitioning).
-    * NOT the broadcast-row map form the streaming gate uses
-    * ([[lmPackInterpTri]]): Catalyst `element_at` on a MapType literal
-    * is a LINEAR scan, and at 16.6k model entries × 7 lookups it
-    * measured 10.5 s task-sum at sf0.1 — ~12× the hash-join form —
-    * with O(B³)-per-row worst case at model saturation, which is the
-    * wrong asymptotic for a 100 TB corpus pass. (The stream keeps the
-    * map fold because each micro-batch row must score standalone
-    * against one broadcast artifact — bounded docs, bounded cost.)
-    * Broadcast bound: the triple table saturates at B³ rows
-    * (≈16.7M at B = 256, ~hundreds of MB) — at that corpus scale raise
-    * the autoBroadcast threshold or let the planner fall back to a
-    * shuffle join; every margin is ≤ B². */
-  def lmPerplexityBucketsTrigram(df: DataFrame, idCol: String,
-      text: Column, reference: DataFrame, refText: Column,
-      buckets: Int = 256): DataFrame = {
-    require(buckets >= 2, "need at least 2 hash buckets")
-    val model = materialize(lmTrainTrigram(reference, refText, buckets))._1
-    // all five margin tables in ONE checkpointed union job. NOTE: this
-    // collapse WON here (trigram: 5 small margins of a B³-bounded model,
-    // measured faster than the lazy per-branch form, round 12) but LOST
-    // for quad/quintgram (round 13: 2.5× slower — those branches cannot
-    // share the model-sized first aggregate, and column pruning defeats
-    // exchange-reuse canonicality), so quad/quint keep the checkpointed
-    // cascade. The union computes each margin once, in one concurrent
-    // stage wave, and the broadcast sides become filters of the cached
-    // result.
-    val nl = lit(null).cast(LongType)
-    val contL = model.groupBy("b2", "b3").agg(count(lit(1)).as("c"))
-    val allm = materialize(model.groupBy("b1", "b2")
-      .agg(sum(col("c123")).as("v1"), count(lit(1)).as("v2"))
-      .select(lit(1).as("gid"), col("b1").as("g1"), col("b2").as("g2"),
-        col("v1"), col("v2"))
-      .unionByName(contL.select(lit(2).as("gid"), col("b2").as("g1"),
-        col("b3").as("g2"), col("c").as("v1"), nl.as("v2")))
-      .unionByName(contL.groupBy("b2")
-        .agg(sum(col("c")).as("v1"), count(lit(1)).as("v2"))
-        .select(lit(3).as("gid"), col("b2").as("g1"), nl.as("g2"),
-          col("v1"), col("v2")))
-      .unionByName(contL.groupBy("b3").agg(count(lit(1)).as("v1"))
-        .select(lit(4).as("gid"), col("b3").as("g1"), nl.as("g2"),
-          col("v1"), nl.as("v2")))
-      .unionByName(contL.groupBy().agg(count(lit(1)).as("v1"))
-        .select(lit(5).as("gid"), nl.as("g1"), nl.as("g2"),
-          col("v1"), nl.as("v2"))))._1
-    val pre = allm.filter(col("gid") === 1).select(col("g1").as("b1"),
-      col("g2").as("b2"), col("v1").as("__c12"), col("v2").as("__n12"))
-    val cont = allm.filter(col("gid") === 2).select(col("g1").as("b2"),
-      col("g2").as("b3"), col("v1").as("__cp"))
-    val c2 = allm.filter(col("gid") === 3).select(col("g1").as("b2"),
-      col("v1").as("__cp2"), col("v2").as("__n2"))
-    val ctt = allm.filter(col("gid") === 4).select(col("g1").as("b3"),
-      col("v1").as("__ct3"))
-    val np = allm.filter(col("gid") === 5).select(col("v1").as("__np"))
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val perDoc = trigramBucketTriples(
-      df.select(col(idCol).as("doc"), text.as("__t"))
-        .filter(col("__t").isNotNull)
-        .repartition(par, col("doc")), Seq("doc"), buckets)
-    val c123 = coalesce(col("__c123"), lit(0L))
-    val c12 = coalesce(col("__c12"), lit(0L))
-    val n12 = coalesce(col("__n12"), lit(0L))
-    val cp = coalesce(col("__cp"), lit(0L))
-    val cp2 = coalesce(col("__cp2"), lit(0L))
-    val n2 = coalesce(col("__n2"), lit(0L))
-    val ct3 = coalesce(col("__ct3"), lit(0L))
-    val z = col("__np") + lit(buckets.toLong)
-    val a2 = when(cp2 > 0L,
-      greatest(lit(4L) * cp - lit(3L), lit(0L)) * z +
-        lit(3L) * n2 * (ct3 + lit(1L)))
-      .otherwise(ct3 + lit(1L))
-    val d2 = when(cp2 > 0L, lit(4L) * cp2 * z).otherwise(z)
-    val num = when(c12 > 0L,
-      greatest(lit(4L) * c123 - lit(3L), lit(0L)) * d2 +
-        lit(3L) * n12 * a2)
-      .otherwise(a2)
-    val den = when(c12 > 0L, lit(4L) * c12 * d2).otherwise(d2)
-    val scored = perDoc
-      .join(broadcast(pre), Seq("b1", "b2"), "left")
-      .join(broadcast(model.withColumnRenamed("c123", "__c123")),
-        Seq("b1", "b2", "b3"), "left")
-      .join(broadcast(cont), Seq("b2", "b3"), "left")
-      .join(broadcast(c2), Seq("b2"), "left")
-      .join(broadcast(ctt), Seq("b3"), "left")
+    * Shape, one for every order: ONE checkpointed reference pass into
+    * the ≤Bⁿ-row model; the continuation tables as a checkpointed
+    * cascade ([[knLevels]] — a union-of-branches collapse of the margins
+    * measured 2.5× slower at orders 4 and 5: branches cannot share the
+    * model-sized first aggregate, since exchange reuse never fires
+    * across branches that prune different columns); then one size-gated
+    * BROADCAST HASH JOIN per statistic — O(1) hashed probe per corpus
+    * n-gram inside whole-stage codegen, no extra corpus exchange
+    * (broadcast joins keep the per-doc partitioning). Not map literals:
+    * Catalyst `element_at` on a MapType is a LINEAR scan (16.6k entries
+    * × 7 lookups measured 10.5 s task-sum at sf0.1, ~12× the hash-join
+    * form). Broadcast bound: the model saturates at Bⁿ rows (16.7M at
+    * order 3, B = 256; 33.5M at order 5, B = 32); every margin ≤ Bⁿ⁻¹ —
+    * past the autoBroadcast threshold the planner falls back to a
+    * shuffle join. */
+  def lmPerplexityBucketsKN(df: DataFrame, idCol: String, text: Column,
+      reference: DataFrame, refText: Column, order: Int,
+      buckets: Int): DataFrame = {
+    val model = materialize(lmTrain(reference, refText, order, buckets))._1
+    val (levels, unigram, np) = knLevels(model, order, materialize(_)._1)
+    def z(c: String) = coalesce(col(c), lit(0L))
+    val nll = knNll(levels.reverse.map { lv =>
+      val k = lv.keys.size
+      (z(s"__c$k"), z(s"__s$k"), z(s"__n$k"))
+    }, z("__u"), col("__np"), buckets)
+    val n = NgramCountCol(order)
+    pplTerciles(levels
+      .foldLeft(docNgrams(df, idCol, text, order, buckets)) { (acc, lv) =>
+        acc.join(broadcast(lv.margin), lv.keys.init, "left")
+          .join(broadcast(lv.table), lv.keys, "left")
+      }
+      .join(broadcast(unigram), Seq(s"b$order"), "left")
       .crossJoin(broadcast(np))
-      .withColumn("nll",
-        floor(log(den.cast(DoubleType) / num.cast(DoubleType)) * 1e6 + 0.5)
-          .cast(LongType))
+      .withColumn("nll", nll)
       .groupBy("doc")
-      .agg(sum(col("m")).as("n_triples"),
-        sum(col("m") * col("nll")).as("nll_micro"))
-      .withColumn("mean_micro", expr("nll_micro div n_triples"))
-    val tercile = ntile(3).over(org.apache.spark.sql.expressions.Window
-      .orderBy(col("mean_micro"), col("nll_micro"), col("doc")))
-    scored.withColumn("ppl_bucket",
-      when(tercile === 1, lit("head"))
-        .when(tercile === 2, lit("middle"))
-        .otherwise(lit("tail")))
-  }
-
-  /** Per-key hashed 4-gram-bucket quadruple multiset —
-    * [[trigramBucketTriples]] one order up: (b1, b2, b3, b4, m) per
-    * key, docs under 4 tokens contribute nothing. */
-  private def quadgramBucketQuads(shaped: DataFrame, keys: Seq[String],
-      buckets: Int): DataFrame =
-    shaped
-      .withColumn("__h",
-        transform(tokens(col("__t")),
-          t => pmod(Hashing.hexLong(t), lit(buckets.toLong))))
-      .select(keys.map(col) :+ explode(when(size(col("__h")) >= 4,
-        transform(sequence(lit(0), size(col("__h")) - 4),
-          i => struct(element_at(col("__h"), i + 1).as("b1"),
-            element_at(col("__h"), i + 2).as("b2"),
-            element_at(col("__h"), i + 3).as("b3"),
-            element_at(col("__h"), i + 4).as("b4"))))
-        .otherwise(array()
-          .cast("array<struct<b1:bigint,b2:bigint,b3:bigint,b4:bigint>>")))
-        .as("__p"): _*)
-      .select(keys.map(col) :+ col("__p.b1") :+ col("__p.b2")
-        :+ col("__p.b3") :+ col("__p.b4"): _*)
-      .groupBy((keys ++ Seq("b1", "b2", "b3", "b4")).map(col): _*)
-      .agg(count(lit(1)).as("m"))
-
-  /** [[lmTrainTrigram]] one order up: the hashed-4-GRAM model as data —
-    * `(b1, b2, b3, b4, c1234)` observed-quadruple counts, the complete
-    * sufficient statistic of the order-4 interpolated-KN chain (every
-    * margin, discount and continuation count derives from it — the
-    * continuation TRIGRAM table is the distinct-predecessor count per
-    * observed (b2,b3,b4), i.e. a row-count margin of this table, and
-    * the recursion keeps marginalizing down from there). One order
-    * below Wenzek et al. 2020's order-5 KenLM filter; the chain shape
-    * is now three full backoff levels deep, so the order-5 extension
-    * is mechanical.
-    *
-    * Bucket default drops 256 → 64: the rationalized integer chain's
-    * denominator grows a factor of `4·(backoff-level sum bound)` per
-    * order (see [[interpNllQuad]]'s long-bound contract), and B = 256
-    * at order 4 would cap prefix buckets at ~500 tokens — useless.
-    * B = 64 keeps the exact-integer contract to c123 ≲ 2·10⁶ tokens
-    * per (b1,b2,b3) prefix bucket ≈ 5·10¹¹ tokens corpus-wide at
-    * uniform hashing; shard the reference beyond that. */
-  def lmTrainQuadgram(reference: DataFrame, refText: Column,
-      buckets: Int = 64): DataFrame = {
-    require(buckets >= 2, "need at least 2 hash buckets")
-    quadgramBucketQuads(Parallelism.ensure(
-      reference.select(refText.as("__t")).filter(col("__t").isNotNull)),
-      Nil, buckets)
-      .withColumnRenamed("m", "c1234")
-  }
-
-  /** Pack an [[lmTrainQuadgram]] model for [[interpNllQuad]]: one
-    * broadcast row of ten derived statistics — quadruple counts
-    * (`__qm`, keyed ((b1·B+b2)·B+b3)·B+b4), prefix totals and
-    * distinct-successor counts (`__c123`/`__n123`, keyed
-    * (b1·B+b2)·B+b3), the CONTINUATION trigram table N1+(·w2w3w4)
-    * (`__cp3`, keyed (b2·B+b3)·B+b4 — distinct predecessors, the KN
-    * middle orders score TYPE novelty, not token frequency), its
-    * margins (`__cp3s`/`__n23`, keyed b2·B+b3), the
-    * continuation-of-continuation bigram N1+(·w3w4) over the
-    * continuation trigrams (`__cpp`, keyed b3·B+b4), its margins
-    * (`__cpp2`/`__n3`, keyed b3), continuation-unigram evidence
-    * (`__ct4`, keyed b4), and the distinct continuation-bigram total
-    * (`__np`). ≤ B⁴ observed keys worst case, B³/B²-bounded margins —
-    * statistics-sized, never corpus-sized. */
-  def lmPackInterpQuad(model: DataFrame, buckets: Int): DataFrame = {
-    val b = buckets
-    val cont3 = model.groupBy("b2", "b3", "b4").agg(count(lit(1)).as("cp3"))
-    val contp = cont3.groupBy("b3", "b4").agg(count(lit(1)).as("cpp"))
-    broadcast(model
-      .groupBy().agg(map_from_entries(collect_list(struct(
-        ((col("b1") * b + col("b2")) * b + col("b3")) * b + col("b4"),
-        col("c1234")))).as("__qm"))
-      .crossJoin(model.groupBy("b1", "b2", "b3")
-        .agg(sum(col("c1234")).as("c123"), count(lit(1)).as("n123"))
-        .groupBy().agg(
-          map_from_entries(collect_list(struct(
-            (col("b1") * b + col("b2")) * b + col("b3"), col("c123"))))
-            .as("__c123"),
-          map_from_entries(collect_list(struct(
-            (col("b1") * b + col("b2")) * b + col("b3"), col("n123"))))
-            .as("__n123")))
-      .crossJoin(cont3.groupBy().agg(map_from_entries(collect_list(struct(
-        (col("b2") * b + col("b3")) * b + col("b4"), col("cp3"))))
-        .as("__cp3")))
-      .crossJoin(cont3.groupBy("b2", "b3")
-        .agg(sum(col("cp3")).as("cp3s"), count(lit(1)).as("n23"))
-        .groupBy().agg(
-          map_from_entries(collect_list(struct(
-            col("b2") * b + col("b3"), col("cp3s")))).as("__cp3s"),
-          map_from_entries(collect_list(struct(
-            col("b2") * b + col("b3"), col("n23")))).as("__n23")))
-      .crossJoin(contp.groupBy().agg(map_from_entries(collect_list(struct(
-        col("b3") * b + col("b4"), col("cpp")))).as("__cpp")))
-      .crossJoin(contp.groupBy("b3")
-        .agg(sum(col("cpp")).as("cpp2"), count(lit(1)).as("n3"))
-        .groupBy().agg(
-          map_from_entries(collect_list(struct(col("b3"), col("cpp2"))))
-            .as("__cpp2"),
-          map_from_entries(collect_list(struct(col("b3"), col("n3"))))
-            .as("__n3")))
-      .crossJoin(contp.groupBy("b4").agg(count(lit(1)).as("ct4"))
-        .groupBy().agg(map_from_entries(collect_list(struct(
-          col("b4"), col("ct4")))).as("__ct4")))
-      .crossJoin(contp.groupBy().agg(count(lit(1)).as("__np"))))
-  }
-
-  /** Per-quadruple negative log probability (integer micro-nats) of
-    * the order-4 interpolated absolute-discount chain over an
-    * [[lmPackInterpQuad]] row — [[interpNllTri]]'s recursion unrolled
-    * one more level, D = 3/4 rational at ALL THREE orders:
-    *
-    *   p4(w4|w1w2w3) = max(c1234−D,0)/c123 + D·n123/c123 · p3'(w4|w2w3)
-    *   p3'(w4|w2w3)  = max(cp3−D,0)/cp3s  + D·n23/cp3s  · p2'(w4|w3)
-    *   p2'(w4|w3)    = max(cpp−D,0)/cpp2  + D·n3/cpp2   · p1(w4)
-    *   p1(w4)        = (ct4 + 1) / (Np + B)
-    *
-    * every middle order over Kneser-Ney continuation counts.
-    * Unseen prefix at each level backs off to the level below (the
-    * full chain). Multiplying through, with Z = Np + B:
-    *
-    *   a1 = max(4·cpp−3,0)·Z  + 3·n3·(ct4+1),   d1 = 4·cpp2·Z
-    *   a2 = max(4·cp3−3,0)·d1 + 3·n23·a1,       d2 = 4·cp3s·d1
-    *   num = max(4·c1234−3,0)·d2 + 3·n123·a2,   den = 4·c123·d2
-    *
-    * — every factor an exact long; each level telescopes to exactly 1
-    * so den ≥ num and nll ≥ 0. Long-bound contract: den =
-    * 64·c123·cp3s·cpp2·Z with cp3s ≤ B², cpp2 ≤ B², Z ≤ B²+B — at
-    * B = 64 that is ≤ c123·4.5·10¹², so c123 ≲ 2·10⁶ tokens per
-    * (b1,b2,b3) bucket triple overflows nothing (≈ 5·10¹¹ tokens
-    * corpus-wide at uniform hashing over B³ = 262 144 prefix buckets);
-    * at B = 256 the same bound collapses to c123 ≲ 500 — which is WHY
-    * this tier defaults to 64 (see [[lmTrainQuadgram]]). */
-  def interpNllQuad(b1: Column, b2: Column, b3: Column, b4: Column,
-      buckets: Int): Column = {
-    val bl = lit(buckets.toLong)
-    val k123 = (b1 * bl + b2) * bl + b3
-    val k234 = (b2 * bl + b3) * bl + b4
-    val k34 = b3 * bl + b4
-    val c1234 = coalesce(element_at(col("__qm"), k123 * bl + b4), lit(0L))
-    val c123 = coalesce(element_at(col("__c123"), k123), lit(0L))
-    val n123 = coalesce(element_at(col("__n123"), k123), lit(0L))
-    val cp3 = coalesce(element_at(col("__cp3"), k234), lit(0L))
-    val cp3s = coalesce(element_at(col("__cp3s"), b2 * bl + b3), lit(0L))
-    val n23 = coalesce(element_at(col("__n23"), b2 * bl + b3), lit(0L))
-    val cpp = coalesce(element_at(col("__cpp"), k34), lit(0L))
-    val cpp2 = coalesce(element_at(col("__cpp2"), b3), lit(0L))
-    val n3 = coalesce(element_at(col("__n3"), b3), lit(0L))
-    val ct4 = coalesce(element_at(col("__ct4"), b4), lit(0L))
-    val z = col("__np") + bl
-    val a1 = when(cpp2 > 0L,
-      greatest(lit(4L) * cpp - lit(3L), lit(0L)) * z +
-        lit(3L) * n3 * (ct4 + lit(1L)))
-      .otherwise(ct4 + lit(1L))
-    val d1 = when(cpp2 > 0L, lit(4L) * cpp2 * z).otherwise(z)
-    val a2 = when(cp3s > 0L,
-      greatest(lit(4L) * cp3 - lit(3L), lit(0L)) * d1 +
-        lit(3L) * n23 * a1)
-      .otherwise(a1)
-    val d2 = when(cp3s > 0L, lit(4L) * cp3s * d1).otherwise(d1)
-    val num = when(c123 > 0L,
-      greatest(lit(4L) * c1234 - lit(3L), lit(0L)) * d2 +
-        lit(3L) * n123 * a2)
-      .otherwise(a2)
-    val den = when(c123 > 0L, lit(4L) * c123 * d2).otherwise(d2)
-    floor(log(den.cast(DoubleType) / num.cast(DoubleType)) * 1e6 + 0.5)
-      .cast(LongType)
-  }
-
-  /** [[lmPerplexityBucketsTrigram]] one order up — 4-gram
-    * interpolated-KN perplexity terciles: same lifecycle (ONE
-    * checkpointed reference pass into the ≤B⁴-row quadruple table,
-    * margins derived model-side), same micro-nat quantizer, same
-    * tercile cut; `n_quads` replaces `n_triples` and docs under 4
-    * tokens score no quadruples.
-    *
-    * Scoring shape: SEVEN size-gated broadcast hash joins against the
-    * statistics-sized margin tables (the q201 lesson — a MapType
-    * literal probe is a linear scan, the wrong asymptotic for a
-    * corpus pass; broadcast joins preserve the per-doc partitioning
-    * and stay inside whole-stage codegen). Broadcast bound: the
-    * quadruple table saturates at B⁴ rows (16.7M at B = 64 — same
-    * ceiling as the trigram tier's B³ at 256); every margin ≤ B³. */
-  def lmPerplexityBucketsQuadgram(df: DataFrame, idCol: String,
-      text: Column, reference: DataFrame, refText: Column,
-      buckets: Int = 64): DataFrame = {
-    require(buckets >= 2, "need at least 2 hash buckets")
-    val model = materialize(lmTrainQuadgram(reference, refText, buckets))._1
-    // checkpointed margin cascade — the round-12 shape, kept after the
-    // measured round-13 union-of-branches experiment lost 0.85 → 2.04 s
-    // (see [[lmPerplexityBucketsQuintgram]] for the analysis)
-    val cont3 = materialize(model.groupBy("b2", "b3", "b4")
-      .agg(count(lit(1)).as("__cp3")))._1
-    val contp = materialize(cont3.groupBy("b3", "b4")
-      .agg(count(lit(1)).as("__cpp")))._1
-    val pre = model.groupBy("b1", "b2", "b3")
-      .agg(sum(col("c1234")).as("__c123"), count(lit(1)).as("__n123"))
-    val c23 = cont3.groupBy("b2", "b3")
-      .agg(sum(col("__cp3")).as("__cp3s"), count(lit(1)).as("__n23"))
-    val c3 = contp.groupBy("b3")
-      .agg(sum(col("__cpp")).as("__cpp2"), count(lit(1)).as("__n3"))
-    val ct = contp.groupBy("b4").agg(count(lit(1)).as("__ct4"))
-    val np = contp.groupBy().agg(count(lit(1)).as("__np"))
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val perDoc = quadgramBucketQuads(
-      df.select(col(idCol).as("doc"), text.as("__t"))
-        .filter(col("__t").isNotNull)
-        .repartition(par, col("doc")), Seq("doc"), buckets)
-    val c1234 = coalesce(col("__c1234"), lit(0L))
-    val c123 = coalesce(col("__c123"), lit(0L))
-    val n123 = coalesce(col("__n123"), lit(0L))
-    val cp3 = coalesce(col("__cp3"), lit(0L))
-    val cp3s = coalesce(col("__cp3s"), lit(0L))
-    val n23 = coalesce(col("__n23"), lit(0L))
-    val cpp = coalesce(col("__cpp"), lit(0L))
-    val cpp2 = coalesce(col("__cpp2"), lit(0L))
-    val n3 = coalesce(col("__n3"), lit(0L))
-    val ct4 = coalesce(col("__ct4"), lit(0L))
-    val z = col("__np") + lit(buckets.toLong)
-    val a1 = when(cpp2 > 0L,
-      greatest(lit(4L) * cpp - lit(3L), lit(0L)) * z +
-        lit(3L) * n3 * (ct4 + lit(1L)))
-      .otherwise(ct4 + lit(1L))
-    val d1 = when(cpp2 > 0L, lit(4L) * cpp2 * z).otherwise(z)
-    val a2 = when(cp3s > 0L,
-      greatest(lit(4L) * cp3 - lit(3L), lit(0L)) * d1 +
-        lit(3L) * n23 * a1)
-      .otherwise(a1)
-    val d2 = when(cp3s > 0L, lit(4L) * cp3s * d1).otherwise(d1)
-    val num = when(c123 > 0L,
-      greatest(lit(4L) * c1234 - lit(3L), lit(0L)) * d2 +
-        lit(3L) * n123 * a2)
-      .otherwise(a2)
-    val den = when(c123 > 0L, lit(4L) * c123 * d2).otherwise(d2)
-    val scored = perDoc
-      .join(broadcast(pre), Seq("b1", "b2", "b3"), "left")
-      .join(broadcast(model.withColumnRenamed("c1234", "__c1234")),
-        Seq("b1", "b2", "b3", "b4"), "left")
-      .join(broadcast(cont3), Seq("b2", "b3", "b4"), "left")
-      .join(broadcast(c23), Seq("b2", "b3"), "left")
-      .join(broadcast(contp), Seq("b3", "b4"), "left")
-      .join(broadcast(c3), Seq("b3"), "left")
-      .join(broadcast(ct), Seq("b4"), "left")
-      .crossJoin(broadcast(np))
-      .withColumn("nll",
-        floor(log(den.cast(DoubleType) / num.cast(DoubleType)) * 1e6 + 0.5)
-          .cast(LongType))
-      .groupBy("doc")
-      .agg(sum(col("m")).as("n_quads"),
-        sum(col("m") * col("nll")).as("nll_micro"))
-      .withColumn("mean_micro", expr("nll_micro div n_quads"))
-    val tercile = ntile(3).over(org.apache.spark.sql.expressions.Window
-      .orderBy(col("mean_micro"), col("nll_micro"), col("doc")))
-    scored.withColumn("ppl_bucket",
-      when(tercile === 1, lit("head"))
-        .when(tercile === 2, lit("middle"))
-        .otherwise(lit("tail")))
-  }
-
-  /** Per-key hashed 5-gram-bucket quintuple INSTANCES — one row per
-    * token position, no multiset compression: the scoring passes join
-    * these directly (real-text quint multiplicity within a doc is
-    * ~1.0, so a (key, b1..b5) pre-aggregation costs a full 6-long-key
-    * hash aggregate over every instance to save almost nothing —
-    * measured round 12). Docs under 5 tokens contribute nothing. */
-  private def quintgramInstances(shaped: DataFrame, keys: Seq[String],
-      buckets: Int): DataFrame =
-    shaped
-      .withColumn("__h",
-        transform(tokens(col("__t")),
-          t => pmod(Hashing.hexLong(t), lit(buckets.toLong))))
-      .select(keys.map(col) :+ explode(when(size(col("__h")) >= 5,
-        transform(sequence(lit(0), size(col("__h")) - 5),
-          i => struct(element_at(col("__h"), i + 1).as("b1"),
-            element_at(col("__h"), i + 2).as("b2"),
-            element_at(col("__h"), i + 3).as("b3"),
-            element_at(col("__h"), i + 4).as("b4"),
-            element_at(col("__h"), i + 5).as("b5"))))
-        .otherwise(array().cast(
-          "array<struct<b1:bigint,b2:bigint,b3:bigint,b4:bigint,b5:bigint>>")))
-        .as("__p"): _*)
-      .select(keys.map(col) :+ col("__p.b1") :+ col("__p.b2")
-        :+ col("__p.b3") :+ col("__p.b4") :+ col("__p.b5"): _*)
-
-  /** Per-key hashed 5-gram-bucket quintuple multiset —
-    * [[quadgramBucketQuads]] one order up: (b1..b5, m) per key, docs
-    * under 5 tokens contribute nothing. */
-  private def quintgramBucketQuints(shaped: DataFrame, keys: Seq[String],
-      buckets: Int): DataFrame =
-    quintgramInstances(shaped, keys, buckets)
-      .groupBy((keys ++ Seq("b1", "b2", "b3", "b4", "b5")).map(col): _*)
-      .agg(count(lit(1)).as("m"))
-
-  /** [[lmTrainQuadgram]] one order up: the hashed-5-GRAM model as
-    * data — `(b1..b5, c12345)` observed-quintuple counts, the complete
-    * sufficient statistic of the order-5 interpolated-KN chain — the
-    * published CCNet filter order (Wenzek et al. 2020 use a 5-gram
-    * KenLM; this closes the tier's order ceiling at it). Four full
-    * backoff levels now chain; every margin, discount and continuation
-    * count still derives from this one table.
-    *
-    * Bucket default drops 64 → 32: the rationalized integer chain's
-    * denominator gains another `4·(level sum bound)` factor at order 5
-    * (see [[interpNllQuint]]'s long-bound contract), and B = 64 at
-    * order 5 would cap prefix buckets at ~128 tokens — useless.
-    * B = 32 keeps the exact-integer contract to c1234 ≲ 3·10⁴ tokens
-    * per (b1,b2,b3,b4) prefix bucket ≈ 3·10¹⁰ tokens corpus-wide at
-    * uniform hashing over B⁴ = 1 048 576 prefix buckets; shard the
-    * reference beyond that (a per-shard model is still one broadcast
-    * row each). */
-  def lmTrainQuintgram(reference: DataFrame, refText: Column,
-      buckets: Int = 32): DataFrame = {
-    require(buckets >= 2, "need at least 2 hash buckets")
-    quintgramBucketQuints(Parallelism.ensure(
-      reference.select(refText.as("__t")).filter(col("__t").isNotNull)),
-      Nil, buckets)
-      .withColumnRenamed("m", "c12345")
-  }
-
-  /** Pack an [[lmTrainQuintgram]] model for [[interpNllQuint]]: one
-    * broadcast row of thirteen derived statistics — quintuple counts
-    * (`__vm`, keyed (((b1·B+b2)·B+b3)·B+b4)·B+b5), prefix totals and
-    * distinct-successor counts (`__c1234`/`__n1234`, keyed
-    * ((b1·B+b2)·B+b3)·B+b4), the CONTINUATION 4-gram table
-    * N1+(·w2w3w4w5) (`__cp4`, keyed ((b2·B+b3)·B+b4)·B+b5), its
-    * margins (`__cp4s`/`__n234`, keyed (b2·B+b3)·B+b4), the
-    * continuation trigram N1+(·w3w4w5) over the continuation 4-grams
-    * (`__cpp3`, keyed (b3·B+b4)·B+b5), its margins (`__cpp3s`/`__n34`,
-    * keyed b3·B+b4), the continuation bigram N1+(·w4w5) (`__cppp`,
-    * keyed b4·B+b5), its margins (`__cppp2`/`__n4`, keyed b4),
-    * continuation-unigram evidence (`__ct5`, keyed b5), and the
-    * distinct continuation-bigram total (`__np`). ≤ B⁵ observed keys
-    * worst case (33.5M at B = 32 — larger than the lower tiers'
-    * ceilings; a saturated model wants the batch scorer's hash joins,
-    * the stream keeps the map fold for bounded micro-batch docs),
-    * B⁴/B³-bounded margins. */
-  def lmPackInterpQuint(model: DataFrame, buckets: Int): DataFrame = {
-    val b = buckets
-    val cont4 = model.groupBy("b2", "b3", "b4", "b5")
-      .agg(count(lit(1)).as("cp4"))
-    val cont3 = cont4.groupBy("b3", "b4", "b5").agg(count(lit(1)).as("cpp3"))
-    val contp = cont3.groupBy("b4", "b5").agg(count(lit(1)).as("cppp"))
-    broadcast(model
-      .groupBy().agg(map_from_entries(collect_list(struct(
-        (((col("b1") * b + col("b2")) * b + col("b3")) * b + col("b4"))
-          * b + col("b5"),
-        col("c12345")))).as("__vm"))
-      .crossJoin(model.groupBy("b1", "b2", "b3", "b4")
-        .agg(sum(col("c12345")).as("c1234"), count(lit(1)).as("n1234"))
-        .groupBy().agg(
-          map_from_entries(collect_list(struct(
-            ((col("b1") * b + col("b2")) * b + col("b3")) * b + col("b4"),
-            col("c1234")))).as("__c1234"),
-          map_from_entries(collect_list(struct(
-            ((col("b1") * b + col("b2")) * b + col("b3")) * b + col("b4"),
-            col("n1234")))).as("__n1234")))
-      .crossJoin(cont4.groupBy().agg(map_from_entries(collect_list(struct(
-        ((col("b2") * b + col("b3")) * b + col("b4")) * b + col("b5"),
-        col("cp4")))).as("__cp4")))
-      .crossJoin(cont4.groupBy("b2", "b3", "b4")
-        .agg(sum(col("cp4")).as("cp4s"), count(lit(1)).as("n234"))
-        .groupBy().agg(
-          map_from_entries(collect_list(struct(
-            (col("b2") * b + col("b3")) * b + col("b4"), col("cp4s"))))
-            .as("__cp4s"),
-          map_from_entries(collect_list(struct(
-            (col("b2") * b + col("b3")) * b + col("b4"), col("n234"))))
-            .as("__n234")))
-      .crossJoin(cont3.groupBy().agg(map_from_entries(collect_list(struct(
-        (col("b3") * b + col("b4")) * b + col("b5"), col("cpp3"))))
-        .as("__cpp3")))
-      .crossJoin(cont3.groupBy("b3", "b4")
-        .agg(sum(col("cpp3")).as("cpp3s"), count(lit(1)).as("n34"))
-        .groupBy().agg(
-          map_from_entries(collect_list(struct(
-            col("b3") * b + col("b4"), col("cpp3s")))).as("__cpp3s"),
-          map_from_entries(collect_list(struct(
-            col("b3") * b + col("b4"), col("n34")))).as("__n34")))
-      .crossJoin(contp.groupBy().agg(map_from_entries(collect_list(struct(
-        col("b4") * b + col("b5"), col("cppp")))).as("__cppp")))
-      .crossJoin(contp.groupBy("b4")
-        .agg(sum(col("cppp")).as("cppp2"), count(lit(1)).as("n4"))
-        .groupBy().agg(
-          map_from_entries(collect_list(struct(col("b4"), col("cppp2"))))
-            .as("__cppp2"),
-          map_from_entries(collect_list(struct(col("b4"), col("n4"))))
-            .as("__n4")))
-      .crossJoin(contp.groupBy("b5").agg(count(lit(1)).as("ct5"))
-        .groupBy().agg(map_from_entries(collect_list(struct(
-          col("b5"), col("ct5")))).as("__ct5")))
-      .crossJoin(contp.groupBy().agg(count(lit(1)).as("__np"))))
-  }
-
-  /** Per-quintuple negative log probability (integer micro-nats) of
-    * the order-5 interpolated absolute-discount chain over an
-    * [[lmPackInterpQuint]] row — [[interpNllQuad]]'s recursion
-    * unrolled one more level, D = 3/4 rational at ALL FOUR orders:
-    *
-    *   p5(w5|w1..w4) = max(c12345−D,0)/c1234 + D·n1234/c1234 · p4'
-    *   p4'(w5|w2w3w4) = max(cp4−D,0)/cp4s + D·n234/cp4s · p3'
-    *   p3'(w5|w3w4)  = max(cpp3−D,0)/cpp3s + D·n34/cpp3s · p2'
-    *   p2'(w5|w4)    = max(cppp−D,0)/cppp2 + D·n4/cppp2 · p1(w5)
-    *   p1(w5)        = (ct5 + 1) / (Np + B)
-    *
-    * every middle order over Kneser-Ney continuation counts; unseen
-    * prefix at each level backs off to the level below. Multiplying
-    * through, with Z = Np + B:
-    *
-    *   a1 = max(4·cppp−3,0)·Z  + 3·n4·(ct5+1),   d1 = 4·cppp2·Z
-    *   a2 = max(4·cpp3−3,0)·d1 + 3·n34·a1,       d2 = 4·cpp3s·d1
-    *   a3 = max(4·cp4−3,0)·d2  + 3·n234·a2,      d3 = 4·cp4s·d2
-    *   num = max(4·c12345−3,0)·d3 + 3·n1234·a3,  den = 4·c1234·d3
-    *
-    * — every factor an exact long; each level telescopes to exactly 1
-    * so den ≥ num and nll ≥ 0. Long-bound contract: den =
-    * 256·c1234·cp4s·cpp3s·cppp2·Z with cp4s/cpp3s/cppp2 ≤ B² and
-    * Z ≤ B²+B — at B = 32 that is ≤ c1234·2.9·10¹⁴, so c1234 ≲ 3·10⁴
-    * tokens per (b1..b4) prefix bucket overflows nothing (≈ 3·10¹⁰
-    * tokens corpus-wide at uniform hashing over B⁴ prefix buckets;
-    * shard beyond — at B = 64 the same bound collapses to
-    * c1234 ≲ 128, which is WHY this tier defaults to 32, see
-    * [[lmTrainQuintgram]]). */
-  def interpNllQuint(b1: Column, b2: Column, b3: Column, b4: Column,
-      b5: Column, buckets: Int): Column = {
-    val bl = lit(buckets.toLong)
-    val k1234 = ((b1 * bl + b2) * bl + b3) * bl + b4
-    val k2345 = ((b2 * bl + b3) * bl + b4) * bl + b5
-    val k345 = (b3 * bl + b4) * bl + b5
-    val k45 = b4 * bl + b5
-    val c12345 = coalesce(element_at(col("__vm"), k1234 * bl + b5), lit(0L))
-    val c1234 = coalesce(element_at(col("__c1234"), k1234), lit(0L))
-    val n1234 = coalesce(element_at(col("__n1234"), k1234), lit(0L))
-    val cp4 = coalesce(element_at(col("__cp4"), k2345), lit(0L))
-    val cp4s = coalesce(
-      element_at(col("__cp4s"), (b2 * bl + b3) * bl + b4), lit(0L))
-    val n234 = coalesce(
-      element_at(col("__n234"), (b2 * bl + b3) * bl + b4), lit(0L))
-    val cpp3 = coalesce(element_at(col("__cpp3"), k345), lit(0L))
-    val cpp3s = coalesce(element_at(col("__cpp3s"), b3 * bl + b4), lit(0L))
-    val n34 = coalesce(element_at(col("__n34"), b3 * bl + b4), lit(0L))
-    val cppp = coalesce(element_at(col("__cppp"), k45), lit(0L))
-    val cppp2 = coalesce(element_at(col("__cppp2"), b4), lit(0L))
-    val n4 = coalesce(element_at(col("__n4"), b4), lit(0L))
-    val ct5 = coalesce(element_at(col("__ct5"), b5), lit(0L))
-    val z = col("__np") + bl
-    val a1 = when(cppp2 > 0L,
-      greatest(lit(4L) * cppp - lit(3L), lit(0L)) * z +
-        lit(3L) * n4 * (ct5 + lit(1L)))
-      .otherwise(ct5 + lit(1L))
-    val d1 = when(cppp2 > 0L, lit(4L) * cppp2 * z).otherwise(z)
-    val a2 = when(cpp3s > 0L,
-      greatest(lit(4L) * cpp3 - lit(3L), lit(0L)) * d1 +
-        lit(3L) * n34 * a1)
-      .otherwise(a1)
-    val d2 = when(cpp3s > 0L, lit(4L) * cpp3s * d1).otherwise(d1)
-    val a3 = when(cp4s > 0L,
-      greatest(lit(4L) * cp4 - lit(3L), lit(0L)) * d2 +
-        lit(3L) * n234 * a2)
-      .otherwise(a2)
-    val d3 = when(cp4s > 0L, lit(4L) * cp4s * d2).otherwise(d2)
-    val num = when(c1234 > 0L,
-      greatest(lit(4L) * c12345 - lit(3L), lit(0L)) * d3 +
-        lit(3L) * n1234 * a3)
-      .otherwise(a3)
-    val den = when(c1234 > 0L, lit(4L) * c1234 * d3).otherwise(d3)
-    floor(log(den.cast(DoubleType) / num.cast(DoubleType)) * 1e6 + 0.5)
-      .cast(LongType)
-  }
-
-  /** [[lmPerplexityBucketsQuadgram]] one order up — 5-gram
-    * interpolated-KN perplexity terciles at the published CCNet
-    * filter order (Wenzek et al. 2020): same lifecycle (ONE
-    * checkpointed reference pass into the ≤B⁵-row quintuple table,
-    * margins derived model-side), same micro-nat quantizer, same
-    * tercile cut; `n_quints` replaces `n_quads` and docs under 5
-    * tokens score no quintuples.
-    *
-    * Scoring shape: NINE size-gated broadcast hash joins against the
-    * statistics-sized margin tables (the q201 lesson: a MapType
-    * literal probe is a linear scan — broadcast hash joins stay in
-    * whole-stage codegen and preserve the per-doc partitioning).
-    * Broadcast bound: the quintuple table saturates at B⁵ rows
-    * (33.5M at B = 32); every margin ≤ B⁴. */
-  def lmPerplexityBucketsQuintgram(df: DataFrame, idCol: String,
-      text: Column, reference: DataFrame, refText: Column,
-      buckets: Int = 32): DataFrame = {
-    require(buckets >= 2, "need at least 2 hash buckets")
-    val model = materialize(lmTrainQuintgram(reference, refText, buckets))._1
-    // Margin cascade with EVERY level eagerly checkpointed — the
-    // round-12 shape, kept after a measured round-13 experiment:
-    // collapsing all eight margins into one union-of-branches job
-    // (fewer driver barriers) LOST 0.99 → 2.47 s at sf0.1 — branches
-    // cannot share the model-sized first aggregation (exchange reuse
-    // never fires across branches that prune different columns, the
-    // round-12 probe), and the 16 small branch exchanges scheduled
-    // worse inside one job than the checkpointed cascade's concurrent
-    // broadcast builds. The barriers ARE the cheaper option here;
-    // cont4/cont3/contp are each one statistics-sized exchange over
-    // the cached level above, and every margin is then a plain
-    // single-exchange count/sum over a cached table.
-    val cont4 = materialize(model.groupBy("b2", "b3", "b4", "b5")
-      .agg(count(lit(1)).as("__cp4")))._1
-    val cont3 = materialize(cont4.groupBy("b3", "b4", "b5")
-      .agg(count(lit(1)).as("__cpp3")))._1
-    val contp = materialize(cont3.groupBy("b4", "b5")
-      .agg(count(lit(1)).as("__cppp")))._1
-    val pre = model.groupBy("b1", "b2", "b3", "b4")
-      .agg(sum(col("c12345")).as("__c1234"), count(lit(1)).as("__n1234"))
-    val c234 = cont4.groupBy("b2", "b3", "b4")
-      .agg(sum(col("__cp4")).as("__cp4s"), count(lit(1)).as("__n234"))
-    val c34 = cont3.groupBy("b3", "b4")
-      .agg(sum(col("__cpp3")).as("__cpp3s"), count(lit(1)).as("__n34"))
-    val c4 = contp.groupBy("b4")
-      .agg(sum(col("__cppp")).as("__cppp2"), count(lit(1)).as("__n4"))
-    val ct = contp.groupBy("b5").agg(count(lit(1)).as("__ct5"))
-    val np = contp.groupBy().agg(count(lit(1)).as("__np"))
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    // instance-level scoring: no (doc, b1..b5) pre-aggregation — see
-    // [[quintgramInstances]]; the final per-doc aggregate counts
-    // instances directly
-    val perDoc = quintgramInstances(
-      df.select(col(idCol).as("doc"), text.as("__t"))
-        .filter(col("__t").isNotNull)
-        .repartition(par, col("doc")), Seq("doc"), buckets)
-    val c12345 = coalesce(col("__c12345"), lit(0L))
-    val c1234 = coalesce(col("__c1234"), lit(0L))
-    val n1234 = coalesce(col("__n1234"), lit(0L))
-    val cp4 = coalesce(col("__cp4"), lit(0L))
-    val cp4s = coalesce(col("__cp4s"), lit(0L))
-    val n234 = coalesce(col("__n234"), lit(0L))
-    val cpp3 = coalesce(col("__cpp3"), lit(0L))
-    val cpp3s = coalesce(col("__cpp3s"), lit(0L))
-    val n34 = coalesce(col("__n34"), lit(0L))
-    val cppp = coalesce(col("__cppp"), lit(0L))
-    val cppp2 = coalesce(col("__cppp2"), lit(0L))
-    val n4 = coalesce(col("__n4"), lit(0L))
-    val ct5 = coalesce(col("__ct5"), lit(0L))
-    val z = col("__np") + lit(buckets.toLong)
-    val a1 = when(cppp2 > 0L,
-      greatest(lit(4L) * cppp - lit(3L), lit(0L)) * z +
-        lit(3L) * n4 * (ct5 + lit(1L)))
-      .otherwise(ct5 + lit(1L))
-    val d1 = when(cppp2 > 0L, lit(4L) * cppp2 * z).otherwise(z)
-    val a2 = when(cpp3s > 0L,
-      greatest(lit(4L) * cpp3 - lit(3L), lit(0L)) * d1 +
-        lit(3L) * n34 * a1)
-      .otherwise(a1)
-    val d2 = when(cpp3s > 0L, lit(4L) * cpp3s * d1).otherwise(d1)
-    val a3 = when(cp4s > 0L,
-      greatest(lit(4L) * cp4 - lit(3L), lit(0L)) * d2 +
-        lit(3L) * n234 * a2)
-      .otherwise(a2)
-    val d3 = when(cp4s > 0L, lit(4L) * cp4s * d2).otherwise(d2)
-    val num = when(c1234 > 0L,
-      greatest(lit(4L) * c12345 - lit(3L), lit(0L)) * d3 +
-        lit(3L) * n1234 * a3)
-      .otherwise(a3)
-    val den = when(c1234 > 0L, lit(4L) * c1234 * d3).otherwise(d3)
-    val scored = perDoc
-      .join(broadcast(pre), Seq("b1", "b2", "b3", "b4"), "left")
-      .join(broadcast(model.withColumnRenamed("c12345", "__c12345")),
-        Seq("b1", "b2", "b3", "b4", "b5"), "left")
-      .join(broadcast(cont4), Seq("b2", "b3", "b4", "b5"), "left")
-      .join(broadcast(c234), Seq("b2", "b3", "b4"), "left")
-      .join(broadcast(cont3), Seq("b3", "b4", "b5"), "left")
-      .join(broadcast(c34), Seq("b3", "b4"), "left")
-      .join(broadcast(contp), Seq("b4", "b5"), "left")
-      .join(broadcast(c4), Seq("b4"), "left")
-      .join(broadcast(ct), Seq("b5"), "left")
-      .crossJoin(broadcast(np))
-      .withColumn("nll",
-        floor(log(den.cast(DoubleType) / num.cast(DoubleType)) * 1e6 + 0.5)
-          .cast(LongType))
-      .groupBy("doc")
-      .agg(count(lit(1)).as("n_quints"),
-        sum(col("nll")).as("nll_micro"))
-      .withColumn("mean_micro", expr("nll_micro div n_quints"))
-    val tercile = ntile(3).over(org.apache.spark.sql.expressions.Window
-      .orderBy(col("mean_micro"), col("nll_micro"), col("doc")))
-    scored.withColumn("ppl_bucket",
-      when(tercile === 1, lit("head"))
-        .when(tercile === 2, lit("middle"))
-        .otherwise(lit("tail")))
+      .agg(sum(col("m")).as(n), sum(col("m") * col("nll")).as("nll_micro"))
+      .withColumn("mean_micro", expr(s"nll_micro div $n")))
   }
 
   /** T5-style span corruption (Raffel et al. 2020 §3.1.4, public): the
@@ -3503,32 +2751,15 @@ object TextAnalysis {
       general: DataFrame, genText: Column,
       buckets: Int = 256, thresholdMicro: Option[Long] = None): DataFrame = {
     require(buckets >= 2, "need at least 2 hash buckets")
-    val b = buckets.toLong
     def pack(reference: DataFrame, refText: Column,
-        pm: String, c1: String): DataFrame = {
-      val model = materialize(lmTrain(reference, refText, buckets))._1
-      model.groupBy().agg(map_from_entries(collect_list(struct(
-          col("b1") * buckets + col("b2"), col("c12")))).as(pm))
-        .crossJoin(model.groupBy("b1").agg(sum(col("c12")).as("c1"))
-          .groupBy().agg(map_from_entries(collect_list(struct(
-            col("b1"), col("c1")))).as(c1)))
-    }
+        pm: String, c1: String): DataFrame = addOnePack(
+      materialize(lmTrain(reference, refText, 2, buckets))._1, buckets, pm, c1)
     def nll(pm: String, c1: String): Column =
-      floor(log(
-        (coalesce(element_at(col(c1), col("b1")), lit(0L)) + lit(b))
-          .cast(DoubleType) /
-          (coalesce(element_at(col(pm), col("b1") * buckets + col("b2")),
-            lit(0L)) + lit(1L)).cast(DoubleType)) * 1e6 + 0.5)
-        .cast(LongType)
+      addOneNll(col("b1"), col("b2"), buckets, pm, c1)
     val packed = broadcast(
       pack(inDomain, inText, "__pmi", "__c1i")
         .crossJoin(pack(general, genText, "__pmg", "__c1g")))
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val perDoc = bigramBucketPairs(
-      df.select(col(idCol).as("doc"), text.as("__t"))
-        .filter(col("__t").isNotNull)
-        .repartition(par, col("doc")), Seq("doc"), buckets)
-    val scored = perDoc
+    val scored = docNgrams(df, idCol, text, 2, buckets)
       .crossJoin(packed)
       .withColumn("__ni", nll("__pmi", "__c1i"))
       .withColumn("__ng", nll("__pmg", "__c1g"))

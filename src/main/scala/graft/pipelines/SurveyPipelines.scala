@@ -38,22 +38,22 @@ object SurveyPipelines {
       return_order_number: String, language: String, updated_ts: String,
       return_channel: String)
 
-  def ordersShippedTyped(export: DataFrame, updatedTs: Column): Dataset[OrdersShippedRow] = {
-    val spark = export.sparkSession
+  def ordersShippedTyped(raw: DataFrame, updatedTs: Column): Dataset[OrdersShippedRow] = {
+    val spark = raw.sparkSession
     import spark.implicits._
-    ordersShipped(export, updatedTs).as[OrdersShippedRow]
+    ordersShipped(raw, updatedTs).as[OrdersShippedRow]
   }
 
-  def npsTyped(export: DataFrame, updatedTs: Column): Dataset[NpsRow] = {
-    val spark = export.sparkSession
+  def npsTyped(raw: DataFrame, updatedTs: Column): Dataset[NpsRow] = {
+    val spark = raw.sparkSession
     import spark.implicits._
-    nps(export, updatedTs).as[NpsRow]
+    nps(raw, updatedTs).as[NpsRow]
   }
 
-  def returnsTyped(export: DataFrame, updatedTs: Column): Dataset[ReturnsRow] = {
-    val spark = export.sparkSession
+  def returnsTyped(raw: DataFrame, updatedTs: Column): Dataset[ReturnsRow] = {
+    val spark = raw.sparkSession
     import spark.implicits._
-    returns(export, updatedTs).as[ReturnsRow]
+    returns(raw, updatedTs).as[ReturnsRow]
   }
 
   /** O7/O20 — nested-response un-nest: one output row per response, with
@@ -66,8 +66,8 @@ object SurveyPipelines {
     * Output: `_ingest_pos: long, index: string, rec: map<string,string>`.
     * Both explodes are built-in generators — executor-parallel, the
     * antithesis of the reference's O(n²) driver loop. */
-  def unnest(export: DataFrame): DataFrame =
-    export
+  def unnest(raw: DataFrame): DataFrame =
+    raw
       .select(posexplode(col("responses")).as(Seq("_ingest_pos", "r")))
       .select(col("_ingest_pos").cast("long").as("_ingest_pos"),
         explode(col("r")).as(Seq("index", "rec")))
@@ -85,8 +85,8 @@ object SurveyPipelines {
     * dropna → rename → stamp → sort → keep-last per order_number →
     * grade∈A1..A5 → strip-"A" cast. Output columns: id_answer, date_sent,
     * grade (double), email, order_number, updated_ts. */
-  def ordersShipped(export: DataFrame, updatedTs: Column): DataFrame = {
-    val wide = widen(unnest(export), Seq("id", "datestamp", "q01", "q03", "q06"))
+  def ordersShipped(raw: DataFrame, updatedTs: Column): DataFrame = {
+    val wide = widen(unnest(raw), Seq("id", "datestamp", "q01", "q03", "q06"))
     val cleaned = (
       Relational.project(Seq("_ingest_pos", "id", "datestamp", "q01", "q03", "q06")) _
         andThen (df => df.na.drop("any",
@@ -113,8 +113,8 @@ object SurveyPipelines {
     * response-id map key (`index`) is the id column; 9-column projection;
     * subset dropna on {email, nps} (O11); alternation regex "A|N" (O15);
     * no sort/dedup/membership. */
-  def nps(export: DataFrame, updatedTs: Column): DataFrame = {
-    val wide = widen(unnest(export),
+  def nps(raw: DataFrame, updatedTs: Column): DataFrame = {
+    val wide = widen(unnest(raw),
       Seq("submitdate", "lastpage", "startlanguage", "startdate",
         "datestamp", "q01", "q03", "q06"))
     val out = (Relational.project(Seq("index", "submitdate", "lastpage",
@@ -134,8 +134,8 @@ object SurveyPipelines {
   /** Returns pipeline (/root/reference/lime_survey_returns.py:55-73):
     * 8-column projection, full dropna, strip-"A" cast, final re-order
     * (the reference's explicit re-projection at line 73). */
-  def returns(export: DataFrame, updatedTs: Column): DataFrame = {
-    val wide = widen(unnest(export),
+  def returns(raw: DataFrame, updatedTs: Column): DataFrame = {
+    val wide = widen(unnest(raw),
       Seq("id", "datestamp", "q01", "q03", "q06", "q12", "q22", "startlanguage"))
     val out = (Relational.project(Seq("id", "datestamp", "q01", "q03", "q06",
         "q12", "q22", "startlanguage")) _

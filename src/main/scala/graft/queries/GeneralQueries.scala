@@ -134,8 +134,8 @@ object GeneralQueries {
         .agg(sum(col("n")).as("n"), sum(col("__sq")).as("__sq"))
         .withColumn("l_returnflag", lit(null).cast("string"))
         .withColumn("l_linestatus", lit(null).cast("string"))
-      fine.unionByName(mid.select(fine.columns.map(col): _*))
-        .unionByName(top.select(fine.columns.map(col): _*))
+      fine.unionByName(mid.select(fine.columns.toSeq.map(col): _*))
+        .unionByName(top.select(fine.columns.toSeq.map(col): _*))
         .select(col("l_returnflag"), col("l_linestatus"), col("n"),
           fromCents(col("__sq"), 2).as("sum_qty"))
     },

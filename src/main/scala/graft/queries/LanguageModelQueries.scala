@@ -384,8 +384,9 @@ object LanguageModelQueries {
           col("doc_id") % 11 === 0,
         concat(col("text"), lit(" cuneiform hieroglyph abjad")))
         .otherwise(col("text"))
-      TextAnalysis.lmPerplexityBucketsInterp(docs, "doc_id", spiked,
-        docs.filter(col("source").isin("src0", "src1")), col("text"))
+      TextAnalysis.lmPerplexityBucketsKN(docs, "doc_id", spiked,
+        docs.filter(col("source").isin("src0", "src1")), col("text"),
+        order = 2, buckets = 256)
         .select(col("doc").as("doc_id"), col("n_pairs"),
           col("nll_micro"), col("mean_micro"), col("ppl_bucket"))
     },
@@ -661,8 +662,9 @@ object LanguageModelQueries {
           col("doc_id") % 11 === 0,
         concat(col("text"), lit(" cuneiform hieroglyph abjad")))
         .otherwise(col("text"))
-      TextAnalysis.lmPerplexityBucketsTrigram(docs, "doc_id", spiked,
-        docs.filter(col("source").isin("src0", "src1")), col("text"))
+      TextAnalysis.lmPerplexityBucketsKN(docs, "doc_id", spiked,
+        docs.filter(col("source").isin("src0", "src1")), col("text"),
+        order = 3, buckets = 256)
         .select(col("doc").as("doc_id"), col("n_triples"),
           col("nll_micro"), col("mean_micro"), col("ppl_bucket"))
     },
@@ -752,9 +754,9 @@ object LanguageModelQueries {
           col("doc_id") % 11 === 0,
         concat(col("text"), lit(" cuneiform hieroglyph abjad")))
         .otherwise(col("text"))
-      TextAnalysis.lmPerplexityBucketsQuadgram(docs, "doc_id", spiked,
+      TextAnalysis.lmPerplexityBucketsKN(docs, "doc_id", spiked,
         docs.filter(col("source").isin("src0", "src1")), col("text"),
-        buckets = 64)
+        order = 4, buckets = 64)
         .select(col("doc").as("doc_id"), col("n_quads"),
           col("nll_micro"), col("mean_micro"), col("ppl_bucket"))
     },
@@ -866,9 +868,9 @@ object LanguageModelQueries {
         concat(col("text"),
           lit(" cuneiform hieroglyph abjad syllabary")))
         .otherwise(col("text"))
-      TextAnalysis.lmPerplexityBucketsQuintgram(docs, "doc_id", spiked,
+      TextAnalysis.lmPerplexityBucketsKN(docs, "doc_id", spiked,
         docs.filter(col("source").isin("src0", "src1")), col("text"),
-        buckets = 32)
+        order = 5, buckets = 32)
         .select(col("doc").as("doc_id"), col("n_quints"),
           col("nll_micro"), col("mean_micro"), col("ppl_bucket"))
     },

@@ -89,7 +89,8 @@ object TabularQueries {
 
     // CDC merge: a synthetic change batch (two update versions for
     // overlapping keys + inserts at shifted keys) applied to orders with
-    // MERGE semantics — one union + one max_by hash aggregate, no join.
+    // MERGE semantics — one union + one max_by aggregate (a sort
+    // aggregate: struct buffers are not hash-aggregable), no join.
     // The batch is derived deterministically from the corpus so both
     // merge paths (update wins by version, insert lands) provably fire.
     Query("q77_merge_upsert", (s, d) => {

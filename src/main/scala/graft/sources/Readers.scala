@@ -79,7 +79,7 @@ object Readers {
     val firstTwo = lines.orderBy("__i").limit(2).collect()
     require(firstTwo.length == 2, s"TSV at $path has no header line")
     val headerId = firstTwo(1).getLong(0)
-    val header = firstTwo(1).getString(1).split("\t", -1)
+    val header = firstTwo(1).getString(1).split("\t", -1).toSeq
     val parts = split(col("value"), "\t", -1)
     lines.filter(col("__i") > headerId)
       .select(header.zipWithIndex.map { case (h, i) =>

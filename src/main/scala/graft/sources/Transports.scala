@@ -89,7 +89,7 @@ object Transports {
         return status("Invalid session key")
       val raw = new String(Files.readAllBytes(path), StandardCharsets.UTF_8)
       val paged = params.has("iStart") && params.has("iLimit")
-      val conds = params.path("aConditions").fields().asScala
+      val conds = params.path("aConditions").properties().iterator().asScala
         .map(e => e.getKey -> e.getValue.asText()).toMap
       if (!paged && conds.isEmpty) return raw
       val reply = mapper.readTree(raw)

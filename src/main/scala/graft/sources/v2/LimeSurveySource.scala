@@ -2,7 +2,7 @@ package graft.sources.v2
 
 import java.util.{Map => JMap}
 
-import scala.collection.JavaConverters._
+import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.JsonNodeType
@@ -145,8 +145,8 @@ object LimeSurveySource {
     val responses = mapper.readTree(json).get("responses")
     if (responses == null) Iterator.empty
     else responses.elements().asScala.flatMap { entry =>
-      entry.fields().asScala.map { kv =>
-        val rec = kv.getValue.fields().asScala.map(f =>
+      entry.properties().iterator().asScala.map { kv =>
+        val rec = kv.getValue.properties().iterator().asScala.map(f =>
           f.getKey -> (if (f.getValue.isNull) null else f.getValue.asText())).toMap
         rec + ("index" -> kv.getKey)
       }

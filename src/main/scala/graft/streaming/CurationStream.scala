@@ -84,7 +84,7 @@ object CurationStream {
               batch.map(_._3.getTime).max)
             state.update(FpState(lastSeen))
             state.setTimeoutTimestamp(math.max(
-              state.getCurrentWatermarkMs + 1, lastSeen + horizonMs))
+              state.getCurrentWatermarkMs() + 1, lastSeen + horizonMs))
             batch.iterator.zipWithIndex.map { case ((_, id, _, text), i) =>
               if (seenBefore || i > 0) (id, "exact_dup", null: String)
               else (id, "kept", text)
@@ -131,7 +131,7 @@ object CurationStream {
     * the batch operator's `maxBucket` cap counts old+new docs per
     * bucket; a stream cannot know a bucket's future population, so the
     * cap applies at index-build time to the lake side only. */
-  def incrementalNearDups(spark: SparkSession, docs: DataFrame,
+  def incrementalNearDups(docs: DataFrame,
       lakeIndex: DataFrame, k: Int = 5, numPerm: Int = 16, bands: Int = 4,
       watermarkDelay: String = "2 hours"): DataFrame = {
     val banded = docs
@@ -196,6 +196,34 @@ object CurationStream {
       .drop("__llr", "__prior", "__dflt")
   }
 
+  /** The per-row fold every LM gate shares: the token-hash array binds
+    * to a REAL column once, `nll_micro` is an exact long fold of
+    * `nllAt` over the doc's order-n bucket windows (`nllAt` receives the
+    * window's n bucket columns), `mean_micro` its integer mean and
+    * `lm_pass` the fixed-threshold decision. Null text scores NULL;
+    * docs under n tokens have no evidence (count 0, NULL mean); both
+    * gate false and keep their row. */
+  private def lmGate(docs: DataFrame, packed: DataFrame, order: Int,
+      maxMeanMicro: Long, buckets: Int)(
+      nllAt: Seq[Column] => Column): DataFrame = {
+    val n = TextAnalysis.NgramCountCol(order)
+    docs.crossJoin(packed)
+      .withColumn("__h", TextAnalysis.tokenBuckets(col("text"), buckets))
+      .withColumn(n,
+        when(col("text").isNotNull,
+          greatest(size(col("__h")) - (order - 1), lit(0)).cast("long")))
+      .withColumn("nll_micro",
+        when(col("text").isNotNull && size(col("__h")) >= order,
+          aggregate(sequence(lit(0), size(col("__h")) - order), lit(0L),
+            (acc, i) => acc + nllAt((1 to order).map(j =>
+              element_at(col("__h"), (i + j).cast("int")))))))
+      .withColumn("mean_micro",
+        when(col(n) > 0L, expr(s"nll_micro div $n")))
+      .withColumn("lm_pass",
+        coalesce(col("mean_micro") <= maxMeanMicro, lit(false)))
+      .drop("__h" +: packed.columns.toSeq: _*)
+  }
+
   /** Stateless streaming CCNet perplexity gate — the deployment half
     * of the [[graft.operators.TextAnalysis.lmPerplexityBuckets]]
     * lifecycle ([[nbQualityGate]]'s pattern): train the hashed-bigram
@@ -203,12 +231,10 @@ object CurationStream {
     * ([[graft.operators.TextAnalysis.lmTrain]] — the `(b1,b2,c12)`
     * pair counts ARE the model), broadcast it packed into ONE row as
     * two maps (pair counts keyed `b1·B+b2`, margins keyed `b1`), and
-    * score the live firehose per row: the token-hash array binds to a
-    * REAL column once, and `nll_micro` is an exact long fold over
-    * adjacent pairs with the batch operator's own smoothing and
-    * quantizer — a batch-scored and a stream-scored doc agree
-    * bit-for-bit (StreamingSpec parity). No explode, no streaming
-    * aggregate, no state.
+    * score the live firehose per row with the batch operator's own
+    * smoothing and quantizer ([[lmGate]]) — a batch-scored and a
+    * stream-scored doc agree bit-for-bit (StreamingSpec parity). No
+    * explode, no streaming aggregate, no state.
     *
     * The tercile CUT is corpus-relative and cannot stream; the gate
     * takes the fixed `maxMeanMicro` threshold instead (export the
@@ -221,187 +247,56 @@ object CurationStream {
   def lmQualityGate(docs: DataFrame, model: DataFrame,
       maxMeanMicro: Long, buckets: Int = 256): DataFrame = {
     require(buckets >= 2, "need at least 2 hash buckets")
-    val packed = broadcast(model
-      .groupBy().agg(map_from_entries(collect_list(struct(
-        col("b1") * buckets + col("b2"), col("c12")))).as("__pm"))
-      .crossJoin(model.groupBy("b1").agg(sum(col("c12")).as("c1"))
-        .groupBy().agg(map_from_entries(collect_list(struct(
-          col("b1"), col("c1")))).as("__c1"))))
-    def nllOf(b1: Column, b2: Column): Column =
-      floor(log(
-        (coalesce(element_at(col("__c1"), b1), lit(0L)) +
-          lit(buckets.toLong)).cast("double") /
-          (coalesce(element_at(col("__pm"), b1 * buckets + b2), lit(0L)) +
-            lit(1L)).cast("double")) * 1e6 + 0.5).cast("long")
-    docs.crossJoin(packed)
-      .withColumn("__h",
-        transform(TextAnalysis.tokens(col("text")),
-          t => pmod(graft.functions.Hashing.hexLong(t),
-            lit(buckets.toLong))))
-      .withColumn("n_pairs",
-        when(col("text").isNotNull,
-          greatest(size(col("__h")) - 1, lit(0)).cast("long")))
-      .withColumn("nll_micro",
-        when(col("text").isNotNull && size(col("__h")) >= 2,
-          aggregate(sequence(lit(0), size(col("__h")) - 2), lit(0L),
-            (acc, i) => acc + nllOf(
-              element_at(col("__h"), (i + 1).cast("int")),
-              element_at(col("__h"), (i + 2).cast("int"))))))
-      .withColumn("mean_micro",
-        when(col("n_pairs") > 0L, expr("nll_micro div n_pairs")))
-      .withColumn("lm_pass",
-        coalesce(col("mean_micro") <= maxMeanMicro, lit(false)))
-      .drop("__h", "__pm", "__c1")
+    val packed = broadcast(TextAnalysis.addOnePack(model, buckets,
+      "__pm", "__c1"))
+    lmGate(docs, packed, 2, maxMeanMicro, buckets) { b =>
+      TextAnalysis.addOneNll(b(0), b(1), buckets, "__pm", "__c1")
+    }
   }
 
-  /** [[lmQualityGate]] with the interpolated absolute-discount /
-    * Kneser-Ney-continuation smoothing
-    * ([[graft.operators.TextAnalysis.interpNll]]) in place of add-one —
-    * the SAME exported `(b1,b2,c12)` artifact scores both ways (margins,
-    * discounts and continuation counts all derive from it inside
-    * [[graft.operators.TextAnalysis.lmPackInterp]]'s one broadcast
-    * row), so upgrading a deployed stream's smoothing is a config
-    * change, not a retrain. Per-row long fold, no explode, no state;
-    * batch ([[graft.operators.TextAnalysis.lmPerplexityBucketsInterp]])
-    * and stream agree bit-for-bit (StreamingSpec parity). */
-  def lmQualityGateInterp(docs: DataFrame, model: DataFrame,
-      maxMeanMicro: Long, buckets: Int = 256): DataFrame = {
+  /** [[lmQualityGate]] with interpolated Kneser-Ney smoothing at order
+    * n ∈ 2..5 ([[graft.operators.TextAnalysis.lmPerplexityBucketsKN]],
+    * whose scaladoc carries the per-order bucket contract) over the
+    * exported `(b1..bn, c12…n)` artifact
+    * ([[graft.operators.TextAnalysis.lmTrain]] at that order — at
+    * order 2 the SAME artifact the add-one gate uses, so upgrading a
+    * deployed stream's smoothing is a config change, not a retrain).
+    * Every level's table and margin, the continuation unigram and N_p
+    * pack into ONE broadcast row of maps keyed by composite bucket
+    * keys, and each window's chain folds through the batch scorer's own
+    * [[graft.operators.TextAnalysis.knNll]] — no explode, no state; the
+    * map probes are fine here because each micro-batch row scores a
+    * bounded doc. Batch and stream agree bit-for-bit (StreamingSpec
+    * parity). The count column is the batch scorer's (`n_pairs` …
+    * `n_quints`). */
+  def lmQualityGateKN(docs: DataFrame, model: DataFrame, order: Int,
+      maxMeanMicro: Long, buckets: Int): DataFrame = {
+    TextAnalysis.requireOrder(order)
     require(buckets >= 2, "need at least 2 hash buckets")
-    docs.crossJoin(TextAnalysis.lmPackInterp(model, buckets))
-      .withColumn("__h",
-        transform(TextAnalysis.tokens(col("text")),
-          t => pmod(graft.functions.Hashing.hexLong(t),
-            lit(buckets.toLong))))
-      .withColumn("n_pairs",
-        when(col("text").isNotNull,
-          greatest(size(col("__h")) - 1, lit(0)).cast("long")))
-      .withColumn("nll_micro",
-        when(col("text").isNotNull && size(col("__h")) >= 2,
-          aggregate(sequence(lit(0), size(col("__h")) - 2), lit(0L),
-            (acc, i) => acc + TextAnalysis.interpNll(
-              element_at(col("__h"), (i + 1).cast("int")),
-              element_at(col("__h"), (i + 2).cast("int")), buckets))))
-      .withColumn("mean_micro",
-        when(col("n_pairs") > 0L, expr("nll_micro div n_pairs")))
-      .withColumn("lm_pass",
-        coalesce(col("mean_micro") <= maxMeanMicro, lit(false)))
-      .drop("__h", "__pm", "__c1", "__n1", "__ct", "__np")
-  }
-
-  /** [[lmQualityGateInterp]] one order up — the TRIGRAM interpolated-KN
-    * gate over the exported `(b1,b2,b3,c123)` artifact
-    * ([[graft.operators.TextAnalysis.lmTrainTrigram]]): the full
-    * three-level backoff chain
-    * ([[graft.operators.TextAnalysis.interpNllTri]]) as a per-row long
-    * fold over the once-bound token-hash array — no explode, no state,
-    * one broadcast model row
-    * ([[graft.operators.TextAnalysis.lmPackInterpTri]]). Batch
-    * ([[graft.operators.TextAnalysis.lmPerplexityBucketsTrigram]]) and
-    * stream agree bit-for-bit (StreamingSpec parity). */
-  def lmQualityGateTrigram(docs: DataFrame, model: DataFrame,
-      maxMeanMicro: Long, buckets: Int = 256): DataFrame = {
-    require(buckets >= 2, "need at least 2 hash buckets")
-    docs.crossJoin(TextAnalysis.lmPackInterpTri(model, buckets))
-      .withColumn("__h",
-        transform(TextAnalysis.tokens(col("text")),
-          t => pmod(graft.functions.Hashing.hexLong(t),
-            lit(buckets.toLong))))
-      .withColumn("n_triples",
-        when(col("text").isNotNull,
-          greatest(size(col("__h")) - 2, lit(0)).cast("long")))
-      .withColumn("nll_micro",
-        when(col("text").isNotNull && size(col("__h")) >= 3,
-          aggregate(sequence(lit(0), size(col("__h")) - 3), lit(0L),
-            (acc, i) => acc + TextAnalysis.interpNllTri(
-              element_at(col("__h"), (i + 1).cast("int")),
-              element_at(col("__h"), (i + 2).cast("int")),
-              element_at(col("__h"), (i + 3).cast("int")), buckets))))
-      .withColumn("mean_micro",
-        when(col("n_triples") > 0L, expr("nll_micro div n_triples")))
-      .withColumn("lm_pass",
-        coalesce(col("mean_micro") <= maxMeanMicro, lit(false)))
-      .drop("__h", "__tm", "__c12", "__n12", "__cp", "__cp2", "__n2",
-        "__ct3", "__np")
-  }
-
-  /** [[lmQualityGateTrigram]] one order up — the 4-GRAM interpolated-KN
-    * gate over the exported `(b1,b2,b3,b4,c1234)` artifact
-    * ([[graft.operators.TextAnalysis.lmTrainQuadgram]]): the full
-    * four-level backoff chain
-    * ([[graft.operators.TextAnalysis.interpNllQuad]]) as a per-row long
-    * fold over the once-bound token-hash array — no explode, no state,
-    * one broadcast model row
-    * ([[graft.operators.TextAnalysis.lmPackInterpQuad]]). Batch
-    * ([[graft.operators.TextAnalysis.lmPerplexityBucketsQuadgram]]) and
-    * stream agree bit-for-bit (StreamingSpec parity). Buckets default
-    * 64, the order-4 long-bound contract (see interpNllQuad). */
-  def lmQualityGateQuadgram(docs: DataFrame, model: DataFrame,
-      maxMeanMicro: Long, buckets: Int = 64): DataFrame = {
-    require(buckets >= 2, "need at least 2 hash buckets")
-    docs.crossJoin(TextAnalysis.lmPackInterpQuad(model, buckets))
-      .withColumn("__h",
-        transform(TextAnalysis.tokens(col("text")),
-          t => pmod(graft.functions.Hashing.hexLong(t),
-            lit(buckets.toLong))))
-      .withColumn("n_quads",
-        when(col("text").isNotNull,
-          greatest(size(col("__h")) - 3, lit(0)).cast("long")))
-      .withColumn("nll_micro",
-        when(col("text").isNotNull && size(col("__h")) >= 4,
-          aggregate(sequence(lit(0), size(col("__h")) - 4), lit(0L),
-            (acc, i) => acc + TextAnalysis.interpNllQuad(
-              element_at(col("__h"), (i + 1).cast("int")),
-              element_at(col("__h"), (i + 2).cast("int")),
-              element_at(col("__h"), (i + 3).cast("int")),
-              element_at(col("__h"), (i + 4).cast("int")), buckets))))
-      .withColumn("mean_micro",
-        when(col("n_quads") > 0L, expr("nll_micro div n_quads")))
-      .withColumn("lm_pass",
-        coalesce(col("mean_micro") <= maxMeanMicro, lit(false)))
-      .drop("__h", "__qm", "__c123", "__n123", "__cp3", "__cp3s",
-        "__n23", "__cpp", "__cpp2", "__n3", "__ct4", "__np")
-  }
-
-  /** [[lmQualityGateQuadgram]] one order up — the 5-GRAM
-    * interpolated-KN gate at the published CCNet filter order over the
-    * exported `(b1..b5,c12345)` artifact
-    * ([[graft.operators.TextAnalysis.lmTrainQuintgram]]): the full
-    * five-level backoff chain
-    * ([[graft.operators.TextAnalysis.interpNllQuint]]) as a per-row
-    * long fold over the once-bound token-hash array — no explode, no
-    * state, one broadcast model row
-    * ([[graft.operators.TextAnalysis.lmPackInterpQuint]]). Batch
-    * ([[graft.operators.TextAnalysis.lmPerplexityBucketsQuintgram]])
-    * and stream agree bit-for-bit (StreamingSpec parity). Buckets
-    * default 32, the order-5 long-bound contract (see
-    * interpNllQuint). */
-  def lmQualityGateQuintgram(docs: DataFrame, model: DataFrame,
-      maxMeanMicro: Long, buckets: Int = 32): DataFrame = {
-    require(buckets >= 2, "need at least 2 hash buckets")
-    docs.crossJoin(TextAnalysis.lmPackInterpQuint(model, buckets))
-      .withColumn("__h",
-        transform(TextAnalysis.tokens(col("text")),
-          t => pmod(graft.functions.Hashing.hexLong(t),
-            lit(buckets.toLong))))
-      .withColumn("n_quints",
-        when(col("text").isNotNull,
-          greatest(size(col("__h")) - 4, lit(0)).cast("long")))
-      .withColumn("nll_micro",
-        when(col("text").isNotNull && size(col("__h")) >= 5,
-          aggregate(sequence(lit(0), size(col("__h")) - 5), lit(0L),
-            (acc, i) => acc + TextAnalysis.interpNllQuint(
-              element_at(col("__h"), (i + 1).cast("int")),
-              element_at(col("__h"), (i + 2).cast("int")),
-              element_at(col("__h"), (i + 3).cast("int")),
-              element_at(col("__h"), (i + 4).cast("int")),
-              element_at(col("__h"), (i + 5).cast("int")), buckets))))
-      .withColumn("mean_micro",
-        when(col("n_quints") > 0L, expr("nll_micro div n_quints")))
-      .withColumn("lm_pass",
-        coalesce(col("mean_micro") <= maxMeanMicro, lit(false)))
-      .drop("__h", "__vm", "__c1234", "__n1234", "__cp4", "__cp4s",
-        "__n234", "__cpp3", "__cpp3s", "__n34", "__cppp", "__cppp2",
-        "__n4", "__ct5", "__np")
+    val (levels, unigram, np) = TextAnalysis.knLevels(model, order, identity)
+    // a bucket tuple's map key (…(k1·B + k2)·B + …)·B + kn — exact in a
+    // long for every order and bucket count the long-bound contract admits
+    def bucketKey(keys: Seq[Column]) =
+      keys.reduceLeft((acc, k) => acc * lit(buckets.toLong) + k)
+    def maps(df: DataFrame, keys: Seq[String], values: String*) = {
+      val key = bucketKey(keys.map(col))
+      val ms = values.map(v =>
+        map_from_entries(collect_list(struct(key, col(v)))).as(v))
+      df.groupBy().agg(ms.head, ms.tail: _*)
+    }
+    val packed = broadcast((levels.flatMap { lv =>
+      val k = lv.keys.size
+      Seq(maps(lv.table, lv.keys, s"__c$k"),
+        maps(lv.margin, lv.keys.init, s"__s$k", s"__n$k"))
+    } :+ maps(unigram, Seq(s"b$order"), "__u")).foldLeft(np)(_.crossJoin(_)))
+    lmGate(docs, packed, order, maxMeanMicro, buckets) { b =>
+      def at(m: String, keys: Seq[Column]) = coalesce(
+        element_at(col(m), bucketKey(keys)), lit(0L))
+      TextAnalysis.knNll((2 to order).map { k =>
+        val ks = b.takeRight(k)
+        (at(s"__c$k", ks), at(s"__s$k", ks.init), at(s"__n$k", ks.init))
+      }, at("__u", Seq(b.last)), col("__np"), buckets)
+    }
   }
 
   /** Stateless streaming Moore–Lewis gate — the deployment half of
@@ -421,31 +316,17 @@ object CurationStream {
   def cedGate(docs: DataFrame, modelIn: DataFrame, modelGen: DataFrame,
       maxCedMicro: Long, buckets: Int = 256): DataFrame = {
     require(buckets >= 2, "need at least 2 hash buckets")
-    def pack(model: DataFrame, pm: String, c1: String): DataFrame =
-      model.groupBy().agg(map_from_entries(collect_list(struct(
-          col("b1") * buckets + col("b2"), col("c12")))).as(pm))
-        .crossJoin(model.groupBy("b1").agg(sum(col("c12")).as("c1"))
-          .groupBy().agg(map_from_entries(collect_list(struct(
-            col("b1"), col("c1")))).as(c1)))
-    val packed = broadcast(pack(modelIn, "__pmi", "__c1i")
-      .crossJoin(pack(modelGen, "__pmg", "__c1g")))
-    def nllOf(pm: String, c1: String)(b1: Column, b2: Column): Column =
-      floor(log(
-        (coalesce(element_at(col(c1), b1), lit(0L)) +
-          lit(buckets.toLong)).cast("double") /
-          (coalesce(element_at(col(pm), b1 * buckets + b2), lit(0L)) +
-            lit(1L)).cast("double")) * 1e6 + 0.5).cast("long")
+    val packed = broadcast(
+      TextAnalysis.addOnePack(modelIn, buckets, "__pmi", "__c1i")
+        .crossJoin(TextAnalysis.addOnePack(modelGen, buckets, "__pmg", "__c1g")))
     def foldNll(pm: String, c1: String): Column =
       when(col("text").isNotNull && size(col("__h")) >= 2,
         aggregate(sequence(lit(0), size(col("__h")) - 2), lit(0L),
-          (acc, i) => acc + nllOf(pm, c1)(
+          (acc, i) => acc + TextAnalysis.addOneNll(
             element_at(col("__h"), (i + 1).cast("int")),
-            element_at(col("__h"), (i + 2).cast("int")))))
+            element_at(col("__h"), (i + 2).cast("int")), buckets, pm, c1)))
     docs.crossJoin(packed)
-      .withColumn("__h",
-        transform(TextAnalysis.tokens(col("text")),
-          t => pmod(graft.functions.Hashing.hexLong(t),
-            lit(buckets.toLong))))
+      .withColumn("__h", TextAnalysis.tokenBuckets(col("text"), buckets))
       .withColumn("n_pairs",
         when(col("text").isNotNull,
           greatest(size(col("__h")) - 1, lit(0)).cast("long")))
@@ -464,7 +345,7 @@ object CurationStream {
     * the monitoring view ([[EventsStream.windowedExpectations]]'s shape
     * applied to the funnel itself). Counts are decomposable, so this is
     * a plain watermarked windowed hash-agg with bounded state. */
-  def windowedReport(spark: SparkSession, docs: DataFrame,
+  def windowedReport(docs: DataFrame,
       qualityMin: Double = 0.5, windowLen: String = "1 hour",
       lateness: String = "2 hours"): DataFrame = {
     val scored = TextAnalysis
@@ -481,21 +362,6 @@ object CurationStream {
         col("n_docs"))
   }
 
-  /** Stateless streaming embedding-outlier gate — the deployment half
-    * of the PCA lifecycle (q153–q155, the [[nbQualityGate]] pattern for
-    * the vector modality): fit [[graft.operators.Pca]] on the reference
-    * lake in batch, then score each live vector with the approximate
-    * Mahalanobis distance Σ_k pc_k²/λ_k over the model's top
-    * `components.length` components. The model rides in the PLAN as
-    * literal arrays (no broadcast variable, no state, no shuffle — a
-    * pure map), so batch and stream agree bit for bit and swapping in a
-    * refit model is a query restart, not a topology change.
-    *
-    * Appends `md_micro` (exact micro fixed-point, the q155 quantizer)
-    * and `md_ok` (distance ≤ `maxMdMicro`). Rows whose embedding is
-    * null or not the model's arity score NULL and gate FALSE — the
-    * batch operator drops them, the stream keeps the row so the caller
-    * sees a verdict per vector. */
   /** Stateless streaming C4 badword gate (Raffel 2020 §2.2) — the
     * deployment twin of
     * [[graft.operators.TextAnalysis.blocklistHit]] (q152) and the
@@ -514,6 +380,21 @@ object CurationStream {
           words, phrases),
         lit(false)))
 
+  /** Stateless streaming embedding-outlier gate — the deployment half
+    * of the PCA lifecycle (q153–q155, the [[nbQualityGate]] pattern for
+    * the vector modality): fit [[graft.operators.Pca]] on the reference
+    * lake in batch, then score each live vector with the approximate
+    * Mahalanobis distance Σ_k pc_k²/λ_k over the model's top
+    * `components.length` components. The model rides in the PLAN as
+    * literal arrays (no broadcast variable, no state, no shuffle — a
+    * pure map), so batch and stream agree bit for bit and swapping in a
+    * refit model is a query restart, not a topology change.
+    *
+    * Appends `md_micro` (exact micro fixed-point, the q155 quantizer)
+    * and `md_ok` (distance ≤ `maxMdMicro`). Rows whose embedding is
+    * null or not the model's arity score NULL and gate FALSE — the
+    * batch operator drops them, the stream keeps the row so the caller
+    * sees a verdict per vector. */
   def mahalanobisGate(vecs: DataFrame, embCol: String,
       model: graft.operators.Pca.PcaModel, k: Int,
       maxMdMicro: Long): DataFrame = {

@@ -184,7 +184,7 @@ object EventsStream {
          state: GroupState[List[OpenSession]]) =>
           def close(s: OpenSession) = SessionWindow(userId,
             new java.sql.Timestamp(s.startMs), new java.sql.Timestamp(s.endMs), s.n)
-          val wm = state.getCurrentWatermarkMs
+          val wm = state.getCurrentWatermarkMs()
           // time-ordered gap-merge over (batch events + pending
           // intervals); a timeout invocation is the same fold with an
           // empty batch

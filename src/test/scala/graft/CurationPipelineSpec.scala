@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.pipelines.CurationPipeline
 
 /** End-to-end funnel over a golden corpus with one doc per disposition:

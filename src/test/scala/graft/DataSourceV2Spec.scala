@@ -14,13 +14,13 @@ class DataSourceV2Spec extends SparkSpec {
   private def writeReplies(dir: String): Unit = {
     Files.writeString(Paths.get(dir, "get_session_key.json"),
       """{"id":1,"result":"SK-v2-spec","error":null}""")
-    val export =
+    val exported =
       """{ "responses": [
         { "11": { "id": "11", "datestamp": "2018-01-01 10:00:00", "q01": "A4", "q03": "a@x.com", "q06": "BR11" } },
         { "12": { "id": "12", "datestamp": "2018-01-02 10:00:00", "q01": "A2", "q03": null,      "q06": "BR12" } },
         { "13": { "id": "13", "datestamp": "2018-01-03 10:00:00", "q01": "A5", "q03": "c@x.com", "q06": "BR13" } }
       ] }"""
-    val b64 = Base64.getEncoder.encodeToString(export.getBytes("UTF-8"))
+    val b64 = Base64.getEncoder.encodeToString(exported.getBytes("UTF-8"))
     Files.writeString(Paths.get(dir, "export_responses.json"),
       s"""{"id":1,"result":"$b64","error":null}""")
     val participants = (0 until 10).map { i =>
@@ -57,7 +57,7 @@ class DataSourceV2Spec extends SparkSpec {
     // collect, not count: count() would take the pushed get_summary
     // path and skip the row parse this test exists to exercise
     assert(df.collect().length == 3)
-    val r = df.filter(col("index") === "12").head
+    val r = df.filter(col("index") === "12").head()
     assert(r.getAs[String]("q06") == "BR12")
     assert(r.getAs[String]("q03") == null) // JSON null -> SQL null
   }
@@ -263,7 +263,7 @@ class DataSourceV2Spec extends SparkSpec {
     // connector rows -> the same transform chain the spool path uses
     val df = read("responses")
     val flat = df.select(lit(0L).as("_ingest_pos"), col("index"),
-      map(df.columns.filterNot(_ == "index")
+      map(df.columns.toSeq.filterNot(_ == "index")
         .flatMap(c => Seq(lit(c), col(c))): _*).as("rec"))
     val wide = flat.select(col("_ingest_pos"), col("index"),
       col("rec")("id").as("id"), col("rec")("datestamp").as("datestamp"),

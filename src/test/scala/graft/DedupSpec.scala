@@ -74,7 +74,7 @@ class DedupSpec extends SparkSpec {
     assert(out(3L)._2 == "" && out(3L)._3 == 0L && out(3L)._4 == 1L)
     // untouched doc: full text back, zero removed
     assert(out(4L)._2 == segDocs.filter(col("doc_id") === 4L)
-      .select("text").as[String].head && out(4L)._4 == 0L)
+      .select("text").as[String].head() && out(4L)._4 == 0L)
     // below the threshold nothing is removed
     val loose = Dedup.segmentDedup(segDocs, "doc_id", col("text"), 5, 4)
       .as[(Long, String, Long, Long)].collect()
@@ -1044,9 +1044,9 @@ class TextAnalysisSpec extends SparkSpec {
     // B=3000: uncapped λ₀ = 3000/130 ≈ 23 → a wants 230 > 100 (cap),
     // b wants 461 > 400 (cap); remaining 2500 levels onto c alone:
     // λ = 25 → c gets 2500 < 10000. Exact closed form, by hand.
-    val rows = Seq.tabulate(100)(i => ("a", 1L)) ++
-      Seq.tabulate(100)(i => ("b", 4L)) ++
-      Seq.tabulate(100)(i => ("c", 100L))
+    val rows = Seq.fill(100)(("a", 1L)) ++
+      Seq.fill(100)(("b", 4L)) ++
+      Seq.fill(100)(("c", 100L))
     val df = rows.toDF("src", "nt")
     val out = TextAnalysis.mixtureWaterfill(df, "src", col("nt"), 3000L)
       .as[(String, Long, Long, Boolean)].collect().sortBy(_._1).toSeq
@@ -1201,7 +1201,7 @@ class TextAnalysisSpec extends SparkSpec {
     // null text yields one null chunk (oracle parity), not ""
     val nullOut = Seq((1L, null: String)).toDF("doc_id", "text")
       .select(TextAnalysis.chunks(col("text"), 4, 1).as("c"))
-      .as[Seq[String]].head
+      .as[Seq[String]].head()
     assert(nullOut == Seq(null))
   }
 
@@ -1328,7 +1328,7 @@ class TextAnalysisSpec extends SparkSpec {
   test("quality features bounded and consistent") {
     val out = TextAnalysis.qualityFeatures(
       Seq("the quick brown fox is here of course").toDF("text"), col("text"))
-      .select("n_tokens", "stopword_ratio", "quality_score").head
+      .select("n_tokens", "stopword_ratio", "quality_score").head()
     assert(out.getInt(0) == 8)
     assert(out.getDouble(1) > 0 && out.getDouble(1) <= 1)
     assert(out.getDouble(2) >= 0 && out.getDouble(2) <= 1)
@@ -1385,6 +1385,65 @@ class TextAnalysisSpec extends SparkSpec {
       .as[(String, String, Long, Double)].collect()
     assert(capped.map(r => (r._1, r._2)).toSet == Set(("s1", "s2")))
     assert(capped.forall(_._3 == 1L))
+  }
+
+  test("bigram interp-KN: JVM-twin exact scores, all three backoff branches fire") {
+    import spark.implicits._
+    val refTexts = Seq(
+      "the quick brown fox jumps over the lazy dog",
+      "the quick brown cat naps under the warm sun")
+    val reference = refTexts.toDF("text")
+    val B = 256L
+    def bk(t: String) = graft.functions.Hashing.hexLongJvm(t) % B
+    // a first word whose BUCKET collides with no reference word's — a
+    // raw unseen word can still hash onto a seen prefix (B = 256),
+    // which silently turns the unseen-prefix probe into a seen one
+    val refBuckets = refTexts.flatMap(_.split(" ")).map(bk).toSet
+    val fresh = Iterator.from(0).map(i => s"w$i")
+      .find(w => !refBuckets.contains(bk(w))).get
+    val docTexts = Map(
+      1L -> "the quick brown fox jumps",    // seen pairs
+      2L -> "the fox naps",                 // seen prefix, unseen pair
+      3L -> s"$fresh quick",                // unseen prefix
+      4L -> "quick brown cat naps under the sun")
+    val docs = docTexts.toSeq.toDF("doc_id", "text")
+    def pairs(s: String) = s.split(" ").map(bk).sliding(2)
+      .filter(_.length == 2).map(a => (a(0), a(1))).toSeq
+    val c12 = refTexts.flatMap(pairs).groupBy(identity)
+      .map { case (k, v) => k -> v.size.toLong }
+    val pre = c12.groupBy { case ((b1, _), _) => b1 }
+      .map { case (k, m) => k -> ((m.values.sum, m.size.toLong)) }
+    val ct2 = c12.keys.groupBy(_._2).map { case (k, v) => k -> v.size.toLong }
+    val z = c12.size.toLong + B
+    val branches = scala.collection.mutable.Set.empty[String]
+    def nll(t: (Long, Long)): Long = {
+      val (b1, b2) = t
+      val ct = ct2.getOrElse(b2, 0L)
+      val (c1, n1) = pre.getOrElse(b1, (0L, 0L))
+      val c = c12.getOrElse(t, 0L)
+      branches += (if (c1 > 0 && c > 0) "seen"
+        else if (c1 > 0) "unseen-pair" else "unseen-prefix")
+      val (num, den) =
+        if (c1 > 0) (math.max(4 * c - 3, 0) * z + 3 * n1 * (ct + 1),
+          4 * c1 * z)
+        else (ct + 1, z)
+      math.floor(math.log(den.toDouble / num.toDouble) * 1e6 + 0.5).toLong
+    }
+    val expected = docTexts.map { case (id, s) =>
+      val ps = pairs(s)
+      id -> ((ps.size.toLong, ps.map(nll).sum))
+    }
+    val out = TextAnalysis.lmPerplexityBucketsKN(
+        docs, "doc_id", col("text"), reference, col("text"), 2, 256)
+      .select(col("doc"), col("n_pairs"), col("nll_micro"))
+      .as[(Long, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3)))
+      .toMap
+    assert(out == expected, s"$out vs $expected")
+    // all three branches fired across the planted docs
+    assert(branches == Set("seen", "unseen-pair", "unseen-prefix"),
+      branches.toString)
+    // every score non-negative (the telescoping den >= num contract)
+    assert(out.values.forall(_._2 >= 0L), out.toString)
   }
 
   test("trigram interp-KN: JVM-twin exact scores, full backoff chain fires") {
@@ -1445,8 +1504,8 @@ class TextAnalysisSpec extends SparkSpec {
       val ts = tris(s)
       id -> ((ts.size.toLong, ts.map(nll).sum))
     }
-    val out = TextAnalysis.lmPerplexityBucketsTrigram(
-        docs, "doc_id", col("text"), reference, col("text"))
+    val out = TextAnalysis.lmPerplexityBucketsKN(
+        docs, "doc_id", col("text"), reference, col("text"), 3, 256)
       .select(col("doc"), col("n_triples"), col("nll_micro"))
       .as[(Long, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3)))
       .toMap
@@ -1531,8 +1590,8 @@ class TextAnalysisSpec extends SparkSpec {
       val qs = quads(s)
       id -> ((qs.size.toLong, qs.map(nll).sum))
     }
-    val out = TextAnalysis.lmPerplexityBucketsQuadgram(
-        docs, "doc_id", col("text"), reference, col("text"), buckets = 64)
+    val out = TextAnalysis.lmPerplexityBucketsKN(
+        docs, "doc_id", col("text"), reference, col("text"), 4, 64)
       .select(col("doc"), col("n_quads"), col("nll_micro"))
       .as[(Long, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3)))
       .toMap
@@ -1632,8 +1691,8 @@ class TextAnalysisSpec extends SparkSpec {
       val qs = quints(s)
       id -> ((qs.size.toLong, qs.map(nll).sum))
     }
-    val out = TextAnalysis.lmPerplexityBucketsQuintgram(
-        docs, "doc_id", col("text"), reference, col("text"), buckets = 32)
+    val out = TextAnalysis.lmPerplexityBucketsKN(
+        docs, "doc_id", col("text"), reference, col("text"), 5, 32)
       .select(col("doc"), col("n_quints"), col("nll_micro"))
       .as[(Long, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3)))
       .toMap
@@ -1730,7 +1789,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("pqAdcKnn: code-only distances match a driver recomputation; recall vs exact") {
-    import graft.operators.Pca
     val emb = Tables.embeddings(spark, sf001)
     val trained = Similarity.trainPqCodebook(emb, subspaces = 8, nCodes = 16)
     val codebook = trained.map { case (id, cw) => (id, cw) }

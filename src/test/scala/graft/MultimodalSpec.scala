@@ -199,7 +199,7 @@ class MultimodalSpec extends SparkSpec {
   /** Mux helpers moved to the library (graft.operators.Mp4Mux) when the
     * q151 declared query started muxing real avc1 fixtures; the spec
     * keeps thin aliases so its fixture-building reads unchanged. */
-  import graft.operators.Mp4Mux.{be16, box, full, spsNal, avcCBox, visualEntryFields, mp4Bytes}
+  import graft.operators.Mp4Mux.{be16, box, spsNal, avcCBox, visualEntryFields, mp4Bytes}
 
   test("MP4 demux is real: sampled frames decode as the muxed JPEGs") {
     // 5 frames, increasing brightness, split 2+3 across chunks;
@@ -685,7 +685,7 @@ class MultimodalSpec extends SparkSpec {
     // the encoder refuses the layout its coeff_token table cannot
     // express (a CAVLC macroblock after an I_PCM one)
     intercept[IllegalArgumentException] {
-      Mp4Mux.intraDcIdrNal(2, 1, (_, _) => 100, (r, c) => c == 0)
+      Mp4Mux.intraDcIdrNal(2, 1, (_, _) => 100, (_, c) => c == 0)
     }
     // ...and a hand-built stream in exactly that layout must decode to
     // None (the PCM neighbor's 16-coefficient count selects a

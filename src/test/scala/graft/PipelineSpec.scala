@@ -28,18 +28,18 @@ class PipelineSpec extends SparkSpec {
       { "6": { "id": "6", "datestamp": "2018-03-05 10:00:00", "submitdate": "2018-03-05 10:00:00", "startdate": "2018-03-05 09:58:00", "lastpage": "3", "startlanguage": "pt", "q01": "N10", "q06": "BR4", "q12": "mail", "q22": "R6" } }
     ] }"""
 
-  lazy val export = Readers.surveyExportFromJson(spark, exportJson)
+  lazy val exported = Readers.surveyExportFromJson(spark, exportJson)
 
   test("unnest emits one row per response with index and ingest position (O7/O20)") {
-    val out = SurveyPipelines.unnest(export)
+    val out = SurveyPipelines.unnest(exported)
     assert(out.columns.toSeq == Seq("_ingest_pos", "index", "rec"))
     assert(out.count() == 6)
-    val r = out.filter(col("index") === "3").select(col("rec").getItem("q03")).head
+    val r = out.filter(col("index") === "3").select(col("rec").getItem("q03")).head()
     assert(r.getString(0) == "") // empty string preserved, not nullified
   }
 
   test("ordersShipped: dedup keeps latest per order, membership guards cast") {
-    val out = SurveyPipelines.ordersShipped(export, TS)
+    val out = SurveyPipelines.ordersShipped(exported, TS)
     val rows = out.orderBy("order_number")
       .select("order_number", "id_answer", "grade", "email").collect()
     // BR1: id=2 (later datestamp) wins, grade 5.0
@@ -51,7 +51,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("nps: subset dropna keeps empty-string email, strips A|N prefix") {
-    val out = SurveyPipelines.nps(export, TS)
+    val out = SurveyPipelines.nps(exported, TS)
     assert(out.columns.toSeq == Seq("id_answer", "date_sent", "last_page",
       "language", "start_date", "last_action_date", "nps", "email", "cohort",
       "updated_ts"))
@@ -69,7 +69,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("returns: full dropna, final column order matches the reference") {
-    val out = SurveyPipelines.returns(export, TS)
+    val out = SurveyPipelines.returns(exported, TS)
     assert(out.columns.toSeq == Seq("id_answer", "date_sent", "grade",
       "email", "order_number", "return_order_number", "language",
       "updated_ts", "return_channel"))

@@ -1,9 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-
 /** Plan-shape regression tests: the physical plans we actually want at
   * scale, asserted so a refactor can't silently regress them. Run at
   * sf0.001 — plan shape, not data volume, is what's under test.

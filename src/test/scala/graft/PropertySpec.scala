@@ -95,7 +95,7 @@ class PropertySpec extends SparkSpec {
     samples(listGen, 8).filter(_.length >= 2).foreach { vs =>
       val df = vs.map(("g", _)).toDF("g", "v")
       val out = Quantiles.quantileContBucketed(df, Seq("g"),
-        Seq(("v", col("v"), 37.0, Seq(("p0", 0.0), ("p50", 0.5), ("p100", 1.0))))).head
+        Seq(("v", col("v"), 37.0, Seq(("p0", 0.0), ("p50", 0.5), ("p100", 1.0))))).head()
       val sorted = vs.sorted
       assert(out.getDouble(1) == sorted.head, s"p0 for $vs")
       assert(out.getDouble(3) == sorted.last, s"p100 for $vs")
@@ -206,7 +206,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("duplicateSpans: spans disjoint, inside the doc, only over true dups") {
-    import graft.operators.TextAnalysis
     val docGen = Gen.listOfN(12,
       Gen.choose(0, 3).map(i => s"t$i")).map(_.mkString(" "))
     samples(Gen.listOfN(6, docGen), 8).foreach { texts =>

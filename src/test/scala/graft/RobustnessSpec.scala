@@ -39,7 +39,7 @@ class RobustnessSpec extends SparkSpec {
     // quantiles of a single-row group: every fraction is that value
     val one = Seq(("g", 42.0)).toDF("g", "v")
     val q = Quantiles.quantileContBucketed(one, Seq("g"),
-      Seq(("v", col("v"), 10.0, Seq(("p25", 0.25), ("p75", 0.75))))).head
+      Seq(("v", col("v"), 10.0, Seq(("p25", 0.25), ("p75", 0.75))))).head()
     assert(q.getDouble(1) == 42.0 && q.getDouble(2) == 42.0)
   }
 
@@ -60,7 +60,7 @@ class RobustnessSpec extends SparkSpec {
     val r = Seq.empty[(String, Int, Double)].toDF("rk", "rt", "px")
     val out = Temporal.asofJoin(l, r, "k", "rk", "t", "rt")
     assert(out.count() == 1)
-    assert(out.head.isNullAt(out.columns.indexOf("asof_px")))
+    assert(out.head().isNullAt(out.columns.indexOf("asof_px")))
   }
 
   test("empty-text documents survive the text operators") {
@@ -143,7 +143,7 @@ class RobustnessSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_tsv_short").toString
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/t.txt"),
       "JUNK\na\tb\tc\n1\tonly-two\n")
-    val row = Readers.tsvWithPreHeader(spark, s"$dir/t.txt").head
+    val row = Readers.tsvWithPreHeader(spark, s"$dir/t.txt").head()
     assert(row.getString(0) == "1" && row.getString(1) == "only-two")
     assert(row.isNullAt(2)) // genuinely missing field -> null, not a crash
   }
@@ -156,11 +156,11 @@ class RobustnessSpec extends SparkSpec {
   }
 
   test("pipelines over an export with zero responses return empty frames") {
-    val export = Readers.surveyExportFromJson(spark, """{ "responses": [] }""")
+    val exported = Readers.surveyExportFromJson(spark, """{ "responses": [] }""")
     val ts = lit("2026-01-01 00:00:00")
-    assert(SurveyPipelines.ordersShipped(export, ts).count() == 0)
-    assert(SurveyPipelines.nps(export, ts).count() == 0)
-    assert(SurveyPipelines.returns(export, ts).count() == 0)
+    assert(SurveyPipelines.ordersShipped(exported, ts).count() == 0)
+    assert(SurveyPipelines.nps(exported, ts).count() == 0)
+    assert(SurveyPipelines.returns(exported, ts).count() == 0)
   }
 
   test("round-4 operators on degenerate input: empty tables, absent matches") {
@@ -315,7 +315,6 @@ class RobustnessSpec extends SparkSpec {
   }
 
   test("round-6 operators on degenerate input: empty corpora, lone rows, empty codebooks") {
-    import org.apache.spark.sql.functions.expr
     // EWMA: empty in, empty out; all-null values dropped entirely
     val emptyEv = Seq.empty[(Long, Long, java.sql.Timestamp, Double)]
       .toDF("user_id", "event_id", "ts", "value")
@@ -461,14 +460,14 @@ class RobustnessSpec extends SparkSpec {
     val json = """{ "responses": [
       { "1": { "id": "1", "datestamp": "2018-03-01 10:00:00", "submitdate": "2018-03-01 10:00:00", "startdate": "x", "lastpage": "3", "startlanguage": "pt", "q01": "A4", "q03": "a@x.com", "q06": "BR1", "q12": "mail", "q22": "R1" } }
     ] }"""
-    val export = Readers.surveyExportFromJson(spark, json)
+    val exported = Readers.surveyExportFromJson(spark, json)
     val ts = lit("2026-01-01 00:00:00")
-    val o = SurveyPipelines.ordersShippedTyped(export, ts).collect()
+    val o = SurveyPipelines.ordersShippedTyped(exported, ts).collect()
     assert(o.toSeq == Seq(SurveyPipelines.OrdersShippedRow(
       "1", "2018-03-01 10:00:00", 4.0, "a@x.com", "BR1", "2026-01-01 00:00:00")))
-    val n = SurveyPipelines.npsTyped(export, ts).head
+    val n = SurveyPipelines.npsTyped(exported, ts).head()
     assert(n.nps.contains(4.0) && n.cohort == "BR1")
-    val r = SurveyPipelines.returnsTyped(export, ts).head
+    val r = SurveyPipelines.returnsTyped(exported, ts).head()
     assert(r.grade.contains(4.0) && r.return_channel == "mail")
   }
 }

@@ -11,7 +11,6 @@ import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.AnalysisException
-import org.apache.spark.sql.functions._
 import graft.sinks.Sinks
 
 /** A local-disk FileSystem that answers for the `graftfs:` scheme —

@@ -65,7 +65,7 @@ class SourcesSpec extends SparkSpec {
     val df = c.responsesDF(spark, 101)
     val out = graft.pipelines.SurveyPipelines.ordersShipped(df,
       org.apache.spark.sql.functions.lit("2026-01-01 00:00:00"))
-    val row = out.head
+    val row = out.head()
     assert(row.getAs[String]("order_number") == "BR9")
     assert(row.getAs[Double]("grade") == 3.0)
     // session key travels in the envelope of the export call
@@ -75,12 +75,12 @@ class SourcesSpec extends SparkSpec {
   test("catalog listings project nested fields (O5/O6)") {
     val t = new FakeTransport
     val c = new LimeSurveyClient("http://fake/rpc", "admin", "pw", t)
-    assert(c.listSurveys(spark).select("sid").head.getString(0) == "101")
-    val g = c.listGroups(spark, 101).head
+    assert(c.listSurveys(spark).select("sid").head().getString(0) == "101")
+    val g = c.listGroups(spark, 101).head()
     assert((g.getString(0), g.getString(1)) == ("7", "G1")) // id.gid flattened
-    assert(c.listQuestions(spark, 101, 7).head.getString(0) == "11")
+    assert(c.listQuestions(spark, 101, 7).head().getString(0) == "11")
     assert(c.listParticipants(spark, 101, 0, 10)
-      .select("participant_info.email").head.getString(0) == "a@b.c")
+      .select("participant_info.email").head().getString(0) == "a@b.c")
   }
 
   test("the reply reader decodes JSON escapes: PHP-style \\/ base64 survives (O2)") {
@@ -193,7 +193,7 @@ class SourcesSpec extends SparkSpec {
     val c = new LimeSurveyClient("http://fake/rpc", "admin", "pw", empty)
     // an empty survey's export is an export with no responses
     assert(c.exportResponsesJson(101) == """{"responses":[]}""")
-    assert(c.responsesDF(spark, 101).head.getSeq[Any](0).isEmpty)
+    assert(c.responsesDF(spark, 101).head().getSeq[Any](0).isEmpty)
     assert(c.listSurveys(spark).count() == 0)
     val e = intercept[LimeSurveyClient.RpcError](c.listParticipants(spark, 101))
     assert(e.getMessage.contains("No permission"), e.getMessage)

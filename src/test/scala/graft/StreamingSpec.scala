@@ -493,7 +493,7 @@ class StreamingSpec extends SparkSpec {
     val lakeIndex = Dedup.bandIndex(lake, "doc_id", col("text"),
       k = 5, numPerm = 16, bands = 4).cache()
     val input = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val q = CurationStream.incrementalNearDups(spark,
+    val q = CurationStream.incrementalNearDups(
         input.toDF().toDF("doc_id", "text", "ts"), lakeIndex)
       .writeStream.outputMode("append").format("memory")
       .queryName("inc_near_dups").start()
@@ -552,7 +552,7 @@ class StreamingSpec extends SparkSpec {
     val good = "the quick brown fox jumps over the lazy dog " * 8
     def t(s: String) = java.sql.Timestamp.valueOf(s)
     val input = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val q = CurationStream.windowedReport(spark,
+    val q = CurationStream.windowedReport(
         input.toDF().toDF("doc_id", "text", "ts"), windowLen = "1 hour")
       .writeStream.outputMode("append").format("memory")
       .queryName("funnel_report").start()
@@ -726,258 +726,98 @@ class StreamingSpec extends SparkSpec {
     model.unpersist()
   }
 
-  test("streaming interpolated-KN LM gate scores bit-identically to the batch buckets") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.CurationStream
-    import graft.operators.TextAnalysis
-    implicit val sqlCtx = spark.sqlContext
-    val reference = Seq(
-      "the quick brown fox jumps over the lazy dog",
-      "the quick brown cat naps under the warm sun",
-      "a quick brown fox and a lazy dog meet again")
-      .toDF("text")
-    val docs = Seq(
+  // One stream/batch parity test per interpolated-KN order, each over
+  // its own fixture: docs 1 and 3 are reference-like, doc 2 walks the
+  // full backoff chain, doc 4 is one token short of an n-gram.
+  private val knBuckets = Map(2 -> 256, 3 -> 256, 4 -> 64, 5 -> 32)
+  Seq(
+    (2, "interpolated-KN LM", "n_pairs", Seq(
       (1L, "the quick brown fox jumps again"),
-      (2L, "zzz qqq vvv www unseen gibberish"), // unseen prefixes → backoff
+      (2L, "zzz qqq vvv www unseen gibberish"),
       (3L, "the quick brown cat naps"),
-      (4L, "solo"),
-      (5L, null.asInstanceOf[String]))
-      .toDF("doc_id", "text")
-    // the SAME exported artifact the add-one gate uses — smoothing is a
-    // scoring-side choice, not a different model
-    val model = TextAnalysis.lmTrain(reference, col("text")).cache()
-    val batch = TextAnalysis.lmPerplexityBucketsInterp(
-        docs, "doc_id", col("text"), reference, col("text"))
-      .select(col("doc"), col("n_pairs"), col("nll_micro"),
-        col("mean_micro"))
-      .as[(Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
-    val cut = (batch(1L)._4 + batch(2L)._4) / 2
-    val input = MemoryStream[(Long, String)]
-    val q = CurationStream.lmQualityGateInterp(
-        input.toDF().toDF("doc_id", "text"), model, maxMeanMicro = cut)
-      .select(col("doc_id"), col("n_pairs"), col("nll_micro"),
-        col("mean_micro"), col("lm_pass"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("lm_gate_interp").start()
-    val out = try {
-      input.addData(docs.as[(Long, String)].collect().toSeq: _*)
-      q.processAllAvailable()
-      spark.table("lm_gate_interp")
-        .as[(Long, Option[Long], Option[Long], Option[Long], Boolean)]
-        .collect().map(r => r._1 -> r).toMap
-    } finally q.stop()
-    Seq(1L, 2L, 3L).foreach { id =>
-      assert(out(id)._2.contains(batch(id)._2) &&
-        out(id)._3.contains(batch(id)._3) &&
-        out(id)._4.contains(batch(id)._4),
-        s"doc $id: stream ${out(id)} vs batch ${batch(id)}")
-    }
-    assert(out(1L)._5 && out(3L)._5 && !out(2L)._5, out.toString)
-    assert(out(4L)._2.contains(0L) && !out(4L)._5)
-    assert(out(5L)._2.isEmpty && !out(5L)._5)
-    // the smoothing upgrade is non-vacuous: interpolated scores differ
-    // from add-one on scored docs, and the reference-like doc is CHEAPER
-    // under discounting than the gibberish one by a wider margin
-    val addOne = TextAnalysis.lmPerplexityBuckets(
-        docs, "doc_id", col("text"), reference, col("text"))
-      .select(col("doc"), col("nll_micro"))
-      .as[(Long, Long)].collect().toMap
-    assert(Seq(1L, 2L, 3L).exists(id => addOne(id) != batch(id)._3),
-      "interpolated smoothing collapsed to add-one")
-    model.unpersist()
-  }
-
-  test("streaming trigram interp-KN gate scores bit-identically to the batch buckets") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.CurationStream
-    import graft.operators.TextAnalysis
-    implicit val sqlCtx = spark.sqlContext
-    val reference = Seq(
-      "the quick brown fox jumps over the lazy dog",
-      "the quick brown cat naps under the warm sun",
-      "a quick brown fox and a lazy dog meet again")
-      .toDF("text")
-    val docs = Seq(
+      (4L, "solo"))),
+    (3, "trigram interp-KN", "n_triples", Seq(
       (1L, "the quick brown fox jumps again"),
-      (2L, "zzz qqq vvv www unseen gibberish"), // full backoff chain
+      (2L, "zzz qqq vvv www unseen gibberish"),
       (3L, "the quick brown cat naps"),
-      (4L, "solo duo"),                          // 2 tokens → 0 triples
-      (5L, null.asInstanceOf[String]))
-      .toDF("doc_id", "text")
-    // the exported (b1,b2,b3,c123) artifact is the model — the stream
-    // never sees the reference corpus
-    val model = TextAnalysis.lmTrainTrigram(reference, col("text")).cache()
-    val batch = TextAnalysis.lmPerplexityBucketsTrigram(
-        docs, "doc_id", col("text"), reference, col("text"))
-      .select(col("doc"), col("n_triples"), col("nll_micro"),
-        col("mean_micro"))
-      .as[(Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
-    val cut = (batch(1L)._4 + batch(2L)._4) / 2
-    val input = MemoryStream[(Long, String)]
-    val q = CurationStream.lmQualityGateTrigram(
-        input.toDF().toDF("doc_id", "text"), model, maxMeanMicro = cut)
-      .select(col("doc_id"), col("n_triples"), col("nll_micro"),
-        col("mean_micro"), col("lm_pass"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("lm_gate_tri").start()
-    val out = try {
-      input.addData(docs.as[(Long, String)].collect().toSeq: _*)
-      q.processAllAvailable()
-      spark.table("lm_gate_tri")
-        .as[(Long, Option[Long], Option[Long], Option[Long], Boolean)]
-        .collect().map(r => r._1 -> r).toMap
-    } finally q.stop()
-    Seq(1L, 2L, 3L).foreach { id =>
-      assert(out(id)._2.contains(batch(id)._2) &&
-        out(id)._3.contains(batch(id)._3) &&
-        out(id)._4.contains(batch(id)._4),
-        s"doc $id: stream ${out(id)} vs batch ${batch(id)}")
-    }
-    assert(out(1L)._5 && out(3L)._5 && !out(2L)._5, out.toString)
-    // batch drops the <3-token and null docs; the stream keeps them,
-    // gated false (per-doc verdict contract)
-    assert(!batch.contains(4L) && !batch.contains(5L))
-    assert(out(4L)._2.contains(0L) && out(4L)._4.isEmpty && !out(4L)._5)
-    assert(out(5L)._2.isEmpty && !out(5L)._5)
-    // order-3 is non-vacuous next to order-2: the trigram chain and the
-    // bigram chain disagree on scored docs
-    val bi = TextAnalysis.lmPerplexityBucketsInterp(
-        docs, "doc_id", col("text"), reference, col("text"))
-      .select(col("doc"), col("nll_micro")).as[(Long, Long)]
-      .collect().toMap
-    assert(Seq(1L, 2L, 3L).exists(id => bi(id) != batch(id)._3),
-      "trigram chain collapsed to the bigram scores")
-    model.unpersist()
-  }
-
-  test("streaming 4-gram interp-KN gate scores bit-identically to the batch buckets") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.CurationStream
-    import graft.operators.TextAnalysis
-    implicit val sqlCtx = spark.sqlContext
-    val reference = Seq(
-      "the quick brown fox jumps over the lazy dog",
-      "the quick brown cat naps under the warm sun",
-      "a quick brown fox and a lazy dog meet again")
-      .toDF("text")
-    val docs = Seq(
+      (4L, "solo duo"))),
+    (4, "4-gram interp-KN", "n_quads", Seq(
       (1L, "the quick brown fox jumps again"),
-      (2L, "zzz qqq vvv www unseen gibberish"), // full backoff chain
+      (2L, "zzz qqq vvv www unseen gibberish"),
       (3L, "the quick brown cat naps"),
-      (4L, "one two three"),                     // 3 tokens → 0 quads
-      (5L, null.asInstanceOf[String]))
-      .toDF("doc_id", "text")
-    // the exported (b1,b2,b3,b4,c1234) artifact is the model — the
-    // stream never sees the reference corpus
-    val model = TextAnalysis.lmTrainQuadgram(reference, col("text")).cache()
-    val batch = TextAnalysis.lmPerplexityBucketsQuadgram(
-        docs, "doc_id", col("text"), reference, col("text"))
-      .select(col("doc"), col("n_quads"), col("nll_micro"),
-        col("mean_micro"))
-      .as[(Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
-    val cut = (batch(1L)._4 + batch(2L)._4) / 2
-    val input = MemoryStream[(Long, String)]
-    val q = CurationStream.lmQualityGateQuadgram(
-        input.toDF().toDF("doc_id", "text"), model, maxMeanMicro = cut)
-      .select(col("doc_id"), col("n_quads"), col("nll_micro"),
-        col("mean_micro"), col("lm_pass"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("lm_gate_quad").start()
-    val out = try {
-      input.addData(docs.as[(Long, String)].collect().toSeq: _*)
-      q.processAllAvailable()
-      spark.table("lm_gate_quad")
-        .as[(Long, Option[Long], Option[Long], Option[Long], Boolean)]
-        .collect().map(r => r._1 -> r).toMap
-    } finally q.stop()
-    Seq(1L, 2L, 3L).foreach { id =>
-      assert(out(id)._2.contains(batch(id)._2) &&
-        out(id)._3.contains(batch(id)._3) &&
-        out(id)._4.contains(batch(id)._4),
-        s"doc $id: stream ${out(id)} vs batch ${batch(id)}")
-    }
-    assert(out(1L)._5 && out(3L)._5 && !out(2L)._5, out.toString)
-    // batch drops the <4-token and null docs; the stream keeps them,
-    // gated false (per-doc verdict contract)
-    assert(!batch.contains(4L) && !batch.contains(5L))
-    assert(out(4L)._2.contains(0L) && out(4L)._4.isEmpty && !out(4L)._5)
-    assert(out(5L)._2.isEmpty && !out(5L)._5)
-    // order-4 is non-vacuous next to order-3: the chains disagree on
-    // scored docs (different bucket width AND one more backoff level)
-    val tri = TextAnalysis.lmPerplexityBucketsTrigram(
-        docs, "doc_id", col("text"), reference, col("text"))
-      .select(col("doc"), col("nll_micro")).as[(Long, Long)]
-      .collect().toMap
-    assert(Seq(1L, 2L, 3L).exists(id => tri(id) != batch(id)._3),
-      "4-gram chain collapsed to the trigram scores")
-    model.unpersist()
-  }
-
-  test("streaming 5-gram interp-KN gate scores bit-identically to the batch buckets") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.CurationStream
-    import graft.operators.TextAnalysis
-    implicit val sqlCtx = spark.sqlContext
-    val reference = Seq(
-      "the quick brown fox jumps over the lazy dog",
-      "the quick brown cat naps under the warm sun",
-      "a quick brown fox and a lazy dog meet again")
-      .toDF("text")
-    val docs = Seq(
+      (4L, "one two three"))),
+    (5, "5-gram interp-KN", "n_quints", Seq(
       (1L, "the quick brown fox jumps over again"),
-      (2L, "zzz qqq vvv www unseen gibberish"), // full backoff chain
+      (2L, "zzz qqq vvv www unseen gibberish"),
       (3L, "the quick brown cat naps under"),
-      (4L, "one two three four"),               // 4 tokens → 0 quints
-      (5L, null.asInstanceOf[String]))
-      .toDF("doc_id", "text")
-    // the exported (b1..b5,c12345) artifact is the model — the stream
-    // never sees the reference corpus
-    val model = TextAnalysis.lmTrainQuintgram(reference, col("text")).cache()
-    val batch = TextAnalysis.lmPerplexityBucketsQuintgram(
-        docs, "doc_id", col("text"), reference, col("text"))
-      .select(col("doc"), col("n_quints"), col("nll_micro"),
-        col("mean_micro"))
-      .as[(Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
-    val cut = (batch(1L)._4 + batch(2L)._4) / 2
-    val input = MemoryStream[(Long, String)]
-    val q = CurationStream.lmQualityGateQuintgram(
-        input.toDF().toDF("doc_id", "text"), model, maxMeanMicro = cut)
-      .select(col("doc_id"), col("n_quints"), col("nll_micro"),
-        col("mean_micro"), col("lm_pass"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("lm_gate_quint").start()
-    val out = try {
-      input.addData(docs.as[(Long, String)].collect().toSeq: _*)
-      q.processAllAvailable()
-      spark.table("lm_gate_quint")
-        .as[(Long, Option[Long], Option[Long], Option[Long], Boolean)]
-        .collect().map(r => r._1 -> r).toMap
-    } finally q.stop()
-    Seq(1L, 2L, 3L).foreach { id =>
-      assert(out(id)._2.contains(batch(id)._2) &&
-        out(id)._3.contains(batch(id)._3) &&
-        out(id)._4.contains(batch(id)._4),
-        s"doc $id: stream ${out(id)} vs batch ${batch(id)}")
+      (4L, "one two three four")))
+  ).foreach { case (order, label, nCol, texts) =>
+    test(s"streaming $label gate scores bit-identically to the batch buckets") {
+      import spark.implicits._
+      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+      import graft.streaming.CurationStream
+      import graft.operators.TextAnalysis
+      implicit val sqlCtx = spark.sqlContext
+      val reference = Seq(
+        "the quick brown fox jumps over the lazy dog",
+        "the quick brown cat naps under the warm sun",
+        "a quick brown fox and a lazy dog meet again")
+        .toDF("text")
+      val docs = (texts :+ ((5L, null.asInstanceOf[String])))
+        .toDF("doc_id", "text")
+      def batchAt(o: Int) = TextAnalysis.lmPerplexityBucketsKN(
+        docs, "doc_id", col("text"), reference, col("text"), o, knBuckets(o))
+      // the exported (b1..bn, c12…n) artifact is the model — the stream
+      // never sees the reference corpus; at order 2 it is the SAME
+      // artifact the add-one gate uses
+      val model = TextAnalysis.lmTrain(reference, col("text"), order,
+        knBuckets(order)).cache()
+      val batch = batchAt(order)
+        .select(col("doc"), col(nCol), col("nll_micro"), col("mean_micro"))
+        .as[(Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
+      // threshold between the clean and gibberish means: the gate
+      // decision must fire BOTH ways (the q131 non-vacuity lesson)
+      val cut = (batch(1L)._4 + batch(2L)._4) / 2
+      val input = MemoryStream[(Long, String)]
+      val q = CurationStream.lmQualityGateKN(
+          input.toDF().toDF("doc_id", "text"), model, order,
+          maxMeanMicro = cut, buckets = knBuckets(order))
+        .select(col("doc_id"), col(nCol), col("nll_micro"),
+          col("mean_micro"), col("lm_pass"))
+        .writeStream.outputMode("append").format("memory")
+        .queryName(s"lm_gate_kn$order").start()
+      val out = try {
+        input.addData(docs.as[(Long, String)].collect().toSeq: _*)
+        q.processAllAvailable()
+        spark.table(s"lm_gate_kn$order")
+          .as[(Long, Option[Long], Option[Long], Option[Long], Boolean)]
+          .collect().map(r => r._1 -> r).toMap
+      } finally q.stop()
+      Seq(1L, 2L, 3L).foreach { id =>
+        assert(out(id)._2.contains(batch(id)._2) &&
+          out(id)._3.contains(batch(id)._3) &&
+          out(id)._4.contains(batch(id)._4),
+          s"doc $id: stream ${out(id)} vs batch ${batch(id)}")
+      }
+      assert(out(1L)._5 && out(3L)._5 && !out(2L)._5, out.toString)
+      // batch drops the <n-token and null docs; the stream keeps them,
+      // gated false (per-doc verdict contract)
+      assert(!batch.contains(4L) && !batch.contains(5L))
+      assert(out(4L)._2.contains(0L) && out(4L)._4.isEmpty && !out(4L)._5,
+        out(4L).toString)
+      assert(out(5L)._2.isEmpty && !out(5L)._5, out(5L).toString)
+      // non-vacuous next to the scorer one step down: order n−1 (a
+      // different bucket width and one backoff level less), and add-one
+      // smoothing at order 2
+      val lower = (if (order == 2) TextAnalysis.lmPerplexityBuckets(
+          docs, "doc_id", col("text"), reference, col("text"))
+        else batchAt(order - 1))
+        .select(col("doc"), col("nll_micro")).as[(Long, Long)]
+        .collect().toMap
+      assert(Seq(1L, 2L, 3L).exists(id => lower(id) != batch(id)._3),
+        s"order-$order interpolated chain collapsed to the scores one step down")
+      model.unpersist()
     }
-    assert(out(1L)._5 && out(3L)._5 && !out(2L)._5, out.toString)
-    // batch drops the <5-token and null docs; the stream keeps them,
-    // gated false (per-doc verdict contract)
-    assert(!batch.contains(4L) && !batch.contains(5L))
-    assert(out(4L)._2.contains(0L) && out(4L)._4.isEmpty && !out(4L)._5)
-    assert(out(5L)._2.isEmpty && !out(5L)._5)
-    // order-5 is non-vacuous next to order-4: the chains disagree on
-    // scored docs (different bucket width AND one more backoff level)
-    val quad = TextAnalysis.lmPerplexityBucketsQuadgram(
-        docs, "doc_id", col("text"), reference, col("text"))
-      .select(col("doc"), col("nll_micro")).as[(Long, Long)]
-      .collect().toMap
-    assert(Seq(1L, 2L, 3L).exists(id => quad(id) != batch(id)._3),
-      "5-gram chain collapsed to the 4-gram scores")
-    model.unpersist()
   }
 
   test("streaming Moore-Lewis CED gate scores bit-identically to the batch selection") {
