@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftShims}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Expression, SortOrder}
 
 /** Bridge between the Column API and raw Catalyst expressions (Spark 4
   * split Column from Expression behind ColumnNode; GraftShims crosses it
@@ -24,6 +24,15 @@ object Native {
   /** Bounded two-phase top-k aggregate (see [[TopKByScore]]). */
   def topKByScore(score: Column, id: Column, k: Int): Column =
     column(TopKByScore(expr(score), expr(id), k).toAggregateExpression())
+
+  /** Keep-last arg-max aggregate (see [[KeepLast]]): the `payload` of
+    * the row ranked first by `order`; an order column without a
+    * direction ranks ascending, as in `Window.orderBy`. */
+  def keepLast(order: Seq[Column], payload: Seq[Column]): Column =
+    column(KeepLast(order.map(expr(_) match {
+      case s: SortOrder => s
+      case e => SortOrder(e, Ascending)
+    }), payload.map(expr)).toAggregateExpression())
 
   /** Fused within-bucket cosine pair generator (see [[CosinePairsWithin]]). */
   def cosinePairsWithin(bucket: Column, threshold: Double): Column =

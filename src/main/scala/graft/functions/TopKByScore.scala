@@ -52,7 +52,11 @@ final class TopKBuffer(val k: Int) {
   * (map-side partial aggregation under ObjectHashAggregate), so the
   * shuffle carries at most k rows per group per map partition and no
   * task ever holds more than k·|groups-in-partition| entries — bounded
-  * state, no sort of the full group anywhere.
+  * state per group. It is not sort-free: once a task's hash map holds
+  * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` (128)
+  * groups, ObjectHashAggregate falls back to sorting the task's
+  * remaining input by group key (`numTasksFallBacked` in its SQL
+  * metrics counts the tasks that did).
   *
   * Ordering matches the window formulation exactly (score desc, id asc
   * tie-break), so rank = array position + 1 reproduces `row_number`.

@@ -2,9 +2,14 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.GraftShims.materialize
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
+
+import graft.functions.{KeepLast, Native}
 
 /** The reference's relational transform surface (SURVEY.md §2.3–§2.4),
   * re-expressed as composable lazy DataFrame stages. Every stage is
@@ -89,33 +94,70 @@ object Relational {
 
   /** O18 — multi-key global sort
     * (/root/reference/lime_survey_orders_shipped.py:69). Range-partitioned
-    * shuffle; when only feeding keep-last dedup, skip this and let the
-    * window's hash partitioning do the work (see [[keepLast]]). */
+    * shuffle. A sort that only feeds keep-last dedup is not needed at
+    * all: [[keepLast]] ranks within each key itself. */
   def sortBy(keys: Seq[Column])(df: DataFrame): DataFrame = df.orderBy(keys: _*)
 
   /** O18+O19 — deterministic keep-last dedup per key
     * (`sort_values(...)` + `drop_duplicates(keep='last')`,
-    * /root/reference/lime_survey_orders_shipped.py:69-70): latest `order`
-    * columns win per key; ties broken by an explicit ingest-position column
-    * (pandas keep-last is position-stable; Spark `dropDuplicates` is
-    * order-nondeterministic — SURVEY.md §7.4.1).
-    *
-    * One hash-partition shuffle on `keys`; no global sort. At scale this is
-    * the right plan: the window sort is per-partition and spills, and AQE
-    * handles key skew.
+    * the reference's `lime_survey_orders_shipped.py:69-70`): per key,
+    * the row that ranks first under `order` wins. Output columns, their order
+    * and types are the input's.
     *
     * Contract: `order` must rank the WINNER first — the row kept is
     * `row_number() == 1` under the given order, so keep-last of an
     * ascending column is spelled `col("date").desc` (as every in-repo
-    * caller does); passing the pandas-style ascending sort directly
-    * would keep the earliest row instead.
+    * caller does). The order must be total within a key: two rows of one
+    * key that tie on the whole order RAISE
+    * [[graft.functions.KeepLast.TieMessage]] in both forms below, so end
+    * the order with a unique tie-breaker such as an ingest position
+    * (pandas keep-last is position-stable; Spark `dropDuplicates` is
+    * order-nondeterministic — SURVEY.md §7.4.1).
+    *
+    * Two plans, chosen from the input schema:
+    *  - every non-key column and every order value fixed-width (the
+    *    planner's own `Aggregate.supportsHashAggregate` test): one
+    *    [[graft.functions.KeepLast]] arg-max aggregate —
+    *    `HashAggregate` (partial) → `Exchange` → `HashAggregate`, no sort.
+    *    The optimizer cannot prune columns out of an aggregate buffer, so
+    *    callers select only the columns they use BEFORE calling this;
+    *  - otherwise (a string payload, say) `row_number()` over a window:
+    *    a per-key sort after one hash shuffle, with a `WindowGroupLimit`
+    *    of 2 rows per key on each side of it. A string buffer would plan
+    *    a `SortAggregate` that is not code-generated, which measured
+    *    slower than the window. `rank()` over the same window checks the
+    *    second row for the tie.
     */
   def keepLast(keys: Seq[String], order: Seq[Column])(df: DataFrame): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
+    val rest = df.schema.filterNot(f => keys.contains(f.name))
+    lazy val hashed = df.groupBy(keys.map(col): _*).agg(
+      Native.keepLast(order, rest.map(f => col(f.name))).as("__kl"))
+    // a variable-width payload column rules the hash form out without
+    // analysing the aggregate
+    if (keys.nonEmpty && rest.forall(f => UnsafeRow.isMutable(f.dataType)) &&
+        hashAggregable(hashed))
+      hashed.select(df.columns.toSeq.map(c =>
+        if (keys.contains(c)) col(c) else col("__kl").getField(c).as(c)): _*)
+    else {
+      val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
+      df.select(col("*"), row_number().over(w).as("__rn"), rank().over(w).as("__rk"))
+        .filter(col("__rn") <= 2 &&
+          when(col("__rn") === 2 && col("__rk") === 1,
+            raise_error(lit(KeepLast.TieMessage))).otherwise(col("__rn") === 1))
+        .drop("__rn", "__rk")
+    }
   }
+
+  /** Whether Spark plans `agg`'s aggregate as a `HashAggregate`: every
+    * buffer field is fixed-width, the test its planner applies. */
+  private def hashAggregable(agg: DataFrame): Boolean =
+    agg.queryExecution.analyzed match {
+      case a: Aggregate => Aggregate.supportsHashAggregate(
+        a.aggregateExpressions.flatMap(_.collect {
+          case ae: AggregateExpression => ae.aggregateFunction.aggBufferAttributes
+        }.flatten), a.groupingExpressions)
+      case _ => false
+    }
 
   /** Top-k under a total order — generalizes O18 sort + O5's iLimit.
     * Spark plans this as TakeOrderedAndProject: per-partition top-k then a
@@ -131,21 +173,21 @@ object Relational {
     * "replace by key".
     *
     * NOT a full-outer join: both sides are tagged and unioned, then ONE
-    * aggregate per key keeps `max_by(row, (priority, version))` — a
-    * single shuffle with map-side partial aggregation, no join
-    * operator, and the change set never needs to be broadcast (at 100 TB
-    * a CDC batch can itself be huge). It is a SORT aggregate, not a hash
-    * aggregate: a struct buffer is not mutable, so Spark 4.1 plans
-    * SortAggregate(partial) → Sort → Exchange → Sort → SortAggregate.
-    * Within the source, the highest `versionCol` wins (a CDC batch may
+    * [[keepLast]] per key under `(priority desc, version desc)` — a
+    * single shuffle with a map-side reduction, no join operator, and the
+    * change set never needs to be broadcast (at 100 TB a CDC batch can
+    * itself be huge). Which keep-last form runs follows the table's
+    * columns: a hash aggregate when all are fixed-width, the window
+    * otherwise. Within the source, the highest `versionCol` wins (a CDC batch may
     * carry several updates for one key); target rows all carry version
-    * −∞ via the priority tag.
+    * −∞ via the priority tag, so two target rows of one key tie and
+    * raise keep-last's error: the target's keys must be unique.
     * Determinism is ENFORCED, not assumed (round 13: the 10× rehearsal
     * corpus manufactured a (key, version) tie between two source rows
     * and the engines silently diverged on which row won): two source
     * rows sharing (key, version) RAISE — the Delta MERGE
     * "multiple source rows matched" contract — instead of letting
-    * `max_by` pick one arbitrarily. Callers feed an ingest position as
+    * keep-last pick one arbitrarily. Callers feed an ingest position as
     * the version, exactly like [[keepLast]]. The guard costs one extra
     * source-side aggregate (the source pre-collapses to one row per
     * (key, version)); the target side keeps its single-shuffle
@@ -172,11 +214,8 @@ object Relational {
             "nondeterministic; feed a unique ingest position as the " +
             "version (see scaladoc)')").cast("long"))
           .otherwise(col("__ver")).as("__ver")): _*)
-    t2.unionByName(s2)
-      .groupBy(keys.map(col): _*)
-      .agg(max_by(struct(dataCols.map(col): _*),
-        struct(col("__pri"), col("__ver"))).as("__row"))
-      .select(dataCols.map(c => col(s"__row.$c").as(c)): _*)
+    keepLast(keys, Seq(col("__pri").desc, col("__ver").desc))(t2.unionByName(s2))
+      .select(dataCols.map(col): _*)
   }
 
   /** Unpivot / melt — wide measure columns to (metric, value) rows, the
@@ -286,8 +325,8 @@ object Relational {
     * transaction log derives a change feed from day-N vs day-N+1 loads.
     *
     * Same single-shuffle shape as [[mergeUpsert]]: tagged union + one
-    * aggregate picking each side's row per key (a sort aggregate, like
-    * mergeUpsert's: struct buffers are not hash-aggregable) — no join
+    * aggregate picking each side's row per key (a sort aggregate: struct
+    * buffers are not hash-aggregable) — no join
     * operator, neither snapshot broadcast. Comparison is null-safe struct
     * equality over ALL non-key columns. Keys MUST be unique within
     * each snapshot (snapshot semantics); a duplicate key on either

@@ -90,11 +90,13 @@ object ReferenceQueries {
         Tables.orders(s, d).select("o_orderkey", "o_totalprice")),
       "SELECT o_orderkey, o_totalprice FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 100"),
 
-    // O18+O19 — deterministic keep-last dedup per key
+    // O18+O19 — deterministic keep-last dedup per key. Pruned first:
+    // with fixed-width columns only, keep-last is one hash aggregate,
+    // and no column can be pruned out of its buffer afterwards.
     Query("q11_keeplast", (s, d) =>
       Relational.keepLast(Seq("o_custkey"),
         Seq(col("o_orderdate").desc, col("o_orderkey").desc))(
-        Tables.orders(s, d))
+        Tables.orders(s, d).select("o_custkey", "o_orderdate", "o_orderkey"))
         .select(col("o_custkey"), col("o_orderkey").as("latest_orderkey"),
           date_format(col("o_orderdate"), "yyyy-MM-dd").as("latest_date")),
       "SELECT o_custkey, o_orderkey AS latest_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS latest_date FROM (SELECT *, row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn FROM orders) WHERE rn = 1"),

@@ -262,9 +262,14 @@ class DataSourceV2Spec extends SparkSpec {
   test("the whole survey pipeline runs off the DSv2 source") {
     // connector rows -> the same transform chain the spool path uses
     val df = read("responses")
-    val flat = df.select(lit(0L).as("_ingest_pos"), col("index"),
-      map(df.columns.toSeq.filterNot(_ == "index")
-        .flatMap(c => Seq(lit(c), col(c))): _*).as("rec"))
+    // each response keeps its position in the read as `_ingest_pos`,
+    // the keep-last tie-breaker, by the posexplode the spool path uses
+    val flat = df.select(collect_list(struct(df.columns.toSeq.map(col): _*)).as("rs"))
+      .select(posexplode(col("rs")).as(Seq("_ingest_pos", "r")))
+      .select(col("_ingest_pos").cast("long").as("_ingest_pos"),
+        col("r").getField("index").as("index"),
+        map(df.columns.toSeq.filterNot(_ == "index")
+          .flatMap(c => Seq(lit(c), col("r").getField(c))): _*).as("rec"))
     val wide = flat.select(col("_ingest_pos"), col("index"),
       col("rec")("id").as("id"), col("rec")("datestamp").as("datestamp"),
       col("rec")("q01").as("q01"), col("rec")("q03").as("q03"),

@@ -74,10 +74,12 @@ class PlanAuditSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"))
   }
 
-  test("q11 keep-last: exactly one shuffle (window partitioning), no sort-merge join") {
+  test("q11 keep-last: partial + final HashAggregate around one shuffle, no sort or window") {
     val plan = planOf("q11_keeplast")
     assert(countOf("Exchange hashpartitioning", plan) == 1, plan.take(800))
-    assert(plan.contains("RunningWindowFunction") || plan.contains("Window"))
+    assert(countOf("HashAggregate", plan) == 2, plan.take(800))
+    // "Sort" also catches SortAggregate; "Window" also WindowGroupLimit
+    assert(!plan.contains("Sort") && !plan.contains("Window"), plan.take(800))
   }
 
   test("q10 top-k plans as TakeOrderedAndProject (no global sort shuffle)") {
@@ -366,17 +368,20 @@ class PlanAuditSpec extends SparkSpec {
     assert(plan.contains("RangeFrame"), plan.take(1200))
   }
 
-  test("q77 merge: union + one hash aggregate, no join operator") {
+  test("q77 merge: union + one keep-last per key, no join operator") {
     val plan = planOf("q77_merge_upsert")
     assert(!plan.contains("Join"), plan.take(1200))
     // merge exchange + the round-13 source-side (key, version)
     // uniqueness guard aggregate's exchange
     assert(countOf("Exchange hashpartitioning", plan) == 2, plan.take(1200))
-    // map-side partial aggregation is present: struct max_by plans as
-    // SortAggregate (no mutable hash buffer for struct ordering), but
-    // the partial_max_by below the exchange is what bounds shuffle
-    // volume to one row per key per partition
-    assert(plan.contains("partial_max_by"), plan.take(1200))
+    // the merge is keepLast over the union; orders carries strings, so
+    // it is the window form, whose map-side WindowGroupLimit below the
+    // exchange bounds shuffle volume to two rows per key per partition
+    val lines = plan.linesIterator.toSeq
+    val merge = lines.indexWhere(_.contains("Window "))
+    assert(merge >= 0, plan.take(1200))
+    assert(lines.drop(merge).dropWhile(!_.contains("Exchange hashpartitioning"))
+      .exists(_.contains("WindowGroupLimit")), plan.take(1200))
   }
 
   test("q79 bloom: the sketch probe filters the fact scan BELOW the join") {

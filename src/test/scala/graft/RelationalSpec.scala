@@ -110,13 +110,20 @@ class RelationalSpec extends SparkSpec {
     // two source rows on ONE (key, version): the merge would be
     // nondeterministic (the sf1-rehearsal divergence, round 13) — the
     // operator must raise the Delta-MERGE contract error, not let
-    // max_by pick a winner
+    // keep-last pick a winner
     val tied = source.union(
       Seq((2L, "new-2c", 23.0, 2L)).toDF("k", "s", "v", "ver"))
     val e = intercept[Exception] {
       Relational.mergeUpsert(target, tied, Seq("k"), col("ver")).collect()
     }
     assert(e.getMessage.contains("mergeUpsert"), e.getMessage)
+    // two TARGET rows of one key tie on (priority, version): keep-last's
+    // tie error, not an arbitrary survivor
+    val dupTarget = target.union(Seq((3L, "old-3b", 31.0)).toDF("k", "s", "v"))
+    val e2 = intercept[Exception] {
+      Relational.mergeUpsert(dupTarget, source, Seq("k"), col("ver")).collect()
+    }
+    assert(e2.getMessage.contains(graft.functions.KeepLast.TieMessage), e2.getMessage)
   }
 
   test("mergePartialAggs == aggregate of the union, for sum/min/max algebra") {
