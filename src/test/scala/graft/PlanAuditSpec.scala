@@ -74,6 +74,15 @@ class PlanAuditSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"))
   }
 
+  test("q11 keep-last: exactly one shuffle (window partitioning), no sort-merge join") {
+    // keep-last partitions by key once, whichever form plans it (the
+    // row_number() window or the arg-max hash aggregate below), and
+    // never turns into a self-join against a per-key max
+    val plan = planOf("q11_keeplast")
+    assert(countOf("Exchange hashpartitioning", plan) == 1, plan.take(800))
+    assert(!plan.contains("Join"), plan.take(800))
+  }
+
   test("q11 keep-last: partial + final HashAggregate around one shuffle, no sort or window") {
     val plan = planOf("q11_keeplast")
     assert(countOf("Exchange hashpartitioning", plan) == 1, plan.take(800))
