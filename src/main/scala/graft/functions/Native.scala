@@ -47,6 +47,11 @@ object Native {
   def idPairsPacked(bucket: Column): Column =
     column(IdPairsPacked(expr(bucket)))
 
+  /** `get_json_object(json, '$.key')` for one top-level key, on a byte
+    * scan instead of a per-row Jackson parser (see [[JsonField]]). */
+  def jsonField(json: Column, key: String): Column =
+    column(JsonField(expr(json), key))
+
   /** Fused 56-bit engine-portable md5 hash (see [[Md5Long]]). */
   def md5Long(c: Column): Column =
     column(Md5Long(expr(c)))

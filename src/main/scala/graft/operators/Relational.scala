@@ -31,31 +31,9 @@ object Relational {
   def dropNullsAny(df: DataFrame): DataFrame = df.na.drop("any")
 
   /** O11 — drop nulls on a column subset (`dropna(subset=...)`,
-    * /root/reference/lime_survey_nps.py:70).
-    *
-    * `pushable = false` pins the null filter where it is written
-    * ([[Parallelism.unpushable]]) instead of letting Catalyst push it
-    * toward the scan — for the case where the subset columns are
-    * computed by heavy narrow expressions above a
-    * [[Parallelism.ensure]] widening: pushing the filter would
-    * substitute those expressions into the predicate and drag them
-    * below the exchange onto the single scan task. Default stays
-    * pushable — on a plain scan the filter belongs in the reader. */
-  def dropNulls(subset: Seq[String], pushable: Boolean = true)(
-      df: DataFrame): DataFrame =
-    if (pushable) df.na.drop("any", subset)
-    else df.filter(Parallelism.unpushable(
-      // exact na.drop semantics: it drops NaN as well as null on
-      // float/double columns, so the pinned predicate must too — the
-      // flag changes plan-time mobility only, never the row set
-      subset.map { c =>
-        df.schema(c).dataType match {
-          case org.apache.spark.sql.types.DoubleType |
-               org.apache.spark.sql.types.FloatType =>
-            col(c).isNotNull && !isnan(col(c))
-          case _ => col(c).isNotNull
-        }
-      }.reduce(_ && _)))
+    * /root/reference/lime_survey_nps.py:70). */
+  def dropNulls(subset: Seq[String])(df: DataFrame): DataFrame =
+    df.na.drop("any", subset)
 
   /** O12 — bulk rename (`rename(columns=dict)`,
     * /root/reference/lime_survey_orders_shipped.py:60-66). */

@@ -662,7 +662,7 @@ object Similarity {
     // unpushable: a plain `__ov > 0` is deterministic, so Catalyst would
     // substitute the tokenize/intersect expression into it and push the
     // whole computation below the widening exchange onto the single
-    // scan task — the exact q03 trap Parallelism.unpushable exists for
+    // scan task — the substitution trap Parallelism.unpushable exists for
     val lexCand = Parallelism.ensure(
       docs.select(col(idCol).as("id"), text.as("__t")))
       .select(col("id"), overlap(col("__t")).as("__ov"))

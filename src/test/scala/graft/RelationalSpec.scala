@@ -24,27 +24,6 @@ class RelationalSpec extends SparkSpec {
     assert(out.map(_.getString(2)).toSeq == Seq("x"))
   }
 
-  test("dropNulls pushable=false keeps identical rows and survives optimization") {
-    // a real file scan, not a LocalRelation — the optimizer eagerly
-    // evaluates filters over local data, which would erase the barrier
-    // this test exists to pin
-    val dir = java.nio.file.Files.createTempDirectory("graft_pushable").toString
-    Seq(("a", null: String, "x"), (null, "b", "y"), ("c", "d", "z"))
-      .toDF("email", "nps", "other").write.mode("overwrite").parquet(dir)
-    val df = spark.read.parquet(dir)
-    val pushed = Relational.dropNulls(Seq("email", "nps"))(df).collect().toSet
-    val pinned = Relational.dropNulls(Seq("email", "nps"), pushable = false)(df)
-    assert(pinned.collect().toSet == pushed)
-    // the barrier must survive the optimizer (Spark folds rand()-based
-    // always-false terms; the partition-id form must not fold away)
-    val cond = pinned.queryExecution.optimizedPlan.toString
-    assert(cond.contains("SPARK_PARTITION_ID"), cond.take(600))
-    // and the scan must NOT receive the null filters as pushed filters
-    val scan = pinned.queryExecution.executedPlan.toString
-      .linesIterator.find(_.contains("PushedFilters")).getOrElse("")
-    assert(!scan.contains("IsNotNull"), scan)
-  }
-
   test("renameAll renames en masse (O12)") {
     val df = Seq((1, 2)).toDF("a", "b")
     val out = Relational.renameAll(Map("a" -> "x", "b" -> "y"))(df)
