@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.GraftListenerShims
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import scala.collection.mutable
+import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
 
 /** Automated one-task-stage sweep over every declared query.
   *
@@ -54,12 +51,8 @@ object StageAudit {
   val SkewMaxRatio = 4.0
   val SkewMinTasks = 4
 
-  final case class StageRow(name: String, tasks: Int, taskMs: Long,
-      maxTaskMs: Long = 0L, medTaskMs: Long = 0L) {
-    def skewRatio: Double = maxTaskMs.toDouble / math.max(1L, medTaskMs)
-  }
   final case class QueryAudit(query: String, totalTaskMs: Long,
-      worst: Option[StageRow], skewWorst: Option[StageRow] = None) {
+      worst: Option[QueryTrace.Stage], skewWorst: Option[QueryTrace.Stage]) {
     def worstSingleTaskMs: Long = worst.map(_.taskMs).getOrElse(0L)
     def fraction: Double =
       if (totalTaskMs <= 0) 0.0 else worstSingleTaskMs.toDouble / totalTaskMs
@@ -120,39 +113,22 @@ object StageAudit {
     // wide alternative measured worse or impossible.
   )
 
-  def attach(spark: SparkSession): (mutable.ArrayBuffer[StageRow], SparkListener) = {
-    val buf = mutable.ArrayBuffer.empty[StageRow]
-    // per-task runtimes, keyed by stageId, drained when the stage
-    // completes — feeds the max/median skew statistic (guide §2.5)
-    val taskMs = mutable.Map.empty[Int, mutable.ArrayBuffer[Long]]
-    val l = new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) buf.synchronized {
-          taskMs.getOrElseUpdate(te.stageId, mutable.ArrayBuffer.empty) +=
-            te.taskMetrics.executorRunTime
-        }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val i = sc.stageInfo
-        buf.synchronized {
-          val ts = taskMs.remove(i.stageId).map(_.toVector.sorted)
-            .getOrElse(Vector.empty)
-          buf += StageRow(i.name.takeWhile(_ != '\n').take(90), i.numTasks,
-            i.taskMetrics.executorRunTime,
-            maxTaskMs = ts.lastOption.getOrElse(0L),
-            medTaskMs = if (ts.isEmpty) 0L else ts(ts.size / 2))
-        }
-      }
+  /** Audit one DataFrame action, traced with AQE off: its total task
+    * time, its heaviest one-task stage, and its worst skewed multi-task
+    * stage, if any clears the structural conditions (width + ratio); the
+    * caller's floor ([[QueryAudit.skewsAt]]) decides whether that one
+    * registers. [[sweep]] audits each query through it, and
+    * StageAuditSpec's negative controls plant known traps and assert it
+    * flags them — proof the sweep's thresholds bind non-vacuously. */
+  def auditOne(spark: SparkSession, name: String, df: => DataFrame): QueryAudit =
+    Profiles.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
+      val (_, QueryTrace.Trace(_, stages)) =
+        QueryTrace.of(spark)(df.write.mode("overwrite").format("noop").save())
+      QueryAudit(name, stages.map(_.taskMs).sum,
+        stages.filter(_.tasks == 1).sortBy(-_.taskMs).headOption,
+        stages.filter(s => s.tasks >= SkewMinTasks && s.skewRatio >= SkewMaxRatio)
+          .sortBy(-_.maxTaskMs).headOption)
     }
-    spark.sparkContext.addSparkListener(l)
-    (buf, l)
-  }
-
-  /** The worst skewed multi-task stage of a query's stage rows, if any
-    * clears the structural conditions (width + ratio); the caller's
-    * floor ([[QueryAudit.skewsAt]]) decides whether it registers. */
-  def worstSkew(rows: Seq[StageRow]): Option[StageRow] =
-    rows.filter(r => r.tasks >= SkewMinTasks && r.skewRatio >= SkewMaxRatio)
-      .sortBy(-_.maxTaskMs).headOption
 
   /** Run each of `queries` ([[SparkEntry.select]]: the declared queries
     * SPARK_GRAFT_ONLY names, or all of them) once under `spark` and
@@ -166,66 +142,43 @@ object StageAudit {
     // (pushdown below a widening exchange), not one AQE chose because
     // the data is small.
     Profiles.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
-      // Warm the JVM + parquet + noop-write paths BEFORE attaching the
-      // listener: without it the alphabetically-first query's one scan
+      // Warm the JVM + parquet + noop-write paths BEFORE the first
+      // traced query: without it the alphabetically-first query's one scan
       // task absorbs ~400 ms of one-time JIT/initialization and reads as
       // a fake violation (q01_project, a 3-column projection, measured
       // 444 ms single-task cold vs ~20 ms warm).
       spark.range(2000000).selectExpr("sum(id * 2)").collect()
       spark.read.parquet(s"$sfDir/nation.parquet").groupBy("n_regionkey")
         .count().write.mode("overwrite").format("noop").save()
-      val (buf, listener) = attach(spark)
-      try {
-        def auditQuery(name: String,
-            fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): QueryAudit = {
-          buf.synchronized(buf.clear())
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          GraftListenerShims.waitListenerBusEmpty(spark.sparkContext)
-          val rows = buf.synchronized(buf.toVector)
-          // free this query's checkpoint blocks: 224 queries of pinned
-          // blocks in the SHARED 8g test JVM drove multi-second GC pauses
-          // that inflated later queries' single scan task past the
-          // 400 ms floor, a fake violation
-          org.apache.spark.sql.GraftShims.release(spark)
-          val total = rows.map(_.taskMs).sum
-          val worst = rows.filter(_.tasks == 1).sortBy(-_.taskMs).headOption
-          QueryAudit(name, total, worst, worstSkew(rows))
+      def auditQuery(name: String, fn: (SparkSession, String) => DataFrame): QueryAudit = {
+        val audit = auditOne(spark, name, fn(spark, sfDir))
+        // free this query's checkpoint blocks: 224 queries of pinned
+        // blocks in the SHARED 8g test JVM drove multi-second GC pauses
+        // that inflated later queries' single scan task past the
+        // 400 ms floor, a fake violation
+        GraftShims.release(spark)
+        audit
+      }
+      val first = queries.toSeq.sortBy(_._1)
+        .map { case (name, fn) => auditQuery(name, fn) }
+      // Confirmation pass: every finding is re-run AFTER the sweep,
+      // temporally separated from any in-suite contention burst or GC
+      // pause of the shared test JVM (either has inflated a map-only
+      // query's single scan task from <100 ms to 1.5–6 s), and the
+      // audit with fewer findings, or else the lighter worst task, is
+      // kept. Such an artifact deflates on the quiet re-run; a real trap
+      // or real skew reproduces.
+      first.map { a =>
+        if (!a.violates && !a.skews) a
+        else {
+          val second = auditQuery(a.query, queries(a.query))
+          def sev(x: QueryAudit) =
+            (if (x.violates) 1 else 0) + (if (x.skews) 1 else 0)
+          if (sev(second) < sev(a) ||
+              (sev(second) == sev(a) &&
+                second.worstSingleTaskMs < a.worstSingleTaskMs)) second else a
         }
-        val first = queries.toSeq.sortBy(_._1)
-          .map { case (name, fn) => auditQuery(name, fn) }
-        // Confirmation pass for the full-concentration grey band (total
-        // under the 2× floor but ALL of it in one task): re-run AFTER the
-        // sweep — temporally separated from any in-suite contention burst
-        // that inflated the single task past the floor (the round-12
-        // flake) — and keep the audit with the lighter single task. A
-        // contention artifact deflates on the quiet re-run; a real
-        // 400–800 ms fully-concentrated trap (seconds at sf0.1) reproduces
-        // and now flags instead of hiding under the total-work floor.
-        // ...and not just the grey band: ANY violator gets the quiet
-        // re-run. The round-14 full-suite flake was the complement case —
-        // a GC pause in the shared test JVM inflated two map-only
-        // queries' single scan task to 1.5–6 s of measured
-        // executorRunTime (q45/q166, frac 1.0, normally <100 ms; both
-        // passed the isolated re-run), and the grey-band condition
-        // (total < 2× floor) excluded them precisely BECAUSE the
-        // inflation was large. A real pushdown trap reproduces on the
-        // temporally-separated re-run; any contention/GC artifact
-        // deflates. The gate keeps its teeth either way.
-        first.map { a =>
-          if (!a.violates && !a.skews) a
-          else {
-            val second = auditQuery(a.query, queries(a.query))
-            // a contention/GC artifact deflates on the temporally-separated
-            // quiet re-run (fewer findings, or a lighter worst task); a
-            // real trap or real skew reproduces
-            def sev(x: QueryAudit) =
-              (if (x.violates) 1 else 0) + (if (x.skews) 1 else 0)
-            if (sev(second) < sev(a) ||
-                (sev(second) == sev(a) &&
-                  second.worstSingleTaskMs < a.worstSingleTaskMs)) second else a
-          }
-        }
-      } finally spark.sparkContext.removeSparkListener(listener)
+      }
     }
   }
 
@@ -242,24 +195,6 @@ object StageAudit {
   )
   def skewViolations(audits: Seq[QueryAudit]): Seq[QueryAudit] =
     audits.filter(a => a.skews && !skewAllowlist.contains(a.query))
-
-  /** Audit a single ad-hoc DataFrame action (the negative-control hook:
-    * StageAuditSpec plants a known pushdown trap and asserts this flags
-    * it — proof the sweep's thresholds bind non-vacuously). */
-  def auditOne(spark: SparkSession, name: String,
-      df: => org.apache.spark.sql.DataFrame): QueryAudit = {
-    Profiles.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
-      val (buf, listener) = attach(spark)
-      try {
-        df.write.mode("overwrite").format("noop").save()
-        GraftListenerShims.waitListenerBusEmpty(spark.sparkContext)
-        val rows = buf.synchronized(buf.toVector)
-        QueryAudit(name, rows.map(_.taskMs).sum,
-          rows.filter(_.tasks == 1).sortBy(-_.taskMs).headOption,
-          worstSkew(rows))
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0)

@@ -1,11 +1,8 @@
 package org.apache.spark
 
-/** Access shim for `private[spark]` SparkContext.listenerBus: the stage
-  * audit (graft.StageAudit) attributes completed stages to the query
-  * that just ran, which requires draining the async listener bus between
-  * queries — the supported test-side idiom inside Spark itself
-  * (`sc.listenerBus.waitUntilEmpty()`), exposed here for the one
-  * harness that needs it. */
+/** Access shim for `private[spark]` SparkContext.listenerBus. Its one
+  * caller, graft.QueryTrace, drains the async bus after its body returns,
+  * so the trace holds every event of the body (Spark's own test idiom). */
 object GraftListenerShims {
   def waitListenerBusEmpty(sc: SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()

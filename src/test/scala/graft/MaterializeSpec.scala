@@ -83,7 +83,7 @@ class MaterializeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     Profiles.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       for (layout <- layouts; probe <- probes) {
         val df = inputFor(layout)
-        val (_, jobs) = jobsOf(materialize(df, layout, probe))
+        val (_, QueryTrace.Trace(jobs, _)) = QueryTrace.of(spark)(materialize(df, layout, probe))
         assert(jobs.size == 1, s"$layout x $probe ran ${jobs.size} jobs")
       }
     }
@@ -91,9 +91,9 @@ class MaterializeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("the stage name holds the caller's file:line") {
     Profiles.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
-      val ((_, line), jobs) = jobsOf(
+      val ((_, line), QueryTrace.Trace(jobs, _)) = QueryTrace.of(spark)(
         (materialize(input, Hash(n, "k")), new Throwable().getStackTrace.head.getLineNumber))
-      val stages = jobs.flatten
+      val stages = jobs.flatMap(_.stages)
       assert(stages.size == 2, stages) // the repartition's map stage + the probe
       stages.foreach(s => assert(s == s"materialize at MaterializeSpec.scala:$line", stages))
     }
@@ -143,7 +143,7 @@ class MaterializeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       (Hash(n, "k"), Sum("nocol"), "no column nocol"),
       (AsIs, Max("s"), "probe column s is string")
     ).foreach { case (layout, probe, named) =>
-      val (e, jobs) = jobsOf(intercept[IllegalArgumentException](
+      val (e, QueryTrace.Trace(jobs, _)) = QueryTrace.of(spark)(intercept[IllegalArgumentException](
         materialize(input, layout, probe)))
       assert(e.getMessage.contains(named), e.getMessage)
       assert(jobs.isEmpty, s"$layout x $probe ran $jobs")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.GraftListenerShims
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerStageSubmitted}
 import org.apache.spark.sql.functions._
 import graft.pipelines.SurveyPipelines
 import graft.sinks.Sinks
@@ -88,35 +86,6 @@ class PipelineSpec extends SparkSpec {
     val fromFile = Readers.surveyExport(spark, s"$dir/lime_export_1.txt")
     assert(SurveyPipelines.ordersShipped(fromFile, TS).count() == 2)
   }
-  /** (stages that scan a file, stages that write shuffle output) among
-    * the stages `body` completes, counted under its own job group. A
-    * stage reading materialized blocks has no file scan in its lineage. */
-  private def stagesIn(body: => Unit): (Int, Int) = {
-    val sc = spark.sparkContext
-    val group = s"pipeline-spec-${System.nanoTime()}"
-    val ours = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Boolean, Boolean)]()
-    val listener = new SparkListener {
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          ours.add(e.stageInfo.stageId)
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val info = e.stageInfo
-        if (ours.contains(info.stageId))
-          stages.add((info.rddInfos.exists(_.name == "FileScanRDD"),
-            info.taskMetrics.shuffleWriteMetrics.recordsWritten > 0))
-      }
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "pipeline")
-    try {
-      body
-      GraftListenerShims.waitListenerBusEmpty(sc)
-      val seen = stages.toArray(Array.empty[(Boolean, Boolean)]).toSeq
-      (seen.count(_._1), seen.count(_._2))
-    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
-  }
-
   for ((name, pipeline, shuffles) <- Seq(
       ("ordersShipped", SurveyPipelines.ordersShipped _, 1),
       ("nps", SurveyPipelines.nps _, 0),
@@ -125,11 +94,13 @@ class PipelineSpec extends SparkSpec {
       val dir = java.nio.file.Files.createTempDirectory("graft_once").toString
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$dir/lime_export_1.txt"), exportJson)
-      val (scans, shuffleStages) = stagesIn {
+      val (_, QueryTrace.Trace(_, stages)) = QueryTrace.of(spark) {
         val out = pipeline(Readers.surveyExport(spark, s"$dir/lime_export_1.txt"), TS)
         Sinks.csvDatedKey(out, dir, name, "20260101")
         Sinks.replaceWhere(out, s"$dir/wh", name, "date_sent", "2018-01-01")
       }
+      val scans = stages.count(_.scansFile)
+      val shuffleStages = stages.count(_.shuffleRecords > 0)
       assert(scans == 1)
       assert(shuffleStages == shuffles) // ordersShipped's keep-last, once
     }

@@ -147,11 +147,10 @@ class PlanAuditSpec extends SparkSpec {
     // materialize the parquet footer-read first; it belongs to spark.read,
     // not to the operator under test
     val emb = Tables.embeddings(spark, sf001)
-    val before = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-    graft.operators.Similarity.ivfKnn(emb, emb.filter(col("vec_id") < 5), 10,
-      stride = 30, nCells = 16, nProbe = 4) // plan only, no action
-    val after = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-    assert(after == before, s"plan construction launched ${after - before} job(s)")
+    val (_, QueryTrace.Trace(jobs, _)) = QueryTrace.of(spark)(
+      graft.operators.Similarity.ivfKnn(emb, emb.filter(col("vec_id") < 5), 10,
+        stride = 30, nCells = 16, nProbe = 4)) // plan only, no action
+    assert(jobs.isEmpty, s"plan construction launched ${jobs.size} job(s)")
   }
 
   test("q53 vocabulary: top-k via TakeOrderedAndProject, no global sort") {

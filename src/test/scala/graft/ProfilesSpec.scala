@@ -5,7 +5,8 @@ import scala.jdk.CollectionConverters._
 
 /** The one-builder invariant: every entry point's session comes from
   * [[Profiles]], and the bench profile cannot drift from the settings
-  * the repository benchmark runs under. */
+  * the repository benchmark runs under. Next to it, the one-trace
+  * invariant: [[QueryTrace]] is the only listener that records jobs. */
 class ProfilesSpec extends SparkSpec {
 
   test("Profiles.scala is the only SparkSession builder in src/main") {
@@ -14,6 +15,17 @@ class ProfilesSpec extends SparkSpec {
         Files.readString(p).contains("SparkSession.builder"))
       .map(_.getFileName.toString).toList
     assert(builders == List("Profiles.scala"), builders)
+  }
+
+  test("QueryTrace is the only tracing SparkListener in src/main and src/test") {
+    val subclass = """(?:extends|new|with)\s+(?:[\w.]+\.)?SparkListener\b""".r
+    val listeners = Seq("src/main", "src/test")
+      .flatMap(root => Files.walk(Paths.get(root)).iterator.asScala.toList)
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(p => subclass.findAllIn(Files.readString(p)).map(_ => p.getFileName.toString))
+    // the one other listener: Tables.scala's hook evicts the relation
+    // cache when the application ends, and traces nothing
+    assert(listeners.sorted == List("QueryTrace.scala", "Tables.scala"), listeners)
   }
 
   test("the bench profile is exactly the benchmark's session block") {

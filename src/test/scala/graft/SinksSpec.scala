@@ -225,8 +225,8 @@ class SinksSpec extends SparkSpec {
     val batch = Seq(("2018-03-01", "fresh")).toDF("date_sent", "v")
     Sinks.replaceWhere(Seq(("2017-06-01", "keep")).toDF("date_sent", "v"),
       dir, "t", "date_sent", "2017-01-01")
-    assert(jobsOf(Sinks.replaceWhere(batch, dir, "t", "date_sent",
-      "2018-01-01"))._2.size == 1)
+    assert(QueryTrace.of(spark)(Sinks.replaceWhere(batch, dir, "t", "date_sent",
+      "2018-01-01"))._2.jobs.size == 1)
     assert(spark.read.parquet(s"$dir/t").as[(String, String)].collect().toSet ==
       Set(("2017-06-01", "keep"), ("2018-03-01", "fresh")))
     // the footer reader yields the schema inference would
